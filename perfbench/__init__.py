@@ -1,0 +1,2 @@
+"""The repo benchmark: `python3 perfbench/run.py --workload NAME --seed N
+--seconds S --trace 0|1` (see README.md)."""
