@@ -42,14 +42,13 @@ def pack_nanos(nanos: np.ndarray) -> np.ndarray:
     return out
 
 
+# 3-bit code -> multiplier: 0 = no zeros stripped, z > 0 = z + 1 zeros
+_P10 = np.array([1] + [10 ** (z + 1) for z in range(1, 8)], dtype=np.uint64)
+
+
 def unpack_nanos(packed: np.ndarray) -> np.ndarray:
     p = np.asarray(packed, dtype=np.uint64)
-    z = p & np.uint64(7)
-    base = p >> np.uint64(3)
-    scale = np.ones(len(p), dtype=np.uint64)
-    nz = z > 0
-    scale[nz] = np.power(10, (z[nz] + np.uint64(1)).astype(np.int64)).astype(np.uint64)
-    return base * scale
+    return (p >> np.uint64(3)) * _P10[p & np.uint64(7)]
 
 
 def micros_to_sec_nanos(micros: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

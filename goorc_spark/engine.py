@@ -616,7 +616,8 @@ def read_rows(stripes: DataFrame, spec: list[dict], key_col: str,
               key_value, ord_col: str | None = None,
               ord_lo=None, ord_hi=None,
               columns: list[str] | None = None,
-              id_pushdown: bool | None = None) -> DataFrame:
+              id_pushdown: bool | None = None,
+              metrics: dict | None = None) -> DataFrame:
     """Point/range read: the reference's Seek(row)+Skip path
     (/root/reference/orc/reader.go:199-212, orc/stripe.go:369-388) expressed
     over the stripe table. Three pruning levels, each cutting work before
@@ -627,23 +628,26 @@ def read_rows(stripes: DataFrame, spec: list[dict], key_col: str,
     `id_pushdown` (default: auto — on only when `stripes` is a bare file
     scan): the range/bloom predicates are expressions parquet cannot push,
     so a single-pass plan still READS the blob column of pruned stripes
-    before filtering them. Instead, a first pass scans lineage columns only
-    (column pruning drops the blobs entirely — 8 KB of bloom vs 256 MB of
-    blob per stripe at prod shape), collects the surviving stripe_ids
-    (bounded: a point read matches a handful), and the second scan filters
-    `stripe_id IN (...)` — a predicate parquet pushes into row-group stats
-    and dictionary filters. Only worth it when re-scanning is cheap, i.e.
-    the stripes ARE a storage scan — for derived/in-flight stripe frames
-    the two passes would recompute the upstream job, so auto stays off.
-    Falls back to the single-pass plan beyond MAX_PUSHDOWN_IDS matches."""
-    pruned = prune_stripes(stripes, key_value=key_value)
-    if id_pushdown is None:
-        id_pushdown = _is_bare_scan(stripes)
-    if id_pushdown:
-        ids = [r[0] for r in pruned.select("stripe_id")
-               .limit(MAX_PUSHDOWN_IDS + 1).collect()]
-        if len(ids) <= MAX_PUSHDOWN_IDS:
-            pruned = stripes.filter(F.col("stripe_id").isin(ids))
+    before filtering them. Instead, a first pass collects the lineage
+    columns of every stripe (stripe_id, key_min, key_max, key_bloom —
+    column pruning drops the blobs: 8 KB of bloom vs 256 MB of blob per
+    stripe at prod shape) with no filter, so its plan is the same for
+    every key; prune_stripes' range + bloom predicate then runs in Python
+    on the driver, and the second scan filters `stripe_id IN (survivors)`
+    — a predicate parquet pushes into row-group stats and dictionary
+    filters. Only worth it when re-scanning is cheap, i.e. the stripes ARE
+    a storage scan — for derived/in-flight stripe frames the two passes
+    would recompute the upstream job, so auto stays off. A table of more
+    than MAX_PUSHDOWN_IDS stripes prunes in Spark instead (prune_stripes,
+    then the same id pass over its survivors), and beyond MAX_PUSHDOWN_IDS
+    survivors in the single-pass plan.
+
+    Pass a dict as `metrics` (read_orc_eq's shape: counts accumulate over
+    calls) to get `stripes_total` and `stripes_kept` of the id pass and
+    `pruned_on` ("driver" or "spark"); a count the plan never computed —
+    the Spark side's total, the single-pass plan's survivors — is absent."""
+    pruned = _pushdown_stripes(stripes, id_pushdown, metrics,
+                               key_value=key_value)
     pred: dict = {"key_value": key_value}
     if ord_lo is not None:
         pred["ord_lo"] = ord_lo
@@ -660,7 +664,8 @@ def read_rows(stripes: DataFrame, spec: list[dict], key_col: str,
 
 def read_rows_in(stripes: DataFrame, spec: list[dict], key_col: str,
                  key_values, columns: list[str] | None = None,
-                 id_pushdown: bool | None = None) -> DataFrame:
+                 id_pushdown: bool | None = None,
+                 metrics: dict | None = None) -> DataFrame:
     """Batch point read `key IN (...)` — the training-pipeline shape
     (fetch a batch of conversations by id) as ONE job instead of N point
     reads. Same three pruning levels as read_rows, each generalized to
@@ -668,18 +673,13 @@ def read_rows_in(stripes: DataFrame, spec: list[dict], key_col: str,
     (up to MAX_BLOOM_KEYS keys; beyond that the [min, max] envelope alone
     — still prunes sorted/range-partitioned layouts); (2) row-group index
     prune where ANY key fits the group's range (+ rg_bloom when
-    recorded); (3) one exact Catalyst isin filter."""
+    recorded); (3) one exact Catalyst isin filter. `id_pushdown` and
+    `metrics` as in read_rows."""
     keys = sorted(set(key_values))
     if not keys:
         raise ValueError("key_values must be non-empty")
-    pruned = prune_stripes(stripes, key_values=keys)
-    if id_pushdown is None:
-        id_pushdown = _is_bare_scan(stripes)
-    if id_pushdown:
-        ids = [r[0] for r in pruned.select("stripe_id")
-               .limit(MAX_PUSHDOWN_IDS + 1).collect()]
-        if len(ids) <= MAX_PUSHDOWN_IDS:
-            pruned = stripes.filter(F.col("stripe_id").isin(ids))
+    pruned = _pushdown_stripes(stripes, id_pushdown, metrics,
+                               key_values=keys)
     out = decode_df(pruned, spec, columns=columns,
                     rg_predicate={"key_values": keys})
     return out.filter(F.col(key_col).isin(keys))
@@ -940,6 +940,101 @@ MAX_BLOOM_KEYS = 64  # per-key OR bloom predicates above this would bloat
 #                        range-partitioned layouts)
 
 
+def _prune_bounds(key_value=None, lo=None, hi=None, key_values=None):
+    """(lo, hi, bloom probe keys) of a stripe prune — one definition for
+    prune_stripes and its driver-side twin _prune_on_driver."""
+    if key_value is not None:
+        lo = hi = key_value
+    if key_values is not None:
+        key_values = sorted(set(key_values))
+        lo, hi = key_values[0], key_values[-1]
+    probes = [key_value] if key_value is not None else (
+        key_values if key_values is not None
+        and len(key_values) <= MAX_BLOOM_KEYS else [])
+    return lo, hi, probes
+
+
+def _bound_ok(bound, kv, keep_if) -> bool:
+    """One lineage range test in Python. Only str/bytes/int (not bool) key
+    values against a bound of the same kind compare here — the orders where
+    Python and Spark agree (UTF-8 byte order is code-point order); any other
+    pair keeps the stripe: a wasted read, never a wrong skip."""
+    if bound is None or isinstance(kv, bool) or isinstance(bound, bool):
+        return True
+    for kinds in (str, (bytes, bytearray), int):
+        if isinstance(kv, kinds) and isinstance(bound, kinds):
+            return keep_if(bound, kv)
+    return True
+
+
+def _prune_on_driver(stripes: DataFrame, key_value=None,
+                     key_values=None) -> tuple[list, int] | None:
+    """prune_stripes' predicate evaluated in Python over one unfiltered
+    collect of the lineage columns -> (surviving stripe_ids, stripes seen),
+    or None when the table has more than MAX_PUSHDOWN_IDS stripes. The
+    bloom probe as Column expressions differs per key, so every read would
+    plan and codegen a new expression tree; this pass's plan is the same
+    for every key and carries no filter at all."""
+    lo, hi, probes = _prune_bounds(key_value, None, None, key_values)
+    cols = ["stripe_id", "key_min", "key_max"]
+    if "key_bloom" in stripes.columns:
+        cols.append("key_bloom")
+    else:
+        probes = []
+    rows = stripes.select(*cols).limit(MAX_PUSHDOWN_IDS + 1).collect()
+    if len(rows) > MAX_PUSHDOWN_IDS:
+        return None
+    positions = [bloom_positions(kv) for kv in probes]
+    ids = []
+    for r in rows:
+        if hi is not None and not _bound_ok(r[1], hi, lambda b, v: b <= v):
+            continue
+        if lo is not None and not _bound_ok(r[2], lo, lambda b, v: b >= v):
+            continue
+        bloom = r[3] if positions else None
+        if bloom is not None and not any(
+                all(bloom[p >> 3] >> (p & 7) & 1 for p in pos)
+                for pos in positions):
+            continue
+        ids.append(r[0])
+    return ids, len(rows)
+
+
+def _pushdown_stripes(stripes: DataFrame, id_pushdown: bool | None,
+                      metrics: dict | None, **keys) -> DataFrame:
+    """Stripe prune shared by read_rows and read_rows_in (see read_rows'
+    `id_pushdown`); `keys` are prune_stripes' key_value / key_values."""
+    if id_pushdown is None:
+        id_pushdown = _is_bare_scan(stripes)
+    if id_pushdown:
+        got = _prune_on_driver(stripes, **keys)
+        if got is not None:
+            ids, total = got
+            _count_prune(metrics, "driver", total, len(ids))
+            return stripes.filter(F.col("stripe_id").isin(ids))
+    pruned = prune_stripes(stripes, **keys)
+    if id_pushdown:
+        ids = [r[0] for r in pruned.select("stripe_id")
+               .limit(MAX_PUSHDOWN_IDS + 1).collect()]
+        if len(ids) <= MAX_PUSHDOWN_IDS:
+            _count_prune(metrics, "spark", None, len(ids))
+            return stripes.filter(F.col("stripe_id").isin(ids))
+    _count_prune(metrics, "spark", None, None)
+    return pruned
+
+
+def _count_prune(metrics: dict | None, where: str, total: int | None,
+                 kept: int | None) -> None:
+    """Accumulate read-side pruning counters (read_orc_eq's `metrics`
+    shape); a count the plan never computed is left out."""
+    if metrics is None:
+        return
+    metrics["pruned_on"] = where
+    for k, v in (("stripes_total", total), ("stripes_kept", kept)):
+        if v is not None:
+            metrics[k] = metrics.get(k, 0) + v
+
+
 def prune_stripes(stripes: DataFrame, key_value=None,
                   lo=None, hi=None, key_values=None) -> DataFrame:
     """Stripe-level predicate pushdown using the lineage [key_min, key_max]
@@ -948,11 +1043,7 @@ def prune_stripes(stripes: DataFrame, key_value=None,
     contain the predicate are filtered out BEFORE their blobs are read, so
     the parquet scan of the stripe table prunes them too (blob column never
     materialized for skipped stripes)."""
-    if key_value is not None:
-        lo = hi = key_value
-    if key_values is not None:
-        key_values = sorted(set(key_values))
-        lo, hi = key_values[0], key_values[-1]
+    lo, hi, probes = _prune_bounds(key_value, lo, hi, key_values)
     cond = F.lit(True)
     # NULL bounds (keyless encode, all-null key stripe) mean UNKNOWN, not
     # out-of-range: keep the stripe — a wasted read, never a wrong skip
@@ -962,9 +1053,6 @@ def prune_stripes(stripes: DataFrame, key_value=None,
     if lo is not None:
         cond = cond & (F.col("key_max").isNull()
                        | (F.col("key_max") >= F.lit(lo)))
-    probes = [key_value] if key_value is not None else (
-        key_values if key_values is not None
-        and len(key_values) <= MAX_BLOOM_KEYS else [])
     if probes and "key_bloom" in stripes.columns:
         # bloom probe with built-ins only: the k probe positions are a
         # driver-side constant for the literal key, so each test is one

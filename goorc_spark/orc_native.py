@@ -39,7 +39,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from goorc_spark.codecs import boolrle, byterle, floats, rlev1, rlev2
+from goorc_spark.codecs import boolrle, byterle, chunk, floats, rlev1, rlev2
 from goorc_spark.codecs.primitives import (decode_svarints, decode_uvarints,
                                            encode_svarints)
 
@@ -484,6 +484,32 @@ def _parse_row_index(raw) -> list[list[int]]:
     return [_fpacked_u32(pb_fields(e), 1) for e in pb_fields(raw).get(1, [])]
 
 
+def _row_index_entry(raw, g: int) -> tuple[list[int] | None, int]:
+    """Positions of ROW_INDEX entry `g` alone (as _parse_row_index would
+    list them): the other entries are stepped over by their length prefix,
+    never parsed. -> (positions, or None when out of range; entries
+    walked)."""
+    buf = memoryview(raw)
+    off, end, n = 0, len(buf), 0
+    while off < end:
+        tag, off = _uvarint(buf, off)
+        wt = tag & 7
+        if wt == 0:
+            _, off = _uvarint(buf, off)
+        elif wt == 2:
+            ln, off = _uvarint(buf, off)
+            if tag >> 3 == 1:
+                if n == g:
+                    return _fpacked_u32(pb_fields(buf[off:off + ln]), 1), n + 1
+                n += 1
+            off += ln
+        elif wt in (1, 5):
+            off += 8 if wt == 1 else 4
+        else:
+            raise ValueError(f"unsupported proto wire type {wt}")
+    return None, n
+
+
 def _position_streams(kind: int, enc: int,
                       has_present: bool) -> list[tuple[int, int]]:
     """(stream kind, codec tag) in the order writers record positions."""
@@ -530,12 +556,11 @@ class _SeekCursor(_StripeCursor):
         for col in range(len(types)):
             if not self.has(col, ROW_INDEX):
                 continue
-            entries = _parse_row_index(self.stream(col, ROW_INDEX))
-            if g0 >= len(entries):
+            pos, n = _row_index_entry(self.stream(col, ROW_INDEX), g0)
+            if pos is None:
                 raise ValueError(
                     f"row group {g0} out of range for column {col} "
-                    f"({len(entries)} ROW_INDEX entries)")
-            pos = entries[g0]
+                    f"({n} ROW_INDEX entries)")
             i = 0
             for skind, tag in _position_streams(
                     types[col]["kind"], self.encodings[col]["kind"],
@@ -1361,29 +1386,6 @@ def _pb_str(fnum: int, v: str) -> bytes:
     return _pb_bytes(fnum, v.encode())
 
 
-def _compress_stream(raw: bytes, kind: int, block: int) -> bytes:
-    """Chunked ORC compression container (3-byte header per chunk,
-    (len << 1) | isOriginal; zlib = raw deflate)."""
-    if kind == COMP_NONE:
-        return raw
-    if kind != COMP_ZLIB:
-        raise NotImplementedError("native writer emits NONE or ZLIB")
-    out = bytearray()
-    for off in range(0, len(raw), block):
-        chunk_b = raw[off:off + block]
-        co = zlib.compressobj(6, zlib.DEFLATED, -15)
-        packed = co.compress(chunk_b) + co.flush()
-        if len(packed) < len(chunk_b):
-            h = len(packed) << 1
-            out += bytes((h & 0xFF, (h >> 8) & 0xFF, (h >> 16) & 0xFF))
-            out += packed
-        else:
-            h = (len(chunk_b) << 1) | 1
-            out += bytes((h & 0xFF, (h >> 8) & 0xFF, (h >> 16) & 0xFF))
-            out += chunk_b
-    return bytes(out)
-
-
 _ARROW_TO_ORC = [
     (pa.types.is_boolean, T_BOOLEAN), (pa.types.is_int8, T_BYTE),
     (pa.types.is_int16, T_SHORT), (pa.types.is_int32, T_INT),
@@ -1892,7 +1894,7 @@ def _nullable_cols(arr, col_id: int, node: dict, types: list,
             _nullable_cols(children[i], sub, types[sub], types, out)
 
 
-def _stride_stripe(sub: pa.Table, types: list, comp: int, block: int,
+def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
                    tzctx: tuple, stride: int,
                    bloom_ids: dict | None = None,
                    bloom_fpp: float = 0.05):
@@ -1986,7 +1988,7 @@ def _stride_stripe(sub: pa.Table, types: list, comp: int, block: int,
             extras[key] = [(0, int(b % 8)) for b in starts]
         segs, offs, pos = [], [], 0
         for raw in parts:
-            pk = _compress_stream(raw, comp, block)
+            pk = chunk.compress(raw, comp, block, 6)
             offs.append(pos)
             pos += len(pk)
             segs.append(pk)
@@ -2004,7 +2006,7 @@ def _stride_stripe(sub: pa.Table, types: list, comp: int, block: int,
                 if (cid, skind) not in packed:
                     continue
                 posv.append(offsets[(cid, skind)][gi])
-                if comp != COMP_NONE:
+                if comp != chunk.NONE:
                     posv.append(0)  # offset within the decompressed chunk
                 ext = extras.get((cid, skind))
                 posv.extend(ext[gi] if ext is not None
@@ -2014,10 +2016,10 @@ def _stride_stripe(sub: pa.Table, types: list, comp: int, block: int,
                 types[cid]["kind"], seg_stats[gi].get(cid, {"n": 0})))
             entries += _pb_bytes(1, entry)
         index_streams.append((cid, ROW_INDEX,
-                              _compress_stream(bytes(entries), comp, block)))
+                              chunk.compress(bytes(entries), comp, block, 6)))
         if cid in seg_blooms:  # BloomFilterIndex right after its ROW_INDEX
-            index_streams.append((cid, BLOOM_FILTER_UTF8, _compress_stream(
-                b"".join(seg_blooms[cid]), comp, block)))
+            index_streams.append((cid, BLOOM_FILTER_UTF8, chunk.compress(
+                b"".join(seg_blooms[cid]), comp, block, 6)))
     data_streams = [(c, k, packed[(c, k)]) for c, k in keys]
     stripe_stats = {cid: _merge_col_stats(
         types[cid]["kind"], [st.get(cid, {"n": 0}) for st in seg_stats])
@@ -2046,7 +2048,8 @@ def write_orc(table: pa.Table, compression: str = "zlib",
     (stride-sized filters at `bloom_fpp`, writer-exact hash conventions —
     codecs/murmur3.py) so read_orc_eq and other engines' readers can skip
     row groups on equality predicates; requires row_index_stride > 0."""
-    comp = {"none": COMP_NONE, "zlib": COMP_ZLIB}[compression]
+    if compression not in (chunk.NONE, chunk.ZLIB):
+        raise NotImplementedError("native writer emits NONE or ZLIB")
     tzctx = (_tz_base_seconds(writer_timezone), writer_timezone)
     types: list = []
     _type_tree(table.schema, types, [])
@@ -2083,7 +2086,7 @@ def write_orc(table: pa.Table, compression: str = "zlib",
         data_len = 0
         if row_index_stride:
             idx_s, dat_s, encodings, col_stats = _stride_stripe(
-                sub, types, comp, block_size, tzctx, row_index_stride,
+                sub, types, compression, block_size, tzctx, row_index_stride,
                 bloom_ids or None, bloom_fpp)
             stripe_stats.append(col_stats)
             for col_id, skind, pk in idx_s:
@@ -2109,7 +2112,7 @@ def write_orc(table: pa.Table, compression: str = "zlib",
                                   encodings, types, tzctx, col_stats)
             stripe_stats.append(col_stats)
             for col_id, skind, raw in streams:
-                packed = _compress_stream(raw, comp, block_size)
+                packed = chunk.compress(raw, compression, block_size, 6)
                 body += packed
                 stream_entries.append((col_id, skind, len(packed)))
                 data_len += len(packed)
@@ -2124,7 +2127,7 @@ def write_orc(table: pa.Table, compression: str = "zlib",
                 enc_msg += _pb_int(2, dsz)
             sf += _pb_bytes(2, enc_msg)
         sf += _pb_str(3, writer_timezone)
-        sf_packed = _compress_stream(bytes(sf), comp, block_size)
+        sf_packed = chunk.compress(bytes(sf), compression, block_size, 6)
         body += sf_packed
         stripe_infos.append({"offset": offset, "index_length": index_len,
                              "data_length": data_len,
@@ -2144,7 +2147,7 @@ def write_orc(table: pa.Table, compression: str = "zlib",
             ss += _pb_bytes(1, _encode_col_stats(
                 types[cid]["kind"], cs.get(cid, {"n": 0})))
         meta += _pb_bytes(1, bytes(ss))
-    meta_packed = _compress_stream(bytes(meta), comp, block_size)
+    meta_packed = chunk.compress(bytes(meta), compression, block_size, 6)
     body += meta_packed
     footer = bytearray()
     footer += _pb_int(1, len(MAGIC))          # headerLength
@@ -2163,9 +2166,10 @@ def write_orc(table: pa.Table, compression: str = "zlib",
             _merge_col_stats(types[cid]["kind"],
                              [cs.get(cid, {"n": 0}) for cs in stripe_stats])))
     footer += _pb_int(8, row_index_stride)     # rowIndexStride (0 = none)
-    footer_packed = _compress_stream(bytes(footer), comp, block_size)
+    footer_packed = chunk.compress(bytes(footer), compression, block_size, 6)
     body += footer_packed
-    ps = (_pb_int(1, len(footer_packed)) + _pb_int(2, comp)
+    ps = (_pb_int(1, len(footer_packed))
+          + _pb_int(2, COMP_ZLIB if compression == chunk.ZLIB else COMP_NONE)
           + _pb_int(3, block_size) + _pb_int(4, 0)   # version 0.12
           + _pb_int(4, 12)
           + _pb_int(5, len(meta_packed)) + _pb_int(6, 1)  # writerVersion

@@ -241,3 +241,151 @@ def test_rg_bloom_key_hash_canonical_decimal():
             == arrow_stripe._rg_bloom_key_hash(Decimal("2.5")))
     assert (arrow_stripe._rg_bloom_key_hash(Decimal("3"))
             == arrow_stripe._rg_bloom_key_hash(3))
+
+
+# ------------------------------------------- driver-side stripe prune --
+# read_rows / read_rows_in over a bare stripe-table scan evaluate
+# prune_stripes' predicate in Python on the driver; its survivors must be
+# exactly prune_stripes' survivors on every layout.
+
+
+@pytest.fixture(scope="module")
+def parquet_tables(spark, tmp_path_factory):
+    """(pdf, {layout: bare parquet scan}) for hash- and range-partitioned
+    encodes of one frame."""
+    pdf = transcripts.synthesize_pandas(n_convs=60, seed=21)
+    df = spark.createDataFrame(pdf)
+    tables = {}
+    for name, ranged in (("hash", False), ("range", True)):
+        cfg = engine.EncodeConfig(key_col="conv_id", order_cols=("turn_idx",),
+                                  stripe_bytes=64 * 1024, partitions=6,
+                                  run_id=name, range_partition=ranged)
+        path = str(tmp_path_factory.mktemp(name) / "stripes")
+        engine.encode_df(df, cfg).write.parquet(path)
+        tables[name] = spark.read.parquet(path)
+    return pdf, tables
+
+
+def _spark_survivors(stripes, **keys):
+    return sorted(r[0] for r in engine.prune_stripes(stripes, **keys)
+                  .select("stripe_id").collect())
+
+
+def _driver_survivors(stripes, **keys):
+    ids, total = engine._prune_on_driver(stripes, **keys)
+    assert total == stripes.count()
+    return sorted(ids)
+
+
+def _probe_keys(pdf):
+    present = sorted(pdf["conv_id"].unique())[::3]
+    absent = ["conv-%08d-missing" % i for i in range(0, 60, 6)] + [
+        "", "a", "zzz"]
+    return present, absent
+
+
+@pytest.mark.parametrize("layout", ["hash", "range"])
+def test_driver_prune_matches_prune_stripes(parquet_tables, layout):
+    pdf, tables = parquet_tables
+    st = tables[layout]
+    present, absent = _probe_keys(pdf)
+    assert len(present) + len(absent) >= 30
+    for key in present + absent:
+        want = _spark_survivors(st, key_value=key)
+        assert _driver_survivors(st, key_value=key) == want, key
+        if key in present:
+            assert want, key
+
+
+def test_driver_prune_int_keys(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 3000).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+    for ranged in (True, False):
+        cfg = engine.EncodeConfig(key_col="k", order_cols=("v",),
+                                  partitions=4, stripe_bytes=8 * 1024,
+                                  range_partition=ranged, run_id="intkey")
+        path = str(tmp_path / f"int_{ranged}")
+        engine.encode_df(df, cfg).write.parquet(path)
+        st = spark.read.parquet(path)
+        assert dict(st.dtypes)["key_min"] == "bigint"
+        for key in (0, 9, 10, 1499, 2999, -5, 3000, 10**12):
+            assert (_driver_survivors(st, key_value=key)
+                    == _spark_survivors(st, key_value=key)), (ranged, key)
+        # a key kind the driver does not range-compare keeps the stripe:
+        # never fewer survivors than prune_stripes
+        assert set(_driver_survivors(st, key_value=9.0)) >= set(
+            _spark_survivors(st, key_value=9.0))
+        got = engine.read_rows(st, engine.spec_from_schema(df.schema),
+                               "k", 1499).collect()
+        assert [(r.k, r.v) for r in got] == [(1499, 2998)]
+
+
+def test_driver_prune_without_bloom(parquet_tables):
+    """NULL blooms and a dropped key_bloom column never skip a stripe on
+    either side; the range bounds still prune."""
+    import pyspark.sql.functions as F
+
+    pdf, tables = parquet_tables
+    present, absent = _probe_keys(pdf)
+    for st in tables.values():
+        for legacy in (st.drop("key_bloom"),
+                       st.withColumn("key_bloom",
+                                     F.lit(None).cast("binary"))):
+            for key in present[:5] + absent:
+                assert (_driver_survivors(legacy, key_value=key)
+                        == _spark_survivors(legacy, key_value=key)), key
+
+
+def test_driver_prune_multi_key(parquet_tables):
+    """read_rows_in: a stripe survives if ANY key matches; above
+    MAX_BLOOM_KEYS keys only the keys' envelope range is checked."""
+    pdf, tables = parquet_tables
+    keys = sorted(pdf["conv_id"].unique())
+    many = keys[5:5 + engine.MAX_BLOOM_KEYS // 2] + [
+        "conv-%08d-missing" % i for i in range(engine.MAX_BLOOM_KEYS)]
+    assert len(many) > engine.MAX_BLOOM_KEYS
+    for st in tables.values():
+        for ks in ([keys[3], keys[40]], [keys[3], ABSENT_IN_RANGE],
+                   ["conv-x", ABSENT_IN_RANGE], many):
+            assert (_driver_survivors(st, key_values=ks)
+                    == _spark_survivors(st, key_values=ks)), ks
+    st = tables["hash"]
+    m: dict = {}
+    got = engine.read_rows_in(st, transcripts.TRANSCRIPTS_SPEC, "conv_id",
+                              [keys[3], keys[40]], metrics=m).count()
+    assert got == int(pdf["conv_id"].isin([keys[3], keys[40]]).sum())
+    assert m["pruned_on"] == "driver"
+    assert m["stripes_total"] == st.count()
+    assert m["stripes_kept"] == len(_spark_survivors(
+        st, key_values=[keys[3], keys[40]]))
+    got = engine.read_rows_in(st, transcripts.TRANSCRIPTS_SPEC, "conv_id",
+                              many).count()
+    assert got == int(pdf["conv_id"].isin(many).sum())
+
+
+def test_read_rows_metrics_and_spark_fallback(parquet_tables, monkeypatch):
+    """More stripes than MAX_PUSHDOWN_IDS: the driver pass hands over to
+    today's Spark-side prune; the rows are identical either way."""
+    pdf, tables = parquet_tables
+    st = tables["hash"]
+    key = sorted(pdf["conv_id"].unique())[7]
+    cols = ["conv_id", "turn_idx", "text"]
+
+    def read(m):
+        return sorted(tuple(r) for r in engine.read_rows(
+            st, transcripts.TRANSCRIPTS_SPEC, "conv_id", key,
+            columns=cols, metrics=m).select(*cols).collect())
+
+    m1: dict = {}
+    want = read(m1)
+    assert len(want) == int((pdf["conv_id"] == key).sum())
+    assert m1 == {"pruned_on": "driver", "stripes_total": st.count(),
+                  "stripes_kept": len(_spark_survivors(st, key_value=key))}
+    monkeypatch.setattr(engine, "MAX_PUSHDOWN_IDS", 1)
+    m2: dict = {}
+    assert read(m2) == want
+    assert m2["pruned_on"] == "spark"
+    assert "stripes_total" not in m2
+    assert m2.get("stripes_kept", 1) <= 1

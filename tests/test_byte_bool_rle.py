@@ -101,6 +101,25 @@ def test_nano_packing_roundtrip():
         timestamps.unpack_nanos(timestamps.pack_nanos(vals)), vals)
 
 
+def test_nano_unpack_matches_power_formula():
+    """The power-of-ten table decodes every 3-bit code exactly as the
+    spec formula base * 10**(z + 1) (z > 0) does."""
+    rng = np.random.default_rng(3)
+    vals = np.concatenate([
+        np.array([0, 999_999_999, 1, 10, 100, 100_000_000], np.uint64),
+        rng.integers(0, 10**9, 4000).astype(np.uint64),
+        rng.integers(0, 10**9 // 10**8, 100).astype(np.uint64) * 10**8])
+    for z in range(2, 9):   # every stripped-zeros count, code z - 1
+        vals = np.concatenate([vals, (vals[:500] // 10**z) * 10**z])
+    packed = timestamps.pack_nanos(vals)
+    assert set((packed & np.uint64(7)).tolist()) == set(range(8))
+    base, z = packed >> np.uint64(3), packed & np.uint64(7)
+    want = np.array([int(b) * (10 ** (int(c) + 1) if c else 1)
+                     for b, c in zip(base, z)], dtype=np.uint64)
+    np.testing.assert_array_equal(timestamps.unpack_nanos(packed), want)
+    np.testing.assert_array_equal(want, vals)
+
+
 def test_timestamp_micros_split_roundtrip():
     us = np.array([
         0,                      # 1970 (pre-2015 epoch: negative seconds)

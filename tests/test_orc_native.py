@@ -1056,3 +1056,65 @@ def test_lz4_orc_chunks():
     # LZO stays refused with the narrowed message
     with pytest.raises(NotImplementedError, match="LZO"):
         on._decompress(b"\x08\x00\x00abcd", on.COMP_LZO)
+
+
+def _pinned_table() -> pa.Table:
+    """Seeded transcripts plus incompressible binary noise, so zlib emits
+    both deflated and stored-original chunks."""
+    from goorc_spark import transcripts
+
+    pdf = transcripts.synthesize_pandas(n_convs=40, seed=11)
+    t = pa.Table.from_pandas(pdf, preserve_index=False)
+    rng = np.random.default_rng(5)
+    noise = [rng.bytes(int(n)) for n in rng.integers(0, 64, t.num_rows)]
+    return t.append_column("noise", pa.array(noise, pa.binary()))
+
+
+def test_write_orc_bytes_pinned():
+    """The writer's chunk framing is codecs.chunk's (zlib = raw deflate at
+    level 6): file bytes are pinned for indexed and plain layouts."""
+    import hashlib
+
+    t = _pinned_table()
+    pins = [
+        (dict(compression="zlib", stripe_rows=2000, block_size=4096,
+              row_index_stride=500, bloom_columns=("conv_id",)),
+         "b584503c4d287a04dd7a4852b90c7c30a35e95516fd06d16333e8283ac3f03d0"),
+        (dict(compression="zlib", stripe_rows=1000, block_size=4096),
+         "75ca583509da06fb1a327b0df24f68f04cb3f2a5f99fed576d6c5b80c518f54c"),
+        (dict(compression="none", stripe_rows=1000, row_index_stride=500),
+         "39846cc7de4a5928679a7e8c47d8ce35a9608d6d8ba2bcc0f5d70629846a761d"),
+    ]
+    for kw, want in pins:
+        assert hashlib.sha256(on.write_orc(t, **kw)).hexdigest() == want, kw
+    with pytest.raises(NotImplementedError, match="NONE or ZLIB"):
+        on.write_orc(t, compression="zstd")
+
+
+def test_row_index_entry_parses_one_entry():
+    """_SeekCursor's single-entry ROW_INDEX walk returns exactly the
+    full parse's entry for every group, and the count when out of range."""
+    data = on.write_orc(_pinned_table(), compression="zlib",
+                        stripe_rows=2000, block_size=4096,
+                        row_index_stride=300)
+    ps, footer = on.parse_tail(data)
+    s = footer["stripes"][0]
+    foot_off = s["offset"] + s["index_length"] + s["data_length"]
+    sf = on.parse_stripe_footer(on._decompress(
+        data[foot_off:foot_off + s["footer_length"]], ps["compression"]))
+    cur = on._StripeCursor(data, s, sf, ps["compression"])
+    cols = [c for c in range(len(footer["types"]))
+            if cur.has(c, on.ROW_INDEX)]
+    assert cols
+    for c in cols:
+        raw = cur.stream(c, on.ROW_INDEX)
+        entries = on._parse_row_index(raw)
+        assert len(entries) == -(-s["n_rows"] // 300)
+        for g, want in enumerate(entries):
+            assert on._row_index_entry(raw, g) == (want, g + 1)
+        assert on._row_index_entry(raw, len(entries)) == (None, len(entries))
+    assert any(on._parse_row_index(cur.stream(c, on.ROW_INDEX))[1]
+               for c in cols)  # leaf columns record positions
+    g = len(entries)
+    with pytest.raises(ValueError, match=f"row group {g} out of range"):
+        on._SeekCursor(data, s, sf, ps["compression"], footer["types"], g)
