@@ -34,4 +34,17 @@ Layout
                             splits/sampling/packing, multimodal stubs
 """
 
+import sys as _sys
+
 __version__ = "0.1.0"
+
+# Inside a PySpark Python worker the package is first imported while an
+# engine UDF is unpickled; from then on this worker's tasks skip the
+# per-task re-read of pyspark.zip (see _pyworker). The Spark driver, tests
+# and no-JVM library processes keep the stdlib zipimport.
+_tc = _sys.modules.get("pyspark.taskcontext")
+if _tc is not None and _tc.TaskContext.get() is not None:
+    from goorc_spark import _pyworker
+
+    _pyworker.install()
+del _sys, _tc

@@ -309,7 +309,6 @@ def _make_encoder(spec: list[dict], cfg: EncodeConfig):
 
     key = cfg.key_col
     ordc = cfg.order_cols[0] if cfg.order_cols else None
-    names = [c["name"] for c in spec]
 
     def encode_stripes(batches):
         ctx = TaskContext.get()
@@ -368,8 +367,6 @@ def _make_encoder(spec: list[dict], cfg: EncodeConfig):
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            if SALT_COL in rb.schema.names:
-                rb = rb.select(names)
             pending.append(rb)
             pending_bytes += rb.get_total_buffer_size()
             if pending_bytes >= cfg.stripe_bytes:
@@ -501,7 +498,9 @@ def encode_df(df: DataFrame, cfg: EncodeConfig | None = None,
             df = df.repartition(n, F.col(cfg.key_col), F.col(SALT_COL))
         # always sort when a key exists: stripe/row-group key ranges stay
         # narrow and decode + sort restores source order deterministically
-        df = df.sortWithinPartitions(cfg.key_col, *cfg.order_cols)
+        # the salt only places rows: drop it before the Arrow hand-off
+        df = df.sortWithinPartitions(cfg.key_col, *cfg.order_cols) \
+            .drop(SALT_COL)
     else:
         df = df.repartition(n)
     return df.mapInArrow(_make_encoder(spec, cfg), schema=stripe_schema(key_type))

@@ -1087,6 +1087,19 @@ def _decode_column(cur: _StripeCursor, types: list[dict], col: int,
     return _take_spread(vals, mask)
 
 
+def _check_union_width(n: int) -> None:
+    """ORC tags are unsigned bytes (up to 256 variants); the surfaced
+    struct<tag:int8,...> contract documents tag == i filters, which would
+    see negative tags for fields 128+. No known writer emits such files —
+    the reader refuses loudly rather than surface a silently broken
+    contract (ADVICE r5), and the writer refuses too, so it never emits a
+    file its own reader refuses."""
+    if n > 127:
+        raise NotImplementedError(
+            f"UNION with {n} subtypes: the tagged-struct surface uses int8 "
+            "tags, valid for <=127 variants")
+
+
 def _arrow_type(types: list[dict], col: int) -> pa.DataType:
     t = types[col]
     k = t["kind"]
@@ -1112,15 +1125,7 @@ def _arrow_type(types: list[dict], col: int) -> pa.DataType:
         return pa.struct([(n, _arrow_type(types, c))
                           for n, c in zip(t["field_names"], t["subtypes"])])
     if k == T_UNION:
-        if len(t["subtypes"]) > 127:
-            # ORC tags are unsigned bytes (up to 256 variants); the
-            # surfaced struct<tag:int8,...> contract documents tag == i
-            # filters, which would see negative tags for fields 128+.
-            # No known writer emits such files — refuse loudly rather
-            # than surface a silently broken contract (ADVICE r5).
-            raise NotImplementedError(
-                f"UNION with {len(t['subtypes'])} subtypes: the tagged-"
-                "struct surface uses int8 tags, valid for <=127 variants")
+        _check_union_width(len(t["subtypes"]))
         return pa.struct([("tag", pa.int8())]
                          + [(f"field{i}", _arrow_type(types, c))
                             for i, c in enumerate(t["subtypes"])])
@@ -1432,6 +1437,7 @@ def _type_tree(schema_or_type, types: list, names_of: list) -> int:
         node["subtypes"].append(_type_tree(t.item_type, types, names_of))
     elif node["kind"] == T_UNION:
         # ORC UNION carries subtypes only — no field names in the proto
+        _check_union_width(t.num_fields)
         for f in t:
             node["subtypes"].append(_type_tree(f.type, types, names_of))
     return my_id

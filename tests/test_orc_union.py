@@ -326,3 +326,13 @@ def test_union_over_127_subtypes_refused():
     union["subtypes"] = list(range(2, 129))
     t = _arrow_type(types, 1)
     assert t.num_fields == 1 + 127
+
+
+def test_write_orc_refuses_union_over_127_subtypes():
+    """The writer never emits a file its own reader refuses: a 128-child
+    union fails in the type walk, before any byte is produced."""
+    tags = pa.array([0, 127], pa.int8())
+    children = [pa.array([i, i], pa.int32()) for i in range(128)]
+    u = pa.UnionArray.from_sparse(tags, children)
+    with pytest.raises(NotImplementedError, match="128 subtypes"):
+        write_orc(pa.table({"u": u}))
