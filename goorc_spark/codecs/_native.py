@@ -3,9 +3,9 @@
 The numpy codec implementations in this package are the reference: this
 module only ACCELERATES them — every native entry point is byte-identical
 to its numpy twin (pinned by A/B fuzz tests in tests/test_native.py), and
-any failure to compile/load the shared object silently falls back to the
-numpy path, so environments without a C compiler lose speed, not
-correctness.
+any failure to compile/load the shared object falls back to the numpy
+path, so environments without a C compiler lose speed, not correctness;
+``status()`` reports which path runs and why.
 
 The C source is embedded as a string (the bench ships the package to
 executors as a zip of .py files, so a checked-in .c file would not arrive);
@@ -772,6 +772,7 @@ int64_t rlev2_encode(const uint64_t *v, int64_t n, int32_t signed_flag,
 
 _CC_CANDIDATES = ("cc", "gcc", "clang")
 _lib_cache: list = []  # [] = not attempted, [None] = failed, [CDLL] = loaded
+_lib_status: dict = {"path": None, "reason": None}  # of the attempt above
 
 
 def _build(so_path: str) -> None:
@@ -795,7 +796,8 @@ def _build(so_path: str) -> None:
                 err = r.stderr.decode(errors="replace")[-500:]
             except FileNotFoundError:
                 continue
-        raise RuntimeError(f"no C compiler produced {so_path}: {err}")
+        raise RuntimeError(f"no C compiler produced {so_path}: " + (
+            err or f"none of {', '.join(_CC_CANDIDATES)} found on PATH"))
     finally:
         for p in (c_path, locals().get("tmp_so")):
             if p and os.path.exists(p) and p != so_path:
@@ -808,12 +810,15 @@ def _build(so_path: str) -> None:
 def lib():
     """The loaded CDLL, or None when native acceleration is unavailable.
     The first call compiles (or loads the cached .so); the result —
-    including failure — is cached for the life of the process."""
+    including failure, and its reason (see status()) — is cached for the
+    life of the process."""
     if _lib_cache:
         return _lib_cache[0]
-    handle = None
+    handle = so_path = reason = None
     try:
-        if os.environ.get("GOORC_NATIVE", "1") != "0":
+        if os.environ.get("GOORC_NATIVE", "1") == "0":
+            reason = "disabled by GOORC_NATIVE=0"
+        else:
             h = hashlib.sha256(_SRC.encode()).hexdigest()[:16]
             so_path = os.path.join(tempfile.gettempdir(), f"goorc_native_{h}.so")
             if not os.path.exists(so_path):
@@ -843,10 +848,21 @@ def lib():
             fn.argtypes = [ctypes.c_void_p, ctypes.c_int64, ctypes.c_void_p,
                            ctypes.c_void_p, ctypes.c_void_p]
             handle = cdll
-    except Exception:
-        handle = None
+    except Exception as e:
+        handle, reason = None, f"{type(e).__name__}: {e}"
+    _lib_status.update(path=so_path, reason=reason)
     _lib_cache.append(handle)
     return handle
+
+
+def status() -> dict:
+    """Which kernel path runs in this process, and why: `loaded` (the
+    native kernels are in use), `path` (the shared object loaded or tried;
+    None when disabled) and `reason` (None when loaded, else "disabled by
+    GOORC_NATIVE=0" or the build/dlopen error that sent every kernel to
+    its numpy twin)."""
+    loaded = lib() is not None
+    return {"loaded": loaded, **_lib_status}
 
 
 def fsst_compress(ct, arr: np.ndarray) -> bytes | None:

@@ -27,8 +27,10 @@ from __future__ import annotations
 
 import json
 import re
+import threading
 import time
 import uuid
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -286,8 +288,9 @@ def spec_from_stripes(stripes: DataFrame) -> list[dict]:
     (/root/reference/orc/reader.go:254-343). One driver-side read of a
     single meta JSON; blob bytes untouched. Makes maintenance jobs
     (compaction, decode CLIs) schema-agnostic: the stripe table is
-    self-describing."""
-    row = stripes.select("meta").limit(1).collect()
+    self-describing. The meta read is cached per table snapshot
+    (_collect_cached), so a repeat call on a bare file scan runs no job."""
+    row, _ = _collect_cached(stripes, ["meta"], 1)
     if not row:
         raise ValueError("empty stripe table: no meta to derive a spec from")
     meta = json.loads(row[0][0])
@@ -518,7 +521,8 @@ def decode_df(stripes: DataFrame, spec: list[dict] | None = None,
 
     `spec=None` self-describes: the spec is recovered from the stripes'
     embedded meta (`spec_from_stripes`) — one extra driver-side read of a
-    single meta JSON, the way an ORC reader parses the file footer first.
+    single meta JSON (none on a repeat over the same table snapshot), the
+    way an ORC reader parses the file footer first.
     Pass the spec explicitly in hot loops or when coercing schema drift.
 
     `columns` projects the decode: only those columns' streams are
@@ -593,22 +597,91 @@ _SCAN_NODES = ("LogicalRelation", "DataSourceV2Relation",
                "DataSourceV2ScanRelation", "HiveTableRelation")
 
 
-def _is_bare_scan(df: DataFrame) -> bool:
-    """True when the frame is a storage scan (optionally under
-    Project/Filter) — the only shape where a second pass costs one more
-    scan instead of recomputing an upstream job."""
+def _bare_scan_plan(df: DataFrame):
+    """The frame's optimized JVM plan when it is a storage scan (optionally
+    under Project/Filter) — the only shape where a second pass costs one
+    more scan instead of recomputing an upstream job — else None."""
     try:
-        plan = df._jdf.queryExecution().optimizedPlan()
+        top = plan = df._jdf.queryExecution().optimizedPlan()
         while True:
             name = plan.getClass().getSimpleName()
             if name in _SCAN_NODES:
-                return True
+                return top
             if name in ("Project", "Filter") and plan.children().size() == 1:
                 plan = plan.children().head()
                 continue
-            return False
+            return None
     except Exception:
-        return False
+        return None
+
+
+def _is_bare_scan(df: DataFrame) -> bool:
+    return _bare_scan_plan(df) is not None
+
+
+# Driver-side cache of lineage/meta collects, the analog of an ORC reader
+# parsing a file's tail once and seeking from memory afterwards (the
+# reference's orc/reader.go:199-212, 254-343). Bounded: an entry holds at
+# most MAX_PUSHDOWN_IDS + 1 lineage rows of ~8 KB bloom each.
+LINEAGE_CACHE_ENTRIES = 16
+_lineage_cache: OrderedDict = OrderedDict()  # key -> (JVM plan, rows)
+_lineage_lock = threading.Lock()
+
+
+def _snapshot(df: DataFrame):
+    """(key, optimized JVM plan) naming exactly what a bare file scan
+    reads, or None for any other frame (derived, in-flight, without input
+    files, or one whose plan Spark would now answer from its in-memory
+    cache). The key is the application id, the plan's semantic hash and
+    the frame's input files: Spark-written part files are immutable and
+    get fresh names on overwrite or append, and a refreshed file index
+    lists the new ones, so the key changes whenever the data Spark would
+    read does."""
+    plan = _bare_scan_plan(df)
+    if plan is None:
+        return None
+    try:
+        spark = df.sparkSession
+        analyzed = df._jdf.queryExecution().analyzed()
+        if not spark._jsparkSession.sharedState().cacheManager() \
+                .useCachedData(analyzed).fastEquals(analyzed):
+            return None
+        # one round trip for the whole list (DataFrame.inputFiles() fetches
+        # the Java array element by element)
+        files = spark._jvm.scala.collection.immutable.ArraySeq \
+            .unsafeWrapArray(df._jdf.inputFiles()).mkString("\n")
+        if not files:
+            return None
+        return (spark.sparkContext.applicationId, plan.semanticHash(),
+                files), plan
+    except Exception:
+        return None
+
+
+def _collect_cached(stripes: DataFrame, cols: list[str],
+                    limit: int) -> tuple[list, bool]:
+    """(stripes.select(*cols).limit(limit).collect(), whether the rows came
+    from the driver cache). A hit is confirmed with Catalyst's sameResult
+    against the stored plan; a failed check is a miss and replaces the
+    entry."""
+    snap = _snapshot(stripes)
+    if snap is None:
+        return stripes.select(*cols).limit(limit).collect(), False
+    key, plan = snap
+    key += (tuple(cols), limit)
+    with _lineage_lock:
+        entry = _lineage_cache.get(key)
+        if entry is not None:
+            _lineage_cache.move_to_end(key)
+    if entry is not None and plan.sameResult(entry[0]):
+        return entry[1], True
+    rows = stripes.select(*cols).limit(limit).collect()
+    with _lineage_lock:
+        _lineage_cache[key] = (plan, rows)
+        _lineage_cache.move_to_end(key)
+        while len(_lineage_cache) > LINEAGE_CACHE_ENTRIES:
+            _lineage_cache.popitem(last=False)
+    return rows, False
 
 
 def read_rows(stripes: DataFrame, spec: list[dict], key_col: str,
@@ -641,10 +714,23 @@ def read_rows(stripes: DataFrame, spec: list[dict], key_col: str,
     then the same id pass over its survivors), and beyond MAX_PUSHDOWN_IDS
     survivors in the single-pass plan.
 
+    The lineage rows of the first pass are cached on the driver, the way an
+    ORC reader parses a file's tail once: the cache key is the table
+    snapshot — the Spark application id, the semantic hash of the frame's
+    optimized plan and the frame's input files (Spark-written part files
+    are immutable and get fresh names on overwrite or append) — and a hit
+    is confirmed with Catalyst's sameResult against the stored plan. So
+    the first read of a snapshot runs the lineage job and every later read
+    of it runs only the decode query. Only bare file scans with input files
+    are cached (not frames Spark serves from its in-memory cache), in a
+    bounded LRU of LINEAGE_CACHE_ENTRIES snapshots.
+
     Pass a dict as `metrics` (read_orc_eq's shape: counts accumulate over
-    calls) to get `stripes_total` and `stripes_kept` of the id pass and
-    `pruned_on` ("driver" or "spark"); a count the plan never computed —
-    the Spark side's total, the single-pass plan's survivors — is absent."""
+    calls) to get `stripes_total` and `stripes_kept` of the id pass,
+    `lineage_cache_hits` / `lineage_cache_misses` of the driver-side pass
+    and `pruned_on` ("driver" or "spark"); a count the plan never computed
+    — the Spark side's total, its cache use, the single-pass plan's
+    survivors — is absent."""
     pruned = _pushdown_stripes(stripes, id_pushdown, metrics,
                                key_value=key_value)
     pred: dict = {"key_value": key_value}
@@ -967,20 +1053,22 @@ def _bound_ok(bound, kv, keep_if) -> bool:
 
 
 def _prune_on_driver(stripes: DataFrame, key_value=None,
-                     key_values=None) -> tuple[list, int] | None:
+                     key_values=None) -> tuple[list, int, bool] | None:
     """prune_stripes' predicate evaluated in Python over one unfiltered
-    collect of the lineage columns -> (surviving stripe_ids, stripes seen),
-    or None when the table has more than MAX_PUSHDOWN_IDS stripes. The
-    bloom probe as Column expressions differs per key, so every read would
-    plan and codegen a new expression tree; this pass's plan is the same
-    for every key and carries no filter at all."""
+    collect of the lineage columns -> (surviving stripe_ids, stripes seen,
+    whether the lineage came from the driver cache), or None when the table
+    has more than MAX_PUSHDOWN_IDS stripes. The bloom probe as Column
+    expressions differs per key, so every read would plan and codegen a new
+    expression tree; this pass's plan is the same for every key and carries
+    no filter at all, and its rows are cached per table snapshot
+    (_collect_cached)."""
     lo, hi, probes = _prune_bounds(key_value, None, None, key_values)
     cols = ["stripe_id", "key_min", "key_max"]
     if "key_bloom" in stripes.columns:
         cols.append("key_bloom")
     else:
         probes = []
-    rows = stripes.select(*cols).limit(MAX_PUSHDOWN_IDS + 1).collect()
+    rows, hit = _collect_cached(stripes, cols, MAX_PUSHDOWN_IDS + 1)
     if len(rows) > MAX_PUSHDOWN_IDS:
         return None
     positions = [bloom_positions(kv) for kv in probes]
@@ -996,7 +1084,7 @@ def _prune_on_driver(stripes: DataFrame, key_value=None,
                 for pos in positions):
             continue
         ids.append(r[0])
-    return ids, len(rows)
+    return ids, len(rows), hit
 
 
 def _pushdown_stripes(stripes: DataFrame, id_pushdown: bool | None,
@@ -1008,8 +1096,8 @@ def _pushdown_stripes(stripes: DataFrame, id_pushdown: bool | None,
     if id_pushdown:
         got = _prune_on_driver(stripes, **keys)
         if got is not None:
-            ids, total = got
-            _count_prune(metrics, "driver", total, len(ids))
+            ids, total, hit = got
+            _count_prune(metrics, "driver", total, len(ids), hit)
             return stripes.filter(F.col("stripe_id").isin(ids))
     pruned = prune_stripes(stripes, **keys)
     if id_pushdown:
@@ -1023,13 +1111,18 @@ def _pushdown_stripes(stripes: DataFrame, id_pushdown: bool | None,
 
 
 def _count_prune(metrics: dict | None, where: str, total: int | None,
-                 kept: int | None) -> None:
+                 kept: int | None, cache_hit: bool | None = None) -> None:
     """Accumulate read-side pruning counters (read_orc_eq's `metrics`
     shape); a count the plan never computed is left out."""
     if metrics is None:
         return
     metrics["pruned_on"] = where
-    for k, v in (("stripes_total", total), ("stripes_kept", kept)):
+    hits = misses = None
+    if cache_hit is not None:
+        hits, misses = int(cache_hit), int(not cache_hit)
+    for k, v in (("stripes_total", total), ("stripes_kept", kept),
+                 ("lineage_cache_hits", hits),
+                 ("lineage_cache_misses", misses)):
         if v is not None:
             metrics[k] = metrics.get(k, 0) + v
 

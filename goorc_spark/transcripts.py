@@ -186,7 +186,7 @@ def synthesize_spark(spark, n_convs: int = 40_000, seed: int = 42,
         role.alias("role"), text.alias("text"), tool.alias("tool"),
         ts.alias("ts"),
     )
-    if rebalance:
+    if rebalance and mega_conv_turns:
         # The explode makes partition sizes follow CONVERSATION boundaries:
         # with a mega-conversation, one generator partition carries
         # mega_conv_turns extra rows (~25% at the scaling-bench shape), and
@@ -195,7 +195,8 @@ def synthesize_spark(spark, n_convs: int = 40_000, seed: int = 42,
         # is ONE wave of even tasks — scale-adaptive (derived from the
         # cluster, not a constant) and value-deterministic (every column is
         # a pure function of (cid, turn_idx), and downstream consumers
-        # re-sort or aggregate, so row placement is free).
+        # re-sort or aggregate, so row placement is free). Without a mega
+        # conversation there is no straggler, so no shuffle either.
         out = out.repartition(spark.sparkContext.defaultParallelism)
     return out
 

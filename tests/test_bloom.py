@@ -272,7 +272,7 @@ def _spark_survivors(stripes, **keys):
 
 
 def _driver_survivors(stripes, **keys):
-    ids, total = engine._prune_on_driver(stripes, **keys)
+    ids, total, _ = engine._prune_on_driver(stripes, **keys)
     assert total == stripes.count()
     return sorted(ids)
 
@@ -381,6 +381,8 @@ def test_read_rows_metrics_and_spark_fallback(parquet_tables, monkeypatch):
     m1: dict = {}
     want = read(m1)
     assert len(want) == int((pdf["conv_id"] == key).sum())
+    assert (m1.pop("lineage_cache_hits")
+            + m1.pop("lineage_cache_misses")) == 1
     assert m1 == {"pruned_on": "driver", "stripes_total": st.count(),
                   "stripes_kept": len(_spark_survivors(st, key_value=key))}
     monkeypatch.setattr(engine, "MAX_PUSHDOWN_IDS", 1)
@@ -388,4 +390,261 @@ def test_read_rows_metrics_and_spark_fallback(parquet_tables, monkeypatch):
     assert read(m2) == want
     assert m2["pruned_on"] == "spark"
     assert "stripes_total" not in m2
+    assert "lineage_cache_hits" not in m2
+    assert "lineage_cache_misses" not in m2
     assert m2.get("stripes_kept", 1) <= 1
+
+
+# ------------------------------------------------- driver lineage cache --
+
+
+def _keyed_pdf(n_convs=30, seed=21, prefix="conv"):
+    pdf = transcripts.synthesize_pandas(n_convs=n_convs, seed=seed)
+    pdf["conv_id"] = pdf["conv_id"].str.replace("conv", prefix)
+    return pdf
+
+
+def _write_table(spark, path, pdf, run_id="cache", mode="error"):
+    cfg = engine.EncodeConfig(key_col="conv_id", order_cols=("turn_idx",),
+                              stripe_bytes=64 * 1024, partitions=4,
+                              run_id=run_id, range_partition=False)
+    engine.encode_df(spark.createDataFrame(pdf), cfg) \
+        .write.mode(mode).parquet(path)
+
+
+def _jobs_of(spark, fn):
+    """(fn(), number of Spark jobs fn submitted). A marker job in a second
+    group closes the count: once the status tracker lists it, every
+    earlier job is listed too (listener events arrive in order)."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = "lineage-" + uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        sc.setJobGroup(group + "-end", group)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for _ in range(200):
+        if sc.statusTracker().getJobIdsForGroup(group + "-end"):
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        time.sleep(0.05)
+    raise AssertionError("marker job never reported")
+
+
+def _point(stripes, key, metrics=None, **kw):
+    cols = ["conv_id", "turn_idx", "text"]
+    return sorted(tuple(r) for r in engine.read_rows(
+        stripes, transcripts.TRANSCRIPTS_SPEC, "conv_id", key,
+        columns=cols, metrics=metrics, **kw).select(*cols).collect())
+
+
+def _cache_use(m):
+    return m.get("lineage_cache_hits", 0), m.get("lineage_cache_misses", 0)
+
+
+def _n(pdf, key):
+    return int((pdf["conv_id"] == key).sum())
+
+
+def test_lineage_cache_second_read_runs_no_lineage_job(spark, tmp_path):
+    path = str(tmp_path / "t")
+    pdf = _keyed_pdf()
+    _write_table(spark, path, pdf)
+    st = spark.read.parquet(path)
+    key = sorted(pdf["conv_id"].unique())[4]
+    m: dict = {}
+    _, cold = _jobs_of(spark, lambda: engine.read_rows(
+        st, transcripts.TRANSCRIPTS_SPEC, "conv_id", key, metrics=m))
+    _, warm = _jobs_of(spark, lambda: engine.read_rows(
+        st, transcripts.TRANSCRIPTS_SPEC, "conv_id", key, metrics=m))
+    assert cold >= 1 and warm == 0, (cold, warm)
+    assert _cache_use(m) == (1, 1)
+    got = _point(st, key)
+    assert got == _point(st, key, id_pushdown=False)
+    assert len(got) == _n(pdf, key) > 0
+
+
+def test_lineage_cache_misses_after_overwrite(spark, tmp_path):
+    path = str(tmp_path / "t")
+    old = _keyed_pdf()
+    _write_table(spark, path, old)
+    old_key = sorted(old["conv_id"].unique())[4]
+    assert _point(spark.read.parquet(path), old_key)
+    new = _keyed_pdf(seed=5, prefix="other")
+    _write_table(spark, path, new, mode="overwrite")
+    st = spark.read.parquet(path)
+    new_key = sorted(new["conv_id"].unique())[4]
+    m: dict = {}
+    assert len(_point(st, new_key, m)) == _n(new, new_key) > 0
+    assert _cache_use(m) == (0, 1)
+    assert _point(st, old_key, m) == []
+    assert _cache_use(m) == (1, 1)
+
+
+def test_lineage_cache_misses_after_append_and_refresh(spark, tmp_path):
+    """refreshByPath re-lists the file index of a cached plan over the
+    path, which a frame planned before it was cached shares. While it is
+    cached, Spark serves reads of every frame over the path from memory,
+    so none is a bare scan (never cached here). Once unpersisted, its
+    input files are the grown list — a new snapshot. An old frame nobody
+    refreshed keeps its listing: Spark reads the old files, and so does
+    the cache."""
+    path = str(tmp_path / "t")
+    _write_table(spark, path, _keyed_pdf())
+    st, plain = spark.read.parquet(path), spark.read.parquet(path)
+    new = _keyed_pdf(n_convs=10, seed=5, prefix="added")
+    new_key = sorted(new["conv_id"].unique())[2]
+    m: dict = {}
+    for frame in (st, plain, st):
+        assert _point(frame, new_key, m) == []
+    assert _cache_use(m) == (2, 1)
+    st.cache()
+    try:
+        _write_table(spark, path, new, run_id="appended", mode="append")
+        spark.catalog.refreshByPath(path)
+        m = {}
+        for frame in (st, plain):
+            assert len(_point(frame, new_key, m)) == _n(new, new_key) > 0
+        assert _cache_use(m) == (0, 2)
+    finally:
+        st.unpersist(blocking=True)
+    m = {}
+    for _ in range(2):
+        assert len(_point(st, new_key, m)) == _n(new, new_key)
+    assert _cache_use(m) == (1, 1)
+    m = {}
+    assert _point(plain, new_key, m) == []
+    assert _point(plain, new_key, id_pushdown=False) == []
+    assert _cache_use(m) == (1, 0)
+
+
+def test_lineage_cache_filtered_frames_never_share(parquet_tables):
+    from pyspark.sql import functions as F
+
+    pdf, tables = parquet_tables
+    st = tables["hash"]
+    a = st.filter(F.col("part_id") == 0)
+    b = st.filter(F.col("part_id") == 1)
+    assert engine._snapshot(a)[0] != engine._snapshot(b)[0]
+    for key in sorted(pdf["conv_id"].unique())[::6]:
+        for frame in (a, b):
+            assert (_point(frame, key)
+                    == _point(frame, key, id_pushdown=False)), key
+    ids = []
+    for frame in (a, b):
+        got, _, hit = engine._prune_on_driver(frame)  # no key: keep all
+        assert hit
+        assert sorted(got) == sorted(
+            r[0] for r in frame.select("stripe_id").collect())
+        ids.append(set(got))
+    assert ids[0] and ids[1] and ids[0].isdisjoint(ids[1])
+
+
+def test_lineage_cache_lru_bound_evicts(parquet_tables, monkeypatch):
+    from pyspark.sql import functions as F
+
+    pdf, tables = parquet_tables
+    st = tables["range"]
+    a = st.filter(F.col("part_id") == 2)
+    b = st.filter(F.col("part_id") == 3)
+    key = sorted(pdf["conv_id"].unique())[0]
+    monkeypatch.setattr(engine, "LINEAGE_CACHE_ENTRIES", 1)
+    m: dict = {}
+    for frame in (a, a, b, a):
+        _point(frame, key, m)
+    assert _cache_use(m) == (1, 3)
+    assert len(engine._lineage_cache) == 1
+
+
+def test_lineage_cache_skips_in_flight_frames(spark):
+    pdf = _keyed_pdf(n_convs=20, seed=3)
+    cfg = engine.EncodeConfig(key_col="conv_id", order_cols=("turn_idx",),
+                              stripe_bytes=64 * 1024, partitions=2,
+                              run_id="inflight", range_partition=False)
+    inflight = engine.encode_df(spark.createDataFrame(pdf), cfg)
+    assert engine._snapshot(inflight) is None
+    before = list(engine._lineage_cache)
+    key = sorted(pdf["conv_id"].unique())[1]
+    m: dict = {}
+    for _ in range(2):
+        got = _point(inflight, key, m, id_pushdown=True)
+        assert len(got) == _n(pdf, key) > 0
+    assert _cache_use(m) == (0, 2)
+    assert list(engine._lineage_cache) == before
+
+
+def test_lineage_cache_not_consulted_by_a_new_session(tmp_path):
+    """After spark.stop() and a new session the application id differs,
+    so entries of the old session never match — even for the same files.
+    Runs in its own interpreter: stopping the shared test session would
+    break every later test."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+    from pathlib import Path
+
+    script = textwrap.dedent("""
+        import sys
+
+        from pyspark.sql import SparkSession
+
+        from goorc_spark import engine, transcripts
+
+        def session():
+            return (SparkSession.builder.master("local[1]")
+                    .config("spark.ui.enabled", "false")
+                    .config("spark.sql.session.timeZone", "UTC")
+                    .getOrCreate())
+
+        path = sys.argv[1]
+        spark = session()
+        pdf = transcripts.synthesize_pandas(n_convs=12, seed=4)
+        cfg = engine.EncodeConfig(key_col="conv_id",
+                                  order_cols=("turn_idx",), partitions=2,
+                                  stripe_bytes=64 * 1024, run_id="s")
+        engine.encode_df(spark.createDataFrame(pdf), cfg).write.parquet(path)
+        key = sorted(pdf["conv_id"].unique())[3]
+        want = int((pdf["conv_id"] == key).sum())
+
+        def read(spark):
+            m = {}
+            n = engine.read_rows(spark.read.parquet(path),
+                                 transcripts.TRANSCRIPTS_SPEC, "conv_id",
+                                 key, metrics=m).count()
+            assert n == want > 0, (n, want)
+            return m["lineage_cache_hits"], m["lineage_cache_misses"]
+
+        assert read(spark) == (0, 1)
+        assert read(spark) == (1, 0)
+        old_app = spark.sparkContext.applicationId
+        spark.stop()
+        spark = session()
+        assert spark.sparkContext.applicationId != old_app
+        assert len(engine._lineage_cache) == 1
+        assert read(spark) == (0, 1)
+        assert read(spark) == (1, 0)
+        spark.stop()
+    """)
+    root = Path(__file__).resolve().parents[1]
+    env = dict(os.environ, PYTHONPATH=str(root))
+    r = subprocess.run(
+        [sys.executable, "-c", script, str(tmp_path / "t")], env=env,
+        capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stdout[-3000:] + r.stderr[-3000:]
+
+
+def test_spec_from_stripes_cached_per_snapshot(spark, tmp_path):
+    path = str(tmp_path / "t")
+    _write_table(spark, path, _keyed_pdf())
+    first, second = spark.read.parquet(path), spark.read.parquet(path)
+    spec, cold = _jobs_of(spark, lambda: engine.spec_from_stripes(first))
+    again, warm = _jobs_of(spark, lambda: engine.spec_from_stripes(second))
+    assert cold >= 1 and warm == 0, (cold, warm)
+    assert again == spec
+    assert [c["name"] for c in spec] == [
+        c["name"] for c in transcripts.TRANSCRIPTS_SPEC]

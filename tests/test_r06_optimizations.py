@@ -303,3 +303,20 @@ def test_synthesize_rebalance_partitions_even(spark):
     # to within a handful of rows — nothing like the +mega_conv_turns skew
     # of the raw generator output
     assert max(sizes) - min(sizes) < 0.01 * (sum(sizes) / len(sizes))
+
+
+def test_synthesize_rebalances_only_with_a_mega_conversation(spark):
+    """The round-robin rebalance spreads the mega-conversation straggler;
+    without one there is nothing to spread, so the plan has no shuffle."""
+    import re
+
+    from goorc_spark import transcripts
+
+    def repartitions(mega):
+        df = transcripts.synthesize_spark(spark, n_convs=40,
+                                          mega_conv_turns=mega)
+        plan = df._jdf.queryExecution().optimizedPlan().treeString()
+        return len(re.findall(r"\bRepartition\b", plan))
+
+    assert repartitions(0) == 0
+    assert repartitions(5_000) == 1
