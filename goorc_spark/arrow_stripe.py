@@ -30,11 +30,9 @@ from goorc_spark.codecs import (
     boolrle,
     byterle,
     chunk,
-    dictionary,
     floats,
     fsst,
     rlev2,
-    strings,
     timestamps,
 )
 from goorc_spark.codecs.primitives import decode_svarints, encode_svarints
@@ -147,42 +145,46 @@ def _varwidth_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
 # ----------------------------------------------------------------- encode --
 
 
-def _rg_bloom_entry(arr, fpp: float) -> dict:
-    """Per-row-group bloom over the group's DISTINCT key values, sized to
-    the distinct count (a conv-clustered 10k-row group holds ~1k convs ->
-    ~1.2 KB at 1% fpp). Canonical hash bytes: raw UTF-8/bytes for
-    string/binary keys (vectorized off the Arrow buffers),
-    primitives.canonical_key_bytes for anything else (equal-comparing
-    values hash identically — Decimal('1.50')==Decimal('1.5'), tz-aware
-    instants, 1.0==1; ADVICE r4) — select_row_groups probes with the same
-    form."""
-    import base64
-
+def _key_hashes(arr) -> np.ndarray:
+    """murmur3 hash64 of an Arrow key column's DISTINCT non-null values —
+    the hash every key bloom (stripe and row group) is built from.
+    Canonical hash bytes: raw UTF-8/bytes for string/binary keys
+    (vectorized off the Arrow buffers), primitives.canonical_key_bytes for
+    anything else (equal-comparing values hash identically —
+    Decimal('1.50')==Decimal('1.5'), tz-aware instants, 1.0==1; ADVICE
+    r4). _key_hash is the one-key form the probes use."""
     from goorc_spark.codecs import murmur3
     from goorc_spark.codecs.primitives import canonical_key_bytes
 
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
     dist = pc.unique(arr).drop_null()
     t = dist.type
     if (pa.types.is_string(t) or pa.types.is_large_string(t)
             or pa.types.is_binary(t) or pa.types.is_large_binary(t)):
-        hashes = murmur3.hash64_arrow(dist)
-    else:
-        hashes = murmur3.hash64_many(
-            [canonical_key_bytes(v) for v in dist.to_pylist()])
-    m, k = murmur3.bloom_params(max(len(dist), 1), fpp)
-    words = murmur3.build_bloom(hashes, k, m)
-    return {"k": k, "b64": base64.b64encode(words.tobytes()).decode()}
+        return murmur3.hash64_arrow(dist)
+    return murmur3.hash64_many(
+        [canonical_key_bytes(v) for v in dist.to_pylist()])
 
 
-def _rg_bloom_key_hash(key_value) -> int:
-    """Writer-domain 64-bit hash of one probe key
-    (primitives.canonical_key_bytes — mirrors _rg_bloom_entry)."""
+def _key_hash(key_value) -> int:
+    """Writer-domain 64-bit hash of one probe key (mirrors _key_hashes)."""
     from goorc_spark.codecs import murmur3
     from goorc_spark.codecs.primitives import canonical_key_bytes
 
     return murmur3.hash64(canonical_key_bytes(key_value))
+
+
+def _rg_bloom_entry(arr, fpp: float) -> dict:
+    """Per-row-group bloom over the group's DISTINCT key values, sized to
+    the distinct count (a conv-clustered 10k-row group holds ~1k convs ->
+    ~1.2 KB at 1% fpp); select_row_groups probes it with _key_hash."""
+    import base64
+
+    from goorc_spark.codecs import murmur3
+
+    hashes = _key_hashes(arr)
+    m, k = murmur3.bloom_params(max(len(hashes), 1), fpp)
+    words = murmur3.build_bloom(hashes, k, m)
+    return {"k": k, "b64": base64.b64encode(words.tobytes()).decode()}
 
 
 def _rg_bloom_words(entry: dict) -> np.ndarray:
@@ -196,7 +198,7 @@ def rg_bloom_probe(entry: dict, key_value) -> bool:
     from goorc_spark.codecs import murmur3
 
     return murmur3.might_contain(_rg_bloom_words(entry), entry["k"],
-                                 _rg_bloom_key_hash(key_value))
+                                 _key_hash(key_value))
 
 
 def encode_stripe_table(
@@ -459,9 +461,9 @@ def select_row_groups(meta: dict, key_value=None, key_lo=None, key_hi=None,
     from goorc_spark.codecs import murmur3
     # probe-key hashes are loop-invariant: hash each key ONCE, decode each
     # group's bloom words once (not per (group, key) pair)
-    key_hashes = [(kv, _rg_bloom_key_hash(kv)) for kv in key_values] \
+    key_hashes = [(kv, _key_hash(kv)) for kv in key_values] \
         if key_values is not None else None
-    kv_hash = _rg_bloom_key_hash(key_value) if key_value is not None \
+    kv_hash = _key_hash(key_value) if key_value is not None \
         else None
     sel = []
     for i, g in enumerate(groups):

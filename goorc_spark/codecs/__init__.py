@@ -9,11 +9,9 @@ from goorc_spark.codecs import (  # noqa: F401
     boolrle,
     byterle,
     chunk,
-    dictionary,
     floats,
     fsst,
     primitives,
     rlev2,
-    strings,
     timestamps,
 )

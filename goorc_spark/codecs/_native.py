@@ -961,26 +961,15 @@ def rlev2_encode(v: np.ndarray, signed: bool, info: dict | None) -> bytes | None
 def _compile_args(ct):
     """Flatten a CompiledTable into the contiguous arrays the C matcher
     takes (built once per table, cached on the table)."""
-    by_len: dict[int, list] = {}
-    for c, s in enumerate(ct.table):
-        if len(s) >= 2:
-            by_len.setdefault(len(s), []).append((c, s))
     class_len = np.array(ct.classes, dtype=np.int32)
-    keys_l: list[int] = []
-    codes_l: list[int] = []
-    offs = [0]
-    for L in ct.classes:
-        for c, s in by_len[L]:
-            keys_l.append(int.from_bytes(bytes(s), "big"))
-            codes_l.append(c)
-        offs.append(len(keys_l))
+    keys = [np.empty(0, np.uint64)] + [ct.member[L][0] for L in ct.classes]
+    codes = [np.empty(0, np.int16)] + [ct.member[L][1] for L in ct.classes]
     sym_len = np.zeros(256, dtype=np.uint8)
     for c, s in enumerate(ct.table):
         sym_len[c] = len(s)
     return (len(ct.classes), class_len,
-            np.array(offs, dtype=np.int32),
-            np.array(keys_l, dtype=np.uint64),
-            np.array(codes_l, dtype=np.int16),
+            np.cumsum([len(k) for k in keys], dtype=np.int32),
+            np.concatenate(keys), np.concatenate(codes),
             np.ascontiguousarray(ct.single_map),
             sym_len,
             np.ascontiguousarray(ct.lut16),

@@ -98,107 +98,30 @@ def train(data: bytes) -> list[bytes]:
     return table
 
 
-# deterministic odd multipliers for the multiply-shift perfect-hash search
-# (golden-ratio constant and fixed xorshift-style follow-ups)
-_MS_MULTIPLIERS = (0x9E3779B97F4A7C15, 0xC2B2AE3D27D4EB4F, 0xFF51AFD7ED558CCD,
-                   0xC4CEB9FE1A85EC53, 0x2545F4914F6CDD1D, 0xD6E8FEB86659FD93,
-                   0xA24BAED4963EE407, 0x9FB21C651E98DF25)
-
-
-class _Membership:
-    """Reusable exact-membership structure over a small key set, built once
-    per symbol table (compile_table) instead of once per compress call.
-
-    Probe path, fastest first: a multiply-shift perfect hash —
-    idx = (key * a) >> shift into a power-of-two table, collision-free `a`
-    found among a few fixed odd multipliers — needs one vector multiply +
-    shift + two gathers per probe (a uint64 modulo, the previous scheme,
-    is ~3x slower in numpy: no vectorized 64-bit division). Falls back to
-    the modulo perfect hash, then to searchsorted. Exact in every mode, so
-    callers' output bytes are unchanged."""
-
-    __slots__ = ("mode", "mult", "shift", "M", "Md", "slot_key", "slot_pay",
-                 "slot_ok", "skeys", "spay")
-
-    def __init__(self, keys: np.ndarray, payload: np.ndarray):
-        n = max(len(keys), 1)
-        wide = keys.astype(np.uint64)
-        # multiply-shift search: smallest 2^k with load factor <= 0.5
-        k = max((2 * n - 1).bit_length(), 3)
-        while k <= 16:
-            sh = np.uint64(64 - k)
-            for a in _MS_MULTIPLIERS:
-                au = np.uint64(a)
-                idx = (wide * au) >> sh
-                if len(np.unique(idx)) == len(keys):
-                    self.mode = "ms"
-                    self.mult = au
-                    self.shift = sh
-                    M = 1 << k
-                    self.slot_key = np.zeros(M, dtype=keys.dtype)
-                    self.slot_pay = np.zeros(M, dtype=payload.dtype)
-                    self.slot_ok = np.zeros(M, dtype=bool)
-                    self.slot_key[idx] = keys
-                    self.slot_pay[idx] = payload
-                    self.slot_ok[idx] = True
-                    return
-            k += 1
-        M = 0
-        trial = max(2 * len(keys), 16)
-        while trial <= 1 << 16:
-            if len(np.unique(keys % keys.dtype.type(trial))) == len(keys):
-                M = trial
-                break
-            trial = trial * 2 + 1
-        self.M = M
-        if M:
-            self.mode = "mod"
-            self.Md = keys.dtype.type(M)
-            self.slot_key = np.zeros(M, dtype=keys.dtype)
-            self.slot_pay = np.zeros(M, dtype=payload.dtype)
-            self.slot_ok = np.zeros(M, dtype=bool)
-            at0 = keys % self.Md
-            self.slot_key[at0] = keys
-            self.slot_pay[at0] = payload
-            self.slot_ok[at0] = True
-        else:
-            self.mode = "sort"
-            sidx = np.argsort(keys)
-            self.skeys, self.spay = keys[sidx], payload[sidx]
-
-    def probe(self, probes: np.ndarray):
-        if self.mode == "ms":
-            at = (probes.astype(np.uint64, copy=False) * self.mult) \
-                >> self.shift
-            hit = self.slot_ok[at] & (self.slot_key[at] == probes)
-            return hit, self.slot_pay[at[hit]]
-        if self.mode == "mod":
-            at = probes % self.Md
-            hit = self.slot_ok[at] & (self.slot_key[at] == probes)
-            return hit, self.slot_pay[at[hit]]
-        at = np.searchsorted(self.skeys, probes)
-        at[at == len(self.skeys)] = 0
-        hit = self.skeys[at] == probes
-        return hit, self.spay[at[hit]]
-
-
-def _exact_membership(keys: np.ndarray, payload: np.ndarray,
-                      probes: np.ndarray):
-    """One-shot form of _Membership (kept for the training-side callers)."""
-    return _Membership(keys, payload).probe(probes)
+def _probe(member: tuple[np.ndarray, np.ndarray], probes: np.ndarray):
+    """Exact membership of uint64 `probes` in one length class's sorted
+    symbol keys -> (hit mask, the hits' symbol codes)."""
+    keys, codes = member
+    at = np.searchsorted(keys, probes)
+    at[at == len(keys)] = 0
+    hit = keys[at] == probes
+    return hit, codes[at[hit]]
 
 
 def _drop_overlaps(pos: np.ndarray, codes: np.ndarray, L: int):
-    """Remove self-overlapping matches left-to-right (few passes converge)."""
-    while len(pos) > 1:
-        bad = np.flatnonzero(np.diff(pos) < L) + 1
-        if len(bad) == 0:
-            break
-        keep = np.ones(len(pos), dtype=bool)
-        # remove every second element of an overlapping chain
-        keep[bad[np.concatenate(([True], np.diff(bad) > 1))]] = False
-        pos, codes = pos[keep], codes[keep]
-    return pos, codes
+    """Leftmost-first greedy over sorted match starts: keep a match, then
+    the first match starting at or past its end. Each kept match jumps
+    straight to its successor, so the cost is linear even when repetitive
+    text makes one overlap chain of the whole stream."""
+    if len(pos) < 2 or int(np.diff(pos).min()) >= L:
+        return pos, codes
+    nxt = np.searchsorted(pos, pos + L).tolist()
+    keep = []
+    i = 0
+    while i < len(nxt):
+        keep.append(i)
+        i = nxt[i]
+    return pos[keep], codes[keep]
 
 
 def _rolling_keys4(arr: np.ndarray) -> np.ndarray:
@@ -215,22 +138,18 @@ def _rolling_keys4(arr: np.ndarray) -> np.ndarray:
     return h
 
 
-_EMPTY_I32 = np.empty(0, dtype=np.int32)
-
-
 class CompiledTable:
     """A symbol table with every compress-side constant precomputed ONCE:
-    the 2-byte-prefix class LUT, the 4-byte-prefix membership hash, the
-    per-class full-key membership hashes, the 2-byte code LUT, the
-    single-byte map and the serialized header. compress() previously
-    rebuilt all of these per call — per row group under the stripe
+    the 2-byte-prefix class LUT, the bytes-2-3 LUT, the per-class sorted
+    symbol keys, the single-byte map and the serialized header. compress()
+    previously rebuilt all of these per call — per row group under the stripe
     writer's shared-table cache — which was ~25% of the whole FSST cost
     on transcripts text. Matching decisions and output bytes are
     IDENTICAL to the uncompiled path (pytest pins compress(list) ==
     compress(compiled))."""
 
     __slots__ = ("table", "header", "single_map", "classes", "lut16",
-                 "lut16b", "member", "code_lut2", "has_multi", "nat_args")
+                 "lut16b", "member", "has_multi", "nat_args")
 
     def __init__(self, table: list[bytes]):
         self.table = list(table)
@@ -265,19 +184,15 @@ class CompiledTable:
                     self.lut16b[base:base + 256] |= bit
             if L == 2:
                 self.lut16b |= bit
-        self.member: dict[int, _Membership] = {}
-        self.code_lut2 = None
+        # per class: symbol keys (big-endian ints) sorted for _probe, and
+        # their codes; a stable sort keeps the first of duplicate symbols
+        self.member: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         for L, syms in by_len.items():
-            if L == 2:
-                self.code_lut2 = np.full(65536, -1, dtype=np.int16)
-                for c, s in syms:
-                    self.code_lut2[(int(s[0]) << 8) | int(s[1])] = c
-            else:
-                sym_keys = np.array(
-                    [int.from_bytes(bytes(s), "big") for _, s in syms],
-                    dtype=np.uint64)
-                sym_codes = np.array([c for c, _ in syms], dtype=np.int16)
-                self.member[L] = _Membership(sym_keys, sym_codes)
+            keys = np.array([int.from_bytes(s, "big") for _, s in syms],
+                            dtype=np.uint64)
+            codes = np.array([c for c, _ in syms], dtype=np.int16)
+            order = np.argsort(keys, kind="stable")
+            self.member[L] = (keys[order], codes[order])
 
     def match_all(self, h4: np.ndarray, n: int, taken: np.ndarray,
                   code_at: np.ndarray) -> None:
@@ -305,25 +220,22 @@ class CompiledTable:
             if len(cand) == 0:
                 continue
             if L == 2:
-                codes = self.code_lut2[(h4[cand] >> np.uint32(16))]
-                ok = ~taken[cand + 1]
-                pos, codes = _drop_overlaps(cand[ok], codes[ok], 2)
+                keys = (h4[cand] >> np.uint32(16)).astype(np.uint64)
+            elif L == 3:
+                keys = (h4[cand] >> np.uint32(8)).astype(np.uint64)
+            elif L == 4:
+                keys = h4[cand].astype(np.uint64)
             else:
-                if L == 3:
-                    keys = (h4[cand] >> np.uint32(8)).astype(np.uint64)
-                elif L == 4:
-                    keys = h4[cand].astype(np.uint64)
-                else:
-                    keys = ((h4[cand].astype(np.uint64)
-                             << np.uint64(8 * (L - 4)))
-                            | (h4[cand + 4].astype(np.uint64)
-                               >> np.uint64(8 * (8 - L))))
-                hit, codes = self.member[L].probe(keys)
-                pos = cand[hit]
-                ok = np.ones(len(pos), dtype=bool)
-                for j in range(1, L):
-                    ok &= ~taken[pos + j]
-                pos, codes = _drop_overlaps(pos[ok], codes[ok], L)
+                keys = ((h4[cand].astype(np.uint64)
+                         << np.uint64(8 * (L - 4)))
+                        | (h4[cand + 4].astype(np.uint64)
+                           >> np.uint64(8 * (8 - L))))
+            hit, codes = _probe(self.member[L], keys)
+            pos = cand[hit]
+            ok = np.ones(len(pos), dtype=bool)
+            for j in range(1, L):
+                ok &= ~taken[pos + j]
+            pos, codes = _drop_overlaps(pos[ok], codes[ok], L)
             if len(pos) == 0:
                 continue
             code_at[pos] = codes

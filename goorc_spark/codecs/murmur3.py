@@ -21,12 +21,13 @@ tests/test_orc_bloom.py — notable findings baked in here:
   (signed); combined(i) = hash1 + i*hash2 for i in 1..k with int32
   wraparound, bit-flipped (~) when negative, then % numBits.
 
-The vectorized forms iterate over byte/block POSITIONS with every value
-as a uint64 lane (same lane trick as engine._build_bloom); numpy wrapping
-integer arithmetic is exactly the scalar masked math, pinned bit-exact by
-tests. The reference repo has no bloom filters at all (grep over
-/root/reference/orc: zero hits) — this module exceeds it to serve the
-native ORC reader/writer's row-group pruning.
+The vectorized forms iterate over 8-byte block POSITIONS with every value
+as a uint64 lane; numpy wrapping integer arithmetic is exactly the scalar
+masked math, pinned bit-exact by tests. The Go reference has no bloom
+filters at all. This module is the one hash family of every bloom here:
+the native ORC reader/writer's row-group pruning, and the stripe table's
+per-stripe and per-row-group key blooms (engine._build_bloom,
+arrow_stripe._key_hashes).
 """
 
 from __future__ import annotations

@@ -33,35 +33,12 @@ def unzigzag(u: np.ndarray) -> np.ndarray:
     )
 
 
-def bits_required(u: np.ndarray) -> np.ndarray:
-    """Bit length of each uint64 value (0 -> 1: a value always occupies >=1 bit)."""
-    u = np.asarray(u, dtype=np.uint64)
-    # np.log2 is unsafe at 64-bit edge; build from byte view.
-    b = u.view(np.uint8).reshape(-1, 8)  # little-endian bytes
-    if not u.flags.c_contiguous:
-        b = np.ascontiguousarray(u).view(np.uint8).reshape(-1, 8)
-    # highest nonzero byte index
-    nz = b != 0
-    byte_idx = np.where(nz.any(axis=1), 7 - np.argmax(nz[:, ::-1], axis=1), 0)
-    top = b[np.arange(len(u)), byte_idx]
-    top_bits = np.frombuffer(
-        bytes(int(x).bit_length() for x in range(256)), dtype=np.uint8
-    )[top].astype(np.int64)
-    out = byte_idx * 8 + top_bits
-    return np.maximum(out, 1)
-
-
-# Precompute the per-byte bit_length lookup once.
-_BIT_LEN_TABLE = np.array([int(x).bit_length() for x in range(256)], dtype=np.int64)
-
-
 def bits_required_fast(u: np.ndarray) -> np.ndarray:
     """Exact per-value bit length via frexp: for values below 2^53 the
     float64 image is exact, so frexp's exponent IS the bit length (value
     in [2^(e-1), 2^e)); above 2^53 rounding can only bump a value to the
     NEXT power of two, detected (and corrected) with one shift-compare.
-    ~2x the old byte-matrix form (no reshape/argmax/fancy gather), still
-    branch-free per element."""
+    A value always occupies >= 1 bit (0 -> 1)."""
     u = np.asarray(u, dtype=np.uint64)
     n = len(u)
     if n == 0:

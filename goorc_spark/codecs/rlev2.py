@@ -19,8 +19,6 @@ monotonic delta, then patched-base for skewed signed data, else direct):
 
 from __future__ import annotations
 
-import bisect
-
 import numpy as np
 
 from goorc_spark.codecs import _native, bitpack
@@ -72,66 +70,27 @@ def encode(values, signed: bool = True, info: dict | None = None) -> bytes:
     if nat is not None:
         return nat
     out = bytearray()
-    n = len(v)
-    # whole-vector precomputes hoisted out of the per-block loop (the loop
-    # ran 8+ small-numpy ops per <=512-value block; these made it ~2x):
-    # value-change boundaries (head-run length via searchsorted) and the
-    # adjacent-diff array (delta detection), computed once.
-    if n > 1:
-        neq = v[1:] != v[:-1]
-        dall = v.astype(np.int64)[1:] - v.astype(np.int64)[:-1]
-    else:
-        neq = np.empty(0, bool)
-        dall = np.empty(0, np.int64)
-    huge_unsigned = (not signed) and n and int(v.max()) > (1 << 62)
-    # whole-vector run-boundary indices, consumed via bisect: per-block
-    # head-run and monotone-prefix detection become O(log) scalar lookups
-    # instead of O(block) numpy passes (python lists — a per-block scalar
-    # np.searchsorted costs ~40us in wrapper overhead alone)
-    neq_list = np.flatnonzero(neq).tolist()
-    neg_list = np.flatnonzero(dall < 0).tolist()
-    posd_list = np.flatnonzero(dall > 0).tolist()
-    # delta-change boundaries: dchg_list[j]=c means dall[c+1] != dall[c];
-    # per-block "all deltas equal" becomes one bisect instead of an
-    # O(block) numpy compare
-    dchg_list = np.flatnonzero(dall[1:] != dall[:-1]).tolist() \
-        if n > 2 else []
     pos = 0
-    while pos < n:
+    while pos < len(v):
         mark = len(out)
-        blk_len = min(MAX_RUN, n - pos)
-        block = v[pos : pos + blk_len]
-        qi = bisect.bisect_left(neq_list, pos)
-        if qi < len(neq_list) and neq_list[qi] - pos < blk_len - 1:
-            head_run = neq_list[qi] - pos + 1
-        else:
-            head_run = blk_len
-        d = dall[pos : pos + blk_len - 1]  # view, no copy
-        if blk_len > 1:
-            d0 = int(d[0])
-            opp = neg_list if d0 > 0 else posd_list
-            oi = bisect.bisect_left(opp, pos)
-            nxt = opp[oi] - pos if oi < len(opp) else blk_len - 1
-            mono_m = min(nxt, blk_len - 1) + 1  # values in monotone prefix
-        else:
-            d0, mono_m = 0, 1
-        pos += _encode_block(out, block, signed, head_run, d,
-                             huge_unsigned, d0, mono_m, pos, dchg_list)
+        pos += _encode_block(out, v[pos : pos + MAX_RUN], signed)
         if info is not None and len(out) > mark:
             sub = SUB_NAMES[out[mark] >> 6]
             info[sub] = info.get(sub, 0) + 1
     return bytes(out)
 
 
-def _encode_block(out: bytearray, block, signed: bool, r: int,
-                  d: np.ndarray, huge_unsigned: bool,
-                  d0: int, mono_m: int, pos: int = 0,
-                  dchg_list: list | None = None) -> int:
+def _encode_block(out: bytearray, block, signed: bool) -> int:
+    """Encode one run from the head of `block` (<= MAX_RUN values); returns
+    how many values it consumed."""
     n = len(block)
     if n == 1:
-        _write_short_repeat_single(out, block[:1], signed)
+        # a lone trailing value: short-repeat needs count>=3, so DIRECT of 1
+        _write_direct(out, block, signed)
         return 1
 
+    change = np.flatnonzero(block[1:] != block[:-1])
+    r = int(change[0]) + 1 if len(change) else n  # leading equal values
     if r >= MIN_REPEAT:
         if r <= MAX_SHORT_REPEAT:
             _write_short_repeat(out, block[0], r, signed)
@@ -139,59 +98,53 @@ def _encode_block(out: bytearray, block, signed: bool, r: int,
         _write_fixed_delta(out, block[0], 0, r, signed)
         return r
 
-    # monotonic prefix (deltas in int64; guard huge unsigned magnitudes).
-    # huge_unsigned = the VECTOR contains >2^62 values; the per-block check
-    # then decides exactly as before (byte-identical output)
-    if not (huge_unsigned and int(block.max()) > (1 << 62)):
-        if d0 != 0:
-            m = mono_m
-            if m >= MIN_DELTA_RUN or (m == n and m >= MIN_REPEAT):
-                deltas = d[: m - 1]
-                if dchg_list is not None:
-                    # all deltas equal <=> no delta-change boundary falls
-                    # inside [pos, pos+m-3] (one bisect, no numpy pass)
-                    ci = bisect.bisect_left(dchg_list, pos)
-                    fixed = not (ci < len(dchg_list)
-                                 and dchg_list[ci] <= pos + m - 3)
-                else:
-                    fixed = bool((deltas == d0).all())
-                if fixed:
-                    _write_fixed_delta(out, block[0], d0, m, signed)
-                    return m
-                # width-outlier split (chooser-only; format unchanged): a
-                # rare huge jump inside an otherwise-narrow monotone run
-                # (e.g. a conversation boundary in a sorted timestamp
-                # column) would inflate EVERY bitpacked literal to the
-                # jump's aligned width. End the run just before the first
-                # outlier — the jump then becomes the NEXT run's varint
-                # delta_base (a few bytes once) instead of widening m-2
-                # literals. Observed on transcripts ts: 28.4 -> ~11
-                # bits/value.
-                if m > MIN_DELTA_RUN + 1:
-                    absd = np.abs(deltas[1:]).astype(np.uint64)
-                    w_full = aligned_width(
-                        max(int(absd.max()).bit_length(), 1))
-                    # scalar pre-check: nothing to win from splitting an
-                    # already-narrow run; skips the per-value bits pass
-                    if w_full > 8:
-                        lit_bits = bits_required_fast(absd)
-                        srt = np.sort(lit_bits)
-                        w90 = aligned_width(
-                            int(srt[int(0.9 * (len(srt) - 1))]))
-                    else:
-                        w90 = w_full
-                    if w_full > w90:
-                        big = np.flatnonzero(lit_bits > w90)
-                        j = int(big[0]) + 1  # index into deltas
-                        # worth a new block header only if the tail would
-                        # have widened enough literal bits (a 2-4 value
-                        # prefix run is still format-legal and beats
-                        # widening the tail)
-                        if (w_full - w90) * (m - 1 - j) >= 128:
-                            _write_var_delta(out, block[0], deltas[:j], signed)
-                            return j + 1
-                _write_var_delta(out, block[0], deltas, signed)
+    # adjacent deltas in int64 (uint64 blocks wrap through int64, exactly
+    # as the DELTA writer stores them)
+    d = np.diff(block.astype(np.int64))
+    d0 = int(d[0])
+    # monotonic prefix; unsigned values above 2^62 have no int64 delta
+    if d0 != 0 and (signed or int(block.max()) <= (1 << 62)):
+        turn = np.flatnonzero(d < 0 if d0 > 0 else d > 0)
+        m = (int(turn[0]) if len(turn) else n - 1) + 1  # values in prefix
+        if m >= MIN_DELTA_RUN or (m == n and m >= MIN_REPEAT):
+            deltas = d[: m - 1]
+            if bool((deltas == d0).all()):
+                _write_fixed_delta(out, block[0], d0, m, signed)
                 return m
+            # width-outlier split (chooser-only; format unchanged): a
+            # rare huge jump inside an otherwise-narrow monotone run
+            # (e.g. a conversation boundary in a sorted timestamp
+            # column) would inflate EVERY bitpacked literal to the
+            # jump's aligned width. End the run just before the first
+            # outlier — the jump then becomes the NEXT run's varint
+            # delta_base (a few bytes once) instead of widening m-2
+            # literals. Observed on transcripts ts: 28.4 -> ~11
+            # bits/value.
+            if m > MIN_DELTA_RUN + 1:
+                absd = np.abs(deltas[1:]).astype(np.uint64)
+                w_full = aligned_width(
+                    max(int(absd.max()).bit_length(), 1))
+                # scalar pre-check: nothing to win from splitting an
+                # already-narrow run; skips the per-value bits pass
+                if w_full > 8:
+                    lit_bits = bits_required_fast(absd)
+                    srt = np.sort(lit_bits)
+                    w90 = aligned_width(
+                        int(srt[int(0.9 * (len(srt) - 1))]))
+                else:
+                    w90 = w_full
+                if w_full > w90:
+                    big = np.flatnonzero(lit_bits > w90)
+                    j = int(big[0]) + 1  # index into deltas
+                    # worth a new block header only if the tail would
+                    # have widened enough literal bits (a 2-4 value
+                    # prefix run is still format-legal and beats
+                    # widening the tail)
+                    if (w_full - w90) * (m - 1 - j) >= 128:
+                        _write_var_delta(out, block[0], deltas[:j], signed)
+                        return j + 1
+            _write_var_delta(out, block[0], deltas, signed)
+            return m
 
     # whole-block PATCHED_BASE first — matches the reference chooser (and
     # its pinned byte vectors): skewed-but-narrow data patches better than
@@ -249,11 +202,6 @@ def _encode_block(out: bytearray, block, signed: bool, r: int,
     return lit_n
 
 
-def _write_short_repeat_single(out, block, signed):
-    # a lone trailing value: short-repeat needs count>=3, so emit DIRECT of 1
-    _write_direct(out, block, signed)
-
-
 def _write_short_repeat(out, value, count, signed):
     v = int(value)
     u = ((v << 1) ^ (v >> 63)) if signed else v
@@ -273,19 +221,6 @@ def _write_fixed_delta(out, base, delta, count, signed):
 
 def _write_var_delta(out, base, deltas, signed):
     count = len(deltas) + 1
-    if len(deltas) <= 64:  # scalar twin: typical sorted-key runs are short
-        dl = [int(x) for x in deltas]
-        lits = [abs(x) for x in dl[1:]]
-        w = aligned_width(max(max(lits).bit_length(), 1)) if lits else 2
-        if w == 1:
-            w = 2
-        out.append((_DELTA << 6) | (width_to_code(w) << 1)
-                   | ((count - 1) >> 8))
-        out.append((count - 1) & 0xFF)
-        out += svarint1(int(base)) if signed else uvarint1(int(base))
-        out += svarint1(dl[0])
-        out += _pack_ints(lits, w)
-        return
     lits = np.abs(deltas[1:]).astype(np.uint64)
     w = aligned_width(max(int(lits.max()).bit_length(), 1)) if len(lits) else 2
     if w == 1:
@@ -298,40 +233,8 @@ def _write_var_delta(out, base, deltas, signed):
     out += bitpack.pack(lits, w)
 
 
-_SMALL_SEG = 12  # literal segments at or below this go through the scalar
-#                  twins: ~10 numpy calls of sub-microsecond work each were
-#                  the whole cost of the 2-4-value wiggle blocks at sorted
-#                  conversation boundaries (byte-identical output, fuzz-pinned)
-_U64_MASK = (1 << 64) - 1
-
-
-def _pack_ints(vals: list, width: int) -> bytes:
-    """Scalar twin of bitpack.pack for short Python-int lists (MSB-first,
-    zero-padded to a byte) — byte-identical."""
-    if not vals:
-        return b""
-    acc = 0
-    mask = (1 << width) - 1
-    for v in vals:
-        acc = (acc << width) | (v & mask)
-    nbits = width * len(vals)
-    pad = (-nbits) % 8
-    return (acc << pad).to_bytes((nbits + pad) // 8, "big")
-
-
 def _write_direct(out, block, signed):
     n = len(block)
-    if n <= _SMALL_SEG:
-        vs = block.tolist()
-        if signed:
-            u = [((v << 1) ^ (v >> 63)) & _U64_MASK for v in vs]
-        else:
-            u = vs
-        w = aligned_width(max(max(u).bit_length(), 1))
-        out.append((_DIRECT << 6) | (width_to_code(w) << 1) | ((n - 1) >> 8))
-        out.append((n - 1) & 0xFF)
-        out += _pack_ints(u, w)
-        return
     u = zigzag(block) if signed else block.astype(np.uint64)
     w = aligned_width(max(int(u.max()).bit_length(), 1))
     h = (_DIRECT << 6) | (width_to_code(w) << 1) | ((n - 1) >> 8)
@@ -340,71 +243,8 @@ def _write_direct(out, block, signed):
     out += bitpack.pack(u, w)
 
 
-def _try_patched_base_small(out: bytearray, vs: list) -> bool:
-    """Scalar twin of _try_patched_base for short segments — identical
-    decisions and bytes, no numpy per-call overhead."""
-    import math
-
-    n = len(vs)
-    base = min(vs)
-    hi = max(vs)
-    if hi - base >= (1 << 62):
-        return False
-    diff = [v - base for v in vs]
-    bits = [max(x.bit_length(), 1) for x in diff]
-    srt = sorted(bits)
-    w90 = aligned_width(srt[max(int(math.ceil(0.9 * n)) - 1, 0)])
-    w100 = srt[-1]
-    if w100 <= w90:
-        return False
-    patch_idx = [i for i, b in enumerate(bits) if b > w90]
-    patch_vals = [diff[i] >> w90 for i in patch_idx]
-    pw = closest_width(max(max(patch_vals).bit_length(), 1))
-    gaps: list[int] = []
-    patches: list[int] = []
-    prev = 0
-    for i, p in zip(patch_idx, patch_vals):
-        g = i - prev
-        prev = i
-        while g > 255:
-            gaps.append(255)
-            patches.append(0)
-            g -= 255
-        gaps.append(g)
-        patches.append(p)
-    if len(gaps) > 31:
-        return False
-    pgw = max(max(gaps).bit_length(), 1)
-    if pgw + pw > 64:
-        return False
-    mag = abs(base)
-    bw = max((mag.bit_length() + 1 + 7) // 8, 1)
-    if bw > 8:
-        return False
-    out.append((_PATCHED_BASE << 6) | (width_to_code(w90) << 1)
-               | ((n - 1) >> 8))
-    out.append((n - 1) & 0xFF)
-    out.append(((bw - 1) << 5) | width_to_code(pw))
-    out.append(((pgw - 1) << 5) | len(gaps))
-    base_bytes = bytearray(mag.to_bytes(bw, "big"))
-    if base < 0:
-        base_bytes[0] |= 0x80
-    out += base_bytes
-    out += _pack_ints(diff, w90)
-    # patch entries pack at closest_width(pgw+pw), NOT raw pgw+pw: the ORC
-    # spec (and the Java/C++ readers) use getClosestFixedBits here. The
-    # reference writes/reads raw (int.go:271,856) — mirroring it made our
-    # files self-consistent but unreadable by pyarrow whenever pgw+pw is
-    # an unaligned width >24 (hypothesis-found; pinned in test_property).
-    out += _pack_ints([(g << pw) | p for g, p in zip(gaps, patches)],
-                      closest_width(pgw + pw))
-    return True
-
-
 def _try_patched_base(out: bytearray, block) -> bool:
     n = len(block)
-    if n <= _SMALL_SEG:
-        return _try_patched_base_small(out, [int(v) for v in block])
     base = int(block.min())
     hi = int(block.max())
     if hi - base >= (1 << 62):  # range too wide for FoR arithmetic
@@ -454,8 +294,11 @@ def _try_patched_base(out: bytearray, block) -> bool:
     # data at w90 (truncated low bits)
     mask = np.uint64((1 << w90) - 1) if w90 < 64 else np.uint64(0xFFFFFFFFFFFFFFFF)
     out += bitpack.pack(diff & mask, w90)
-    # patch blob at closest_width(pgw+pw) bits per entry (ORC spec
-    # getClosestFixedBits — see the note in _try_patched_base_small)
+    # patch entries pack at closest_width(pgw+pw), NOT raw pgw+pw: the ORC
+    # spec (and the Java/C++ readers) use getClosestFixedBits here. The
+    # reference writes/reads raw (int.go:271,856) — mirroring it made our
+    # files self-consistent but unreadable by pyarrow whenever pgw+pw is
+    # an unaligned width >24 (hypothesis-found; pinned in test_property).
     entries = (np.array(gaps, dtype=np.uint64) << np.uint64(pw)) | np.array(
         patches, dtype=np.uint64
     )

@@ -33,7 +33,6 @@ import uuid
 from collections import OrderedDict
 from dataclasses import dataclass, field
 
-import numpy as np
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -71,98 +70,37 @@ STRIPE_SCHEMA = stripe_schema()
 # built-ins (no UDF — the filter pushes into the stripe-table parquet scan).
 # 64 Kbit / k=6: ~0% false positives at 1k distinct keys per stripe, ~6% at
 # 50k; a saturated filter only costs a wasted read, never a wrong skip.
+# Same murmur3 hash and probe math as the row-group and ORC blooms; bit p
+# lives at byte p >> 3, bit p & 7. A trailing version byte makes a bloom
+# BLOOM_BYTES long: any other length (the 8192-byte blooms an earlier hash
+# family wrote, with no version byte) never skips a stripe.
 BLOOM_BITS = 1 << 16
 BLOOM_K = 6
-_FNV_OFFSET = 0xCBF29CE484222325
-_FNV_PRIME = 0x100000001B3
-_U64 = (1 << 64) - 1
-
-
-def _bloom_hashes(key_bytes: bytes) -> tuple[int, int]:
-    """Two 64-bit FNV-1a hashes of the canonical key bytes — h2 forced odd
-    so Kirsch-Mitzenmacher double hashing cycles all positions."""
-    h1 = _FNV_OFFSET
-    for b in key_bytes:
-        h1 = ((h1 ^ b) * _FNV_PRIME) & _U64
-    h2 = h1
-    for b in b"goorc-bloom":
-        h2 = ((h2 ^ b) * _FNV_PRIME) & _U64
-    return h1, h2 | 1
+_BLOOM_TRAILER = b"\x01"
+BLOOM_BYTES = BLOOM_BITS // 8 + len(_BLOOM_TRAILER)
 
 
 def bloom_positions(key_value) -> list[int]:
     """The k probe bit positions for a key (same math at encode and query;
     canonical_key_bytes so equal-comparing Decimal/datetime/float forms
     probe the same bits — ADVICE r4)."""
-    from goorc_spark.codecs.primitives import canonical_key_bytes
+    from goorc_spark import arrow_stripe
+    from goorc_spark.codecs import murmur3
 
-    h1, h2 = _bloom_hashes(canonical_key_bytes(key_value))
-    return [(h1 + i * h2) % BLOOM_BITS for i in range(BLOOM_K)]
-
-
-def _build_bloom(values) -> bytes:
-    """Stripe bloom bytes, vectorized (VERDICT r3 #7 — this was the last
-    Python loop in the encode hot path): the FNV-1a chain is sequential in
-    one key's BYTES but independent across keys, so iterate over byte
-    POSITIONS (max key length, ~13 for conv ids) with every key as a
-    uint64 lane. numpy uint64 arithmetic wraps mod 2^64, which is exactly
-    the scalar (& _U64) math; bit-exact with bloom_positions, pinned by
-    tests/test_bloom.py::test_build_bloom_matches_scalar. Keys are hashed
-    in length buckets (4x geometric) so the padded matrix's width tracks
-    the bucket max, not one long outlier value (ADVICE r4: a single 10 MB
-    key among 50k short ones must not allocate n * max_len bytes)."""
-    from goorc_spark.codecs.primitives import canonical_key_bytes
-
-    enc = [canonical_key_bytes(v) for v in values if v is not None]
-    if not enc:
-        return bytes(BLOOM_BITS // 8)
-    n = len(enc)
-    lens = np.fromiter((len(b) for b in enc), np.int64, count=n)
-    flat = np.frombuffer(b"".join(enc), dtype=np.uint8)
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    h1 = np.empty(n, dtype=np.uint64)
-    long = lens > _BLOOM_SCALAR_CUTOFF
-    if long.any():  # scalar loop beats a 1-lane numpy per-byte loop
-        h1[long] = [_bloom_hashes(bytes(flat[s:s + l]))[0]
-                    for s, l in zip(starts[long], lens[long])]
-    max_len = int(lens[~long].max()) if (~long).any() else 0
-    lo, hi = -1, max(64, _BLOOM_MAT_BUDGET // max(n, 1))
-    while lo < max_len:
-        m = (lens > lo) & (lens <= hi) & ~long
-        if m.any():
-            h1[m] = _fnv1a_block(flat, starts[m], lens[m])
-        lo, hi = hi, hi * 4
-    prime = np.uint64(_FNV_PRIME)
-    h2 = h1.copy()
-    for b in b"goorc-bloom":
-        h2 = (h2 ^ np.uint64(b)) * prime
-    h2 |= np.uint64(1)
-    bits = np.zeros(BLOOM_BITS, dtype=bool)
-    for i in range(BLOOM_K):
-        bits[(h1 + np.uint64(i) * h2) % np.uint64(BLOOM_BITS)] = True
-    return np.packbits(bits, bitorder="little").tobytes()
+    return murmur3.positions(arrow_stripe._key_hash(key_value), BLOOM_K,
+                             BLOOM_BITS)
 
 
-_BLOOM_MAT_BUDGET = 64 << 20   # bytes per padded matrix pass
-_BLOOM_SCALAR_CUTOFF = 16_384  # keys longer than this hash via the scalar
-                               # loop (few lanes x huge width loses to it)
+def _build_bloom(keys) -> bytes:
+    """Stripe bloom bytes over an Arrow key column's distinct non-null
+    values; bit-exact with bloom_positions (pinned by
+    tests/test_bloom.py::test_build_bloom_matches_scalar)."""
+    from goorc_spark import arrow_stripe
+    from goorc_spark.codecs import murmur3
 
-
-def _fnv1a_block(flat: np.ndarray, starts: np.ndarray,
-                 lens: np.ndarray) -> np.ndarray:
-    """One padded-matrix FNV-1a pass over values of similar length."""
-    n = len(lens)
-    width = int(lens.max())
-    valid = np.arange(width)[None, :] < lens[:, None]
-    mat = np.zeros((n, width), dtype=np.uint8)
-    idx = starts[:, None] + np.arange(width)[None, :]
-    mat[valid] = flat[idx[valid]]
-    prime = np.uint64(_FNV_PRIME)
-    h1 = np.full(n, _FNV_OFFSET, dtype=np.uint64)
-    for j in range(width):
-        m = valid[:, j]
-        h1[m] = (h1[m] ^ mat[m, j].astype(np.uint64)) * prime
-    return h1
+    words = murmur3.build_bloom(arrow_stripe._key_hashes(keys), BLOOM_K,
+                                BLOOM_BITS)
+    return words.astype("<u8", copy=False).tobytes() + _BLOOM_TRAILER
 
 
 @dataclass
@@ -345,7 +283,7 @@ def _make_encoder(spec: list[dict], cfg: EncodeConfig):
                 # bloom over DISTINCT keys (few per stripe: rows cluster by
                 # key) — lets point reads skip hash-partitioned stripes
                 # whose [key_min, key_max] spans the whole key space
-                bloom = _build_bloom(pc.unique(table.column(key)).to_pylist())
+                bloom = _build_bloom(table.column(key))
             else:
                 kmin = kmax = pa.array([None], pa.string())
                 bloom = None
@@ -1079,7 +1017,7 @@ def _prune_on_driver(stripes: DataFrame, key_value=None,
         if lo is not None and not _bound_ok(r[2], lo, lambda b, v: b >= v):
             continue
         bloom = r[3] if positions else None
-        if bloom is not None and not any(
+        if bloom is not None and len(bloom) == BLOOM_BYTES and not any(
                 all(bloom[p >> 3] >> (p & 7) & 1 for p in pos)
                 for pos in positions):
             continue
@@ -1151,8 +1089,9 @@ def prune_stripes(stripes: DataFrame, key_value=None,
         # substring/hex/conv/bitwiseAND over the 8 KB filter — the whole
         # predicate pushes into the stripe-table scan. Under hash
         # partitioning this is what skips stripes (every stripe's
-        # [key_min, key_max] range spans the key space there). NULL bloom
-        # (legacy stripes, keyless encodes) never skips.
+        # [key_min, key_max] range spans the key space there). A NULL bloom
+        # (keyless encodes) or one not BLOOM_BYTES long (an older hash
+        # family) never skips.
         any_probe = F.lit(False)
         for kv in probes:
             probe = F.lit(True)
@@ -1162,7 +1101,8 @@ def prune_stripes(stripes: DataFrame, key_value=None,
                     16, 10).cast("int")
                 probe = probe & (byte.bitwiseAND(F.lit(1 << (p & 7))) != 0)
             any_probe = any_probe | probe
-        cond = cond & (F.col("key_bloom").isNull() | any_probe)
+        cond = cond & (F.col("key_bloom").isNull()
+                       | (F.length("key_bloom") != BLOOM_BYTES) | any_probe)
     return stripes.filter(cond)
 
 

@@ -3,7 +3,9 @@
 The component the reference lacks (its encoding choice is static per column,
 set by the caller before writing — /root/reference/orc/column/package.go:
 224-235). Here each column chunk picks its codec from vectorized stats plus
-a trial-compression probe on a small sample, per the north rule:
+a trial-compression probe on a small sample, per the north rule (the
+string chooser is arrow_stripe._select_codec_arrow; the thresholds live
+here):
 
 - strings: DICTIONARY when the distinct ratio is low (the classic ~0.5-0.8
   distinct-ratio rule ORC-Java uses and the reference omits), else FSST for
@@ -16,10 +18,6 @@ a trial-compression probe on a small sample, per the north rule:
 
 from __future__ import annotations
 
-import pandas as pd
-
-from goorc_spark.codecs import fsst
-
 DICT_MAX_RATIO = 0.5
 DICT_MAX_ENTRIES = 1 << 16
 FSST_MIN_AVG_LEN = 16.0
@@ -31,24 +29,3 @@ FSST_SAMPLE_BYTES = 1 << 15
 # layer) wants a strong win because zstd alone already compresses well.
 POLICIES = ("fast", "balanced", "compact")
 _FSST_GAIN = {"balanced": 0.45, "compact": 0.9}
-
-
-def select_string_codec(values: pd.Series, stats: dict,
-                        policy: str = "balanced") -> str:
-    """values: non-null str Series; returns 'dict' | 'fsst' | 'raw'."""
-    n = stats.get("count", 0)
-    if n == 0:
-        return "raw"
-    if (
-        stats["distinct_ratio"] <= DICT_MAX_RATIO
-        and stats["distinct"] <= DICT_MAX_ENTRIES
-    ):
-        return "dict"
-    if policy != "fast" and stats["avg_len"] >= FSST_MIN_AVG_LEN:
-        sample = "".join(values.iloc[: max(2, int(FSST_SAMPLE_BYTES // max(stats["avg_len"], 1)))])
-        raw = sample.encode("utf-8")[:FSST_SAMPLE_BYTES]
-        if len(raw) >= 1024:
-            blob = fsst.compress(raw)
-            if len(blob) < _FSST_GAIN.get(policy, 0.45) * len(raw):
-                return "fsst"
-    return "raw"

@@ -10,7 +10,6 @@ because its encoding choice is static per column.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from goorc_spark.codecs.primitives import bits_required_fast
 
@@ -48,28 +47,6 @@ def float_stats(v: np.ndarray) -> dict:
         "min": float(np.nanmin(v)),
         "max": float(np.nanmax(v)),
         "sum": float(np.nansum(v)),
-    }
-
-
-def string_stats(values: pd.Series) -> dict:
-    """values: non-null str Series."""
-    n = len(values)
-    if n == 0:
-        return {"count": 0, "distinct": 0, "distinct_ratio": 0.0, "avg_len": 0.0}
-    lens = values.str.len().to_numpy()
-    distinct = int(values.nunique())
-    mn, mx = values.min(), values.max()
-    return {
-        "count": int(n),
-        "distinct": distinct,
-        "distinct_ratio": distinct / n,
-        "avg_len": float(lens.mean()),
-        "max_len": int(lens.max()),
-        "total_len": int(lens.sum()),
-        "min": str(mn)[:MAX_STAT_STR],
-        "max": str(mx)[:MAX_STAT_STR],
-        "lower_bound_truncated": len(str(mn)) > MAX_STAT_STR,
-        "upper_bound_truncated": len(str(mx)) > MAX_STAT_STR,
     }
 
 

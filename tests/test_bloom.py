@@ -172,20 +172,33 @@ def test_read_where_id_pushdown_from_file_scan(spark, tmp_path):
             or "DataFilters: [isnotnull(stripe_id" in plan), plan[:800]
 
 
-def test_build_bloom_matches_scalar():
-    """The vectorized FNV bloom builder is bit-exact with the scalar
-    probe math (encode writes with the former, queries probe with the
-    latter — a single differing bit would wrongly skip a stripe)."""
-    vals = (["conv-%08d" % i for i in range(2000)]
-            + list(range(-50, 4000, 7)) + ["", "é漢字", "x" * 300])
-    got = engine._build_bloom(vals)
+def _scalar_bloom(values) -> bytes:
+    """The stripe bloom a key set must produce, from the probe math."""
     bits = bytearray(engine.BLOOM_BITS // 8)
-    for v in vals:
+    for v in values:
         for p in engine.bloom_positions(v):
             bits[p >> 3] |= 1 << (p & 7)
-    assert got == bytes(bits)
-    assert engine._build_bloom([None]) == bytes(engine.BLOOM_BITS // 8)
-    assert engine._build_bloom([None, 7]) == engine._build_bloom([7])
+    return bytes(bits) + b"\x01"
+
+
+def test_build_bloom_matches_scalar():
+    """The vectorized murmur3 bloom builder is bit-exact with the scalar
+    probe math (encode writes with the former, queries probe with the
+    latter — a single differing bit would wrongly skip a stripe)."""
+    import pyarrow as pa
+
+    strs = ["conv-%08d" % i for i in range(2000)] + ["", "é漢字", "x" * 300]
+    ints = list(range(-50, 4000, 7))
+    for arr in (pa.array(strs), pa.array(strs, pa.large_string()),
+                pa.chunked_array([strs[:700], strs[700:]]),
+                pa.array(ints), pa.array([s.encode() for s in strs])):
+        got = engine._build_bloom(arr)
+        assert len(got) == engine.BLOOM_BYTES
+        assert got == _scalar_bloom(arr.to_pylist())
+    assert engine._build_bloom(pa.array([None], pa.string())) \
+        == _scalar_bloom([])
+    assert engine._build_bloom(pa.array([None, 7])) \
+        == engine._build_bloom(pa.array([7, 7]))
 
 
 def test_build_bloom_canonical_equal_values():
@@ -212,6 +225,12 @@ def test_build_bloom_canonical_equal_values():
         assert a == b, (a, b)
         assert canonical_key_bytes(a) == canonical_key_bytes(b), (a, b)
         assert engine.bloom_positions(a) == engine.bloom_positions(b), (a, b)
+    # the builder hashes Arrow columns of these kinds to the same bits
+    import pyarrow as pa
+
+    for a, b in pairs[:5]:
+        assert (engine._build_bloom(pa.array([a]))
+                == engine._build_bloom(pa.array([b]))), (a, b)
     # unequal values still (overwhelmingly) hash apart
     assert canonical_key_bytes(Decimal("1.5")) != canonical_key_bytes(
         Decimal("1.51"))
@@ -221,13 +240,10 @@ def test_build_bloom_long_outlier_bounded_memory():
     """ADVICE r4: one long key among many short ones must not allocate an
     n x max_len padded matrix; the scalar-cutoff + bucketed path stays
     bit-exact with the scalar probes."""
+    import pyarrow as pa
+
     vals = ["conv-%06d" % i for i in range(5000)] + ["z" * 200_000, ""]
-    got = engine._build_bloom(vals)
-    bits = bytearray(engine.BLOOM_BITS // 8)
-    for v in vals:
-        for p in engine.bloom_positions(v):
-            bits[p >> 3] |= 1 << (p & 7)
-    assert got == bytes(bits)
+    assert engine._build_bloom(pa.array(vals)) == _scalar_bloom(vals)
 
 
 def test_rg_bloom_key_hash_canonical_decimal():
@@ -237,10 +253,10 @@ def test_rg_bloom_key_hash_canonical_decimal():
 
     from goorc_spark import arrow_stripe
 
-    assert (arrow_stripe._rg_bloom_key_hash(Decimal("2.50"))
-            == arrow_stripe._rg_bloom_key_hash(Decimal("2.5")))
-    assert (arrow_stripe._rg_bloom_key_hash(Decimal("3"))
-            == arrow_stripe._rg_bloom_key_hash(3))
+    assert (arrow_stripe._key_hash(Decimal("2.50"))
+            == arrow_stripe._key_hash(Decimal("2.5")))
+    assert (arrow_stripe._key_hash(Decimal("3"))
+            == arrow_stripe._key_hash(3))
 
 
 # ------------------------------------------- driver-side stripe prune --
@@ -393,6 +409,55 @@ def test_read_rows_metrics_and_spark_fallback(parquet_tables, monkeypatch):
     assert "lineage_cache_hits" not in m2
     assert "lineage_cache_misses" not in m2
     assert m2.get("stripes_kept", 1) <= 1
+
+
+def test_legacy_fnv_blooms_never_skip(spark, parquet_tables, tmp_path,
+                                      monkeypatch):
+    """Stripe tables written before the stripe bloom moved to murmur3 hold
+    8192-byte FNV-1a blooms: they must skip no stripe on the driver path,
+    the Spark path or with id_pushdown=False, and read the unpruned rows.
+    All-zero blooms would skip every stripe if they were honored."""
+    import pyspark.sql.functions as F
+
+    pdf, tables = parquet_tables
+    path = str(tmp_path / "legacy")
+    tables["hash"].withColumn(
+        "key_bloom", F.lit(bytes(engine.BLOOM_BITS // 8))).write.parquet(path)
+    legacy = spark.read.parquet(path)
+    no_bloom = legacy.drop("key_bloom")
+    keys = sorted(pdf["conv_id"].unique())
+    batch = [keys[3], keys[40], ABSENT_IN_RANGE]
+    for kw in ({"key_value": keys[7]}, {"key_value": ABSENT_IN_RANGE},
+               {"key_values": batch}):
+        want = _spark_survivors(no_bloom, **kw)
+        assert want
+        assert _driver_survivors(legacy, **kw) == want, kw
+        assert _spark_survivors(legacy, **kw) == want, kw
+
+    cols = ["conv_id", "turn_idx", "text"]
+    full = engine.decode_df(legacy, transcripts.TRANSCRIPTS_SPEC)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    want_one = rows(full.filter(F.col("conv_id") == keys[7]))
+    want_batch = rows(full.filter(F.col("conv_id").isin(batch)))
+    assert want_one and want_batch
+    for where in ("driver", "spark", "off"):
+        if where == "spark":
+            monkeypatch.setattr(engine, "MAX_PUSHDOWN_IDS", 1)
+        kw = {"id_pushdown": False} if where == "off" else {}
+        m: dict = {}
+        assert rows(engine.read_rows(
+            legacy, transcripts.TRANSCRIPTS_SPEC, "conv_id", keys[7],
+            columns=cols, metrics=m, **kw)) == want_one, where
+        assert rows(engine.read_rows_in(
+            legacy, transcripts.TRANSCRIPTS_SPEC, "conv_id", batch,
+            columns=cols, **kw)) == want_batch, where
+        assert m["pruned_on"] == ("spark" if where == "off" else where)
+        if where == "driver":
+            assert m["stripes_kept"] == len(
+                _spark_survivors(no_bloom, key_value=keys[7]))
 
 
 # ------------------------------------------------- driver lineage cache --

@@ -1,11 +1,11 @@
-"""FSST, dictionary, varint, string-contents and chunk-container tests."""
+"""FSST and chunk-container tests."""
 
 import zlib
 
 import numpy as np
 import pytest
 
-from goorc_spark.codecs import chunk, dictionary, fsst, strings
+from goorc_spark.codecs import chunk, fsst
 
 
 # --- FSST --------------------------------------------------------------------
@@ -48,27 +48,29 @@ def test_fsst_shared_table():
     assert fsst.decompress(a) == b"the quick brown fox"
 
 
-# --- dictionary --------------------------------------------------------------
-
-def test_dictionary_sorted_and_roundtrip():
-    vals = ["user", "assistant", "user", "system", "tool", "assistant"] * 10
-    idx, entries = dictionary.build(vals)
-    assert entries == sorted(set(vals))  # DICTIONARY_V2: lexicographic dict
-    assert dictionary.apply(idx, entries) == vals
-
-
-def test_dictionary_unicode_and_empty():
-    vals = ["", "z", "你好", "", "émoji🙂", "z"]
-    idx, entries = dictionary.build(vals)
-    assert dictionary.apply(idx, entries) == vals
+def _greedy_reference(pos, codes, L):
+    """Plain-loop leftmost-first greedy: keep a match unless it overlaps
+    the last kept one."""
+    keep, end = [], -1
+    for i, p in enumerate(pos.tolist()):
+        if p >= end:
+            keep.append(i)
+            end = p + L
+    return pos[keep], codes[keep]
 
 
-# --- string contents ----------------------------------------------------------
-
-def test_concat_split_utf8():
-    vals = ["", "hello", "你好", "x" * 2000, "🙂"]
-    contents, lengths = strings.concat_utf8(vals)
-    assert strings.split_utf8(contents, lengths) == vals
+def test_fsst_drop_overlaps_is_leftmost_greedy():
+    rng = np.random.default_rng(17)
+    for _ in range(3000):
+        L = int(rng.integers(2, 9))
+        span = int(rng.integers(1, 300))
+        pos = np.unique(rng.integers(0, span, int(rng.integers(0, 80))))
+        pos = pos.astype(np.int32)
+        codes = rng.integers(0, 200, len(pos)).astype(np.int16)
+        got = fsst._drop_overlaps(pos, codes, L)
+        want = _greedy_reference(pos, codes, L)
+        assert np.array_equal(got[0], want[0]), (pos, L)
+        assert np.array_equal(got[1], want[1]), (pos, L)
 
 
 # --- chunk container -----------------------------------------------------------

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import contextlib
 import random
+import time
 
 import numpy as np
 import pytest
@@ -106,6 +107,23 @@ def _rlev2_cases():
         vals = [rng.randrange(0, 2**w) for _ in range(n)]
         cases.append((vals, False))
         cases.append(([v - 2**(w - 1) for v in vals], True))
+    # conversation-boundary sorted keys: short var-delta runs between jumps
+    np_rng = np.random.default_rng(5)
+    parts = []
+    for _ in range(60):
+        start = int(np_rng.integers(1_300_000_000, 1_750_000_000))
+        steps = np_rng.integers(1, 240, int(np_rng.integers(1, 70)))
+        parts.append(start + np.concatenate(([0], np.cumsum(steps))))
+    cases.append((np.concatenate(parts).tolist(), True))
+    # segments of <= 12 values, negatives and int64 extremes included
+    for vals in ([3, 1], [5, -5, 7], [0, 0, 0, 9, -(2 ** 62)],
+                 [2 ** 62, 1, 2, 3], [-1], list(range(12, 0, -1))):
+        cases.append((vals, True))
+    # a 10-value patched-base block
+    cases.append(([7, 9, 8, 6, 7, 9, 1 << 40, 8, 6, 7], True))
+    # unsigned values above 2^62
+    huge = np_rng.integers(0, 1 << 63, 300, dtype=np.uint64) * 2 + (1 << 62)
+    cases.append((huge.tolist(), False))
     # repeat mixtures (short-repeat / fixed-delta shapes)
     for _ in range(10):
         vals = []
@@ -128,6 +146,21 @@ def test_rlev2_native_matches_numpy_bytes_and_info():
             dec = rlev2.decode(a, len(vals), signed)
             ref = np.asarray(vals, dtype=np.int64 if signed else np.uint64)
             assert (dec == ref).all(), f"rlev2 case {i}: decode"
+
+
+def test_fsst_numpy_path_linear_on_periodic_text():
+    """Periodic text makes one chain of overlapping matches across the
+    whole stream; the numpy path must resolve it in linear time (it once
+    took ~12 s at 78 KB) and still emit the native bytes."""
+    data = b"the quick brown fox jumps over the lazy dog; " * 5400
+    ct = fsst.compile_table(fsst.train(data))
+    want = fsst.compress(data, ct)
+    with numpy_only():
+        t0 = time.perf_counter()
+        got = fsst.compress(data, ct)
+        took = time.perf_counter() - t0
+    assert got == want
+    assert took < 5.0, took
 
 
 def test_numpy_fallback_still_works():

@@ -4,10 +4,9 @@ round keeps its externally observable behavior bit-identical.
 - FSST: compiled-table compress == list-table compress, byte-for-byte, and
   the two-stage candidate LUT never changes matching decisions (roundtrip
   + cross-check on adversarial inputs).
-- RLEv2: the scalar small-segment twins (_write_direct/_try_patched_base/
-  _write_var_delta) and the bisect fixed-delta check produce the same bytes
-  as the vector paths — exercised at the exact shapes that route through
-  them (sorted-key conversation boundaries, tiny tails, patched outliers).
+- RLEv2: sorted-key conversation boundaries, tiny tails and small
+  patched-outlier segments round-trip, and the goorc vectors stay exact
+  (tests/test_native.py pins the same shapes numpy-vs-native byte-equal).
 - similarity: the driver-side fold/rounding twins (_py_dot/_round6) are
   bit-identical to the in-plan SQL fold and Spark's round(double, 6).
 - orc_native.read_orc_files: the size-packed multi-file task plan decodes
@@ -75,9 +74,8 @@ def _roundtrip(arr, signed):
 
 
 def test_rlev2_scalar_twin_shapes():
-    """Shapes routed through the round-6 scalar fast paths: sorted-key
-    conversation boundaries (short var-delta runs + 2-4-value wiggles),
-    tiny direct tails, small patched-base segments."""
+    """Sorted-key conversation boundaries (short var-delta runs + 2-4-value
+    wiggles), tiny direct tails, small patched-base segments."""
     rng = np.random.default_rng(5)
     parts = []
     for _ in range(60):
@@ -88,25 +86,24 @@ def test_rlev2_scalar_twin_shapes():
     conv_shaped = np.concatenate(parts).astype(np.int64)
     _roundtrip(conv_shaped, True)
 
-    # tiny segments exercising the <=12-value scalar twins incl. negatives
+    # tiny segments incl. negatives
     for vals in ([3, 1], [5, -5, 7], [0, 0, 0, 9, -(2 ** 62)],
                  [2 ** 62, 1, 2, 3], [-1], list(range(12, 0, -1))):
         _roundtrip(np.array(vals, dtype=np.int64), True)
 
-    # patched-base shape small enough for the scalar twin
+    # a small patched-base segment
     small_patch = np.array([7, 9, 8, 6, 7, 9, 1 << 40, 8, 6, 7],
                            dtype=np.int64)
     enc = _roundtrip(small_patch, True)
     assert enc[0] >> 6 == 2  # PATCHED_BASE chosen
 
-    # unsigned with huge values (scalar twins must not mis-handle uint64)
+    # unsigned with huge values
     huge = rng.integers(0, 1 << 63, 300, dtype=np.uint64) * 2 + (1 << 62)
     _roundtrip(huge, False)
 
 
 def test_rlev2_reference_vectors_still_exact():
-    """The ported goorc byte vectors must survive the scalar twins (they
-    are small enough to route through them)."""
+    """The ported goorc byte vectors stay exact."""
     from goorc_spark.codecs import rlev2
 
     # short repeat: 10000 x5 -> 0a 27 10 (reference TestIntRunLengthV2)

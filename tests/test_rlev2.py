@@ -9,7 +9,7 @@ fixtures").
 import numpy as np
 import pytest
 
-from goorc_spark.codecs import rlev2
+from goorc_spark.codecs import _native, rlev2
 from goorc_spark.codecs.primitives import (
     unzigzag,
     zigzag,
@@ -73,6 +73,16 @@ def test_short_repeat_decode_given_bytes():
     # encoding_test.go:516-521
     dec = rlev2.decode(bytes([0x0A, 0x27, 0x10]), 5, signed=False)
     np.testing.assert_array_equal(dec, np.full(5, 10000, dtype=np.uint64))
+
+
+def test_golden_vectors_on_the_numpy_path(monkeypatch):
+    """The byte vectors above through the numpy reference codec: whenever
+    the C kernels load, the tests above only ever run native."""
+    monkeypatch.setattr(_native, "lib", lambda: None)
+    for check in (test_delta_primes_bytes, test_direct_deadbeef_bytes,
+                  test_patched_base_bytes, test_patched_base_negative_roundtrip,
+                  test_short_repeat_decode_given_bytes):
+        check()
 
 
 def test_short_repeat_signed_roundtrip():

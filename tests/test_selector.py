@@ -2,9 +2,10 @@
 reference lacks (static per-column encoding; SURVEY.md §4)."""
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
-from goorc_spark import selector, stats as stx
+from goorc_spark import arrow_stripe
 from goorc_spark.codecs import rlev2
 
 
@@ -43,25 +44,29 @@ def test_sel_random_wide_picks_direct():
     assert set(hist) == {"direct"}
 
 
+def _string_codec(values, policy="balanced"):
+    """The codec the stripe writer's selector picks for a string column."""
+    vals = pa.array(values, pa.string())
+    contents, lengths = arrow_stripe._varwidth_parts(vals)
+    st = arrow_stripe._string_stats_arrow(vals, lengths,
+                                          pc.dictionary_encode(vals))
+    return arrow_stripe._select_codec_arrow(contents, st, policy)
+
+
 def test_sel_low_card_string_picks_dict():
-    vals = pd.Series([f"tool-{i % 17}" for i in range(10_000)], dtype=object)
-    st = stx.string_stats(vals)
-    assert selector.select_string_codec(vals, st) == "dict"
+    vals = [f"tool-{i % 17}" for i in range(10_000)]
+    assert _string_codec(vals) == "dict"
 
 
 def test_sel_long_text_picks_fsst():
     base = ("select sum(value) from events where event_type = 'purchase' "
             "group by user_id order by 1 desc; ")
-    vals = pd.Series([base * 8 + f"q{i}" for i in range(600)], dtype=object)
-    st = stx.string_stats(vals)
-    assert selector.select_string_codec(vals, st) == "fsst"
+    vals = [base * 8 + f"q{i}" for i in range(600)]
+    assert _string_codec(vals) == "fsst"
 
 
 def test_sel_unique_short_strings_pick_raw():
     rng = np.random.default_rng(3)
-    vals = pd.Series(
-        ["".join(chr(int(c)) for c in rng.integers(33, 127, 10)) for _ in range(2000)],
-        dtype=object,
-    )
-    st = stx.string_stats(vals)
-    assert selector.select_string_codec(vals, st) == "raw"
+    vals = ["".join(chr(int(c)) for c in rng.integers(33, 127, 10))
+            for _ in range(2000)]
+    assert _string_codec(vals) == "raw"

@@ -85,6 +85,12 @@ def test_string_dictionary_roundtrip():  # gap in reference: no dict test
     assert meta["columns"][0]["codec"] == "dict"
     assert meta["columns"][0]["dict_size"] == 4
     assert list(dec["role"]) == vals
+    # empty and multi-byte entries
+    vals = ["", "z", "你好", "", "émoji🙂", "z"] * 100
+    dec, meta, _ = rt(pd.DataFrame({"s": vals}),
+                      [{"name": "s", "kind": "string"}])
+    assert meta["columns"][0]["codec"] == "dict"
+    assert list(dec["s"]) == vals
 
 
 def test_string_fsst_long_text():
