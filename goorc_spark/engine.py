@@ -25,6 +25,7 @@ encoded partitions.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import re
 import threading
@@ -450,6 +451,52 @@ def encode_df(df: DataFrame, cfg: EncodeConfig | None = None,
 # ----------------------------------------------------------------- decode --
 
 
+def _coerce_to_spec(batch, spec: list[dict], tz: str | None):
+    """The schema-drift rule: the DECLARED spec wins over a stripe's
+    embedded meta. Stripes written from a differently-typed source (pandas
+    Int32 inferred as LongType, schema evolution across runs) decode to
+    their stored width, but Spark wants the declared type (in mapInArrow,
+    ArrowColumnVector's row accessors throw on a long vector under an int
+    column). Cast any mismatched column to the spec type — a narrowing
+    overflow is a real type error and should raise. Nested kinds keep
+    their decoded layout."""
+    import pyarrow as pa
+
+    from goorc_spark import arrow_stripe
+
+    want = {c["name"]: arrow_stripe.spec_arrow_type(c, tz) for c in spec}
+    arrays, changed = [], False
+    for f, arr in zip(batch.schema, batch.columns):
+        w = want.get(f.name)
+        if w is not None and arr.type != w:
+            arr = arr.cast(w)
+            changed = True
+        arrays.append(arr)
+    if not changed:
+        return batch
+    return pa.RecordBatch.from_arrays(
+        arrays, schema=pa.schema(
+            [pa.field(f.name, a.type, f.nullable)
+             for f, a in zip(batch.schema, arrays)]))
+
+
+def _decode_stripe(blob, meta: dict, spec: list[dict], tz: str | None,
+                   include: list[str] | None, rg_predicate: dict | None):
+    """One stripe's rows as a RecordBatch of the declared spec (CRC32
+    verified), restricted to the row groups `rg_predicate` can match; None
+    when it matches none. The body of decode_df's executor task and of the
+    driver-side point read alike."""
+    from goorc_spark import arrow_stripe
+
+    rg_sel = None
+    if rg_predicate:
+        rg_sel = arrow_stripe.select_row_groups(meta, **rg_predicate)
+        if rg_sel is not None and not rg_sel:
+            return None
+    return _coerce_to_spec(arrow_stripe.decode_stripe_batch(
+        blob, meta, tz=tz, include=include, rg_sel=rg_sel), spec, tz)
+
+
 def decode_df(stripes: DataFrame, spec: list[dict] | None = None,
               columns: list[str] | None = None,
               rg_predicate: dict | None = None) -> DataFrame:
@@ -481,48 +528,14 @@ def decode_df(stripes: DataFrame, spec: list[dict] | None = None,
     tz = stripes.sparkSession.conf.get("spark.sql.session.timeZone")
 
     def decode_stripes(batches):
-        import pyarrow as pa
-
-        from goorc_spark import arrow_stripe
-
-        # the DECLARED spec wins over each stripe's embedded meta: stripes
-        # written from a differently-typed source (pandas Int32 inferred as
-        # LongType, schema evolution across runs) decode to their stored
-        # width, but Spark's ArrowColumnVector row accessors require the
-        # mapInArrow schema's exact type (a long vector under an int column
-        # throws on getInt). Cast any mismatched column to the spec type —
-        # a narrowing overflow is a real type error and should raise.
-        want = {c["name"]: arrow_stripe.spec_arrow_type(c, tz) for c in spec}
-
-        def coerce(batch):
-            arrays, changed = [], False
-            for f, arr in zip(batch.schema, batch.columns):
-                w = want.get(f.name)
-                if w is not None and arr.type != w:
-                    arr = arr.cast(w)
-                    changed = True
-                arrays.append(arr)
-            if not changed:
-                return batch
-            return pa.RecordBatch.from_arrays(
-                arrays, schema=pa.schema(
-                    [pa.field(f.name, a.type, f.nullable)
-                     for f, a in zip(batch.schema, arrays)]))
-
         for rb in batches:
             metas = rb.column("meta").to_pylist()
             blobs = rb.column("blob")
             for i, meta_json in enumerate(metas):
-                meta = json.loads(meta_json)
-                rg_sel = None
-                if rg_predicate:
-                    rg_sel = arrow_stripe.select_row_groups(meta, **rg_predicate)
-                    if not rg_sel and rg_sel is not None:
-                        continue
-                out = arrow_stripe.decode_stripe_batch(
-                    blobs[i].as_py(), meta, tz=tz, include=include,
-                    rg_sel=rg_sel)
-                yield coerce(out)
+                out = _decode_stripe(blobs[i].as_py(), json.loads(meta_json),
+                                     spec, tz, include, rg_predicate)
+                if out is not None:
+                    yield out
 
     return stripes.select("meta", "blob").mapInArrow(decode_stripes,
                                                      schema=out_schema)
@@ -597,14 +610,15 @@ def _snapshot(df: DataFrame):
 
 
 def _collect_cached(stripes: DataFrame, cols: list[str],
-                    limit: int) -> tuple[list, bool]:
-    """(stripes.select(*cols).limit(limit).collect(), whether the rows came
-    from the driver cache). A hit is confirmed with Catalyst's sameResult
+                    limit: int) -> tuple[list, bool | None]:
+    """(stripes.selectExpr(*cols).limit(limit).collect(), whether the rows
+    came from the driver cache — None when the frame has no snapshot to
+    cache them under). A hit is confirmed with Catalyst's sameResult
     against the stored plan; a failed check is a miss and replaces the
     entry."""
     snap = _snapshot(stripes)
     if snap is None:
-        return stripes.select(*cols).limit(limit).collect(), False
+        return stripes.selectExpr(*cols).limit(limit).collect(), None
     key, plan = snap
     key += (tuple(cols), limit)
     with _lineage_lock:
@@ -613,7 +627,7 @@ def _collect_cached(stripes: DataFrame, cols: list[str],
             _lineage_cache.move_to_end(key)
     if entry is not None and plan.sameResult(entry[0]):
         return entry[1], True
-    rows = stripes.select(*cols).limit(limit).collect()
+    rows = stripes.selectExpr(*cols).limit(limit).collect()
     with _lineage_lock:
         _lineage_cache[key] = (plan, rows)
         _lineage_cache.move_to_end(key)
@@ -633,24 +647,27 @@ def read_rows(stripes: DataFrame, spec: list[dict], key_col: str,
     over the stripe table. Three pruning levels, each cutting work before
     the next: (1) stripe-level lineage range + bloom prune; (2) row-group
     index prune — only covering groups' streams are decompressed; (3) an
-    exact Catalyst filter over the decoded rows.
+    exact Catalyst filter over the decoded rows. A NULL `key_value` matches
+    no row (SQL equality): the empty frame comes back without reading a
+    stripe.
 
     `id_pushdown` (default: auto — on only when `stripes` is a bare file
     scan): the range/bloom predicates are expressions parquet cannot push,
     so a single-pass plan still READS the blob column of pruned stripes
     before filtering them. Instead, a first pass collects the lineage
-    columns of every stripe (stripe_id, key_min, key_max, key_bloom —
-    column pruning drops the blobs: 8 KB of bloom vs 256 MB of blob per
-    stripe at prod shape) with no filter, so its plan is the same for
-    every key; prune_stripes' range + bloom predicate then runs in Python
-    on the driver, and the second scan filters `stripe_id IN (survivors)`
-    — a predicate parquet pushes into row-group stats and dictionary
-    filters. Only worth it when re-scanning is cheap, i.e. the stripes ARE
-    a storage scan — for derived/in-flight stripe frames the two passes
-    would recompute the upstream job, so auto stays off. A table of more
-    than MAX_PUSHDOWN_IDS stripes prunes in Spark instead (prune_stripes,
-    then the same id pass over its survivors), and beyond MAX_PUSHDOWN_IDS
-    survivors in the single-pass plan.
+    columns of every stripe (stripe_id, key_min, key_max, key_bloom,
+    enc_bytes and the part file holding it — column pruning drops the
+    blobs: 8 KB of bloom vs 256 MB of blob per stripe at prod shape) with
+    no filter, so its plan is the same for every key; prune_stripes' range
+    + bloom predicate then runs in Python on the driver, and the survivors
+    are decoded — on the driver (below) or by a second scan filtering
+    `stripe_id IN (survivors)`, a predicate parquet pushes into row-group
+    stats and dictionary filters. Only worth it when re-scanning is cheap,
+    i.e. the stripes ARE a storage scan — for derived/in-flight stripe
+    frames the two passes would recompute the upstream job, so auto stays
+    off. A table of more than MAX_PUSHDOWN_IDS stripes prunes in Spark
+    instead (prune_stripes, then the same id pass over its survivors), and
+    beyond MAX_PUSHDOWN_IDS survivors in the single-pass plan.
 
     The lineage rows of the first pass are cached on the driver, the way an
     ORC reader parses a file's tail once: the cache key is the table
@@ -659,30 +676,48 @@ def read_rows(stripes: DataFrame, spec: list[dict], key_col: str,
     are immutable and get fresh names on overwrite or append) — and a hit
     is confirmed with Catalyst's sameResult against the stored plan. So
     the first read of a snapshot runs the lineage job and every later read
-    of it runs only the decode query. Only bare file scans with input files
+    of it runs at most the decode. Only bare file scans with input files
     are cached (not frames Spark serves from its in-memory cache), in a
     bounded LRU of LINEAGE_CACHE_ENTRIES snapshots.
 
+    Small survivors decode on the driver, with no Spark job: when the frame
+    is such a cached bare scan, its stripe_id/meta/blob columns are the
+    stored ones, the survivors' lineage `enc_bytes` and the blob bytes of
+    the parquet row groups holding them are each at most
+    DRIVER_DECODE_BYTES, and every survivor's part file opens through
+    `pyarrow.fs.FileSystem.from_uri`, this process reads those row groups
+    with pyarrow, runs the same row-group select, CRC32-checked decode and
+    declared-spec cast as decode_df's tasks, and returns a single-partition
+    local frame under the same exact Catalyst filter. The part files are
+    read when read_rows is CALLED, not when the frame is evaluated; that
+    is safe because part files are immutable and the snapshot key names
+    them, so the rows are the ones the Spark decode would read. Any other
+    case runs the Spark decode unchanged.
+
     Pass a dict as `metrics` (read_orc_eq's shape: counts accumulate over
     calls) to get `stripes_total` and `stripes_kept` of the id pass,
-    `lineage_cache_hits` / `lineage_cache_misses` of the driver-side pass
-    and `pruned_on` ("driver" or "spark"); a count the plan never computed
-    — the Spark side's total, its cache use, the single-pass plan's
-    survivors — is absent."""
-    pruned = _pushdown_stripes(stripes, id_pushdown, metrics,
-                               key_value=key_value)
+    `lineage_cache_hits` / `lineage_cache_misses` of the driver-side pass,
+    `pruned_on` ("driver" or "spark") and `served_on` ("driver" or "spark":
+    where the rows were decoded). A Spark-served read names its `fallback`
+    — "not_bare_scan", "id_pushdown_off", "too_many_stripes" (more than
+    MAX_PUSHDOWN_IDS), "over_byte_bound" or "unreadable" (a part file
+    pyarrow cannot open); a driver-decoded one names its `kernel` ("native"
+    or "numpy", goorc_spark.codecs._native.status()). Labels describe the
+    last call; a count the plan never computed — the Spark side's total,
+    its cache use, the single-pass plan's survivors — is absent."""
     pred: dict = {"key_value": key_value}
     if ord_lo is not None:
         pred["ord_lo"] = ord_lo
     if ord_hi is not None:
         pred["ord_hi"] = ord_hi
-    out = decode_df(pruned, spec, columns=columns, rg_predicate=pred)
     cond = F.col(key_col) == F.lit(key_value)
     if ord_col is not None and ord_lo is not None:
         cond = cond & (F.col(ord_col) >= F.lit(ord_lo))
     if ord_col is not None and ord_hi is not None:
         cond = cond & (F.col(ord_col) <= F.lit(ord_hi))
-    return out.filter(cond)
+    keys = [] if key_value is None else [key_value]
+    return _point_read(stripes, spec, key_col, keys, cond, pred, columns,
+                       id_pushdown, metrics, key_value=key_value)
 
 
 def read_rows_in(stripes: DataFrame, spec: list[dict], key_col: str,
@@ -696,23 +731,25 @@ def read_rows_in(stripes: DataFrame, spec: list[dict], key_col: str,
     (up to MAX_BLOOM_KEYS keys; beyond that the [min, max] envelope alone
     — still prunes sorted/range-partitioned layouts); (2) row-group index
     prune where ANY key fits the group's range (+ rg_bloom when
-    recorded); (3) one exact Catalyst isin filter. `id_pushdown` and
-    `metrics` as in read_rows."""
-    keys = sorted(set(key_values))
-    if not keys:
+    recorded); (3) one exact Catalyst isin filter. NULL keys are dropped
+    (SQL IN never matches NULL); an all-NULL list reads no stripe.
+    `id_pushdown`, `metrics` and the driver-side decode of small
+    survivors (files read at call time) as in read_rows."""
+    key_values = list(key_values)
+    if not key_values:
         raise ValueError("key_values must be non-empty")
-    pruned = _pushdown_stripes(stripes, id_pushdown, metrics,
-                               key_values=keys)
-    out = decode_df(pruned, spec, columns=columns,
-                    rg_predicate={"key_values": keys})
-    return out.filter(F.col(key_col).isin(keys))
+    keys = sorted({k for k in key_values if k is not None})
+    return _point_read(stripes, spec, key_col, keys,
+                       F.col(key_col).isin(keys), {"key_values": keys},
+                       columns, id_pushdown, metrics, key_values=keys)
 
 
 def read_where(stripes: DataFrame, spec: list[dict], col: str | None = None,
                lo=None, hi=None,
                columns: list[str] | None = None,
                id_pushdown: bool | None = None,
-               col_ranges: dict | None = None) -> DataFrame:
+               col_ranges: dict | None = None,
+               metrics: dict | None = None) -> DataFrame:
     """Value-predicate seek on ANY orderable column(s) (the reference's
     row-index statistics pruning, RowIndexEntry stats in
     pb/orc_proto.proto:92-99): row groups whose recorded [min, max] cannot
@@ -728,7 +765,11 @@ def read_where(stripes: DataFrame, spec: list[dict], col: str | None = None,
     row-group ranges there, and the second pass decodes `stripe_id IN
     (survivors)` — the IN predicate is parquet-pushable, so fully
     non-covering stripes' blobs are never read. At 10^12 rows pair this
-    with range_partition on the hottest column."""
+    with range_partition on the hottest column.
+
+    `metrics` as in read_rows: that id pass (a Spark job) records
+    `pruned_on` "spark" and, when it kept at most MAX_PUSHDOWN_IDS
+    stripes, `stripes_kept`; without the id pass nothing is recorded."""
     ranges: dict = dict(col_ranges or {})
     if col is not None:
         ranges[col] = (lo, hi)
@@ -759,7 +800,9 @@ def read_where(stripes: DataFrame, spec: list[dict], col: str | None = None,
         ids_df = stripes.select("stripe_id", "meta").mapInArrow(
             probe, "stripe_id string")
         ids = [r[0] for r in ids_df.limit(MAX_PUSHDOWN_IDS + 1).collect()]
-        if len(ids) <= MAX_PUSHDOWN_IDS:
+        kept = len(ids) if len(ids) <= MAX_PUSHDOWN_IDS else None
+        _count_prune(metrics, "spark", None, kept)
+        if kept is not None:
             stripes = stripes.filter(F.col("stripe_id").isin(ids))
     out = decode_df(stripes, spec, columns=columns,
                     rg_predicate={"col_ranges": ranges})
@@ -991,18 +1034,24 @@ def _bound_ok(bound, kv, keep_if) -> bool:
 
 
 def _prune_on_driver(stripes: DataFrame, key_value=None,
-                     key_values=None) -> tuple[list, int, bool] | None:
+                     key_values=None) -> tuple[list, int, bool | None] | None:
     """prune_stripes' predicate evaluated in Python over one unfiltered
-    collect of the lineage columns -> (surviving stripe_ids, stripes seen,
-    whether the lineage came from the driver cache), or None when the table
-    has more than MAX_PUSHDOWN_IDS stripes. The bloom probe as Column
-    expressions differs per key, so every read would plan and codegen a new
-    expression tree; this pass's plan is the same for every key and carries
-    no filter at all, and its rows are cached per table snapshot
-    (_collect_cached)."""
+    collect of the lineage columns -> (surviving lineage rows, stripes
+    seen, whether the lineage came from the driver cache — None for a frame
+    with no snapshot), or None when the table has more than
+    MAX_PUSHDOWN_IDS stripes. A row carries the stripe's `stripe_id`,
+    `enc_bytes` (NULL when the frame has no such column) and the `file`
+    that stores it. The bloom probe as Column expressions differs per key,
+    so every read would plan and codegen a new expression tree; this
+    pass's plan is the same for every key and carries no filter at all,
+    and its rows are cached per table snapshot (_collect_cached)."""
     lo, hi, probes = _prune_bounds(key_value, None, None, key_values)
-    cols = ["stripe_id", "key_min", "key_max"]
-    if "key_bloom" in stripes.columns:
+    present = stripes.columns
+    cols = ["stripe_id", "key_min", "key_max",
+            "enc_bytes" if "enc_bytes" in present
+            else "CAST(NULL AS BIGINT) AS enc_bytes",
+            "input_file_name() AS file"]
+    if "key_bloom" in present:
         cols.append("key_bloom")
     else:
         probes = []
@@ -1010,33 +1059,222 @@ def _prune_on_driver(stripes: DataFrame, key_value=None,
     if len(rows) > MAX_PUSHDOWN_IDS:
         return None
     positions = [bloom_positions(kv) for kv in probes]
-    ids = []
+    keep = []
     for r in rows:
-        if hi is not None and not _bound_ok(r[1], hi, lambda b, v: b <= v):
+        if hi is not None and not _bound_ok(r.key_min, hi,
+                                            lambda b, v: b <= v):
             continue
-        if lo is not None and not _bound_ok(r[2], lo, lambda b, v: b >= v):
+        if lo is not None and not _bound_ok(r.key_max, lo,
+                                            lambda b, v: b >= v):
             continue
-        bloom = r[3] if positions else None
+        bloom = r.key_bloom if positions else None
         if bloom is not None and len(bloom) == BLOOM_BYTES and not any(
                 all(bloom[p >> 3] >> (p & 7) & 1 for p in pos)
                 for pos in positions):
             continue
-        ids.append(r[0])
-    return ids, len(rows), hit
+        keep.append(r)
+    return keep, len(rows), hit
 
 
-def _pushdown_stripes(stripes: DataFrame, id_pushdown: bool | None,
-                      metrics: dict | None, **keys) -> DataFrame:
-    """Stripe prune shared by read_rows and read_rows_in (see read_rows'
-    `id_pushdown`); `keys` are prune_stripes' key_value / key_values."""
+def _point_read(stripes: DataFrame, spec: list[dict], key_col: str,
+                keys: list, cond, rg_predicate: dict,
+                columns: list[str] | None, id_pushdown: bool | None,
+                metrics: dict | None, **prune) -> DataFrame:
+    """read_rows / read_rows_in once their non-NULL `keys` are known:
+    prune stripes (`prune` are prune_stripes' key_value / key_values),
+    decode the survivors on the driver or in Spark, and apply the exact
+    filter `cond`."""
+    if spec is None:
+        spec = spec_from_stripes(stripes)
+    if columns is not None:
+        spec = [c for c in spec if c["name"] in columns]
+    if not keys:  # NULL never equals anything: no stripe can match
+        _count_prune(metrics, "driver", None, 0)
+        _count_served(metrics, "driver")
+        return _local_frame(stripes.sparkSession, [], spec).filter(cond)
+    fallback = "id_pushdown_off" if id_pushdown is False else "not_bare_scan"
     if id_pushdown is None:
         id_pushdown = _is_bare_scan(stripes)
+    pruned = None
     if id_pushdown:
-        got = _prune_on_driver(stripes, **keys)
-        if got is not None:
-            ids, total, hit = got
-            _count_prune(metrics, "driver", total, len(ids), hit)
-            return stripes.filter(F.col("stripe_id").isin(ids))
+        got = _prune_on_driver(stripes, **prune)
+        if got is None:
+            fallback = "too_many_stripes"
+        else:
+            rows, total, hit = got
+            _count_prune(metrics, "driver", total, len(rows), bool(hit))
+            if hit is not None:
+                local, fallback = _decode_on_driver(
+                    stripes, rows, spec, columns, key_col, keys, rg_predicate)
+                if local is not None:
+                    _count_served(metrics, "driver", decoded=True)
+                    return local.filter(cond)
+            pruned = stripes.filter(
+                F.col("stripe_id").isin([r.stripe_id for r in rows]))
+    if pruned is None:
+        pruned = _prune_in_spark(stripes, id_pushdown, metrics, **prune)
+    _count_served(metrics, "spark", fallback)
+    return decode_df(pruned, spec, columns=columns,
+                     rg_predicate=rg_predicate).filter(cond)
+
+
+# Survivors of a point read decode on the driver (read_rows) when their
+# lineage enc_bytes, and the blob bytes of the parquet row groups holding
+# them, are each at most this: small enough that reading and decoding in
+# the driver process beats planning a Spark job (reading and decoding a
+# 1.3 MB stripe took ~10 ms against ~200 ms for the Spark decode query
+# on a 4-CPU box), and that the driver's memory stays bounded.
+DRIVER_DECODE_BYTES = 16 << 20
+
+
+def _decode_on_driver(stripes: DataFrame, rows: list, spec: list[dict],
+                      columns: list[str] | None, key_col: str, keys: list,
+                      rg_predicate: dict):
+    """The surviving stripes `rows` (_prune_on_driver) read from their
+    part files and decoded in this process -> (single-partition local
+    frame, None), or (None, the reason the Spark decode must run
+    instead)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    if sum(r.enc_bytes or 0 for r in rows) > DRIVER_DECODE_BYTES:
+        return None, "over_byte_bound"
+    if not _reads_stored(stripes, ("stripe_id", "meta", "blob")):
+        return None, "not_bare_scan"
+    files: dict = {}
+    for r in rows:
+        files.setdefault(r.file, set()).add(r.stripe_id)
+    spark = stripes.sparkSession
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    include = [c["name"] for c in spec] if columns is not None else None
+    key_set = _key_set(spec, key_col, keys, tz)
+    batches = []
+    with contextlib.ExitStack() as opened:
+        reads, nbytes = [], 0
+        try:
+            for uri, ids in files.items():
+                fs, path = pafs.FileSystem.from_uri(uri)
+                pf = pq.ParquetFile(
+                    opened.enter_context(fs.open_input_file(path)),
+                    pre_buffer=False)
+                groups, size = _stripe_groups(pf.metadata, ids)
+                reads.append((pf, groups, pa.array(sorted(ids), pa.string())))
+                nbytes += size
+        except (OSError, ValueError):  # no pyarrow filesystem, not parquet
+            return None, "unreadable"
+        if nbytes > DRIVER_DECODE_BYTES:
+            return None, "over_byte_bound"
+        for pf, groups, ids in reads:
+            t = pf.read_row_groups(groups, columns=["stripe_id", "meta",
+                                                    "blob"],
+                                   use_threads=False)
+            metas, blobs = t.column("meta"), t.column("blob")
+            hits = pc.indices_nonzero(pc.is_in(t.column("stripe_id"),
+                                               value_set=ids))
+            for i in hits.to_pylist():
+                out = _decode_stripe(blobs[i].as_buffer(),
+                                     json.loads(metas[i].as_py()), spec, tz,
+                                     include, rg_predicate)
+                if out is not None and key_set is not None:
+                    out = out.filter(pc.is_in(out.column(key_col),
+                                              value_set=key_set))
+                if out is not None and out.num_rows:
+                    batches.append(out)
+            del t, metas, blobs  # this file's blobs go before the next's
+    return _local_frame(spark, batches, spec), None
+
+
+def _reads_stored(df: DataFrame, names: tuple) -> bool:
+    """Whether the frame's `names` columns are its scanned relation's own
+    columns — not values a Project above the scan computed — so reading
+    them from the part files reads what Spark would."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        leaf = plan
+        while leaf.children().size() == 1:
+            leaf = leaf.children().head()
+        stored, out = leaf.outputSet(), plan.output()
+        seen = set()
+        for i in range(out.size()):
+            a = out.apply(i)
+            if a.name() in names:
+                if not stored.contains(a):
+                    return False
+                seen.add(a.name())
+        return seen == set(names)
+    except Exception:
+        return False
+
+
+def _stripe_groups(md, ids: set) -> tuple[list[int], int]:
+    """(the row groups of a stripe-table parquet file whose stripe_id
+    statistics can hold one of `ids`, the uncompressed bytes of their blob
+    column chunks) — a row group's column chunk is read whole, so those
+    are the bytes the read costs."""
+    names = [md.schema.column(j).path for j in range(md.num_columns)]
+    sid, blob = names.index("stripe_id"), names.index("blob")
+    groups, size = [], 0
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        st = rg.column(sid).statistics
+        if st is None or not st.has_min_max or any(
+                st.min <= i <= st.max for i in ids):
+            groups.append(g)
+            size += rg.column(blob).total_uncompressed_size
+    return groups, size
+
+
+def _key_set(spec: list[dict], key_col: str, keys: list, tz: str | None):
+    """Arrow value set of `keys` for pre-filtering decoded rows on the
+    driver — only str/bytes/int keys (the kinds _bound_ok compares)
+    against a key column of the matching Arrow kind, else None. It only
+    shrinks what crosses into Spark; the Catalyst filter still decides."""
+    import pyarrow as pa
+
+    from goorc_spark import arrow_stripe
+
+    col = next((c for c in spec if c["name"] == key_col), None)
+    typ = arrow_stripe.spec_arrow_type(col, tz) if col else None
+    if typ is None:
+        return None
+    for kind, fits in ((str, pa.types.is_large_string),
+                       (bytes, pa.types.is_large_binary),
+                       (int, pa.types.is_integer)):
+        if fits(typ) and all(isinstance(k, kind) and not isinstance(k, bool)
+                             for k in keys):
+            try:
+                return pa.array(keys, typ)
+            except (OverflowError, pa.ArrowInvalid):
+                return None
+    return None
+
+
+def _local_frame(spark: SparkSession, batches: list,
+                 spec: list[dict]) -> DataFrame:
+    """Decoded batches as a driver-resident frame: Catalyst plans it as a
+    LocalRelation and folds filters into it on the driver; one partition
+    lets count() finish in one job, and an empty frame collects with
+    none."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = schema_from_spec(spec)
+    if not batches:
+        # from Arrow, not from a Python list: a list becomes an RDD whose
+        # every action runs a Python-worker job
+        empty = pa.RecordBatch.from_pylist([], schema=to_arrow_schema(schema))
+        return spark.createDataFrame(pa.Table.from_batches([empty]), schema)
+    return spark.createDataFrame(pa.Table.from_batches(batches),
+                                 schema).coalesce(1)
+
+
+def _prune_in_spark(stripes: DataFrame, id_pushdown: bool,
+                    metrics: dict | None, **keys) -> DataFrame:
+    """The Spark-side stripe prune of read_rows / read_rows_in (see
+    read_rows' `id_pushdown`); `keys` are prune_stripes' key_value /
+    key_values."""
     pruned = prune_stripes(stripes, **keys)
     if id_pushdown:
         ids = [r[0] for r in pruned.select("stripe_id")
@@ -1046,6 +1284,25 @@ def _pushdown_stripes(stripes: DataFrame, id_pushdown: bool | None,
             return stripes.filter(F.col("stripe_id").isin(ids))
     _count_prune(metrics, "spark", None, None)
     return pruned
+
+
+def _count_served(metrics: dict | None, where: str,
+                  fallback: str | None = None, decoded: bool = False) -> None:
+    """Record where a point read's rows were decoded (read_rows'
+    `served_on`), why not on the driver (`fallback`) and, when the driver
+    decoded, its `kernel`. Labels describe the last call."""
+    if metrics is None:
+        return
+    metrics["served_on"] = where
+    metrics.pop("fallback", None)
+    metrics.pop("kernel", None)
+    if fallback is not None:
+        metrics["fallback"] = fallback
+    if decoded:
+        from goorc_spark.codecs import _native
+
+        metrics["kernel"] = "native" if _native.status()["loaded"] \
+            else "numpy"
 
 
 def _count_prune(metrics: dict | None, where: str, total: int | None,

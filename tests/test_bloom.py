@@ -129,10 +129,13 @@ def test_decode_coerces_schema_drift(spark):
     assert dict(dec.dtypes)["turn_idx"] == "int"
 
 
-def test_read_rows_id_pushdown_from_file_scan(spark, tmp_path):
+def test_read_rows_id_pushdown_from_file_scan(spark, tmp_path,
+                                              monkeypatch):
     """From a parquet stripe table, read_rows must re-scan with a
     stripe_id IN (...) predicate (parquet-pushable) instead of filtering
-    bloom/range expressions after reading blob bytes."""
+    bloom/range expressions after reading blob bytes. Small survivors
+    decode on the driver and scan nothing; a zero byte bound sends the
+    read to that Spark decode."""
     pdf, stripes = _hash_stripes(spark, n_convs=40)
     path = str(tmp_path / "stripes")
     stripes.write.mode("overwrite").parquet(path)
@@ -140,8 +143,19 @@ def test_read_rows_id_pushdown_from_file_scan(spark, tmp_path):
     assert engine._is_bare_scan(st)
     assert not engine._is_bare_scan(stripes)  # derived frame: no pushdown
     key = sorted(pdf["conv_id"].unique())[7]
-    out = engine.read_rows(st, transcripts.TRANSCRIPTS_SPEC, "conv_id", key)
-    assert out.count() == int((pdf["conv_id"] == key).sum())
+    want = int((pdf["conv_id"] == key).sum())
+    m: dict = {}
+    out = engine.read_rows(st, transcripts.TRANSCRIPTS_SPEC, "conv_id", key,
+                           metrics=m)
+    assert out.count() == want
+    assert m["served_on"] == "driver"
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Scan parquet" not in plan and "MapInArrow" not in plan, plan
+    monkeypatch.setattr(engine, "DRIVER_DECODE_BYTES", 0)
+    out = engine.read_rows(st, transcripts.TRANSCRIPTS_SPEC, "conv_id", key,
+                           metrics=m)
+    assert out.count() == want
+    assert (m["served_on"], m["fallback"]) == ("spark", "over_byte_bound")
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the id predicate must reach the parquet scan's DataFilters (Catalyst
     # simplifies a 1-element isin to EqualTo)
@@ -288,9 +302,9 @@ def _spark_survivors(stripes, **keys):
 
 
 def _driver_survivors(stripes, **keys):
-    ids, total, _ = engine._prune_on_driver(stripes, **keys)
+    rows, total, _ = engine._prune_on_driver(stripes, **keys)
     assert total == stripes.count()
-    return sorted(ids)
+    return sorted(r.stripe_id for r in rows)
 
 
 def _probe_keys(pdf):
@@ -399,12 +413,16 @@ def test_read_rows_metrics_and_spark_fallback(parquet_tables, monkeypatch):
     assert len(want) == int((pdf["conv_id"] == key).sum())
     assert (m1.pop("lineage_cache_hits")
             + m1.pop("lineage_cache_misses")) == 1
+    assert m1.pop("kernel") in ("native", "numpy")
     assert m1 == {"pruned_on": "driver", "stripes_total": st.count(),
-                  "stripes_kept": len(_spark_survivors(st, key_value=key))}
+                  "stripes_kept": len(_spark_survivors(st, key_value=key)),
+                  "served_on": "driver"}
     monkeypatch.setattr(engine, "MAX_PUSHDOWN_IDS", 1)
     m2: dict = {}
     assert read(m2) == want
     assert m2["pruned_on"] == "spark"
+    assert (m2["served_on"], m2["fallback"]) == ("spark", "too_many_stripes")
+    assert "kernel" not in m2
     assert "stripes_total" not in m2
     assert "lineage_cache_hits" not in m2
     assert "lineage_cache_misses" not in m2
@@ -601,7 +619,8 @@ def test_lineage_cache_filtered_frames_never_share(parquet_tables):
                     == _point(frame, key, id_pushdown=False)), key
     ids = []
     for frame in (a, b):
-        got, _, hit = engine._prune_on_driver(frame)  # no key: keep all
+        rows, _, hit = engine._prune_on_driver(frame)  # no key: keep all
+        got = [r.stripe_id for r in rows]
         assert hit
         assert sorted(got) == sorted(
             r[0] for r in frame.select("stripe_id").collect())

@@ -1,0 +1,365 @@
+"""Warm point reads over a bare stripe-table scan decode their surviving
+stripes on the driver (engine._decode_on_driver): no Spark decode job, the
+same rows and schema as the Spark decode (`id_pushdown=False`), and every
+case the driver may not serve falls back to that decode with its reason
+in `metrics["fallback"]`.
+"""
+
+from __future__ import annotations
+
+import json
+
+import pytest
+from pyspark.sql import functions as F
+
+from goorc_spark import arrow_stripe, engine, transcripts
+from test_bloom import _jobs_of
+
+pytestmark = pytest.mark.usefixtures("spark")
+
+ABSENT_IN_RANGE = "conv-00000010-missing"
+
+
+def _source(spark):
+    """Transcripts plus nested columns (struct, list, map)."""
+    pdf = transcripts.synthesize_pandas(n_convs=40, seed=17)
+    df = spark.createDataFrame(pdf).select(
+        "*",
+        F.struct(F.col("turn_idx").alias("i"),
+                 F.col("role").alias("r")).alias("nested"),
+        F.array(F.col("role"), F.col("tool")).alias("tags"),
+        F.create_map(F.lit("turn"), F.col("turn_idx").cast("long"))
+        .alias("kv"))
+    return pdf, df
+
+
+@pytest.fixture(scope="module")
+def tables(spark, tmp_path_factory):
+    """(pdf, spec, {layout: bare parquet scan}): hash placement with
+    row-group blooms, and range placement, both with small row groups so
+    the row-group select has work to do."""
+    pdf, df = _source(spark)
+    out = {}
+    for name, ranged in (("hash", False), ("range", True)):
+        cfg = engine.EncodeConfig(key_col="conv_id", order_cols=("turn_idx",),
+                                  stripe_bytes=64 * 1024, partitions=4,
+                                  rg_rows=100, run_id="drv" + name,
+                                  range_partition=ranged,
+                                  rg_bloom=None if ranged else 0.01)
+        path = str(tmp_path_factory.mktemp(name) / "stripes")
+        engine.encode_df(df, cfg).write.parquet(path)
+        out[name] = spark.read.parquet(path)
+    return pdf, engine.spec_from_schema(df.schema), out
+
+
+def _rows(df):
+    return sorted(repr(r) for r in df.collect())
+
+
+def _same_as_spark(read):
+    """read(metrics=...) served on the driver gives the rows and schema of
+    the Spark decode (id_pushdown=False)."""
+    m: dict = {}
+    got = read(metrics=m)
+    assert m["served_on"] == "driver", m
+    assert "fallback" not in m
+    assert m["kernel"] in ("native", "numpy")
+    ref_m: dict = {}
+    want = read(metrics=ref_m, id_pushdown=False)
+    assert (ref_m["served_on"], ref_m["fallback"]) == ("spark",
+                                                        "id_pushdown_off")
+    assert got.schema == want.schema
+    rows = _rows(got)
+    assert rows == _rows(want)
+    return rows
+
+
+def _keys(pdf):
+    return sorted(pdf["conv_id"].unique())
+
+
+@pytest.mark.parametrize("layout", ["hash", "range"])
+def test_driver_rows_equal_spark_decode(tables, layout):
+    pdf, spec, st = tables
+    st = st[layout]
+    keys = _keys(pdf)
+    for key in keys[::7] + [ABSENT_IN_RANGE, "zzz"]:
+        rows = _same_as_spark(lambda **kw: engine.read_rows(
+            st, spec, "conv_id", key, **kw))
+        assert len(rows) == int((pdf["conv_id"] == key).sum()), key
+    # spec=None recovers the spec from the stripes' meta, as decode_df does
+    assert _rows(engine.read_rows(st, None, "conv_id", keys[0])) == _rows(
+        engine.read_rows(st, spec, "conv_id", keys[0], id_pushdown=False))
+    batch = [keys[2], keys[21], ABSENT_IN_RANGE]
+    rows = _same_as_spark(lambda **kw: engine.read_rows_in(
+        st, spec, "conv_id", batch, **kw))
+    assert len(rows) == int(pdf["conv_id"].isin(batch).sum())
+
+
+def test_driver_projection_and_order_range(tables):
+    """Projected `columns` and an ord_lo/ord_hi window: the exact Catalyst
+    filter, not the row-group select, decides which rows come back."""
+    pdf, spec, st = tables
+    key = max(_keys(pdf), key=lambda k: int((pdf["conv_id"] == k).sum()))
+    n = int((pdf["conv_id"] == key).sum())
+    assert n > 20
+    lo, hi = 3, n - 5
+    for layout in ("hash", "range"):
+        rows = _same_as_spark(lambda **kw: engine.read_rows(
+            st[layout], spec, "conv_id", key, ord_col="turn_idx",
+            ord_lo=lo, ord_hi=hi, columns=["conv_id", "turn_idx", "kv"],
+            **kw))
+        assert len(rows) == hi - lo + 1
+        got = engine.read_rows(st[layout], spec, "conv_id", key,
+                               ord_col="turn_idx", ord_lo=lo, ord_hi=hi,
+                               columns=["conv_id", "turn_idx", "kv"])
+        assert got.columns == ["conv_id", "turn_idx", "kv"]
+        assert sorted(r.turn_idx for r in got.collect()) == list(
+            range(lo, hi + 1))
+
+
+def test_driver_non_prefiltered_key_kind(spark, tmp_path):
+    """A float key on a long key column skips the Arrow pre-filter; the
+    Catalyst filter alone picks the rows, on the driver as in Spark."""
+    df = spark.range(0, 2000).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
+    cfg = engine.EncodeConfig(key_col="k", order_cols=("v",), partitions=2,
+                              stripe_bytes=8 * 1024, rg_rows=100,
+                              range_partition=True, run_id="fk")
+    path = str(tmp_path / "t")
+    engine.encode_df(df, cfg).write.parquet(path)
+    st = spark.read.parquet(path)
+    spec = engine.spec_from_schema(df.schema)
+    assert engine._key_set(spec, "k", [9.0], "UTC") is None
+    assert engine._key_set(spec, "k", [9], "UTC") is not None
+    for key in (9.0, 9, 1999):
+        rows = _same_as_spark(lambda **kw: engine.read_rows(
+            st, spec, "k", key, **kw))
+        assert len(rows) == 1, key
+
+
+def test_driver_timestamps_under_non_utc_session(spark, tables):
+    pdf, spec, st = tables
+    key = _keys(pdf)[5]
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        for layout in ("hash", "range"):
+            def read(**kw):
+                return engine.read_rows(
+                    st[layout], spec, "conv_id", key, **kw).select(
+                    "turn_idx", F.unix_micros("ts").alias("us"),
+                    F.col("ts").cast("string").alias("local"))
+            rows = _same_as_spark(read)
+            assert len(rows) == int((pdf["conv_id"] == key).sum())
+        got = {r.turn_idx: r.us for r in read().collect()}
+        src = pdf[pdf["conv_id"] == key]
+        want = {int(t): int(ts.value // 1000)
+                for t, ts in zip(src["turn_idx"], src["ts"])}
+        assert got == want
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_null_key_reads_no_stripe(spark, tables):
+    """read_rows(key_value=None) and an all-NULL read_rows_in list return
+    the empty frame of the decode schema without a Spark job; NULLs
+    mixed into a key list are dropped, as SQL IN drops them."""
+    pdf, spec, st = tables
+    st = st["hash"]
+    cols = ["conv_id", "turn_idx", "nested"]
+    m: dict = {}
+    out, jobs = _jobs_of(spark, lambda: engine.read_rows(
+        st, spec, "conv_id", None, ord_col="turn_idx", ord_lo=1,
+        columns=cols, metrics=m))
+    assert jobs == 0
+    assert m["stripes_kept"] == 0 and m["served_on"] == "driver"
+    assert "stripes_total" not in m
+    want = engine.read_rows(st, spec, "conv_id", None, ord_col="turn_idx",
+                            ord_lo=1, columns=cols, id_pushdown=False)
+    assert out.schema == want.schema
+    assert out.collect() == [] and want.collect() == []
+    _, jobs = _jobs_of(spark, lambda: engine.read_rows_in(
+        st, spec, "conv_id", [None, None]).collect())
+    assert jobs == 0
+    key = _keys(pdf)[3]
+    mixed = engine.read_rows_in(st, spec, "conv_id", [key, None])
+    assert _rows(mixed) == _rows(engine.read_rows_in(
+        st, spec, "conv_id", [key], id_pushdown=False))
+    assert mixed.count() == int((pdf["conv_id"] == key).sum()) > 0
+    with pytest.raises(ValueError):
+        engine.read_rows_in(st, spec, "conv_id", [])
+
+
+def test_legacy_blooms_on_the_driver(spark, tables, tmp_path):
+    """8192-byte blooms of the old hash family never skip a stripe on the
+    driver path either; rows equal the Spark decode."""
+    pdf, spec, st = tables
+    path = str(tmp_path / "legacy")
+    st["hash"].withColumn(
+        "key_bloom", F.lit(bytes(engine.BLOOM_BITS // 8))).write.parquet(path)
+    legacy = spark.read.parquet(path)
+    key = _keys(pdf)[9]
+    m: dict = {}
+    engine.read_rows(legacy, spec, "conv_id", key, metrics=m)
+    assert m["stripes_kept"] == m["stripes_total"]
+    rows = _same_as_spark(lambda **kw: engine.read_rows(
+        legacy, spec, "conv_id", key, **kw))
+    assert len(rows) == int((pdf["conv_id"] == key).sum()) > 0
+
+
+def test_driver_verifies_stripe_crc(spark, tables, tmp_path):
+    """A stored blob whose bytes no longer match its CRC32 raises on the
+    driver path, as it does in a Spark task."""
+    pdf, spec, st = tables
+    path = str(tmp_path / "corrupt")
+    st["range"].withColumn("blob", F.concat(
+        F.substring("blob", 1, 40), F.lit(b"\x00\x01"),
+        F.expr("substring(blob, 43)"))).write.parquet(path)
+    bad = spark.read.parquet(path)
+    with pytest.raises(arrow_stripe.CorruptStripeError):
+        engine.read_rows(bad, spec, "conv_id", _keys(pdf)[4])
+
+
+# ------------------------------------------------------------ fallbacks --
+
+
+def _served_on_spark(read, reason, want):
+    m: dict = {}
+    got = read(metrics=m)
+    assert (m["served_on"], m.get("fallback")) == ("spark", reason), m
+    assert "kernel" not in m
+    assert _rows(got) == want
+
+
+def test_fallback_over_byte_bound(tables, monkeypatch):
+    """Both byte checks: the survivors' lineage enc_bytes, then the blob
+    bytes of the parquet row groups holding them (a row group is read
+    whole, so it costs more than its survivors)."""
+    pdf, spec, st = tables
+    st = st["hash"]
+    key = _keys(pdf)[11]
+
+    def read(**kw):
+        return engine.read_rows(st, spec, "conv_id", key, **kw)
+
+    want = _same_as_spark(read)
+    rows, _, _ = engine._prune_on_driver(st, key_value=key)
+    survivors = sum(r.enc_bytes for r in rows)
+    monkeypatch.setattr(engine, "DRIVER_DECODE_BYTES", survivors - 1)
+    _served_on_spark(read, "over_byte_bound", want)
+    monkeypatch.setattr(engine, "DRIVER_DECODE_BYTES", survivors)
+    _served_on_spark(read, "over_byte_bound", want)
+
+
+def test_fallback_too_many_stripes(tables, monkeypatch):
+    pdf, spec, st = tables
+    key = _keys(pdf)[12]
+
+    def read(**kw):
+        return engine.read_rows(st["range"], spec, "conv_id", key, **kw)
+
+    want = _same_as_spark(read)
+    monkeypatch.setattr(engine, "MAX_PUSHDOWN_IDS", 1)
+    _served_on_spark(read, "too_many_stripes", want)
+
+
+def test_fallback_unreadable_files(spark, tables, tmp_path, monkeypatch):
+    """A stripe table stored as ORC is a bare scan pyarrow.parquet cannot
+    open; a part file whose URI scheme has no pyarrow filesystem is the
+    same case."""
+    pdf, spec, st = tables
+    key = _keys(pdf)[13]
+    path = str(tmp_path / "orc")
+    st["range"].write.orc(path)
+    orc = spark.read.orc(path)
+
+    def read(**kw):
+        return engine.read_rows(orc, spec, "conv_id", key, **kw)
+
+    want = _rows(read(id_pushdown=False))
+    assert want
+    _served_on_spark(read, "unreadable", want)
+
+    real = engine._prune_on_driver
+
+    class _Row(dict):
+        __getattr__ = dict.__getitem__
+
+    def elsewhere(*a, **kw):
+        rows, total, hit = real(*a, **kw)
+        return [_Row(r.asDict(), file="nosuchscheme://bucket/part.parquet")
+                for r in rows], total, hit
+
+    monkeypatch.setattr(engine, "_prune_on_driver", elsewhere)
+
+    def read_pq(**kw):
+        return engine.read_rows(st["range"], spec, "conv_id", key, **kw)
+
+    _served_on_spark(read_pq, "unreadable", want)
+
+
+def test_fallback_not_bare_scan(spark, tables):
+    """In-flight frames (auto or forced id pushdown) and frames whose meta
+    or blob a Project computes decode in Spark."""
+    pdf, spec, st = tables
+    key = _keys(pdf)[14]
+    _, df = _source(spark)
+    cfg = engine.EncodeConfig(key_col="conv_id", order_cols=("turn_idx",),
+                              stripe_bytes=64 * 1024, partitions=2,
+                              rg_rows=100, run_id="inflight")
+    inflight = engine.encode_df(df, cfg)
+    want = _rows(engine.read_rows(st["hash"], spec, "conv_id", key))
+    for kw in ({}, {"id_pushdown": True}):
+        _served_on_spark(lambda **m: engine.read_rows(
+            inflight, spec, "conv_id", key, **kw, **m), "not_bare_scan", want)
+    rewritten = st["hash"].withColumn(
+        "meta", F.regexp_replace("meta", "^x", "x"))
+    assert engine._is_bare_scan(rewritten)
+    assert not engine._reads_stored(rewritten, ("stripe_id", "meta", "blob"))
+    assert engine._reads_stored(st["hash"].drop("key_bloom"),
+                                ("stripe_id", "meta", "blob"))
+    _served_on_spark(lambda **m: engine.read_rows(
+        rewritten, spec, "conv_id", key, **m), "not_bare_scan", want)
+
+
+# ------------------------------------------------------------ job count --
+
+
+def test_warm_driver_point_read_count_is_one_job(spark, tables):
+    pdf, spec, st = tables
+    st = st["range"]
+    key = _keys(pdf)[15]
+    engine.read_rows(st, spec, "conv_id", key)  # warm the lineage cache
+    m: dict = {}
+    out, jobs = _jobs_of(spark, lambda: engine.read_rows(
+        st, spec, "conv_id", key, metrics=m))
+    assert jobs == 0 and m["served_on"] == "driver"
+    assert m["lineage_cache_hits"] == 1
+    n, jobs = _jobs_of(spark, out.count)
+    assert n == int((pdf["conv_id"] == key).sum()) > 0
+    assert jobs <= 1, jobs
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" not in plan and "Scan" not in plan.replace(
+        "LocalTableScan", ""), plan
+
+
+def test_read_where_metrics(spark, tables):
+    """read_where's id pass records where it pruned and what it kept; the
+    single-pass plan runs no id pass and records nothing."""
+    pdf, spec, st = tables
+    st = st["range"]
+    lo, hi = 60, None
+    m: dict = {}
+    got = engine.read_where(st, spec, "turn_idx", lo=lo, hi=hi, metrics=m)
+    assert got.count() == int((pdf.turn_idx >= lo).sum()) > 0
+    kept = [r.stripe_id for r in st.select("stripe_id", "meta").collect()
+            if arrow_stripe.select_row_groups(
+                json.loads(r.meta), col_ranges={"turn_idx": (lo, hi)}) != []]
+    assert m == {"pruned_on": "spark", "stripes_kept": len(kept)}
+    assert 0 < len(kept)
+    engine.read_where(st, spec, "turn_idx", lo=lo, hi=hi, metrics=m)
+    assert m["stripes_kept"] == 2 * len(kept)
+    single_pass: dict = {}
+    engine.read_where(st, spec, "turn_idx", lo=lo, hi=hi, id_pushdown=False,
+                      metrics=single_pass)
+    assert single_pass == {}
