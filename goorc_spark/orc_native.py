@@ -32,13 +32,16 @@ writer emits NONE/ZLIB (the reference's parity codec).
 
 from __future__ import annotations
 
+import threading
 import zlib
+from collections import OrderedDict
 from datetime import datetime, timezone
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from goorc_spark import _fanout
 from goorc_spark.codecs import boolrle, byterle, chunk, floats, rlev1, rlev2
 from goorc_spark.codecs.primitives import (decode_svarints, decode_uvarints,
                                            encode_svarints)
@@ -181,20 +184,26 @@ def _lz4_chunk(b: bytes) -> bytes:
     return bytes(codec.decompress(b, hi))
 
 
-def _decompress(raw, kind: int, limit: int | None = None) -> bytes:
+def _decompress(raw, kind: int, limit: int | None = None,
+                upto: tuple[int, int] | None = None) -> bytes:
     """An ORC compressed stream: 3-byte little-endian chunk headers,
     value = (chunkLen << 1) | isOriginal; zlib chunks are raw deflate,
     snappy/zstd chunks carry their uncompressed size in-band (snappy
     leading varint; zstd frame-content-size), which is what pyarrow's
     codecs need; lz4 block chunks recover their size via _lz4_chunk.
-    `limit` stops after enough chunks are decompressed to yield that many
-    bytes (row-index seek windows)."""
+    Row-group windows stop early: `limit` caps the output bytes, and
+    `upto=(chunk_off, nbytes)` inflates whole chunks up to the one
+    starting at compressed offset `chunk_off`, then only `nbytes` more."""
     if kind == COMP_NONE:
         return bytes(raw) if limit is None else bytes(raw[:limit])
     out = bytearray()
     buf = memoryview(raw)
     off, end = 0, len(buf)
     while off < end:
+        if upto is not None and off >= upto[0]:
+            stop = len(out) + upto[1]
+            limit = stop if limit is None else min(limit, stop)
+            upto = None
         if limit is not None and len(out) >= limit:
             break
         h = buf[off] | (buf[off + 1] << 8) | (buf[off + 2] << 16)
@@ -209,7 +218,7 @@ def _decompress(raw, kind: int, limit: int | None = None) -> bytes:
                 # stop inflating INSIDE the chunk once the window has
                 # enough bytes — JVM writers put a whole small stripe's
                 # stream in one 256 KB chunk, where chunk-granularity
-                # alone decompresses everything (r5; seek windows only)
+                # alone decompresses everything (seek windows only)
                 out += zlib.decompressobj(-15).decompress(
                     bytes(chunk_bytes), max(limit - len(out), 1))
             else:
@@ -232,6 +241,58 @@ def _decompress(raw, kind: int, limit: int | None = None) -> bytes:
         else:
             raise ValueError(f"unknown compression kind {kind}")
     return bytes(out)
+
+
+# ------------------------------------------------------------- parse memo
+# A file's metadata is parsed once per distinct byte string, the way a
+# library reader keeps a file's tail and index after opening it (reference
+# orc/reader.go:199-212, 254-343). The postscript, footer, Metadata stripe
+# stats, stripe footers, ROW_INDEX and bloom streams all go through
+# _parsed(), keyed by (parser, compression kind, the exact raw bytes): a
+# hit is correct whichever file the bytes came from, and skips the inflate
+# as well as the parse. Results are shared between calls and threads:
+# callers must treat them as immutable.
+
+INDEX_CACHE_BYTES = 4 << 20  # bound on the raw key bytes the memo holds
+
+_memo: OrderedDict = OrderedDict()
+_memo_bytes = 0
+_memo_lock = threading.Lock()
+
+
+def _bump(metrics: dict | None, key: str, n: int = 1) -> None:
+    if metrics is not None:
+        metrics[key] = metrics.get(key, 0) + n
+
+
+def _parsed(parse, raw, comp: int, metrics: dict | None = None,
+            count_inflated: bool = False):
+    """parse(_decompress(raw, comp)), memoized (LRU by key bytes). Counts
+    index_cache_hits/misses in `metrics`, and with `count_inflated` adds
+    a miss's inflated bytes to decompressed_bytes."""
+    global _memo_bytes
+    key = (parse, comp, bytes(raw))
+    with _memo_lock:
+        out = _memo.get(key)
+        if out is not None:
+            _memo.move_to_end(key)
+    if out is not None:
+        _bump(metrics, "index_cache_hits")
+        return out
+    _bump(metrics, "index_cache_misses")
+    plain = _decompress(raw, comp)
+    if count_inflated:
+        _bump(metrics, "decompressed_bytes", len(plain))
+    out = parse(plain)
+    size = len(key[2])
+    with _memo_lock:
+        if size <= INDEX_CACHE_BYTES and key not in _memo:
+            _memo[key] = out
+            _memo_bytes += size
+            while _memo_bytes > INDEX_CACHE_BYTES:
+                old, _ = _memo.popitem(last=False)
+                _memo_bytes -= len(old[2])
+    return out
 
 
 def parse_postscript(buf) -> dict:
@@ -291,18 +352,29 @@ def parse_stripe_footer(buf) -> dict:
     return {"streams": streams, "encodings": encodings, "timezone": tz}
 
 
-def parse_tail(data: bytes) -> tuple[dict, dict]:
+def parse_tail(data: bytes,
+               metrics: dict | None = None) -> tuple[dict, dict]:
     """(postscript, footer) from whole-file bytes (reference
     extractFileTail, orc/reader.go:254-343: last byte = postscript
-    length, footer precedes the postscript)."""
+    length, footer precedes the postscript). Memoized: the returned dicts
+    are shared and must not be mutated."""
     if len(data) <= len(MAGIC) or data[:3] != MAGIC:
         raise ValueError("not an ORC file")
     ps_len = data[-1]
-    ps = parse_postscript(data[-1 - ps_len:-1])
+    ps = _parsed(parse_postscript, data[-1 - ps_len:-1], COMP_NONE, metrics)
     foot_end = len(data) - 1 - ps_len
     raw_footer = data[foot_end - ps["footer_length"]:foot_end]
-    footer = parse_footer(_decompress(raw_footer, ps["compression"]))
-    return ps, footer
+    return ps, _parsed(parse_footer, raw_footer, ps["compression"], metrics)
+
+
+def _stripe_footer(data, stripe: dict, comp: int,
+                   metrics: dict | None = None) -> dict:
+    """The parsed (memoized) StripeFooter of `stripe` within `data`."""
+    foot_off = (stripe["offset"] + stripe["index_length"]
+                + stripe["data_length"])
+    return _parsed(parse_stripe_footer,
+                   data[foot_off:foot_off + stripe["footer_length"]], comp,
+                   metrics)
 
 
 # ---------------------------------------------------------------- decoding
@@ -428,6 +500,19 @@ class _StripeCursor:
         self._count(len(out))
         return out
 
+    def _index_stream(self, parse, col: int, kind: int):
+        off, ln = self.loc[(col, kind)]
+        return _parsed(parse, self.data[off:off + ln], self.comp,
+                       self.metrics, count_inflated=True)
+
+    def row_index(self, col: int) -> list[tuple[list[int], dict]]:
+        """The column's ROW_INDEX, parsed once (see _parse_row_index)."""
+        return self._index_stream(_parse_row_index, col, ROW_INDEX)
+
+    def blooms(self, col: int) -> list[tuple[int, np.ndarray]]:
+        """The column's BLOOM_FILTER_UTF8 index, parsed once."""
+        return self._index_stream(_parse_bloom_index, col, BLOOM_FILTER_UTF8)
+
     def _rle(self, col: int):
         """Integer RLE generation for this column: pre-0.12 writers mark
         DIRECT/DICTIONARY (v1), modern ones DIRECT_V2/DICTIONARY_V2 —
@@ -478,36 +563,17 @@ _POS_RLE, _POS_BYTE, _POS_BOOL, _POS_RAW = range(4)
 _POS_EXTRAS = {_POS_RLE: 1, _POS_BYTE: 1, _POS_BOOL: 2, _POS_RAW: 0}
 
 
-def _parse_row_index(raw) -> list[list[int]]:
-    """ROW_INDEX stream bytes -> positions per row-group entry (per-group
-    statistics are ignored here; pruning uses the stripe/file stats)."""
-    return [_fpacked_u32(pb_fields(e), 1) for e in pb_fields(raw).get(1, [])]
-
-
-def _row_index_entry(raw, g: int) -> tuple[list[int] | None, int]:
-    """Positions of ROW_INDEX entry `g` alone (as _parse_row_index would
-    list them): the other entries are stepped over by their length prefix,
-    never parsed. -> (positions, or None when out of range; entries
-    walked)."""
-    buf = memoryview(raw)
-    off, end, n = 0, len(buf), 0
-    while off < end:
-        tag, off = _uvarint(buf, off)
-        wt = tag & 7
-        if wt == 0:
-            _, off = _uvarint(buf, off)
-        elif wt == 2:
-            ln, off = _uvarint(buf, off)
-            if tag >> 3 == 1:
-                if n == g:
-                    return _fpacked_u32(pb_fields(buf[off:off + ln]), 1), n + 1
-                n += 1
-            off += ln
-        elif wt in (1, 5):
-            off += 8 if wt == 1 else 4
-        else:
-            raise ValueError(f"unsupported proto wire type {wt}")
-    return None, n
+def _parse_row_index(raw) -> list[tuple[list[int], dict]]:
+    """ROW_INDEX stream bytes -> per row-group entry (positions, statistics):
+    the one parse both the seek path (positions) and row-group pruning
+    (RowIndexEntry field 2 stats) read. Go through _StripeCursor.row_index
+    so each stream is parsed once."""
+    out = []
+    for e in pb_fields(raw).get(1, []):
+        ef = pb_fields(e)
+        out.append((_fpacked_u32(ef, 1),
+                    _parse_col_stats(ef[2][0]) if 2 in ef else {}))
+    return out
 
 
 def _position_streams(kind: int, enc: int,
@@ -540,55 +606,94 @@ def _position_streams(kind: int, enc: int,
     return out  # struct: PRESENT only
 
 
+# bytes one run can span past a row group's start position, where a run
+# that began in the group before may end: an RLEv2 PATCHED_BASE run is at
+# most a 4-byte header, an 8-byte base, 512 values of 64 bits and 31
+# patches (4,387 bytes; RLEv1 runs are shorter), a byte-RLE run 129 bytes
+_RUN_MAX_BYTES = {_POS_RLE: 4400, _POS_BYTE: 130, _POS_BOOL: 130,
+                  _POS_RAW: 0}
+
+
+def _split_positions(pos: list[int], layout: list[tuple[int, int]],
+                     n_base: int, col: int) -> dict:
+    """One RowIndexEntry's positions -> {stream kind: (base, skips, tag)}
+    for the streams in `layout` (those the stripe actually has)."""
+    out = {}
+    i = 0
+    for skind, tag in layout:
+        nx = _POS_EXTRAS[tag]
+        out[skind] = (tuple(pos[i:i + n_base]),
+                      tuple(pos[i + n_base:i + n_base + nx]), tag)
+        i += n_base + nx
+    if i != len(pos):
+        raise NotImplementedError(
+            f"ROW_INDEX positions for column {col}: consumed {i} "
+            f"of {len(pos)} — stream layout differs from the "
+            "writer conventions this seek path knows")
+    return out
+
+
 class _SeekCursor(_StripeCursor):
-    """Serves stream WINDOWS starting at row group `g0` from ROW_INDEX
-    positions: only the chunks from the group's recorded offset through
-    the needed byte count are decompressed, and the recorded run/bit skips
-    are applied after decode — a point read touches KBs of a multi-MB
-    stripe (asserted in tests)."""
+    """Serves the stream WINDOWS of row groups [g0, g1) from ROW_INDEX
+    positions: decompression starts at g0's recorded chunk and stops at
+    g1's recorded position (inflating into g1's chunk only as far as its
+    decompressed skip, plus one run when g1's recorded value skip says a
+    run straddles the boundary), and the recorded run/bit skips of g0 are
+    applied after decode. Exact for any writer's layout: a point read
+    inflates the group's bytes, not the stripe (asserted in tests)."""
 
     def __init__(self, data: bytes, stripe: dict, sf: dict, comp: int,
-                 types: list[dict], g0: int, metrics: dict | None = None):
+                 types: list[dict], g0: int, g1: int,
+                 metrics: dict | None = None):
         super().__init__(data, stripe, sf, comp, metrics)
         self.base: dict[tuple[int, int], tuple] = {}
         self.skip: dict[tuple[int, int], tuple] = {}
+        # (col, kind) -> (g1's byte or chunk offset, bytes needed past
+        # it); absent when the window runs to the end of the stream
+        self.stop: dict[tuple[int, int], tuple[int, int]] = {}
         n_base = 1 if comp == COMP_NONE else 2
         for col in range(len(types)):
             if not self.has(col, ROW_INDEX):
                 continue
-            pos, n = _row_index_entry(self.stream(col, ROW_INDEX), g0)
-            if pos is None:
+            entries = self.row_index(col)
+            if g0 >= len(entries):
                 raise ValueError(
                     f"row group {g0} out of range for column {col} "
-                    f"({n} ROW_INDEX entries)")
-            i = 0
-            for skind, tag in _position_streams(
-                    types[col]["kind"], self.encodings[col]["kind"],
-                    self.has(col, PRESENT)):
-                if not self.has(col, skind):
-                    continue
-                self.base[(col, skind)] = tuple(pos[i:i + n_base])
-                i += n_base
-                nx = _POS_EXTRAS[tag]
-                self.skip[(col, skind)] = tuple(pos[i:i + nx])
-                i += nx
-            if i != len(pos):
-                raise NotImplementedError(
-                    f"ROW_INDEX positions for column {col}: consumed {i} "
-                    f"of {len(pos)} — stream layout differs from the "
-                    "writer conventions this seek path knows")
+                    f"({len(entries)} ROW_INDEX entries)")
+            layout = [(k, tag) for k, tag in _position_streams(
+                types[col]["kind"], self.encodings[col]["kind"],
+                self.has(col, PRESENT)) if self.has(col, k)]
+            first = _split_positions(entries[g0][0], layout, n_base, col)
+            for skind, (base, skips, _) in first.items():
+                self.base[(col, skind)] = base
+                self.skip[(col, skind)] = skips
+            if g1 >= len(entries):
+                continue
+            for skind, (base, skips, tag) in _split_positions(
+                    entries[g1][0], layout, n_base, col).items():
+                run = _RUN_MAX_BYTES[tag] if any(skips) else 0
+                self.stop[(col, skind)] = (base[0], sum(base[1:]) + run)
 
-    def _window(self, col: int, skind: int, need: int) -> bytes:
+    def _window(self, col: int, skind: int, need: int | None = None) -> bytes:
+        """Decompressed bytes from g0's position to g1's (see the class
+        doc); `need`, an upper bound on the bytes a raw stream's caller
+        reads from g0's position, caps it further."""
         off, ln = self.loc[(col, skind)]
         base = self.base[(col, skind)]
+        stop = self.stop.get((col, skind))
         if self.comp == COMP_NONE:
             start = off + base[0]
-            w = self.data[start:min(off + ln, start + need)]
+            end = off + ln if stop is None else min(off + ln, off + sum(stop))
+            if need is not None:
+                end = min(end, start + need)
+            w = self.data[start:end]
             self._count(len(w))
             return bytes(w)
         chunk_off, dskip = base
-        out = _decompress(self.data[off + chunk_off:off + ln], self.comp,
-                          limit=dskip + need)
+        out = _decompress(
+            self.data[off + chunk_off:off + ln], self.comp,
+            limit=None if need is None else dskip + need,
+            upto=None if stop is None else (stop[0] - chunk_off, stop[1]))
         self._count(len(out))
         return out[dskip:]
 
@@ -598,24 +703,22 @@ class _SeekCursor(_StripeCursor):
             return None
         by, bit = self.skip[(col, PRESENT)]
         sk = by * 8 + bit
-        w = self._window(col, PRESENT, (sk + n_rows) // 4 + 64)
-        return boolrle.decode_prefix(w, sk + n_rows)[sk:]
+        return boolrle.decode_prefix(self._window(col, PRESENT),
+                                     sk + n_rows)[sk:]
 
     def ints(self, col: int, kind: int, n: int, signed: bool) -> np.ndarray:
         (sk,) = self.skip[(col, kind)]
-        w = self._window(col, kind, 12 * (sk + n) + 4096)
-        return self._rle(col).decode_prefix(w, sk + n, signed=signed)[sk:]
+        return self._rle(col).decode_prefix(self._window(col, kind), sk + n,
+                                            signed=signed)[sk:]
 
     def bools(self, col: int, n: int) -> np.ndarray:
         by, bit = self.skip[(col, DATA)]
         sk = by * 8 + bit
-        w = self._window(col, DATA, (sk + n) // 4 + 64)
-        return boolrle.decode_prefix(w, sk + n)[sk:]
+        return boolrle.decode_prefix(self._window(col, DATA), sk + n)[sk:]
 
     def bytes_rle(self, col: int, n: int) -> np.ndarray:
         (sk,) = self.skip[(col, DATA)]
-        w = self._window(col, DATA, 2 * (sk + n) + 64)
-        return byterle.decode_prefix(w, sk + n)[sk:]
+        return byterle.decode_prefix(self._window(col, DATA), sk + n)[sk:]
 
     def raw(self, col: int, kind: int, nbytes: int) -> bytes:
         return self._window(col, kind, nbytes)
@@ -704,16 +807,6 @@ def _stats_eq_value(kind: int, value):
     return value
 
 
-def _row_group_stats(raw) -> list[dict]:
-    """ROW_INDEX stream bytes -> per-row-group ColumnStatistics dicts
-    (RowIndexEntry field 2; the positions parser ignores these)."""
-    out = []
-    for e in pb_fields(raw).get(1, []):
-        ef = pb_fields(e)
-        out.append(_parse_col_stats(ef[2][0]) if 2 in ef else {})
-    return out
-
-
 def _eq_keep_groups(cur: "_StripeCursor", col_id: int, kind: int, values,
                     h64s: list[int], n_rows: int,
                     stride: int) -> list[bool] | None:
@@ -726,9 +819,9 @@ def _eq_keep_groups(cur: "_StripeCursor", col_id: int, kind: int, values,
         return None
     stats = blooms = None
     if cur.has(col_id, ROW_INDEX):
-        stats = _row_group_stats(cur.stream(col_id, ROW_INDEX))
+        stats = [st for _, st in cur.row_index(col_id)]
     if cur.has(col_id, BLOOM_FILTER_UTF8):
-        blooms = _parse_bloom_index(cur.stream(col_id, BLOOM_FILTER_UTF8))
+        blooms = cur.blooms(col_id)
     if not stats and not blooms:
         return None
     svs = [_stats_eq_value(kind, v) for v in values]
@@ -801,7 +894,7 @@ def _decode_stripe_eq(data: bytes, stripe: dict, sf: dict, comp: int,
             g += 1
         rows = min(g * stride, n) - g0 * stride
         try:
-            cur = _SeekCursor(data, stripe, sf, comp, types, g0, metrics)
+            cur = _SeekCursor(data, stripe, sf, comp, types, g0, g, metrics)
             parts.append(_decode_column(cur, types, 0, rows, tz_base,
                                         include))
         except NotImplementedError:
@@ -827,12 +920,20 @@ def read_orc_eq(data: bytes, column: str, value,
     section), per-row-group statistics (ROW_INDEX entry field 2), and
     per-row-group bloom filters (BLOOM_FILTER_UTF8) — then the exact
     filter on the decoded groups. Files without indexes/blooms degrade to
-    whole-stripe decode + filter (still stripe-stats pruned). Pass a dict
-    as `metrics` to collect decompressed_bytes / groups_decoded (tests
-    assert a selective lookup touches ≪ the file's bytes). Reference has
-    stats-based seek/skip only (orc/stripe.go:369-388); the bloom level
-    exceeds it."""
-    ps, footer = parse_tail(data)
+    whole-stripe decode + filter (still stripe-stats pruned). NULL values
+    follow SQL: `= NULL` matches nothing and `IN (a, NULL)` matches the
+    `a` rows, so an all-NULL value returns the empty table without
+    reading a stripe. Reference has stats-based seek/skip only
+    (orc/stripe.go:369-388); the bloom level exceeds it.
+
+    Pass a dict as `metrics` to collect, summed over calls:
+    decompressed_bytes (stream bytes THIS call inflated — index, bloom and
+    data windows; an index served from the parse memo inflates nothing,
+    and the file tail and stripe footers are not counted), groups_total /
+    groups_decoded, and index_cache_hits / index_cache_misses (lookups of
+    the parse memo: tail, stripe stats, stripe footers, ROW_INDEX and
+    bloom streams)."""
+    ps, footer = parse_tail(data, metrics)
     types = footer["types"]
     root = types[0]
     if column not in root["field_names"]:
@@ -841,38 +942,35 @@ def read_orc_eq(data: bytes, column: str, value,
     kind = types[col_id]["kind"]
     values = list(value) if isinstance(value, (list, tuple, set, frozenset)) \
         else [value]
-    h64s = [_bloom_hash_value(kind, v) for v in values]
-    stride = footer["row_index_stride"]
+    values = [v for v in values if v is not None]
     include = _include_ids(types, columns)
     dec_include = include if include is None else include | {col_id}
-    svs = [_stats_eq_value(kind, v) for v in values]
-    stripe_stats = parse_stripe_stats(data)
-    batches = []
-    for si, stripe in enumerate(footer["stripes"]):
-        if stripe_stats and si < len(stripe_stats) \
-                and col_id < len(stripe_stats[si]) \
-                and not any(sv is None or _stats_can_match(
-                    stripe_stats[si][col_id], sv, sv) for sv in svs):
-            continue
-        foot_off = (stripe["offset"] + stripe["index_length"]
-                    + stripe["data_length"])
-        sf = parse_stripe_footer(_decompress(
-            data[foot_off:foot_off + stripe["footer_length"]],
-            ps["compression"]))
-        arr = _decode_stripe_eq(data, stripe, sf, ps["compression"], types,
-                                stride, col_id, values, h64s, dec_include,
-                                metrics)
-        if arr is not None:
-            batches.append(pa.RecordBatch.from_struct_array(arr))
     names, ids = root["field_names"], root["subtypes"]
     schema = pa.schema([(nm, _arrow_type(types, c))
                         for nm, c in zip(names, ids)
                         if dec_include is None or c in dec_include])
+    batches = []
+    if values:
+        h64s = [_bloom_hash_value(kind, v) for v in values]
+        svs = [_stats_eq_value(kind, v) for v in values]
+        stride = footer["row_index_stride"]
+        stripe_stats = parse_stripe_stats(data, metrics)
+        for si, stripe in enumerate(footer["stripes"]):
+            if stripe_stats and si < len(stripe_stats) \
+                    and col_id < len(stripe_stats[si]) \
+                    and not any(sv is None or _stats_can_match(
+                        stripe_stats[si][col_id], sv, sv) for sv in svs):
+                continue
+            sf = _stripe_footer(data, stripe, ps["compression"], metrics)
+            arr = _decode_stripe_eq(data, stripe, sf, ps["compression"],
+                                    types, stride, col_id, values, h64s,
+                                    dec_include, metrics)
+            if arr is not None:
+                batches.append(pa.RecordBatch.from_struct_array(arr))
     if not batches:
         tbl = schema.empty_table()
     else:
         tbl = pa.Table.from_batches(batches, schema=schema)
-        import pyarrow.compute as pc
         col_arr = tbl.column(column)
         if len(values) == 1:
             tbl = tbl.filter(pc.equal(col_arr, values[0]))
@@ -1172,11 +1270,7 @@ def read_orc(data: bytes, columns: list[str] | None = None,
     include = _include_ids(types, columns)
     batches = []
     for stripe in footer["stripes"]:
-        foot_off = (stripe["offset"] + stripe["index_length"]
-                    + stripe["data_length"])
-        sf = parse_stripe_footer(_decompress(
-            data[foot_off:foot_off + stripe["footer_length"]],
-            ps["compression"]))
+        sf = _stripe_footer(data, stripe, ps["compression"])
         tz_base = _tz_base_seconds(sf["timezone"])
         cur = _StripeCursor(data, stripe, sf, ps["compression"],
                             reader_tz=reader_timezone)
@@ -1204,9 +1298,10 @@ def read_orc_rows(data: bytes, lo: int, hi: int,
     Files without an index (including this repo's own write_orc output,
     which emits rowIndexStride=0) fall back to whole-stripe decode +
     slice — still stripe-pruned by the range. Pass a dict as `metrics` to
-    collect 'decompressed_bytes' (tests assert a point read touches ≪ the
-    stripe's bytes)."""
-    ps, footer = parse_tail(data)
+    collect decompressed_bytes and index_cache_hits/misses, counted as in
+    read_orc_eq (tests assert a point read touches ≪ the stripe's
+    bytes)."""
+    ps, footer = parse_tail(data, metrics)
     types = footer["types"]
     if types[0]["kind"] != T_STRUCT:
         raise ValueError("ORC root type must be a struct")
@@ -1221,11 +1316,7 @@ def read_orc_rows(data: bytes, lo: int, hi: int,
         row0 += n
         if s_lo >= s_hi:
             continue
-        foot_off = (stripe["offset"] + stripe["index_length"]
-                    + stripe["data_length"])
-        sf = parse_stripe_footer(_decompress(
-            data[foot_off:foot_off + stripe["footer_length"]],
-            ps["compression"]))
+        sf = _stripe_footer(data, stripe, ps["compression"], metrics)
         tz_base = _tz_base_seconds(sf["timezone"])
         # seek only when every column that has data streams also has a
         # ROW_INDEX stream (all-or-nothing: a positionless column would
@@ -1239,7 +1330,7 @@ def read_orc_rows(data: bytes, lo: int, hi: int,
             g0 = s_lo // stride
             start = g0 * stride
             cur = _SeekCursor(data, stripe, sf, ps["compression"], types,
-                              g0, metrics)
+                              g0, -(-s_hi // stride), metrics)
             root = _decode_column(cur, types, 0, s_hi - start, tz_base,
                                   include)
             root = root.slice(s_lo - start, s_hi - s_lo)
@@ -1900,6 +1991,14 @@ def _nullable_cols(arr, col_id: int, node: dict, types: list,
             _nullable_cols(children[i], sub, types[sub], types, out)
 
 
+def _compress_all(raws: list, comp: str, block: int) -> list[bytes]:
+    """chunk.compress(raw, comp, block, 6) of every stream, in order —
+    spread over the cores this context may use (_fanout; zlib releases
+    the GIL), with bytes identical to a serial loop."""
+    return _fanout.fan_out(
+        lambda raw: chunk.compress(raw, comp, block, 6), raws)
+
+
 def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
                    tzctx: tuple, stride: int,
                    bloom_ids: dict | None = None,
@@ -1976,9 +2075,8 @@ def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
     # compress each segment separately and record its stream-local offset;
     # bit streams (numpy payloads) are packed continuously with cuts at
     # each group's byte floor and a recorded residual bit skip
-    packed: dict = {}
-    offsets: dict = {}
     extras: dict = {}  # key -> per-group (run_skip, bit_skip) for bools
+    raws: list = []
     for key in keys:
         parts = [next(b for c, k, b in s if (c, k) == key)
                  for s in seg_streams]
@@ -1992,21 +2090,26 @@ def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
             parts = [byterle.encode(pk_bytes[cuts[g]:cuts[g + 1]])
                      for g in range(len(parts))]
             extras[key] = [(0, int(b % 8)) for b in starts]
-        segs, offs, pos = [], [], 0
-        for raw in parts:
-            pk = chunk.compress(raw, comp, block, 6)
+        raws += parts
+    segs = _compress_all(raws, comp, block)
+    n_seg = len(seg_streams)
+    packed: dict = {}
+    offsets: dict = {}
+    for i, key in enumerate(keys):
+        key_segs = segs[i * n_seg:(i + 1) * n_seg]
+        offs, pos = [], 0
+        for pk in key_segs:
             offs.append(pos)
             pos += len(pk)
-            segs.append(pk)
-        packed[key] = b"".join(segs)
+        packed[key] = b"".join(key_segs)
         offsets[key] = offs
-    index_streams = []
+    index_raws = []
     for cid in range(len(types)):
         layout = _position_streams(
             types[cid]["kind"], encodings.get(cid, (ENC_DIRECT, 0))[0],
             (cid, PRESENT) in packed)
         entries = bytearray()
-        for gi in range(len(seg_streams)):
+        for gi in range(n_seg):
             posv: list[int] = []
             for skind, tag in layout:
                 if (cid, skind) not in packed:
@@ -2021,11 +2124,13 @@ def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
             entry += _pb_bytes(2, _encode_col_stats(
                 types[cid]["kind"], seg_stats[gi].get(cid, {"n": 0})))
             entries += _pb_bytes(1, entry)
-        index_streams.append((cid, ROW_INDEX,
-                              chunk.compress(bytes(entries), comp, block, 6)))
+        index_raws.append((cid, ROW_INDEX, bytes(entries)))
         if cid in seg_blooms:  # BloomFilterIndex right after its ROW_INDEX
-            index_streams.append((cid, BLOOM_FILTER_UTF8, chunk.compress(
-                b"".join(seg_blooms[cid]), comp, block, 6)))
+            index_raws.append((cid, BLOOM_FILTER_UTF8,
+                               b"".join(seg_blooms[cid])))
+    index_streams = [(c, k, pk) for (c, k, _), pk in zip(
+        index_raws, _compress_all([r for _, _, r in index_raws], comp,
+                                  block))]
     data_streams = [(c, k, packed[(c, k)]) for c, k in keys]
     stripe_stats = {cid: _merge_col_stats(
         types[cid]["kind"], [st.get(cid, {"n": 0}) for st in seg_stats])
@@ -2117,8 +2222,9 @@ def write_orc(table: pa.Table, compression: str = "zlib",
             _write_column_streams(struct_arr, 0, types[0], streams,
                                   encodings, types, tzctx, col_stats)
             stripe_stats.append(col_stats)
-            for col_id, skind, raw in streams:
-                packed = chunk.compress(raw, compression, block_size, 6)
+            packs = _compress_all([raw for _, _, raw in streams],
+                                  compression, block_size)
+            for (col_id, skind, _), packed in zip(streams, packs):
                 body += packed
                 stream_entries.append((col_id, skind, len(packed)))
                 data_len += len(packed)
@@ -2153,8 +2259,6 @@ def write_orc(table: pa.Table, compression: str = "zlib",
             ss += _pb_bytes(1, _encode_col_stats(
                 types[cid]["kind"], cs.get(cid, {"n": 0})))
         meta += _pb_bytes(1, bytes(ss))
-    meta_packed = chunk.compress(bytes(meta), compression, block_size, 6)
-    body += meta_packed
     footer = bytearray()
     footer += _pb_int(1, len(MAGIC))          # headerLength
     footer += _pb_int(2, content_len)          # contentLength
@@ -2172,7 +2276,9 @@ def write_orc(table: pa.Table, compression: str = "zlib",
             _merge_col_stats(types[cid]["kind"],
                              [cs.get(cid, {"n": 0}) for cs in stripe_stats])))
     footer += _pb_int(8, row_index_stride)     # rowIndexStride (0 = none)
-    footer_packed = chunk.compress(bytes(footer), compression, block_size, 6)
+    meta_packed, footer_packed = _compress_all(
+        [bytes(meta), bytes(footer)], compression, block_size)
+    body += meta_packed
     body += footer_packed
     ps = (_pb_int(1, len(footer_packed))
           + _pb_int(2, COMP_ZLIB if compression == chunk.ZLIB else COMP_NONE)
@@ -2281,14 +2387,15 @@ def _read_tail_from_file(f) -> tuple[dict, dict, list | None]:
         f.seek(size - need - 1)
         buf = f.read(need + 1)
     foot_end = len(buf) - 1 - ps_len
-    footer = parse_footer(_decompress(
-        buf[foot_end - ps["footer_length"]:foot_end], ps["compression"]))
+    footer = _parsed(parse_footer,
+                     buf[foot_end - ps["footer_length"]:foot_end],
+                     ps["compression"])
     stats = None
     if ps["metadata_length"]:
         meta_start = foot_end - ps["footer_length"] - ps["metadata_length"]
-        stats = _parse_stats_block(_decompress(
-            buf[meta_start:meta_start + ps["metadata_length"]],
-            ps["compression"]))
+        stats = _parsed(_parse_stats_block,
+                        buf[meta_start:meta_start + ps["metadata_length"]],
+                        ps["compression"])
     return ps, footer, stats
 
 
@@ -2462,14 +2569,11 @@ def read_orc_stripes(spark, path_glob: str,
                 with open(r["path"], "rb") as f:
                     f.seek(r["offset"])
                     data = f.read(r["total"])
-                foot_off = r["index_length"] + r["data_length"]
-                sf = parse_stripe_footer(_decompress(
-                    data[foot_off:foot_off + r["footer_length"]],
-                    r["compression"]))
                 local = {"offset": 0, "index_length": r["index_length"],
                          "data_length": r["data_length"],
                          "footer_length": r["footer_length"],
                          "n_rows": r["n_rows"]}
+                sf = _stripe_footer(data, local, r["compression"])
                 tz_base = _tz_base_seconds(sf["timezone"])
                 if eq_id is not None and r["stride"]:
                     # _decode_stripe_eq degrades to whole-stripe decode
@@ -2528,19 +2632,21 @@ def _parse_col_stats(cs) -> dict:
     return st
 
 
-def parse_stripe_stats(data: bytes) -> list[list[dict]] | None:
+def parse_stripe_stats(data: bytes,
+                       metrics: dict | None = None) -> list[list[dict]] | None:
     """Per-stripe per-column statistics from the file METADATA section
     (between content and footer; Metadata{repeated StripeStatistics
-    {repeated ColumnStatistics}}). None when the writer omitted it."""
+    {repeated ColumnStatistics}}). None when the writer omitted it.
+    Memoized: the result is shared and must not be mutated."""
     ps_len = data[-1]
-    ps = parse_postscript(data[-1 - ps_len:-1])
+    ps = _parsed(parse_postscript, data[-1 - ps_len:-1], COMP_NONE, metrics)
     if not ps["metadata_length"]:
         return None
     foot_end = len(data) - 1 - ps_len
     meta_start = foot_end - ps["footer_length"] - ps["metadata_length"]
-    return _parse_stats_block(_decompress(
-        data[meta_start:meta_start + ps["metadata_length"]],
-        ps["compression"]))
+    return _parsed(_parse_stats_block,
+                   data[meta_start:meta_start + ps["metadata_length"]],
+                   ps["compression"], metrics)
 
 
 def _parse_stats_block(raw: bytes) -> list[list[dict]]:

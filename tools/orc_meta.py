@@ -72,10 +72,7 @@ def main() -> None:
               f"index={s['index_length']} data={s['data_length']} "
               f"footer={s['footer_length']}")
         if args.streams:
-            foot_off = (s["offset"] + s["index_length"] + s["data_length"])
-            sf = on.parse_stripe_footer(on._decompress(
-                data[foot_off:foot_off + s["footer_length"]],
-                ps["compression"]))
+            sf = on._stripe_footer(data, s, ps["compression"])
             for st in sf["streams"]:
                 print(f"    col {st['column']:>3} "
                       f"{STREAM_NAMES.get(st['kind'], st['kind']):<10} "
@@ -112,25 +109,23 @@ def main() -> None:
             if not s["index_length"]:
                 print(f"  stripe {i}: no ROW_INDEX streams")
                 continue
-            foot_off = (s["offset"] + s["index_length"] + s["data_length"])
-            sf = on.parse_stripe_footer(on._decompress(
-                data[foot_off:foot_off + s["footer_length"]],
-                ps["compression"]))
+            # the reader's own memoized parses, so the dump cannot drift
+            # from what the seek and pruning paths see
+            sf = on._stripe_footer(data, s, ps["compression"])
             cur = on._StripeCursor(data, s, sf, ps["compression"])
             print(f"  stripe {i} row index "
                   f"(stride {footer['row_index_stride']}):")
             for cid in range(len(types)):
                 if not cur.has(cid, on.ROW_INDEX):
                     continue
-                entries = on._parse_row_index(cur.stream(cid, on.ROW_INDEX))
-                pv = entries[:3]
+                entries = cur.row_index(cid)
+                pv = [pos for pos, _ in entries[:3]]
                 print(f"    col {cid:>3}: {len(entries)} entries, "
                       f"positions[0:3]={pv}")
             for cid in range(len(types)):
                 if not cur.has(cid, on.BLOOM_FILTER_UTF8):
                     continue
-                blooms = on._parse_bloom_index(
-                    cur.stream(cid, on.BLOOM_FILTER_UTF8))
+                blooms = cur.blooms(cid)
                 if blooms:
                     import numpy as _np
                     k0, w0 = blooms[0]
