@@ -32,6 +32,7 @@ writer emits NONE/ZLIB (the reference's parity codec).
 
 from __future__ import annotations
 
+import sys
 import threading
 import zlib
 from collections import OrderedDict
@@ -251,11 +252,16 @@ def _decompress(raw, kind: int, limit: int | None = None,
 # _parsed(), keyed by (parser, compression kind, the exact raw bytes): a
 # hit is correct whichever file the bytes came from, and skips the inflate
 # as well as the parse. Results are shared between calls and threads:
-# callers must treat them as immutable.
+# callers must treat them as immutable (bloom bitsets are read-only
+# arrays, row-index positions tuples).
 
-INDEX_CACHE_BYTES = 4 << 20  # bound on the raw key bytes the memo holds
+# bound on the memo's estimated footprint: each entry is charged its key
+# bytes plus an upper estimate of its parsed value (_footprint), which is
+# what the memo keeps alive — a parse can be 40x its compressed bytes
+INDEX_CACHE_BYTES = 4 << 20
+_ENTRY_OVERHEAD = 256  # key tuple, (value, charge) pair, OrderedDict node
 
-_memo: OrderedDict = OrderedDict()
+_memo: OrderedDict = OrderedDict()  # key -> (parsed value, bytes charged)
 _memo_bytes = 0
 _memo_lock = threading.Lock()
 
@@ -265,33 +271,58 @@ def _bump(metrics: dict | None, key: str, n: int = 1) -> None:
         metrics[key] = metrics.get(key, 0) + n
 
 
+_LEAF_TYPES = frozenset((int, float, bool, str, bytes, type(None)))
+
+
+def _footprint(obj) -> int:
+    """Upper estimate of the bytes `obj` holds (containers walked; shared
+    small ints and interned keys counted as if owned)."""
+    if isinstance(obj, (_RowIndex, _BloomIndex)):
+        return obj.footprint()
+    n = sys.getsizeof(obj)
+    if isinstance(obj, np.ndarray):
+        if isinstance(obj.base, bytes):  # np.frombuffer view
+            n += sys.getsizeof(obj.base)
+        return n
+    if isinstance(obj, dict):
+        obj = (*obj, *obj.values())
+    elif not isinstance(obj, (list, tuple)):
+        return n
+    leaves = [v for v in obj if type(v) in _LEAF_TYPES]
+    n += sum(map(sys.getsizeof, leaves))
+    if len(leaves) < len(obj):
+        n += sum(_footprint(v) for v in obj if type(v) not in _LEAF_TYPES)
+    return n
+
+
 def _parsed(parse, raw, comp: int, metrics: dict | None = None,
             count_inflated: bool = False):
-    """parse(_decompress(raw, comp)), memoized (LRU by key bytes). Counts
+    """parse(_decompress(raw, comp)), memoized (LRU, bounded by
+    INDEX_CACHE_BYTES of estimated footprint). Counts
     index_cache_hits/misses in `metrics`, and with `count_inflated` adds
     a miss's inflated bytes to decompressed_bytes."""
     global _memo_bytes
     key = (parse, comp, bytes(raw))
     with _memo_lock:
-        out = _memo.get(key)
-        if out is not None:
+        hit = _memo.get(key)
+        if hit is not None:
             _memo.move_to_end(key)
-    if out is not None:
+    if hit is not None:
         _bump(metrics, "index_cache_hits")
-        return out
+        return hit[0]
     _bump(metrics, "index_cache_misses")
     plain = _decompress(raw, comp)
     if count_inflated:
         _bump(metrics, "decompressed_bytes", len(plain))
     out = parse(plain)
-    size = len(key[2])
+    size = sys.getsizeof(key[2]) + _footprint(out) + _ENTRY_OVERHEAD
     with _memo_lock:
         if size <= INDEX_CACHE_BYTES and key not in _memo:
-            _memo[key] = out
+            _memo[key] = (out, size)
             _memo_bytes += size
             while _memo_bytes > INDEX_CACHE_BYTES:
-                old, _ = _memo.popitem(last=False)
-                _memo_bytes -= len(old[2])
+                _, (_, old) = _memo.popitem(last=False)
+                _memo_bytes -= old
     return out
 
 
@@ -505,13 +536,13 @@ class _StripeCursor:
         return _parsed(parse, self.data[off:off + ln], self.comp,
                        self.metrics, count_inflated=True)
 
-    def row_index(self, col: int) -> list[tuple[list[int], dict]]:
-        """The column's ROW_INDEX, parsed once (see _parse_row_index)."""
-        return self._index_stream(_parse_row_index, col, ROW_INDEX)
+    def row_index(self, col: int) -> "_RowIndex":
+        """The column's ROW_INDEX, walked once (see _RowIndex)."""
+        return self._index_stream(_RowIndex, col, ROW_INDEX)
 
-    def blooms(self, col: int) -> list[tuple[int, np.ndarray]]:
+    def blooms(self, col: int) -> "_BloomIndex":
         """The column's BLOOM_FILTER_UTF8 index, parsed once."""
-        return self._index_stream(_parse_bloom_index, col, BLOOM_FILTER_UTF8)
+        return self._index_stream(_BloomIndex, col, BLOOM_FILTER_UTF8)
 
     def _rle(self, col: int):
         """Integer RLE generation for this column: pre-0.12 writers mark
@@ -563,17 +594,82 @@ _POS_RLE, _POS_BYTE, _POS_BOOL, _POS_RAW = range(4)
 _POS_EXTRAS = {_POS_RLE: 1, _POS_BYTE: 1, _POS_BOOL: 2, _POS_RAW: 0}
 
 
-def _parse_row_index(raw) -> list[tuple[list[int], dict]]:
-    """ROW_INDEX stream bytes -> per row-group entry (positions, statistics):
-    the one parse both the seek path (positions) and row-group pruning
-    (RowIndexEntry field 2 stats) read. Go through _StripeCursor.row_index
-    so each stream is parsed once."""
-    out = []
-    for e in pb_fields(raw).get(1, []):
-        ef = pb_fields(e)
-        out.append((_fpacked_u32(ef, 1),
-                    _parse_col_stats(ef[2][0]) if 2 in ef else {}))
-    return out
+class _RowIndex:
+    """One column's ROW_INDEX as the memo holds it: a RowIndexEntry per
+    row group, located by one walk over the stream's length prefixes. An
+    entry's positions (for the seek path) and the groups' statistics
+    (RowIndexEntry field 2, for row-group pruning) are decoded on first
+    use and kept: a cold seek decodes the two entries it needs, not every
+    group, and a warm one decodes nothing. A first use racing on two
+    threads may decode twice, never differently. Go through
+    _StripeCursor.row_index so each stream is walked once."""
+
+    __slots__ = ("_raw", "_bounds", "_pos", "_stats")
+
+    def __init__(self, raw: bytes):
+        bounds: list[int] = []  # entry g spans raw[bounds[2g]:bounds[2g+1]]
+        off, end = 0, len(raw)
+        while off < end:
+            if raw[off] == 0x0A and raw[off + 1] < 0x80:  # field 1, short
+                ln, off = raw[off + 1], off + 2
+            else:
+                tag, off = _uvarint(raw, off)
+                wt = tag & 7
+                if wt == 0:
+                    _, off = _uvarint(raw, off)
+                    continue
+                if wt in (1, 5):
+                    off += 8 if wt == 1 else 4
+                    continue
+                if wt != 2:
+                    raise ValueError(f"unsupported proto wire type {wt}")
+                ln, off = _uvarint(raw, off)
+                if tag >> 3 != 1:
+                    off += ln
+                    continue
+            bounds += (off, off + ln)
+            off += ln
+        self._raw = raw
+        self._bounds = bounds
+        self._pos: list = [None] * (len(bounds) // 2)
+        self._stats: tuple[dict, ...] | None = None
+
+    def __len__(self) -> int:
+        return len(self._pos)
+
+    def _entry(self, g: int) -> dict[int, list]:
+        lo, hi = self._bounds[2 * g:2 * g + 2]
+        return pb_fields(self._raw[lo:hi])
+
+    def positions(self, g: int) -> tuple[int, ...]:
+        pos = self._pos[g]
+        if pos is None:
+            pos = self._pos[g] = tuple(_fpacked_u32(self._entry(g), 1))
+        return pos
+
+    def stats(self) -> tuple[dict, ...]:
+        if self._stats is None:
+            self._stats = tuple(
+                _parse_col_stats(ef[2][0]) if 2 in ef else {}
+                for ef in map(self._entry, range(len(self))))
+        return self._stats
+
+    def footprint(self) -> int:
+        """Upper estimate of the bytes held once every entry is decoded:
+        _ROW_ENTRY_BYTES per entry, and _ROW_BYTE_BYTES per stream byte
+        for the ints and strings decoded from it."""
+        return (sys.getsizeof(self._raw) + sys.getsizeof(self._bounds)
+                + sys.getsizeof(self._pos) + len(self) * _ROW_ENTRY_BYTES
+                + len(self._raw) * _ROW_BYTE_BYTES)
+
+
+# one decoded entry's fixed objects: its two bound ints (2 x 28), positions
+# tuple header (40), statistics dict (184) and its slot in the stats tuple
+_ROW_ENTRY_BYTES = 288
+# bytes an object decoded from one stream byte can cost at most: an int
+# >256 takes a 2-byte varint and 28 bytes plus an 8-byte tuple slot; a
+# string's 49-byte header comes with its tag and length bytes
+_ROW_BYTE_BYTES = 18
 
 
 def _position_streams(kind: int, enc: int,
@@ -614,7 +710,7 @@ _RUN_MAX_BYTES = {_POS_RLE: 4400, _POS_BYTE: 130, _POS_BOOL: 130,
                   _POS_RAW: 0}
 
 
-def _split_positions(pos: list[int], layout: list[tuple[int, int]],
+def _split_positions(pos: tuple[int, ...], layout: list[tuple[int, int]],
                      n_base: int, col: int) -> dict:
     """One RowIndexEntry's positions -> {stream kind: (base, skips, tag)}
     for the streams in `layout` (those the stripe actually has)."""
@@ -663,14 +759,15 @@ class _SeekCursor(_StripeCursor):
             layout = [(k, tag) for k, tag in _position_streams(
                 types[col]["kind"], self.encodings[col]["kind"],
                 self.has(col, PRESENT)) if self.has(col, k)]
-            first = _split_positions(entries[g0][0], layout, n_base, col)
+            first = _split_positions(entries.positions(g0), layout, n_base,
+                                     col)
             for skind, (base, skips, _) in first.items():
                 self.base[(col, skind)] = base
                 self.skip[(col, skind)] = skips
             if g1 >= len(entries):
                 continue
             for skind, (base, skips, tag) in _split_positions(
-                    entries[g1][0], layout, n_base, col).items():
+                    entries.positions(g1), layout, n_base, col).items():
                 run = _RUN_MAX_BYTES[tag] if any(skips) else 0
                 self.stop[(col, skind)] = (base[0], sum(base[1:]) + run)
 
@@ -737,20 +834,42 @@ _BLOOM_STR_KINDS = frozenset((T_STRING, T_VARCHAR, T_CHAR, T_BINARY))
 _BLOOM_LONG_KINDS = frozenset((T_BYTE, T_SHORT, T_INT, T_LONG, T_DATE))
 
 
-def _parse_bloom_index(raw) -> list[tuple[int, np.ndarray]]:
-    """BLOOM_FILTER_UTF8 stream bytes -> per-row-group (k, uint64 words)."""
-    out = []
-    for b in pb_fields(raw).get(1, []):
-        bf = pb_fields(b)
-        k = _fint(bf, 1, 0)
-        if 3 in bf:
-            words = np.frombuffer(bytes(bf[3][0]), dtype="<u8")
-        elif 2 in bf:  # legacy repeated fixed64, same LE word layout
-            words = np.frombuffer(b"".join(bf[2]), dtype="<u8")
-        else:
-            words = np.empty(0, dtype=np.uint64)
-        out.append((k, words.astype(np.uint64, copy=False)))
-    return out
+class _BloomIndex:
+    """BLOOM_FILTER_UTF8 stream bytes -> per-row-group (k, uint64 words),
+    indexed by group; the words are read-only (the memo shares them)."""
+
+    __slots__ = ("_groups", "_bytes")
+
+    def __init__(self, raw: bytes):
+        groups = []
+        held = 0
+        for b in pb_fields(raw).get(1, []):
+            bf = pb_fields(b)
+            k = _fint(bf, 1, 0)
+            if 3 in bf:
+                words = np.frombuffer(bytes(bf[3][0]), dtype="<u8")
+            elif 2 in bf:  # legacy repeated fixed64, same LE word layout
+                words = np.frombuffer(b"".join(bf[2]), dtype="<u8")
+            else:
+                words = np.empty(0, dtype=np.uint64)
+            words = words.astype(np.uint64, copy=False)
+            words.flags.writeable = False
+            groups.append((k, words))
+            held += _footprint(words) + _BLOOM_GROUP_BYTES
+        self._groups = tuple(groups)
+        self._bytes = held + sys.getsizeof(self._groups)
+
+    def __len__(self) -> int:
+        return len(self._groups)
+
+    def __getitem__(self, g: int) -> tuple[int, np.ndarray]:
+        return self._groups[g]
+
+    def footprint(self) -> int:
+        return self._bytes
+
+
+_BLOOM_GROUP_BYTES = 96  # the (k, words) pair (56) and k (<= 40)
 
 
 def _bloom_hash_value(kind: int, value) -> int:
@@ -819,7 +938,7 @@ def _eq_keep_groups(cur: "_StripeCursor", col_id: int, kind: int, values,
         return None
     stats = blooms = None
     if cur.has(col_id, ROW_INDEX):
-        stats = [st for _, st in cur.row_index(col_id)]
+        stats = cur.row_index(col_id).stats()
     if cur.has(col_id, BLOOM_FILTER_UTF8):
         blooms = cur.blooms(col_id)
     if not stats and not blooms:

@@ -86,7 +86,7 @@ def _first_stripe_blooms(data, col_id):
     off = st["offset"]
     for s in sf["streams"]:
         if s["kind"] == on.BLOOM_FILTER_UTF8 and s["column"] == col_id:
-            return on._parse_bloom_index(on._decompress(
+            return on._BloomIndex(on._decompress(
                 data[off:off + s["length"]], ps["compression"]))
         off += s["length"]
     raise AssertionError(f"no bloom stream for column {col_id}")

@@ -251,7 +251,11 @@ def test_memo_sound_for_files_sharing_metadata_bytes(fresh_memo):
             assert got.equals(want), key
 
 
-def test_memo_evicts_by_key_bytes(fresh_memo, monkeypatch):
+def _charged() -> int:
+    return sum(size for _, size in on._memo.values())
+
+
+def test_memo_evicts_by_footprint(fresh_memo, monkeypatch):
     files = [on.write_orc(_pinned_table().slice(i * 100, 1500),
                           row_index_stride=300, block_size=4096)
              for i in range(4)]
@@ -263,7 +267,7 @@ def test_memo_evicts_by_key_bytes(fresh_memo, monkeypatch):
     for f in files[1:]:
         on.read_orc_rows(f, 0, 1500)
         assert on._memo_bytes <= on.INDEX_CACHE_BYTES
-        assert on._memo_bytes == sum(len(k[2]) for k in on._memo)
+        assert on._memo_bytes == _charged()
     m = {}
     on.read_orc_rows(files[0], 0, 1500, metrics=m)  # evicted: parsed anew
     assert m.get("index_cache_misses", 0) > 0
@@ -309,7 +313,7 @@ def test_memo_eight_threads_agree_with_serial(fresh_memo, monkeypatch):
     assert not errs and len(got) == 8 * len(keys)
     for k, tbl in got:
         assert tbl.equals(serial[k]), k
-    assert on._memo_bytes == sum(len(key[2]) for key in on._memo)
+    assert on._memo_bytes == _charged()
 
 
 def test_point_reads_report_index_cache(fresh_memo):
@@ -330,6 +334,86 @@ def test_point_reads_report_index_cache(fresh_memo):
     rows: dict = {}
     on.read_orc_rows(data, 10, 20, metrics=rows)
     assert rows["index_cache_hits"] > 0
+
+
+def _sparse_bloom_file(tag: str) -> bytes:
+    """zlib, one key per 1000-row group: each group's bloom bitset is
+    nearly all zero bits, so its stream inflates many times over."""
+    n = 20_000
+    t = pa.table({"k": pa.array([f"{tag}{i // 1000:04d}" for i in range(n)]),
+                  "v": pa.array(np.arange(n, dtype=np.int64))})
+    return on.write_orc(t, compression="zlib", row_index_stride=1000,
+                        bloom_columns=("k",))
+
+
+def _fill_row_indexes() -> None:
+    for value, _ in list(on._memo.values()):
+        if isinstance(value, on._RowIndex):
+            value.stats()
+            for g in range(len(value)):
+                value.positions(g)
+
+
+def test_memo_charges_what_it_holds(fresh_memo):
+    """Each entry is charged at least the memory it keeps alive (measured
+    by tracemalloc, row indexes fully decoded), so INDEX_CACHE_BYTES bounds
+    memory, not key bytes."""
+    import gc
+    import tracemalloc
+
+    data = _sparse_bloom_file("k")
+    on.read_orc_eq(_sparse_bloom_file("w"), "k", "w0003")  # imports, caches
+    on._memo.clear()
+    on._memo_bytes = 0
+    gc.collect()
+    tracemalloc.start()
+    try:
+        before = tracemalloc.get_traced_memory()[0]
+        m: dict = {}
+        for key in ("k0003", "k0017", "absent"):
+            on.read_orc_eq(data, "k", key, metrics=m)
+        on.read_orc_rows(data, 0, 20_000)
+        _fill_row_indexes()
+        gc.collect()
+        held = tracemalloc.get_traced_memory()[0] - before
+    finally:
+        tracemalloc.stop()
+    (bloom_key, blooms), = [(k, v) for k, (v, _) in on._memo.items()
+                            if isinstance(v, on._BloomIndex)]
+    # the bloom index is the big inflation: far more bitset than key bytes
+    assert sum(blooms[g][1].nbytes for g in range(len(blooms))) \
+        > 20 * len(bloom_key[2])
+    assert on._memo_bytes == _charged() <= on.INDEX_CACHE_BYTES
+    assert held <= on._memo_bytes <= 4 * held, (held, on._memo_bytes)
+
+
+def test_memo_values_are_frozen(fresh_memo):
+    data = _sparse_bloom_file("k")
+    ps, footer = on.parse_tail(data)
+    s = footer["stripes"][0]
+    sf = on._stripe_footer(data, s, ps["compression"])
+    cur = on._StripeCursor(data, s, sf, ps["compression"])
+    blooms = cur.blooms(1)
+    with pytest.raises(ValueError, match="read-only"):
+        blooms[0][1][0] = 0
+    ri = cur.row_index(1)
+    assert isinstance(ri.positions(0), tuple)
+    assert isinstance(ri.stats(), tuple)
+
+
+def test_cold_seek_decodes_only_its_entries(fresh_memo):
+    """A cold read_orc_rows decodes the positions of the groups it bounds
+    (g0 and g1) and no statistics; read_orc_eq adds the key column's."""
+    data = _sparse_bloom_file("k")
+    on.read_orc_rows(data, 5_500, 5_600)
+    rows = [v for v, _ in on._memo.values() if isinstance(v, on._RowIndex)]
+    assert len(rows) == 3  # struct root, k, v
+    for ri in rows:
+        assert [g for g in range(len(ri)) if ri._pos[g] is not None] \
+            == [5, 6]
+        assert ri._stats is None
+    on.read_orc_eq(data, "k", "k0012")
+    assert sum(ri._stats is not None for ri in rows) == 1
 
 
 # --------------------------------------------- foreign writers: exact windows

@@ -1115,12 +1115,13 @@ def test_row_index_parse_positions_and_stats():
                 for e in on.pb_fields(raw).get(1, [])]
         entries = cur.row_index(c)
         assert len(entries) == -(-s["n_rows"] // 300)
-        assert [pos for pos, _ in entries] == want
+        assert [list(entries.positions(g))
+                for g in range(len(entries))] == want
         assert cur.row_index(c) is entries
     root = footer["types"][0]
     turn = root["subtypes"][root["field_names"].index("turn_idx")]
-    assert sum(st["n"] for _, st in cur.row_index(turn)) == s["n_rows"]
-    assert any(cur.row_index(c)[1][0] for c in cols)  # leaf positions
+    assert sum(st["n"] for st in cur.row_index(turn).stats()) == s["n_rows"]
+    assert any(cur.row_index(c).positions(1) for c in cols)  # leaf pos
     g = len(entries)
     with pytest.raises(ValueError, match=f"row group {g} out of range"):
         on._SeekCursor(data, s, sf, ps["compression"], footer["types"], g,

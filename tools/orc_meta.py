@@ -119,7 +119,8 @@ def main() -> None:
                 if not cur.has(cid, on.ROW_INDEX):
                     continue
                 entries = cur.row_index(cid)
-                pv = [pos for pos, _ in entries[:3]]
+                pv = [list(entries.positions(g))
+                      for g in range(min(3, len(entries)))]
                 print(f"    col {cid:>3}: {len(entries)} entries, "
                       f"positions[0:3]={pv}")
             for cid in range(len(types)):
