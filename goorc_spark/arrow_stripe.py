@@ -103,32 +103,24 @@ def _valid_mask(arr: pa.Array) -> np.ndarray | None:
 
 def _list_parts(vals: pa.Array) -> tuple[np.ndarray, list[pa.Array]]:
     """(lengths, [child arrays]) for a no-null ListArray/MapArray. Offsets
-    are logical (windowed) while .values/.keys/.items are physical, so the
-    children are gathered when the offsets aren't already dense."""
-    is_map = pa.types.is_map(vals.type)
+    are logical (windowed) while .values/.keys/.items are physical, and
+    the rows' children are the contiguous range [offsets[0], offsets[-1]),
+    so each child is a zero-copy slice of that window."""
+    physical = [vals.keys, vals.items] if pa.types.is_map(vals.type) \
+        else [vals.values]
     if len(vals) == 0:
-        empty_children = ([vals.type.key_type, vals.type.item_type]
-                          if is_map else [vals.type.value_type])
-        return (np.empty(0, np.uint64),
-                [pa.array([], t) for t in empty_children])
+        return np.empty(0, np.uint64), [p.slice(0, 0) for p in physical]
     off = np.asarray(vals.offsets).astype(np.int64)
-    lengths = np.diff(off)
-    physical = [vals.keys, vals.items] if is_map else [vals.values]
-    dense = off[0] == 0 and off[-1] == len(physical[0])
-    if not dense:
-        total = int(lengths.sum())
-        starts = off[:-1]
-        ends_excl = np.cumsum(lengths)
-        intra = np.arange(total, dtype=np.int64) \
-            - np.repeat(ends_excl - lengths, lengths)
-        child_idx = pa.array(np.repeat(starts, lengths) + intra)
-        physical = [p.take(child_idx) for p in physical]
-    return lengths.astype(np.uint64), physical
+    lo, hi = int(off[0]), int(off[-1])
+    return np.diff(off).astype(np.uint64), \
+        [p.slice(lo, hi - lo) for p in physical]
 
 
 def _varwidth_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     """(contents uint8, lengths) from a string/binary array (either offset
     width) with no nulls — zero-copy from the Arrow buffers."""
+    if len(arr) == 0:
+        return np.empty(0, np.uint8), np.empty(0, np.uint64)
     if pa.types.is_string(arr.type) or pa.types.is_binary(arr.type):
         odt, osz = np.int32, 4
     else:
@@ -830,6 +822,29 @@ def _child_offsets(lengths: np.ndarray) -> tuple[np.ndarray, bool]:
     return offsets64, bool(offsets64[-1] >= (1 << 31))
 
 
+def _list_array(lengths: np.ndarray, is_map: bool, children,
+                what: str) -> pa.Array:
+    """ListArray (LargeListArray past 2^31 children) or MapArray over
+    per-row `lengths`; `children(n)` decodes the n child elements (one
+    array for a list, keys and items for a map). Arrow has no LargeMap, so
+    a map reaching MAP_OFFSET_LIMIT children raises before decoding them."""
+    offsets64, wide = _child_offsets(lengths)
+    n_child = int(offsets64[-1])
+    if is_map and n_child >= MAP_OFFSET_LIMIT:
+        # documented in SCALE.md as a hard ceiling
+        raise ValueError(
+            f"{what} has {n_child} child entries >= 2^31 in one stripe; "
+            "re-encode with a smaller stripe (Arrow MapArray offsets are "
+            "int32 and no LargeMap exists) or project the column away")
+    kids = children(n_child)
+    if wide and not is_map:
+        return pa.LargeListArray.from_arrays(pa.array(offsets64), kids[0])
+    offsets = pa.array(offsets64.astype(np.int32))
+    if is_map:
+        return pa.MapArray.from_arrays(offsets, *kids)
+    return pa.ListArray.from_arrays(offsets, kids[0])
+
+
 def _decode_group(mv, cols: list[dict], n_rows: int, comp: str,
                   tz: str | None, include: list[str] | None) -> pa.RecordBatch:
     arrays, names = [], []
@@ -915,31 +930,9 @@ def _read_column(mv, col: dict, n_rows: int, comp: str,
         return _scatter_nulls(vals, present, n_rows)
     if kind in ("list", "map"):
         lengths = rlev2.decode(streams["LENGTH"], n_vals, signed=False)
-        offsets64, wide = _child_offsets(lengths)
-        if kind == "list":
-            child = _read_column(mv, col["children"][0],
-                                 col["children"][0]["n_values"], comp, tz)
-            if wide:
-                vals = pa.LargeListArray.from_arrays(pa.array(offsets64), child)
-            else:
-                vals = pa.ListArray.from_arrays(
-                    pa.array(offsets64.astype(np.int32)), child)
-        else:
-            if offsets64[-1] >= MAP_OFFSET_LIMIT:
-                # lists get a LargeList fallback above int32 offsets; Arrow
-                # has no LargeMap, so this is a hard ceiling (documented in
-                # SCALE.md) — fail with the actionable re-encode hint
-                raise ValueError(
-                    f"map column {col['name']!r} has {int(offsets64[-1])} "
-                    "child entries "
-                    ">= 2^31 in one stripe; re-encode with a smaller "
-                    "stripe_bytes/rg_rows (Arrow MapArray offsets are int32)")
-            keys = _read_column(mv, col["children"][0],
-                                col["children"][0]["n_values"], comp, tz)
-            items = _read_column(mv, col["children"][1],
-                                 col["children"][1]["n_values"], comp, tz)
-            vals = pa.MapArray.from_arrays(
-                pa.array(offsets64.astype(np.int32)), keys, items)
+        vals = _list_array(lengths, kind == "map", lambda _: [
+            _read_column(mv, c, c["n_values"], comp, tz)
+            for c in col["children"]], f"map column {col['name']!r}")
         return _scatter_nulls(vals, present, n_rows)
     return _decode_column_arrow(streams, col, n_vals, present, n_rows, tz)
 
@@ -1035,12 +1028,7 @@ def _decode_column_arrow(streams: dict, col: dict, n: int,
             entries = _varwidth_array(streams["DICT_DATA"], dlens, None,
                                       col["dict_size"], pa.large_string())
             vals = entries.take(pa.array(idx.astype(np.int64)))
-            if present is None:
-                return vals
-            # scatter via take with null indices at null slots
-            pos = np.full(n_rows, -1, dtype=np.int64)
-            pos[present] = np.arange(n, dtype=np.int64)
-            return vals.take(pa.array(pos, mask=~present))
+            return _scatter_nulls(vals, present, n_rows)
         lengths = rlev2.decode(streams["LENGTH"], n, signed=False)
         data = streams["DATA"]
         if codec == "fsst":

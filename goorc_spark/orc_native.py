@@ -43,6 +43,10 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from goorc_spark import _fanout
+from goorc_spark.arrow_stripe import (_decimal_from_limbs, _decimal_limbs,
+                                      _exact_int_sum, _list_array,
+                                      _list_parts, _scatter_nulls,
+                                      _varwidth_array, _varwidth_parts)
 from goorc_spark.codecs import boolrle, byterle, chunk, floats, rlev1, rlev2
 from goorc_spark.codecs.primitives import (decode_svarints, decode_uvarints,
                                            encode_svarints)
@@ -515,6 +519,7 @@ class _StripeCursor:
             off += s["length"]
         self.encodings = sf["encodings"]
         self.tz = sf.get("timezone", "")
+        self.tz_base = _tz_base_seconds(self.tz)
         self.reader_tz = reader_tz
 
     def has(self, col: int, kind: int) -> bool:
@@ -570,11 +575,6 @@ class _StripeCursor:
 
     def raw(self, col: int, kind: int, nbytes: int) -> bytes:
         return self.stream(col, kind)
-
-
-def _read_ints(cur: _StripeCursor, col: int, n: int, kind: int,
-               signed: bool) -> np.ndarray:
-    return cur.ints(col, kind, n, signed)
 
 
 # ------------------------------------------------------------ row-index seek
@@ -971,63 +971,84 @@ def _eq_keep_groups(cur: "_StripeCursor", col_id: int, kind: int, values,
     return keep
 
 
-def _decode_stripe_eq(data: bytes, stripe: dict, sf: dict, comp: int,
-                      types: list[dict], stride: int, col_id: int,
-                      values: list, h64s: list[int],
-                      include: set[int] | None,
-                      metrics: dict | None) -> pa.StructArray | None:
-    """Decode only the row groups of one stripe that might hold
-    `col IN values` (bloom + per-group stats, conservative). Returns the
-    UNFILTERED concatenation of surviving groups (callers apply the exact
-    filter), or None when every group was pruned."""
+def _decode_stripe(data: bytes, stripe: dict, sf: dict, comp: int,
+                   types: list[dict], include: set[int] | None,
+                   stride: int = 0, keep: list[bool] | None = None,
+                   metrics: dict | None = None,
+                   reader_tz: str | None = None, hi: int | None = None
+                   ) -> tuple[pa.StructArray, int] | None:
+    """Decode one stripe: all of it (`keep` None), or only the row groups
+    `keep` marks, each run of kept groups through one _SeekCursor window
+    (stopping at stripe row `hi` when given). Returns (rows, the stripe
+    row they start at) — runs past the first are concatenated — or None
+    when `keep` marks no group. Seeking needs a
+    ROW_INDEX on every column with data streams (a positionless column
+    would decode from the wrong offset); without one, or on a position
+    layout _split_positions does not know, the whole stripe is decoded,
+    so callers must filter or slice the rows they asked for. Counts
+    groups_total / groups_decoded in `metrics` for a `keep` mask."""
     n = stripe["n_rows"]
-    tz_base = _tz_base_seconds(sf["timezone"])
-    kind = types[col_id]["kind"]
-    probe = _StripeCursor(data, stripe, sf, comp, metrics)
-    keep = _eq_keep_groups(probe, col_id, kind, values, h64s, n, stride)
-    indexed = {s["column"] for s in sf["streams"] if s["kind"] == ROW_INDEX}
-    data_cols = {s["column"] for s in sf["streams"]
-                 if s["kind"] not in (ROW_INDEX, BLOOM_FILTER_UTF8,
-                                      BLOOM_FILTER)}
-    seekable = stride > 0 and data_cols <= indexed
-    if keep is not None and metrics is not None:
-        dec = 0 if not any(keep) else (sum(keep) if seekable else len(keep))
-        metrics["groups_total"] = metrics.get("groups_total", 0) + len(keep)
-        metrics["groups_decoded"] = metrics.get("groups_decoded", 0) + dec
-    if keep is None or not seekable:
-        if keep is not None and not any(keep):
+    if keep is not None:
+        indexed = {s["column"] for s in sf["streams"]
+                   if s["kind"] == ROW_INDEX}
+        data_cols = {s["column"] for s in sf["streams"]
+                     if s["kind"] not in (ROW_INDEX, BLOOM_FILTER_UTF8,
+                                          BLOOM_FILTER)}
+        seekable = stride > 0 and data_cols <= indexed
+        if metrics is not None:
+            dec = 0 if not any(keep) else (sum(keep) if seekable
+                                           else len(keep))
+            _bump(metrics, "groups_total", len(keep))
+            _bump(metrics, "groups_decoded", dec)
+        if not any(keep):
             return None
-        cur = _StripeCursor(data, stripe, sf, comp, metrics)
-        return _decode_column(cur, types, 0, n, tz_base, include)
-    if not any(keep):
-        return None
-    # coalesce consecutive surviving groups into one seek+decode window
-    parts = []
-    g = 0
-    while g < len(keep):
-        if not keep[g]:
-            g += 1
-            continue
-        g0 = g
-        while g < len(keep) and keep[g]:
-            g += 1
-        rows = min(g * stride, n) - g0 * stride
-        try:
-            cur = _SeekCursor(data, stripe, sf, comp, types, g0, g, metrics)
-            parts.append(_decode_column(cur, types, 0, rows, tz_base,
-                                        include))
-        except NotImplementedError:
-            # foreign position layout: the prune verdict still stands,
-            # but seeking can't — degrade to one whole-stripe decode
-            cur = _StripeCursor(data, stripe, sf, comp, metrics)
-            return _decode_column(cur, types, 0, n, tz_base, include)
-    if len(parts) == 1:
-        return parts[0]
-    # concatenate struct arrays via a table round-trip (zero-copy batches)
-    tbls = [pa.Table.from_batches([pa.RecordBatch.from_struct_array(p)])
-            for p in parts]
-    combined = pa.concat_tables(tbls).combine_chunks()
-    return combined.to_struct_array().combine_chunks()
+        if seekable:
+            edges = np.flatnonzero(np.diff(np.r_[0, keep, 0])).tolist()
+            runs = list(zip(edges[::2], edges[1::2]))  # [g0, g1) kept
+            try:
+                parts = [_decode_column(
+                    _SeekCursor(data, stripe, sf, comp, types, g0, g1,
+                                metrics),
+                    types, 0, min(g1 * stride, n if hi is None else hi)
+                    - g0 * stride, include)
+                    for g0, g1 in runs]
+            except NotImplementedError:
+                pass  # foreign position layout: decode the whole stripe
+            else:
+                start = runs[0][0] * stride
+                if len(parts) == 1:
+                    return parts[0], start
+                # concatenate via a table round-trip (zero-copy batches)
+                tbl = pa.Table.from_batches(
+                    [pa.RecordBatch.from_struct_array(p) for p in parts])
+                return tbl.combine_chunks().to_struct_array() \
+                    .combine_chunks(), start
+    cur = _StripeCursor(data, stripe, sf, comp, metrics, reader_tz)
+    return _decode_column(cur, types, 0, n, include), 0
+
+
+def _projected_schema(types: list[dict],
+                      include: set[int] | None) -> pa.Schema:
+    """Arrow schema of the root fields `include` keeps (all when None)."""
+    root = types[0]
+    return pa.schema([(nm, _arrow_type(types, c))
+                      for nm, c in zip(root["field_names"], root["subtypes"])
+                      if include is None or c in include])
+
+
+def _eq_stripe(data: bytes, stripe: dict, sf: dict, comp: int,
+               types: list[dict], stride: int, col_id: int, values: list,
+               h64s: list[int], include: set[int] | None,
+               metrics: dict | None) -> pa.StructArray | None:
+    """The row groups of one stripe that might hold `col IN values`
+    (bloom + per-group stats, conservative), unfiltered; None when every
+    group was pruned."""
+    keep = _eq_keep_groups(_StripeCursor(data, stripe, sf, comp, metrics),
+                           col_id, types[col_id]["kind"], values, h64s,
+                           stripe["n_rows"], stride)
+    out = _decode_stripe(data, stripe, sf, comp, types, include, stride,
+                         keep, metrics)
+    return None if out is None else out[0]
 
 
 def read_orc_eq(data: bytes, column: str, value,
@@ -1064,10 +1085,6 @@ def read_orc_eq(data: bytes, column: str, value,
     values = [v for v in values if v is not None]
     include = _include_ids(types, columns)
     dec_include = include if include is None else include | {col_id}
-    names, ids = root["field_names"], root["subtypes"]
-    schema = pa.schema([(nm, _arrow_type(types, c))
-                        for nm, c in zip(names, ids)
-                        if dec_include is None or c in dec_include])
     batches = []
     if values:
         h64s = [_bloom_hash_value(kind, v) for v in values]
@@ -1081,15 +1098,13 @@ def read_orc_eq(data: bytes, column: str, value,
                         stripe_stats[si][col_id], sv, sv) for sv in svs):
                 continue
             sf = _stripe_footer(data, stripe, ps["compression"], metrics)
-            arr = _decode_stripe_eq(data, stripe, sf, ps["compression"],
-                                    types, stride, col_id, values, h64s,
-                                    dec_include, metrics)
+            arr = _eq_stripe(data, stripe, sf, ps["compression"], types,
+                             stride, col_id, values, h64s, dec_include,
+                             metrics)
             if arr is not None:
                 batches.append(pa.RecordBatch.from_struct_array(arr))
-    if not batches:
-        tbl = schema.empty_table()
-    else:
-        tbl = pa.Table.from_batches(batches, schema=schema)
+    tbl = _table(batches, types, dec_include)
+    if batches:
         col_arr = tbl.column(column)
         if len(values) == 1:
             tbl = tbl.filter(pc.equal(col_arr, values[0]))
@@ -1112,20 +1127,8 @@ def _decode_big_svarints(raw: bytes, count: int) -> list[int]:
     return out
 
 
-
-
-def _take_spread(values: pa.Array, mask) -> pa.Array:
-    """Vectorized null-scatter: indices for present rows, null elsewhere."""
-    if mask is None:
-        return values
-    pos = (np.cumsum(mask) - 1).astype(np.int64)
-    take = pa.array(pos, type=pa.int64(), mask=~mask)
-    return values.take(take)
-
-
 def _decode_column(cur: _StripeCursor, types: list[dict], col: int,
-                   n_rows: int, tz_base: int,
-                   include: set[int] | None = None) -> pa.Array:
+                   n_rows: int, include: set[int] | None = None) -> pa.Array:
     t = types[col]
     kind = t["kind"]
     mask = cur.present(col, n_rows)
@@ -1136,48 +1139,15 @@ def _decode_column(cur: _StripeCursor, types: list[dict], col: int,
         for cid, name in zip(t["subtypes"], t["field_names"]):
             if include is not None and cid not in include:
                 continue
-            children.append(_decode_column(cur, types, cid, n_vals, tz_base,
-                                           include))
+            children.append(_decode_column(cur, types, cid, n_vals, include))
             names.append(name)
-        st = pa.StructArray.from_arrays(children, names)
-        return _take_spread(st, mask)
-
-    if kind in (T_LIST, T_MAP):
-        lengths = _read_ints(cur, col, n_vals, LENGTH, signed=False)
-        # int64 accumulation: an int32 cumsum would silently wrap past
-        # 2^31 child elements (same hazard arrow_stripe._child_offsets
-        # guards); lists fall back to LargeList, maps must raise (Arrow
-        # has no LargeMap)
-        offsets64 = np.zeros(n_vals + 1, dtype=np.int64)
-        np.cumsum(lengths.astype(np.int64), out=offsets64[1:])
-        n_child = int(offsets64[-1])
-        wide = n_child >= (1 << 31)
-        if kind == T_LIST:
-            child = _decode_column(cur, types, t["subtypes"][0], n_child,
-                                   tz_base, None)
-            if wide:
-                dense = pa.LargeListArray.from_arrays(pa.array(offsets64),
-                                                      child)
-            else:
-                dense = pa.ListArray.from_arrays(
-                    pa.array(offsets64.astype(np.int32)), child)
-        else:
-            if wide:
-                raise ValueError(
-                    f"ORC map column {t['field_names'] or col} has "
-                    f"{n_child} child entries >= 2^31 in one stripe; "
-                    "Arrow MapArray offsets are int32 and no LargeMap "
-                    "exists — read with a smaller stripe or project the "
-                    "column away")
-            keys = _decode_column(cur, types, t["subtypes"][0], n_child,
-                                  tz_base, None)
-            vals = _decode_column(cur, types, t["subtypes"][1], n_child,
-                                  tz_base, None)
-            dense = pa.MapArray.from_arrays(
-                pa.array(offsets64.astype(np.int32)), keys, vals)
-        return _take_spread(dense, mask)
-
-    if kind == T_UNION:
+        vals = pa.StructArray.from_arrays(children, names)
+    elif kind in (T_LIST, T_MAP):
+        lengths = cur.ints(col, LENGTH, n_vals, signed=False)
+        vals = _list_array(lengths, kind == T_MAP, lambda n: [
+            _decode_column(cur, types, c, n) for c in t["subtypes"]],
+            f"ORC map column {col}")
+    elif kind == T_UNION:
         # ORC UNION (kind 13): DATA holds one byte-RLE tag per present
         # row; each child stream stores only the rows its tag selects
         # (dense layout). Spark has no union type, so surface it as
@@ -1190,23 +1160,17 @@ def _decode_column(cur: _StripeCursor, types: list[dict], col: int,
         names = ["tag"]
         for i, cid in enumerate(t["subtypes"]):
             sel = tags == i
-            child = _decode_column(cur, types, cid, int(sel.sum()),
-                                   tz_base, None)
-            pos = (np.cumsum(sel) - 1).astype(np.int64)
-            fields.append(child.take(
-                pa.array(pos, type=pa.int64(), mask=~sel)))
+            child = _decode_column(cur, types, cid, int(sel.sum()))
+            fields.append(_scatter_nulls(child, sel, n_vals))
             names.append(f"field{i}")
-        st = pa.StructArray.from_arrays(fields, names)
-        return _take_spread(st, mask)
-
-    if kind == T_BOOLEAN:
-        bits = cur.bools(col, n_vals)
-        vals = pa.array(bits, type=pa.bool_())
+        vals = pa.StructArray.from_arrays(fields, names)
+    elif kind == T_BOOLEAN:
+        vals = pa.array(cur.bools(col, n_vals), type=pa.bool_())
     elif kind == T_BYTE:
         b = cur.bytes_rle(col, n_vals)
         vals = pa.array(b.view(np.int8), type=pa.int8())
     elif kind in (T_SHORT, T_INT, T_LONG):
-        ints = _read_ints(cur, col, n_vals, DATA, signed=True)
+        ints = cur.ints(col, DATA, n_vals, signed=True)
         vals = pa.array(ints, type=pa.int64())
         if t.get("attrs", {}).get("spark.sql.catalyst.type") == "timestamp_ntz":
             # Spark's ORC writer stores TIMESTAMP_NTZ as LONG epoch-micros
@@ -1229,40 +1193,29 @@ def _decode_column(cur: _StripeCursor, types: list[dict], col: int,
                                           n_vals))
     elif kind in (T_STRING, T_VARCHAR, T_CHAR, T_BINARY):
         enc = cur.encodings[col]["kind"]
-        out_t = pa.binary() if kind == T_BINARY else pa.utf8()
+        big_t = pa.large_binary() if kind == T_BINARY else pa.large_utf8()
         if enc in (ENC_DICTIONARY, ENC_DICTIONARY_V2):
             dict_n = cur.encodings[col]["dict_size"]
             dlen = cur._rle(col).decode(cur.stream(col, LENGTH), dict_n,
                                         signed=False)
-            doffs = np.zeros(dict_n + 1, dtype=np.int64)
-            np.cumsum(dlen, out=doffs[1:])
-            dict_bytes = cur.stream(col, DICTIONARY_DATA)
-            idx = _read_ints(cur, col, n_vals, DATA, signed=False)
-            dict_arr = pa.Array.from_buffers(
-                pa.large_utf8() if kind != T_BINARY else pa.large_binary(),
-                dict_n,
-                [None, pa.py_buffer(doffs.tobytes()),
-                 pa.py_buffer(dict_bytes)])
-            vals = dict_arr.take(pa.array(idx, type=pa.int64())).cast(out_t)
+            dict_arr = _varwidth_array(cur.stream(col, DICTIONARY_DATA),
+                                       dlen, None, dict_n, big_t)
+            idx = cur.ints(col, DATA, n_vals, signed=False)
+            vals = dict_arr.take(pa.array(idx, type=pa.int64()))
         else:
-            lens = _read_ints(cur, col, n_vals, LENGTH, signed=False)
-            offs = np.zeros(n_vals + 1, dtype=np.int64)
-            np.cumsum(lens, out=offs[1:])
-            content = cur.raw(col, DATA, int(offs[-1]))
-            big_t = pa.large_binary() if kind == T_BINARY else pa.large_utf8()
-            vals = pa.Array.from_buffers(
-                big_t, n_vals,
-                [None, pa.py_buffer(offs.tobytes()),
-                 pa.py_buffer(content)]).cast(out_t)
+            lens = cur.ints(col, LENGTH, n_vals, signed=False)
+            content = cur.raw(col, DATA, int(lens.sum()))
+            vals = _varwidth_array(content, lens, None, n_vals, big_t)
+        vals = vals.cast(pa.binary() if kind == T_BINARY else pa.utf8())
     elif kind == T_DATE:
-        days = _read_ints(cur, col, n_vals, DATA, signed=True)
+        days = cur.ints(col, DATA, n_vals, signed=True)
         vals = pa.array(days.astype(np.int32)).view(pa.date32())
     elif kind == T_TIMESTAMP:
         from goorc_spark.codecs.timestamps import unpack_nanos
-        secs = _read_ints(cur, col, n_vals, DATA, signed=True)
-        packed = _read_ints(cur, col, n_vals, SECONDARY, signed=False)
+        secs = cur.ints(col, DATA, n_vals, signed=True)
+        packed = cur.ints(col, SECONDARY, n_vals, signed=False)
         nanos = unpack_nanos(packed.astype(np.uint64)).astype(np.int64)
-        abs_sec = secs + tz_base
+        abs_sec = secs + cur.tz_base
         # Java writer truncates seconds toward zero for pre-base instants
         # (millis/1000 in Java rounds up when negative), storing the nanos
         # of the NEXT lower second — shift those rows down one second.
@@ -1277,8 +1230,7 @@ def _decode_column(cur: _StripeCursor, types: list[dict], col: int,
             micros = micros + shift
         vals = pa.array(micros, type=pa.int64()).view(pa.timestamp("us"))
     elif kind == T_DECIMAL:
-        from goorc_spark.arrow_stripe import _decimal_from_limbs
-        scales = _read_ints(cur, col, n_vals, SECONDARY, signed=True)
+        scales = cur.ints(col, SECONDARY, n_vals, signed=True)
         prec, scale = t["precision"], t["scale"]
         # varints: <=10 bytes each at precision<=18, <=19 for int128
         raw = cur.raw(col, DATA, (10 if prec <= 18 else 19) * n_vals)
@@ -1301,7 +1253,7 @@ def _decode_column(cur: _StripeCursor, types: list[dict], col: int,
         vals = _decimal_from_limbs(lo, hi, None, n_vals, prec, scale)
     else:
         raise NotImplementedError(f"ORC type kind {kind} not supported")
-    return _take_spread(vals, mask)
+    return _scatter_nulls(vals, mask, n_rows)
 
 
 def _check_union_width(n: int) -> None:
@@ -1368,6 +1320,15 @@ def _include_ids(types: list[dict], columns: list[str] | None) -> set[int] | Non
     return keep
 
 
+def _table(batches: list, types: list[dict],
+           include: set[int] | None) -> pa.Table:
+    """Decoded stripe batches as one table; with none, the projected
+    schema's empty table."""
+    if batches:
+        return pa.Table.from_batches(batches)
+    return _projected_schema(types, include).empty_table()
+
+
 def read_orc(data: bytes, columns: list[str] | None = None,
              reader_timezone: str | None = None) -> pa.Table:
     """Decode a whole ORC file's bytes into an Arrow table using only this
@@ -1390,20 +1351,10 @@ def read_orc(data: bytes, columns: list[str] | None = None,
     batches = []
     for stripe in footer["stripes"]:
         sf = _stripe_footer(data, stripe, ps["compression"])
-        tz_base = _tz_base_seconds(sf["timezone"])
-        cur = _StripeCursor(data, stripe, sf, ps["compression"],
-                            reader_tz=reader_timezone)
-        root = _decode_column(cur, types, 0, stripe["n_rows"], tz_base,
-                              include)
+        root, _ = _decode_stripe(data, stripe, sf, ps["compression"], types,
+                                 include, reader_tz=reader_timezone)
         batches.append(pa.RecordBatch.from_struct_array(root))
-    if not batches:
-        names = types[0]["field_names"]
-        ids = types[0]["subtypes"]
-        schema = pa.schema([(n, _arrow_type(types, c))
-                            for n, c in zip(names, ids)
-                            if include is None or c in include])
-        return schema.empty_table()
-    return pa.Table.from_batches(batches)
+    return _table(batches, types, include)
 
 
 def read_orc_rows(data: bytes, lo: int, hi: int,
@@ -1414,12 +1365,12 @@ def read_orc_rows(data: bytes, lo: int, hi: int,
     orc/reader.go:199-212, orc/column/reader.go:81-100): only the row
     groups overlapping the range are decompressed and decoded, starting at
     each group's recorded chunk offset with the recorded run/bit skips.
-    Files without an index (including this repo's own write_orc output,
-    which emits rowIndexStride=0) fall back to whole-stripe decode +
-    slice — still stripe-pruned by the range. Pass a dict as `metrics` to
-    collect decompressed_bytes and index_cache_hits/misses, counted as in
-    read_orc_eq (tests assert a point read touches ≪ the stripe's
-    bytes)."""
+    Files without an index (rowIndexStride=0, write_orc's default) or
+    with a position layout the seek path does not know fall back to
+    whole-stripe decode + slice — still stripe-pruned by the range. Pass
+    a dict as `metrics` to collect decompressed_bytes, groups_total /
+    groups_decoded and index_cache_hits/misses, counted as in read_orc_eq
+    (tests assert a point read touches ≪ the stripe's bytes)."""
     ps, footer = parse_tail(data, metrics)
     types = footer["types"]
     if types[0]["kind"] != T_STRUCT:
@@ -1436,36 +1387,16 @@ def read_orc_rows(data: bytes, lo: int, hi: int,
         if s_lo >= s_hi:
             continue
         sf = _stripe_footer(data, stripe, ps["compression"], metrics)
-        tz_base = _tz_base_seconds(sf["timezone"])
-        # seek only when every column that has data streams also has a
-        # ROW_INDEX stream (all-or-nothing: a positionless column would
-        # silently decode from the wrong offset)
-        indexed_cols = {s["column"] for s in sf["streams"]
-                        if s["kind"] == ROW_INDEX}
-        data_cols = {s["column"] for s in sf["streams"]
-                     if s["kind"] != ROW_INDEX}
-        use_index = stride > 0 and data_cols <= indexed_cols
-        if use_index:
-            g0 = s_lo // stride
-            start = g0 * stride
-            cur = _SeekCursor(data, stripe, sf, ps["compression"], types,
-                              g0, -(-s_hi // stride), metrics)
-            root = _decode_column(cur, types, 0, s_hi - start, tz_base,
-                                  include)
-            root = root.slice(s_lo - start, s_hi - s_lo)
-        else:
-            cur = _StripeCursor(data, stripe, sf, ps["compression"],
-                                metrics)
-            root = _decode_column(cur, types, 0, n, tz_base, include)
-            root = root.slice(s_lo, s_hi - s_lo)
-        batches.append(pa.RecordBatch.from_struct_array(root))
-    if not batches:
-        names, ids = types[0]["field_names"], types[0]["subtypes"]
-        schema = pa.schema([(nm, _arrow_type(types, c))
-                            for nm, c in zip(names, ids)
-                            if include is None or c in include])
-        return schema.empty_table()
-    return pa.Table.from_batches(batches)
+        keep = [s_lo // stride <= g < -(-s_hi // stride)
+                for g in range(-(-n // stride))] if stride else None
+        root, start = _decode_stripe(data, stripe, sf, ps["compression"],
+                                     types, include, stride, keep, metrics,
+                                     hi=s_hi)
+        # slice the batch, not the struct: from_struct_array keeps the
+        # children's full length for a slice at offset 0 (pyarrow 16)
+        batches.append(pa.RecordBatch.from_struct_array(root).slice(
+            s_lo - start, s_hi - s_lo))
+    return _table(batches, types, include)
 
 
 def read_orc_files(spark, path: str, columns: list[str] | None = None):
@@ -1498,12 +1429,8 @@ def read_orc_files(spark, path: str, columns: list[str] | None = None):
             raise ValueError(f"no files under {path}")
         _, footer = parse_tail(bytes(first[0].content))
     types0 = footer["types"]
-    include0 = _include_ids(types0, columns)
-    root0 = types0[0]
-    schema = from_arrow_schema(pa.schema(
-        [(n, _arrow_type(types0, c))
-         for n, c in zip(root0["field_names"], root0["subtypes"])
-         if include0 is None or c in include0]))
+    schema = from_arrow_schema(
+        _projected_schema(types0, _include_ids(types0, columns)))
     if local:
         # tasks open their paths directly (the read_orc_stripes model):
         # no file bytes ship through binaryFile/JVM/Arrow, and the task
@@ -1688,7 +1615,6 @@ def _node_stats(arr: pa.Array, vals: pa.Array, kind: int,
     if len(vals) == 0 or kind in (T_STRUCT, T_LIST, T_MAP, T_UNION):
         return st
     if kind in _INT_KINDS:
-        from goorc_spark.arrow_stripe import _exact_int_sum
         v64 = vals.cast(pa.int64())
         mm = pc.min_max(v64)
         st["min"], st["max"] = mm["min"].as_py(), mm["max"].as_py()
@@ -1827,81 +1753,42 @@ def _write_column_streams(arr: pa.Array, col_id: int, node: dict,
                           types: list | None = None,
                           tz: tuple[int, str] = (EPOCH_2015_S, "UTC"),
                           stats: dict | None = None,
-                          force_present: frozenset = frozenset(),
-                          allow_dict: bool = True,
-                          raw_bool: bool = False) -> None:
-    """Append (col_id, kind, raw_bytes) entries for one column (recursing
-    into nested children); record the column's encoding and, when `stats`
-    is given, the column's typed statistics. `force_present` lists columns
-    that must emit a PRESENT stream even with zero nulls (row-group
-    segments of a stripe where OTHER groups have nulls — the stream set
-    must be identical across segments); `allow_dict=False` pins strings to
-    DIRECT_V2 (per-group dictionaries would diverge between segments);
-    `raw_bool=True` emits bit-granular streams (PRESENT, boolean DATA) as
-    numpy bool arrays instead of encoded bytes so the stride writer can
-    pack the whole stripe's bits continuously and record real bit skips
-    (per-segment boolean RLE restarts would only concatenate into a valid
-    stream at byte-aligned boundaries, which nested children never
-    guarantee)."""
+                          allow_dict: bool = True) -> None:
+    """Append (col_id, kind, payload) entries for one column of one
+    segment (recursing into nested children); record the column's
+    encoding and, when `stats` is given, the column's typed statistics.
+    Every column leads with a PRESENT entry: its validity bits when it has
+    nulls here, else just its value count — _stride_stripe emits PRESENT
+    in every segment of a column that has nulls in any of them, and in
+    none otherwise. Bit streams (PRESENT, boolean DATA) are numpy bool
+    arrays, which _stride_stripe packs once across the stripe; every
+    other payload is encoded bytes. `allow_dict=False` pins strings to
+    DIRECT_V2 (per-segment dictionaries would diverge)."""
     kind = node["kind"]
     arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
     n = len(arr)
-    mask = None
-    if arr.null_count:
-        mask = np.asarray(arr.is_valid())
-        streams.append((col_id, PRESENT,
-                        mask if raw_bool else boolrle.encode(mask)))
-    elif col_id in force_present:
-        ones = np.ones(n, dtype=bool)
-        streams.append((col_id, PRESENT,
-                        ones if raw_bool else boolrle.encode(ones)))
+    streams.append((col_id, PRESENT,
+                    np.asarray(arr.is_valid()) if arr.null_count else n))
     vals = arr.drop_null() if arr.null_count else arr
     if stats is not None:
         stats[col_id] = _node_stats(arr, vals, kind, node)
+
+    def children(arrays) -> None:
+        for child, sub in zip(arrays, node["subtypes"]):
+            _write_column_streams(child, sub, types[sub], streams, encodings,
+                                  types, tz, stats, allow_dict)
+
     enc = ENC_DIRECT
     if kind == T_STRUCT:
         encodings[col_id] = (ENC_DIRECT, 0)
-        for i, sub in enumerate(node["subtypes"]):
-            child = vals.field(i) if n else arr.field(i)
-            # thread force_present/allow_dict to children — dropping them
-            # here let row-group segments dictionary-encode strings
-            # per-group (diverging dictionaries concatenate into a corrupt
-            # stripe) and skip PRESENT on no-null segments of nullable
-            # columns; regression: test_stride_low_cardinality_strings
-            _write_column_streams(child, sub, types[sub], streams,
-                                  encodings, types, tz, stats,
-                                  force_present, allow_dict, raw_bool)
+        src = vals if n else arr
+        children(src.field(i) for i in range(len(node["subtypes"])))
         return
     if kind in (T_LIST, T_MAP):
-        offs = np.asarray(vals.offsets, dtype=np.int64) if len(vals) else \
-            np.zeros(1, np.int64)
-        lengths = np.diff(offs)
-        streams.append((col_id, LENGTH,
-                        rlev2.encode(lengths, signed=False)))
+        lengths, kids = _list_parts(vals)
+        streams.append((col_id, LENGTH, rlev2.encode(lengths, signed=False)))
         encodings[col_id] = (ENC_DIRECT_V2, 0)
-        # gather the logical child window (offsets need not start at 0)
-        lo = int(offs[0]) if len(offs) else 0
-        hi = int(offs[-1]) if len(offs) else 0
-        if kind == T_LIST:
-            child = vals.values.slice(lo, hi - lo) if len(vals) else \
-                arr.values.slice(0, 0)
-            _write_column_streams(child, node["subtypes"][0],
-                                  types[node["subtypes"][0]], streams,
-                                  encodings, types, tz, stats,
-                                  force_present, allow_dict, raw_bool)
-        else:
-            keys = vals.keys.slice(lo, hi - lo) if len(vals) else \
-                arr.keys.slice(0, 0)
-            items = vals.items.slice(lo, hi - lo) if len(vals) else \
-                arr.items.slice(0, 0)
-            _write_column_streams(keys, node["subtypes"][0],
-                                  types[node["subtypes"][0]], streams,
-                                  encodings, types, tz, stats,
-                                  force_present, allow_dict, raw_bool)
-            _write_column_streams(items, node["subtypes"][1],
-                                  types[node["subtypes"][1]], streams,
-                                  encodings, types, tz, stats,
-                                  force_present, allow_dict, raw_bool)
+        children(kids)
         return
     if kind == T_UNION:
         # one byte-RLE tag per row; children written densely in row order
@@ -1909,19 +1796,15 @@ def _write_column_streams(arr: pa.Array, col_id: int, node: dict,
         # JVM/C++ readers expect). byte RLE self-delimits, so stride-mode
         # per-segment restarts concatenate spec-valid like every other
         # byte-granular codec here.
-        tags, children = _union_parts(arr)
+        tags, kids = _union_parts(arr)
         streams.append((col_id, DATA, byterle.encode(tags)))
         encodings[col_id] = (ENC_DIRECT, 0)
-        for i, sub in enumerate(node["subtypes"]):
-            _write_column_streams(children[i], sub, types[sub], streams,
-                                  encodings, types, tz, stats,
-                                  force_present, allow_dict, raw_bool)
+        children(kids)
         return
     if kind == T_BOOLEAN:
         bits = np.asarray(vals.cast(pa.int8()), dtype=np.int8).astype(bool) \
             if len(vals) else np.zeros(0, bool)
-        streams.append((col_id, DATA,
-                        bits if raw_bool else boolrle.encode(bits)))
+        streams.append((col_id, DATA, bits))
     elif kind == T_BYTE:
         b = np.asarray(vals, dtype=np.int8).view(np.uint8) if len(vals) \
             else np.zeros(0, np.uint8)
@@ -1973,66 +1856,39 @@ def _write_column_streams(arr: pa.Array, col_id: int, node: dict,
                                      signed=False)))
         enc = ENC_DIRECT_V2
     elif kind == T_DECIMAL:
-        sc = node["arrow"].scale
+        lo, hi = _decimal_limbs(vals)
         if node["arrow"].precision <= 18:
-            streams.append((col_id, DATA,
-                            encode_svarints(_decimal_unscaled_i64(vals))))
-        else:
-            from goorc_spark.arrow_stripe import _decimal_limbs
-            lo, hi = _decimal_limbs(vals)
-            data = bytearray()
-            for l, h in zip(lo.tolist(), hi.tolist()):
-                data += _svarint_big((h << 64) | l)  # exact int128 mantissa
-            streams.append((col_id, DATA, bytes(data)))
+            data = encode_svarints(lo.view(np.int64))
+        else:  # exact int128 mantissas
+            data = b"".join(_svarint_big((h << 64) | l)
+                            for l, h in zip(lo.tolist(), hi.tolist()))
+        streams.append((col_id, DATA, data))
         streams.append((col_id, SECONDARY,
-                        rlev2.encode(np.full(len(vals), sc, np.int64),
-                                     signed=True)))
+                        rlev2.encode(np.full(len(vals), node["arrow"].scale,
+                                             np.int64), signed=True)))
         enc = ENC_DIRECT_V2
     elif kind in (T_STRING, T_BINARY):
-        out_cast = pa.large_binary() if kind == T_BINARY else pa.large_utf8()
-        v = vals.cast(out_cast)
-        n_vals = len(v)
-        distinct = 0
-        if kind == T_STRING and n_vals and allow_dict:
-            distinct = len(pc.unique(v))
-        if (kind == T_STRING and n_vals and allow_dict
-                and distinct / n_vals <= DICT_MAX_RATIO):
-            dict_arr = pc.unique(v).sort()
-            idx = pc.index_in(v, value_set=dict_arr)
+        dict_arr = pc.unique(vals) \
+            if kind == T_STRING and len(vals) and allow_dict else None
+        if dict_arr is not None \
+                and len(dict_arr) / len(vals) <= DICT_MAX_RATIO:
+            dict_arr = dict_arr.sort()
+            idx = pc.index_in(vals, value_set=dict_arr)
             streams.append((col_id, DATA, rlev2.encode(
                 np.asarray(idx, dtype=np.int64), signed=False)))
-            offs = _varwidth_offsets(dict_arr)
-            lens = np.diff(offs)
-            buf = dict_arr.buffers()[2]
-            contents = buf.to_pybytes()[offs[0]:offs[-1]] if buf else b""
-            streams.append((col_id, DICTIONARY_DATA, contents))
+            contents, lens = _varwidth_parts(dict_arr)
+            streams.append((col_id, DICTIONARY_DATA, contents.tobytes()))
             streams.append((col_id, LENGTH,
                             rlev2.encode(lens, signed=False)))
             encodings[col_id] = (ENC_DICTIONARY_V2, len(dict_arr))
             return
-        offs = _varwidth_offsets(v) if n_vals else np.zeros(1, np.int64)
-        lens = np.diff(offs)
-        buf = v.buffers()[2]
-        contents = buf.to_pybytes()[offs[0]:offs[-1]] if buf else b""
-        streams.append((col_id, DATA, contents))
+        contents, lens = _varwidth_parts(vals)
+        streams.append((col_id, DATA, contents.tobytes()))
         streams.append((col_id, LENGTH, rlev2.encode(lens, signed=False)))
         enc = ENC_DIRECT_V2
     else:
         raise NotImplementedError(f"native writer: ORC kind {kind}")
     encodings[col_id] = (enc, 0)
-
-
-def _varwidth_offsets(v: pa.Array) -> np.ndarray:
-    """int64 offsets of a large_utf8/large_binary array (buffer view,
-    honoring the array's slice offset)."""
-    return np.frombuffer(v.buffers()[1], dtype=np.int64, count=len(v) + 1,
-                         offset=8 * v.offset)
-
-
-def _decimal_unscaled_i64(vals: pa.Array) -> np.ndarray:
-    from goorc_spark.arrow_stripe import _decimal_limbs
-    lo, hi = _decimal_limbs(vals)
-    return lo.view(np.int64)
 
 
 def _svarint_big(v: int) -> bytes:
@@ -2069,47 +1925,6 @@ def _group_bloom_hashes(arr, kind: int) -> np.ndarray:
         arr.cast(pa.int64()).to_numpy(zero_copy_only=False))
 
 
-def _nullable_cols(arr, col_id: int, node: dict, types: list,
-                   out: set) -> None:
-    """Mark every column id whose stream set would include PRESENT
-    anywhere in this stripe, mirroring _write_column_streams' traversal
-    exactly (struct children come from the parent-present window, list/map
-    children from the logical offsets window) so per-group segments can
-    force identical stream sets."""
-    arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-    if arr.null_count:
-        out.add(col_id)
-    vals = arr.drop_null() if arr.null_count else arr
-    kind = node["kind"]
-    if kind == T_STRUCT:
-        for i, sub in enumerate(node["subtypes"]):
-            child = vals.field(i) if len(arr) else arr.field(i)
-            _nullable_cols(child, sub, types[sub], types, out)
-    elif kind in (T_LIST, T_MAP):
-        offs = np.asarray(vals.offsets, dtype=np.int64) if len(vals) else \
-            np.zeros(1, np.int64)
-        lo = int(offs[0]) if len(offs) else 0
-        hi = int(offs[-1]) if len(offs) else 0
-        if kind == T_LIST:
-            child = vals.values.slice(lo, hi - lo) if len(vals) else \
-                arr.values.slice(0, 0)
-            _nullable_cols(child, node["subtypes"][0],
-                           types[node["subtypes"][0]], types, out)
-        else:
-            keys = vals.keys.slice(lo, hi - lo) if len(vals) else \
-                arr.keys.slice(0, 0)
-            items = vals.items.slice(lo, hi - lo) if len(vals) else \
-                arr.items.slice(0, 0)
-            _nullable_cols(keys, node["subtypes"][0],
-                           types[node["subtypes"][0]], types, out)
-            _nullable_cols(items, node["subtypes"][1],
-                           types[node["subtypes"][1]], types, out)
-    elif kind == T_UNION:
-        _, children = _union_parts(arr)
-        for i, sub in enumerate(node["subtypes"]):
-            _nullable_cols(children[i], sub, types[sub], types, out)
-
-
 def _compress_all(raws: list, comp: str, block: int) -> list[bytes]:
     """chunk.compress(raw, comp, block, 6) of every stream, in order —
     spread over the cores this context may use (_fanout; zlib releases
@@ -2122,53 +1937,44 @@ def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
                    tzctx: tuple, stride: int,
                    bloom_ids: dict | None = None,
                    bloom_fpp: float = 0.05):
-    """One stripe encoded in row-group SEGMENTS: every codec restarts at
-    each group start and compression chunks flush there too, so ROW_INDEX
-    positions are always (segment offset[, 0 decompressed skip], 0 value/
-    bit skips) — exactly the layout _SeekCursor consumes (a spec-conformant
-    degenerate case of the general positions the JVM writer records;
-    reference index write path orc/stripe.go:84-120). Returns
+    """One stripe's streams, encoded in row-group SEGMENTS of `stride`
+    rows, or as one segment with no index when `stride` is 0. Returns
     (index_streams, data_streams, encodings, stripe_stats), each stream
-    already compression-packed. Nested schemas (struct/list/map, any
+    already compression-packed.
+
+    Every codec restarts at each segment start and compression chunks
+    flush there too, so ROW_INDEX positions are always (segment
+    offset[, 0 decompressed skip], 0 value/bit skips) — exactly the
+    layout _SeekCursor consumes (a spec-conformant degenerate case of the
+    general positions the JVM writer records; reference index write path
+    orc/stripe.go:84-120). Nested schemas (struct/list/map/union, any
     depth) segment through children exactly as _write_column_streams
-    recurses; strings pin to DIRECT_V2 (per-group dictionaries would
-    diverge); PRESENT is forced on every segment of a column that has
-    nulls ANYWHERE in the stripe — nested children included — so segment
-    stream sets are identical and concatenate. Bit-granular streams
-    (PRESENT, boolean DATA) are packed continuously across the whole
-    stripe with byte-RLE runs and compression chunks cut at each group's
-    byte floor, recording real (run=0, bit) skips — nested children's
-    per-group bit counts are data-dependent, so per-segment restarts
-    would corrupt sequential (JVM) decode at non-byte-aligned
-    boundaries. All other codecs (RLEv2, byte-RLE, raw, varint)
-    self-delimit, so per-segment restart == run cut and concatenation is
-    spec-valid."""
-    if stride <= 0:
-        raise ValueError("row_index_stride must be positive")
-    whole_root = pa.StructArray.from_arrays(
-        [sub.column(i).combine_chunks() for i in range(sub.num_columns)],
-        names=list(sub.schema.names))
-    nullable: set[int] = set()
-    _nullable_cols(whole_root, 0, types[0], types, nullable)
-    force = frozenset(nullable)
+    recurses. Segments must emit identical stream sets to concatenate:
+    strings pin to DIRECT_V2 when there is more than one (per-group
+    dictionaries would diverge), and a column with nulls in ANY segment
+    gets PRESENT in every segment (all-ones where it has none). Bit
+    streams (PRESENT, boolean DATA) are packed continuously across the
+    whole stripe with byte-RLE runs and compression chunks cut at each
+    group's byte floor, recording real (run=0, bit) skips — nested
+    children's per-group bit counts are data-dependent, so per-segment
+    restarts would corrupt sequential (JVM) decode at non-byte-aligned
+    boundaries; for one segment this is boolrle.encode. All other codecs
+    (RLEv2, byte-RLE, raw, varint) self-delimit, so per-segment restart ==
+    run cut and concatenation is spec-valid."""
     encodings: dict = {}
     seg_streams: list[list] = []
     seg_stats: list[dict] = []
     seg_blooms: dict[int, list[bytes]] = {c: [] for c in (bloom_ids or ())}
     n = sub.num_rows
-    for gs in range(0, max(n, 1), stride):
-        g = sub.slice(gs, stride)
-        root = pa.RecordBatch.from_arrays(
-            [g.column(i).combine_chunks() for i in range(g.num_columns)],
-            schema=g.schema)
+    seg_rows = stride or max(n, 1)
+    for gs in range(0, max(n, 1), seg_rows):
+        g = sub.slice(gs, seg_rows)
         struct_arr = pa.StructArray.from_arrays(
-            [root.column(i) for i in range(root.num_columns)],
-            names=list(g.schema.names))
+            [c.combine_chunks() for c in g.columns], names=g.schema.names)
         s: list = []
         st: dict = {}
         _write_column_streams(struct_arr, 0, types[0], s, encodings,
-                              types, tzctx, st, force, allow_dict=False,
-                              raw_bool=True)
+                              types, tzctx, st, allow_dict=not stride)
         seg_streams.append(s)
         seg_stats.append(st)
         if bloom_ids:
@@ -2183,22 +1989,25 @@ def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
                 seg_blooms[cid].append(
                     _pb_bytes(1, _pb_int(1, bk)
                               + _pb_bytes(3, words.tobytes())))
-        if n == 0:
-            break
     keys = [(c, k) for c, k, _ in seg_streams[0]]
     for gi, s in enumerate(seg_streams[1:], 1):
         if [(c, k) for c, k, _ in s] != keys:
             raise AssertionError(
                 f"stride segment {gi} emitted a different stream set than "
-                "segment 0 — force_present/allow_dict threading bug")
+                "segment 0 — allow_dict threading bug")
     # compress each segment separately and record its stream-local offset;
     # bit streams (numpy payloads) are packed continuously with cuts at
     # each group's byte floor and a recorded residual bit skip
     extras: dict = {}  # key -> per-group (run_skip, bit_skip) for bools
     raws: list = []
-    for key in keys:
-        parts = [next(b for c, k, b in s if (c, k) == key)
-                 for s in seg_streams]
+    data_keys: list = []
+    for i, key in enumerate(keys):
+        parts = [s[i][2] for s in seg_streams]
+        if key[1] == PRESENT:
+            if all(isinstance(p, int) for p in parts):
+                continue  # no nulls in any segment: no PRESENT stream
+            parts = [np.ones(p, dtype=bool) if isinstance(p, int) else p
+                     for p in parts]
         if isinstance(parts[0], np.ndarray):
             starts = np.zeros(len(parts), dtype=np.int64)
             np.cumsum(np.array([p.size for p in parts[:-1]],
@@ -2209,12 +2018,13 @@ def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
             parts = [byterle.encode(pk_bytes[cuts[g]:cuts[g + 1]])
                      for g in range(len(parts))]
             extras[key] = [(0, int(b % 8)) for b in starts]
+        data_keys.append(key)
         raws += parts
     segs = _compress_all(raws, comp, block)
     n_seg = len(seg_streams)
     packed: dict = {}
     offsets: dict = {}
-    for i, key in enumerate(keys):
+    for i, key in enumerate(data_keys):
         key_segs = segs[i * n_seg:(i + 1) * n_seg]
         offs, pos = [], 0
         for pk in key_segs:
@@ -2222,6 +2032,12 @@ def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
             pos += len(pk)
         packed[key] = b"".join(key_segs)
         offsets[key] = offs
+    data_streams = [(c, k, packed[(c, k)]) for c, k in data_keys]
+    stripe_stats = {cid: _merge_col_stats(
+        types[cid]["kind"], [st.get(cid, {"n": 0}) for st in seg_stats])
+        for cid in range(len(types))}
+    if not stride:
+        return [], data_streams, encodings, stripe_stats
     index_raws = []
     for cid in range(len(types)):
         layout = _position_streams(
@@ -2250,10 +2066,6 @@ def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
     index_streams = [(c, k, pk) for (c, k, _), pk in zip(
         index_raws, _compress_all([r for _, _, r in index_raws], comp,
                                   block))]
-    data_streams = [(c, k, packed[(c, k)]) for c, k in keys]
-    stripe_stats = {cid: _merge_col_stats(
-        types[cid]["kind"], [st.get(cid, {"n": 0}) for st in seg_stats])
-        for cid in range(len(types))}
     return index_streams, data_streams, encodings, stripe_stats
 
 
@@ -2280,6 +2092,8 @@ def write_orc(table: pa.Table, compression: str = "zlib",
     row groups on equality predicates; requires row_index_stride > 0."""
     if compression not in (chunk.NONE, chunk.ZLIB):
         raise NotImplementedError("native writer emits NONE or ZLIB")
+    if row_index_stride < 0:
+        raise ValueError("row_index_stride must be positive (0 = no index)")
     tzctx = (_tz_base_seconds(writer_timezone), writer_timezone)
     types: list = []
     _type_tree(table.schema, types, [])
@@ -2307,50 +2121,17 @@ def write_orc(table: pa.Table, compression: str = "zlib",
     stripe_stats: list[dict] = []  # per stripe: col_id -> typed stats
     n = table.num_rows
     for start in range(0, max(n, 1), stripe_rows):
-        if n == 0 and start > 0:
-            break
         sub = table.slice(start, min(stripe_rows, n - start)) if n else table
         offset = len(body)
-        stream_entries = []
-        index_len = 0
-        data_len = 0
-        if row_index_stride:
-            idx_s, dat_s, encodings, col_stats = _stride_stripe(
-                sub, types, compression, block_size, tzctx, row_index_stride,
-                bloom_ids or None, bloom_fpp)
-            stripe_stats.append(col_stats)
-            for col_id, skind, pk in idx_s:
-                body += pk
-                stream_entries.append((col_id, skind, len(pk)))
-                index_len += len(pk)
-            for col_id, skind, pk in dat_s:
-                body += pk
-                stream_entries.append((col_id, skind, len(pk)))
-                data_len += len(pk)
-        else:
-            streams: list = []
-            encodings = {}
-            col_stats = {}
-            root = pa.RecordBatch.from_arrays(
-                [sub.column(i).combine_chunks()
-                 for i in range(sub.num_columns)],
-                schema=sub.schema)
-            struct_arr = pa.StructArray.from_arrays(
-                [root.column(i) for i in range(root.num_columns)],
-                names=list(sub.schema.names))
-            _write_column_streams(struct_arr, 0, types[0], streams,
-                                  encodings, types, tzctx, col_stats)
-            stripe_stats.append(col_stats)
-            packs = _compress_all([raw for _, _, raw in streams],
-                                  compression, block_size)
-            for (col_id, skind, _), packed in zip(streams, packs):
-                body += packed
-                stream_entries.append((col_id, skind, len(packed)))
-                data_len += len(packed)
+        idx_s, dat_s, encodings, col_stats = _stride_stripe(
+            sub, types, compression, block_size, tzctx, row_index_stride,
+            bloom_ids or None, bloom_fpp)
+        stripe_stats.append(col_stats)
         sf = bytearray()
-        for col_id, skind, ln in stream_entries:
+        for col_id, skind, pk in idx_s + dat_s:
+            body += pk
             sf += _pb_bytes(1, _pb_int(1, skind) + _pb_int(2, col_id)
-                            + _pb_int(3, ln))
+                            + _pb_int(3, len(pk)))
         for cid in range(len(types)):
             ek, dsz = encodings.get(cid, (ENC_DIRECT, 0))
             enc_msg = _pb_int(1, ek)
@@ -2360,12 +2141,11 @@ def write_orc(table: pa.Table, compression: str = "zlib",
         sf += _pb_str(3, writer_timezone)
         sf_packed = chunk.compress(bytes(sf), compression, block_size, 6)
         body += sf_packed
-        stripe_infos.append({"offset": offset, "index_length": index_len,
-                             "data_length": data_len,
-                             "footer_length": len(sf_packed),
-                             "n_rows": sub.num_rows})
-        if n == 0:
-            break
+        stripe_infos.append({
+            "offset": offset,
+            "index_length": sum(len(pk) for _, _, pk in idx_s),
+            "data_length": sum(len(pk) for _, _, pk in dat_s),
+            "footer_length": len(sf_packed), "n_rows": sub.num_rows})
     content_len = len(body)
     # Metadata section (between content and footer): one StripeStatistics
     # per stripe, each holding one ColumnStatistics per type-tree column —
@@ -2601,13 +2381,10 @@ def read_orc_stripes(spark, path_glob: str,
     # tails are read serially (few files) or by executors (many files)
     types0, rows0 = _stripe_plan_rows(files[0], predicate, None)
     types_json = _json.dumps(types0)
-    include = _include_ids(types0, columns)
     root = types0[0]
-    fields = [(n, _arrow_type(types0, c))
-              for n, c in zip(root["field_names"], root["subtypes"])
-              if include is None or c in include]
     from pyspark.sql.pandas.types import from_arrow_schema
-    out_schema = from_arrow_schema(pa.schema(fields))
+    out_schema = from_arrow_schema(
+        _projected_schema(types0, _include_ids(types0, columns)))
 
     if parallel_plan is None:
         parallel_plan = len(files) > META_PARALLEL_FILES
@@ -2693,19 +2470,15 @@ def read_orc_stripes(spark, path_glob: str,
                          "footer_length": r["footer_length"],
                          "n_rows": r["n_rows"]}
                 sf = _stripe_footer(data, local, r["compression"])
-                tz_base = _tz_base_seconds(sf["timezone"])
-                if eq_id is not None and r["stride"]:
-                    # _decode_stripe_eq degrades to whole-stripe decode
-                    # itself on foreign ROW_INDEX position layouts
-                    root_arr = _decode_stripe_eq(
+                if eq_id is not None:
+                    root_arr = _eq_stripe(
                         data, local, sf, r["compression"], types,
                         r["stride"], eq_id, [eq_value], [h64], inc, None)
                     if root_arr is None:
                         continue
                 else:
-                    cur = _StripeCursor(data, local, sf, r["compression"])
-                    root_arr = _decode_column(cur, types, 0, r["n_rows"],
-                                              tz_base, inc)
+                    root_arr, _ = _decode_stripe(data, local, sf,
+                                                 r["compression"], types, inc)
                 yield pa.RecordBatch.from_struct_array(root_arr)
 
     return plan.mapInArrow(decode, out_schema)

@@ -247,3 +247,42 @@ def test_map_offset_ceiling_error_pinned(monkeypatch):
     monkeypatch.setattr(arrow_stripe, "MAP_OFFSET_LIMIT", 100)
     with pytest.raises(ValueError, match="re-encode with a smaller"):
         arrow_stripe.decode_stripe_batch(blob, meta)
+
+
+def _sliced_lists_table() -> pa.Table:
+    """List and map columns with nulls inside the elements but none at the
+    top level, sliced so the offsets start past 0: the encoder must read
+    the children through the logical offsets window."""
+    rng = np.random.default_rng(17)
+    n = 700
+    ls = pa.array([[None if (i + j) % 5 == 0 else int(x)
+                    for j, x in enumerate(rng.integers(0, 50, i % 6))]
+                   for i in range(n)], pa.list_(pa.int64()))
+    mp = pa.array([[(f"k{j}", None if (i + j) % 4 == 0 else j * 1.5)
+                    for j in range(i % 4)] for i in range(n)],
+                  pa.map_(pa.string(), pa.float64()))
+    return pa.table({"ls": ls, "mp": mp}).slice(37, 600)
+
+
+SLICED_SPEC = [NESTED_SPEC[1], NESTED_SPEC[2]]
+
+# sha256 of the stripe blobs below, recorded before the list/map children
+# became zero-copy slices of the offsets window
+SLICED_LIST_PINS = {
+    None: "da829b2bbfa3184ce8aaa854ce931522c98d6fc760a3c2fa65e275300cb185f4",
+    100: "6ed010c479168d3867ed8d554dfc8235a3cba52f1abf0bf4783aaa626067d17f",
+}
+
+
+def test_sliced_list_map_stripe_bytes_pinned():
+    import hashlib
+
+    t = _sliced_lists_table()
+    for rg_rows, want in SLICED_LIST_PINS.items():
+        blob, meta = arrow_stripe.encode_stripe_table(t, SLICED_SPEC,
+                                                      rg_rows=rg_rows)
+        assert hashlib.sha256(blob).hexdigest() == want, rg_rows
+        rb = arrow_stripe.decode_stripe_batch(blob, meta)
+        for name in t.schema.names:
+            assert rb.column(name).to_pylist() == \
+                t.column(name).to_pylist(), (rg_rows, name)

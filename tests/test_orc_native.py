@@ -894,11 +894,12 @@ def test_legacy_rlev1_jvm_golden(spark, tmp_path):
 
 
 def test_stride_low_cardinality_strings_and_partial_nulls():
-    """Regression: the struct recursion dropped force_present/allow_dict,
-    so stride-mode stripes dictionary-encoded low-cardinality string
+    """Regression: the struct recursion once lost the stride settings, so
+    stride-mode stripes dictionary-encoded low-cardinality string
     children PER GROUP (diverging dictionaries concatenated into a corrupt
     stripe — reader crash) and skipped PRESENT on the no-null segments of
-    nullable columns. Both failure modes in one table: 16-distinct keys,
+    nullable columns (a column with nulls in any segment needs PRESENT in
+    all of them). Both failure modes in one table: 16-distinct keys,
     4-distinct roles, and a tool column whose nulls live only in SOME
     groups."""
     import pyarrow as pa
@@ -1091,6 +1092,128 @@ def test_write_orc_bytes_pinned():
         assert hashlib.sha256(on.write_orc(t, **kw)).hexdigest() == want, kw
     with pytest.raises(NotImplementedError, match="NONE or ZLIB"):
         on.write_orc(t, compression="zstd")
+
+
+def _deep_nulls_table(n: int = 2500) -> pa.Table:
+    """Struct, list, map and bool columns with nulls at every level, and a
+    low-cardinality string that goes DICTIONARY_V2 without a row index."""
+    rng = np.random.default_rng(23)
+    inner = pa.StructArray.from_arrays(
+        [pa.array([None if i % 6 == 0 else i for i in range(n)], pa.int32()),
+         pa.array([None if i % 9 == 0 else
+                   [None if (i + j) % 4 == 0 else f"w{(i + j) % 7}"
+                    for j in range(i % 3)] for i in range(n)],
+                  pa.list_(pa.string()))],
+        names=["a", "tags"])
+    st = inner.take(pa.array([None if i % 10 == 0 else i for i in range(n)],
+                             pa.int64()))
+    los = pa.array([None if i % 8 == 0 else
+                    [None if (i + j) % 5 == 0 else
+                     {"x": None if j == 1 else i + j,
+                      "ok": None if (i + j) % 3 == 0 else bool(j % 2)}
+                     for j in range(i % 4)] for i in range(n)],
+                   pa.list_(pa.struct([("x", pa.int64()),
+                                       ("ok", pa.bool_())])))
+    mp = pa.array([None if i % 7 == 0 else
+                   [(f"k{j}", None if (i + j) % 6 == 0 else
+                     [None if v % 5 == 0 else float(v)
+                      for v in rng.integers(0, 40, j % 3)])
+                    for j in range(i % 4)] for i in range(n)],
+                  pa.map_(pa.string(), pa.list_(pa.float64())))
+    return pa.table({
+        "id": pa.array(np.arange(n, dtype=np.int64)),
+        "flag": pa.array([None if i % 11 == 0 else bool(i % 3)
+                          for i in range(n)]),
+        "role": pa.array([None if i % 13 == 0 else
+                          ("user", "assistant", "tool")[i % 3]
+                          for i in range(n)]),
+        "st": st, "los": los, "mp": mp})
+
+
+def _pin_union_table(n: int = 2500) -> pa.Table:
+    rng = np.random.default_rng(31)
+    tags = rng.integers(0, 3, n).astype(np.int8)
+    off = np.zeros(n, np.int32)
+    for c in range(3):
+        off[tags == c] = np.arange(int((tags == c).sum()), dtype=np.int32)
+    cnt = [int((tags == c).sum()) for c in range(3)]
+    u = pa.UnionArray.from_dense(pa.array(tags), pa.array(off), [
+        pa.array([None if k % 7 == 0 else k for k in range(cnt[0])],
+                 pa.int32()),
+        pa.array([None if k % 5 == 0 else f"s{k % 20}"
+                  for k in range(cnt[1])]),
+        pa.array([None if k % 4 == 0 else bool(k % 3)
+                  for k in range(cnt[2])])])
+    return pa.table({"u": u, "k": pa.array(np.arange(n, dtype=np.int64))})
+
+
+# sha256 of write_orc(table, compression, stripe_rows=1000,
+# row_index_stride) for nested and union tables, recorded before the
+# stride-segment and plain stripe paths became one
+NESTED_UNION_PINS = {
+    ("nested", "zlib", 0):
+        "df69a7f4708b93ae35d72985b90173a50bcc060ca7c46dd0ec1be81001218b0c",
+    ("nested", "zlib", 333):
+        "298c45de583ae4024632903699a6fe8008ab35534e665f5b36f2b39624fbfc02",
+    ("nested", "zlib", 1000):
+        "829c2b19e6e38aa49b84404119ec64e6e396abee112a3b754e1bc964859e4885",
+    ("nested", "none", 0):
+        "49d8409736d1dfe9fa9d91d03d0eed7b57218a6e10ea3b0e50d7c215aa5e9431",
+    ("nested", "none", 333):
+        "4388f7274f1feab833cbd0e18f6b554d455c64ee7a46ae7a445b010479526acb",
+    ("nested", "none", 1000):
+        "b299a1ffccbe739b663a4beadcb862c7f431b64b14a30c537dcc06ccb769b6f8",
+    ("union", "zlib", 0):
+        "b89b95fb9a17796e60b66d20c75fe10e686d2afb2e4ae4d73f219a74ebd8c2ad",
+    ("union", "zlib", 333):
+        "24237923bdae92b3f6d0a57f916dda928b50e1f0de0c77b2ddf9300d27479bcb",
+    ("union", "zlib", 1000):
+        "7b59cc87f2d138990f852c76d4dd695b966caf29d6461292484f3d55692d63c2",
+    ("union", "none", 0):
+        "2303b5ff94764428621d5d481313a4220a415bf53c4819da819921140d6c753e",
+    ("union", "none", 333):
+        "fb866490634f4b1d5d9c2ec5ce0fecc413a4a3c47917d9ff965361feb10dfda3",
+    ("union", "none", 1000):
+        "e57bdd97ceec2b13bbff24261d5b97d9c7a628a5159fac355a6439020690fe86",
+}
+
+
+def test_write_orc_nested_and_union_bytes_pinned():
+    import hashlib
+
+    tables = {"nested": _deep_nulls_table(), "union": _pin_union_table()}
+    for (name, comp, stride), want in NESTED_UNION_PINS.items():
+        data = on.write_orc(tables[name], compression=comp, stripe_rows=1000,
+                            row_index_stride=stride)
+        assert hashlib.sha256(data).hexdigest() == want, (name, comp, stride)
+        assert on.read_orc(data).num_rows == tables[name].num_rows
+
+
+def test_read_orc_rows_degrades_on_unknown_position_layout(monkeypatch):
+    """A ROW_INDEX layout the seek path refuses makes every point read
+    decode the whole stripe: read_orc_rows returns the rows, like
+    read_orc_eq, instead of raising."""
+    t = _pinned_table()
+    data = on.write_orc(t, stripe_rows=1000, row_index_stride=100)
+    full = on.read_orc(data)
+
+    def refuse(pos, layout, n_base, col):
+        raise NotImplementedError("unknown layout")
+
+    monkeypatch.setattr(on, "_split_positions", refuse)
+    assert on.read_orc_rows(data, 100, 120).equals(full.slice(100, 20))
+    assert on.read_orc_rows(data, 950, 1130).equals(full.slice(950, 180))
+    # a range from a stripe's first row keeps only its rows (a sliced
+    # struct at offset 0 must not hand its children's full length on)
+    plain = on.write_orc(t, stripe_rows=1000)
+    got = on.read_orc_rows(plain, 1000, 1130)
+    assert got.equals(full.slice(1000, 130))
+    assert {len(c) for c in got.columns} == {130}
+    import pyarrow.compute as pc
+
+    key = full.column("conv_id")[150].as_py()
+    want = full.filter(pc.equal(full.column("conv_id"), key))
+    assert on.read_orc_eq(data, "conv_id", key).equals(want)
 
 
 def test_row_index_parse_positions_and_stats():
