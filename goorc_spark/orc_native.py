@@ -981,12 +981,12 @@ def _decode_stripe(data: bytes, stripe: dict, sf: dict, comp: int,
     `keep` marks, each run of kept groups through one _SeekCursor window
     (stopping at stripe row `hi` when given). Returns (rows, the stripe
     row they start at) — runs past the first are concatenated — or None
-    when `keep` marks no group. Seeking needs a
-    ROW_INDEX on every column with data streams (a positionless column
-    would decode from the wrong offset); without one, or on a position
-    layout _split_positions does not know, the whole stripe is decoded,
-    so callers must filter or slice the rows they asked for. Counts
-    groups_total / groups_decoded in `metrics` for a `keep` mask."""
+    when `keep` marks no group. Seeking needs a ROW_INDEX on every column
+    with data streams (a positionless column would decode from the wrong
+    offset); without one, or on a position layout _split_positions does
+    not know, the whole stripe is decoded, so callers must filter or
+    slice the rows they asked for. Counts groups_total / groups_decoded
+    in `metrics` for a `keep` mask."""
     n = stripe["n_rows"]
     if keep is not None:
         indexed = {s["column"] for s in sf["streams"]
@@ -1005,12 +1005,12 @@ def _decode_stripe(data: bytes, stripe: dict, sf: dict, comp: int,
         if seekable:
             edges = np.flatnonzero(np.diff(np.r_[0, keep, 0])).tolist()
             runs = list(zip(edges[::2], edges[1::2]))  # [g0, g1) kept
+            end = n if hi is None else hi
             try:
                 parts = [_decode_column(
                     _SeekCursor(data, stripe, sf, comp, types, g0, g1,
                                 metrics),
-                    types, 0, min(g1 * stride, n if hi is None else hi)
-                    - g0 * stride, include)
+                    types, 0, min(g1 * stride, end) - g0 * stride, include)
                     for g0, g1 in runs]
             except NotImplementedError:
                 pass  # foreign position layout: decode the whole stripe
