@@ -1,17 +1,28 @@
-"""Order-preserving thread fan-out for work that releases the GIL.
+"""Thread fan-out for work that releases the GIL, shared by both writers.
 
-`orc_native.write_orc` deflates ~1,500 independent stream segments per
-file; `zlib.compress` drops the GIL, so spreading those calls over threads
-scales with cores. `fan_out(fn, items)` is `[fn(x) for x in items]` with
-the items dealt round-robin to `pool_width()` threads and the results put
-back in input order, so output bytes never depend on the width.
+- `Jobs` is the submit-as-you-go entry point: inside
+  `with Jobs() as jobs:`, `jobs.submit(fn, *args)` starts `fn(*args)` on
+  the shared pool at once and returns a handle whose `.result()` the
+  caller reads back in whatever order it needs.
+  `arrow_stripe.encode_stripe_table` hands each FSST compress and large
+  `chunk.compress` to it as soon as the column walk has the payload, and
+  stitches the stripe in stream order at the end. Leaving the `with`
+  block waits for every job; when it is left by an exception, jobs not
+  yet started are cancelled first, so no job outlives the call.
+- `fan_out(fn, items)` is `[fn(x) for x in items]` with the items dealt
+  round-robin to `pool_width()` jobs and the results put back in input
+  order; `orc_native.write_orc` deflates its ~1,500 stream segments
+  through it (`zlib.compress` drops the GIL).
+
+Output bytes never depend on the width. The width rules:
 
 - Inside a Spark task the width is the task's CPU share
   (`TaskContext.cpus()`, 1 unless `spark.task.cpus` says otherwise), so
   tasks never oversubscribe their executor; elsewhere it is the CPUs in
-  this process's affinity mask.
-- A call made from one of the pool's own threads runs serially: a worker
-  that submitted to its own pool and waited could deadlock it.
+  this process's affinity mask. At width 1 every job runs inline, on the
+  calling thread, when it is submitted.
+- A call made from one of the pool's own threads runs inline too: a
+  worker that submitted to its own pool and waited could deadlock it.
 - `concurrent.futures` is imported on first use, so processes that never
   fan out (Spark Python workers among them) do not load it.
 """
@@ -45,7 +56,7 @@ def _executor(width: int):
     """The shared pool, rebuilt when it is narrower than `width` or was
     created before a fork (a forked child inherits the executor object
     but none of its threads). A replaced pool is only dropped, never shut
-    down, so a caller still holding it can finish its map; its threads
+    down, so a caller still holding it can finish its jobs; its threads
     exit once it is garbage collected."""
     global _pool, _pool_key
     with _lock:
@@ -60,17 +71,61 @@ def _executor(width: int):
         return _pool
 
 
+class _Done:
+    """The handle of a job that ran inline."""
+
+    __slots__ = ("_value",)
+
+    def __init__(self, value):
+        self._value = value
+
+    def result(self):
+        return self._value
+
+
+class Jobs:
+    """Jobs submitted as the caller goes, on the shared pool (see the
+    module docstring)."""
+
+    def __init__(self):
+        width = pool_width()
+        self.width = 1 if getattr(_local, "worker", False) else width
+        self._pool = _executor(width) if self.width > 1 else None
+        self._futures: list = []
+
+    def submit(self, fn, *args):
+        """Start `fn(*args)`; the handle's `.result()` returns its value or
+        raises its exception. Inline (width 1), it runs here and now."""
+        if self._pool is None:
+            return _Done(fn(*args))
+        fut = self._pool.submit(fn, *args)
+        self._futures.append(fut)
+        return fut
+
+    def __enter__(self) -> "Jobs":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if not self._futures:
+            return
+        if exc_type is not None:
+            for fut in self._futures:
+                fut.cancel()
+        from concurrent.futures import wait
+
+        wait(self._futures)
+
+
 def fan_out(fn, items: list) -> list:
     """`[fn(x) for x in items]`, computed on up to `pool_width()` threads.
     Exceptions propagate to the caller."""
-    width = min(pool_width(), len(items))
-    if width <= 1 or getattr(_local, "worker", False):
-        return [fn(x) for x in items]
-
-    def deal(i: int) -> list:
-        return [fn(x) for x in items[i::width]]
-
-    out = [None] * len(items)
-    for i, part in enumerate(_executor(width).map(deal, range(width))):
-        out[i::width] = part
+    with Jobs() as js:
+        width = min(js.width, len(items))
+        if width <= 1:
+            return [fn(x) for x in items]
+        parts = [js.submit(lambda i: [fn(x) for x in items[i::width]], i)
+                 for i in range(width)]
+        out = [None] * len(items)
+        for i, part in enumerate(parts):
+            out[i::width] = part.result()
     return out

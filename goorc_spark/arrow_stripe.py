@@ -25,7 +25,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from goorc_spark import selector, stats as stx
+from goorc_spark import _fanout, selector, stats as stx
 from goorc_spark.codecs import (
     boolrle,
     byterle,
@@ -193,6 +193,83 @@ def rg_bloom_probe(entry: dict, key_value) -> bool:
                                  _key_hash(key_value))
 
 
+# streams of this many raw bytes or more compress on the _fanout pool while
+# the column walk goes on; smaller ones compress inline, where a pool
+# round trip would cost more than it saves
+_JOB_MIN_BYTES = 64 * 1024
+
+
+class _Fsst:
+    """A DATA payload still to be FSST-compressed with a compiled table."""
+
+    __slots__ = ("contents", "table")
+
+    def __init__(self, contents: bytes, table):
+        self.contents = contents
+        self.table = table
+
+
+def _fsst_stream(payload: _Fsst, compression: str, chunk_size: int):
+    """(kept FSST?, raw length, compressed stream) of one FSST payload;
+    when FSST does not shrink it, the stored original."""
+    data = fsst.compress(payload.contents, payload.table)
+    kept = len(data) < len(payload.contents)
+    if not kept:
+        data = payload.contents
+    return kept, len(data), chunk.compress(data, compression, chunk_size)
+
+
+class _StreamSink:
+    """A stripe's streams in blob order. The column walk stays on the
+    calling thread; each stream's heavy kernel — FSST compress, or
+    chunk.compress of _JOB_MIN_BYTES or more — goes to `jobs` as soon as
+    its payload exists. stitch() joins the compressed streams in order
+    and fills in what only the results tell: each directory entry's
+    offset/length (and raw_length after FSST), and codec "raw" where FSST
+    fell back to the stored original."""
+
+    def __init__(self, jobs, compression: str, chunk_size: int):
+        self._jobs = jobs
+        self._comp = (compression, chunk_size)
+        self._streams: list = []  # (directory entry, FSST col meta, result)
+        self.offsets: list[int] = []  # filled by stitch(), one past the end
+
+    def __len__(self) -> int:
+        return len(self._streams)
+
+    def add(self, skind: str, raw, col_meta: dict) -> dict:
+        entry = {"kind": skind, "offset": None, "length": None,
+                 "raw_length": None}
+        if isinstance(raw, _Fsst):
+            self._streams.append((entry, col_meta, self._jobs.submit(
+                _fsst_stream, raw, *self._comp)))
+            return entry
+        raw = bytes(raw)
+        entry["raw_length"] = len(raw)
+        if len(raw) >= _JOB_MIN_BYTES and self._comp[0] != chunk.NONE:
+            out = self._jobs.submit(chunk.compress, raw, *self._comp)
+        else:
+            out = chunk.compress(raw, *self._comp)
+        self._streams.append((entry, None, out))
+        return entry
+
+    def stitch(self) -> bytes:
+        parts, pos = [], 0
+        for entry, fsst_meta, out in self._streams:
+            if not isinstance(out, bytes):
+                out = out.result()
+            if fsst_meta is not None:
+                kept, entry["raw_length"], out = out
+                if not kept:
+                    fsst_meta["codec"] = "raw"
+            entry["offset"], entry["length"] = pos, len(out)
+            self.offsets.append(pos)
+            parts.append(out)
+            pos += len(out)
+        self.offsets.append(pos)
+        return b"".join(parts)
+
+
 def encode_stripe_table(
     table: pa.Table,
     spec: list[dict],
@@ -219,98 +296,105 @@ def encode_stripe_table(
     triples into continuous streams; we restart codecs at group boundaries
     so one offset suffices — a small compression cost (measured in
     BASELINE.md) for a far simpler seek path. Codec choices + FSST tables
-    are shared across groups via `cache`, so the selector runs once."""
+    are shared across groups via `cache`, so the selector runs once.
+
+    The heavy stream kernels run on the `_fanout` pool beside the column
+    walk (_StreamSink); bytes and meta do not depend on the pool width."""
     n = table.num_rows
-    if not rg_rows or n <= rg_rows:
-        blob = bytearray()
-        cols_meta = [
-            _write_column(_as_array(table.column(col["name"])), col, blob,
-                          compression, chunk_size, policy, cache)
-            for col in spec
-        ]
+    grouped = bool(rg_rows) and n > rg_rows
+    if grouped:
+        cache = {} if cache is None else cache  # force sharing across groups
+    spans = []  # (group meta, first stream, end stream)
+    with _fanout.Jobs() as jobs:
+        sink = _StreamSink(jobs, compression, chunk_size)
+        if not grouped:
+            body = {"columns": [
+                _write_column(_as_array(table.column(col["name"])), col,
+                              sink, policy, cache) for col in spec]}
+        else:
+            groups = []
+            for start in range(0, n, rg_rows):
+                sub = table.slice(start, min(rg_rows, n - start))
+                first = len(sink)
+                cols_meta = [
+                    _write_column(_as_array(sub.column(col["name"])), col,
+                                  sink, policy, cache)
+                    for col in spec
+                ]
+                if start > 0:
+                    # diagnostics (stats, sub-encoding histograms) live in
+                    # group 0 only — decode never reads them and N groups x
+                    # M columns of repeated stats would dominate the meta
+                    _strip_diagnostics(cols_meta)
+                g: dict = {"n_rows": sub.num_rows, "offset": None,
+                           "length": None, "columns": cols_meta}
+                spans.append((g, first, len(sink)))
+                _group_index(g, sub, spec, key_col, ord_col, rg_bloom)
+                groups.append(g)
+            body = {"row_groups": groups}
         meta = {
             "version": FORMAT_VERSION,
             "n_rows": n,
             "compression": compression,
             "chunk_size": chunk_size,
-            "columns": cols_meta,
+            **body,
             "col_stats": stripe_col_stats(table, spec),
-            "crc32": zlib.crc32(bytes(blob)),
         }
-        return bytes(blob), meta
-    cache = {} if cache is None else cache  # force sharing across groups
-    blob = bytearray()
-    groups = []
-    for start in range(0, n, rg_rows):
-        sub = table.slice(start, min(rg_rows, n - start))
-        start_off = len(blob)
-        cols_meta = [
-            _write_column(_as_array(sub.column(col["name"])), col, blob,
-                          compression, chunk_size, policy, cache)
-            for col in spec
-        ]
-        if start > 0:
-            # diagnostics (stats, sub-encoding histograms) live in group 0
-            # only — decode never reads them and N groups x M columns of
-            # repeated stats would dominate the stripe meta JSON
-            _strip_diagnostics(cols_meta)
-        g: dict = {"n_rows": sub.num_rows, "offset": start_off,
-                   "length": len(blob) - start_off, "columns": cols_meta}
-        for label, cname in (("key", key_col), ("ord", ord_col)):
-            if cname is not None and cname in sub.schema.names:
-                mm = pc.min_max(sub.column(cname))
-                g[f"{label}_min"] = mm["min"].as_py()
-                g[f"{label}_max"] = mm["max"].as_py()
-        if rg_bloom and key_col is not None \
-                and key_col in sub.schema.names:
-            # under hash placement every group's [key_min, key_max] spans
-            # the key space and range pruning is useless — the per-group
-            # bloom is what skips groups (the stripe-level analog is
-            # engine._build_bloom; ORC-side: BLOOM_FILTER_UTF8 streams)
-            g["key_bloom"] = _rg_bloom_entry(sub.column(key_col), rg_bloom)
-        # per-group value ranges for every orderable scalar column — the
-        # reference's RowIndexEntry statistics (pb/orc_proto.proto:92-99):
-        # generic predicate seek (read_where) prunes groups on ANY column,
-        # not just the clustering key. String bounds are truncated the ORC
-        # way (prefix for min; prefix with last char bumped for max) so a
-        # long text column costs <=130 chars of meta per group.
-        rng = {}
-        for col in spec:
-            if col["kind"] in _RANGE_KINDS and col["name"] not in (key_col,
-                                                                   ord_col):
-                carr = sub.column(col["name"])
+        blob = sink.stitch()
+    for g, first, end in spans:
+        g["offset"] = sink.offsets[first]
+        g["length"] = sink.offsets[end] - g["offset"]
+    meta["crc32"] = zlib.crc32(blob)
+    return blob, meta
+
+
+def _group_index(g: dict, sub: pa.Table, spec: list[dict],
+                 key_col: str | None, ord_col: str | None,
+                 rg_bloom: float | None) -> None:
+    """A row group's key/order bounds, key bloom and value ranges."""
+    for label, cname in (("key", key_col), ("ord", ord_col)):
+        if cname is not None and cname in sub.schema.names:
+            mm = pc.min_max(sub.column(cname))
+            g[f"{label}_min"] = mm["min"].as_py()
+            g[f"{label}_max"] = mm["max"].as_py()
+    if rg_bloom and key_col is not None and key_col in sub.schema.names:
+        # under hash placement every group's [key_min, key_max] spans
+        # the key space and range pruning is useless — the per-group
+        # bloom is what skips groups (the stripe-level analog is
+        # engine._build_bloom; ORC-side: BLOOM_FILTER_UTF8 streams)
+        g["key_bloom"] = _rg_bloom_entry(sub.column(key_col), rg_bloom)
+    # per-group value ranges for every orderable scalar column — the
+    # reference's RowIndexEntry statistics (pb/orc_proto.proto:92-99):
+    # generic predicate seek (read_where) prunes groups on ANY column,
+    # not just the clustering key. String bounds are truncated the ORC
+    # way (prefix for min; prefix with last char bumped for max) so a
+    # long text column costs <=130 chars of meta per group.
+    rng = {}
+    for col in spec:
+        if col["kind"] in _RANGE_KINDS and col["name"] not in (key_col,
+                                                               ord_col):
+            carr = sub.column(col["name"])
+            if col["kind"] == "string":
+                # stats only for SHORT string columns (roles, tags,
+                # ids): range predicates don't target free text, and
+                # min_max over a long text column costs ~15% of the
+                # whole stripe encode (measured) for stats nobody probes
+                nbytes = sum(c.get_total_buffer_size()
+                             for c in (carr.chunks
+                                       if hasattr(carr, "chunks")
+                                       else [carr]))
+                if nbytes > 32 * max(len(carr), 1):
+                    continue
+            mm = pc.min_max(carr)
+            lo = mm["min"].as_py()
+            if lo is not None:
+                hi = mm["max"].as_py()
                 if col["kind"] == "string":
-                    # stats only for SHORT string columns (roles, tags,
-                    # ids): range predicates don't target free text, and
-                    # min_max over a long text column costs ~15% of the
-                    # whole stripe encode (measured) for stats nobody probes
-                    nbytes = sum(c.get_total_buffer_size()
-                                 for c in (carr.chunks
-                                           if hasattr(carr, "chunks")
-                                           else [carr]))
-                    if nbytes > 32 * max(len(carr), 1):
-                        continue
-                mm = pc.min_max(carr)
-                lo = mm["min"].as_py()
-                if lo is not None:
-                    hi = mm["max"].as_py()
-                    if col["kind"] == "string":
-                        lo = _bound_str(lo, is_max=False)
-                        hi = _bound_str(hi, is_max=True)
-                    rng[col["name"]] = [lo, hi]
-        if rng:
-            g["ranges"] = rng
-        groups.append(g)
-    meta = {
-        "version": FORMAT_VERSION,
-        "n_rows": n,
-        "compression": compression,
-        "chunk_size": chunk_size,
-        "row_groups": groups,
-        "col_stats": stripe_col_stats(table, spec),
-        "crc32": zlib.crc32(bytes(blob)),
-    }
-    return bytes(blob), meta
+                    lo = _bound_str(lo, is_max=False)
+                    hi = _bound_str(hi, is_max=True)
+                rng[col["name"]] = [lo, hi]
+    if rng:
+        g["ranges"] = rng
 
 
 _INT_STAT_KINDS = {"byte", "short", "int", "long"}
@@ -511,25 +595,25 @@ def select_row_groups(meta: dict, key_value=None, key_lo=None, key_hi=None,
     return sel
 
 
-def _write_column(arr: pa.Array, col: dict, blob: bytearray,
-                  compression: str, chunk_size: int, policy: str,
-                  cache: dict | None = None) -> dict:
+def _write_column(arr: pa.Array, col: dict, sink: _StreamSink,
+                  policy: str, cache: dict | None = None) -> dict:
     """Recursive column writer: scalar kinds produce value streams; nested
     kinds (struct/list/map — the reference's C11-C13 stream compositions:
     PRESENT-only for struct, PRESENT+LENGTH for list/map,
     /root/reference/orc/column/{struct,list,map}.go) recurse into children,
-    all streams appended to the same stripe blob."""
+    all streams added to the same stripe sink, children's before the
+    column's own."""
     kind = col["kind"]
     valid = _valid_mask(arr)
     has_nulls = valid is not None
     vals = arr.drop_null() if has_nulls else arr
-    children_meta = None
 
+    children_meta = None
     if kind == "struct":
         streams: list = []
         children_meta = [
-            _write_column(_as_array(vals.field(i)), child, blob,
-                          compression, chunk_size, policy, cache)
+            _write_column(_as_array(vals.field(i)), child, sink, policy,
+                          cache)
             for i, child in enumerate(col["children"])
         ]
         col_meta: dict = {"codec": "struct"}
@@ -539,8 +623,7 @@ def _write_column(arr: pa.Array, col: dict, blob: bytearray,
         childspecs = [col["child"]] if kind == "list" \
             else [col["key"], col["value"]]
         children_meta = [
-            _write_column(_as_array(kid), cs, blob, compression, chunk_size,
-                          policy, cache)
+            _write_column(_as_array(kid), cs, sink, policy, cache)
             for kid, cs in zip(kids, childspecs)
         ]
         col_meta = {"codec": kind}
@@ -549,14 +632,7 @@ def _write_column(arr: pa.Array, col: dict, blob: bytearray,
 
     if has_nulls:
         streams.insert(0, ("PRESENT", boolrle.encode(valid)))
-    directory = []
-    for skind, raw in streams:
-        comp = chunk.compress(bytes(raw), compression, chunk_size)
-        directory.append(
-            {"kind": skind, "offset": len(blob), "length": len(comp),
-             "raw_length": len(raw)}
-        )
-        blob += comp
+    directory = [sink.add(skind, raw, col_meta) for skind, raw in streams]
     col_meta.update(
         {"name": col["name"], "kind": kind, "has_nulls": has_nulls,
          "null_count": int(arr.null_count), "n_values": len(arr),
@@ -774,9 +850,9 @@ def _encode_string_arrow(vals: pa.Array, policy: str,
             table = fsst.compile_table(fsst.train(contents.tobytes()))
             if cache is not None:
                 cache[("fsst_table", colname)] = table
-        data = fsst.compress(contents.tobytes(), table)
-        if len(data) >= len(contents):  # stored-original fallback
-            codec, data = "raw", contents.tobytes()
+        # compressed beside the walk; the stored-original fallback (codec
+        # "raw") is resolved when the stripe is stitched
+        data = _Fsst(contents.tobytes(), table)
     else:
         data = contents.tobytes()
     streams = [

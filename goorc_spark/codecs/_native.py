@@ -9,9 +9,13 @@ path, so environments without a C compiler lose speed, not correctness;
 
 The C source is embedded as a string (the bench ships the package to
 executors as a zip of .py files, so a checked-in .c file would not arrive);
-it is compiled once per machine into ``$TMPDIR/goorc_native_<hash>.so``
-keyed by the source hash, with an atomic rename so concurrent executor
-python workers race benignly. Set ``GOORC_NATIVE=0`` to disable.
+it is compiled once per machine and user into
+``$TMPDIR/goorc_native-<euid>/goorc_native_<hash>.so`` keyed by the source
+hash, with an atomic rename so concurrent executor python workers race
+benignly. The directory is created 0700; a directory or shared object
+that this euid does not own, or that group or others can write, is never
+loaded (another user could have planted it), and ``status()`` says why.
+Set ``GOORC_NATIVE=0`` to disable.
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import stat
 import subprocess
 import tempfile
 
@@ -775,6 +780,34 @@ _lib_cache: list = []  # [] = not attempted, [None] = failed, [CDLL] = loaded
 _lib_status: dict = {"path": None, "reason": None}  # of the attempt above
 
 
+def _check_private(path: str) -> None:
+    """Raise PermissionError unless `path` is no symlink, this euid owns
+    it and neither group nor others can write it."""
+    st = os.lstat(path)
+    euid = os.geteuid()
+    if stat.S_ISLNK(st.st_mode):
+        raise PermissionError(f"refusing {path}: it is a symlink")
+    if st.st_uid != euid:
+        raise PermissionError(
+            f"refusing {path}: owned by uid {st.st_uid}, not {euid}")
+    if st.st_mode & (stat.S_IWGRP | stat.S_IWOTH):
+        raise PermissionError(
+            f"refusing {path}: writable by group or others "
+            f"(mode {stat.S_IMODE(st.st_mode):o})")
+
+
+def _so_path() -> str:
+    """The shared object's path in this user's 0700 build directory,
+    creating the directory when it is missing."""
+    d = os.path.join(tempfile.gettempdir(), f"goorc_native-{os.geteuid()}")
+    try:
+        os.mkdir(d, 0o700)
+    except FileExistsError:
+        pass
+    h = hashlib.sha256(_SRC.encode()).hexdigest()[:16]
+    return os.path.join(d, f"goorc_native_{h}.so")
+
+
 def _build(so_path: str) -> None:
     src_dir = os.path.dirname(so_path)
     fd, c_path = tempfile.mkstemp(suffix=".c", dir=src_dir)
@@ -791,6 +824,7 @@ def _build(so_path: str) -> None:
                      c_path, "-lm"],
                     capture_output=True, timeout=120)
                 if r.returncode == 0:
+                    os.chmod(tmp_so, 0o700)  # whatever the umask
                     os.replace(tmp_so, so_path)
                     return
                 err = r.stderr.decode(errors="replace")[-500:]
@@ -819,10 +853,11 @@ def lib():
         if os.environ.get("GOORC_NATIVE", "1") == "0":
             reason = "disabled by GOORC_NATIVE=0"
         else:
-            h = hashlib.sha256(_SRC.encode()).hexdigest()[:16]
-            so_path = os.path.join(tempfile.gettempdir(), f"goorc_native_{h}.so")
-            if not os.path.exists(so_path):
+            so_path = _so_path()
+            _check_private(os.path.dirname(so_path))
+            if not os.path.lexists(so_path):
                 _build(so_path)
+            _check_private(so_path)
             cdll = ctypes.CDLL(so_path)
             fn = cdll.fsst_compress
             fn.restype = ctypes.c_int64
@@ -859,8 +894,9 @@ def status() -> dict:
     """Which kernel path runs in this process, and why: `loaded` (the
     native kernels are in use), `path` (the shared object loaded or tried;
     None when disabled) and `reason` (None when loaded, else "disabled by
-    GOORC_NATIVE=0" or the build/dlopen error that sent every kernel to
-    its numpy twin)."""
+    GOORC_NATIVE=0", the refusal of a build directory or shared object
+    another user could have written, or the build/dlopen error that sent
+    every kernel to its numpy twin)."""
     loaded = lib() is not None
     return {"loaded": loaded, **_lib_status}
 
@@ -872,10 +908,7 @@ def fsst_compress(ct, arr: np.ndarray) -> bytes | None:
     cdll = lib()
     if cdll is None:
         return None
-    args = getattr(ct, "nat_args", None)
-    if args is None:
-        args = _compile_args(ct)
-        ct.nat_args = args
+    args = ct.nat_args or compile_args(ct)
     n = len(arr)
     padded = np.zeros(n + 8, dtype=np.uint8)
     padded[:n] = arr
@@ -958,9 +991,9 @@ def rlev2_encode(v: np.ndarray, signed: bool, info: dict | None) -> bytes | None
     return out[:out_len].tobytes()
 
 
-def _compile_args(ct):
+def compile_args(ct):
     """Flatten a CompiledTable into the contiguous arrays the C matcher
-    takes (built once per table, cached on the table)."""
+    takes (fsst.CompiledTable builds them once, when it is constructed)."""
     class_len = np.array(ct.classes, dtype=np.int32)
     keys = [np.empty(0, np.uint64)] + [ct.member[L][0] for L in ct.classes]
     codes = [np.empty(0, np.int16)] + [ct.member[L][1] for L in ct.classes]

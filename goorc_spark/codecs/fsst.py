@@ -146,7 +146,8 @@ class CompiledTable:
     writer's shared-table cache — which was ~25% of the whole FSST cost
     on transcripts text. Matching decisions and output bytes are
     IDENTICAL to the uncompiled path (pytest pins compress(list) ==
-    compress(compiled))."""
+    compress(compiled)). Read-only once constructed, so threads may share
+    one table."""
 
     __slots__ = ("table", "header", "single_map", "classes", "lut16",
                  "lut16b", "member", "has_multi", "nat_args")
@@ -193,6 +194,11 @@ class CompiledTable:
             codes = np.array([c for c, _ in syms], dtype=np.int16)
             order = np.argsort(keys, kind="stable")
             self.member[L] = (keys[order], codes[order])
+        # the native matcher's flattened arguments, built here so a table
+        # is never written to after construction: the stripe writer's
+        # codec cache shares one table among pool threads
+        self.nat_args = _native.compile_args(self) \
+            if _native.lib() is not None else None
 
     def match_all(self, h4: np.ndarray, n: int, taken: np.ndarray,
                   code_at: np.ndarray) -> None:

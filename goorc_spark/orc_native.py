@@ -1898,7 +1898,8 @@ def _svarint_big(v: int) -> bytes:
 
 
 def _group_bloom_hashes(arr, kind: int) -> np.ndarray:
-    """uint64 writer-domain hashes of one row group's non-null values."""
+    """uint64 writer-domain hashes of a column's non-null values, in row
+    order."""
     from goorc_spark.codecs import murmur3
 
     if isinstance(arr, pa.ChunkedArray):
@@ -1967,7 +1968,22 @@ def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
     seg_blooms: dict[int, list[bytes]] = {c: [] for c in (bloom_ids or ())}
     n = sub.num_rows
     seg_rows = stride or max(n, 1)
-    for gs in range(0, max(n, 1), seg_rows):
+    starts = range(0, max(n, 1), seg_rows)
+    if bloom_ids:
+        from goorc_spark.codecs import murmur3
+        # size for the full stride like the Java writer (its expected
+        # entry count is the stride, not the group's actual rows)
+        m_bits, bk = murmur3.bloom_params(stride, bloom_fpp)
+        # each column is hashed once per stripe; a segment's filter is
+        # built from its slice of those hashes (its non-null values)
+        bloom_hashes = {}
+        for cid, ci in bloom_ids.items():
+            col = sub.column(ci)
+            seen = np.cumsum(pc.is_valid(col).to_numpy(), dtype=np.int64)
+            cuts = np.concatenate(([0], seen))[[*starts, n]]
+            bloom_hashes[cid] = (
+                _group_bloom_hashes(col, types[cid]["kind"]), cuts)
+    for gi, gs in enumerate(starts):
         g = sub.slice(gs, seg_rows)
         struct_arr = pa.StructArray.from_arrays(
             [c.combine_chunks() for c in g.columns], names=g.schema.names)
@@ -1978,14 +1994,9 @@ def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
         seg_streams.append(s)
         seg_stats.append(st)
         if bloom_ids:
-            from goorc_spark.codecs import murmur3
-            # size for the full stride like the Java writer (its expected
-            # entry count is the stride, not the group's actual rows)
-            m_bits, bk = murmur3.bloom_params(stride, bloom_fpp)
-            for cid, ci in bloom_ids.items():
-                hashes = _group_bloom_hashes(g.column(ci),
-                                             types[cid]["kind"])
-                words = murmur3.build_bloom(hashes, bk, m_bits)
+            for cid, (hashes, cuts) in bloom_hashes.items():
+                words = murmur3.build_bloom(hashes[cuts[gi]:cuts[gi + 1]],
+                                            bk, m_bits)
                 seg_blooms[cid].append(
                     _pb_bytes(1, _pb_int(1, bk)
                               + _pb_bytes(3, words.tobytes())))

@@ -6,9 +6,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 from pathlib import Path
+
+import pytest
 
 from goorc_spark.codecs import _native
 
@@ -25,6 +28,10 @@ def _status_in_subprocess(**env_overrides) -> dict:
                        capture_output=True, text=True, timeout=300)
     assert r.returncode == 0, r.stdout + r.stderr
     return json.loads(r.stdout.strip().splitlines()[-1])
+
+
+def _build_dir(tmpdir: Path) -> Path:
+    return tmpdir / f"goorc_native-{os.geteuid()}"
 
 
 def test_status_matches_this_process():
@@ -49,7 +56,40 @@ def test_status_reports_failed_build(tmp_path):
     fails, the numpy twins run, and status() says why."""
     st = _status_in_subprocess(PATH="", TMPDIR=str(tmp_path))
     assert st["loaded"] is False
-    assert Path(st["path"]).parent == tmp_path
+    assert Path(st["path"]).parent == _build_dir(tmp_path)
     assert st["reason"].startswith("RuntimeError: no C compiler produced")
     assert "found on PATH" in st["reason"]
-    assert list(tmp_path.iterdir()) == []
+    assert list(tmp_path.iterdir()) == [_build_dir(tmp_path)]
+    assert list(_build_dir(tmp_path).iterdir()) == []
+    assert _build_dir(tmp_path).stat().st_mode & 0o777 == 0o700
+
+
+@pytest.mark.parametrize("loose", ["so", "dir"])
+def test_planted_writable_object_is_never_loaded(tmp_path, loose):
+    """A working shared object at the expected path in a fresh TMPDIR is
+    refused when group and others can write it, or the directory holding
+    it: another user could have planted it."""
+    so = Path(_native.status()["path"] or "")
+    if not so.is_file():
+        pytest.skip("no native build in this process to plant")
+    d = _build_dir(tmp_path)
+    d.mkdir(mode=0o700)
+    planted = d / so.name
+    shutil.copyfile(so, planted)
+    planted.chmod(0o775 if loose == "so" else 0o700)
+    if loose == "dir":
+        d.chmod(0o777)
+    before = planted.read_bytes()
+    st = _status_in_subprocess(TMPDIR=str(tmp_path))
+    assert st["loaded"] is False
+    assert st["path"] == str(planted)
+    what = planted if loose == "so" else d
+    assert st["reason"] == (f"PermissionError: refusing {what}: writable "
+                            f"by group or others (mode "
+                            f"{what.stat().st_mode & 0o777:o})")
+    assert planted.read_bytes() == before
+    # the same object, private, loads
+    d.chmod(0o700)
+    planted.chmod(0o700)
+    st = _status_in_subprocess(TMPDIR=str(tmp_path))
+    assert st == {"loaded": True, "path": str(planted), "reason": None}

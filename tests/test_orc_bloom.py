@@ -372,3 +372,58 @@ def test_stripes_eq_wrong_typed_predicate_degrades(spark, tmp_path):
     df2 = on.read_orc_stripes(spark, str(d / "*.orc"),
                               predicate={"ts": (want, want)})
     assert df2.filter(df2.ts == want).count() == 1
+
+
+def _nullable_bloom_table(n: int = 2700) -> pa.Table:
+    """Every bloom-capable kind with nulls, so each segment's non-null
+    values are a different count than its rows."""
+    from decimal import Decimal
+
+    def nulls(vals, every):
+        return [None if i % every == 0 else v for i, v in enumerate(vals)]
+
+    return pa.table({
+        "s": pa.array(nulls([f"k{i % 300}" for i in range(n)], 7)),
+        "b": pa.array(nulls([bytes([i % 251, 7]) for i in range(n)], 5),
+                      pa.binary()),
+        "l": pa.array(nulls([i * 3 - 900 for i in range(n)], 4), pa.int64()),
+        "d": pa.array(nulls([datetime.date(2021, 1, 1)
+                             + datetime.timedelta(days=i % 500)
+                             for i in range(n)], 6)),
+        "ts": pa.array(nulls([datetime.datetime(2024, 3, 1)
+                              + datetime.timedelta(seconds=i * 11)
+                              for i in range(n)], 9),
+                       pa.timestamp("us")),
+        "dec": pa.array(nulls([Decimal(i * 7 - 500).scaleb(-2)
+                               for i in range(n)], 3),
+                        pa.decimal128(12, 2)),
+        "sparse": pa.array([f"z{i}" if i % 400 == 0 else None
+                            for i in range(n)]),
+    })
+
+
+# sha256 of write_orc(_nullable_bloom_table(), compression,
+# stripe_rows=1300, row_index_stride=333, bloom_columns=all): segments of
+# 333 rows with a short last one in every stripe (1300 = 3 x 333 + 301,
+# and the last stripe holds 100 rows); recorded before the bloom hashes
+# were computed once per stripe
+NULLABLE_BLOOM_PINS = {
+    "zlib": "030f78b6630c83daeca6832b371b6ba3366601a5d6b19fdf32564589bc269a48",
+    "none": "b57c1d43cf3148aa645404e728ff0ce2b01aa40934ba223802bb6cd73c4e0193",
+}
+
+
+@pytest.mark.parametrize("comp", sorted(NULLABLE_BLOOM_PINS))
+def test_nullable_bloom_bytes_pinned(comp):
+    import hashlib
+
+    import pyarrow.compute as pc
+
+    t = _nullable_bloom_table()
+    data = on.write_orc(t, compression=comp, stripe_rows=1300,
+                        row_index_stride=333, bloom_columns=t.column_names)
+    assert hashlib.sha256(data).hexdigest() == NULLABLE_BLOOM_PINS[comp]
+    assert on.read_orc(data).equals(t)
+    for col, v in (("s", "k12"), ("l", 1200), ("sparse", "z800")):
+        want = t.filter(pc.equal(t.column(col), v))
+        assert on.read_orc_eq(data, col, v).equals(want), col
