@@ -1,18 +1,31 @@
-"""Thread fan-out for work that releases the GIL, shared by both writers.
+"""Thread fan-out for work that releases the GIL, shared by both writers
+and the ORC reader.
 
 - `Jobs` is the submit-as-you-go entry point: inside
   `with Jobs() as jobs:`, `jobs.submit(fn, *args)` starts `fn(*args)` on
   the shared pool at once and returns a handle whose `.result()` the
-  caller reads back in whatever order it needs.
-  `arrow_stripe.encode_stripe_table` hands each FSST compress and large
-  `chunk.compress` to it as soon as the column walk has the payload, and
-  stitches the stripe in stream order at the end. Leaving the `with`
+  caller reads back in whatever order it needs. Leaving the `with`
   block waits for every job; when it is left by an exception, jobs not
   yet started are cancelled first, so no job outlives the call.
+  - `arrow_stripe.encode_stripe_table` hands each FSST compress and each
+    `chunk.compress` of 64 KB or more to it as soon as the column walk
+    has the payload, and stitches the stripe in stream order at the end.
+  - `orc_native.write_orc` hands it each stream segment of the same
+    64 KB (`arrow_stripe._JOB_MIN_BYTES`) or more as soon as its
+    column-major walk has it: in the bench table, the `text` DATA
+    segments, about ¾ of the raw bytes.
 - `fan_out(fn, items)` is `[fn(x) for x in items]` with the items dealt
   round-robin to `pool_width()` jobs and the results put back in input
-  order; `orc_native.write_orc` deflates its ~1,500 stream segments
-  through it (`zlib.compress` drops the GIL).
+  order (`zlib` drops the GIL in both directions).
+  - `orc_native.write_orc` deflates its ~1,400 smaller segments through
+    it after the walk: submitted early, each would re-take the GIL the
+    walk holds (measured 12% slower).
+  - `orc_native.read_orc` and the point reads inflate the chunks of a
+    whole zlib stream of `PARALLEL_INFLATE_BYTES` (256 KB) or more
+    through it; the chunk headers are walked, the chunks joined and the
+    inflated bytes counted on the calling thread. Smaller streams and
+    row-group windows inflate serially (64 and 16 KB cut-offs measured
+    slower: the threads contend for the GIL on 1-2 KB chunks).
 
 Output bytes never depend on the width. The width rules:
 

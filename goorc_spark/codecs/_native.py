@@ -773,6 +773,21 @@ int64_t rlev2_encode(const uint64_t *v, int64_t n, int32_t signed_flag,
     }
     return o;
 }
+
+/* rlev2_encode restarted at every cut: segment s is v[cuts[s]..cuts[s+1])
+   and its bytes end at out[ends[s]] */
+int64_t rlev2_encode_segments(const uint64_t *v, const int64_t *cuts,
+                              int64_t n_seg, int32_t signed_flag,
+                              uint8_t *out, int64_t *ends, int64_t *counts)
+{
+    int64_t o = 0;
+    for (int64_t s = 0; s < n_seg; s++) {
+        o += rlev2_encode(v + cuts[s], cuts[s + 1] - cuts[s], signed_flag,
+                          out + o, counts);
+        ends[s] = o;
+    }
+    return o;
+}
 """
 
 _CC_CANDIDATES = ("cc", "gcc", "clang")
@@ -871,6 +886,11 @@ def lib():
             fn.restype = ctypes.c_int64
             fn.argtypes = [ctypes.c_void_p, ctypes.c_int64, ctypes.c_int32,
                            ctypes.c_void_p, ctypes.c_void_p]
+            fn = cdll.rlev2_encode_segments
+            fn.restype = ctypes.c_int64
+            fn.argtypes = [ctypes.c_void_p, ctypes.c_void_p, ctypes.c_int64,
+                           ctypes.c_int32, ctypes.c_void_p, ctypes.c_void_p,
+                           ctypes.c_void_p]
             fn = cdll.pack_nanos
             fn.restype = None
             fn.argtypes = [ctypes.c_void_p, ctypes.c_int64, ctypes.c_void_p]
@@ -989,6 +1009,29 @@ def rlev2_encode(v: np.ndarray, signed: bool, info: dict | None) -> bytes | None
             if c:
                 info[name] = info.get(name, 0) + c
     return out[:out_len].tobytes()
+
+
+def rlev2_encode_segments(v: np.ndarray, cuts,
+                          signed: bool) -> list[bytes] | None:
+    """Native twin of rlev2.encode_segments: one call encodes every
+    segment v[cuts[i]:cuts[i + 1]]. Returns the per-segment bytes, or None
+    when native is off."""
+    cdll = lib()
+    if cdll is None:
+        return None
+    v = np.ascontiguousarray(v)
+    cuts = np.ascontiguousarray(cuts, dtype=np.int64)
+    n_seg = len(cuts) - 1
+    out = np.empty(16 * len(v) + 64 * n_seg, dtype=np.uint8)
+    ends = np.empty(n_seg, dtype=np.int64)
+    counts = np.zeros(4, dtype=np.int64)
+    total = cdll.rlev2_encode_segments(v.ctypes.data, cuts.ctypes.data,
+                                       n_seg, 1 if signed else 0,
+                                       out.ctypes.data, ends.ctypes.data,
+                                       counts.ctypes.data)
+    buf = out[:total].tobytes()
+    starts = [0] + ends[:-1].tolist()
+    return [buf[a:b] for a, b in zip(starts, ends.tolist())]
 
 
 def compile_args(ct):

@@ -80,6 +80,23 @@ def encode(values, signed: bool = True, info: dict | None = None) -> bytes:
     return bytes(out)
 
 
+def encode_segments(values, cuts, signed: bool = True) -> list[bytes]:
+    """[encode(values[a:b], signed) for each segment [a, b) between
+    consecutive `cuts`]: the encoder restarts at every cut. With the
+    native kernels loaded this is one call for all the segments."""
+    v = np.asarray(values, dtype=np.int64 if signed else np.uint64)
+    cuts = np.asarray(cuts, dtype=np.int64)
+    if len(cuts) == 0 or cuts[0] < 0 or cuts[-1] > len(v) \
+            or (np.diff(cuts) < 0).any():
+        raise ValueError("rlev2 segment cuts must be a non-empty, "
+                         f"non-decreasing run within [0, {len(v)}]")
+    nat = _native.rlev2_encode_segments(v, cuts, signed)
+    if nat is not None:
+        return nat
+    bounds = cuts.tolist()
+    return [encode(v[a:b], signed) for a, b in zip(bounds[:-1], bounds[1:])]
+
+
 def _encode_block(out: bytearray, block, signed: bool) -> int:
     """Encode one run from the head of `block` (<= MAX_RUN values); returns
     how many values it consumed."""

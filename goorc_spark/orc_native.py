@@ -32,6 +32,7 @@ writer emits NONE/ZLIB (the reference's parity codec).
 
 from __future__ import annotations
 
+import functools
 import sys
 import threading
 import zlib
@@ -43,13 +44,15 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from goorc_spark import _fanout
-from goorc_spark.arrow_stripe import (_decimal_from_limbs, _decimal_limbs,
-                                      _exact_int_sum, _list_array,
-                                      _list_parts, _scatter_nulls,
-                                      _varwidth_array, _varwidth_parts)
+from goorc_spark.arrow_stripe import (_JOB_MIN_BYTES, _child_offsets,
+                                      _decimal_from_limbs, _decimal_limbs,
+                                      _list_array, _list_parts,
+                                      _scatter_nulls, _varwidth_array,
+                                      _varwidth_parts)
 from goorc_spark.codecs import boolrle, byterle, chunk, floats, rlev1, rlev2
-from goorc_spark.codecs.primitives import (decode_svarints, decode_uvarints,
-                                           encode_svarints)
+from goorc_spark.codecs.primitives import (bits_required_fast,
+                                           decode_svarints, decode_uvarints,
+                                           encode_svarints, encode_uvarints)
 
 MAGIC = b"ORC"
 
@@ -189,6 +192,41 @@ def _lz4_chunk(b: bytes) -> bytes:
     return bytes(codec.decompress(b, hi))
 
 
+# a whole-stream zlib inflate of at least this many compressed bytes runs
+# chunk-parallel on the _fanout pool (zlib drops the GIL); below it, pool
+# threads would contend for the GIL on 1-2 KB chunks (64 and 16 KB
+# cut-offs measured slower on projected reads)
+PARALLEL_INFLATE_BYTES = 256 * 1024
+
+
+def _chunk_at(buf: memoryview, off: int) -> tuple[bool, memoryview, int]:
+    """(is original, body, next offset) of the chunk whose 3-byte header
+    starts at `off`; ValueError when the header or the body runs past the
+    end of the stream."""
+    end = len(buf)
+    if off + 3 > end:
+        raise ValueError(f"ORC chunk header at offset {off} is cut off: "
+                         f"{end - off} of 3 bytes left in the stream")
+    h = buf[off] | (buf[off + 1] << 8) | (buf[off + 2] << 16)
+    ln = h >> 1
+    if off + 3 + ln > end:
+        raise ValueError(f"ORC chunk at offset {off} claims {ln} bytes; "
+                         f"the stream has {end - off - 3} left")
+    return bool(h & 1), buf[off + 3:off + 3 + ln], off + 3 + ln
+
+
+def _inflate(chunk: tuple[int, bool, memoryview]):
+    """One whole zlib chunk (offset, is original, body) -> its bytes."""
+    off, original, body = chunk
+    if original:
+        return body
+    try:
+        return zlib.decompress(body, -15)
+    except zlib.error as e:
+        raise ValueError(
+            f"ORC zlib chunk at offset {off} does not inflate: {e}") from None
+
+
 def _decompress(raw, kind: int, limit: int | None = None,
                 upto: tuple[int, int] | None = None) -> bytes:
     """An ORC compressed stream: 3-byte little-endian chunk headers,
@@ -198,12 +236,23 @@ def _decompress(raw, kind: int, limit: int | None = None,
     codecs need; lz4 block chunks recover their size via _lz4_chunk.
     Row-group windows stop early: `limit` caps the output bytes, and
     `upto=(chunk_off, nbytes)` inflates whole chunks up to the one
-    starting at compressed offset `chunk_off`, then only `nbytes` more."""
+    starting at compressed offset `chunk_off`, then only `nbytes` more.
+    A whole zlib stream of PARALLEL_INFLATE_BYTES or more inflates its
+    chunks on the _fanout pool; the chunk headers are walked here. A
+    chunk cut off by the end of the stream raises ValueError."""
     if kind == COMP_NONE:
         return bytes(raw) if limit is None else bytes(raw[:limit])
-    out = bytearray()
     buf = memoryview(raw)
     off, end = 0, len(buf)
+    if kind == COMP_ZLIB and limit is None and upto is None \
+            and end >= PARALLEL_INFLATE_BYTES:
+        chunks = []
+        while off < end:
+            at = off
+            original, body, off = _chunk_at(buf, off)
+            chunks.append((at, original, body))
+        return b"".join(_fanout.fan_out(_inflate, chunks))
+    out = bytearray()
     while off < end:
         if upto is not None and off >= upto[0]:
             stop = len(out) + upto[1]
@@ -211,25 +260,28 @@ def _decompress(raw, kind: int, limit: int | None = None,
             upto = None
         if limit is not None and len(out) >= limit:
             break
-        h = buf[off] | (buf[off + 1] << 8) | (buf[off + 2] << 16)
-        off += 3
-        ln, original = h >> 1, h & 1
-        chunk_bytes = buf[off:off + ln]
-        off += ln
+        at = off
+        original, body, off = _chunk_at(buf, off)
         if original:
-            out += chunk_bytes
+            out += body
         elif kind == COMP_ZLIB:
-            if limit is not None:
-                # stop inflating INSIDE the chunk once the window has
-                # enough bytes — JVM writers put a whole small stripe's
-                # stream in one 256 KB chunk, where chunk-granularity
-                # alone decompresses everything (seek windows only)
-                out += zlib.decompressobj(-15).decompress(
-                    bytes(chunk_bytes), max(limit - len(out), 1))
-            else:
-                out += zlib.decompressobj(-15).decompress(bytes(chunk_bytes))
+            if limit is None:
+                out += _inflate((at, False, body))
+                continue
+            # stop inflating INSIDE the chunk once the window has enough
+            # bytes — JVM writers put a whole small stripe's stream in one
+            # 256 KB chunk, where chunk-granularity alone decompresses
+            # everything (seek windows only)
+            want = max(limit - len(out), 1)
+            d = zlib.decompressobj(-15)
+            piece = d.decompress(body, want)
+            if len(piece) < want and not d.eof:
+                raise ValueError(
+                    f"ORC zlib chunk at offset {at} ends before its deflate "
+                    "stream does")
+            out += piece
         elif kind in (COMP_SNAPPY, COMP_ZSTD):
-            b = bytes(chunk_bytes)
+            b = bytes(body)
             size = _snappy_size(b) if kind == COMP_SNAPPY else _zstd_size(b)
             if size < 0:
                 raise NotImplementedError(
@@ -238,7 +290,7 @@ def _decompress(raw, kind: int, limit: int | None = None,
             codec = pa.Codec("snappy" if kind == COMP_SNAPPY else "zstd")
             out += codec.decompress(b, size)
         elif kind == COMP_LZ4:
-            out += _lz4_chunk(bytes(chunk_bytes))
+            out += _lz4_chunk(bytes(body))
         elif kind == COMP_LZO:
             raise NotImplementedError(
                 "LZO ORC chunks are not natively decoded (no LZO codec in "
@@ -271,6 +323,8 @@ _memo_lock = threading.Lock()
 
 
 def _bump(metrics: dict | None, key: str, n: int = 1) -> None:
+    """metrics[key] += n, unlocked: call it on the reading thread only,
+    never from a _fanout job."""
     if metrics is not None:
         metrics[key] = metrics.get(key, 0) + n
 
@@ -526,9 +580,7 @@ class _StripeCursor:
         return (col, kind) in self.loc
 
     def _count(self, nbytes: int) -> None:
-        if self.metrics is not None:
-            self.metrics["decompressed_bytes"] = \
-                self.metrics.get("decompressed_bytes", 0) + nbytes
+        _bump(self.metrics, "decompressed_bytes", nbytes)
 
     def stream(self, col: int, kind: int) -> bytes:
         off, ln = self.loc[(col, kind)]
@@ -1489,11 +1541,17 @@ def read_orc_files(spark, path: str, columns: list[str] | None = None):
 # /root/reference/orc/writer.go (file layout), orc/column/writer.go
 # (per-column stream composition), orc/stream/writer.go (chunking).
 
+@functools.lru_cache(maxsize=256)
 def _pb_key(fnum: int, wt: int) -> bytes:
     return _uvarint_bytes((fnum << 3) | wt)
 
 
+_ONE_BYTE_VARINTS = [bytes((u,)) for u in range(0x80)]
+
+
 def _uvarint_bytes(u: int) -> bytes:
+    if u < 0x80:
+        return _ONE_BYTE_VARINTS[u]
     out = bytearray()
     while True:
         b = u & 0x7F
@@ -1603,52 +1661,85 @@ def _dec_plain(d) -> str:
     return format(d, "f")
 
 
-def _node_stats(arr: pa.Array, vals: pa.Array, kind: int,
-                node: dict) -> dict:
-    """Typed per-stripe column statistics over the non-null values (the
-    write-side mirror of _parse_col_stats; reference computes these
-    per-column in orc/writer.go:140-177). Sums that could be inexact are
-    OMITTED, matching the reference's overflow semantics: int sums via the
-    exact-overflow-checked path, decimal sums skipped entirely, float
-    min/max/sum skipped when any value is NaN."""
-    st: dict = {"n": len(vals), "has_null": bool(arr.null_count)}
-    if len(vals) == 0 or kind in (T_STRUCT, T_LIST, T_MAP, T_UNION):
-        return st
+def _segment_stats(vals: pa.Array, kind: int, cuts: np.ndarray,
+                   vcuts: np.ndarray) -> list[dict]:
+    """Typed column statistics of each segment over its non-null values
+    (the write-side mirror of _parse_col_stats; reference computes these
+    per column in orc/writer.go:140-177). Segment g holds rows
+    cuts[g]:cuts[g + 1], whose non-null values are
+    vals[vcuts[g]:vcuts[g + 1]]. Sums that could be inexact are OMITTED,
+    matching the reference's overflow semantics: an int sum that leaves int64 is None (the rule of
+    arrow_stripe._exact_int_sum), decimal sums are skipped, and a segment
+    holding a NaN skips its float min/max/sum. Float and string bounds
+    and float sums come from pyarrow on each segment's slice: numpy's
+    reductions order signed zeros and round sums differently."""
+    counts = np.diff(vcuts)
+    out = [{"n": c, "has_null": z > 0} for c, z in
+           zip(counts.tolist(), (np.diff(cuts) - counts).tolist())]
+    live = np.flatnonzero(counts)
+    if not len(live) or kind in (T_STRUCT, T_LIST, T_MAP, T_UNION):
+        return out
+    starts = vcuts[live]
+    live = live.tolist()
+
+    def put(key: str, values) -> None:
+        for i, v in zip(live, values):
+            out[i][key] = v
+
+    def reduce(ufunc, a: np.ndarray) -> list:
+        # live segments are non-empty, so each start's run ends at the
+        # next live start (or the end): empty segments between hold none
+        return ufunc.reduceat(a, starts).tolist()
+
+    def slices(a: pa.Array):
+        return (a.slice(int(vcuts[i]), out[i]["n"]) for i in live)
+
     if kind in _INT_KINDS:
-        v64 = vals.cast(pa.int64())
-        mm = pc.min_max(v64)
-        st["min"], st["max"] = mm["min"].as_py(), mm["max"].as_py()
-        st["sum"] = _exact_int_sum(v64, st["min"], st["max"])
+        v = np.asarray(vals.cast(pa.int64()), dtype=np.int64)
+        mins, maxs = reduce(np.minimum, v), reduce(np.maximum, v)
+        put("min", mins)
+        put("max", maxs)
+        if len(v) * max(-min(mins), max(maxs)) <= (1 << 63) - 1:
+            sums = reduce(np.add, v)  # provably no int64 wrap
+        else:  # exact 32-bit limb sums; None where a sum leaves int64
+            lo = reduce(np.add, (v & 0xFFFFFFFF).astype(np.uint64))
+            hi = reduce(np.add, v >> 32)
+            sums = [t if -(1 << 63) <= t < (1 << 63) else None
+                    for t in (h * (1 << 32) + l for h, l in zip(hi, lo))]
+        put("sum", sums)
     elif kind in (T_FLOAT, T_DOUBLE):
-        f64 = vals.cast(pa.float64())
-        if not pc.any(pc.is_nan(f64)).as_py():
-            mm = pc.min_max(f64)
-            st["min"] = float(mm["min"].as_py())
-            st["max"] = float(mm["max"].as_py())
-            st["sum"] = float(pc.sum(f64).as_py())
-    elif kind == T_STRING:
-        mm = pc.min_max(vals)
-        st["min"], st["max"] = mm["min"].as_py(), mm["max"].as_py()
-        st["bytes"] = int(pc.sum(pc.binary_length(vals)).as_py())
-    elif kind == T_BINARY:
-        st["bytes"] = int(pc.sum(pc.binary_length(vals)).as_py())
+        for i, seg in zip(live, slices(vals.cast(pa.float64()))):
+            if not pc.any(pc.is_nan(seg)).as_py():
+                mm = pc.min_max(seg)
+                out[i].update(min=float(mm["min"].as_py()),
+                              max=float(mm["max"].as_py()),
+                              sum=float(pc.sum(seg).as_py()))
+    elif kind in (T_STRING, T_BINARY):
+        if kind == T_STRING:
+            for i, seg in zip(live, slices(vals)):
+                mm = pc.min_max(seg)
+                out[i].update(min=mm["min"].as_py(), max=mm["max"].as_py())
+        put("bytes", reduce(np.add, _varwidth_parts(vals)[1]))
     elif kind == T_BOOLEAN:
-        st["true_count"] = int(pc.sum(vals.cast(pa.int64())).as_py())
+        put("true_count", reduce(np.add, np.asarray(
+            vals.cast(pa.int8()), dtype=np.int8).astype(np.int64)))
     elif kind == T_DATE:
-        mm = pc.min_max(vals.view(pa.int32()))
-        st["min"], st["max"] = mm["min"].as_py(), mm["max"].as_py()
+        days = np.asarray(vals.view(pa.int32()), dtype=np.int32)
+        put("min", reduce(np.minimum, days))
+        put("max", reduce(np.maximum, days))
     elif kind == T_TIMESTAMP:
-        us = vals.cast(pa.timestamp("us")).view(pa.int64())
-        mm = pc.min_max(us)
+        us = np.asarray(vals.cast(pa.timestamp("us")).view(pa.int64()),
+                        dtype=np.int64)
         # TimestampStatistics minimumUtc/maximumUtc are epoch MILLIS;
         # floor division keeps ordering exact for pre-1970 instants
-        st["min_ms"] = int(mm["min"].as_py()) // 1000
-        st["max_ms"] = int(mm["max"].as_py()) // 1000
+        put("min_ms", [v // 1000 for v in reduce(np.minimum, us)])
+        put("max_ms", [v // 1000 for v in reduce(np.maximum, us)])
     elif kind == T_DECIMAL:
-        mm = pc.min_max(vals)
-        st["min_dec"] = mm["min"].as_py()
-        st["max_dec"] = mm["max"].as_py()
-    return st
+        for i, seg in zip(live, slices(vals)):
+            mm = pc.min_max(seg)
+            out[i].update(min_dec=mm["min"].as_py(),
+                          max_dec=mm["max"].as_py())
+    return out
 
 
 def _encode_col_stats(kind: int, st: dict) -> bytes:
@@ -1748,80 +1839,132 @@ def _union_parts(arr: pa.Array) -> tuple[np.ndarray, list[pa.Array]]:
     return tags, children
 
 
+def _cuts_through(counts: np.ndarray, cuts: np.ndarray) -> np.ndarray:
+    """Where the segment cuts of a column land in an array that holds
+    `counts[r]` entries for each of its rows r: the child cuts through a
+    validity mask, list lengths, a union tag's mask or string lengths."""
+    return _child_offsets(counts)[0][cuts]
+
+
+def _bit_segments(bits: np.ndarray, cuts: np.ndarray) -> tuple[list, list]:
+    """One column's bit stream (PRESENT, boolean DATA) for a stripe:
+    packed continuously, with byte-RLE runs cut at each segment's byte
+    floor. Returns (per-segment payloads, per-segment (run, bit) skips):
+    nested children's bit counts per segment are data-dependent, so
+    per-segment restarts would corrupt sequential (JVM) decode at
+    non-byte-aligned cuts. For one segment this is boolrle.encode."""
+    packed = np.packbits(bits, bitorder="big")
+    starts = cuts[:-1]
+    parts = _byterle_segments(packed, np.append(starts // 8, packed.size))
+    return parts, [(0, b) for b in (starts % 8).tolist()]
+
+
+def _byte_segments(buf: bytes, cuts: np.ndarray) -> list[bytes]:
+    """`buf` split at byte offsets `cuts`."""
+    bounds = cuts.tolist()
+    return [buf[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
+
+
+def _byterle_segments(b: np.ndarray, cuts: np.ndarray) -> list[bytes]:
+    """Byte RLE of uint8 values `b`, restarted at every cut."""
+    bounds = cuts.tolist()
+    return [byterle.encode(b[x:y]) for x, y in zip(bounds[:-1], bounds[1:])]
+
+
 def _write_column_streams(arr: pa.Array, col_id: int, node: dict,
-                          streams: list, encodings: dict,
-                          types: list | None = None,
-                          tz: tuple[int, str] = (EPOCH_2015_S, "UTC"),
-                          stats: dict | None = None,
-                          allow_dict: bool = True) -> None:
-    """Append (col_id, kind, payload) entries for one column of one
-    segment (recursing into nested children); record the column's
-    encoding and, when `stats` is given, the column's typed statistics.
-    Every column leads with a PRESENT entry: its validity bits when it has
-    nulls here, else just its value count — _stride_stripe emits PRESENT
-    in every segment of a column that has nulls in any of them, and in
-    none otherwise. Bit streams (PRESENT, boolean DATA) are numpy bool
-    arrays, which _stride_stripe packs once across the stripe; every
-    other payload is encoded bytes. `allow_dict=False` pins strings to
-    DIRECT_V2 (per-segment dictionaries would diverge)."""
+                          cuts: np.ndarray, emit, encodings: dict,
+                          types: list, tz: tuple[int, str], stats: dict,
+                          allow_dict: bool) -> None:
+    """Encode one column of one stripe (recursing into nested children),
+    restarting every codec at each segment cut: segment g is rows
+    cuts[g]:cuts[g + 1] of `arr`. Calls emit(col_id, stream kind,
+    per-segment payloads[, per-segment (run, bit) skips of a bit
+    stream]) for each stream, records the column's encoding and sets
+    stats[col_id] to its per-segment statistics. A column emits its own
+    streams in writer order before its children's, but children are
+    visited largest first: a stable sort of the streams by column id
+    (pre-order) restores the writer's stream order.
+    PRESENT is emitted when the column has nulls anywhere in the stripe.
+    Children get their cuts from this column: through its validity
+    counts (struct fields), list/map offsets, or per-tag counts (union).
+    `allow_dict=False` pins strings to DIRECT_V2 (a dictionary is
+    stripe-global, so it needs one segment)."""
     kind = node["kind"]
     arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-    n = len(arr)
-    streams.append((col_id, PRESENT,
-                    np.asarray(arr.is_valid()) if arr.null_count else n))
-    vals = arr.drop_null() if arr.null_count else arr
-    if stats is not None:
-        stats[col_id] = _node_stats(arr, vals, kind, node)
+    vcuts = cuts  # segment cuts in the non-null values
+    vals = arr
+    if arr.null_count:
+        valid = np.asarray(arr.is_valid())
+        emit(col_id, PRESENT, *_bit_segments(valid, cuts))
+        vcuts = _cuts_through(valid, cuts)
+        vals = arr.drop_null()
+    _write_values(arr, vals, col_id, node, vcuts, emit, encodings, types,
+                  tz, stats, allow_dict)
+    # after the streams, so a big column's segments reach the pool sooner
+    stats[col_id] = _segment_stats(vals, kind, cuts, vcuts)
 
-    def children(arrays) -> None:
-        for child, sub in zip(arrays, node["subtypes"]):
-            _write_column_streams(child, sub, types[sub], streams, encodings,
-                                  types, tz, stats, allow_dict)
+
+def _write_values(arr: pa.Array, vals: pa.Array, col_id: int, node: dict,
+                  vcuts: np.ndarray, emit, encodings: dict, types: list,
+                  tz: tuple[int, str], stats: dict, allow_dict: bool) -> None:
+    """The streams of one column's non-null values `vals` (of `arr`),
+    cut at `vcuts`, and its children's (see _write_column_streams)."""
+    kind = node["kind"]
+
+    def children(arrays: list, child_cuts: list) -> None:
+        # largest child first, so its big segments start deflating early
+        for i in sorted(range(len(arrays)), key=lambda i: -arrays[i].nbytes):
+            sub = node["subtypes"][i]
+            _write_column_streams(arrays[i], sub, types[sub], child_cuts[i],
+                                  emit, encodings, types, tz, stats,
+                                  allow_dict)
+
+    def rle(v: np.ndarray, signed: bool) -> list[bytes]:
+        return rlev2.encode_segments(v, vcuts, signed)
 
     enc = ENC_DIRECT
     if kind == T_STRUCT:
         encodings[col_id] = (ENC_DIRECT, 0)
-        src = vals if n else arr
-        children(src.field(i) for i in range(len(node["subtypes"])))
+        n_fields = len(node["subtypes"])
+        children([vals.field(i) for i in range(n_fields)], [vcuts] * n_fields)
         return
     if kind in (T_LIST, T_MAP):
         lengths, kids = _list_parts(vals)
-        streams.append((col_id, LENGTH, rlev2.encode(lengths, signed=False)))
+        emit(col_id, LENGTH, rle(lengths, False))
         encodings[col_id] = (ENC_DIRECT_V2, 0)
-        children(kids)
+        children(kids, [_cuts_through(lengths, vcuts)] * len(kids))
         return
     if kind == T_UNION:
         # one byte-RLE tag per row; children written densely in row order
         # (the layout _decode_column's T_UNION branch reads back and the
-        # JVM/C++ readers expect). byte RLE self-delimits, so stride-mode
-        # per-segment restarts concatenate spec-valid like every other
-        # byte-granular codec here.
+        # JVM/C++ readers expect). byte RLE self-delimits, so per-segment
+        # restarts concatenate spec-valid like every other byte-granular
+        # codec here.
         tags, kids = _union_parts(arr)
-        streams.append((col_id, DATA, byterle.encode(tags)))
+        emit(col_id, DATA, _byterle_segments(tags, vcuts))
         encodings[col_id] = (ENC_DIRECT, 0)
-        children(kids)
+        children(kids, [_cuts_through(tags == i, vcuts)
+                        for i in range(len(kids))])
         return
     if kind == T_BOOLEAN:
         bits = np.asarray(vals.cast(pa.int8()), dtype=np.int8).astype(bool) \
             if len(vals) else np.zeros(0, bool)
-        streams.append((col_id, DATA, bits))
+        emit(col_id, DATA, *_bit_segments(bits, vcuts))
     elif kind == T_BYTE:
         b = np.asarray(vals, dtype=np.int8).view(np.uint8) if len(vals) \
             else np.zeros(0, np.uint8)
-        streams.append((col_id, DATA, byterle.encode(b)))
+        emit(col_id, DATA, _byterle_segments(b, vcuts))
     elif kind in (T_SHORT, T_INT, T_LONG):
-        v = np.asarray(vals.cast(pa.int64()), dtype=np.int64)
-        streams.append((col_id, DATA, rlev2.encode(v, signed=True)))
+        emit(col_id, DATA,
+             rle(np.asarray(vals.cast(pa.int64()), dtype=np.int64), True))
         enc = ENC_DIRECT_V2
-    elif kind == T_FLOAT:
-        streams.append((col_id, DATA,
-                        np.asarray(vals, np.float32).astype("<f4").tobytes()))
-    elif kind == T_DOUBLE:
-        streams.append((col_id, DATA,
-                        np.asarray(vals, np.float64).astype("<f8").tobytes()))
+    elif kind in (T_FLOAT, T_DOUBLE):
+        width, dt = (4, "<f4") if kind == T_FLOAT else (8, "<f8")
+        emit(col_id, DATA, _byte_segments(
+            np.asarray(vals).astype(dt).tobytes(), vcuts * width))
     elif kind == T_DATE:
         d = np.asarray(vals.view(pa.int32()), dtype=np.int32).astype(np.int64)
-        streams.append((col_id, DATA, rlev2.encode(d, signed=True)))
+        emit(col_id, DATA, rle(d, True))
         enc = ENC_DIRECT_V2
     elif kind == T_TIMESTAMP:
         from goorc_spark.codecs.timestamps import pack_nanos
@@ -1850,22 +1993,23 @@ def _write_column_streams(arr: pa.Array, col_id: int, node: dict,
         # constant base for ANY resolvable zone — exactly what the JVM
         # writer stores (verified on the DST golden; no per-value offset)
         stored = abs_sec + fix.astype(np.int64) - tz[0]
-        streams.append((col_id, DATA, rlev2.encode(stored, signed=True)))
-        streams.append((col_id, SECONDARY,
-                        rlev2.encode(pack_nanos(nanos).astype(np.int64),
-                                     signed=False)))
+        emit(col_id, DATA, rle(stored, True))
+        emit(col_id, SECONDARY,
+             rle(pack_nanos(nanos).astype(np.int64), False))
         enc = ENC_DIRECT_V2
     elif kind == T_DECIMAL:
         lo, hi = _decimal_limbs(vals)
+        bounds = zip(vcuts[:-1].tolist(), vcuts[1:].tolist())
         if node["arrow"].precision <= 18:
-            data = encode_svarints(lo.view(np.int64))
+            mant = lo.view(np.int64)
+            data = [encode_svarints(mant[a:b]) for a, b in bounds]
         else:  # exact int128 mantissas
-            data = b"".join(_svarint_big((h << 64) | l)
-                            for l, h in zip(lo.tolist(), hi.tolist()))
-        streams.append((col_id, DATA, data))
-        streams.append((col_id, SECONDARY,
-                        rlev2.encode(np.full(len(vals), node["arrow"].scale,
-                                             np.int64), signed=True)))
+            big = [_svarint_big((h << 64) | l)
+                   for l, h in zip(lo.tolist(), hi.tolist())]
+            data = [b"".join(big[a:b]) for a, b in bounds]
+        emit(col_id, DATA, data)
+        emit(col_id, SECONDARY, rle(np.full(len(vals), node["arrow"].scale,
+                                            np.int64), True))
         enc = ENC_DIRECT_V2
     elif kind in (T_STRING, T_BINARY):
         dict_arr = pc.unique(vals) \
@@ -1874,17 +2018,17 @@ def _write_column_streams(arr: pa.Array, col_id: int, node: dict,
                 and len(dict_arr) / len(vals) <= DICT_MAX_RATIO:
             dict_arr = dict_arr.sort()
             idx = pc.index_in(vals, value_set=dict_arr)
-            streams.append((col_id, DATA, rlev2.encode(
-                np.asarray(idx, dtype=np.int64), signed=False)))
+            emit(col_id, DATA, rle(np.asarray(idx, dtype=np.int64), False))
             contents, lens = _varwidth_parts(dict_arr)
-            streams.append((col_id, DICTIONARY_DATA, contents.tobytes()))
-            streams.append((col_id, LENGTH,
-                            rlev2.encode(lens, signed=False)))
+            # the dictionary is stripe-global: allow_dict means one segment
+            emit(col_id, DICTIONARY_DATA, [contents.tobytes()])
+            emit(col_id, LENGTH, [rlev2.encode(lens, signed=False)])
             encodings[col_id] = (ENC_DICTIONARY_V2, len(dict_arr))
             return
         contents, lens = _varwidth_parts(vals)
-        streams.append((col_id, DATA, contents.tobytes()))
-        streams.append((col_id, LENGTH, rlev2.encode(lens, signed=False)))
+        emit(col_id, DATA, _byte_segments(contents.tobytes(),
+                                          _cuts_through(lens, vcuts)))
+        emit(col_id, LENGTH, rle(lens, False))
         enc = ENC_DIRECT_V2
     else:
         raise NotImplementedError(f"native writer: ORC kind {kind}")
@@ -1906,7 +2050,11 @@ def _group_bloom_hashes(arr, kind: int) -> np.ndarray:
         arr = arr.combine_chunks()
     arr = arr.drop_null()
     if kind in _BLOOM_STR_KINDS:
-        return murmur3.hash64_arrow(arr)
+        # each distinct value is hashed once: bloom columns are keys that
+        # repeat within a stripe (8x less work on the bench's conv_id)
+        enc = pc.dictionary_encode(arr)
+        return murmur3.hash64_arrow(enc.dictionary)[
+            np.asarray(enc.indices, dtype=np.int64)]
     if kind == T_DATE:
         days = arr.view(pa.int32()).to_numpy(zero_copy_only=False)
         return murmur3.long_hash_many(days.astype(np.int64))
@@ -1934,6 +2082,82 @@ def _compress_all(raws: list, comp: str, block: int) -> list[bytes]:
         lambda raw: chunk.compress(raw, comp, block, 6), raws)
 
 
+def _deflated(payloads: list, comp: str, block: int) -> list[bytes]:
+    """Each payload compressed, in order: raw bytes through
+    _compress_all, deflates already started on the pool by their
+    result."""
+    raws = iter(_compress_all([p for p in payloads if isinstance(p, bytes)],
+                              comp, block))
+    return [next(raws) if isinstance(p, bytes) else p.result()
+            for p in payloads]
+
+
+# hashes whose bloom probe positions (hashes x k) are computed at once
+_BLOOM_BLOCK_HASHES = 1 << 16
+# bitset bits (one bool each) a block of segments' blooms is built in
+_BLOOM_BLOCK_BITS = 1 << 22
+
+
+def _segment_blooms(hashes: np.ndarray, hcuts: np.ndarray, k: int,
+                    m_bits: int) -> np.ndarray:
+    """(segments, m_bits // 8) uint8: segment g's bloom bitset over
+    hashes[hcuts[g]:hcuts[g + 1]], in the little-endian uint64 word layout
+    of murmur3.build_bloom. Probe positions are computed for blocks of
+    _BLOOM_BLOCK_HASHES hashes and bits set for blocks of segments, so
+    memory is bounded by the blocks, never by the stripe's rows x k."""
+    from goorc_spark.codecs import murmur3
+
+    n_seg = len(hcuts) - 1
+    out = np.empty((n_seg, m_bits // 8), dtype=np.uint8)
+    per = max(1, _BLOOM_BLOCK_BITS // m_bits)
+    for s0 in range(0, n_seg, per):
+        s1 = min(s0 + per, n_seg)
+        bits = np.zeros((s1 - s0) * m_bits, dtype=bool)
+        base = np.arange(s1 - s0, dtype=np.int64) * m_bits
+        for h0 in range(int(hcuts[s0]), int(hcuts[s1]), _BLOOM_BLOCK_HASHES):
+            h1 = min(h0 + _BLOOM_BLOCK_HASHES, int(hcuts[s1]))
+            pos = murmur3.positions_many(hashes[h0:h1], k, m_bits)
+            # each hash's segment: its bitset's first bit in `bits`
+            pos += np.repeat(base, np.diff(np.clip(hcuts[s0:s1 + 1], h0,
+                                                   h1)))[:, None]
+            bits[pos.ravel()] = True
+        out[s0:s1] = np.packbits(bits, bitorder="little").reshape(s1 - s0, -1)
+    return out
+
+
+def _bloom_stream(col: pa.Array, kind: int, cuts: np.ndarray, stride: int,
+                  fpp: float) -> bytes:
+    """A BloomFilterIndex stream: one BloomFilter per segment over the
+    column's non-null values. The column is hashed once per stripe; each
+    filter is sized for the full stride like the Java writer's (its
+    expected entry count is the stride, not the group's actual rows)."""
+    from goorc_spark.codecs import murmur3
+
+    m_bits, k = murmur3.bloom_params(stride, fpp)
+    hcuts = _cuts_through(np.asarray(col.is_valid()), cuts)
+    words = _segment_blooms(_group_bloom_hashes(col, kind), hcuts, k, m_bits)
+    # every filter is BloomFilter{numHashFunctions, utf8bitset} of one size
+    body = _pb_int(1, k) + _pb_key(3, 2) + _uvarint_bytes(m_bits // 8)
+    head = np.frombuffer(_pb_key(1, 2) + _uvarint_bytes(
+        len(body) + m_bits // 8) + body, dtype=np.uint8)
+    return np.concatenate([np.broadcast_to(head, (len(words), len(head))),
+                           words], axis=1).tobytes()
+
+
+def _row_index(pos: np.ndarray, stats: list[bytes]) -> bytes:
+    """A RowIndex stream: one RowIndexEntry{positions, statistics} per
+    segment, from a (segments, positions) array of recorded positions and
+    each segment's ColumnStatistics message. The position varints are
+    encoded in one vectorized call."""
+    flat = pos.ravel()
+    row_bytes = ((bits_required_fast(flat) + 6) // 7).reshape(pos.shape)
+    bounds = np.append(0, np.cumsum(row_bytes.sum(axis=1))).tolist()
+    varints = encode_uvarints(flat)
+    return b"".join(
+        _pb_bytes(1, _pb_bytes(1, varints[a:b]) + _pb_bytes(2, st))
+        for a, b, st in zip(bounds[:-1], bounds[1:], stats))
+
+
 def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
                    tzctx: tuple, stride: int,
                    bloom_ids: dict | None = None,
@@ -1943,140 +2167,85 @@ def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
     (index_streams, data_streams, encodings, stripe_stats), each stream
     already compression-packed.
 
-    Every codec restarts at each segment start and compression chunks
-    flush there too, so ROW_INDEX positions are always (segment
-    offset[, 0 decompressed skip], 0 value/bit skips) — exactly the
-    layout _SeekCursor consumes (a spec-conformant degenerate case of the
-    general positions the JVM writer records; reference index write path
-    orc/stripe.go:84-120). Nested schemas (struct/list/map/union, any
-    depth) segment through children exactly as _write_column_streams
-    recurses. Segments must emit identical stream sets to concatenate:
-    strings pin to DIRECT_V2 when there is more than one (per-group
-    dictionaries would diverge), and a column with nulls in ANY segment
-    gets PRESENT in every segment (all-ones where it has none). Bit
-    streams (PRESENT, boolean DATA) are packed continuously across the
-    whole stripe with byte-RLE runs and compression chunks cut at each
-    group's byte floor, recording real (run=0, bit) skips — nested
-    children's per-group bit counts are data-dependent, so per-segment
-    restarts would corrupt sequential (JVM) decode at non-byte-aligned
-    boundaries; for one segment this is boolrle.encode. All other codecs
-    (RLEv2, byte-RLE, raw, varint) self-delimit, so per-segment restart ==
-    run cut and concatenation is spec-valid."""
-    encodings: dict = {}
-    seg_streams: list[list] = []
-    seg_stats: list[dict] = []
-    seg_blooms: dict[int, list[bytes]] = {c: [] for c in (bloom_ids or ())}
+    The walk is column-major, like the reference's column writers
+    (orc/column/int.go:85-113): _write_column_streams visits each node
+    once per stripe with the segment cuts. Every codec restarts at each
+    cut and compression chunks flush there too, so ROW_INDEX positions
+    are (segment offset[, 0 decompressed skip], 0 value skips, or the
+    residual bit skip of a bit stream) — exactly the layout _SeekCursor
+    consumes (a spec-conformant degenerate case of the general positions
+    the JVM writer records; reference index write path
+    orc/stripe.go:84-120). A segment payload of _JOB_MIN_BYTES or more
+    is deflated on the _fanout pool while the walk goes on, like
+    arrow_stripe's big streams; the rest fan out after the walk
+    (submitting the ~1,400 small ones early was measured 12% slower: each
+    zlib call re-takes the GIL the walk holds)."""
     n = sub.num_rows
-    seg_rows = stride or max(n, 1)
-    starts = range(0, max(n, 1), seg_rows)
-    if bloom_ids:
-        from goorc_spark.codecs import murmur3
-        # size for the full stride like the Java writer (its expected
-        # entry count is the stride, not the group's actual rows)
-        m_bits, bk = murmur3.bloom_params(stride, bloom_fpp)
-        # each column is hashed once per stripe; a segment's filter is
-        # built from its slice of those hashes (its non-null values)
-        bloom_hashes = {}
-        for cid, ci in bloom_ids.items():
-            col = sub.column(ci)
-            seen = np.cumsum(pc.is_valid(col).to_numpy(), dtype=np.int64)
-            cuts = np.concatenate(([0], seen))[[*starts, n]]
-            bloom_hashes[cid] = (
-                _group_bloom_hashes(col, types[cid]["kind"]), cuts)
-    for gi, gs in enumerate(starts):
-        g = sub.slice(gs, seg_rows)
-        struct_arr = pa.StructArray.from_arrays(
-            [c.combine_chunks() for c in g.columns], names=g.schema.names)
-        s: list = []
-        st: dict = {}
-        _write_column_streams(struct_arr, 0, types[0], s, encodings,
-                              types, tzctx, st, allow_dict=not stride)
-        seg_streams.append(s)
-        seg_stats.append(st)
-        if bloom_ids:
-            for cid, (hashes, cuts) in bloom_hashes.items():
-                words = murmur3.build_bloom(hashes[cuts[gi]:cuts[gi + 1]],
-                                            bk, m_bits)
-                seg_blooms[cid].append(
-                    _pb_bytes(1, _pb_int(1, bk)
-                              + _pb_bytes(3, words.tobytes())))
-    keys = [(c, k) for c, k, _ in seg_streams[0]]
-    for gi, s in enumerate(seg_streams[1:], 1):
-        if [(c, k) for c, k, _ in s] != keys:
-            raise AssertionError(
-                f"stride segment {gi} emitted a different stream set than "
-                "segment 0 — allow_dict threading bug")
-    # compress each segment separately and record its stream-local offset;
-    # bit streams (numpy payloads) are packed continuously with cuts at
-    # each group's byte floor and a recorded residual bit skip
-    extras: dict = {}  # key -> per-group (run_skip, bit_skip) for bools
-    raws: list = []
-    data_keys: list = []
-    for i, key in enumerate(keys):
-        parts = [s[i][2] for s in seg_streams]
-        if key[1] == PRESENT:
-            if all(isinstance(p, int) for p in parts):
-                continue  # no nulls in any segment: no PRESENT stream
-            parts = [np.ones(p, dtype=bool) if isinstance(p, int) else p
-                     for p in parts]
-        if isinstance(parts[0], np.ndarray):
-            starts = np.zeros(len(parts), dtype=np.int64)
-            np.cumsum(np.array([p.size for p in parts[:-1]],
-                               dtype=np.int64), out=starts[1:])
-            allbits = np.concatenate(parts) if len(parts) > 1 else parts[0]
-            pk_bytes = np.packbits(allbits, bitorder="big")
-            cuts = [int(b) for b in starts // 8] + [pk_bytes.size]
-            parts = [byterle.encode(pk_bytes[cuts[g]:cuts[g + 1]])
-                     for g in range(len(parts))]
-            extras[key] = [(0, int(b % 8)) for b in starts]
-        data_keys.append(key)
-        raws += parts
-    segs = _compress_all(raws, comp, block)
-    n_seg = len(seg_streams)
-    packed: dict = {}
-    offsets: dict = {}
-    for i, key in enumerate(data_keys):
-        key_segs = segs[i * n_seg:(i + 1) * n_seg]
-        offs, pos = [], 0
-        for pk in key_segs:
-            offs.append(pos)
-            pos += len(pk)
-        packed[key] = b"".join(key_segs)
-        offsets[key] = offs
-    data_streams = [(c, k, packed[(c, k)]) for c, k in data_keys]
-    stripe_stats = {cid: _merge_col_stats(
-        types[cid]["kind"], [st.get(cid, {"n": 0}) for st in seg_stats])
-        for cid in range(len(types))}
+    cuts = np.append(np.arange(0, max(n, 1), stride or max(n, 1)), n)
+    n_seg = len(cuts) - 1
+    encodings: dict = {}
+    seg_stats: dict = {}  # col_id -> per-segment stats
+    streams: list = []  # (col_id, kind, per-segment payloads, bit skips)
+    root = pa.StructArray.from_arrays(
+        [c.combine_chunks() for c in sub.columns], names=sub.schema.names)
+    with _fanout.Jobs() as jobs:
+        def early(raw: bytes):
+            """A big payload's deflate, started on the pool now; a small
+            payload as it is, for the fan-out after the walk."""
+            if comp != chunk.NONE and len(raw) >= _JOB_MIN_BYTES:
+                return jobs.submit(chunk.compress, raw, comp, block, 6)
+            return raw
+
+        def emit(cid: int, skind: int, parts: list, skips=None) -> None:
+            streams.append((cid, skind, [early(p) for p in parts], skips))
+
+        _write_column_streams(root, 0, types[0], cuts, emit, encodings,
+                              types, tzctx, seg_stats, allow_dict=not stride)
+        streams.sort(key=lambda st: st[0])
+        # the index's statistics and blooms need no compressed sizes:
+        # encode them while the big segments deflate
+        entry_stats = {cid: [_encode_col_stats(types[cid]["kind"], st)
+                             for st in sts]
+                       for cid, sts in seg_stats.items()} if stride else {}
+        blooms = {cid: early(_bloom_stream(root.field(ci), types[cid]["kind"],
+                                           cuts, stride, bloom_fpp))
+                  for cid, ci in (bloom_ids or {}).items()}
+        segs = iter(_deflated(
+            [p for _, _, parts, _ in streams for p in parts], comp, block))
+    data_streams = []
+    offsets: dict = {}  # (col_id, kind) -> per-segment stream offsets
+    for cid, skind, parts, _ in streams:
+        packed = [next(segs) for _ in parts]
+        offsets[(cid, skind)] = np.cumsum(
+            [0] + [len(p) for p in packed[:-1]], dtype=np.int64)
+        data_streams.append((cid, skind, b"".join(packed)))
+    stripe_stats = {cid: _merge_col_stats(types[cid]["kind"], st)
+                    for cid, st in seg_stats.items()}
     if not stride:
         return [], data_streams, encodings, stripe_stats
+    skips = {(cid, skind): sk for cid, skind, _, sk in streams
+             if sk is not None}
+    zeros = np.zeros(n_seg, dtype=np.int64)
     index_raws = []
     for cid in range(len(types)):
-        layout = _position_streams(
-            types[cid]["kind"], encodings.get(cid, (ENC_DIRECT, 0))[0],
-            (cid, PRESENT) in packed)
-        entries = bytearray()
-        for gi in range(n_seg):
-            posv: list[int] = []
-            for skind, tag in layout:
-                if (cid, skind) not in packed:
-                    continue
-                posv.append(offsets[(cid, skind)][gi])
-                if comp != chunk.NONE:
-                    posv.append(0)  # offset within the decompressed chunk
-                ext = extras.get((cid, skind))
-                posv.extend(ext[gi] if ext is not None
-                            else (0,) * _POS_EXTRAS[tag])
-            entry = _pb_bytes(1, b"".join(_uvarint_bytes(p) for p in posv))
-            entry += _pb_bytes(2, _encode_col_stats(
-                types[cid]["kind"], seg_stats[gi].get(cid, {"n": 0})))
-            entries += _pb_bytes(1, entry)
-        index_raws.append((cid, ROW_INDEX, bytes(entries)))
-        if cid in seg_blooms:  # BloomFilterIndex right after its ROW_INDEX
-            index_raws.append((cid, BLOOM_FILTER_UTF8,
-                               b"".join(seg_blooms[cid])))
+        cols = []
+        for skind, tag in _position_streams(
+                types[cid]["kind"], encodings.get(cid, (ENC_DIRECT, 0))[0],
+                (cid, PRESENT) in offsets):
+            if (cid, skind) not in offsets:
+                continue
+            cols.append(offsets[(cid, skind)])
+            if comp != chunk.NONE:
+                cols.append(zeros)  # offset within the decompressed chunk
+            sk = skips.get((cid, skind))
+            cols += [np.array(x, dtype=np.int64) for x in zip(*sk)] \
+                if sk is not None else [zeros] * _POS_EXTRAS[tag]
+        pos = np.array(cols, dtype=np.uint64).reshape(len(cols), n_seg).T
+        index_raws.append((cid, ROW_INDEX, _row_index(pos, entry_stats[cid])))
+        if cid in blooms:  # BloomFilterIndex right after its ROW_INDEX
+            index_raws.append((cid, BLOOM_FILTER_UTF8, blooms[cid]))
     index_streams = [(c, k, pk) for (c, k, _), pk in zip(
-        index_raws, _compress_all([r for _, _, r in index_raws], comp,
-                                  block))]
+        index_raws, _deflated([r for _, _, r in index_raws], comp, block))]
     return index_streams, data_streams, encodings, stripe_stats
 
 

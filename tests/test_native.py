@@ -148,6 +148,31 @@ def test_rlev2_native_matches_numpy_bytes_and_info():
             assert (dec == ref).all(), f"rlev2 case {i}: decode"
 
 
+def test_rlev2_segments_native_matches_numpy():
+    """One native call per stream equals rlev2.encode restarted at every
+    cut, on the same shapes, with empty segments and a single segment."""
+    rng = random.Random(17)
+    for i, (vals, signed) in enumerate(_rlev2_cases()):
+        n = len(vals)
+        inner = sorted(rng.randrange(n + 1) for _ in range(rng.randrange(6)))
+        for cuts in ([0, n], [0, *inner, n], [0, 0, *sorted(inner * 2), n, n]):
+            v = np.asarray(vals, dtype=np.int64 if signed else np.uint64)
+            want = [rlev2.encode(v[a:b], signed)
+                    for a, b in zip(cuts[:-1], cuts[1:])]
+            assert rlev2.encode_segments(vals, cuts, signed) == want, i
+            with numpy_only():
+                assert rlev2.encode_segments(vals, cuts, signed) == want, i
+
+
+def test_rlev2_segments_refuse_bad_cuts():
+    v = np.arange(10)
+    for cuts in ([], [-1, 10], [0, 11], [0, 6, 5, 10]):
+        with pytest.raises(ValueError, match="cuts"):
+            rlev2.encode_segments(v, cuts)
+        with numpy_only(), pytest.raises(ValueError, match="cuts"):
+            rlev2.encode_segments(v, cuts)
+
+
 def test_fsst_numpy_path_linear_on_periodic_text():
     """Periodic text makes one chain of overlapping matches across the
     whole stream; the numpy path must resolve it in linear time (it once

@@ -524,6 +524,151 @@ def test_cpp_partial_group_reads_equal_full_read(comp):
             full.slice(lo, hi - lo)), (comp, lo, hi)
 
 
+# -------------------------------------------------- chunk-parallel inflate
+
+def _mixed_stream(n_chunks: int = 300) -> tuple[bytes, bytes]:
+    """(a zlib ORC stream of 3000-byte chunks, every third one random and
+    so stored original, the others deflated; its plain bytes)."""
+    from goorc_spark.codecs import chunk
+
+    rng = np.random.default_rng(7)
+    plain = b"".join(rng.bytes(3000) if i % 3 == 0 else b"row%05d;" % i * 375
+                     for i in range(n_chunks))
+    return chunk.compress(plain, "zlib", 3000), plain
+
+
+def _chunk_kinds(stream: bytes) -> set[bool]:
+    kinds, off = set(), 0
+    while off < len(stream):
+        original, _, off = on._chunk_at(memoryview(stream), off)
+        kinds.add(original)
+    return kinds
+
+
+def test_parallel_inflate_equals_serial(monkeypatch):
+    stream, plain = _mixed_stream()
+    assert _chunk_kinds(stream) == {True, False}
+    assert len(stream) >= on.PARALLEL_INFLATE_BYTES
+    out = {}
+    for w in (1, 4):
+        _width(monkeypatch, w)
+        out[w] = on._decompress(stream, on.COMP_ZLIB)
+    monkeypatch.setattr(on, "PARALLEL_INFLATE_BYTES", len(stream) + 1)
+    assert out[1] == out[4] == on._decompress(stream, on.COMP_ZLIB) == plain
+
+
+def test_parallel_inflate_reads_goldens_like_serial(monkeypatch):
+    """Every whole-stream inflate of the JVM/pyarrow goldens and of this
+    writer's files, fanned out chunk by chunk, decodes what a serial read
+    decodes."""
+    files = dict(_foreign_files())
+    files["own"] = on.write_orc(_pinned_table(), stripe_rows=2000,
+                                block_size=4096, row_index_stride=500)
+    _width(monkeypatch, 4)
+    for name, data in files.items():
+        monkeypatch.setattr(on, "PARALLEL_INFLATE_BYTES", 1 << 40)
+        want = on.read_orc(data)
+        monkeypatch.setattr(on, "PARALLEL_INFLATE_BYTES", 1)
+        assert on.read_orc(data).equals(want), name
+
+
+def test_truncated_chunks_raise():
+    """A chunk cut off by the end of its stream is an error, not short
+    output: a stored chunk that claims more bytes than are left, a
+    deflate chunk whose deflate stream ends early (whole, windowed and
+    chunk-parallel inflates) and a cut-off header."""
+    import zlib
+
+    stored = bytes(((100 << 1) | 1, 0, 0)) + b"x" * 10
+    with pytest.raises(ValueError, match="offset 0 claims 100 bytes"):
+        on._decompress(stored, on.COMP_ZLIB)
+    deflated = zlib.compress(np.random.default_rng(3).bytes(4000), 6)[2:-4]
+    cut = deflated[:len(deflated) // 2]
+    h = len(cut) << 1
+    bad = bytes((h & 255, (h >> 8) & 255, (h >> 16) & 255)) + cut
+    good, _ = _mixed_stream()
+    with pytest.raises(ValueError, match="offset 0 does not inflate"):
+        on._decompress(bad, on.COMP_ZLIB)
+    with pytest.raises(ValueError, match="offset 0 ends before"):
+        on._decompress(bad, on.COMP_ZLIB, limit=1 << 20)
+    with pytest.raises(ValueError, match=f"offset {len(good)} does not"):
+        on._decompress(good + bad, on.COMP_ZLIB)
+    with pytest.raises(ValueError, match="header at offset 0 is cut off"):
+        on._decompress(b"\x08\x00", on.COMP_ZLIB)
+
+
+def test_seek_windows_inflate_the_rest_of_the_stream():
+    """Windows start at a chunk and pass the rest of the stream: they stop
+    inside a chunk at `limit`, or `nbytes` into the chunk at `upto`."""
+    stream, plain = _mixed_stream(40)
+    starts, off, pos = [], 0, 0
+    while off < len(stream):
+        original, body, nxt = on._chunk_at(memoryview(stream), off)
+        starts.append((off, pos))
+        pos += len(body) if original else len(zlib_inflate(body))
+        off = nxt
+    for (c0, p0), (c1, p1) in zip(starts, starts[2:]):
+        # a stored chunk is appended whole: windows are prefixes at least
+        # as long as asked for
+        rest = stream[c0:]
+        got = on._decompress(rest, on.COMP_ZLIB, limit=777)
+        assert len(got) >= 777 and plain.startswith(got, p0)
+        got = on._decompress(rest, on.COMP_ZLIB, upto=(c1 - c0, 5))
+        assert len(got) >= p1 + 5 - p0 and plain.startswith(got, p0)
+
+
+def zlib_inflate(body) -> bytes:
+    import zlib
+
+    return zlib.decompress(body, -15)
+
+
+def test_metrics_same_at_every_pool_width(monkeypatch):
+    """decompressed_bytes is counted on the calling thread: a read whose
+    stream inflates fan out reports what a serial read reports."""
+    t = _pinned_table()
+    data = on.write_orc(t, stripe_rows=1500, block_size=4096)
+    monkeypatch.setattr(on, "PARALLEL_INFLATE_BYTES", 1024)
+    got = {}
+    for w in (1, 4):
+        _width(monkeypatch, w)
+        monkeypatch.setattr(on, "_memo", OrderedDict())
+        monkeypatch.setattr(on, "_memo_bytes", 0)
+        m: dict = {}
+        tbl = on.read_orc_eq(data, "conv_id", t.column("conv_id")[7].as_py(),
+                             metrics=m)
+        got[w] = (m, tbl)
+    assert got[1][0] == got[4][0]
+    assert got[1][0]["decompressed_bytes"] > 4 * 1024
+    assert got[1][1].equals(got[4][1]) and got[1][1].num_rows > 0
+
+
+def test_library_jobs_inline_in_spark_tasks(spark, tmp_path):
+    """write_orc_files and read_orc_stripes tasks run their deflates and
+    inflates inline: no executor Python worker starts a fan-out pool."""
+    t = pa.Table.from_pandas(
+        __import__("goorc_spark.transcripts", fromlist=["x"])
+        .synthesize_pandas(n_convs=200, seed=3), preserve_index=False)
+    path = str(tmp_path / "orc")
+    on.write_orc_files(spark.createDataFrame(t.to_pandas()).repartition(4),
+                       path, row_index_stride=1000)
+    back = on.read_orc_stripes(spark, path + "/*.orc").collect()
+    assert len(back) == t.num_rows
+
+    def probe(batches):
+        import threading
+
+        for _ in batches:
+            names = [th.name for th in threading.enumerate()
+                     if th.name.startswith("goorc-fanout")]
+            yield pa.RecordBatch.from_pydict(
+                {"n": pa.array([len(names)], pa.int64())})
+
+    rows = spark.range(16).repartition(8).mapInArrow(probe, "n long") \
+        .collect()
+    assert rows and {r.n for r in rows} == {0}
+
+
 # ------------------------------------------------------------ NULL values
 
 def test_read_orc_eq_null_values():
