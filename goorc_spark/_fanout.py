@@ -14,18 +14,25 @@ and the ORC reader.
     64 KB (`arrow_stripe._JOB_MIN_BYTES`) or more as soon as its
     column-major walk has it: in the bench table, the `text` DATA
     segments, about ¾ of the raw bytes.
+  - `orc_native._StripeCursor` hands it the native inflate of each zlib
+    data stream a whole-stripe read needs, in column order, when the
+    cursor is made (a stream of `PARALLEL_INFLATE_BYTES` or more as one
+    chunk range per thread); the decode walk waits for each stream as
+    it reaches it. At width 1 the cursor inflates each stream when it
+    is asked for.
 - `fan_out(fn, items)` is `[fn(x) for x in items]` with the items dealt
   round-robin to `pool_width()` jobs and the results put back in input
   order (`zlib` drops the GIL in both directions).
   - `orc_native.write_orc` deflates its ~1,400 smaller segments through
     it after the walk: submitted early, each would re-take the GIL the
     walk holds (measured 12% slower).
-  - `orc_native.read_orc` and the point reads inflate the chunks of a
-    whole zlib stream of `PARALLEL_INFLATE_BYTES` (256 KB) or more
-    through it; the chunk headers are walked, the chunks joined and the
-    inflated bytes counted on the calling thread. Smaller streams and
-    row-group windows inflate serially (64 and 16 KB cut-offs measured
-    slower: the threads contend for the GIL on 1-2 KB chunks).
+  - Without the native inflate kernel, `orc_native._decompress`
+    inflates the chunks of a whole zlib stream of
+    `PARALLEL_INFLATE_BYTES` (256 KB) or more through it; the chunk
+    headers are walked, the chunks joined and the inflated bytes counted
+    on the calling thread. Smaller streams and row-group windows inflate
+    serially (64 and 16 KB cut-offs measured slower: the threads contend
+    for the GIL on 1-2 KB chunks).
 
 Output bytes never depend on the width. The width rules:
 
@@ -84,8 +91,8 @@ def _executor(width: int):
         return _pool
 
 
-class _Done:
-    """The handle of a job that ran inline."""
+class Done:
+    """The handle of a job that ran inline (or of a value at hand)."""
 
     __slots__ = ("_value",)
 
@@ -110,7 +117,7 @@ class Jobs:
         """Start `fn(*args)`; the handle's `.result()` returns its value or
         raises its exception. Inline (width 1), it runs here and now."""
         if self._pool is None:
-            return _Done(fn(*args))
+            return Done(fn(*args))
         fut = self._pool.submit(fn, *args)
         self._futures.append(fut)
         return fut

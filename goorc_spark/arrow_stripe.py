@@ -921,17 +921,6 @@ def _list_array(lengths: np.ndarray, is_map: bool, children,
     return pa.ListArray.from_arrays(offsets, kids[0])
 
 
-def _decode_group(mv, cols: list[dict], n_rows: int, comp: str,
-                  tz: str | None, include: list[str] | None) -> pa.RecordBatch:
-    arrays, names = [], []
-    for col in cols:
-        if include is not None and col["name"] not in include:
-            continue
-        arrays.append(_read_column(mv, col, n_rows, comp, tz))
-        names.append(col["name"])
-    return pa.RecordBatch.from_arrays(arrays, names=names)
-
-
 class CorruptStripeError(ValueError):
     """Stripe blob bytes do not match the CRC32 recorded at encode time."""
 
@@ -946,27 +935,35 @@ def decode_stripe_batch(blob: bytes, meta: dict,
     /root/reference/orc/stripe.go:246-261 — skipped columns cost nothing).
     `rg_sel` restricts a row-grouped stripe to those group indices: skipped
     groups' stream bytes are never touched (the reference's Seek/Skip,
-    orc/stripe.go:369-388)."""
+    orc/stripe.go:369-388). Column-major: each included column is read
+    once over every selected group into one Arrow array (_read_column),
+    so no per-group batch is built or copied. A projection that keeps no
+    column returns a zero-column batch of the selected groups' rows."""
     if verify and "crc32" in meta and zlib.crc32(blob) != meta["crc32"]:
         raise CorruptStripeError(
             f"stripe blob CRC mismatch (expected {meta['crc32']}, got "
             f"{zlib.crc32(blob)}) — storage corruption or truncated read")
-    comp = meta["compression"]
-    mv = memoryview(blob)
     groups = meta.get("row_groups")
     if groups is None:
-        return _decode_group(mv, meta["columns"], meta["n_rows"], comp, tz,
-                             include)
-    idxs = range(len(groups)) if rg_sel is None else rg_sel
-    batches = [
-        _decode_group(mv, groups[i]["columns"], groups[i]["n_rows"], comp,
-                      tz, include)
-        for i in idxs
-    ]
-    if not batches:
-        raise ValueError("rg_sel selected no row groups")
-    return pa.Table.from_batches(batches).combine_chunks().to_batches()[0] \
-        if len(batches) > 1 else batches[0]
+        parts = [(meta["columns"], meta["n_rows"])]
+    else:
+        parts = [(groups[i]["columns"], groups[i]["n_rows"])
+                 for i in (range(len(groups)) if rg_sel is None else rg_sel)]
+        if not parts:
+            raise ValueError("rg_sel selected no row groups")
+    ns = [n for _, n in parts]
+    mv = memoryview(blob)
+    arrays, names = [], []
+    for j, col in enumerate(parts[0][0]):
+        if include is not None and col["name"] not in include:
+            continue
+        arrays.append(_read_column(mv, [cols[j] for cols, _ in parts], ns,
+                                   meta["compression"], tz))
+        names.append(col["name"])
+    if not arrays:
+        return pa.RecordBatch.from_arrays([pa.nulls(sum(ns))],
+                                          ["_"]).select([])
+    return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 def _scatter_nulls(vals: pa.Array, present: np.ndarray | None,
@@ -980,37 +977,64 @@ def _scatter_nulls(vals: pa.Array, present: np.ndarray | None,
     return vals.take(pa.array(pos, mask=~present))
 
 
-def _read_column(mv, col: dict, n_rows: int, comp: str,
+def _cat(parts: list[np.ndarray]) -> np.ndarray:
+    """np.concatenate without the copy of a single part."""
+    return parts[0] if len(parts) == 1 else np.concatenate(parts)
+
+
+def _join(parts: list) -> bytes:
+    """b"".join without the copy of a single part."""
+    return parts[0] if len(parts) == 1 else b"".join(parts)
+
+
+class _Part:
+    """One row group's share of a column: its meta, inflated streams by
+    kind, PRESENT mask (None without nulls), value and row counts."""
+
+    __slots__ = ("col", "streams", "present", "n", "n_rows")
+
+    def __init__(self, mv, col: dict, n_rows: int, comp: str):
+        self.col = col
+        self.n_rows = n_rows
+        self.streams = {
+            s["kind"]: chunk.decompress(
+                bytes(mv[s["offset"]: s["offset"] + s["length"]]), comp)
+            for s in col["streams"]}
+        if col["has_nulls"]:
+            self.present = boolrle.decode(self.streams["PRESENT"], n_rows)
+            self.n = int(self.present.sum())
+        else:
+            self.present = None
+            self.n = n_rows
+
+
+def _read_column(mv, cols: list[dict], ns: list[int], comp: str,
                  tz: str | None) -> pa.Array:
-    """Recursive column reader mirroring _write_column."""
-    streams = {
-        s["kind"]: chunk.decompress(
-            bytes(mv[s["offset"]: s["offset"] + s["length"]]), comp
-        )
-        for s in col["streams"]
-    }
-    if col["has_nulls"]:
-        present = boolrle.decode(streams["PRESENT"], n_rows)
-        n_vals = int(present.sum())
-    else:
-        present = None
-        n_vals = n_rows
-    kind = col["kind"]
-    if kind == "struct":
-        children = [
-            _read_column(mv, child, n_vals, comp, tz)
-            for child in col["children"]
-        ]
-        vals = pa.StructArray.from_arrays(
-            children, names=[c["name"] for c in col["children"]])
-        return _scatter_nulls(vals, present, n_rows)
-    if kind in ("list", "map"):
-        lengths = rlev2.decode(streams["LENGTH"], n_vals, signed=False)
-        vals = _list_array(lengths, kind == "map", lambda _: [
-            _read_column(mv, c, c["n_values"], comp, tz)
-            for c in col["children"]], f"map column {col['name']!r}")
-        return _scatter_nulls(vals, present, n_rows)
-    return _decode_column_arrow(streams, col, n_vals, present, n_rows, tz)
+    """One column over one or more row groups (`cols` its meta in each,
+    `ns` their row counts) as one array, mirroring _write_column. Scalar
+    kinds decode every group's streams to numpy, concatenate the parts
+    and build the array once; nested kinds decode per group and join
+    with one concat."""
+    kind = cols[0]["kind"]
+    if kind in ("struct", "list", "map"):
+        if len(cols) > 1:
+            return pa.concat_arrays([_read_column(mv, [c], [n], comp, tz)
+                                     for c, n in zip(cols, ns)])
+        p = _Part(mv, cols[0], ns[0], comp)
+        if kind == "struct":
+            children = [_read_column(mv, [child], [p.n], comp, tz)
+                        for child in p.col["children"]]
+            vals = pa.StructArray.from_arrays(
+                children, names=[c["name"] for c in p.col["children"]])
+        else:
+            lengths = rlev2.decode(p.streams["LENGTH"], p.n, signed=False)
+            vals = _list_array(lengths, kind == "map", lambda _: [
+                _read_column(mv, [c], [c["n_values"]], comp, tz)
+                for c in p.col["children"]],
+                f"map column {p.col['name']!r}")
+        return _scatter_nulls(vals, p.present, p.n_rows)
+    return _decode_parts([_Part(mv, c, n, comp) for c, n in zip(cols, ns)],
+                         tz)
 
 
 def _expand(values: np.ndarray, present: np.ndarray | None, n_rows: int,
@@ -1045,70 +1069,111 @@ def _varwidth_array(contents: bytes, lengths: np.ndarray,
     )
 
 
-def _decode_column_arrow(streams: dict, col: dict, n: int,
-                         present: np.ndarray | None, n_rows: int,
-                         tz: str | None) -> pa.Array:
-    kind, codec = col["kind"], col["codec"]
+def _decimal_parts(p: _Part) -> tuple[np.ndarray, np.ndarray]:
+    """(lo, hi) limbs of one group's decimal values."""
+    if p.col["codec"] == "rlev2_decimal128":
+        return (rlev2.decode(p.streams["LO"], p.n, signed=False)
+                .view(np.uint64),
+                rlev2.decode(p.streams["DATA"], p.n, signed=True))
+    mant, _ = decode_svarints(p.streams["DATA"], p.n)
+    return mant.view(np.uint64), mant >> np.int64(63)  # sign extension
+
+
+def _decode_parts(parts: list[_Part], tz: str | None) -> pa.Array:
+    """One scalar column's row groups as one array: each group's values
+    decode to numpy, the parts are concatenated, and the Arrow array is
+    built once over the stripe's PRESENT mask."""
+    col = parts[0].col
+    kind = col["kind"]
+    n_rows = sum(p.n_rows for p in parts)
+    present = None
+    if any(p.present is not None for p in parts):
+        present = _cat([np.ones(p.n_rows, bool) if p.present is None
+                        else p.present for p in parts])
+
+    def each(fn) -> np.ndarray:
+        return _cat([fn(p) for p in parts])
+
+    def rle(skind: str, signed: bool):
+        return each(lambda p: rlev2.decode(p.streams[skind], p.n,
+                                           signed=signed))
+
     if kind in INT_CAST and kind != "date":
-        v = rlev2.decode(streams["DATA"], n, signed=True)
-        full, mask = _expand(v, present, n_rows)
+        full, mask = _expand(rle("DATA", True), present, n_rows)
         return pa.array(full, mask=mask).cast(_PA_BY_KIND[kind])
     if kind == "date":
-        days = rlev2.decode(streams["DATA"], n, signed=True)
-        full, mask = _expand(days.astype(np.int32), present, n_rows)
+        full, mask = _expand(rle("DATA", True).astype(np.int32), present,
+                             n_rows)
         return pa.array(full, mask=mask).cast(pa.date32())
     if kind == "byte":
-        v = byterle.decode(streams["DATA"], n).astype(np.int8)
-        full, mask = _expand(v, present, n_rows)
+        v = each(lambda p: byterle.decode(p.streams["DATA"], p.n))
+        full, mask = _expand(v.astype(np.int8), present, n_rows)
         return pa.array(full, mask=mask)
     if kind == "bool":
-        v = boolrle.decode(streams["DATA"], n)
+        v = each(lambda p: boolrle.decode(p.streams["DATA"], p.n))
         full, mask = _expand(v, present, n_rows, fill=False)
         return pa.array(full, mask=mask)
     if kind == "float":
-        v = floats.decode_f32(streams["DATA"], n)
+        v = each(lambda p: floats.decode_f32(p.streams["DATA"], p.n))
         full, mask = _expand(v, present, n_rows, fill=np.float32(np.nan))
         return pa.array(full, mask=mask)
     if kind == "double":
-        v = floats.decode_f64(streams["DATA"], n)
+        v = each(lambda p: floats.decode_f64(p.streams["DATA"], p.n))
         full, mask = _expand(v, present, n_rows, fill=np.float64(np.nan))
         return pa.array(full, mask=mask)
     if kind in ("timestamp", "timestamp_ntz"):
-        sec = rlev2.decode(streams["DATA"], n, signed=True)
-        packed = rlev2.decode(streams["SECONDARY"], n, signed=False)
-        us = timestamps.sec_nanos_to_micros(sec, timestamps.unpack_nanos(packed))
+        us = timestamps.sec_nanos_to_micros(
+            rle("DATA", True),
+            timestamps.unpack_nanos(rle("SECONDARY", False)))
         full, mask = _expand(us, present, n_rows)
         typ = pa.timestamp("us", tz=tz) if kind == "timestamp" \
             else pa.timestamp("us")
         return pa.array(full, mask=mask).cast(typ)
     if kind == "decimal":
-        precision = int(col.get("precision", 18))
-        scale = int(col.get("scale", 0))
-        if codec == "rlev2_decimal128":
-            hi = rlev2.decode(streams["DATA"], n, signed=True)
-            lo = rlev2.decode(streams["LO"], n, signed=False).view(np.uint64)
-        else:
-            mant, _ = decode_svarints(streams["DATA"], n)
-            lo = mant.view(np.uint64)
-            hi = mant >> np.int64(63)  # sign extension (-1 / 0)
-        return _decimal_from_limbs(lo, hi, present, n_rows, precision, scale)
+        limbs = [_decimal_parts(p) for p in parts]
+        return _decimal_from_limbs(
+            _cat([lo for lo, _ in limbs]), _cat([hi for _, hi in limbs]),
+            present, n_rows, int(col.get("precision", 18)),
+            int(col.get("scale", 0)))
     if kind == "binary":
-        lengths = rlev2.decode(streams["LENGTH"], n, signed=False)
-        return _varwidth_array(streams["DATA"], lengths, present, n_rows,
+        return _varwidth_array(_join([p.streams["DATA"] for p in parts]),
+                               rle("LENGTH", False), present, n_rows,
                                pa.large_binary())
     if kind == "string":
-        if codec == "dict":
-            idx = rlev2.decode(streams["DATA"], n, signed=False)
-            dlens = rlev2.decode(streams["DICT_LENGTH"], col["dict_size"],
-                                 signed=False)
-            entries = _varwidth_array(streams["DICT_DATA"], dlens, None,
-                                      col["dict_size"], pa.large_string())
-            vals = entries.take(pa.array(idx.astype(np.int64)))
-            return _scatter_nulls(vals, present, n_rows)
-        lengths = rlev2.decode(streams["LENGTH"], n, signed=False)
-        data = streams["DATA"]
-        if codec == "fsst":
-            data = fsst.decompress(data)
-        return _varwidth_array(data, lengths, present, n_rows,
-                               pa.large_string())
+        return _decode_strings(parts, present, n_rows)
     raise NotImplementedError(f"column kind {kind!r}")
+
+
+def _decode_strings(parts: list[_Part], present: np.ndarray | None,
+                    n_rows: int) -> pa.Array:
+    """A string column's row groups as one large_string array. Groups may
+    use different codecs: FSST and raw groups (the stored-original
+    fallback) share one contents buffer; when every group holding values
+    is dict-coded, each group's indices are offset by the dictionary
+    entries before it and one take over the joined dictionaries builds
+    the column, nulls folded into the index mask. A mix of dict and
+    non-dict groups decodes per group and concatenates."""
+    held = [p for p in parts if p.n]  # an empty group is coded "raw"
+    dict_coded = [p.col["codec"] == "dict" for p in held]
+    if held and all(dict_coded):
+        idx, dlens, base = [], [], 0
+        for p in held:
+            idx.append(rlev2.decode(p.streams["DATA"], p.n, signed=False)
+                       .astype(np.int64) + base)
+            dlens.append(rlev2.decode(p.streams["DICT_LENGTH"],
+                                      p.col["dict_size"], signed=False))
+            base += p.col["dict_size"]
+        entries = _varwidth_array(
+            _join([p.streams["DICT_DATA"] for p in held]), _cat(dlens), None,
+            base, pa.large_string())
+        full, mask = _expand(_cat(idx), present, n_rows)
+        return entries.take(pa.array(full, mask=mask))
+    if any(dict_coded):
+        return pa.concat_arrays([
+            _decode_strings([p], p.present, p.n_rows) for p in parts])
+    lengths = _cat([rlev2.decode(p.streams["LENGTH"], p.n, signed=False)
+                    for p in parts])
+    data = _join([fsst.decompress(p.streams["DATA"])
+                  if p.col["codec"] == "fsst" else p.streams["DATA"]
+                  for p in parts])
+    return _varwidth_array(data, lengths, present, n_rows, pa.large_string())

@@ -15,13 +15,16 @@ hash, with an atomic rename so concurrent executor python workers race
 benignly. The directory is created 0700; a directory or shared object
 that this euid does not own, or that group or others can write, is never
 loaded (another user could have planted it), and ``status()`` says why.
-Set ``GOORC_NATIVE=0`` to disable.
+The ORC zlib inflate kernel links libz; when ``zlib.h`` or ``-lz`` is
+missing, the build is retried without it and ORC zlib streams inflate in
+Python. Set ``GOORC_NATIVE=0`` to disable.
 """
 
 from __future__ import annotations
 
 import ctypes
 import hashlib
+import mmap
 import os
 import stat
 import subprocess
@@ -788,11 +791,178 @@ int64_t rlev2_encode_segments(const uint64_t *v, const int64_t *cuts,
     }
     return o;
 }
+
+/* ------------------------------------------------------------------ *
+ * ORC byte RLE — exact ports of byterle.encode and byterle._decode_runs
+ * ------------------------------------------------------------------ */
+
+static int64_t put_literals(uint8_t *out, int64_t o, const uint8_t *b,
+                            int64_t pos, int64_t end)
+{
+    while (pos < end) {
+        int64_t take = end - pos < 128 ? end - pos : 128;
+        out[o++] = (uint8_t)(256 - take);
+        memcpy(out + o, b + pos, (size_t)take);
+        o += take;
+        pos += take;
+    }
+    return o;
+}
+
+/* Runs of >= 3 equal bytes become repeat runs of at most 130 (a 1-2 byte
+   remainder starts a literal group); shorter runs join literal groups of
+   at most 128. `out` needs capacity n + n / 128 + 16. */
+int64_t byterle_encode(const uint8_t *b, int64_t n, uint8_t *out)
+{
+    int64_t o = 0, lit = -1, s = 0;
+    while (s < n) {
+        int64_t e = s + 1;
+        while (e < n && b[e] == b[s]) e++;
+        if (e - s >= 3) {
+            if (lit >= 0) { o = put_literals(out, o, b, lit, s); lit = -1; }
+            int64_t pos = s;
+            while (e - pos >= 3) {
+                int64_t take = e - pos < 130 ? e - pos : 130;
+                out[o++] = (uint8_t)(take - 3);
+                out[o++] = b[s];
+                pos += take;
+            }
+            if (pos < e) lit = pos;
+        } else if (lit < 0) {
+            lit = s;
+        }
+        s = e;
+    }
+    if (lit >= 0) o = put_literals(out, o, b, lit, n);
+    return o;
+}
+
+/* Decode runs until `count` values or the end of `buf` (a window may end
+   inside a run). A repeat run is clipped at `cap` but counted whole, as
+   numpy slice assignment does; a literal run past `cap` returns -1 (the
+   numpy path raises there). Returns the values decoded. */
+int64_t byterle_decode(const uint8_t *buf, int64_t n, int64_t count,
+                       uint8_t *out, int64_t cap)
+{
+    int64_t got = 0, off = 0;
+    while (got < count && off < n) {
+        uint8_t c = buf[off];
+        if (c < 128) {
+            if (off + 1 >= n) break;
+            int64_t rep = (int64_t)c + 3;
+            int64_t w = got + rep <= cap ? rep : cap - got;
+            memset(out + got, buf[off + 1], (size_t)w);
+            got += rep;
+            off += 2;
+        } else {
+            int64_t want = 256 - (int64_t)c;
+            int64_t lit = want < n - off - 1 ? want : n - off - 1;
+            if (got + lit > cap) return -1;
+            memcpy(out + got, buf + off + 1, (size_t)lit);
+            got += lit;
+            off += 1 + lit;
+            if (lit < want) break;
+        }
+    }
+    return got;
+}
+
+#ifdef GOORC_ZLIB
+/* ------------------------------------------------------------------ *
+ * ORC zlib streams: 3-byte little-endian chunk headers, value =
+ * (length << 1) | is_original; deflate chunks are raw deflate, original
+ * chunks are stored as they are. Any chunk fault returns -(1 + offset
+ * of the chunk), and the caller's Python path reports it.
+ * ------------------------------------------------------------------ */
+#include <limits.h>
+#include <zlib.h>
+
+static inline int64_t chunk_header(const uint8_t *src, int64_t n,
+                                   int64_t off, int *original)
+{
+    if (off + 3 > n) return -1;
+    uint32_t h = (uint32_t)src[off] | ((uint32_t)src[off + 1] << 8)
+        | ((uint32_t)src[off + 2] << 16);
+    int64_t len = h >> 1;
+    if (off + 3 + len > n) return -1;
+    *original = h & 1;
+    return len;
+}
+
+/* Cut the chunks of src[0..n) into k ranges of about n / k compressed
+   bytes: range r is src[cuts[r]..cuts[r + 1]) (cuts has k + 1 entries)
+   and inflates to at most bound[r] bytes, an original chunk's length or
+   `block` per deflate chunk. Returns 0 or -(1 + offset). */
+int64_t orc_chunk_cuts(const uint8_t *src, int64_t n, int64_t block,
+                       int64_t k, int64_t *cuts, int64_t *bound)
+{
+    int64_t off = 0, r = 0;
+    for (int64_t i = 0; i < k; i++) bound[i] = 0;
+    cuts[0] = 0;
+    while (off < n) {
+        int original;
+        int64_t len = chunk_header(src, n, off, &original);
+        if (len < 0) return -1 - off;
+        bound[r] += original ? len : block;
+        off += 3 + len;
+        if (r < k - 1 && off * k >= (r + 1) * n) cuts[++r] = off;
+    }
+    while (r < k) cuts[++r] = n;
+    return 0;
+}
+
+/* Inflate the chunks of src[0..n) into out, never past `cap`. Returns the
+   bytes written or -(1 + offset) of a chunk that is cut off, does not
+   hold one whole deflate stream, or would pass `cap`. */
+int64_t orc_inflate(const uint8_t *src, int64_t n, uint8_t *out,
+                    int64_t cap)
+{
+    z_stream zs;
+    int ready = 0;
+    int64_t off = 0, o = 0;
+    memset(&zs, 0, sizeof zs);
+    while (off < n) {
+        int original;
+        int64_t len = chunk_header(src, n, off, &original);
+        if (len < 0) goto bad;
+        const uint8_t *body = src + off + 3;
+        if (original) {
+            if (len > cap - o) goto bad;
+            memcpy(out + o, body, (size_t)len);
+            o += len;
+        } else {
+            if (!ready) {
+                if (inflateInit2(&zs, -15) != Z_OK) goto bad;
+                ready = 1;
+            } else if (inflateReset(&zs) != Z_OK) {
+                goto bad;
+            }
+            int64_t room = cap - o;
+            zs.next_in = (Bytef *)body;
+            zs.avail_in = (uInt)len;
+            zs.next_out = out + o;
+            zs.avail_out = room > UINT_MAX ? UINT_MAX : (uInt)room;
+            if (inflate(&zs, Z_FINISH) != Z_STREAM_END) goto bad;
+            o = (int64_t)(zs.next_out - out);
+        }
+        off += 3 + len;
+    }
+    if (ready) inflateEnd(&zs);
+    return o;
+bad:
+    if (ready) inflateEnd(&zs);
+    return -1 - off;
+}
+#endif
 """
 
 _CC_CANDIDATES = ("cc", "gcc", "clang")
 _lib_cache: list = []  # [] = not attempted, [None] = failed, [CDLL] = loaded
-_lib_status: dict = {"path": None, "reason": None}  # of the attempt above
+# of the attempt above; "inflate" says whether orc_inflate is usable
+_lib_status: dict = {"path": None, "reason": None, "inflate": False,
+                     "inflate_reason": None}
+# compiler flags of the zlib inflate kernel (orc_chunk_cuts, orc_inflate)
+_ZLIB_FLAGS = ("-DGOORC_ZLIB", "-lz")
 
 
 def _check_private(path: str) -> None:
@@ -823,7 +993,28 @@ def _so_path() -> str:
     return os.path.join(d, f"goorc_native_{h}.so")
 
 
-def _build(so_path: str) -> None:
+def _compile(c_path: str, so_path: str, flags: tuple) -> str | None:
+    """Compile `c_path` into `so_path` with the first compiler on PATH and
+    `flags`: None on success, else the error."""
+    err = None
+    for cc in _CC_CANDIDATES:
+        try:
+            r = subprocess.run(
+                [cc, "-O3", "-fwrapv", "-fPIC", "-shared", "-o", so_path,
+                 c_path, "-lm", *flags],
+                capture_output=True, timeout=120)
+        except FileNotFoundError:
+            continue
+        if r.returncode == 0:
+            return None
+        err = r.stderr.decode(errors="replace")[-500:]
+    return err or f"none of {', '.join(_CC_CANDIDATES)} found on PATH"
+
+
+def _build(so_path: str) -> str | None:
+    """Build the shared object at `so_path`. Returns None, or why it was
+    built without the inflate kernel: a build that fails with
+    _ZLIB_FLAGS is retried without them, so every other kernel loads."""
     src_dir = os.path.dirname(so_path)
     fd, c_path = tempfile.mkstemp(suffix=".c", dir=src_dir)
     try:
@@ -831,22 +1022,15 @@ def _build(so_path: str) -> None:
             f.write(_SRC)
         fd2, tmp_so = tempfile.mkstemp(suffix=".so", dir=src_dir)
         os.close(fd2)
-        err = None
-        for cc in _CC_CANDIDATES:
-            try:
-                r = subprocess.run(
-                    [cc, "-O3", "-fwrapv", "-fPIC", "-shared", "-o", tmp_so,
-                     c_path, "-lm"],
-                    capture_output=True, timeout=120)
-                if r.returncode == 0:
-                    os.chmod(tmp_so, 0o700)  # whatever the umask
-                    os.replace(tmp_so, so_path)
-                    return
-                err = r.stderr.decode(errors="replace")[-500:]
-            except FileNotFoundError:
-                continue
-        raise RuntimeError(f"no C compiler produced {so_path}: " + (
-            err or f"none of {', '.join(_CC_CANDIDATES)} found on PATH"))
+        zlib_err = _compile(c_path, tmp_so, _ZLIB_FLAGS)
+        if zlib_err is not None:
+            err = _compile(c_path, tmp_so, ())
+            if err is not None:
+                raise RuntimeError(f"no C compiler produced {so_path}: "
+                                   + err)
+        os.chmod(tmp_so, 0o700)  # whatever the umask
+        os.replace(tmp_so, so_path)
+        return zlib_err
     finally:
         for p in (c_path, locals().get("tmp_so")):
             if p and os.path.exists(p) and p != so_path:
@@ -864,14 +1048,16 @@ def lib():
     if _lib_cache:
         return _lib_cache[0]
     handle = so_path = reason = None
+    inflate, inflate_reason = False, None
     try:
         if os.environ.get("GOORC_NATIVE", "1") == "0":
             reason = "disabled by GOORC_NATIVE=0"
         else:
             so_path = _so_path()
             _check_private(os.path.dirname(so_path))
+            zlib_err = None
             if not os.path.lexists(so_path):
-                _build(so_path)
+                zlib_err = _build(so_path)
             _check_private(so_path)
             cdll = ctypes.CDLL(so_path)
             fn = cdll.fsst_compress
@@ -902,10 +1088,35 @@ def lib():
             fn.restype = ctypes.c_int64
             fn.argtypes = [ctypes.c_void_p, ctypes.c_int64, ctypes.c_void_p,
                            ctypes.c_void_p, ctypes.c_void_p]
+            fn = cdll.byterle_encode
+            fn.restype = ctypes.c_int64
+            fn.argtypes = [ctypes.c_void_p, ctypes.c_int64, ctypes.c_void_p]
+            fn = cdll.byterle_decode
+            fn.restype = ctypes.c_int64
+            fn.argtypes = [ctypes.c_void_p, ctypes.c_int64, ctypes.c_int64,
+                           ctypes.c_void_p, ctypes.c_int64]
+            if zlib_err is not None:
+                inflate_reason = f"built without zlib: {zlib_err}"
+            elif not hasattr(cdll, "orc_inflate"):
+                inflate_reason = ("the cached build has no zlib kernel "
+                                  "(zlib.h or -lz was missing)")
+            else:
+                fn = cdll.orc_chunk_cuts
+                fn.restype = ctypes.c_int64
+                fn.argtypes = [ctypes.c_void_p, ctypes.c_int64,
+                               ctypes.c_int64, ctypes.c_int64,
+                               ctypes.c_void_p, ctypes.c_void_p]
+                fn = cdll.orc_inflate
+                fn.restype = ctypes.c_int64
+                fn.argtypes = [ctypes.c_void_p, ctypes.c_int64,
+                               ctypes.c_void_p, ctypes.c_int64]
+                inflate = True
             handle = cdll
     except Exception as e:
         handle, reason = None, f"{type(e).__name__}: {e}"
-    _lib_status.update(path=so_path, reason=reason)
+    _lib_status.update(path=so_path, reason=reason, inflate=inflate,
+                       inflate_reason=reason if handle is None
+                       else inflate_reason)
     _lib_cache.append(handle)
     return handle
 
@@ -916,7 +1127,10 @@ def status() -> dict:
     None when disabled) and `reason` (None when loaded, else "disabled by
     GOORC_NATIVE=0", the refusal of a build directory or shared object
     another user could have written, or the build/dlopen error that sent
-    every kernel to its numpy twin)."""
+    every kernel to its numpy twin); `inflate` (the zlib inflate kernel
+    is in use) and `inflate_reason` (None when it is, else why ORC zlib
+    streams take the Python path: the native reason, or a build without
+    zlib.h or -lz)."""
     loaded = lib() is not None
     return {"loaded": loaded, **_lib_status}
 
@@ -1032,6 +1246,96 @@ def rlev2_encode_segments(v: np.ndarray, cuts,
     buf = out[:total].tobytes()
     starts = [0] + ends[:-1].tolist()
     return [buf[a:b] for a, b in zip(starts, ends.tolist())]
+
+
+def byterle_encode(b: np.ndarray) -> bytes | None:
+    """Native twin of byterle.encode for a uint8 vector; None when native
+    is off."""
+    cdll = lib()
+    if cdll is None:
+        return None
+    b = np.ascontiguousarray(b, dtype=np.uint8)
+    out = np.empty(len(b) + len(b) // 128 + 16, dtype=np.uint8)
+    n = cdll.byterle_encode(b.ctypes.data, len(b), out.ctypes.data)
+    return out[:n].tobytes()
+
+
+def byterle_decode(data, count: int, slack: int):
+    """Native twin of byterle._decode_runs: (values, got), or None when
+    native is off or the numpy path must report the error."""
+    cdll = lib()
+    if cdll is None:
+        return None
+    buf = np.frombuffer(data, dtype=np.uint8)
+    out = np.empty(count + slack, dtype=np.uint8)
+    got = cdll.byterle_decode(buf.ctypes.data, len(buf), count,
+                              out.ctypes.data, len(out))
+    if got < 0:
+        return None
+    return out, int(got)
+
+
+# numpy asks for huge pages for arrays of 4 MB and more
+_MAP_MIN_BYTES = 4 << 20
+
+
+def has_inflate() -> bool:
+    """Whether orc_chunk_cuts/orc_inflate run natively (see status())."""
+    return lib() is not None and _lib_status["inflate"]
+
+
+def orc_chunk_cuts(raw, block: int, k: int):
+    """Cut an ORC zlib stream's chunks into `k` ranges of about equal
+    compressed bytes: (k + 1 offsets, k upper bounds of each range's
+    inflated bytes at `block` bytes per deflate chunk). None when the
+    inflate kernel is missing, `block` is outside (0, 4 GB) or a chunk
+    is cut off, which the Python path then reports."""
+    if k < 1:
+        raise ValueError(f"k must be at least 1, got {k}")
+    # `block` comes from the file's postscript: no writer uses 4 GB
+    if not has_inflate() or not 0 < block < 1 << 32:
+        return None
+    buf = np.frombuffer(raw, dtype=np.uint8)
+    cuts = np.empty(k + 1, dtype=np.int64)
+    bound = np.empty(k, dtype=np.int64)
+    if lib().orc_chunk_cuts(buf.ctypes.data, len(buf), block, k,
+                            cuts.ctypes.data, bound.ctypes.data) < 0:
+        return None
+    return cuts.tolist(), bound.tolist()
+
+
+def orc_inflate(raw, cap: int) -> memoryview | None:
+    """The whole chunks of an ORC zlib stream (or a range of them)
+    inflated into a new buffer of `cap` bytes, as a memoryview of the
+    bytes written. The GIL is released while it runs. None when the
+    kernel is missing, a chunk is cut off or does not inflate, the
+    output would pass `cap`, or `cap` bytes cannot be mapped: the caller
+    then takes the Python path.
+
+    `cap` is an upper bound, often many times the output, so a buffer
+    of _MAP_MIN_BYTES or more is an anonymous mapping: only the pages
+    written become resident, and the whole mapping goes back to the
+    system with its last view. (A heap array that size gets huge pages
+    from numpy and stays resident after it is freed: repeated reads grew
+    the process by ~50 MB.) Smaller ones come from the heap, which
+    reuses pages already faulted in, instead of a map, fresh page faults
+    and an unmap per stream."""
+    if cap < 0:
+        raise ValueError(f"cap must not be negative, got {cap}")
+    if not has_inflate():
+        return None
+    buf = np.frombuffer(raw, dtype=np.uint8)
+    if cap < _MAP_MIN_BYTES:
+        out = dst = np.empty(cap, dtype=np.uint8)
+    else:
+        try:  # `cap` comes from the file's block size
+            out = mmap.mmap(-1, cap, flags=mmap.MAP_PRIVATE)
+        except (OSError, OverflowError):
+            return None
+        dst = np.frombuffer(out, dtype=np.uint8)
+    n = lib().orc_inflate(buf.ctypes.data, len(buf), dst.ctypes.data, cap)
+    del dst
+    return None if n < 0 else memoryview(out)[:n]
 
 
 def compile_args(ct):

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from goorc_spark.codecs import _native
+
 MIN_REPEAT = 3
 MAX_REPEAT = 127 + MIN_REPEAT  # 130
 MAX_LITERALS = 128
@@ -21,6 +23,10 @@ def encode(values: np.ndarray) -> bytes:
     n = len(b)
     if n == 0:
         return b""
+    # C fast path (byte-identical; tests/test_native.py pins it)
+    nat = _native.byterle_encode(b)
+    if nat is not None:
+        return nat
     change = np.flatnonzero(np.diff(b) != 0) + 1
     starts = np.concatenate(([0], change)).tolist()
     ends = np.concatenate((change, [n])).tolist()
@@ -76,6 +82,9 @@ def decode_prefix(data, count: int) -> np.ndarray:
 
 
 def _decode_runs(data, count: int, slack: int):
+    nat = _native.byterle_decode(data, count, slack)
+    if nat is not None:
+        return nat
     buf = np.frombuffer(data, dtype=np.uint8)
     out = np.empty(count + slack, dtype=np.uint8)
     got = 0

@@ -23,6 +23,8 @@ Layout:
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 from goorc_spark.codecs import _native
@@ -308,28 +310,39 @@ def compress(data: bytes,
     return ct.header + out_len.to_bytes(4, "little") + out.tobytes()
 
 
+@functools.lru_cache(maxsize=64)
+def _symbol_matrix(header: bytes) -> tuple[np.ndarray, np.ndarray]:
+    """(256x8 matrix whose row c is symbol c zero-padded, 256-entry length
+    LUT) of a serialized symbol table [n][lens][symbols], built once per
+    table: a stripe's streams and groups share a few tables. Read-only,
+    since the cache shares them."""
+    nsym = header[0]
+    lens = np.frombuffer(header, dtype=np.uint8, count=nsym, offset=1)
+    symdata = np.frombuffer(header, dtype=np.uint8, offset=1 + nsym)
+    rows = np.repeat(np.arange(nsym), lens)
+    starts = np.cumsum(lens, dtype=np.int64) - lens
+    cols = np.arange(len(symdata)) - np.repeat(starts, lens)
+    sym_pad = np.zeros((256, 8), dtype=np.uint8)
+    sym_pad[rows, cols] = symdata
+    sym_len8 = np.zeros(256, dtype=np.uint8)
+    sym_len8[:nsym] = lens
+    sym_pad.flags.writeable = False
+    sym_len8.flags.writeable = False
+    return sym_pad, sym_len8
+
+
 def decompress(blob: bytes) -> bytes:
     mv = memoryview(blob)
     nsym = mv[0]
     lens = np.frombuffer(mv[1 : 1 + nsym], dtype=np.uint8).astype(np.int32)
-    p = 1 + nsym
-    symdata = np.frombuffer(mv[p : p + int(lens.sum())], dtype=np.uint8)
-    p += int(lens.sum())
+    p = 1 + nsym + int(lens.sum())
     enc_len = int.from_bytes(mv[p : p + 4], "little")
-    p += 4
-    codes = np.frombuffer(mv[p : p + enc_len], dtype=np.uint8)
+    codes = np.frombuffer(mv[p + 4 : p + 4 + enc_len], dtype=np.uint8)
     if enc_len == 0:
         return b""
-    # padded-symbol matrix: row c = symbol c zero-padded to 8 bytes (used
-    # by both the native token scan and the numpy scatter below)
-    sym_pad = np.zeros((256, 8), dtype=np.uint8)
-    pos = 0
-    for c in range(int(nsym)):
-        length = int(lens[c])
-        sym_pad[c, :length] = symdata[pos:pos + length]
-        pos += length
-    sym_len8 = np.zeros(256, dtype=np.uint8)
-    sym_len8[:nsym] = lens
+    # padded-symbol matrix (used by both the native token scan and the
+    # numpy scatter below)
+    sym_pad, sym_len8 = _symbol_matrix(bytes(mv[:p]))
     # C fast path (byte-identical sequential token scan)
     nat = _native.fsst_decompress(codes, sym_pad, sym_len8)
     if nat is not None:

@@ -49,7 +49,8 @@ from goorc_spark.arrow_stripe import (_JOB_MIN_BYTES, _child_offsets,
                                       _list_array, _list_parts,
                                       _scatter_nulls, _varwidth_array,
                                       _varwidth_parts)
-from goorc_spark.codecs import boolrle, byterle, chunk, floats, rlev1, rlev2
+from goorc_spark.codecs import (_native, boolrle, byterle, chunk, floats,
+                                rlev1, rlev2)
 from goorc_spark.codecs.primitives import (bits_required_fast,
                                            decode_svarints, decode_uvarints,
                                            encode_svarints, encode_uvarints)
@@ -192,11 +193,15 @@ def _lz4_chunk(b: bytes) -> bytes:
     return bytes(codec.decompress(b, hi))
 
 
-# a whole-stream zlib inflate of at least this many compressed bytes runs
-# chunk-parallel on the _fanout pool (zlib drops the GIL); below it, pool
-# threads would contend for the GIL on 1-2 KB chunks (64 and 16 KB
-# cut-offs measured slower on projected reads)
+# a zlib stream of at least this many compressed bytes inflates as one
+# chunk range per _fanout pool thread in the native kernel; on the Python
+# path (no kernel) a whole stream this big inflates chunk-parallel (zlib
+# drops the GIL; below it, pool threads would contend for the GIL on 1-2
+# KB chunks: 64 and 16 KB cut-offs measured slower on projected reads)
 PARALLEL_INFLATE_BYTES = 256 * 1024
+# ORC's default compression block size: the bound on one chunk's inflated
+# bytes where the caller does not pass the file's own
+DEFAULT_BLOCK = 256 * 1024
 
 
 def _chunk_at(buf: memoryview, off: int) -> tuple[bool, memoryview, int]:
@@ -225,6 +230,42 @@ def _inflate(chunk: tuple[int, bool, memoryview]):
     except zlib.error as e:
         raise ValueError(
             f"ORC zlib chunk at offset {off} does not inflate: {e}") from None
+
+
+# the stream kinds a column decode reads whole (not the index streams)
+_DATA_KINDS = frozenset((PRESENT, DATA, LENGTH, DICTIONARY_DATA, SECONDARY))
+
+
+def _inline(fn, *args):
+    """Jobs.submit's signature, run here and now."""
+    return _fanout.Done(fn(*args))
+
+
+def _inflate_parts(raw: memoryview, block: int, k: int, submit):
+    """Start the native inflate of a whole zlib stream as up to `k` chunk
+    ranges through `submit` (Jobs.submit, or _inline); each range's
+    output is bounded by `block` bytes per deflate chunk, the file's
+    compression block size. Returns the range handles in stream order,
+    or None when the kernel is missing or a chunk is cut off."""
+    cut = _native.orc_chunk_cuts(raw, block, k)
+    if cut is None:
+        return None
+    cuts, bound = cut
+    return [submit(_native.orc_inflate, raw[a:b], cap)
+            for a, b, cap in zip(cuts, cuts[1:], bound) if a < b]
+
+
+def _joined(parts: list | None):
+    """The inflated stream of _inflate_parts' handles (waiting for each;
+    none for an empty stream), or None when _inflate_parts gave None or
+    any range failed — the Python path then inflates the stream again,
+    and raises where it must."""
+    if parts is None:
+        return None
+    got = [p.result() for p in parts]
+    if any(g is None for g in got):
+        return None
+    return got[0] if len(got) == 1 else b"".join(got)
 
 
 def _decompress(raw, kind: int, limit: int | None = None,
@@ -391,7 +432,7 @@ def parse_postscript(buf) -> dict:
         raise ValueError(f"bad ORC postscript magic {magic!r}")
     return {"footer_length": _fint(f, 1),
             "compression": _fint(f, 2, COMP_NONE),
-            "block_size": _fint(f, 3, 256 * 1024),
+            "block_size": _fint(f, 3, DEFAULT_BLOCK),
             "metadata_length": _fint(f, 5)}
 
 
@@ -558,14 +599,25 @@ class _StripeCursor:
     """Positions + lazy decompression of one stripe's streams. The typed
     accessors (present/ints/bools/bytes_rle/raw) are the decode surface
     _decode_column uses — _SeekCursor overrides them to serve row-group
-    windows from ROW_INDEX positions instead of whole streams."""
+    windows from ROW_INDEX positions instead of whole streams.
+
+    Whole zlib streams inflate through the native kernel when it is
+    built (_inflate_parts), each in one GIL-free call per chunk range.
+    Given `jobs` (wider than one thread), the cursor starts every data
+    stream of the columns `include` keeps on the pool when it is made,
+    in column order (the order the decode walk asks for them; largest
+    first measured slower, as the walk's first streams queued behind the
+    biggest stream's ranges), so later streams inflate while the walk
+    runs; stream() waits for its own stream only."""
 
     def __init__(self, data: bytes, stripe: dict, sf: dict, comp: int,
                  metrics: dict | None = None,
-                 reader_tz: str | None = None):
+                 reader_tz: str | None = None, block: int = DEFAULT_BLOCK,
+                 jobs=None, include: set[int] | None = None):
         self.data = data
         self.comp = comp
         self.metrics = metrics
+        self.block = block
         self.loc: dict[tuple[int, int], tuple[int, int]] = {}
         off = stripe["offset"]
         for s in sf["streams"]:
@@ -575,6 +627,16 @@ class _StripeCursor:
         self.tz = sf.get("timezone", "")
         self.tz_base = _tz_base_seconds(self.tz)
         self.reader_tz = reader_tz
+        self._started: dict[tuple[int, int], list | None] = {}
+        if jobs is not None and jobs.width > 1 and comp == COMP_ZLIB \
+                and _native.has_inflate():
+            for key in sorted(self.loc):
+                if key[1] in _DATA_KINDS \
+                        and (include is None or key[0] in include):
+                    self._started[key] = _inflate_parts(
+                        self._raw(*key), block, jobs.width
+                        if self.loc[key][1] >= PARALLEL_INFLATE_BYTES
+                        else 1, jobs.submit)
 
     def has(self, col: int, kind: int) -> bool:
         return (col, kind) in self.loc
@@ -582,9 +644,23 @@ class _StripeCursor:
     def _count(self, nbytes: int) -> None:
         _bump(self.metrics, "decompressed_bytes", nbytes)
 
-    def stream(self, col: int, kind: int) -> bytes:
+    def _raw(self, col: int, kind: int) -> memoryview:
         off, ln = self.loc[(col, kind)]
-        out = _decompress(self.data[off:off + ln], self.comp)
+        return memoryview(self.data)[off:off + ln]
+
+    def stream(self, col: int, kind: int):
+        """The whole inflated stream (bytes, or a memoryview from the
+        native kernel)."""
+        out = None
+        if self.comp == COMP_ZLIB:
+            key = (col, kind)
+            parts = self._started.pop(key) if key in self._started \
+                else _inflate_parts(self._raw(col, kind), self.block, 1,
+                                    _inline)
+            out = _joined(parts)
+        if out is None:
+            off, ln = self.loc[(col, kind)]
+            out = _decompress(self.data[off:off + ln], self.comp)
         self._count(len(out))
         return out
 
@@ -792,8 +868,8 @@ class _SeekCursor(_StripeCursor):
 
     def __init__(self, data: bytes, stripe: dict, sf: dict, comp: int,
                  types: list[dict], g0: int, g1: int,
-                 metrics: dict | None = None):
-        super().__init__(data, stripe, sf, comp, metrics)
+                 metrics: dict | None = None, block: int = DEFAULT_BLOCK):
+        super().__init__(data, stripe, sf, comp, metrics, block=block)
         self.base: dict[tuple[int, int], tuple] = {}
         self.skip: dict[tuple[int, int], tuple] = {}
         # (col, kind) -> (g1's byte or chunk offset, bytes needed past
@@ -1027,7 +1103,8 @@ def _decode_stripe(data: bytes, stripe: dict, sf: dict, comp: int,
                    types: list[dict], include: set[int] | None,
                    stride: int = 0, keep: list[bool] | None = None,
                    metrics: dict | None = None,
-                   reader_tz: str | None = None, hi: int | None = None
+                   reader_tz: str | None = None, hi: int | None = None,
+                   block: int = DEFAULT_BLOCK
                    ) -> tuple[pa.StructArray, int] | None:
     """Decode one stripe: all of it (`keep` None), or only the row groups
     `keep` marks, each run of kept groups through one _SeekCursor window
@@ -1038,7 +1115,9 @@ def _decode_stripe(data: bytes, stripe: dict, sf: dict, comp: int,
     offset); without one, or on a position layout _split_positions does
     not know, the whole stripe is decoded, so callers must filter or
     slice the rows they asked for. Counts groups_total / groups_decoded
-    in `metrics` for a `keep` mask."""
+    in `metrics` for a `keep` mask. `block` is the file's compression
+    block size. A whole-stripe decode inflates its zlib streams on the
+    _fanout pool beside the decode walk (_StripeCursor)."""
     n = stripe["n_rows"]
     if keep is not None:
         indexed = {s["column"] for s in sf["streams"]
@@ -1061,7 +1140,7 @@ def _decode_stripe(data: bytes, stripe: dict, sf: dict, comp: int,
             try:
                 parts = [_decode_column(
                     _SeekCursor(data, stripe, sf, comp, types, g0, g1,
-                                metrics),
+                                metrics, block),
                     types, 0, min(g1 * stride, end) - g0 * stride, include)
                     for g0, g1 in runs]
             except NotImplementedError:
@@ -1075,8 +1154,10 @@ def _decode_stripe(data: bytes, stripe: dict, sf: dict, comp: int,
                     [pa.RecordBatch.from_struct_array(p) for p in parts])
                 return tbl.combine_chunks().to_struct_array() \
                     .combine_chunks(), start
-    cur = _StripeCursor(data, stripe, sf, comp, metrics, reader_tz)
-    return _decode_column(cur, types, 0, n, include), 0
+    with _fanout.Jobs() as jobs:
+        cur = _StripeCursor(data, stripe, sf, comp, metrics, reader_tz,
+                            block, jobs, include)
+        return _decode_column(cur, types, 0, n, include), 0
 
 
 def _projected_schema(types: list[dict],
@@ -1091,7 +1172,8 @@ def _projected_schema(types: list[dict],
 def _eq_stripe(data: bytes, stripe: dict, sf: dict, comp: int,
                types: list[dict], stride: int, col_id: int, values: list,
                h64s: list[int], include: set[int] | None,
-               metrics: dict | None) -> pa.StructArray | None:
+               metrics: dict | None,
+               block: int = DEFAULT_BLOCK) -> pa.StructArray | None:
     """The row groups of one stripe that might hold `col IN values`
     (bloom + per-group stats, conservative), unfiltered; None when every
     group was pruned."""
@@ -1099,7 +1181,7 @@ def _eq_stripe(data: bytes, stripe: dict, sf: dict, comp: int,
                            col_id, types[col_id]["kind"], values, h64s,
                            stripe["n_rows"], stride)
     out = _decode_stripe(data, stripe, sf, comp, types, include, stride,
-                         keep, metrics)
+                         keep, metrics, block=block)
     return None if out is None else out[0]
 
 
@@ -1152,7 +1234,7 @@ def read_orc_eq(data: bytes, column: str, value,
             sf = _stripe_footer(data, stripe, ps["compression"], metrics)
             arr = _eq_stripe(data, stripe, sf, ps["compression"], types,
                              stride, col_id, values, h64s, dec_include,
-                             metrics)
+                             metrics, ps["block_size"])
             if arr is not None:
                 batches.append(pa.RecordBatch.from_struct_array(arr))
     tbl = _table(batches, types, dec_include)
@@ -1404,7 +1486,8 @@ def read_orc(data: bytes, columns: list[str] | None = None,
     for stripe in footer["stripes"]:
         sf = _stripe_footer(data, stripe, ps["compression"])
         root, _ = _decode_stripe(data, stripe, sf, ps["compression"], types,
-                                 include, reader_tz=reader_timezone)
+                                 include, reader_tz=reader_timezone,
+                                 block=ps["block_size"])
         batches.append(pa.RecordBatch.from_struct_array(root))
     return _table(batches, types, include)
 
@@ -1443,7 +1526,7 @@ def read_orc_rows(data: bytes, lo: int, hi: int,
                 for g in range(-(-n // stride))] if stride else None
         root, start = _decode_stripe(data, stripe, sf, ps["compression"],
                                      types, include, stride, keep, metrics,
-                                     hi=s_hi)
+                                     hi=s_hi, block=ps["block_size"])
         # slice the batch, not the struct: from_struct_array keeps the
         # children's full length for a slice at offset 0 (pyarrow 16)
         batches.append(pa.RecordBatch.from_struct_array(root).slice(

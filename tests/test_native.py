@@ -14,7 +14,7 @@ import time
 import numpy as np
 import pytest
 
-from goorc_spark.codecs import _native, fsst, rlev2
+from goorc_spark.codecs import _native, byterle, fsst, rlev2
 
 pytestmark = pytest.mark.skipif(
     _native.lib() is None, reason="no C compiler / native lib unavailable")
@@ -245,3 +245,66 @@ def test_fsst_native_decompress_matches_numpy():
         with numpy_only():
             b = fsst.decompress(blob)
         assert a == b == data, f"fsst decompress case {i}"
+
+
+def _byte_runs(rng: random.Random) -> bytes:
+    """Runs of 1-300 equal bytes and literal stretches, mixed."""
+    out = bytearray()
+    for _ in range(rng.randrange(1, 40)):
+        if rng.random() < 0.5:
+            out += bytes([rng.randrange(4)]) * rng.randrange(1, 300)
+        else:
+            out += bytes(rng.randrange(256) for _ in range(rng.randrange(1, 300)))
+    return bytes(out)
+
+
+def _runs_or_error(data, count: int, slack: int):
+    try:
+        out, got = byterle._decode_runs(data, count, slack)
+    except ValueError as e:
+        return type(e)
+    return out[:min(got, count + slack)].tobytes(), got
+
+
+def test_byterle_native_matches_numpy():
+    rng = random.Random(17)
+    cases = [b"", b"\x00", b"ab", b"aaa", b"a" * 130, b"a" * 131,
+             b"a" * 132, b"a" * 133, b"a" * 260, bytes(range(256)) * 3,
+             b"ab" * 200 + b"c" * 3 + b"d" * 2]
+    cases += [_byte_runs(rng) for _ in range(150)]
+    for i, raw in enumerate(cases):
+        vals = np.frombuffer(raw, dtype=np.uint8)
+        enc = byterle.encode(vals)
+        with numpy_only():
+            assert byterle.encode(vals) == enc, f"encode case {i}"
+        assert byterle.decode(enc, len(vals)).tobytes() == raw
+        # whole and prefix decodes, windows cut anywhere, short and long
+        # counts: (values, count) or the error must match numpy's
+        for count, cut in ((len(vals), len(enc)),
+                           (rng.randrange(len(vals) + 2), len(enc)),
+                           (rng.randrange(len(vals) + 2),
+                            rng.randrange(len(enc) + 1))):
+            for slack in (0, byterle.MAX_REPEAT + 1):
+                a = _runs_or_error(enc[:cut], count, slack)
+                with numpy_only():
+                    b = _runs_or_error(enc[:cut], count, slack)
+                assert a == b, f"decode case {i} {count} {cut} {slack}"
+
+
+def test_fsst_symbol_matrix_built_once_per_table():
+    data = b"the quick brown fox jumps over the lazy dog; " * 300
+    blob = fsst.compress(data)
+    fsst._symbol_matrix.cache_clear()
+    for _ in range(3):
+        assert fsst.decompress(blob) == data
+    info = fsst._symbol_matrix.cache_info()
+    assert (info.misses, info.hits) == (1, 2)
+    nsym = blob[0]
+    lens = list(blob[1:1 + nsym])
+    pad, lens8 = fsst._symbol_matrix(bytes(blob[:1 + nsym + sum(lens)]))
+    pos = 1 + nsym
+    for c, ln in enumerate(lens):
+        assert pad[c].tobytes() == blob[pos:pos + ln] + bytes(8 - ln)
+        pos += ln
+    assert lens8.tolist() == lens + [0] * (256 - nsym)
+    assert not pad.flags.writeable

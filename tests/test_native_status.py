@@ -36,19 +36,63 @@ def _build_dir(tmpdir: Path) -> Path:
 
 def test_status_matches_this_process():
     st = _native.status()
-    assert set(st) == {"loaded", "path", "reason"}
+    assert set(st) == {"loaded", "path", "reason", "inflate",
+                       "inflate_reason"}
     assert st["loaded"] == (_native.lib() is not None)
+    assert st["inflate"] == _native.has_inflate()
+    assert (st["inflate_reason"] is None) == st["inflate"]
     if st["loaded"]:
         assert st["reason"] is None
         assert os.path.exists(st["path"])
     else:
-        assert st["reason"]
+        assert st["reason"] and not st["inflate"]
 
 
 def test_status_disabled_by_env():
     assert _status_in_subprocess(GOORC_NATIVE="0") == {
         "loaded": False, "path": None,
-        "reason": "disabled by GOORC_NATIVE=0"}
+        "reason": "disabled by GOORC_NATIVE=0", "inflate": False,
+        "inflate_reason": "disabled by GOORC_NATIVE=0"}
+
+
+# a fresh interpreter (imported with GOORC_NATIVE=0, so nothing is built
+# yet) whose first build links a missing library or includes a missing
+# header with the zlib kernel
+_NO_ZLIB_PROBE = (
+    "import json, os, sys; "
+    "from goorc_spark.codecs import _native as n; "
+    "os.environ['GOORC_NATIVE'] = '1'; "
+    "n._lib_cache.clear(); n._ZLIB_FLAGS = tuple(sys.argv[1:]); "
+    "from goorc_spark.codecs import byterle, fsst, rlev2; "
+    "ok = (rlev2.decode(rlev2.encode([5, 6, 7], True), 3, True).tolist() "
+    "== [5, 6, 7] and byterle.encode([0] * 9) == b'\\x06\\x00' "
+    "and fsst.decompress(fsst.compress(b'ab' * 99)) == b'ab' * 99); "
+    "print(json.dumps(dict(n.status(), ok=ok, "
+    "has=n.has_inflate(), cuts=n.orc_chunk_cuts(b'', 1, 1))))")
+
+
+@pytest.mark.parametrize("flags", [
+    ("-DGOORC_ZLIB", "-lgoorc_no_such_zlib"),
+    ("-DGOORC_ZLIB", "-include", "goorc_no_such_zlib.h", "-lz")],
+    ids=["no_libz", "no_header"])
+def test_build_without_zlib_keeps_every_other_kernel(tmp_path, flags):
+    """When the zlib kernel does not build, the build is retried without
+    it: every other kernel loads, ORC zlib streams take the Python path,
+    and status() says why."""
+    if not _native.status()["loaded"]:
+        pytest.skip("no C compiler in this process")
+    env = dict(os.environ, PYTHONPATH=str(ROOT), TMPDIR=str(tmp_path),
+               GOORC_NATIVE="0")
+    r = subprocess.run([sys.executable, "-c", _NO_ZLIB_PROBE, *flags],
+                       env=env, capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, r.stdout + r.stderr
+    st = json.loads(r.stdout.strip().splitlines()[-1])
+    assert st["loaded"] and st["reason"] is None and st["ok"]
+    assert st["inflate"] is False and st["has"] is False
+    assert st["cuts"] is None
+    assert st["inflate_reason"].startswith("built without zlib: ")
+    assert "goorc_no_such_zlib" in st["inflate_reason"]
+    assert Path(st["path"]).parent == _build_dir(tmp_path)
 
 
 def test_status_reports_failed_build(tmp_path):
@@ -92,4 +136,6 @@ def test_planted_writable_object_is_never_loaded(tmp_path, loose):
     d.chmod(0o700)
     planted.chmod(0o700)
     st = _status_in_subprocess(TMPDIR=str(tmp_path))
-    assert st == {"loaded": True, "path": str(planted), "reason": None}
+    assert st["inflate"] == _native.has_inflate()
+    assert {k: st[k] for k in ("loaded", "path", "reason")} == {
+        "loaded": True, "path": str(planted), "reason": None}
