@@ -94,13 +94,14 @@ def _orc_native_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     `.orc` files via the JVM writer (zlib) -> bytes parsed and decoded by
     the repo's OWN codecs (orc_native.read_orc: postscript/footer/stripe-
     footer protobuf walk + RLEv2/byte-RLE/bool-RLE stream decode). No
-    spark.read.orc in the read path — distribution is binaryFile +
-    mapInArrow. Reference read path: orc/reader.go:254-343,
+    spark.read.orc in the read path — distribution is
+    orc_native.read_orc_stripes (tail-only plan, stripe ranges packed
+    into mapInArrow tasks). Reference read path: orc/reader.go:254-343,
     orc/stripe.go:221-287."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     path = "/tmp/goorc_orc_native_" + sf_dir.strip("/").replace("/", "_")
     orc_bridge.write_orc(ev, path)
-    return orc_native.read_orc_files(spark, path + "/*.orc")
+    return orc_native.read_orc_stripes(spark, path + "/*.orc")
 
 
 def _run_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -159,13 +160,13 @@ def _orc_native_read_legacy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ev.coalesce(1).write.mode("overwrite")
        .option("compression", "zlib")
        .option("orc.write.format", "0.11").orc(path))
-    return orc_native.read_orc_files(spark, path + "/*.orc")
+    return orc_native.read_orc_stripes(spark, path + "/*.orc")
 
 
 def _orc_native_read_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stripe-granular native scan (the big-file scale path): ONE
     JVM-written snappy ORC file with many small stripes -> driver reads
-    only the tail, each (file, stripe) byte range decodes as its own task
+    only the tail, the (file, stripe) byte ranges spread over the tasks
     (orc_native.read_orc_stripes). Also exercises native snappy chunk
     decode (Spark's ORC default codec)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -229,7 +230,7 @@ def _orc_native_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     shutil.rmtree(path, ignore_errors=True)
     orc_native.write_orc_files(ev.repartition(4), path)
-    return orc_native.read_orc_files(spark, path + "/*.orc")
+    return orc_native.read_orc_stripes(spark, path + "/*.orc")
 
 
 def _orc_native_write_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -290,7 +291,7 @@ def _orc_union_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     C++ reader itself gets WRONG and this reader gets right). Byte-level
     format-parity gate, built driver-side at gate scale like
     _orc_native_row_seek; the distributed path is write_orc_files /
-    read_orc_files, gated by orc_native_write."""
+    read_orc_stripes, gated by orc_native_write."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq

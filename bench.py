@@ -623,19 +623,19 @@ def main() -> None:
         # both read legs get the same attempts treatment as every other
         # throughput leg (VERDICT r4 #10: the single-shot jvm leg recorded
         # an inverted comparison in the r4 artifact — too noisy to cite)
-        rsec, nrows, ratt = median3(lambda: orc_native.read_orc_files(
+        rsec, nrows, ratt = median3(lambda: orc_native.read_orc_stripes(
             spark, orc_dir + "/*.orc").count())
         queries["orc_native_read"] = round(rsec, 3)
         jsec, jrows, jatt = median3(lambda: spark.read.orc(orc_dir).count())
         queries["orc_jvm_read_same_files"] = round(jsec, 3)
         # count() is NOT a fair read comparison: the JVM reader serves it
         # from stripe row counts with an empty required schema (no column
-        # decode), while read_orc_files materializes every column. The
+        # decode), while read_orc_stripes materializes every column. The
         # *_decode legs force both sides to decode the text column.
         decode_q = lambda df: df.select(  # noqa: E731
             F.sum(F.length("text")).alias("b")).collect()[0]["b"]
         ndsec, nbytes_text, ndatt = median3(
-            lambda: decode_q(orc_native.read_orc_files(
+            lambda: decode_q(orc_native.read_orc_stripes(
                 spark, orc_dir + "/*.orc", columns=["text"])))
         queries["orc_native_read_decode"] = round(ndsec, 3)
         jdsec, jbytes_text, jdatt = median3(

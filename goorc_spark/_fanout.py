@@ -26,13 +26,6 @@ and the ORC reader.
   - `orc_native.write_orc` deflates its ~1,400 smaller segments through
     it after the walk: submitted early, each would re-take the GIL the
     walk holds (measured 12% slower).
-  - Without the native inflate kernel, `orc_native._decompress`
-    inflates the chunks of a whole zlib stream of
-    `PARALLEL_INFLATE_BYTES` (256 KB) or more through it; the chunk
-    headers are walked, the chunks joined and the inflated bytes counted
-    on the calling thread. Smaller streams and row-group windows inflate
-    serially (64 and 16 KB cut-offs measured slower: the threads contend
-    for the GIL on 1-2 KB chunks).
 
 Output bytes never depend on the width. The width rules:
 

@@ -185,14 +185,6 @@ def _rg_bloom_words(entry: dict) -> np.ndarray:
     return np.frombuffer(base64.b64decode(entry["b64"]), dtype="<u8")
 
 
-def rg_bloom_probe(entry: dict, key_value) -> bool:
-    """Membership test against a _rg_bloom_entry (False = provably absent)."""
-    from goorc_spark.codecs import murmur3
-
-    return murmur3.might_contain(_rg_bloom_words(entry), entry["k"],
-                                 _key_hash(key_value))
-
-
 # streams of this many raw bytes or more compress on the _fanout pool while
 # the column walk goes on; smaller ones compress inline, where a pool
 # round trip would cost more than it saves

@@ -42,8 +42,8 @@ def encode_from_orc(spark: SparkSession, path: str,
 def encode_from_orc_native(spark: SparkSession, path_glob: str,
                            cfg: engine.EncodeConfig | None = None) -> DataFrame:
     """ORC file(s) -> stripe table through the NATIVE byte decoder
-    (orc_native.read_orc_stripes: stripe-granular tasks, repo codecs, no
-    JVM ORC) — ingest parity with the reference's own reader."""
+    (orc_native.read_orc_stripes: stripe ranges packed into tasks, repo
+    codecs, no JVM ORC) — ingest parity with the reference's own reader."""
     from goorc_spark import orc_native
 
     return engine.encode_df(orc_native.read_orc_stripes(spark, path_glob),

@@ -18,12 +18,11 @@ Reference read path (behavior studied, architecture not ported):
 - chunked decompress   /root/reference/orc/stream/reader.go:110-158
 - field/enum numbers   /root/reference/pb/orc_proto.proto (public ORC spec)
 
-Scale notes: two distributed scan shapes. `read_orc_files` (binaryFile +
-mapInArrow) ships whole files to tasks — right for partition-sized files.
-`read_orc_stripes` is the big-file path: the driver reads only each
-file's TAIL (what any ORC reader does), then every (file, stripe) byte
-range is its own task — parallelism = total stripes, task memory = one
-stripe, so a single 10 GB file decodes across every core. Column
+Scale notes: one distributed scan, `read_orc_stripes`. The driver reads
+only each file's TAIL (what any ORC reader does), and the (file, stripe)
+byte ranges are packed into tasks by Spark's own file-split rule — a
+single 10 GB file decodes across every core, a directory of tiny files
+runs as a few tasks, and task memory is one stripe at a time. Column
 projection skips non-selected streams entirely (offsets come from the
 stripe footer, pruned streams are never decompressed). Chunk codecs:
 NONE/ZLIB/SNAPPY/ZSTD read natively (snappy = Spark's ORC default);
@@ -194,10 +193,8 @@ def _lz4_chunk(b: bytes) -> bytes:
 
 
 # a zlib stream of at least this many compressed bytes inflates as one
-# chunk range per _fanout pool thread in the native kernel; on the Python
-# path (no kernel) a whole stream this big inflates chunk-parallel (zlib
-# drops the GIL; below it, pool threads would contend for the GIL on 1-2
-# KB chunks: 64 and 16 KB cut-offs measured slower on projected reads)
+# chunk range per _fanout pool thread in the native kernel (below it, the
+# ranges are too short to pay for the hand-off)
 PARALLEL_INFLATE_BYTES = 256 * 1024
 # ORC's default compression block size: the bound on one chunk's inflated
 # bytes where the caller does not pass the file's own
@@ -218,18 +215,6 @@ def _chunk_at(buf: memoryview, off: int) -> tuple[bool, memoryview, int]:
         raise ValueError(f"ORC chunk at offset {off} claims {ln} bytes; "
                          f"the stream has {end - off - 3} left")
     return bool(h & 1), buf[off + 3:off + 3 + ln], off + 3 + ln
-
-
-def _inflate(chunk: tuple[int, bool, memoryview]):
-    """One whole zlib chunk (offset, is original, body) -> its bytes."""
-    off, original, body = chunk
-    if original:
-        return body
-    try:
-        return zlib.decompress(body, -15)
-    except zlib.error as e:
-        raise ValueError(
-            f"ORC zlib chunk at offset {off} does not inflate: {e}") from None
 
 
 # the stream kinds a column decode reads whole (not the index streams)
@@ -278,21 +263,13 @@ def _decompress(raw, kind: int, limit: int | None = None,
     Row-group windows stop early: `limit` caps the output bytes, and
     `upto=(chunk_off, nbytes)` inflates whole chunks up to the one
     starting at compressed offset `chunk_off`, then only `nbytes` more.
-    A whole zlib stream of PARALLEL_INFLATE_BYTES or more inflates its
-    chunks on the _fanout pool; the chunk headers are walked here. A
-    chunk cut off by the end of the stream raises ValueError."""
+    This serial loop is the reference and the path without the native
+    inflate kernel. A chunk cut off by the end of the stream raises
+    ValueError."""
     if kind == COMP_NONE:
         return bytes(raw) if limit is None else bytes(raw[:limit])
     buf = memoryview(raw)
     off, end = 0, len(buf)
-    if kind == COMP_ZLIB and limit is None and upto is None \
-            and end >= PARALLEL_INFLATE_BYTES:
-        chunks = []
-        while off < end:
-            at = off
-            original, body, off = _chunk_at(buf, off)
-            chunks.append((at, original, body))
-        return b"".join(_fanout.fan_out(_inflate, chunks))
     out = bytearray()
     while off < end:
         if upto is not None and off >= upto[0]:
@@ -307,7 +284,11 @@ def _decompress(raw, kind: int, limit: int | None = None,
             out += body
         elif kind == COMP_ZLIB:
             if limit is None:
-                out += _inflate((at, False, body))
+                try:
+                    out += zlib.decompress(body, -15)
+                except zlib.error as e:
+                    raise ValueError(f"ORC zlib chunk at offset {at} does "
+                                     f"not inflate: {e}") from None
                 continue
             # stop inflating INSIDE the chunk once the window has enough
             # bytes — JVM writers put a whole small stripe's stream in one
@@ -1147,13 +1128,8 @@ def _decode_stripe(data: bytes, stripe: dict, sf: dict, comp: int,
                 pass  # foreign position layout: decode the whole stripe
             else:
                 start = runs[0][0] * stride
-                if len(parts) == 1:
-                    return parts[0], start
-                # concatenate via a table round-trip (zero-copy batches)
-                tbl = pa.Table.from_batches(
-                    [pa.RecordBatch.from_struct_array(p) for p in parts])
-                return tbl.combine_chunks().to_struct_array() \
-                    .combine_chunks(), start
+                return (parts[0] if len(parts) == 1
+                        else pa.concat_arrays(parts)), start
     with _fanout.Jobs() as jobs:
         cur = _StripeCursor(data, stripe, sf, comp, metrics, reader_tz,
                             block, jobs, include)
@@ -1532,88 +1508,6 @@ def read_orc_rows(data: bytes, lo: int, hi: int,
         batches.append(pa.RecordBatch.from_struct_array(root).slice(
             s_lo - start, s_hi - s_lo))
     return _table(batches, types, include)
-
-
-def read_orc_files(spark, path: str, columns: list[str] | None = None):
-    """Distributed native ORC scan: `binaryFile` lists + ships file bytes,
-    `mapInArrow` decodes each file with `read_orc` on executors — one file
-    per task, memory bounded by file size (ORC files at 10^12-turn scale
-    are written stripe-sized; a splittable variant would read byte ranges
-    per stripe via the same parse_tail offsets)."""
-    import glob as _glob
-    import os as _os
-
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    files = spark.read.format("binaryFile").load(path) \
-        .select("path", "content")
-
-    # schema from one file's TAIL only — the driver never decodes data.
-    # When the glob resolves on the driver's filesystem (local/NFS — the
-    # same assumption read_orc_stripes makes), read just the tail bytes
-    # directly: this removes a whole Spark job (binaryFile limit(1)
-    # listing + shipping one ENTIRE file's bytes to the driver) from
-    # every scan. Non-local paths keep the binaryFile fallback.
-    local = sorted(p for p in _glob.glob(path) if _os.path.isfile(p))
-    if local:
-        with open(local[0], "rb") as f:
-            _, footer, _stats = _read_tail_from_file(f)
-    else:
-        first = files.limit(1).collect()
-        if not first:
-            raise ValueError(f"no files under {path}")
-        _, footer = parse_tail(bytes(first[0].content))
-    types0 = footer["types"]
-    schema = from_arrow_schema(
-        _projected_schema(types0, _include_ids(types0, columns)))
-    if local:
-        # tasks open their paths directly (the read_orc_stripes model):
-        # no file bytes ship through binaryFile/JVM/Arrow, and the task
-        # COUNT is sized like Spark's own split packing — per-task bytes
-        # = clamp(total/defaultParallelism, 4 MB, 128 MB), files packed
-        # greedily (never split). Big files keep one task per file; a
-        # directory of small files packs into few tasks instead of paying
-        # the ~7 ms python-worker round-trip per file (measured: 32 tiny
-        # files as 32 tasks = 0.36 s of pure task overhead on a 0.22 s
-        # job floor).
-        sizes = [(_os.path.getsize(p), p) for p in local]
-        total = sum(s for s, _ in sizes)
-        par = spark.sparkContext.defaultParallelism
-        per_task = min(max(total // max(par, 1), 4 << 20), 128 << 20)
-        n_tasks = max(1, min(len(local),
-                             (total + per_task - 1) // per_task))
-        bins: list[tuple[int, list[str]]] = [(0, []) for _ in range(n_tasks)]
-        for s, p in sorted(sizes, reverse=True):  # largest-first greedy
-            i = min(range(n_tasks), key=lambda j: bins[j][0])
-            bins[i] = (bins[i][0] + s, bins[i][1] + [p])
-        groups = [(paths,) for _, paths in bins if paths]
-        # exact one-group-per-slice parallelize: no repartition stage
-        paths_df = spark.createDataFrame(
-            spark.sparkContext.parallelize(groups, len(groups)),
-            "paths array<string>")
-
-        def _decode_paths(iterator):
-            for batch in iterator:
-                for paths in batch.column(0).to_pylist():
-                    for p in paths:
-                        with open(p, "rb") as f:
-                            blob = f.read()
-                        for b in read_orc(blob, columns).to_batches():
-                            yield b
-
-        return paths_df.mapInArrow(_decode_paths, schema)
-
-    files = files.select("content")
-
-    def _decode(iterator):
-        for batch in iterator:
-            for row in range(batch.num_rows):
-                blob = batch.column(0)[row].as_py()
-                tbl = read_orc(blob, columns)
-                for b in tbl.to_batches():
-                    yield b
-
-    return files.mapInArrow(_decode, schema)
 
 
 # ================================================================== writer
@@ -2561,9 +2455,15 @@ def _read_tail_from_file(f) -> tuple[dict, dict, list | None]:
     return ps, footer, stats
 
 
-_PLAN_SCHEMA = ("path string, offset long, total long, index_length long, "
-                "data_length long, footer_length long, n_rows long, "
-                "compression int, stride int")
+# one (file, stripe) byte range of a read_orc_stripes plan; block_size is
+# the file's postscript compression block size, which bounds each chunk's
+# inflated bytes in the native kernel
+_PLAN_SCHEMA = pa.schema([
+    ("path", pa.string()), ("offset", pa.int64()), ("total", pa.int64()),
+    ("index_length", pa.int64()), ("data_length", pa.int64()),
+    ("footer_length", pa.int64()), ("n_rows", pa.int64()),
+    ("compression", pa.int32()), ("stride", pa.int32()),
+    ("block_size", pa.int64())])
 # above this many files the driver stops tail-walking serially and runs
 # the tail reads as a distributed metadata job (SCALE.md: at 10^5+ files
 # the serial loop IS the driver bottleneck; each tail is a few KB)
@@ -2571,12 +2471,13 @@ META_PARALLEL_FILES = 64
 
 
 def _stripe_plan_rows(path: str, predicate: dict | None,
-                      types0: list | None) -> tuple[list, list[tuple]]:
-    """Tail-walk ONE file -> (footer types, surviving stripe plan tuples).
-    Prunes stripes by StripeStatistics when a predicate is given; raises
-    on a footer schema that differs from `types0` (a mixed-schema glob
-    would otherwise silently decode every file with the first file's type
-    list — stream/column misassignment, ADVICE r3)."""
+                      types0: list | None) -> tuple[list, list[dict]]:
+    """Tail-walk ONE file -> (footer types, surviving stripe ranges, each
+    a dict of _PLAN_SCHEMA's fields). Prunes stripes by StripeStatistics
+    when a predicate is given; raises on a footer schema that differs
+    from `types0` (a mixed-schema glob would otherwise silently decode
+    every file with the first file's type list — stream/column
+    misassignment, ADVICE r3)."""
     with open(path, "rb") as f:
         ps, footer, stats = _read_tail_from_file(f)
     types = footer["types"]
@@ -2598,153 +2499,166 @@ def _stripe_plan_rows(path: str, predicate: dict | None,
                    and not _stats_can_match(col_stats[cid], lo, hi)
                    for cid, (lo, hi) in pred_ids.items()):
                 continue
-        total = s["index_length"] + s["data_length"] + s["footer_length"]
-        rows.append((path, s["offset"], total, s["index_length"],
-                     s["data_length"], s["footer_length"], s["n_rows"],
-                     ps["compression"], footer["row_index_stride"]))
+        rows.append({
+            "path": path, "offset": s["offset"],
+            "total": s["index_length"] + s["data_length"]
+            + s["footer_length"],
+            "index_length": s["index_length"],
+            "data_length": s["data_length"],
+            "footer_length": s["footer_length"], "n_rows": s["n_rows"],
+            "compression": ps["compression"],
+            "stride": footer["row_index_stride"],
+            "block_size": ps["block_size"]})
     return types, rows
+
+
+def _pack_ranges(ranges: list[dict], max_bytes: int, open_cost: int,
+                 parallelism: int) -> list[list[dict]]:
+    """Spark's file-split rule (FilePartition.maxSplitBytes and
+    getFilePartitions) over stripe ranges: a range costs its bytes plus
+    `open_cost`, a bin closes before a range that would take it past
+    min(max_bytes, max(open_cost, total cost / parallelism)), and the
+    ranges go in largest first (next fit decreasing)."""
+    cost = sum(r["total"] + open_cost for r in ranges)
+    cap = min(max_bytes, max(open_cost, cost // max(parallelism, 1)))
+    bins: list[list[dict]] = []
+    size = 0
+    for r in sorted(ranges, key=lambda r: r["total"], reverse=True):
+        if not bins or size + r["total"] > cap:
+            bins.append([])
+            size = 0
+        bins[-1].append(r)
+        size += r["total"] + open_cost
+    return bins
+
+
+def _scan_ranges(ranges: list[dict], types: list[dict],
+                 include: set[int] | None, eq: tuple | None = None):
+    """The read_orc_stripes task body: read each range's bytes from its
+    file and decode its stripe with the file's block size, one
+    RecordBatch per range. `eq` = (column id, value, bloom hash) decodes
+    only the row groups that might hold the value, and skips a range
+    where none can."""
+    for r in ranges:
+        with open(r["path"], "rb") as f:
+            f.seek(r["offset"])
+            data = f.read(r["total"])
+        comp, block = r["compression"], r["block_size"]
+        local = dict(r, offset=0)
+        sf = _stripe_footer(data, local, comp)
+        if eq is None:
+            root, _ = _decode_stripe(data, local, sf, comp, types, include,
+                                     block=block)
+        else:
+            eq_id, value, h64 = eq
+            root = _eq_stripe(data, local, sf, comp, types, r["stride"],
+                              eq_id, [value], [h64], include, None, block)
+            if root is None:
+                continue
+        yield pa.RecordBatch.from_struct_array(root)
+
+
+def _eq_probe(types: list[dict], predicate: dict | None) -> tuple | None:
+    """(column id, value, bloom hash) of the first equality bound
+    (lo == hi) on a bloom-hashable column, or None. The value is hashed
+    once on the driver, which also checks it against the column's hash
+    domain: a mismatch (an int bound on a timestamp column, say) falls
+    back to the stats-only predicate instead of failing every task."""
+    root = types[0]
+    name_to_id = dict(zip(root["field_names"], root["subtypes"]))
+    for c, (lo, hi) in (predicate or {}).items():
+        cid = name_to_id.get(c)
+        if lo is None or lo != hi or cid is None or types[cid]["kind"] \
+                not in (_BLOOM_STR_KINDS | _BLOOM_LONG_KINDS
+                        | {T_TIMESTAMP, T_DECIMAL}):
+            continue
+        try:
+            return cid, lo, _bloom_hash_value(types[cid]["kind"], lo)
+        except (TypeError, AttributeError, ValueError, ArithmeticError):
+            continue
+    return None
 
 
 def read_orc_stripes(spark, path_glob: str,
                      columns: list[str] | None = None,
-                     predicate: dict | None = None,
-                     parallel_plan: bool | None = None):
-    """STRIPE-granular distributed native ORC scan — the scale path for
-    big files. `read_orc_files` ships whole files to tasks (fine for
-    partition-sized files); here the driver reads only each file's TAIL
-    (postscript + footer + stripe statistics, a few KB per file — exactly
-    what an ORC reader does), then each (file, stripe) pair becomes one
-    task that seeks to its byte range and decodes just that stripe.
-    Parallelism = total stripes, task memory = one stripe — a single
-    10 GB ORC file decodes across every core. Executors must see the same
-    filesystem paths (local/NFS in this sandbox; on a cluster the same
-    pattern runs over the object-store reader).
+                     predicate: dict | None = None):
+    """Distributed native ORC scan. The driver reads only each file's
+    TAIL (postscript + footer + stripe statistics, a few KB per file —
+    exactly what an ORC reader does); the plan is the list of (file,
+    stripe) byte ranges, packed into tasks by Spark's own file-split
+    rule (_pack_ranges, from `spark.sql.files.maxPartitionBytes`,
+    `spark.sql.files.openCostInBytes` and the default parallelism): a
+    big file spreads over every core, a directory of tiny files packs
+    into a few tasks. Task i of a `spark.range` with one id per
+    partition decodes bin i, with no shuffle: it seeks to its ranges and
+    decodes one stripe at a time (_scan_ranges), so task memory is one
+    stripe. Executors must see the same filesystem paths (a local or
+    shared filesystem; on a cluster the same pattern runs over the
+    object-store reader); a glob the driver cannot list fails here.
 
     `predicate` {column: (lo, hi)} prunes stripes by the file's
     StripeStatistics metadata BEFORE any task exists (the reference's
     stats-based seek/skip, orc/stripe.go:369-388, at stripe granularity):
     a stripe whose recorded [min, max] provably misses every bound is
-    never read. Conservative — pruning returns a superset; apply the
+    never read. An equality bound on a bloom-hashable column also lets
+    each task skip row groups by their bloom filters and ROW_INDEX stats
+    (_eq_probe). Conservative — pruning returns a superset; apply the
     exact `.filter` on the result. Values compare in the stats domain
     (ints, floats, strings; dates as epoch-days).
 
-    Planning itself scales: under META_PARALLEL_FILES files the driver
-    tail-walks serially; above it (or with `parallel_plan=True`) the tail
-    reads run as a DISTRIBUTED metadata job — one task per batch of
-    paths, the driver does only the union/count, so 10^5-file directories
-    don't serialize on the driver (VERDICT r3 #6). Every file's footer
-    types are checked against the first file's in both paths."""
+    Planning itself scales: up to META_PARALLEL_FILES files the driver
+    tail-walks serially; above it the tail reads run as a DISTRIBUTED
+    metadata job whose plan rows the driver collects, so 10^5-file
+    directories don't serialize on the driver (VERDICT r3 #6). Every
+    file's footer types are checked against the first file's in both
+    paths."""
     import glob as _glob
-    import json as _json
+
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     files = sorted(_glob.glob(path_glob))
     if not files:
         raise ValueError(f"no files match {path_glob}")
-    # the driver reads exactly ONE tail — for the output schema; all other
-    # tails are read serially (few files) or by executors (many files)
-    types0, rows0 = _stripe_plan_rows(files[0], predicate, None)
-    types_json = _json.dumps(types0)
-    root = types0[0]
-    from pyspark.sql.pandas.types import from_arrow_schema
-    out_schema = from_arrow_schema(
-        _projected_schema(types0, _include_ids(types0, columns)))
-
-    if parallel_plan is None:
-        parallel_plan = len(files) > META_PARALLEL_FILES
-    if not parallel_plan or len(files) == 1:
-        rows = list(rows0)
-        for p in files[1:]:
-            _, r = _stripe_plan_rows(p, predicate, types0)
-            rows.extend(r)
-        plan = spark.createDataFrame(rows, _PLAN_SCHEMA) \
-            .repartition(len(rows) or 1)
-    else:
-        plan_cols = [c.split(" ")[0] for c in _PLAN_SCHEMA.split(", ")]
-
-        plan_types = [pa.string()] + [pa.int64()] * 6 + [pa.int32()] * 2
+    types0, ranges = _stripe_plan_rows(files[0], predicate, None)
+    rest = files[1:]
+    par = spark.sparkContext.defaultParallelism
+    if len(files) > META_PARALLEL_FILES:
+        k = min(len(rest), 4 * par)
 
         def walk_tails(batches):
-            t0 = _json.loads(types_json)
             for rb in batches:
-                for pth in rb.column("path").to_pylist():
-                    _, rws = _stripe_plan_rows(pth, predicate, t0)
-                    if rws:
-                        yield pa.RecordBatch.from_pydict(
-                            {n: pa.array(list(col), type=t)
-                             for n, t, col in zip(plan_cols, plan_types,
-                                                  zip(*rws))})
+                for i in rb.column(0).to_pylist():
+                    rows = [r for p in rest[i * len(rest) // k:
+                                            (i + 1) * len(rest) // k]
+                            for r in _stripe_plan_rows(p, predicate,
+                                                       types0)[1]]
+                    if rows:
+                        yield pa.RecordBatch.from_pylist(rows, _PLAN_SCHEMA)
 
-        n_slots = spark.sparkContext.defaultParallelism
-        paths = spark.createDataFrame([(p,) for p in files[1:]],
-                                      "path string") \
-            .repartition(min(len(files) - 1, 4 * n_slots) or 1)
-        plan = spark.createDataFrame(rows0, _PLAN_SCHEMA) \
-            .unionByName(paths.mapInArrow(walk_tails, _PLAN_SCHEMA))
-        # metadata-only count (tails are KB) sizes the decode stage so
-        # each surviving stripe still gets its own task
-        n_stripes = plan.count()
-        plan = plan.repartition(n_stripes or 1)
+        tails = spark.range(k, numPartitions=k).mapInArrow(
+            walk_tails, from_arrow_schema(_PLAN_SCHEMA))
+        ranges += [r.asDict() for r in tails.collect()]
+    else:
+        for p in rest:
+            ranges += _stripe_plan_rows(p, predicate, types0)[1]
+    conf = spark._jsparkSession.sessionState().conf()
+    bins = _pack_ranges(ranges, conf.filesMaxPartitionBytes(),
+                        conf.filesOpenCostInBytes(), par)
+    include = _include_ids(types0, columns)
+    eq = _eq_probe(types0, predicate)
 
-    # an equality predicate (lo == hi) on a bloom-hashable column lets the
-    # decode TASK additionally skip row groups via per-group bloom filters
-    # + ROW_INDEX stats — stripe pruning above cut whole stripes from the
-    # plan; this cuts decode work INSIDE each surviving stripe. Still a
-    # superset: apply the exact .filter on the result.
-    eq_name = eq_value = eq_h64 = None
-    if predicate:
-        name_to_id0 = dict(zip(root["field_names"], root["subtypes"]))
-        for c, (lo, hi) in predicate.items():
-            if lo is not None and lo == hi and c in name_to_id0 \
-                    and types0[name_to_id0[c]]["kind"] in \
-                    (_BLOOM_STR_KINDS | _BLOOM_LONG_KINDS
-                     | {T_TIMESTAMP, T_DECIMAL}):
-                # hash ONCE at plan time — this also validates the value's
-                # type against the column's hash domain on the driver; a
-                # mismatch (e.g. an int bound on a timestamp column)
-                # degrades to the stats-only predicate contract instead of
-                # crashing every decode task
-                try:
-                    eq_h64 = _bloom_hash_value(
-                        types0[name_to_id0[c]]["kind"], lo)
-                except (TypeError, AttributeError, ValueError,
-                        ArithmeticError):
-                    continue
-                eq_name, eq_value = c, lo
-                break
-
+    # task i decodes bins[i]: the plan rides in the pickled function, so
+    # no Python pass turns it into rows first (that pass cost a Python
+    # worker round trip per task: ~0.2 s more on 4 tiny-file tasks,
+    # local[4] on a 4-CPU host)
     def decode(batches):
-        types = _json.loads(types_json)
-        inc = _include_ids(types, columns)
-        eq_id, h64 = None, eq_h64
-        if eq_name is not None:
-            r0 = types[0]
-            eq_id = r0["subtypes"][r0["field_names"].index(eq_name)]
         for rb in batches:
-            for i in range(rb.num_rows):
-                r = {k: rb.column(k)[i].as_py() for k in
-                     ("path", "offset", "total", "index_length",
-                      "data_length", "footer_length", "n_rows",
-                      "compression", "stride")}
-                with open(r["path"], "rb") as f:
-                    f.seek(r["offset"])
-                    data = f.read(r["total"])
-                local = {"offset": 0, "index_length": r["index_length"],
-                         "data_length": r["data_length"],
-                         "footer_length": r["footer_length"],
-                         "n_rows": r["n_rows"]}
-                sf = _stripe_footer(data, local, r["compression"])
-                if eq_id is not None:
-                    root_arr = _eq_stripe(
-                        data, local, sf, r["compression"], types,
-                        r["stride"], eq_id, [eq_value], [h64], inc, None)
-                    if root_arr is None:
-                        continue
-                else:
-                    root_arr, _ = _decode_stripe(data, local, sf,
-                                                 r["compression"], types, inc)
-                yield pa.RecordBatch.from_struct_array(root_arr)
+            for i in rb.column(0).to_pylist():
+                yield from _scan_ranges(bins[i], types0, include, eq)
 
-    return plan.mapInArrow(decode, out_schema)
+    return spark.range(len(bins), numPartitions=max(len(bins), 1)) \
+        .mapInArrow(decode,
+                    from_arrow_schema(_projected_schema(types0, include)))
 
 
 # --------------------------------------------------- stripe-stats pushdown

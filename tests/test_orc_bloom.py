@@ -427,3 +427,40 @@ def test_nullable_bloom_bytes_pinned(comp):
     for col, v in (("s", "k12"), ("l", 1200), ("sparse", "z800")):
         want = t.filter(pc.equal(t.column(col), v))
         assert on.read_orc_eq(data, col, v).equals(want), col
+
+
+def test_two_runs_of_groups_equal_the_whole_stripe_rows():
+    """A keep mask with two separate runs of row groups decodes each run
+    through its own seek window and concatenates them: the rows equal
+    the whole-stripe decode taken at the same groups, for a struct with
+    nulls at both levels, a list with nulls and a nullable string; the
+    equality read over the same layout equals the filtered table."""
+    import pyarrow.compute as pc
+
+    n, stride = 3000, 300
+    k = [7 if i in (350, 1900) else i * 10 for i in range(n)]
+    t = pa.table({
+        "k": pa.array(k, pa.int64()),
+        "st": pa.array([None if i % 11 == 0 else
+                        {"a": None if i % 7 == 0 else i, "b": f"b{i % 13}"}
+                        for i in range(n)],
+                       pa.struct([("a", pa.int64()), ("b", pa.string())])),
+        "l": pa.array([None if i % 5 == 0 else list(range(i % 4))
+                       for i in range(n)], pa.list_(pa.int32())),
+        "s": pa.array([None if i % 3 == 0 else f"s{i}" for i in range(n)]),
+    })
+    data = on.write_orc(t, row_index_stride=stride, bloom_columns=("k",))
+    ps, footer = on.parse_tail(data)
+    stripe = footer["stripes"][0]
+    comp, types = ps["compression"], footer["types"]
+    sf = on._stripe_footer(data, stripe, comp)
+    keep = [g in (1, 2, 6) for g in range(n // stride)]
+    got, start = on._decode_stripe(data, stripe, sf, comp, types, None,
+                                   stride, keep)
+    whole, _ = on._decode_stripe(data, stripe, sf, comp, types, None)
+    rows = np.r_[300:900, 1800:2100]
+    assert start == 300 and got.equals(whole.take(rows))
+    met: dict = {}
+    r = on.read_orc_eq(data, "k", 7, metrics=met)
+    assert r.equals(t.filter(pc.equal(t.column("k"), 7)))
+    assert met["groups_decoded"] >= 2

@@ -227,3 +227,65 @@ def test_read_orc_stripes_spark_task_matches_read_orc(spark, tmp_path):
     assert sorted(tuple(r) for r in got) == sorted(
         tuple(r.values()) for r in want)
     assert len(got) == t.num_rows
+
+
+def _big_block_file(path) -> None:
+    """A pyarrow zlib file with 1 MB compression blocks: its big data
+    chunks inflate past ORC's default 256 KB block."""
+    rng = np.random.default_rng(17)
+    n = 200_000
+    t = pa.table({"x": pa.array(rng.integers(0, 1 << 40, n)),
+                  "s": pa.array([f"v{i % 5000:05d}-{i}" for i in range(n)])})
+    po.write_table(t, str(path), compression="zlib",
+                   compression_block_size=1 << 20)
+
+
+def _data_streams(path) -> set[bytes]:
+    data = path.read_bytes()
+    ps, footer = on.parse_tail(data)
+    out = set()
+    for stripe in footer["stripes"]:
+        sf = on._stripe_footer(data, stripe, ps["compression"])
+        off = stripe["offset"]
+        for s in sf["streams"]:
+            if s["kind"] in on._DATA_KINDS:
+                out.add(data[off:off + s["length"]])
+            off += s["length"]
+    return out
+
+
+@needs_kernel
+def test_scan_ranges_inflate_with_the_file_block_size(tmp_path, monkeypatch):
+    """The read_orc_stripes task body decodes each range with its file's
+    block size, so a 1 MB-block file's data streams inflate in the
+    kernel and none reaches the Python _decompress; with the default
+    256 KB bound they would."""
+    path = tmp_path / "big_block.orc"
+    _big_block_file(path)
+    streams = _data_streams(path)
+    assert max(map(len, streams)) > on.DEFAULT_BLOCK
+    seen: list[bytes] = []
+    python = on._decompress
+
+    def spy(raw, *args, **kw):
+        seen.append(bytes(raw))
+        return python(raw, *args, **kw)
+
+    monkeypatch.setattr(on, "_decompress", spy)
+    types, ranges = on._stripe_plan_rows(str(path), None, None)
+    assert {r["block_size"] for r in ranges} == {1 << 20}
+    got = pa.Table.from_batches(list(on._scan_ranges(ranges, types, None)))
+    assert not streams & set(seen)
+    assert got.equals(on.read_orc(path.read_bytes()))
+    default = [dict(r, block_size=on.DEFAULT_BLOCK) for r in ranges]
+    list(on._scan_ranges(default, types, None))
+    assert streams & set(seen)
+
+
+def test_read_orc_stripes_big_blocks_match_read_orc(spark, tmp_path):
+    path = tmp_path / "big_block.orc"
+    _big_block_file(path)
+    want = on.read_orc(path.read_bytes())
+    got = on.read_orc_stripes(spark, str(path)).toArrow().cast(want.schema)
+    keys = [("x", "ascending"), ("s", "ascending")]
+    assert got.sort_by(keys).equals(want.sort_by(keys))

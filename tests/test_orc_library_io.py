@@ -537,46 +537,11 @@ def _mixed_stream(n_chunks: int = 300) -> tuple[bytes, bytes]:
     return chunk.compress(plain, "zlib", 3000), plain
 
 
-def _chunk_kinds(stream: bytes) -> set[bool]:
-    kinds, off = set(), 0
-    while off < len(stream):
-        original, _, off = on._chunk_at(memoryview(stream), off)
-        kinds.add(original)
-    return kinds
-
-
-def test_parallel_inflate_equals_serial(monkeypatch):
-    stream, plain = _mixed_stream()
-    assert _chunk_kinds(stream) == {True, False}
-    assert len(stream) >= on.PARALLEL_INFLATE_BYTES
-    out = {}
-    for w in (1, 4):
-        _width(monkeypatch, w)
-        out[w] = on._decompress(stream, on.COMP_ZLIB)
-    monkeypatch.setattr(on, "PARALLEL_INFLATE_BYTES", len(stream) + 1)
-    assert out[1] == out[4] == on._decompress(stream, on.COMP_ZLIB) == plain
-
-
-def test_parallel_inflate_reads_goldens_like_serial(monkeypatch):
-    """Every whole-stream inflate of the JVM/pyarrow goldens and of this
-    writer's files, fanned out chunk by chunk, decodes what a serial read
-    decodes."""
-    files = dict(_foreign_files())
-    files["own"] = on.write_orc(_pinned_table(), stripe_rows=2000,
-                                block_size=4096, row_index_stride=500)
-    _width(monkeypatch, 4)
-    for name, data in files.items():
-        monkeypatch.setattr(on, "PARALLEL_INFLATE_BYTES", 1 << 40)
-        want = on.read_orc(data)
-        monkeypatch.setattr(on, "PARALLEL_INFLATE_BYTES", 1)
-        assert on.read_orc(data).equals(want), name
-
-
 def test_truncated_chunks_raise():
     """A chunk cut off by the end of its stream is an error, not short
     output: a stored chunk that claims more bytes than are left, a
-    deflate chunk whose deflate stream ends early (whole, windowed and
-    chunk-parallel inflates) and a cut-off header."""
+    deflate chunk whose deflate stream ends early (whole and windowed
+    inflates) and a cut-off header."""
     import zlib
 
     stored = bytes(((100 << 1) | 1, 0, 0)) + b"x" * 10

@@ -280,7 +280,7 @@ def test_union_spark_jvm_cannot_native_reader_can(tmp_path, spark):
     """Spark's JVM ORC datasource cannot open union files AT ALL — it
     fails parsing the schema string `uniontype<double,string>`
     (ParseException, measured on Spark 4.1) because Catalyst has no
-    union type. This repo's read_orc_files is therefore the only
+    union type. This repo's read_orc_stripes is therefore the only
     Spark-side path for such files, surfacing the tagged struct."""
     import numpy as np
 
@@ -298,8 +298,8 @@ def test_union_spark_jvm_cannot_native_reader_can(tmp_path, spark):
         spark.read.orc(str(d)).collect()
     assert "uniontype" in str(ei.value) or "PARSE" in str(ei.value)
 
-    from goorc_spark.orc_native import read_orc_files
-    df = read_orc_files(spark, str(d) + "/*.orc")
+    from goorc_spark.orc_native import read_orc_stripes
+    df = read_orc_stripes(spark, str(d) + "/*.orc")
     assert df.schema["u"].dataType.typeName() == "struct"
     assert df.count() == 100
     assert df.filter("u.tag = 1").count() == 50

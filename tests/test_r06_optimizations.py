@@ -9,7 +9,7 @@ round keeps its externally observable behavior bit-identical.
   (tests/test_native.py pins the same shapes numpy-vs-native byte-equal).
 - similarity: the driver-side fold/rounding twins (_py_dot/_round6) are
   bit-identical to the in-plan SQL fold and Spark's round(double, 6).
-- orc_native.read_orc_files: the size-packed multi-file task plan decodes
+- orc_native.read_orc_stripes: the packed multi-file task plan decodes
   every row exactly once.
 """
 
@@ -164,9 +164,10 @@ def test_ivf_trained_equals_assign_via_public_api(spark):
 # ------------------------------------------------------------ orc files --
 
 
-def test_read_orc_files_packed_tasks_complete(spark, tmp_path):
-    """Many tiny files pack into few tasks; every row decodes exactly
-    once, and column projection still works through the packed plan."""
+def test_read_orc_stripes_packed_tasks_complete(spark, tmp_path):
+    """Many tiny files pack into at most defaultParallelism tasks; every
+    row decodes exactly once, and column projection still works through
+    the packed plan."""
     import pyarrow as pa
 
     from goorc_spark import orc_native
@@ -180,11 +181,12 @@ def test_read_orc_files_packed_tasks_complete(spark, tmp_path):
         })
         (tmp_path / f"part-{i:03d}.orc").write_bytes(
             orc_native.write_orc(t))
-    df = orc_native.read_orc_files(spark, str(tmp_path / "*.orc"))
+    df = orc_native.read_orc_stripes(spark, str(tmp_path / "*.orc"))
+    assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
     got = sorted(r["k"] for r in df.collect())
     assert got == list(range(n_files * rows_per))
-    proj = orc_native.read_orc_files(spark, str(tmp_path / "*.orc"),
-                                     columns=["s"])
+    proj = orc_native.read_orc_stripes(spark, str(tmp_path / "*.orc"),
+                                       columns=["s"])
     assert proj.columns == ["s"]
     assert proj.count() == n_files * rows_per
 
