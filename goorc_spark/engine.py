@@ -229,7 +229,7 @@ def spec_from_stripes(stripes: DataFrame) -> list[dict]:
     (compaction, decode CLIs) schema-agnostic: the stripe table is
     self-describing. The meta read is cached per table snapshot
     (_collect_cached), so a repeat call on a bare file scan runs no job."""
-    row, _ = _collect_cached(stripes, ["meta"], 1)
+    row, _, _ = _collect_cached(stripes, ["meta"], 1)
     if not row:
         raise ValueError("empty stripe table: no meta to derive a spec from")
     meta = json.loads(row[0][0])
@@ -573,52 +573,72 @@ def _is_bare_scan(df: DataFrame) -> bool:
 # Driver-side cache of lineage/meta collects, the analog of an ORC reader
 # parsing a file's tail once and seeking from memory afterwards (the
 # reference's orc/reader.go:199-212, 254-343). Bounded: an entry holds at
-# most MAX_PUSHDOWN_IDS + 1 lineage rows of ~8 KB bloom each.
+# most MAX_PUSHDOWN_IDS + 1 lineage rows of ~8 KB bloom each, and the
+# per-snapshot state _decode_on_driver derives from them.
 LINEAGE_CACHE_ENTRIES = 16
-_lineage_cache: OrderedDict = OrderedDict()  # key -> (JVM plan, rows)
+_lineage_cache: OrderedDict = OrderedDict()  # key -> (JVM plan, rows, state)
 _lineage_lock = threading.Lock()
 
+# (SparkSession, its _session_handles) of the last session _snapshot served
+_handles_of: tuple = (None, None)
 
-def _snapshot(df: DataFrame):
+
+def _session_handles(spark: SparkSession) -> tuple:
+    """(application id, CacheManager, Scala ArraySeq class) of `spark`,
+    resolved once per session: each lookup costs Py4J round trips, and a
+    new session (after stop(), a new SparkContext on the gateway) resolves
+    its own instead of reusing the stopped one's."""
+    global _handles_of
+    owner, handles = _handles_of
+    if owner is not spark:
+        handles = (spark.sparkContext.applicationId,
+                   spark._jsparkSession.sharedState().cacheManager(),
+                   spark._jvm.scala.collection.immutable.ArraySeq)
+        _handles_of = (spark, handles)
+    return handles
+
+
+def _snapshot(df: DataFrame, plan=None):
     """(key, optimized JVM plan) naming exactly what a bare file scan
     reads, or None for any other frame (derived, in-flight, without input
     files, or one whose plan Spark would now answer from its in-memory
-    cache). The key is the application id, the plan's semantic hash and
-    the frame's input files: Spark-written part files are immutable and
-    get fresh names on overwrite or append, and a refreshed file index
-    lists the new ones, so the key changes whenever the data Spark would
-    read does."""
-    plan = _bare_scan_plan(df)
+    cache). `plan` is the frame's _bare_scan_plan when the caller has
+    already walked it. The key is the application id, the plan's semantic
+    hash and the frame's input files: Spark-written part files are
+    immutable and get fresh names on overwrite or append, and a refreshed
+    file index lists the new ones, so the key changes whenever the data
+    Spark would read does."""
+    if plan is None:
+        plan = _bare_scan_plan(df)
     if plan is None:
         return None
     try:
-        spark = df.sparkSession
+        app_id, cache_manager, array_seq = _session_handles(df.sparkSession)
         analyzed = df._jdf.queryExecution().analyzed()
-        if not spark._jsparkSession.sharedState().cacheManager() \
-                .useCachedData(analyzed).fastEquals(analyzed):
+        if not cache_manager.useCachedData(analyzed).fastEquals(analyzed):
             return None
         # one round trip for the whole list (DataFrame.inputFiles() fetches
         # the Java array element by element)
-        files = spark._jvm.scala.collection.immutable.ArraySeq \
-            .unsafeWrapArray(df._jdf.inputFiles()).mkString("\n")
+        files = array_seq.unsafeWrapArray(df._jdf.inputFiles()).mkString("\n")
         if not files:
             return None
-        return (spark.sparkContext.applicationId, plan.semanticHash(),
-                files), plan
+        return (app_id, plan.semanticHash(), files), plan
     except Exception:
         return None
 
 
-def _collect_cached(stripes: DataFrame, cols: list[str],
-                    limit: int) -> tuple[list, bool | None]:
+def _collect_cached(stripes: DataFrame, cols: list[str], limit: int,
+                    plan=None) -> tuple[list, bool | None, dict | None]:
     """(stripes.selectExpr(*cols).limit(limit).collect(), whether the rows
     came from the driver cache — None when the frame has no snapshot to
-    cache them under). A hit is confirmed with Catalyst's sameResult
-    against the stored plan; a failed check is a miss and replaces the
-    entry."""
-    snap = _snapshot(stripes)
+    cache them under —, the entry's state dict). A hit is confirmed with
+    Catalyst's sameResult against the stored plan; a failed check is a
+    miss and replaces the entry. The state starts empty with each entry
+    and is evicted with it, so what a caller keeps there is derived from
+    this snapshot only (None without a snapshot). `plan` as in _snapshot."""
+    snap = _snapshot(stripes, plan)
     if snap is None:
-        return stripes.selectExpr(*cols).limit(limit).collect(), None
+        return stripes.selectExpr(*cols).limit(limit).collect(), None, None
     key, plan = snap
     key += (tuple(cols), limit)
     with _lineage_lock:
@@ -626,14 +646,15 @@ def _collect_cached(stripes: DataFrame, cols: list[str],
         if entry is not None:
             _lineage_cache.move_to_end(key)
     if entry is not None and plan.sameResult(entry[0]):
-        return entry[1], True
+        return entry[1], True, entry[2]
     rows = stripes.selectExpr(*cols).limit(limit).collect()
+    state: dict = {}
     with _lineage_lock:
-        _lineage_cache[key] = (plan, rows)
+        _lineage_cache[key] = (plan, rows, state)
         _lineage_cache.move_to_end(key)
         while len(_lineage_cache) > LINEAGE_CACHE_ENTRIES:
             _lineage_cache.popitem(last=False)
-    return rows, False
+    return rows, False, state
 
 
 def read_rows(stripes: DataFrame, spec: list[dict], key_col: str,
@@ -678,7 +699,13 @@ def read_rows(stripes: DataFrame, spec: list[dict], key_col: str,
     the first read of a snapshot runs the lineage job and every later read
     of it runs at most the decode. Only bare file scans with input files
     are cached (not frames Spark serves from its in-memory cache), in a
-    bounded LRU of LINEAGE_CACHE_ENTRIES snapshots.
+    bounded LRU of LINEAGE_CACHE_ENTRIES snapshots. With a snapshot's
+    lineage rows the cache keeps what the driver-side decode below derives
+    from the snapshot alone: whether its stripe_id/meta/blob columns are
+    the stored ones, each part file's parquet footer (read again when the
+    file's size or mtime changes) and the parsed meta of the stripes it
+    decoded (up to DRIVER_DECODE_BYTES of JSON). The rows themselves are
+    not cached: every call reads and decodes its surviving stripes.
 
     Small survivors decode on the driver, with no Spark job: when the frame
     is such a cached bare scan, its stripe_id/meta/blob columns are the
@@ -710,11 +737,11 @@ def read_rows(stripes: DataFrame, spec: list[dict], key_col: str,
         pred["ord_lo"] = ord_lo
     if ord_hi is not None:
         pred["ord_hi"] = ord_hi
-    cond = F.col(key_col) == F.lit(key_value)
+    cond = [(key_col, "equalTo", key_value)]
     if ord_col is not None and ord_lo is not None:
-        cond = cond & (F.col(ord_col) >= F.lit(ord_lo))
+        cond.append((ord_col, "geq", ord_lo))
     if ord_col is not None and ord_hi is not None:
-        cond = cond & (F.col(ord_col) <= F.lit(ord_hi))
+        cond.append((ord_col, "leq", ord_hi))
     keys = [] if key_value is None else [key_value]
     return _point_read(stripes, spec, key_col, keys, cond, pred, columns,
                        id_pushdown, metrics, key_value=key_value)
@@ -740,8 +767,9 @@ def read_rows_in(stripes: DataFrame, spec: list[dict], key_col: str,
         raise ValueError("key_values must be non-empty")
     keys = sorted({k for k in key_values if k is not None})
     return _point_read(stripes, spec, key_col, keys,
-                       F.col(key_col).isin(keys), {"key_values": keys},
-                       columns, id_pushdown, metrics, key_values=keys)
+                       [(key_col, "isInCollection", keys)],
+                       {"key_values": keys}, columns, id_pushdown, metrics,
+                       key_values=keys)
 
 
 def read_where(stripes: DataFrame, spec: list[dict], col: str | None = None,
@@ -1033,19 +1061,13 @@ def _bound_ok(bound, kv, keep_if) -> bool:
     return True
 
 
-def _prune_on_driver(stripes: DataFrame, key_value=None,
-                     key_values=None) -> tuple[list, int, bool | None] | None:
-    """prune_stripes' predicate evaluated in Python over one unfiltered
-    collect of the lineage columns -> (surviving lineage rows, stripes
-    seen, whether the lineage came from the driver cache — None for a frame
-    with no snapshot), or None when the table has more than
-    MAX_PUSHDOWN_IDS stripes. A row carries the stripe's `stripe_id`,
-    `enc_bytes` (NULL when the frame has no such column) and the `file`
-    that stores it. The bloom probe as Column expressions differs per key,
-    so every read would plan and codegen a new expression tree; this
-    pass's plan is the same for every key and carries no filter at all,
-    and its rows are cached per table snapshot (_collect_cached)."""
-    lo, hi, probes = _prune_bounds(key_value, None, None, key_values)
+def _lineage(stripes: DataFrame, plan=None) -> tuple[list, bool | None,
+                                                       dict | None]:
+    """The lineage columns of every stripe, from one unfiltered collect
+    cached per table snapshot -> _collect_cached's (rows, hit, state). A
+    row carries the stripe's `stripe_id`, key range, `enc_bytes` (NULL
+    when the frame has no such column), the `file` that stores it and,
+    when the frame has one, its `key_bloom`. `plan` as in _snapshot."""
     present = stripes.columns
     cols = ["stripe_id", "key_min", "key_max",
             "enc_bytes" if "enc_bytes" in present
@@ -1053,9 +1075,24 @@ def _prune_on_driver(stripes: DataFrame, key_value=None,
             "input_file_name() AS file"]
     if "key_bloom" in present:
         cols.append("key_bloom")
-    else:
+    return _collect_cached(stripes, cols, MAX_PUSHDOWN_IDS + 1, plan)
+
+
+def _prune_on_driver(stripes: DataFrame, key_value=None, key_values=None,
+                     lineage=None) -> tuple[list, int, bool | None] | None:
+    """prune_stripes' predicate evaluated in Python over the `lineage`
+    rows (_lineage(stripes) when not given) -> (surviving lineage rows,
+    stripes seen, whether the lineage came from the driver cache — None
+    for a frame with no snapshot), or None when the table has more than
+    MAX_PUSHDOWN_IDS stripes. The bloom probe as Column expressions
+    differs per key, so every read would plan and codegen a new
+    expression tree; the lineage pass's plan is the same for every key
+    and carries no filter at all, and its rows are cached per table
+    snapshot."""
+    lo, hi, probes = _prune_bounds(key_value, None, None, key_values)
+    if "key_bloom" not in stripes.columns:
         probes = []
-    rows, hit = _collect_cached(stripes, cols, MAX_PUSHDOWN_IDS + 1)
+    rows, hit, _ = lineage or _lineage(stripes)
     if len(rows) > MAX_PUSHDOWN_IDS:
         return None
     positions = [bloom_positions(kv) for kv in probes]
@@ -1076,14 +1113,30 @@ def _prune_on_driver(stripes: DataFrame, key_value=None,
     return keep, len(rows), hit
 
 
+def _filter_exact(frame: DataFrame, cond: list) -> DataFrame:
+    """`frame` under the conjunction of `cond`, (column, JVM Column method,
+    value) triples: ("k", "equalTo", v) is frame["k"] == v, the same
+    Catalyst expression bound to the frame's own attributes. Built on the
+    JVM Column: a PySpark Column operator also records its Python call
+    site for error messages, at ten more Py4J round trips an operator."""
+    from pyspark.sql import Column
+
+    jdf, where = frame._jdf, None
+    for col, op, value in cond:
+        term = getattr(jdf.apply(col), op)(value)
+        where = term if where is None else getattr(where, "and")(term)
+    return frame.filter(Column(where))
+
+
 def _point_read(stripes: DataFrame, spec: list[dict], key_col: str,
-                keys: list, cond, rg_predicate: dict,
+                keys: list, cond: list, rg_predicate: dict,
                 columns: list[str] | None, id_pushdown: bool | None,
                 metrics: dict | None, **prune) -> DataFrame:
     """read_rows / read_rows_in once their non-NULL `keys` are known:
     prune stripes (`prune` are prune_stripes' key_value / key_values),
     decode the survivors on the driver or in Spark, and apply the exact
-    filter `cond`."""
+    filter `cond` (_filter_exact). The optimized plan is walked once, for
+    both the bare-scan test and the snapshot key."""
     if spec is None:
         spec = spec_from_stripes(stripes)
     if columns is not None:
@@ -1091,13 +1144,18 @@ def _point_read(stripes: DataFrame, spec: list[dict], key_col: str,
     if not keys:  # NULL never equals anything: no stripe can match
         _count_prune(metrics, "driver", None, 0)
         _count_served(metrics, "driver")
-        return _local_frame(stripes.sparkSession, [], spec).filter(cond)
+        return _filter_exact(_local_frame(stripes.sparkSession, [], spec),
+                             cond)
     fallback = "id_pushdown_off" if id_pushdown is False else "not_bare_scan"
-    if id_pushdown is None:
-        id_pushdown = _is_bare_scan(stripes)
+    plan = None
+    if id_pushdown is not False:
+        plan = _bare_scan_plan(stripes)
+        if id_pushdown is None:
+            id_pushdown = plan is not None
     pruned = None
     if id_pushdown:
-        got = _prune_on_driver(stripes, **prune)
+        lineage = _lineage(stripes, plan)
+        got = _prune_on_driver(stripes, lineage=lineage, **prune)
         if got is None:
             fallback = "too_many_stripes"
         else:
@@ -1105,17 +1163,18 @@ def _point_read(stripes: DataFrame, spec: list[dict], key_col: str,
             _count_prune(metrics, "driver", total, len(rows), bool(hit))
             if hit is not None:
                 local, fallback = _decode_on_driver(
-                    stripes, rows, spec, columns, key_col, keys, rg_predicate)
+                    stripes, rows, spec, columns, key_col, keys, rg_predicate,
+                    lineage[2])
                 if local is not None:
                     _count_served(metrics, "driver", decoded=True)
-                    return local.filter(cond)
+                    return _filter_exact(local, cond)
             pruned = stripes.filter(
                 F.col("stripe_id").isin([r.stripe_id for r in rows]))
     if pruned is None:
         pruned = _prune_in_spark(stripes, id_pushdown, metrics, **prune)
     _count_served(metrics, "spark", fallback)
-    return decode_df(pruned, spec, columns=columns,
-                     rg_predicate=rg_predicate).filter(cond)
+    return _filter_exact(decode_df(pruned, spec, columns=columns,
+                                   rg_predicate=rg_predicate), cond)
 
 
 # Survivors of a point read decode on the driver (read_rows) when their
@@ -1127,21 +1186,78 @@ def _point_read(stripes: DataFrame, spec: list[dict], key_col: str,
 DRIVER_DECODE_BYTES = 16 << 20
 
 
+class _PartFile:
+    """A stripe-table part file as a snapshot's state holds it: its
+    pyarrow filesystem and path, the (size, mtime) its `footer` (parquet
+    FileMetaData) was read at, and the parsed meta JSON of stripes decoded
+    from it, by stripe_id."""
+
+    __slots__ = ("fs", "path", "stamp", "footer", "metas")
+
+    def __init__(self, fs, path: str, stamp: tuple):
+        self.fs, self.path, self.stamp = fs, path, stamp
+        self.footer, self.metas = None, {}
+
+
+def _part_file(state: dict, uri: str) -> _PartFile:
+    """`uri`'s _PartFile from the snapshot's state, started afresh when
+    the file is new to it or its size or mtime changed (a file rewritten
+    in place must not be read through its old footer)."""
+    import pyarrow.fs as pafs
+
+    parts = state.setdefault("parts", {})
+    part = parts.get(uri)
+    if part is None:
+        fs, path = pafs.FileSystem.from_uri(uri)
+    else:
+        fs, path = part.fs, part.path
+    info = fs.get_file_info(path)
+    stamp = (info.size, info.mtime_ns)
+    if part is None or part.stamp != stamp:
+        part = parts[uri] = _PartFile(fs, path, stamp)
+    return part
+
+
+def _stripe_meta(state: dict, part: _PartFile, sid: str, cell) -> dict:
+    """Stripe `sid`'s parsed meta: from `part` when an earlier read of the
+    snapshot parsed it, else parsed from its JSON (`cell`, an Arrow
+    scalar) and kept while the state holds at most DRIVER_DECODE_BYTES of
+    JSON (metas dropped with a rewritten file still count, so the cap
+    errs low)."""
+    meta = part.metas.get(sid)
+    if meta is None:
+        text = cell.as_py()
+        meta = json.loads(text)
+        with _lineage_lock:  # concurrent reads of one snapshot share it
+            held = state.get("meta_bytes", 0)
+            if sid not in part.metas \
+                    and held + len(text) <= DRIVER_DECODE_BYTES:
+                part.metas[sid] = meta
+                state["meta_bytes"] = held + len(text)
+    return meta
+
+
 def _decode_on_driver(stripes: DataFrame, rows: list, spec: list[dict],
                       columns: list[str] | None, key_col: str, keys: list,
-                      rg_predicate: dict):
+                      rg_predicate: dict, state: dict):
     """The surviving stripes `rows` (_prune_on_driver) read from their
     part files and decoded in this process -> (single-partition local
     frame, None), or (None, the reason the Spark decode must run
-    instead)."""
+    instead). `state` is the lineage snapshot's (_collect_cached): what
+    depends on the snapshot alone is derived once and kept there — whether
+    the frame reads stored columns, each part file's footer and the
+    parsed meta of decoded stripes (at most DRIVER_DECODE_BYTES of JSON)."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.fs as pafs
     import pyarrow.parquet as pq
 
     if sum(r.enc_bytes or 0 for r in rows) > DRIVER_DECODE_BYTES:
         return None, "over_byte_bound"
-    if not _reads_stored(stripes, ("stripe_id", "meta", "blob")):
+    stored = state.get("stored")
+    if stored is None:
+        stored = state.setdefault(
+            "stored", _reads_stored(stripes, ("stripe_id", "meta", "blob")))
+    if not stored:
         return None, "not_bare_scan"
     files: dict = {}
     for r in rows:
@@ -1155,27 +1271,29 @@ def _decode_on_driver(stripes: DataFrame, rows: list, spec: list[dict],
         reads, nbytes = [], 0
         try:
             for uri, ids in files.items():
-                fs, path = pafs.FileSystem.from_uri(uri)
+                part = _part_file(state, uri)
                 pf = pq.ParquetFile(
-                    opened.enter_context(fs.open_input_file(path)),
-                    pre_buffer=False)
+                    opened.enter_context(part.fs.open_input_file(part.path)),
+                    metadata=part.footer, pre_buffer=False)
+                part.footer = pf.metadata
                 groups, size = _stripe_groups(pf.metadata, ids)
-                reads.append((pf, groups, pa.array(sorted(ids), pa.string())))
+                reads.append((pf, part, groups,
+                              pa.array(sorted(ids), pa.string())))
                 nbytes += size
         except (OSError, ValueError):  # no pyarrow filesystem, not parquet
             return None, "unreadable"
         if nbytes > DRIVER_DECODE_BYTES:
             return None, "over_byte_bound"
-        for pf, groups, ids in reads:
+        for pf, part, groups, ids in reads:
             t = pf.read_row_groups(groups, columns=["stripe_id", "meta",
                                                     "blob"],
                                    use_threads=False)
-            metas, blobs = t.column("meta"), t.column("blob")
-            hits = pc.indices_nonzero(pc.is_in(t.column("stripe_id"),
-                                               value_set=ids))
+            sids, metas, blobs = (t.column(c) for c in ("stripe_id", "meta",
+                                                        "blob"))
+            hits = pc.indices_nonzero(pc.is_in(sids, value_set=ids))
             for i in hits.to_pylist():
-                out = _decode_stripe(blobs[i].as_buffer(),
-                                     json.loads(metas[i].as_py()), spec, tz,
+                meta = _stripe_meta(state, part, sids[i].as_py(), metas[i])
+                out = _decode_stripe(blobs[i].as_buffer(), meta, spec, tz,
                                      include, rg_predicate)
                 if out is not None and key_set is not None:
                     out = out.filter(pc.is_in(out.column(key_col),

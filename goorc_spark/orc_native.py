@@ -45,7 +45,7 @@ import pyarrow.compute as pc
 from goorc_spark import _fanout
 from goorc_spark.arrow_stripe import (_JOB_MIN_BYTES, _child_offsets,
                                       _decimal_from_limbs, _decimal_limbs,
-                                      _list_array, _list_parts,
+                                      _expand, _list_array, _list_parts,
                                       _scatter_nulls, _varwidth_array,
                                       _varwidth_parts)
 from goorc_spark.codecs import (_native, boolrle, byterle, chunk, floats,
@@ -1239,10 +1239,18 @@ def _decode_big_svarints(raw: bytes, count: int) -> list[int]:
 
 def _decode_column(cur: _StripeCursor, types: list[dict], col: int,
                    n_rows: int, include: set[int] | None = None) -> pa.Array:
+    """One column of a stripe (or of its selected row groups) as an Arrow
+    array of `n_rows`. Flat kinds fold the PRESENT mask into the pass that
+    builds their values (a dictionary column into its take's index mask);
+    nested kinds build their present values, then scatter the nulls."""
     t = types[col]
     kind = t["kind"]
     mask = cur.present(col, n_rows)
     n_vals = int(mask.sum()) if mask is not None else n_rows
+
+    def full(values: np.ndarray, typ: pa.DataType, fill=0) -> pa.Array:
+        out, nulls = _expand(values, mask, n_rows, fill)
+        return pa.array(out, type=typ, mask=nulls)
 
     if kind == T_STRUCT:
         children, names = [], []
@@ -1275,32 +1283,28 @@ def _decode_column(cur: _StripeCursor, types: list[dict], col: int,
             names.append(f"field{i}")
         vals = pa.StructArray.from_arrays(fields, names)
     elif kind == T_BOOLEAN:
-        vals = pa.array(cur.bools(col, n_vals), type=pa.bool_())
+        return full(cur.bools(col, n_vals), pa.bool_(), fill=False)
     elif kind == T_BYTE:
-        b = cur.bytes_rle(col, n_vals)
-        vals = pa.array(b.view(np.int8), type=pa.int8())
+        return full(cur.bytes_rle(col, n_vals).view(np.int8), pa.int8())
     elif kind in (T_SHORT, T_INT, T_LONG):
-        ints = cur.ints(col, DATA, n_vals, signed=True)
-        vals = pa.array(ints, type=pa.int64())
+        vals = full(cur.ints(col, DATA, n_vals, signed=True), pa.int64())
         if t.get("attrs", {}).get("spark.sql.catalyst.type") == "timestamp_ntz":
             # Spark's ORC writer stores TIMESTAMP_NTZ as LONG epoch-micros
             # tagged with a catalyst-type attribute (observed in JVM-written
             # files; pyarrow.orc surfaces the same longs untagged)
-            vals = vals.view(pa.timestamp("us"))
-        else:
-            typ = {T_SHORT: pa.int16(), T_INT: pa.int32(),
-                   T_LONG: pa.int64()}[kind]
-            if typ != pa.int64():
-                vals = vals.cast(typ)
+            return vals.view(pa.timestamp("us"))
+        typ = {T_SHORT: pa.int16(), T_INT: pa.int32(),
+               T_LONG: pa.int64()}[kind]
+        return vals if typ == pa.int64() else vals.cast(typ)
     elif kind == T_FLOAT:
         # real ORC writers emit little-endian float32; the reference's
         # big-endian float32 (orc/encoding/float.go:27) is its own quirk,
         # kept only in the engine's internal format for vector parity
-        vals = pa.array(np.frombuffer(cur.raw(col, DATA, 4 * n_vals),
-                                      dtype="<f4", count=n_vals))
+        return full(np.frombuffer(cur.raw(col, DATA, 4 * n_vals),
+                                  dtype="<f4", count=n_vals), pa.float32())
     elif kind == T_DOUBLE:
-        vals = pa.array(floats.decode_f64(cur.raw(col, DATA, 8 * n_vals),
-                                          n_vals))
+        return full(floats.decode_f64(cur.raw(col, DATA, 8 * n_vals),
+                                      n_vals), pa.float64())
     elif kind in (T_STRING, T_VARCHAR, T_CHAR, T_BINARY):
         enc = cur.encodings[col]["kind"]
         big_t = pa.large_binary() if kind == T_BINARY else pa.large_utf8()
@@ -1311,15 +1315,15 @@ def _decode_column(cur: _StripeCursor, types: list[dict], col: int,
             dict_arr = _varwidth_array(cur.stream(col, DICTIONARY_DATA),
                                        dlen, None, dict_n, big_t)
             idx = cur.ints(col, DATA, n_vals, signed=False)
-            vals = dict_arr.take(pa.array(idx, type=pa.int64()))
+            vals = dict_arr.take(full(idx, pa.int64()))
         else:
             lens = cur.ints(col, LENGTH, n_vals, signed=False)
             content = cur.raw(col, DATA, int(lens.sum()))
-            vals = _varwidth_array(content, lens, None, n_vals, big_t)
-        vals = vals.cast(pa.binary() if kind == T_BINARY else pa.utf8())
+            vals = _varwidth_array(content, lens, mask, n_rows, big_t)
+        return vals.cast(pa.binary() if kind == T_BINARY else pa.utf8())
     elif kind == T_DATE:
         days = cur.ints(col, DATA, n_vals, signed=True)
-        vals = pa.array(days.astype(np.int32)).view(pa.date32())
+        return full(days.astype(np.int32), pa.int32()).view(pa.date32())
     elif kind == T_TIMESTAMP:
         from goorc_spark.codecs.timestamps import unpack_nanos
         secs = cur.ints(col, DATA, n_vals, signed=True)
@@ -1338,7 +1342,7 @@ def _decode_column(cur: _StripeCursor, types: list[dict], col: int,
         shift = _reader_shift_us(cur.tz, cur.reader_tz, abs_sec)
         if shift is not None:
             micros = micros + shift
-        vals = pa.array(micros, type=pa.int64()).view(pa.timestamp("us"))
+        return full(micros, pa.int64()).view(pa.timestamp("us"))
     elif kind == T_DECIMAL:
         scales = cur.ints(col, SECONDARY, n_vals, signed=True)
         prec, scale = t["precision"], t["scale"]
@@ -1360,7 +1364,7 @@ def _decode_column(cur: _StripeCursor, types: list[dict], col: int,
                 v = m * 10 ** max(scale - s, 0)
                 lo[i] = v & m64
                 hi[i] = v >> 64
-        vals = _decimal_from_limbs(lo, hi, None, n_vals, prec, scale)
+        return _decimal_from_limbs(lo, hi, mask, n_rows, prec, scale)
     else:
         raise NotImplementedError(f"ORC type kind {kind} not supported")
     return _scatter_nulls(vals, mask, n_rows)

@@ -663,9 +663,10 @@ def test_lineage_cache_skips_in_flight_frames(spark):
 
 def test_lineage_cache_not_consulted_by_a_new_session(tmp_path):
     """After spark.stop() and a new session the application id differs,
-    so entries of the old session never match — even for the same files.
-    Runs in its own interpreter: stopping the shared test session would
-    break every later test."""
+    so entries of the old session never match — even for the same files —
+    and the JVM handles the snapshot key is built with are the new
+    session's, not the stopped one's. Runs in its own interpreter:
+    stopping the shared test session would break every later test."""
     import os
     import subprocess
     import sys
@@ -703,14 +704,24 @@ def test_lineage_cache_not_consulted_by_a_new_session(tmp_path):
             assert n == want > 0, (n, want)
             return m["lineage_cache_hits"], m["lineage_cache_misses"]
 
+        def handles(spark):
+            owner, (app, cache_manager, _) = engine._handles_of
+            assert owner is spark
+            assert app == spark.sparkContext.applicationId
+            assert cache_manager.equals(
+                spark._jsparkSession.sharedState().cacheManager())
+            return cache_manager
+
         assert read(spark) == (0, 1)
         assert read(spark) == (1, 0)
         old_app = spark.sparkContext.applicationId
+        old_cache_manager = handles(spark)
         spark.stop()
         spark = session()
         assert spark.sparkContext.applicationId != old_app
         assert len(engine._lineage_cache) == 1
         assert read(spark) == (0, 1)
+        assert not handles(spark).equals(old_cache_manager)
         assert read(spark) == (1, 0)
         spark.stop()
     """)

@@ -321,6 +321,78 @@ def test_writer_dictionary_encoding():
     assert role_enc["dict_size"] == 3
 
 
+def _nullable_flat_table(n: int = 3000) -> pa.Table:
+    """A nullable column of every flat kind (nulls every 3rd row), plus
+    strings that go dictionary and direct, and all-null and no-null
+    columns."""
+    rng = np.random.default_rng(29)
+
+    def nulled(values, typ):
+        return pa.array([None if i % 3 == 1 else v
+                         for i, v in enumerate(values)], typ)
+
+    ints = rng.integers(-2**31, 2**31, n)
+    base = datetime.datetime(2020, 3, 1)
+    return pa.table({
+        "b": nulled([bool(v & 1) for v in ints], pa.bool_()),
+        "i8": nulled((ints % 100).tolist(), pa.int8()),
+        "i16": nulled((ints % 30000).tolist(), pa.int16()),
+        "i32": nulled(ints.tolist(), pa.int32()),
+        "i64": nulled((ints * 7919).tolist(), pa.int64()),
+        "f32": nulled((ints / 7).tolist(), pa.float32()),
+        "f64": nulled((ints / 13).tolist(), pa.float64()),
+        "s_dict": nulled([f"role{v % 5}" for v in ints], pa.string()),
+        "s_direct": nulled([f"t{v}" for v in ints], pa.string()),
+        "bin": nulled([bytes([v % 251]) * (v % 5) for v in ints],
+                      pa.binary()),
+        "d": nulled([datetime.date(2000, 1, 1)
+                     + datetime.timedelta(days=int(v % 9000))
+                     for v in ints], pa.date32()),
+        "ts": nulled([base + datetime.timedelta(microseconds=int(v))
+                      for v in ints * 1000], pa.timestamp("us")),
+        "dec": nulled([decimal.Decimal(int(v)).scaleb(-2) for v in ints],
+                      pa.decimal128(12, 2)),
+        "dec38": nulled([decimal.Decimal(int(v) * 10**15).scaleb(-5)
+                         for v in ints], pa.decimal128(30, 5)),
+        "s_all_null": pa.nulls(n, pa.string()),
+        "i_all_null": pa.nulls(n, pa.int64()),
+        "s_no_null": pa.array([f"k{v % 7}" for v in ints]),
+        "d_no_null": pa.array((ints % 1000).tolist(), pa.int32()),
+    })
+
+
+def test_nullable_flat_kinds_fold_present_into_values():
+    """Flat kinds build their nulls in the one value pass: every nullable
+    column (dictionary and direct strings, all-null and no-null columns)
+    reads equal to pyarrow's reader, from pyarrow's writer with and
+    without dictionaries and from this repo's writer, whole and through
+    a row-group window."""
+    t = _nullable_flat_table()
+    files = {}
+    for threshold in (0.0, 1.0):
+        buf = io.BytesIO()
+        po.write_table(t, buf, compression="zlib", stripe_size=64 * 1024,
+                       dictionary_key_size_threshold=threshold)
+        files[f"pyarrow-dict{threshold}"] = buf.getvalue()
+    files["write_orc"] = on.write_orc(t, stripe_rows=2000,
+                                      row_index_stride=500)
+    for name, data in files.items():
+        got = on.read_orc(data)
+        assert got.cast(t.schema).equals(t), name
+        assert got.equals(po.read_table(io.BytesIO(data)).cast(got.schema)), \
+            name
+        window = on.read_orc_rows(data, 1234, 2345)
+        assert window.equals(got.slice(1234, 1111)), name
+    ps, footer = on.parse_tail(files["pyarrow-dict1.0"])
+    s0 = footer["stripes"][0]
+    foot_off = s0["offset"] + s0["index_length"] + s0["data_length"]
+    sf = on.parse_stripe_footer(on._decompress(
+        files["pyarrow-dict1.0"][foot_off:foot_off + s0["footer_length"]],
+        ps["compression"]))
+    col = 1 + t.schema.get_field_index("s_dict")
+    assert sf["encodings"][col]["kind"] == on.ENC_DICTIONARY_V2
+
+
 def test_writer_nested():
     t = pa.table({
         "arr": pa.array([[1, 2], None, [], [3, None]],

@@ -343,6 +343,228 @@ def test_warm_driver_point_read_count_is_one_job(spark, tables):
         "LocalTableScan", ""), plan
 
 
+def _round_trips(monkeypatch, fn):
+    """(fn(), Py4J commands the main thread sent while fn ran). Commands
+    of other threads (the gateway's garbage-collection messages) are not
+    this read's."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    real, main, sent = ClientServerConnection.send_command, \
+        threading.main_thread(), [0]
+
+    def spy(self, command):
+        if threading.current_thread() is main:
+            sent[0] += 1
+        return real(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", spy)
+        out = fn()
+    return out, sent[0]
+
+
+def test_warm_driver_point_read_py4j_budget(spark, tables, tmp_path,
+                                            monkeypatch):
+    """A warm, driver-served point read plus its count() crosses into the
+    JVM at most 50 times, for read_rows and a three-key read_rows_in, and
+    as often whatever the number of stored or decoded columns."""
+    pdf, spec, st = tables
+    st = st["range"]
+    narrow_path = str(tmp_path / "narrow")
+    st.drop("run_id", "encode_ms", "raw_bytes").write.parquet(narrow_path)
+    narrow = spark.read.parquet(narrow_path)
+    keys = _keys(pdf)
+    reads = {
+        "read_rows": lambda t, cols, m: engine.read_rows(
+            t, spec, "conv_id", keys[16], columns=cols, metrics=m),
+        "read_rows_in": lambda t, cols, m: engine.read_rows_in(
+            t, spec, "conv_id", keys[17:20], columns=cols, metrics=m),
+    }
+    for name, read in reads.items():
+        trips = []
+        for table, cols in ((st, None), (narrow, ["conv_id", "turn_idx"])):
+            want = read(table, cols, None).count()  # warms the lineage cache
+            m: dict = {}
+            n, sent = _round_trips(
+                monkeypatch, lambda: read(table, cols, m).count())
+            assert n == want > 0
+            assert m["served_on"] == "driver" and m["lineage_cache_hits"]
+            trips.append(sent)
+        assert 0 < trips[0] <= 50, (name, trips)
+        assert trips[0] == trips[1], (name, trips)
+
+def test_reads_stored_derived_once_per_snapshot(spark, tmp_path,
+                                                monkeypatch):
+    """The stored-columns verdict is kept with the lineage cache entry:
+    warm reads do not derive it again, and an overwrite or an append
+    (a new snapshot) does."""
+    from test_bloom import _keyed_pdf, _write_table
+
+    calls = []
+    real = engine._reads_stored
+    monkeypatch.setattr(engine, "_reads_stored",
+                        lambda *a: calls.append(1) or real(*a))
+    path = str(tmp_path / "t")
+    pdf = _keyed_pdf()
+    _write_table(spark, path, pdf)
+    key = _keys(pdf)[4]
+
+    def reads(n):
+        st = spark.read.parquet(path)
+        for _ in range(2):
+            m: dict = {}
+            got = engine.read_rows(st, transcripts.TRANSCRIPTS_SPEC,
+                                   "conv_id", key, metrics=m).count()
+            assert m["served_on"] == "driver"
+            assert got == n
+        return len(calls)
+
+    assert reads(int((pdf["conv_id"] == key).sum())) == 1
+    _write_table(spark, path, _keyed_pdf(seed=5, prefix="other"),
+                 mode="overwrite")
+    assert reads(0) == 2
+    _write_table(spark, path, pdf, run_id="again", mode="append")
+    spark.catalog.refreshByPath(path)
+    assert reads(int((pdf["conv_id"] == key).sum())) == 3
+
+
+def test_part_file_rewritten_in_place_gets_a_new_footer(spark, tables,
+                                                        tmp_path):
+    """A part file's footer is kept only while its size and mtime hold: a
+    file rewritten under the same name with other bytes (the same row,
+    uncompressed, so every column chunk moves) is read through its new
+    footer, not the stale one."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    pdf, spec, st = tables
+    path = str(tmp_path / "t")
+    shutil.copytree(st["range"].inputFiles()[0].rsplit("/", 1)[0].replace(
+        "file:", ""), path)
+    table = spark.read.parquet(path)
+    key = _keys(pdf)[18]
+    want = _rows(engine.read_rows(table, spec, "conv_id", key,
+                                  id_pushdown=False))
+    assert _rows(engine.read_rows(table, spec, "conv_id", key)) == want
+    _, hit, state = engine._lineage(table)
+    assert hit
+    (uri,) = {r.file for r in engine._prune_on_driver(
+        table, key_value=key)[0]}
+    stale = state["parts"][uri]
+    local = stale.path
+    size = os.path.getsize(local)
+    pq.write_table(pq.read_table(local), local, compression="none")
+    assert os.path.getsize(local) != size
+    m: dict = {}
+    got = engine.read_rows(table, spec, "conv_id", key, metrics=m)
+    assert m["served_on"] == "driver" and m["lineage_cache_hits"] == 1
+    assert _rows(got) == want
+    fresh = state["parts"][uri]
+    assert fresh is not stale
+    assert fresh.footer.equals(pq.ParquetFile(local).metadata)
+    blob = fresh.footer.num_columns - 1
+    assert fresh.footer.row_group(0).column(blob).path_in_schema == "blob"
+    assert (fresh.footer.row_group(0).column(blob).data_page_offset
+            != stale.footer.row_group(0).column(blob).data_page_offset)
+
+
+def test_snapshot_state_under_concurrent_reads(spark, tables, tmp_path):
+    """Threads reading one fresh snapshot at once share its state: every
+    read is right, and the meta bytes it counts are exactly those of the
+    metas it keeps (no lost or doubled update)."""
+    import shutil
+    import sys
+    import threading
+
+    pdf, spec, st = tables
+    path = str(tmp_path / "t")
+    shutil.copytree(st["hash"].inputFiles()[0].rsplit("/", 1)[0].replace(
+        "file:", ""), path)
+    table = spark.read.parquet(path)
+    keys = _keys(pdf)[:12]
+    want = {k: int((pdf["conv_id"] == k).sum()) for k in keys}
+    got, errors = {}, []
+
+    def reader(mine):
+        try:
+            for k in mine:
+                m: dict = {}
+                got[k] = (engine.read_rows(table, spec, "conv_id", k,
+                                           metrics=m).count(),
+                          m["served_on"])
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=reader, args=(keys[i::6],))
+                   for i in range(6)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert got == {k: (n, "driver") for k, n in want.items()}
+    _, hit, state = engine._lineage(table)
+    assert hit
+    metas = {r.stripe_id: r.meta for r in
+             table.select("stripe_id", "meta").collect()}
+    kept = [sid for part in state["parts"].values() for sid in part.metas]
+    assert kept and len(kept) == len(set(kept))
+    assert state["meta_bytes"] == sum(len(metas[sid]) for sid in kept)
+
+
+def test_frame_bound_filter_is_the_column_filter(spark):
+    """_filter_exact builds the Catalyst filter PySpark's Column operators
+    build over the same frame."""
+    df = spark.range(0, 50).selectExpr("CAST(id AS STRING) AS k",
+                                       "id % 7 AS o")
+
+    def same(a, b):
+        return a._jdf.queryExecution().optimizedPlan().sameResult(
+            b._jdf.queryExecution().optimizedPlan())
+
+    assert same(engine._filter_exact(df, [("k", "equalTo", "3"),
+                                          ("o", "geq", 1),
+                                          ("o", "leq", 5)]),
+                df.filter((F.col("k") == F.lit("3")) & (F.col("o") >= F.lit(1))
+                          & (F.col("o") <= F.lit(5))))
+    assert same(engine._filter_exact(df, [("k", "isInCollection",
+                                           ["1", "12", "3"])]),
+                df.filter(F.col("k").isin(["1", "12", "3"])))
+    assert not same(engine._filter_exact(df, [("k", "equalTo", "4")]),
+                    df.filter(F.col("k") == F.lit("3")))
+    assert engine._filter_exact(df, [("k", "equalTo", None)]).count() == 0
+
+
+def test_driver_order_bounds_and_key_lists(tables):
+    """One-sided ord windows, and key lists with duplicates and NULLs,
+    give the Spark decode's rows under the frame-bound filter."""
+    pdf, spec, st = tables
+    keys = _keys(pdf)
+    key = max(keys, key=lambda k: int((pdf["conv_id"] == k).sum()))
+    n = int((pdf["conv_id"] == key).sum())
+    assert n > 20
+    for bounds, want in (({"ord_lo": 4}, n - 4), ({"ord_hi": 4}, 5)):
+        rows = _same_as_spark(lambda **kw: engine.read_rows(
+            st["hash"], spec, "conv_id", key, ord_col="turn_idx", **bounds,
+            **kw))
+        assert len(rows) == want, bounds
+    batch = [keys[20], None, keys[3], keys[20], ABSENT_IN_RANGE, None]
+    for layout in ("hash", "range"):
+        rows = _same_as_spark(lambda **kw: engine.read_rows_in(
+            st[layout], spec, "conv_id", batch, **kw))
+        assert len(rows) == int(pdf["conv_id"].isin(batch).sum())
+
+
 def test_read_where_metrics(spark, tables):
     """read_where's id pass records where it pruned and what it kept; the
     single-pass plan runs no id pass and records nothing."""
