@@ -773,8 +773,11 @@ def main() -> None:
 
         # side-by-side dot implementations (VERDICT r3 #9): the embedding
         # legs re-run with the pandas/BLAS dot; outputs are pinned
-        # identical by tests/test_dedup_scale.py, this records the speed
-        similarity.set_dot_impl("pandas")
+        # identical by tests/test_dedup_scale.py, this records the speed.
+        # A zero size bound resolves every operator with a known input
+        # size to the pandas impl.
+        auto_bytes = similarity.AUTO_PANDAS_BYTES
+        similarity.AUTO_PANDAS_BYTES = 0
         try:
             dot_legs = {}
             for name in ("dedup_embedding_lsh", "ann_cosine_topk",
@@ -784,7 +787,7 @@ def main() -> None:
                     "sql_sec": queries[name], "pandas_sec": round(sec, 3),
                     "speedup": round(queries[name] / sec, 2) if sec else None}
         finally:
-            similarity.set_dot_impl("auto")  # default: size-resolved
+            similarity.AUTO_PANDAS_BYTES = auto_bytes
         extras["dot_impl"] = dot_legs
 
         # ---- dedup growth leg (VERDICT r2 #10): the bucketed dedup paths

@@ -89,17 +89,20 @@ def main() -> None:
         med[name] = {"median_sec": m, "attempts": attempts}
     out["legs_median3"] = med
 
-    # dot-impl A/B on the embedding legs (VERDICT r5 #4 evidence)
+    # dot-impl A/B on the embedding legs (VERDICT r5 #4 evidence): the
+    # size bound picks each operator's impl, so an infinite bound forces
+    # the sql fold and a zero one the pandas impl
     ab = {}
+    auto_bytes = similarity.AUTO_PANDAS_BYTES
     for name in ("dedup_embedding_lsh", "ann_cosine_topk", "ann_lsh_topk",
                  "ann_pairwise_topk_lsh", "ann_ivf_trained"):
         row = {}
-        for impl in ("sql", "pandas"):
-            similarity.set_dot_impl(impl)
+        for impl, bound in (("sql", float("inf")), ("pandas", 0)):
+            similarity.AUTO_PANDAS_BYTES = bound
             try:
                 row[impl], _ = median3(legs[name])
             finally:
-                similarity.set_dot_impl("auto")
+                similarity.AUTO_PANDAS_BYTES = auto_bytes
         row["sql_over_pandas"] = round(row["sql"] / row["pandas"], 2)
         ab[name] = row
     out["dot_impl_ab"] = ab

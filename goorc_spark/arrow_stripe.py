@@ -920,8 +920,7 @@ class CorruptStripeError(ValueError):
 def decode_stripe_batch(blob: bytes, meta: dict,
                         tz: str | None = None,
                         include: list[str] | None = None,
-                        rg_sel: list[int] | None = None,
-                        verify: bool = True) -> pa.RecordBatch:
+                        rg_sel: list[int] | None = None) -> pa.RecordBatch:
     """Decode a stripe. `include` projects columns: only the named columns'
     streams are decompressed/decoded (the reference's include-list,
     /root/reference/orc/stripe.go:246-261 — skipped columns cost nothing).
@@ -930,8 +929,10 @@ def decode_stripe_batch(blob: bytes, meta: dict,
     orc/stripe.go:369-388). Column-major: each included column is read
     once over every selected group into one Arrow array (_read_column),
     so no per-group batch is built or copied. A projection that keeps no
-    column returns a zero-column batch of the selected groups' rows."""
-    if verify and "crc32" in meta and zlib.crc32(blob) != meta["crc32"]:
+    column returns a zero-column batch of the selected groups' rows. A
+    blob whose CRC32 differs from the one meta records raises
+    CorruptStripeError."""
+    if "crc32" in meta and zlib.crc32(blob) != meta["crc32"]:
         raise CorruptStripeError(
             f"stripe blob CRC mismatch (expected {meta['crc32']}, got "
             f"{zlib.crc32(blob)}) — storage corruption or truncated read")

@@ -36,6 +36,9 @@ from goorc_spark.codecs.primitives import (
     zigzag,
 )
 
+# a single RLEv2 run never holds more than 512 values (DIRECT/PATCHED/
+# DELTA length field is 9 bits + 1; SHORT_REPEAT <= 10), so decoding into
+# count+MAX_RUN slots can never overflow even when the last run overshoots
 MAX_RUN = 512
 MIN_REPEAT = 3
 MAX_SHORT_REPEAT = 10
@@ -342,12 +345,6 @@ def decode_prefix(data, count: int, signed: bool = True) -> np.ndarray:
     trailing bytes are ignored."""
     out, _ = _decode_runs(data, count, signed, slack=MAX_RUN + 8)
     return out[:count]
-
-
-# a single RLEv2 run never holds more than 512 values (DIRECT/PATCHED/
-# DELTA length field is 9 bits + 1; SHORT_REPEAT <= 10), so decoding into
-# count+MAX_RUN slots can never overflow even when the last run overshoots
-MAX_RUN = 512
 
 
 def _decode_runs(data, count: int, signed: bool, slack: int):

@@ -481,14 +481,15 @@ def _coerce_to_spec(batch, spec: list[dict], tz: str | None):
 
 
 def _decode_stripe(blob, meta: dict, spec: list[dict], tz: str | None,
-                   include: list[str] | None, rg_predicate: dict | None):
+                   include: list[str] | None, rg_predicate: dict | None,
+                   rg_sel: list[int] | None = None):
     """One stripe's rows as a RecordBatch of the declared spec (CRC32
-    verified), restricted to the row groups `rg_predicate` can match; None
-    when it matches none. The body of decode_df's executor task and of the
+    verified), restricted to the row groups `rg_predicate` can match (or,
+    without one, to the groups `rg_sel` names); None when it matches none.
+    The body of decode_df's and read_rows_at's executor tasks and of the
     driver-side point read alike."""
     from goorc_spark import arrow_stripe
 
-    rg_sel = None
     if rg_predicate:
         rg_sel = arrow_stripe.select_row_groups(meta, **rg_predicate)
         if rg_sel is not None and not rg_sel:
@@ -564,10 +565,6 @@ def _bare_scan_plan(df: DataFrame):
             return None
     except Exception:
         return None
-
-
-def _is_bare_scan(df: DataFrame) -> bool:
-    return _bare_scan_plan(df) is not None
 
 
 # Driver-side cache of lineage/meta collects, the analog of an ORC reader
@@ -661,7 +658,6 @@ def read_rows(stripes: DataFrame, spec: list[dict], key_col: str,
               key_value, ord_col: str | None = None,
               ord_lo=None, ord_hi=None,
               columns: list[str] | None = None,
-              id_pushdown: bool | None = None,
               metrics: dict | None = None) -> DataFrame:
     """Point/range read: the reference's Seek(row)+Skip path
     (/root/reference/orc/reader.go:199-212, orc/stripe.go:369-388) expressed
@@ -672,23 +668,23 @@ def read_rows(stripes: DataFrame, spec: list[dict], key_col: str,
     no row (SQL equality): the empty frame comes back without reading a
     stripe.
 
-    `id_pushdown` (default: auto — on only when `stripes` is a bare file
-    scan): the range/bloom predicates are expressions parquet cannot push,
-    so a single-pass plan still READS the blob column of pruned stripes
-    before filtering them. Instead, a first pass collects the lineage
-    columns of every stripe (stripe_id, key_min, key_max, key_bloom,
-    enc_bytes and the part file holding it — column pruning drops the
-    blobs: 8 KB of bloom vs 256 MB of blob per stripe at prod shape) with
-    no filter, so its plan is the same for every key; prune_stripes' range
-    + bloom predicate then runs in Python on the driver, and the survivors
-    are decoded — on the driver (below) or by a second scan filtering
-    `stripe_id IN (survivors)`, a predicate parquet pushes into row-group
-    stats and dictionary filters. Only worth it when re-scanning is cheap,
-    i.e. the stripes ARE a storage scan — for derived/in-flight stripe
-    frames the two passes would recompute the upstream job, so auto stays
-    off. A table of more than MAX_PUSHDOWN_IDS stripes prunes in Spark
-    instead (prune_stripes, then the same id pass over its survivors), and
-    beyond MAX_PUSHDOWN_IDS survivors in the single-pass plan.
+    When `stripes` is a bare file scan (_bare_scan_plan), the read takes
+    an id pass: the range/bloom predicates are expressions parquet cannot
+    push, so a single-pass plan still READS the blob column of pruned
+    stripes before filtering them. Instead, a first pass collects the
+    lineage columns of every stripe (stripe_id, key_min, key_max,
+    key_bloom, enc_bytes and the part file holding it — column pruning
+    drops the blobs: 8 KB of bloom vs 256 MB of blob per stripe at prod
+    shape) with no filter, so its plan is the same for every key;
+    prune_stripes' range + bloom predicate then runs in Python on the
+    driver, and the survivors are decoded — on the driver (below) or by a
+    second scan filtering `stripe_id IN (survivors)`, a predicate parquet
+    pushes into row-group stats and dictionary filters. Any other frame
+    (derived, in-flight) takes the single-pass plan: two passes would
+    recompute the upstream job. A table of more than MAX_PUSHDOWN_IDS
+    stripes prunes in Spark instead (prune_stripes, then the same id pass
+    over its survivors), and beyond MAX_PUSHDOWN_IDS survivors in the
+    single-pass plan.
 
     The lineage rows of the first pass are cached on the driver, the way an
     ORC reader parses a file's tail once: the cache key is the table
@@ -726,10 +722,10 @@ def read_rows(stripes: DataFrame, spec: list[dict], key_col: str,
     `lineage_cache_hits` / `lineage_cache_misses` of the driver-side pass,
     `pruned_on` ("driver" or "spark") and `served_on` ("driver" or "spark":
     where the rows were decoded). A Spark-served read names its `fallback`
-    — "not_bare_scan", "id_pushdown_off", "too_many_stripes" (more than
-    MAX_PUSHDOWN_IDS), "over_byte_bound" or "unreadable" (a part file
-    pyarrow cannot open); a driver-decoded one names its `kernel` ("native"
-    or "numpy", goorc_spark.codecs._native.status()). Labels describe the
+    — "not_bare_scan", "too_many_stripes" (more than MAX_PUSHDOWN_IDS),
+    "over_byte_bound" or "unreadable" (a part file pyarrow cannot open);
+    a driver-decoded one names its `kernel` ("native" or "numpy",
+    goorc_spark.codecs._native.status()). Labels describe the
     last call; a count the plan never computed — the Spark side's total,
     its cache use, the single-pass plan's survivors — is absent."""
     pred: dict = {"key_value": key_value}
@@ -744,12 +740,11 @@ def read_rows(stripes: DataFrame, spec: list[dict], key_col: str,
         cond.append((ord_col, "leq", ord_hi))
     keys = [] if key_value is None else [key_value]
     return _point_read(stripes, spec, key_col, keys, cond, pred, columns,
-                       id_pushdown, metrics, key_value=key_value)
+                       metrics, key_value=key_value)
 
 
 def read_rows_in(stripes: DataFrame, spec: list[dict], key_col: str,
                  key_values, columns: list[str] | None = None,
-                 id_pushdown: bool | None = None,
                  metrics: dict | None = None) -> DataFrame:
     """Batch point read `key IN (...)` — the training-pipeline shape
     (fetch a batch of conversations by id) as ONE job instead of N point
@@ -760,22 +755,21 @@ def read_rows_in(stripes: DataFrame, spec: list[dict], key_col: str,
     prune where ANY key fits the group's range (+ rg_bloom when
     recorded); (3) one exact Catalyst isin filter. NULL keys are dropped
     (SQL IN never matches NULL); an all-NULL list reads no stripe.
-    `id_pushdown`, `metrics` and the driver-side decode of small
-    survivors (files read at call time) as in read_rows."""
+    The id pass, `metrics` and the driver-side decode of small survivors
+    (files read at call time) as in read_rows."""
     key_values = list(key_values)
     if not key_values:
         raise ValueError("key_values must be non-empty")
     keys = sorted({k for k in key_values if k is not None})
     return _point_read(stripes, spec, key_col, keys,
                        [(key_col, "isInCollection", keys)],
-                       {"key_values": keys}, columns, id_pushdown, metrics,
+                       {"key_values": keys}, columns, metrics,
                        key_values=keys)
 
 
 def read_where(stripes: DataFrame, spec: list[dict], col: str | None = None,
                lo=None, hi=None,
                columns: list[str] | None = None,
-               id_pushdown: bool | None = None,
                col_ranges: dict | None = None,
                metrics: dict | None = None) -> DataFrame:
     """Value-predicate seek on ANY orderable column(s) (the reference's
@@ -788,12 +782,13 @@ def read_where(stripes: DataFrame, spec: list[dict], col: str | None = None,
     can intersect), and each becomes an exact Catalyst filter.
 
     Unlike read_rows there is no stripe-level lineage range for arbitrary
-    columns, so with `id_pushdown` (default: auto, bare file scans only) a
+    columns, so when `stripes` is a bare file scan (_bare_scan_plan) a
     first pass scans stripe_id+meta ONLY (no blob bytes), evaluates the
     row-group ranges there, and the second pass decodes `stripe_id IN
     (survivors)` — the IN predicate is parquet-pushable, so fully
-    non-covering stripes' blobs are never read. At 10^12 rows pair this
-    with range_partition on the hottest column.
+    non-covering stripes' blobs are never read. Any other frame decodes in
+    one pass. At 10^12 rows pair this with range_partition on the hottest
+    column.
 
     `metrics` as in read_rows: that id pass (a Spark job) records
     `pruned_on` "spark" and, when it kept at most MAX_PUSHDOWN_IDS
@@ -805,9 +800,7 @@ def read_where(stripes: DataFrame, spec: list[dict], col: str | None = None,
         raise ValueError("read_where needs `col` or `col_ranges`")
     if columns is not None:
         columns = list(columns) + [c for c in ranges if c not in columns]
-    if id_pushdown is None:
-        id_pushdown = _is_bare_scan(stripes)
-    if id_pushdown:
+    if _bare_scan_plan(stripes) is not None:
 
         def probe(batches):
             import pyarrow as pa
@@ -834,13 +827,9 @@ def read_where(stripes: DataFrame, spec: list[dict], col: str | None = None,
             stripes = stripes.filter(F.col("stripe_id").isin(ids))
     out = decode_df(stripes, spec, columns=columns,
                     rg_predicate={"col_ranges": ranges})
-    cond = F.lit(True)
-    for c, (clo, chi) in ranges.items():
-        if clo is not None:
-            cond = cond & (F.col(c) >= F.lit(clo))
-        if chi is not None:
-            cond = cond & (F.col(c) <= F.lit(chi))
-    return out.filter(cond)
+    cond = [(c, op, bound) for c, (clo, chi) in ranges.items()
+            for op, bound in (("geq", clo), ("leq", chi)) if bound is not None]
+    return _filter_exact(out, cond) if cond else out
 
 
 def read_rows_at(stripes: DataFrame, spec: list[dict] | None,
@@ -884,8 +873,6 @@ def read_rows_at(stripes: DataFrame, spec: list[dict] | None,
     tz = stripes.sparkSession.conf.get("spark.sql.session.timeZone")
 
     def decode_slices(batches):
-        from goorc_spark import arrow_stripe
-
         for rb in batches:
             metas = rb.column("meta").to_pylist()
             blobs = rb.column("blob")
@@ -905,9 +892,8 @@ def read_rows_at(stripes: DataFrame, spec: list[dict] | None,
                                 first_off = p
                             rg_sel.append(j)
                         p += g["n_rows"]
-                out = arrow_stripe.decode_stripe_batch(
-                    blobs[i].as_py(), meta, tz=tz, include=include,
-                    rg_sel=rg_sel)
+                out = _decode_stripe(blobs[i].as_py(), meta, spec, tz,
+                                     include, None, rg_sel=rg_sel)
                 yield out.slice(slo - first_off, shi - slo)
 
     return (sel.select("meta", "blob", "row_start", "n_rows")
@@ -1130,8 +1116,8 @@ def _filter_exact(frame: DataFrame, cond: list) -> DataFrame:
 
 def _point_read(stripes: DataFrame, spec: list[dict], key_col: str,
                 keys: list, cond: list, rg_predicate: dict,
-                columns: list[str] | None, id_pushdown: bool | None,
-                metrics: dict | None, **prune) -> DataFrame:
+                columns: list[str] | None, metrics: dict | None,
+                **prune) -> DataFrame:
     """read_rows / read_rows_in once their non-NULL `keys` are known:
     prune stripes (`prune` are prune_stripes' key_value / key_values),
     decode the survivors on the driver or in Spark, and apply the exact
@@ -1146,14 +1132,9 @@ def _point_read(stripes: DataFrame, spec: list[dict], key_col: str,
         _count_served(metrics, "driver")
         return _filter_exact(_local_frame(stripes.sparkSession, [], spec),
                              cond)
-    fallback = "id_pushdown_off" if id_pushdown is False else "not_bare_scan"
-    plan = None
-    if id_pushdown is not False:
-        plan = _bare_scan_plan(stripes)
-        if id_pushdown is None:
-            id_pushdown = plan is not None
-    pruned = None
-    if id_pushdown:
+    fallback, pruned = "not_bare_scan", None
+    plan = _bare_scan_plan(stripes)
+    if plan is not None:
         lineage = _lineage(stripes, plan)
         got = _prune_on_driver(stripes, lineage=lineage, **prune)
         if got is None:
@@ -1171,7 +1152,7 @@ def _point_read(stripes: DataFrame, spec: list[dict], key_col: str,
             pruned = stripes.filter(
                 F.col("stripe_id").isin([r.stripe_id for r in rows]))
     if pruned is None:
-        pruned = _prune_in_spark(stripes, id_pushdown, metrics, **prune)
+        pruned = _prune_in_spark(stripes, plan, metrics, **prune)
     _count_served(metrics, "spark", fallback)
     return _filter_exact(decode_df(pruned, spec, columns=columns,
                                    rg_predicate=rg_predicate), cond)
@@ -1388,13 +1369,14 @@ def _local_frame(spark: SparkSession, batches: list,
                                  schema).coalesce(1)
 
 
-def _prune_in_spark(stripes: DataFrame, id_pushdown: bool,
-                    metrics: dict | None, **keys) -> DataFrame:
-    """The Spark-side stripe prune of read_rows / read_rows_in (see
-    read_rows' `id_pushdown`); `keys` are prune_stripes' key_value /
-    key_values."""
+def _prune_in_spark(stripes: DataFrame, plan, metrics: dict | None,
+                    **keys) -> DataFrame:
+    """The Spark-side stripe prune of read_rows / read_rows_in: with the
+    frame's _bare_scan_plan `plan`, an id pass over prune_stripes'
+    survivors (see read_rows), else the single-pass plan; `keys` are
+    prune_stripes' key_value / key_values."""
     pruned = prune_stripes(stripes, **keys)
-    if id_pushdown:
+    if plan is not None:
         ids = [r[0] for r in pruned.select("stripe_id")
                .limit(MAX_PUSHDOWN_IDS + 1).collect()]
         if len(ids) <= MAX_PUSHDOWN_IDS:

@@ -418,7 +418,7 @@ def embedding_near_dup_lsh(embeddings: DataFrame, threshold: float = 0.95,
 
     with similarity._resolved(embeddings):  # auto sql/BLAS (VERDICT r4 #7)
         b = similarity.hyperplane_buckets(embeddings, anchor_ids)
-        dot = similarity._dot  # honors set_dot_impl (sql oracle / BLAS)
+        dot = similarity._dot  # the impl _resolved pinned: sql or BLAS
         e = b.select("vec_id", "embedding", "bucket",
                      F.sqrt(dot(F.col("embedding"), F.col("embedding")))
                       .alias("nrm"))
@@ -465,7 +465,7 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.95,
     from goorc_spark.pipeline_ops import similarity
 
     with similarity._resolved(embeddings):  # auto sql/BLAS (VERDICT r4 #7)
-        dot = similarity._dot  # honors set_dot_impl (sql oracle / BLAS)
+        dot = similarity._dot  # the impl _resolved pinned: sql or BLAS
         norm = lambda x: F.sqrt(dot(x, x))  # noqa: E731
         e = embeddings.select("vec_id", "embedding",
                               norm(F.col("embedding")).alias("nrm"))
@@ -601,11 +601,12 @@ def dedup_components(docs: DataFrame, n: int = 3,
     exact-Jaccard pair graph, labels = min doc_id reachable. Iterative
     min-label propagation (each round: every node takes the min of its own
     and its neighbors' labels) converges in <= graph-diameter rounds; the
-    driver loop checks ONE scalar per round (changed-count) and is bounded
-    by max_iters — at 10^9 docs near-dup components are shallow (dup
-    clusters, not social graphs), so diameter stays small; for adversarial
-    chains pass method='star' (large-star/small-star, O(log n) rounds
-    independent of diameter — see connected_components). Returns
+    driver loop checks ONE scalar per round (changed-count) and raises
+    when max_iters rounds end first — at 10^9 docs near-dup components
+    are shallow (dup clusters, not social graphs), so diameter stays
+    small; for adversarial chains pass method='star' (large-star/
+    small-star, O(log n) rounds independent of diameter — see
+    connected_components). Returns
     (doc_id, component) for every document; singletons are their own
     component.
 
@@ -645,7 +646,10 @@ def connected_components(docs: DataFrame, pairs: DataFrame,
     component tree heights, so rounds are O(log n) INDEPENDENT of
     diameter — the adversarial-chain fallback (VERDICT r3 #8; a 1000-link
     chain converges in ~10 rounds where propagation needs 1000,
-    tests/test_dedup_scale.py::test_star_components_long_chain)."""
+    tests/test_dedup_scale.py::test_star_components_long_chain).
+
+    Either method raises RuntimeError when `max_iters` rounds end before
+    the labels settle, rather than return unconverged labels."""
     if method == "star":
         return _cc_star(docs, pairs, max_iters)
     return _cc_propagate(docs, pairs, max_iters)
@@ -695,8 +699,15 @@ def _cc_propagate(docs: DataFrame, pairs: DataFrame,
             prev.unpersist()
         prev, labels = new, new
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise _unconverged("propagate", max_iters)
+
+
+def _unconverged(method: str, max_iters: int) -> RuntimeError:
+    hint = "" if method == "star" else ', or pass method="star"'
+    return RuntimeError(
+        f"connected components (method={method!r}) did not converge in "
+        f"max_iters={max_iters} rounds: raise max_iters{hint}")
 
 
 def _cc_star(docs: DataFrame, pairs: DataFrame, max_iters: int) -> DataFrame:
@@ -747,6 +758,9 @@ def _cc_star(docs: DataFrame, pairs: DataFrame, max_iters: int) -> DataFrame:
         e, n_edges = new, new_n
         if converged:
             break
+    else:
+        if n_edges:
+            raise _unconverged("star", max_iters)
     comp = (e.groupBy("u").agg(F.min("v").alias("nbr_min"))
             .withColumnRenamed("u", "doc_id"))
     return (docs.select("doc_id").join(comp, "doc_id", "left")

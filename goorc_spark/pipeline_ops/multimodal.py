@@ -72,7 +72,7 @@ def decode_image(payload: bytes) -> np.ndarray:
         "deterministic plumbing-test fake")
 
 
-def extract_features(media: DataFrame, fake: bool = True, batch_hint: int = 16) -> DataFrame:
+def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
     Arrow delivers the binary column as a pandas Series of bytes; the UDF

@@ -17,53 +17,30 @@ k rows per bucket, not the corpus.
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-_DOT_IMPL = "auto"
-_ACTIVE_IMPL: str | None = None  # set per-operator by _resolved()
+_active = threading.local()  # .impl: the dot impl _resolved() pinned
 _dot_pandas_udf = None
 
-# auto crossover: below this Catalyst-estimated input size the sql fold's
-# zero per-batch overhead wins (and stays bit-identical to the DuckDB
-# oracle — every sf0.01/sf0.1 gate input resolves 'sql'); above it the
-# BLAS batch dot amortizes its UDF overhead (bench detail.dot_impl:
+# per-operator dot impl, from the input's Catalyst size estimate: below
+# this the sql fold — zip_with + aggregate, sequential left-to-right
+# double accumulation, bit-identical to the DuckDB oracle's list_reduce —
+# wins on its zero per-batch overhead (every sf0.01/sf0.1 gate input
+# resolves 'sql'); above it the 'pandas' impl, one BLAS einsum per Arrow
+# batch (pairwise float64 summation: equal after round(,6) on real data,
+# not bit-guaranteed), amortizes its UDF overhead (bench detail.dot_impl:
 # pandas 1.2-1.3x on the multi-MB legs, loses the sub-second ones).
 AUTO_PANDAS_BYTES = 64 << 20
 
 
-def set_dot_impl(mode: str) -> None:
-    """Select the dot-product implementation behind `_dot` (VERDICT r3 #9,
-    r4 #7):
-
-    'auto'   — (default) per-operator choice from the input DataFrame's
-               Catalyst size estimate: 'sql' below AUTO_PANDAS_BYTES,
-               'pandas' above (the same sizeInBytes trick engine salt
-               detection uses). Unknown/sentinel estimates resolve 'sql'
-               (the conservative, oracle-identical side).
-    'sql'    — zip_with + aggregate fold: pure Catalyst algebra,
-               sequential left-to-right double accumulation, bit-identical
-               to the DuckDB oracle's list_reduce. Interpreted (higher-
-               order functions don't codegen), so it dominates embedding-op
-               CPU at scale.
-    'pandas' — Arrow-batched pandas UDF doing one BLAS matmul-shaped
-               einsum per batch: the production fast path (benched ~2-4x
-               on the embedding legs at sf0.1, bench.py detail.dot_impl).
-               Pairwise float64 summation instead of sequential — equal
-               after round(,6) on real data, but not bit-guaranteed, which
-               is why the ORACLE twin stays 'sql'."""
-    global _DOT_IMPL
-    if mode not in ("auto", "sql", "pandas"):
-        raise ValueError(f"dot impl {mode!r}: use 'auto', 'sql' or 'pandas'")
-    _DOT_IMPL = mode
-
-
 def _impl_for(df: DataFrame) -> str:
-    """Resolve the dot impl for one operator invocation over `df`."""
-    if _DOT_IMPL != "auto":
-        return _DOT_IMPL
+    """Resolve the dot impl for one operator invocation over `df`: 'sql'
+    below AUTO_PANDAS_BYTES, 'pandas' above (the same sizeInBytes trick
+    engine salt detection uses)."""
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats()
                    .sizeInBytes())
@@ -79,14 +56,20 @@ def _impl_for(df: DataFrame) -> str:
 
 @contextmanager
 def _resolved(df: DataFrame):
-    """Pin the dot impl for the duration of one operator's plan build."""
-    global _ACTIVE_IMPL
-    prev = _ACTIVE_IMPL
-    _ACTIVE_IMPL = _impl_for(df)
+    """Pin the dot impl for the duration of one operator's plan build, on
+    this thread only: a plan built on another thread resolves its own."""
+    prev = _active_impl()
+    _active.impl = _impl_for(df)
     try:
         yield
     finally:
-        _ACTIVE_IMPL = prev
+        _active.impl = prev
+
+
+def _active_impl() -> str:
+    """The dot impl _resolved pinned on this thread; 'sql' outside an
+    operator."""
+    return getattr(_active, "impl", "sql")
 
 
 def _auto_dot(fn):
@@ -125,9 +108,7 @@ def _get_dot_pandas():
 
 
 def _dot(x, y):
-    impl = _ACTIVE_IMPL if _ACTIVE_IMPL is not None else \
-        ("sql" if _DOT_IMPL == "auto" else _DOT_IMPL)
-    if impl == "pandas":
+    if _active_impl() == "pandas":
         return _get_dot_pandas()(x, y)
     return F.aggregate(
         F.zip_with(x, y, lambda a, b: a.cast("double") * b.cast("double")),
@@ -186,9 +167,7 @@ def _sql_dot(a: str, b: str) -> str:
 
 
 def _sql_exprs_active() -> bool:
-    impl = _ACTIVE_IMPL if _ACTIVE_IMPL is not None else \
-        ("sql" if _DOT_IMPL == "auto" else _DOT_IMPL)
-    return impl != "pandas"
+    return _active_impl() != "pandas"
 
 
 def _py_dot(a, b) -> float:
@@ -511,18 +490,15 @@ def _train_centroid_rows(embeddings: DataFrame, centroid_ids,
 
 def ivf_topk_trained(embeddings: DataFrame, query_vec_id: int = 0,
                      k: int = 10, centroid_ids=(1, 2, 3, 4, 5, 6, 7, 8),
-                     nprobe: int = 2, iters: int = 2,
-                     materialize: bool = True) -> DataFrame:
+                     nprobe: int = 2, iters: int = 2) -> DataFrame:
     """IVF-flat ANN over Lloyd-trained centroids — the production-grade
     variant of ivf_topk (same probe/candidate algebra, better-balanced
     cells). Deterministic end-to-end; the DuckDB oracle twin unrolls the
-    same two training iterations in SQL. Training always materializes the
-    trained centroid rows driver-side (bounded: centroid-count rows — the
-    `materialize` flag is kept for API compatibility and is now a no-op);
+    same two training iterations in SQL. Training materializes the
+    trained centroid rows driver-side (bounded: centroid-count rows);
     probe cells are derived from them with the same d2 algebra/rounding,
     and the final pass is ONE narrow assign+filter+score + TakeOrdered —
     no window, no joins, no broadcast builds."""
-    del materialize  # training rows are always collected now
     with _resolved(embeddings):
         rows = _train_centroid_rows(embeddings, centroid_ids, iters)
         qe = _query_vec(embeddings, query_vec_id)

@@ -115,7 +115,8 @@ def test_compact_stripes_merges_and_roundtrips(spark):
 def test_decode_coerces_schema_drift(spark):
     """Stripes written under a LongType turn_idx (pandas int64 inferred as
     bigint) must decode AND row-access under the canonical int32 spec —
-    regression for ArrowColumnVector.getInt throwing on a long vector."""
+    regression for ArrowColumnVector.getInt throwing on a long vector —
+    through decode_df and the row-number seek read_rows_at alike."""
     pdf = transcripts.synthesize_pandas(n_convs=10, seed=5)
     pdf = pdf.assign(turn_idx=pdf["turn_idx"].astype("int64"))
     df = spark.createDataFrame(pdf)
@@ -124,9 +125,14 @@ def test_decode_coerces_schema_drift(spark):
                               stripe_bytes=1 << 20, partitions=2, run_id="dr")
     stripes = engine.encode_df(df, cfg)
     dec = engine.decode_df(stripes, transcripts.TRANSCRIPTS_SPEC)
-    # groupBy forces row access through the arrow vector (the old failure)
-    assert dec.groupBy("turn_idx").count().count() > 0
-    assert dict(dec.dtypes)["turn_idx"] == "int"
+    seek = engine.read_rows_at(stripes, transcripts.TRANSCRIPTS_SPEC, 3,
+                               len(pdf) - 2)
+    for got, n in ((dec, len(pdf)), (seek, len(pdf) - 5)):
+        # groupBy forces row access through the arrow vector (the old
+        # failure)
+        assert got.groupBy("turn_idx").count().count() > 0
+        assert dict(got.dtypes)["turn_idx"] == "int"
+        assert got.count() == n
 
 
 def test_read_rows_id_pushdown_from_file_scan(spark, tmp_path,
@@ -140,8 +146,9 @@ def test_read_rows_id_pushdown_from_file_scan(spark, tmp_path,
     path = str(tmp_path / "stripes")
     stripes.write.mode("overwrite").parquet(path)
     st = spark.read.parquet(path)
-    assert engine._is_bare_scan(st)
-    assert not engine._is_bare_scan(stripes)  # derived frame: no pushdown
+    assert engine._bare_scan_plan(st) is not None
+    # derived frame: no id pass
+    assert engine._bare_scan_plan(stripes) is None
     key = sorted(pdf["conv_id"].unique())[7]
     want = int((pdf["conv_id"] == key).sum())
     m: dict = {}
@@ -433,7 +440,8 @@ def test_legacy_fnv_blooms_never_skip(spark, parquet_tables, tmp_path,
                                       monkeypatch):
     """Stripe tables written before the stripe bloom moved to murmur3 hold
     8192-byte FNV-1a blooms: they must skip no stripe on the driver path,
-    the Spark path or with id_pushdown=False, and read the unpruned rows.
+    the Spark path or the single-pass plan of a non-bare frame, and read
+    the unpruned rows.
     All-zero blooms would skip every stripe if they were honored."""
     import pyspark.sql.functions as F
 
@@ -464,14 +472,14 @@ def test_legacy_fnv_blooms_never_skip(spark, parquet_tables, tmp_path,
     for where in ("driver", "spark", "off"):
         if where == "spark":
             monkeypatch.setattr(engine, "MAX_PUSHDOWN_IDS", 1)
-        kw = {"id_pushdown": False} if where == "off" else {}
+        frame = _spark_view(legacy) if where == "off" else legacy
         m: dict = {}
         assert rows(engine.read_rows(
-            legacy, transcripts.TRANSCRIPTS_SPEC, "conv_id", keys[7],
-            columns=cols, metrics=m, **kw)) == want_one, where
+            frame, transcripts.TRANSCRIPTS_SPEC, "conv_id", keys[7],
+            columns=cols, metrics=m)) == want_one, where
         assert rows(engine.read_rows_in(
-            legacy, transcripts.TRANSCRIPTS_SPEC, "conv_id", batch,
-            columns=cols, **kw)) == want_batch, where
+            frame, transcripts.TRANSCRIPTS_SPEC, "conv_id", batch,
+            columns=cols)) == want_batch, where
         assert m["pruned_on"] == ("spark" if where == "off" else where)
         if where == "driver":
             assert m["stripes_kept"] == len(
@@ -518,11 +526,19 @@ def _jobs_of(spark, fn):
     raise AssertionError("marker job never reported")
 
 
-def _point(stripes, key, metrics=None, **kw):
+def _spark_view(st):
+    """`st` as a frame that is no bare file scan (a Repartition over it):
+    a point read of it takes the single-pass Spark decode."""
+    view = st.repartition(2)
+    assert engine._bare_scan_plan(view) is None
+    return view
+
+
+def _point(stripes, key, metrics=None):
     cols = ["conv_id", "turn_idx", "text"]
     return sorted(tuple(r) for r in engine.read_rows(
         stripes, transcripts.TRANSCRIPTS_SPEC, "conv_id", key,
-        columns=cols, metrics=metrics, **kw).select(*cols).collect())
+        columns=cols, metrics=metrics).select(*cols).collect())
 
 
 def _cache_use(m):
@@ -547,7 +563,7 @@ def test_lineage_cache_second_read_runs_no_lineage_job(spark, tmp_path):
     assert cold >= 1 and warm == 0, (cold, warm)
     assert _cache_use(m) == (1, 1)
     got = _point(st, key)
-    assert got == _point(st, key, id_pushdown=False)
+    assert got == _point(_spark_view(st), key)
     assert len(got) == _n(pdf, key) > 0
 
 
@@ -601,7 +617,7 @@ def test_lineage_cache_misses_after_append_and_refresh(spark, tmp_path):
     assert _cache_use(m) == (1, 1)
     m = {}
     assert _point(plain, new_key, m) == []
-    assert _point(plain, new_key, id_pushdown=False) == []
+    assert _point(_spark_view(plain), new_key) == []
     assert _cache_use(m) == (1, 0)
 
 
@@ -616,7 +632,7 @@ def test_lineage_cache_filtered_frames_never_share(parquet_tables):
     for key in sorted(pdf["conv_id"].unique())[::6]:
         for frame in (a, b):
             assert (_point(frame, key)
-                    == _point(frame, key, id_pushdown=False)), key
+                    == _point(_spark_view(frame), key)), key
     ids = []
     for frame in (a, b):
         rows, _, hit = engine._prune_on_driver(frame)  # no key: keep all
@@ -653,11 +669,13 @@ def test_lineage_cache_skips_in_flight_frames(spark):
     assert engine._snapshot(inflight) is None
     before = list(engine._lineage_cache)
     key = sorted(pdf["conv_id"].unique())[1]
+    assert engine._lineage(inflight)[1:] == (None, None)
     m: dict = {}
     for _ in range(2):
-        got = _point(inflight, key, m, id_pushdown=True)
+        got = _point(inflight, key, m)
         assert len(got) == _n(pdf, key) > 0
-    assert _cache_use(m) == (0, 2)
+    assert (m["served_on"], m["fallback"]) == ("spark", "not_bare_scan")
+    assert _cache_use(m) == (0, 0)
     assert list(engine._lineage_cache) == before
 
 

@@ -232,9 +232,9 @@ def _union_find_labels(n_nodes, edge_list):
 def test_star_components_long_chain(spark):
     """VERDICT r3 #8 done-criterion: a 1000-link chain (diameter 1000)
     converges under a small round budget with method='star' — where
-    min-label propagation with the same budget is still mid-flood — and
-    the labels equal a union-find oracle. Plus isolated nodes and a dense
-    clique mixed in."""
+    min-label propagation with the same budget is still mid-flood, and
+    says so instead of returning its labels — and the labels equal a
+    union-find oracle. Plus isolated nodes and a dense clique mixed in."""
     n = 1000
     chain = [(i, i + 1) for i in range(n - 1)]
     clique = [(a, b) for a in range(1200, 1210) for b in range(a + 1, 1210)]
@@ -246,13 +246,15 @@ def test_star_components_long_chain(spark):
     labels = {r.doc_id: r.component for r in got.collect()}
     oracle = _union_find_labels(1300, edges)
     assert labels == oracle  # chain all -> 0; isolated self; clique -> 1200
-    # same budget, propagation has NOT converged on the chain (shows the
-    # star fallback is doing real work, not just matching a easy case)
-    prop = dedup.connected_components(docs, pairs, method="propagate",
-                                      max_iters=5)
-    plabels = {r.doc_id: r.component for r in prop.collect()}
-    assert plabels != oracle
-    assert sum(1 for k, v in plabels.items() if v != oracle[k]) > 500
+    # a smaller budget, propagation has NOT converged on the chain (shows
+    # the star fallback is doing real work, not just matching an easy
+    # case), and it raises rather than return the mid-flood labels
+    with pytest.raises(RuntimeError, match=r"max_iters=5\b.*method=\"star\""):
+        dedup.connected_components(docs, pairs, method="propagate",
+                                   max_iters=5)
+    # star itself raises when its own budget runs out first
+    with pytest.raises(RuntimeError, match=r"'star'.*max_iters=2\b"):
+        dedup.connected_components(docs, pairs, method="star", max_iters=2)
 
 
 def test_star_equals_propagate_on_real_docs(spark):
@@ -271,10 +273,11 @@ def test_star_equals_propagate_on_real_docs(spark):
 
 
 def test_pandas_dot_impl_identical_outputs(spark):
-    """VERDICT r3 #9: the BLAS pandas-UDF dot behind set_dot_impl('pandas')
-    produces outputs identical to the interpreted SQL fold on every
-    embedding op (after the ops' round(,6) — the reason the oracle twin
-    stays 'sql' is bit-order of summation, not values at this precision)."""
+    """VERDICT r3 #9: the BLAS pandas-UDF dot, which the size rule picks
+    for inputs of at least AUTO_PANDAS_BYTES, produces outputs identical
+    to the interpreted SQL fold on every embedding op (after the ops'
+    round(,6) — the reason the oracle twin stays 'sql' is bit-order of
+    summation, not values at this precision)."""
     from goorc_spark.pipeline_ops import similarity
 
     embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -289,15 +292,16 @@ def test_pandas_dot_impl_identical_outputs(spark):
                 embs, threshold=0.35).collect())),
         }
 
+    assert similarity._impl_for(embs) == "sql"
     base = run_all()
-    similarity.set_dot_impl("pandas")
+    old = similarity.AUTO_PANDAS_BYTES
+    similarity.AUTO_PANDAS_BYTES = 1  # every operator resolves 'pandas'
     try:
+        assert similarity._impl_for(embs) == "pandas"
         fast = run_all()
     finally:
-        similarity.set_dot_impl("auto")
+        similarity.AUTO_PANDAS_BYTES = old
     assert base == fast
-    with pytest.raises(ValueError):
-        similarity.set_dot_impl("blas3")
 
 
 def test_ivf_trained_centroids(spark):
@@ -327,15 +331,15 @@ def test_ivf_trained_centroids(spark):
 
 
 def test_auto_dot_impl_resolution(spark):
-    """VERDICT r4 #7: default 'auto' resolves per-operator from the input's
+    """VERDICT r4 #7: the dot impl resolves per-operator from the input's
     Catalyst size estimate — sql below AUTO_PANDAS_BYTES (every oracle-gate
     input, keeping bit-identity with DuckDB), pandas/BLAS above (the
     production path). Unknown-stats sentinels stay sql."""
     from goorc_spark.pipeline_ops import similarity
 
     embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    assert similarity._DOT_IMPL == "auto"
     assert similarity._impl_for(embs) == "sql"  # ~KBs << 64 MB
+    ref = similarity.cosine_topk(embs).collect()
     old = similarity.AUTO_PANDAS_BYTES
     similarity.AUTO_PANDAS_BYTES = 1  # force the 'large input' branch
     try:
@@ -345,15 +349,25 @@ def test_auto_dot_impl_resolution(spark):
         got = similarity.cosine_topk(embs).collect()
     finally:
         similarity.AUTO_PANDAS_BYTES = old
-    similarity.set_dot_impl("sql")
-    try:
-        ref = similarity.cosine_topk(embs).collect()
-    finally:
-        similarity.set_dot_impl("auto")
     assert got == ref
-    # explicit modes still pin both directions
-    similarity.set_dot_impl("pandas")
-    try:
-        assert similarity._impl_for(embs) == "pandas"
-    finally:
-        similarity.set_dot_impl("auto")
+
+
+def test_dot_impl_choice_is_per_thread(monkeypatch):
+    """The impl one operator's plan build pins is its own thread's: a plan
+    built on another thread meanwhile resolves outside any operator, to
+    the sql fold."""
+    import threading
+
+    from goorc_spark.pipeline_ops import similarity
+
+    monkeypatch.setattr(similarity, "_impl_for", lambda df: "pandas")
+    seen = []
+    with similarity._resolved(None):
+        assert not similarity._sql_exprs_active()
+        other = threading.Thread(
+            target=lambda: seen.append(similarity._sql_exprs_active()))
+        other.start()
+        other.join(timeout=60)
+    assert not other.is_alive()
+    assert seen == [True]
+    assert similarity._sql_exprs_active()

@@ -1,8 +1,8 @@
 """Warm point reads over a bare stripe-table scan decode their surviving
 stripes on the driver (engine._decode_on_driver): no Spark decode job, the
-same rows and schema as the Spark decode (`id_pushdown=False`), and every
-case the driver may not serve falls back to that decode with its reason
-in `metrics["fallback"]`.
+same rows and schema as the Spark decode of a non-bare view of the same
+table (`_spark_view`), and every case the driver may not serve falls back
+to that decode with its reason in `metrics["fallback"]`.
 """
 
 from __future__ import annotations
@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from goorc_spark import arrow_stripe, engine, transcripts
-from test_bloom import _jobs_of
+from test_bloom import _jobs_of, _spark_view
 
 pytestmark = pytest.mark.usefixtures("spark")
 
@@ -56,18 +56,18 @@ def _rows(df):
     return sorted(repr(r) for r in df.collect())
 
 
-def _same_as_spark(read):
-    """read(metrics=...) served on the driver gives the rows and schema of
-    the Spark decode (id_pushdown=False)."""
+def _same_as_spark(read, st):
+    """read(st, metrics=...) served on the driver gives the rows and
+    schema of the Spark decode (read over _spark_view(st))."""
     m: dict = {}
-    got = read(metrics=m)
+    got = read(st, metrics=m)
     assert m["served_on"] == "driver", m
     assert "fallback" not in m
     assert m["kernel"] in ("native", "numpy")
     ref_m: dict = {}
-    want = read(metrics=ref_m, id_pushdown=False)
+    want = read(_spark_view(st), metrics=ref_m)
     assert (ref_m["served_on"], ref_m["fallback"]) == ("spark",
-                                                        "id_pushdown_off")
+                                                        "not_bare_scan")
     assert got.schema == want.schema
     rows = _rows(got)
     assert rows == _rows(want)
@@ -84,15 +84,15 @@ def test_driver_rows_equal_spark_decode(tables, layout):
     st = st[layout]
     keys = _keys(pdf)
     for key in keys[::7] + [ABSENT_IN_RANGE, "zzz"]:
-        rows = _same_as_spark(lambda **kw: engine.read_rows(
-            st, spec, "conv_id", key, **kw))
+        rows = _same_as_spark(lambda t, **kw: engine.read_rows(
+            t, spec, "conv_id", key, **kw), st)
         assert len(rows) == int((pdf["conv_id"] == key).sum()), key
     # spec=None recovers the spec from the stripes' meta, as decode_df does
     assert _rows(engine.read_rows(st, None, "conv_id", keys[0])) == _rows(
-        engine.read_rows(st, spec, "conv_id", keys[0], id_pushdown=False))
+        engine.read_rows(_spark_view(st), spec, "conv_id", keys[0]))
     batch = [keys[2], keys[21], ABSENT_IN_RANGE]
-    rows = _same_as_spark(lambda **kw: engine.read_rows_in(
-        st, spec, "conv_id", batch, **kw))
+    rows = _same_as_spark(lambda t, **kw: engine.read_rows_in(
+        t, spec, "conv_id", batch, **kw), st)
     assert len(rows) == int(pdf["conv_id"].isin(batch).sum())
 
 
@@ -105,10 +105,10 @@ def test_driver_projection_and_order_range(tables):
     assert n > 20
     lo, hi = 3, n - 5
     for layout in ("hash", "range"):
-        rows = _same_as_spark(lambda **kw: engine.read_rows(
-            st[layout], spec, "conv_id", key, ord_col="turn_idx",
+        rows = _same_as_spark(lambda t, **kw: engine.read_rows(
+            t, spec, "conv_id", key, ord_col="turn_idx",
             ord_lo=lo, ord_hi=hi, columns=["conv_id", "turn_idx", "kv"],
-            **kw))
+            **kw), st[layout])
         assert len(rows) == hi - lo + 1
         got = engine.read_rows(st[layout], spec, "conv_id", key,
                                ord_col="turn_idx", ord_lo=lo, ord_hi=hi,
@@ -133,8 +133,8 @@ def test_driver_non_prefiltered_key_kind(spark, tmp_path):
     assert engine._key_set(spec, "k", [9.0], "UTC") is None
     assert engine._key_set(spec, "k", [9], "UTC") is not None
     for key in (9.0, 9, 1999):
-        rows = _same_as_spark(lambda **kw: engine.read_rows(
-            st, spec, "k", key, **kw))
+        rows = _same_as_spark(lambda t, **kw: engine.read_rows(
+            t, spec, "k", key, **kw), st)
         assert len(rows) == 1, key
 
 
@@ -144,14 +144,14 @@ def test_driver_timestamps_under_non_utc_session(spark, tables):
     spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
     try:
         for layout in ("hash", "range"):
-            def read(**kw):
+            def read(t, **kw):
                 return engine.read_rows(
-                    st[layout], spec, "conv_id", key, **kw).select(
+                    t, spec, "conv_id", key, **kw).select(
                     "turn_idx", F.unix_micros("ts").alias("us"),
                     F.col("ts").cast("string").alias("local"))
-            rows = _same_as_spark(read)
+            rows = _same_as_spark(read, st[layout])
             assert len(rows) == int((pdf["conv_id"] == key).sum())
-        got = {r.turn_idx: r.us for r in read().collect()}
+        got = {r.turn_idx: r.us for r in read(st["range"]).collect()}
         src = pdf[pdf["conv_id"] == key]
         want = {int(t): int(ts.value // 1000)
                 for t, ts in zip(src["turn_idx"], src["ts"])}
@@ -174,8 +174,8 @@ def test_null_key_reads_no_stripe(spark, tables):
     assert jobs == 0
     assert m["stripes_kept"] == 0 and m["served_on"] == "driver"
     assert "stripes_total" not in m
-    want = engine.read_rows(st, spec, "conv_id", None, ord_col="turn_idx",
-                            ord_lo=1, columns=cols, id_pushdown=False)
+    want = engine.read_rows(_spark_view(st), spec, "conv_id", None,
+                            ord_col="turn_idx", ord_lo=1, columns=cols)
     assert out.schema == want.schema
     assert out.collect() == [] and want.collect() == []
     _, jobs = _jobs_of(spark, lambda: engine.read_rows_in(
@@ -184,7 +184,7 @@ def test_null_key_reads_no_stripe(spark, tables):
     key = _keys(pdf)[3]
     mixed = engine.read_rows_in(st, spec, "conv_id", [key, None])
     assert _rows(mixed) == _rows(engine.read_rows_in(
-        st, spec, "conv_id", [key], id_pushdown=False))
+        _spark_view(st), spec, "conv_id", [key]))
     assert mixed.count() == int((pdf["conv_id"] == key).sum()) > 0
     with pytest.raises(ValueError):
         engine.read_rows_in(st, spec, "conv_id", [])
@@ -202,8 +202,8 @@ def test_legacy_blooms_on_the_driver(spark, tables, tmp_path):
     m: dict = {}
     engine.read_rows(legacy, spec, "conv_id", key, metrics=m)
     assert m["stripes_kept"] == m["stripes_total"]
-    rows = _same_as_spark(lambda **kw: engine.read_rows(
-        legacy, spec, "conv_id", key, **kw))
+    rows = _same_as_spark(lambda t, **kw: engine.read_rows(
+        t, spec, "conv_id", key, **kw), legacy)
     assert len(rows) == int((pdf["conv_id"] == key).sum()) > 0
 
 
@@ -239,10 +239,10 @@ def test_fallback_over_byte_bound(tables, monkeypatch):
     st = st["hash"]
     key = _keys(pdf)[11]
 
-    def read(**kw):
-        return engine.read_rows(st, spec, "conv_id", key, **kw)
+    def read(t=st, **kw):
+        return engine.read_rows(t, spec, "conv_id", key, **kw)
 
-    want = _same_as_spark(read)
+    want = _same_as_spark(read, st)
     rows, _, _ = engine._prune_on_driver(st, key_value=key)
     survivors = sum(r.enc_bytes for r in rows)
     monkeypatch.setattr(engine, "DRIVER_DECODE_BYTES", survivors - 1)
@@ -255,10 +255,10 @@ def test_fallback_too_many_stripes(tables, monkeypatch):
     pdf, spec, st = tables
     key = _keys(pdf)[12]
 
-    def read(**kw):
-        return engine.read_rows(st["range"], spec, "conv_id", key, **kw)
+    def read(t=st["range"], **kw):
+        return engine.read_rows(t, spec, "conv_id", key, **kw)
 
-    want = _same_as_spark(read)
+    want = _same_as_spark(read, st["range"])
     monkeypatch.setattr(engine, "MAX_PUSHDOWN_IDS", 1)
     _served_on_spark(read, "too_many_stripes", want)
 
@@ -273,10 +273,10 @@ def test_fallback_unreadable_files(spark, tables, tmp_path, monkeypatch):
     st["range"].write.orc(path)
     orc = spark.read.orc(path)
 
-    def read(**kw):
-        return engine.read_rows(orc, spec, "conv_id", key, **kw)
+    def read(t=orc, **kw):
+        return engine.read_rows(t, spec, "conv_id", key, **kw)
 
-    want = _rows(read(id_pushdown=False))
+    want = _rows(read(_spark_view(orc)))
     assert want
     _served_on_spark(read, "unreadable", want)
 
@@ -299,8 +299,8 @@ def test_fallback_unreadable_files(spark, tables, tmp_path, monkeypatch):
 
 
 def test_fallback_not_bare_scan(spark, tables):
-    """In-flight frames (auto or forced id pushdown) and frames whose meta
-    or blob a Project computes decode in Spark."""
+    """In-flight frames and frames whose meta or blob a Project computes
+    decode in Spark."""
     pdf, spec, st = tables
     key = _keys(pdf)[14]
     _, df = _source(spark)
@@ -309,12 +309,11 @@ def test_fallback_not_bare_scan(spark, tables):
                               rg_rows=100, run_id="inflight")
     inflight = engine.encode_df(df, cfg)
     want = _rows(engine.read_rows(st["hash"], spec, "conv_id", key))
-    for kw in ({}, {"id_pushdown": True}):
-        _served_on_spark(lambda **m: engine.read_rows(
-            inflight, spec, "conv_id", key, **kw, **m), "not_bare_scan", want)
+    _served_on_spark(lambda **m: engine.read_rows(
+        inflight, spec, "conv_id", key, **m), "not_bare_scan", want)
     rewritten = st["hash"].withColumn(
         "meta", F.regexp_replace("meta", "^x", "x"))
-    assert engine._is_bare_scan(rewritten)
+    assert engine._bare_scan_plan(rewritten) is not None
     assert not engine._reads_stored(rewritten, ("stripe_id", "meta", "blob"))
     assert engine._reads_stored(st["hash"].drop("key_bloom"),
                                 ("stripe_id", "meta", "blob"))
@@ -447,8 +446,8 @@ def test_part_file_rewritten_in_place_gets_a_new_footer(spark, tables,
         "file:", ""), path)
     table = spark.read.parquet(path)
     key = _keys(pdf)[18]
-    want = _rows(engine.read_rows(table, spec, "conv_id", key,
-                                  id_pushdown=False))
+    want = _rows(engine.read_rows(_spark_view(table), spec, "conv_id",
+                                  key))
     assert _rows(engine.read_rows(table, spec, "conv_id", key)) == want
     _, hit, state = engine._lineage(table)
     assert hit
@@ -554,14 +553,14 @@ def test_driver_order_bounds_and_key_lists(tables):
     n = int((pdf["conv_id"] == key).sum())
     assert n > 20
     for bounds, want in (({"ord_lo": 4}, n - 4), ({"ord_hi": 4}, 5)):
-        rows = _same_as_spark(lambda **kw: engine.read_rows(
-            st["hash"], spec, "conv_id", key, ord_col="turn_idx", **bounds,
-            **kw))
+        rows = _same_as_spark(lambda t, **kw: engine.read_rows(
+            t, spec, "conv_id", key, ord_col="turn_idx", **bounds,
+            **kw), st["hash"])
         assert len(rows) == want, bounds
     batch = [keys[20], None, keys[3], keys[20], ABSENT_IN_RANGE, None]
     for layout in ("hash", "range"):
-        rows = _same_as_spark(lambda **kw: engine.read_rows_in(
-            st[layout], spec, "conv_id", batch, **kw))
+        rows = _same_as_spark(lambda t, **kw: engine.read_rows_in(
+            t, spec, "conv_id", batch, **kw), st[layout])
         assert len(rows) == int(pdf["conv_id"].isin(batch).sum())
 
 
@@ -582,6 +581,44 @@ def test_read_where_metrics(spark, tables):
     engine.read_where(st, spec, "turn_idx", lo=lo, hi=hi, metrics=m)
     assert m["stripes_kept"] == 2 * len(kept)
     single_pass: dict = {}
-    engine.read_where(st, spec, "turn_idx", lo=lo, hi=hi, id_pushdown=False,
-                      metrics=single_pass)
+    single = engine.read_where(_spark_view(st), spec, "turn_idx", lo=lo,
+                               hi=hi, metrics=single_pass)
     assert single_pass == {}
+    assert _rows(single) == _rows(got)
+
+
+def test_read_where_filter_is_the_column_filter(spark, monkeypatch):
+    """read_where's exact filter, built on the JVM Column, is the filter
+    PySpark's Column operators build over the decoded frame, for int,
+    float, string and timestamp bounds; an all-open range leaves the
+    decoded frame unfiltered."""
+    import datetime as dt
+
+    decoded = spark.range(0, 50).selectExpr(
+        "id AS i", "CAST(id AS DOUBLE) / 4 AS f", "CAST(id AS STRING) AS s",
+        "timestamp_seconds(id * 3600) AS ts")
+    monkeypatch.setattr(engine, "decode_df", lambda *a, **kw: decoded)
+
+    def column_filter(ranges):
+        cond = F.lit(True)
+        for c, (lo, hi) in ranges.items():
+            if lo is not None:
+                cond = cond & (F.col(c) >= F.lit(lo))
+            if hi is not None:
+                cond = cond & (F.col(c) <= F.lit(hi))
+        return decoded.filter(cond)
+
+    def same(a, b):
+        return a._jdf.queryExecution().optimizedPlan().sameResult(
+            b._jdf.queryExecution().optimizedPlan())
+
+    cases = [{"i": (3, 40)}, {"f": (1.5, None)}, {"s": (None, "3")},
+             {"ts": (dt.datetime(1970, 1, 1, 5), dt.datetime(1970, 1, 2))}]
+    cases.append({k: v for c in cases for k, v in c.items()})
+    for ranges in cases:
+        got = engine.read_where(decoded, None, col_ranges=ranges)
+        assert same(got, column_filter(ranges)), ranges
+        assert got.count() == column_filter(ranges).count() > 0, ranges
+    assert not same(engine.read_where(decoded, None, "i", lo=4),
+                    column_filter({"i": (3, None)}))
+    assert engine.read_where(decoded, None, "i") is decoded
