@@ -42,97 +42,157 @@ static inline uint64_t load_be8(const uint8_t *p) {
     return __builtin_bswap64(v);
 }
 
-#define HT_BITS 11
-#define HT_SIZE (1 << HT_BITS)
-#define HT_MASK (HT_SIZE - 1)
-#define MULT 0x9E3779B97F4A7C15ULL
-
 /* FSST greedy longest-class-first matcher + token emitter.
 
    Exact semantics of fsst.CompiledTable.match_all + the numpy output
    assembly in fsst.compress (see that file): per length class in
    descending order, candidates are positions whose 2-byte prefix passes
-   the class LUT and whose exact L-byte key is a class symbol; candidates
-   with any byte already covered by a longer class are skipped WITHOUT
-   breaking the greedy chain; self-overlaps resolve leftmost-first.
-   `data` must be padded with >= 8 zero bytes past `n`. Returns the
-   number of output bytes written to `out` (capacity >= 2n). */
+   the class LUT and whose exact L-byte key is a class symbol; a candidate
+   is accepted, left to right, when no byte of its window is taken yet (by
+   a longer class or an earlier match of its own), and a rejected one does
+   not break the greedy chain.
+
+   The work is tracked in bits. One pass gathers each position's class
+   mask from the two LUTs and spreads every 8 mask bytes into per-class
+   candidate bits with one multiply per class (bit k of the product's top
+   byte is byte k's class bit: the multiplier's terms put each byte's bit
+   on a distinct bit, so nothing carries). Each class then walks the set
+   bits of `candidates & ~taken` one 64-bit word at a time with that
+   word's taken bits in a register; a window that crosses into the next
+   word marks that word's bits in memory, where its walk loads them.
+   Symbols are probed through each class's hash table: `slot_key[h]`
+   holds the key whose slot is h = (key * mult) >> (64 - tbits), empty
+   slots have code -1. compile_args picks a multiplier that places every
+   key of a class in its own slot, so one probe decides; a class it
+   cannot place (`linear` set) probes on to the next empty slot. Emission
+   walks the bits of `starts | ~taken`: one token per match start or
+   literal, without a branch on which.
+
+   `data` must be padded with >= 8 zero bytes past `n`. `bits` holds
+   (n_classes + 2) * ceil(n / 64) words of scratch. `out` needs capacity
+   2n + 16: its tail out[n + 16 + i] keeps the code of a match at i until
+   emission, whose writes (at most 2 bytes per input byte) stay below the
+   codes it has yet to read. Returns the number of output bytes. */
 int64_t fsst_compress(const uint8_t *data, int64_t n,
                       const uint8_t *lut16, const uint8_t *lut16b,
                       int32_t n_classes, const int32_t *class_len,
-                      const int32_t *class_off,
-                      const uint64_t *keys, const int16_t *codes,
-                      const int16_t *single_map, const uint8_t *sym_len,
-                      uint8_t *taken, int16_t *code_at, uint8_t *out)
+                      const int32_t *class_tbits, const int32_t *class_linear,
+                      const uint64_t *class_mult,
+                      const uint64_t *slot_key, const int16_t *slot_code,
+                      const int16_t *single_map, uint64_t *bits,
+                      uint8_t *out)
 {
-    memset(taken, 0, (size_t)n);
-    memset(code_at, 0xFF, (size_t)n * 2);
+    const uint64_t lo8 = 0x0101010101010101ULL;
+    const uint64_t spread = 0x0102040810204080ULL;
+    int64_t nwords = (n + 63) >> 6;
+    uint64_t *taken = bits, *starts = bits + nwords;
+    uint64_t *cand = bits + 2 * nwords;
+    uint8_t *code_at = out + n + 16;
+    memset(bits, 0, (size_t)nwords * 16);
+    memset(code_at, 0, (size_t)n);
 
-    /* one combined-prefilter pass: mask[i] = classes whose 2-byte prefix
-       AND bytes-2-3 constraint both admit position i (lut16b is exact for
-       the match decision: an exact L-byte hit implies both bits are set,
-       so filtered positions could never probe successfully). Reuses the
-       head of `out`, which is dead until the emit loop. Gathering the two
-       64 KB LUTs once here beats one gather per class per position. */
-    uint8_t *mask = out;
-    for (int64_t i = 0; i + 1 < n; i++) {
-        uint16_t pre = ((uint16_t)data[i] << 8) | data[i + 1];
-        uint16_t suf = ((uint16_t)data[i + 2] << 8) | data[i + 3];
-        mask[i] = lut16[pre] & lut16b[suf];
+    for (int64_t w = 0; w < nwords; w++) {
+        uint8_t m[64];
+        int64_t i0 = w << 6;
+        /* positions i with i + 1 < n; the rest of the word stays 0 */
+        int kmax = i0 + 64 < n ? 64 : (int)(n - 1 - i0);
+        if (kmax < 64) memset(m, 0, sizeof(m));
+        for (int k = 0; k < kmax; k++) {
+            const uint8_t *p = data + i0 + k;
+            m[k] = lut16[((unsigned)p[0] << 8) | p[1]]
+                 & lut16b[((unsigned)p[2] << 8) | p[3]];
+        }
+        for (int32_t ci = 0; ci < n_classes; ci++) {
+            uint64_t acc = 0;
+            for (int g = 0; g < 8; g++) {
+                uint64_t x;
+                memcpy(&x, m + 8 * g, 8);
+                acc |= ((((x >> ci) & lo8) * spread) >> 56) << (8 * g);
+            }
+            cand[ci * nwords + w] = acc;
+        }
     }
 
-    uint64_t ht_key[HT_SIZE];
-    int16_t ht_code[HT_SIZE];
-    uint8_t ht_used[HT_SIZE];
-
+    const uint64_t *sk = slot_key;
+    const int16_t *sc = slot_code;
     for (int32_t ci = 0; ci < n_classes; ci++) {
         int32_t L = class_len[ci];
+        int hs = 64 - class_tbits[ci];
+        uint64_t hmask = (1ULL << class_tbits[ci]) - 1;
+        uint64_t mult = class_mult[ci];
+        int linear = class_linear[ci];
+        const uint64_t *cw = cand + ci * nwords;
+        const uint64_t *tk = sk;
+        const int16_t *tc = sc;
+        sk += hmask + 1;
+        sc += hmask + 1;
         if (n < L) continue;
-        uint8_t bit = (uint8_t)(1u << ci);
         int sh = 8 * (8 - L);
-        memset(ht_used, 0, sizeof(ht_used));
-        for (int32_t s = class_off[ci]; s < class_off[ci + 1]; s++) {
-            uint64_t k = keys[s];
-            uint64_t h = (k * MULT) >> (64 - HT_BITS);
-            while (ht_used[h]) h = (h + 1) & HT_MASK;
-            ht_used[h] = 1;
-            ht_key[h] = k;
-            ht_code[h] = codes[s];
-        }
-        int64_t limit = n - L;
-        for (int64_t i = 0; i <= limit; ) {
-            if (taken[i]) { i++; continue; }  /* spans are <= 8 bytes:
-                                                 memchr skipping measured slower */
-            if (!(mask[i] & bit)) { i++; continue; }
-            uint64_t key = load_be8(data + i) >> sh;
-            uint64_t h = (key * MULT) >> (64 - HT_BITS);
-            int16_t code = -1;
-            while (ht_used[h]) {
-                if (ht_key[h] == key) { code = ht_code[h]; break; }
-                h = (h + 1) & HT_MASK;
+        uint64_t win = (1ULL << L) - 1;
+        int64_t limit = n - L, wlast = limit >> 6;
+        for (int64_t w = 0; w <= wlast; w++) {
+            uint64_t t = taken[w], st = starts[w];
+            uint64_t b = cw[w] & ~t;
+            if (w == wlast)
+                b &= ~0ULL >> (63 - (limit & 63));
+            while (b) {
+                int r = __builtin_ctzll(b);
+                b &= b - 1;
+                int64_t i = (w << 6) + r;
+                uint64_t key = load_be8(data + i) >> sh;
+                uint64_t h = (key * mult) >> hs;
+                int16_t code = tk[h] == key ? tc[h] : -1;
+                if (linear && code < 0) {
+                    while (tc[h] >= 0) {
+                        if (tk[h] == key) { code = tc[h]; break; }
+                        h = (h + 1) & hmask;
+                    }
+                }
+                if (code < 0) continue;
+                if (r + L <= 64) {
+                    if (t & win << r) continue;
+                    t |= win << r;
+                } else {
+                    /* the window ends in the next word */
+                    uint64_t hi = win >> (64 - r);
+                    if ((t >> r) || (taken[w + 1] & hi)) continue;
+                    t |= ~0ULL << r;
+                    taken[w + 1] |= hi;
+                }
+                st |= 1ULL << r;
+                code_at[i] = (uint8_t)code;
+                b &= ~t;
             }
-            if (code < 0) { i++; continue; }
-            int ok = 1;
-            for (int32_t j = 1; j < L; j++)
-                if (taken[i + j]) { ok = 0; break; }
-            if (!ok) { i++; continue; }
-            code_at[i] = code;
-            memset(taken + i, 1, (size_t)L);
-            i += L;
+            taken[w] = t;
+            starts[w] = st;
         }
     }
 
+    /* emit a token at every literal and match start, in position order:
+       a literal is its single-byte code, or 255 and the byte */
+    uint16_t lit[256];
+    uint8_t lit_len[256];  /* minus one */
+    for (int c = 0; c < 256; c++) {
+        int16_t code = single_map[c];
+        lit[c] = code >= 0 ? (uint16_t)code : (uint16_t)(255 | c << 8);
+        lit_len[c] = code >= 0 ? 0 : 1;
+    }
     int64_t o = 0;
-    for (int64_t i = 0; i < n; ) {
-        int16_t c = code_at[i];
-        if (c >= 0) {
-            out[o++] = (uint8_t)c;
-            i += sym_len[c];
-        } else {
-            int16_t s = single_map[data[i]];
-            if (s >= 0) { out[o++] = (uint8_t)s; }
-            else { out[o++] = 255; out[o++] = data[i]; }
-            i++;
+    for (int64_t w = 0; w < nwords; w++) {
+        uint64_t st = starts[w];
+        uint64_t e = ~taken[w] | st;
+        if (w == nwords - 1 && (n & 63))
+            e &= ~0ULL >> (64 - (n & 63));
+        while (e) {
+            int r = __builtin_ctzll(e);
+            e &= e - 1;
+            int64_t i = (w << 6) + r;
+            uint8_t d = data[i];
+            uint16_t sym = (uint16_t)-(int)((st >> r) & 1);
+            uint16_t v = (code_at[i] & sym) | (lit[d] & ~sym);
+            out[o] = (uint8_t)v;
+            out[o + 1] = (uint8_t)(v >> 8);
+            o += 1 + (lit_len[d] & ~sym);
         }
     }
     return o;
@@ -1063,11 +1123,8 @@ def lib():
             fn = cdll.fsst_compress
             fn.restype = ctypes.c_int64
             fn.argtypes = [ctypes.c_void_p, ctypes.c_int64, ctypes.c_void_p,
-                           ctypes.c_void_p,
-                           ctypes.c_int32, ctypes.c_void_p, ctypes.c_void_p,
-                           ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,
-                           ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,
-                           ctypes.c_void_p]
+                           ctypes.c_void_p, ctypes.c_int32,
+                           *[ctypes.c_void_p] * 9]
             fn = cdll.rlev2_encode
             fn.restype = ctypes.c_int64
             fn.argtypes = [ctypes.c_void_p, ctypes.c_int64, ctypes.c_int32,
@@ -1142,21 +1199,19 @@ def fsst_compress(ct, arr: np.ndarray) -> bytes | None:
     cdll = lib()
     if cdll is None:
         return None
-    args = ct.nat_args or compile_args(ct)
+    (n_classes, class_len, class_tbits, class_linear, class_mult, slot_key,
+     slot_code, single_map, lut16, lut16b) = ct.nat_args or compile_args(ct)
     n = len(arr)
     padded = np.zeros(n + 8, dtype=np.uint8)
     padded[:n] = arr
-    taken = np.empty(n, dtype=np.uint8)
-    code_at = np.empty(n, dtype=np.int16)
+    bits = np.empty((n_classes + 2) * ((n + 63) // 64), dtype=np.uint64)
     out = np.empty(2 * n + 16, dtype=np.uint8)
-    (n_classes, class_len, class_off, keys, codes, single_map, sym_len,
-     lut16, lut16b) = args
     out_len = cdll.fsst_compress(
         padded.ctypes.data, n, lut16.ctypes.data, lut16b.ctypes.data,
-        n_classes, class_len.ctypes.data, class_off.ctypes.data,
-        keys.ctypes.data, codes.ctypes.data, single_map.ctypes.data,
-        sym_len.ctypes.data, taken.ctypes.data, code_at.ctypes.data,
-        out.ctypes.data)
+        n_classes, class_len.ctypes.data, class_tbits.ctypes.data,
+        class_linear.ctypes.data, class_mult.ctypes.data,
+        slot_key.ctypes.data, slot_code.ctypes.data, single_map.ctypes.data,
+        bits.ctypes.data, out.ctypes.data)
     return out[:out_len].tobytes()
 
 
@@ -1304,13 +1359,9 @@ def orc_chunk_cuts(raw, block: int, k: int):
     return cuts.tolist(), bound.tolist()
 
 
-def orc_inflate(raw, cap: int) -> memoryview | None:
-    """The whole chunks of an ORC zlib stream (or a range of them)
-    inflated into a new buffer of `cap` bytes, as a memoryview of the
-    bytes written. The GIL is released while it runs. None when the
-    kernel is missing, a chunk is cut off or does not inflate, the
-    output would pass `cap`, or `cap` bytes cannot be mapped: the caller
-    then takes the Python path.
+def inflate_buffer(cap: int):
+    """A writable buffer of `cap` bytes for orc_inflate_into, or None when
+    it cannot be mapped.
 
     `cap` is an upper bound, often many times the output, so a buffer
     of _MAP_MIN_BYTES or more is an anonymous mapping: only the pages
@@ -1322,36 +1373,106 @@ def orc_inflate(raw, cap: int) -> memoryview | None:
     and an unmap per stream."""
     if cap < 0:
         raise ValueError(f"cap must not be negative, got {cap}")
+    if cap < _MAP_MIN_BYTES:
+        return np.empty(cap, dtype=np.uint8)
+    try:  # `cap` comes from the file's block size
+        return mmap.mmap(-1, cap, flags=mmap.MAP_PRIVATE)
+    except (OSError, OverflowError):
+        return None
+
+
+def orc_inflate_into(raw, dst) -> int | None:
+    """Inflate the whole chunks of an ORC zlib stream (or a range of
+    them) into the writable buffer `dst`, never past its end: the bytes
+    written, or None when the kernel is missing or a chunk is cut off,
+    does not inflate or would pass the end. The GIL is released while it
+    runs."""
     if not has_inflate():
         return None
     buf = np.frombuffer(raw, dtype=np.uint8)
-    if cap < _MAP_MIN_BYTES:
-        out = dst = np.empty(cap, dtype=np.uint8)
-    else:
-        try:  # `cap` comes from the file's block size
-            out = mmap.mmap(-1, cap, flags=mmap.MAP_PRIVATE)
-        except (OSError, OverflowError):
-            return None
-        dst = np.frombuffer(out, dtype=np.uint8)
-    n = lib().orc_inflate(buf.ctypes.data, len(buf), dst.ctypes.data, cap)
-    del dst
-    return None if n < 0 else memoryview(out)[:n]
+    out = np.frombuffer(dst, dtype=np.uint8)
+    n = lib().orc_inflate(buf.ctypes.data, len(buf), out.ctypes.data,
+                          len(out))
+    return None if n < 0 else n
+
+
+def orc_inflate(raw, cap: int) -> memoryview | None:
+    """orc_inflate_into a new inflate_buffer of `cap` bytes, as a
+    memoryview of the bytes written; None where either gives None."""
+    if cap < 0:
+        raise ValueError(f"cap must not be negative, got {cap}")
+    if not has_inflate():
+        return None
+    out = inflate_buffer(cap)
+    n = None if out is None else orc_inflate_into(raw, out)
+    return None if n is None else memoryview(out)[:n]
+
+
+_MAX_TBITS = 11
+_LINEAR_MULT = 0x9E3779B97F4A7C15
+
+
+def _splitmix64(n: int) -> np.ndarray:
+    """The first `n` outputs of splitmix64 from seed 0, made odd."""
+    z = np.arange(1, n + 1, dtype=np.uint64) * np.uint64(_LINEAR_MULT)
+    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    return (z ^ (z >> np.uint64(31))) | np.uint64(1)
+
+
+_MULTS = _splitmix64(256)
+
+
+def _class_table(keys: np.ndarray, codes: np.ndarray):
+    """One length class's hash table for fsst_compress: (table bits,
+    linear?, multiplier, slot keys, slot codes). The keys go in the
+    smallest table of at least 2 slots per key where one of _MULTS gives
+    every key its own slot, placed by the first such multiplier; a class
+    that no multiplier places within 2**_MAX_TBITS slots probes linearly
+    from _LINEAR_MULT's slot in a table of that size. `keys` come sorted,
+    equal ones in table order: the first of equal symbols takes the slot,
+    as it wins in fsst._probe."""
+    keys, first = np.unique(keys, return_index=True)
+    codes = codes[first]
+    for tbits in range(len(keys).bit_length() + 1, _MAX_TBITS + 1):
+        slots = (keys[None, :] * _MULTS[:, None]) >> np.uint64(64 - tbits)
+        slots.sort(axis=1)
+        placed = np.flatnonzero((slots[:, 1:] != slots[:, :-1]).all(axis=1))
+        if len(placed):
+            mult = _MULTS[placed[0]]
+            h = (keys * mult) >> np.uint64(64 - tbits)
+            slot_key = np.zeros(1 << tbits, dtype=np.uint64)
+            slot_code = np.full(1 << tbits, -1, dtype=np.int16)
+            slot_key[h] = keys
+            slot_code[h] = codes
+            return tbits, False, int(mult), slot_key, slot_code
+    size = 1 << _MAX_TBITS
+    slot_key = np.zeros(size, dtype=np.uint64)
+    slot_code = np.full(size, -1, dtype=np.int16)
+    for k, c in zip(keys.tolist(), codes.tolist()):
+        h = ((k * _LINEAR_MULT) & 0xFFFFFFFFFFFFFFFF) >> (64 - _MAX_TBITS)
+        while slot_code[h] >= 0:
+            h = (h + 1) & (size - 1)
+        slot_key[h] = k
+        slot_code[h] = c
+    return _MAX_TBITS, True, _LINEAR_MULT, slot_key, slot_code
 
 
 def compile_args(ct):
     """Flatten a CompiledTable into the contiguous arrays the C matcher
-    takes (fsst.CompiledTable builds them once, when it is constructed)."""
-    class_len = np.array(ct.classes, dtype=np.int32)
-    keys = [np.empty(0, np.uint64)] + [ct.member[L][0] for L in ct.classes]
-    codes = [np.empty(0, np.int16)] + [ct.member[L][1] for L in ct.classes]
-    sym_len = np.zeros(256, dtype=np.uint8)
-    for c, s in enumerate(ct.table):
-        sym_len[c] = len(s)
-    return (len(ct.classes), class_len,
-            np.cumsum([len(k) for k in keys], dtype=np.int32),
-            np.concatenate(keys), np.concatenate(codes),
+    takes (fsst.CompiledTable builds them once, when it is constructed),
+    including each length class's hash table (see _class_table)."""
+    tables = [_class_table(*ct.member[L]) for L in ct.classes]
+    return (len(ct.classes),
+            np.array(ct.classes, dtype=np.int32),
+            np.array([t[0] for t in tables], dtype=np.int32),
+            np.array([t[1] for t in tables], dtype=np.int32),
+            np.array([t[2] for t in tables], dtype=np.uint64),
+            np.concatenate([np.empty(0, np.uint64)]
+                           + [t[3] for t in tables]),
+            np.concatenate([np.empty(0, np.int16)]
+                           + [t[4] for t in tables]),
             np.ascontiguousarray(ct.single_map),
-            sym_len,
             np.ascontiguousarray(ct.lut16),
             np.ascontiguousarray(ct.lut16b))
 

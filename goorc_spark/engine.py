@@ -824,7 +824,8 @@ def read_where(stripes: DataFrame, spec: list[dict], col: str | None = None,
         kept = len(ids) if len(ids) <= MAX_PUSHDOWN_IDS else None
         _count_prune(metrics, "spark", None, kept)
         if kept is not None:
-            stripes = stripes.filter(F.col("stripe_id").isin(ids))
+            stripes = _filter_exact(stripes,
+                                    [("stripe_id", "isInCollection", ids)])
     out = decode_df(stripes, spec, columns=columns,
                     rg_predicate={"col_ranges": ranges})
     cond = [(c, op, bound) for c, (clo, chi) in ranges.items()
@@ -1104,14 +1105,48 @@ def _filter_exact(frame: DataFrame, cond: list) -> DataFrame:
     value) triples: ("k", "equalTo", v) is frame["k"] == v, the same
     Catalyst expression bound to the frame's own attributes. Built on the
     JVM Column: a PySpark Column operator also records its Python call
-    site for error messages, at ten more Py4J round trips an operator."""
+    site for error messages, at ten more Py4J round trips an operator. A
+    list value ("k", "isInCollection", [...]) crosses as one JVM list
+    (_jvm_values)."""
+    jdf = frame._jdf
+    terms = []
+    for col, op, value in cond:
+        if isinstance(value, list):
+            value = _jvm_values(frame.sparkSession, value)
+        terms.append(getattr(jdf.apply(col), op)(value))
+    return _filter_jvm(frame, terms)
+
+
+def _filter_jvm(frame: DataFrame, terms: list) -> DataFrame:
+    """`frame` under the conjunction of JVM Columns `terms`, in order;
+    `frame` itself when there are none."""
     from pyspark.sql import Column
 
-    jdf, where = frame._jdf, None
-    for col, op, value in cond:
-        term = getattr(jdf.apply(col), op)(value)
-        where = term if where is None else getattr(where, "and")(term)
+    if not terms:
+        return frame
+    where = terms[0]
+    for term in terms[1:]:
+        where = getattr(where, "and")(term)
     return frame.filter(Column(where))
+
+
+# Python types that Spark's bundled Pyrolite unpickles to the Java types
+# Py4J converts them to (String, Integer/Long, Double, byte[], Boolean)
+_PICKLED_KINDS = (str, int, float, bytes, bool)
+
+
+def _jvm_values(spark: SparkSession, values: list):
+    """`values` as one java.util.List made in a fixed number of Py4J round
+    trips, where Py4J converts a Python list with one ArrayList.add round
+    trip per item: pickled here, unpickled in the JVM by the Pyrolite
+    library Spark ships for its Python workers. A list holding any other
+    type than _PICKLED_KINDS is returned as it is."""
+    import pickle
+
+    if not all(type(v) in _PICKLED_KINDS for v in values):
+        return values
+    return spark._jvm.net.razorvine.pickle.Unpickler().loads(
+        bytearray(pickle.dumps(values, protocol=3)))
 
 
 def _point_read(stripes: DataFrame, spec: list[dict], key_col: str,
@@ -1149,8 +1184,9 @@ def _point_read(stripes: DataFrame, spec: list[dict], key_col: str,
                 if local is not None:
                     _count_served(metrics, "driver", decoded=True)
                     return _filter_exact(local, cond)
-            pruned = stripes.filter(
-                F.col("stripe_id").isin([r.stripe_id for r in rows]))
+            pruned = _filter_exact(stripes, [
+                ("stripe_id", "isInCollection",
+                 [r.stripe_id for r in rows])])
     if pruned is None:
         pruned = _prune_in_spark(stripes, plan, metrics, **prune)
     _count_served(metrics, "spark", fallback)
@@ -1381,7 +1417,8 @@ def _prune_in_spark(stripes: DataFrame, plan, metrics: dict | None,
                .limit(MAX_PUSHDOWN_IDS + 1).collect()]
         if len(ids) <= MAX_PUSHDOWN_IDS:
             _count_prune(metrics, "spark", None, len(ids))
-            return stripes.filter(F.col("stripe_id").isin(ids))
+            return _filter_exact(stripes,
+                                 [("stripe_id", "isInCollection", ids)])
     _count_prune(metrics, "spark", None, None)
     return pruned
 
@@ -1431,36 +1468,37 @@ def prune_stripes(stripes: DataFrame, key_value=None,
     the parquet scan of the stripe table prunes them too (blob column never
     materialized for skipped stripes)."""
     lo, hi, probes = _prune_bounds(key_value, lo, hi, key_values)
-    cond = F.lit(True)
+    jdf, terms = stripes._jdf, []
     # NULL bounds (keyless encode, all-null key stripe) mean UNKNOWN, not
-    # out-of-range: keep the stripe — a wasted read, never a wrong skip
-    if hi is not None:
-        cond = cond & (F.col("key_min").isNull()
-                       | (F.col("key_min") <= F.lit(hi)))
-    if lo is not None:
-        cond = cond & (F.col("key_max").isNull()
-                       | (F.col("key_max") >= F.lit(lo)))
+    # out-of-range: keep the stripe — a wasted read, never a wrong skip.
+    # Built on the JVM Column, as _filter_exact's terms are
+    for col, op, bound in (("key_min", "leq", hi), ("key_max", "geq", lo)):
+        if bound is not None:
+            c = jdf.apply(col)
+            terms.append(getattr(c.isNull(), "or")(getattr(c, op)(bound)))
     if probes and "key_bloom" in stripes.columns:
-        # bloom probe with built-ins only: the k probe positions are a
-        # driver-side constant for the literal key, so each test is one
-        # substring/hex/conv/bitwiseAND over the 8 KB filter — the whole
-        # predicate pushes into the stripe-table scan. Under hash
-        # partitioning this is what skips stripes (every stripe's
-        # [key_min, key_max] range spans the key space there). A NULL bloom
-        # (keyless encodes) or one not BLOOM_BYTES long (an older hash
-        # family) never skips.
-        any_probe = F.lit(False)
-        for kv in probes:
-            probe = F.lit(True)
-            for p in bloom_positions(kv):
-                byte = F.conv(
-                    F.hex(F.substring(F.col("key_bloom"), p // 8 + 1, 1)),
-                    16, 10).cast("int")
-                probe = probe & (byte.bitwiseAND(F.lit(1 << (p & 7))) != 0)
-            any_probe = any_probe | probe
-        cond = cond & (F.col("key_bloom").isNull()
-                       | (F.length("key_bloom") != BLOOM_BYTES) | any_probe)
-    return stripes.filter(cond)
+        terms.append(F.expr(_bloom_probe_sql(probes))._jc)
+    return _filter_jvm(stripes, terms)
+
+
+def _bloom_probe_sql(probes: list) -> str:
+    """prune_stripes' bloom test as one SQL expression, with built-ins
+    only: the k probe positions are a driver-side constant for each key,
+    so each test is one substring/hex/conv/bitwiseAND over the 8 KB filter
+    and the whole predicate pushes into the stripe-table scan. Under hash
+    partitioning this is what skips stripes (every stripe's [key_min,
+    key_max] range spans the key space there). A NULL bloom (keyless
+    encodes) or one not BLOOM_BYTES long (an older hash family) never
+    skips. The text holds integers only, never a key."""
+    def bit(p: int) -> str:
+        return (f"(CAST(conv(hex(substring(key_bloom, {p // 8 + 1}, 1)), "
+                f"16, 10) AS INT) & {1 << (p & 7)}) != 0")
+
+    any_key = " OR ".join(
+        "(" + " AND ".join(bit(p) for p in bloom_positions(kv)) + ")"
+        for kv in probes)
+    return (f"key_bloom IS NULL OR length(key_bloom) != {BLOOM_BYTES} "
+            f"OR ({any_key})")
 
 
 def lineage_view(stripes: DataFrame) -> DataFrame:

@@ -14,6 +14,7 @@ import time
 import numpy as np
 import pytest
 
+from goorc_spark import transcripts
 from goorc_spark.codecs import _native, byterle, fsst, rlev2
 
 pytestmark = pytest.mark.skipif(
@@ -51,14 +52,90 @@ def _fsst_cases():
     return cases
 
 
+def _fsst_table_cases():
+    """(stream, symbol table) pairs at the native matcher's edges: stream
+    lengths around its 64-position words, matches crossing a word, hand-
+    built tables (a class too dense for a one-probe hash, duplicate
+    symbols, single bytes only, symbols longer than the stream) and the
+    transcripts text under a table trained on another row group."""
+    rng = random.Random(7)
+    text = _fsst_cases()[3]
+    trained = fsst.train(text)
+    for n in [*range(1, 10), 63, 64, 65, 127, 128, 129]:
+        for start in (0, 5, 61):
+            yield text[start:start + n], trained
+    # symbols of every length class at every offset of a word
+    syms = [s for s in trained if len(s) > 1]
+    for _ in range(40):
+        out = bytearray(rng.randrange(70))
+        while len(out) < 700:
+            out += rng.choice(syms) if rng.random() < 0.8 else b"~"
+        yield bytes(out), trained
+    # 200 four-byte symbols in one class, then duplicates, then singles
+    alpha = b"abcdefgh"
+    dense = sorted({bytes(rng.choice(alpha) for _ in range(4))
+                    for _ in range(400)})[:200]
+    assert len(dense) == 200
+    blob = b"".join(rng.choice(dense) + alpha[:rng.randrange(3)]
+                    for _ in range(900))
+    yield blob, dense + [b"a", b"b"]
+    dup = [b"abcdefgh", b"abcd", b"abcdefgh", b"abcd", b"ab", b"ab",
+           b"cde", b"a", b"a", b"cde"]
+    for data in (b"abcdefghabcdab" * 50, b"xabcdefgh", b"cdeab" * 30):
+        yield data, dup
+    singles = [bytes([b]) for b in range(0, 256, 3)]
+    yield bytes(range(256)) * 4, singles
+    long_only = [b"abcdefgh", b"bcdefg", b"cdefgh", b"a"]
+    for n in range(1, 8):
+        yield b"abcdefgh"[:n], long_only
+        yield b"abcdefgh"[:n], [b"abcdefgh"]
+    # symbols ending in zero bytes, which the stream's zero padding would
+    # complete past its end
+    nul = [b"ab\0\0", b"cd\0\0\0\0\0\0", b"ef\0", b"e"]
+    for n in (60, 61, 62, 63, 64, 125, 126, 127):
+        for tail in (b"ab", b"cd", b"cd\0\0", b"ef", b"ab\0"):
+            yield b"e" * (n - len(tail)) + tail, nul
+    # the codec-cache case: one table over the text of later row groups
+    texts = transcripts.synthesize_pandas(n_convs=3000, seed=1)["text"]
+    groups = ["".join(t for t in texts[g * 10000:(g + 1) * 10000] if t)
+              .encode() for g in range(10)]
+    bench_table = fsst.train(groups[0])
+    for g in groups[1:]:
+        yield g, bench_table
+
+
+def _crosses_word(data: bytes, ct) -> bool:
+    """Does the reference matcher accept a match that spans two 64-byte
+    words of the stream?"""
+    arr = np.frombuffer(data, dtype=np.uint8)
+    n = len(arr)
+    if not ct.has_multi or n < 2:
+        return False
+    taken = np.zeros(n, dtype=bool)
+    code_at = np.full(n, -1, dtype=np.int16)
+    ct.match_all(fsst._rolling_keys4(arr), n, taken, code_at)
+    starts = np.flatnonzero(code_at >= 0)
+    lens = np.array([len(s) for s in ct.table])[code_at[starts]]
+    return bool((starts % 64 + lens > 64).any())
+
+
 def test_fsst_native_matches_numpy_bytes():
-    for i, data in enumerate(_fsst_cases()):
-        ct = fsst.compile_table(fsst.train(data))
+    cases = [(data, fsst.train(data)) for data in _fsst_cases()]
+    cases += _fsst_table_cases()
+    crossed = 0
+    for i, (data, table) in enumerate(cases):
+        ct = fsst.compile_table(table)
         a = fsst.compress(data, ct)
         with numpy_only():
             b = fsst.compress(data, ct)
         assert a == b, f"fsst case {i}: native != numpy"
         assert fsst.decompress(a) == data, f"fsst case {i}: roundtrip"
+        crossed += _crosses_word(data, ct)
+    assert crossed >= 10
+    # the 200-symbol class is the one no multiplier places
+    ct = fsst.compile_table(next(t for _, t in cases if len(t) == 202))
+    linear = _native.compile_args(ct)[3]
+    assert ct.classes == [4] and linear.tolist() == [1]
 
 
 def _rlev2_cases():

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -139,3 +140,31 @@ def test_planted_writable_object_is_never_loaded(tmp_path, loose):
     assert st["inflate"] == _native.has_inflate()
     assert {k: st[k] for k in ("loaded", "path", "reason")} == {
         "loaded": True, "path": str(planted), "reason": None}
+
+
+def _compiler() -> str | None:
+    return next(filter(None, map(shutil.which, _native._CC_CANDIDATES)),
+                None)
+
+
+@pytest.mark.parametrize("flags", [(), ("-DGOORC_ZLIB",)],
+                         ids=["plain", "zlib"])
+def test_source_compiles_without_warnings(tmp_path, flags):
+    """The kernels build warning-free under -Wall -Wextra with and without
+    the zlib kernel, and include no compiler intrinsics header: executors
+    build the source with their own plain `cc -O3`, and one whose build
+    fails runs every kernel's numpy twin, silently and about 3x slower."""
+    assert not re.search(r"#\s*include\s*<\w*intrin\.h>", _native._SRC)
+    cc = _compiler()
+    if cc is None:
+        pytest.skip("no C compiler on PATH")
+    src = tmp_path / "goorc_native.c"
+    src.write_text(_native._SRC)
+    if flags and subprocess.run(
+            [cc, "-fsyntax-only", "-x", "c", "-"], input="#include <zlib.h>\n",
+            capture_output=True, text=True, timeout=60).returncode:
+        pytest.skip("no zlib.h")
+    r = subprocess.run([cc, "-Wall", "-Wextra", "-Werror", "-fsyntax-only",
+                        *flags, str(src)],
+                       capture_output=True, text=True, timeout=120)
+    assert r.returncode == 0, r.stderr

@@ -394,6 +394,31 @@ def test_warm_driver_point_read_py4j_budget(spark, tables, tmp_path,
         assert 0 < trips[0] <= 50, (name, trips)
         assert trips[0] == trips[1], (name, trips)
 
+def test_warm_read_rows_in_py4j_budget_flat_in_keys(tables, monkeypatch):
+    """A warm, driver-served read_rows_in plus its count() crosses into the
+    JVM as often for 64 keys as for 3, at most 50 times: its key list
+    reaches the JVM as one list, not one round trip per key."""
+    pdf, spec, st = tables
+    st = st["range"]
+    keys = _keys(pdf)
+    batches = [keys[17:20],
+               keys + [f"{k}-missing" for k in keys[:64 - len(keys)]]]
+    assert len(batches[1]) == 64
+    trips = []
+    for batch in batches:
+        def read(m):
+            return engine.read_rows_in(st, spec, "conv_id", batch,
+                                       metrics=m).count()
+
+        want = read(None)  # warms the lineage cache
+        m: dict = {}
+        n, sent = _round_trips(monkeypatch, lambda: read(m))
+        assert n == want == int(pdf["conv_id"].isin(batch).sum()) > 0
+        assert m["served_on"] == "driver" and m["lineage_cache_hits"]
+        trips.append(sent)
+    assert trips[0] == trips[1] <= 50, trips
+
+
 def test_reads_stored_derived_once_per_snapshot(spark, tmp_path,
                                                 monkeypatch):
     """The stored-columns verdict is kept with the lineage cache entry:
@@ -524,6 +549,8 @@ def test_snapshot_state_under_concurrent_reads(spark, tables, tmp_path):
 def test_frame_bound_filter_is_the_column_filter(spark):
     """_filter_exact builds the Catalyst filter PySpark's Column operators
     build over the same frame."""
+    import datetime as dt
+
     df = spark.range(0, 50).selectExpr("CAST(id AS STRING) AS k",
                                        "id % 7 AS o")
 
@@ -539,9 +566,82 @@ def test_frame_bound_filter_is_the_column_filter(spark):
     assert same(engine._filter_exact(df, [("k", "isInCollection",
                                            ["1", "12", "3"])]),
                 df.filter(F.col("k").isin(["1", "12", "3"])))
+    # a key list reaches the JVM as one pickled list: the literals keep
+    # the types Py4J gives, and other types keep the Python list
+    wide = spark.range(0, 50).selectExpr(
+        "id AS i", "CAST(id AS DOUBLE) / 4 AS f",
+        "CAST(CAST(id AS STRING) AS BINARY) AS b", "id % 2 = 0 AS t",
+        "timestamp_seconds(id * 3600) AS ts")
+    for col, keys in (("i", [3, 2 ** 40, -7]), ("f", [0.5, 1.25]),
+                      ("b", [b"\x00", b"12", b"3"]), ("t", [True]),
+                      ("ts", [dt.datetime(1970, 1, 1, 5)])):
+        got = engine._filter_exact(wide, [(col, "isInCollection", keys)])
+        assert same(got, wide.filter(F.col(col).isin(keys))), col
+        assert got.count() == wide.filter(F.col(col).isin(keys)).count()
+    assert engine._jvm_values(spark, [dt.date(2020, 1, 1)]) == [
+        dt.date(2020, 1, 1)]
     assert not same(engine._filter_exact(df, [("k", "equalTo", "4")]),
                     df.filter(F.col("k") == F.lit("3")))
     assert engine._filter_exact(df, [("k", "equalTo", None)]).count() == 0
+
+
+def _column_prune(stripes, lo, hi, probes):
+    """prune_stripes' predicate as PySpark Column operators build it."""
+    cond = F.lit(True)
+    if hi is not None:
+        cond = cond & (F.col("key_min").isNull()
+                       | (F.col("key_min") <= F.lit(hi)))
+    if lo is not None:
+        cond = cond & (F.col("key_max").isNull()
+                       | (F.col("key_max") >= F.lit(lo)))
+    if probes:
+        any_probe = F.lit(False)
+        for kv in probes:
+            probe = F.lit(True)
+            for p in engine.bloom_positions(kv):
+                byte = F.conv(
+                    F.hex(F.substring(F.col("key_bloom"), p // 8 + 1, 1)),
+                    16, 10).cast("int")
+                probe = probe & (byte.bitwiseAND(F.lit(1 << (p & 7))) != 0)
+            any_probe = any_probe | probe
+        cond = cond & (F.col("key_bloom").isNull()
+                       | (F.length("key_bloom") != engine.BLOOM_BYTES)
+                       | any_probe)
+    return stripes.filter(cond)
+
+
+def test_prune_stripes_predicate_is_the_column_predicate(tables,
+                                                         monkeypatch):
+    """prune_stripes builds the filter PySpark's Column operators build,
+    for 1, 3 and 64 keys and for range bounds, in as many Py4J round
+    trips for 64 keys as for one."""
+    pdf, spec, st = tables
+    st = st["hash"]
+    keys = _keys(pdf)
+    many = keys + [f"{k}-missing" for k in keys[:64 - len(keys)]]
+
+    def same(a, b):
+        return a._jdf.queryExecution().optimizedPlan().sameResult(
+            b._jdf.queryExecution().optimizedPlan())
+
+    engine.prune_stripes(st, key_value=keys[0])  # first-call lookups
+    trips = {}
+    for name, kw, want in (
+            ("one", {"key_value": keys[5]}, (keys[5], keys[5], [keys[5]])),
+            ("three", {"key_values": keys[3:6]},
+             (keys[3], keys[5], keys[3:6])),
+            ("many", {"key_values": many}, (min(many), max(many), many)),
+            ("range", {"lo": keys[2], "hi": keys[9]},
+             (keys[2], keys[9], [])),
+            ("open", {"hi": keys[9]}, (None, keys[9], []))):
+        got, trips[name] = _round_trips(
+            monkeypatch, lambda: engine.prune_stripes(st, **kw))
+        ref = _column_prune(st, *want)
+        assert same(got, ref), name
+        assert not same(got, _column_prune(st, None, None, [])), name
+        assert got.count() == ref.count() > 0, name
+    assert trips["one"] == trips["three"] == trips["many"], trips
+    assert engine.prune_stripes(st) is st
 
 
 def test_driver_order_bounds_and_key_lists(tables):
