@@ -42,6 +42,14 @@ static inline uint64_t load_be8(const uint8_t *p) {
     return __builtin_bswap64(v);
 }
 
+/* the per-class symbol tables of fsst_compress (compile_args builds them
+   with the same constants): a key's probe starts at slot
+   (key * MULT) >> (64 - HT_BITS) and goes on to the next empty slot */
+#define HT_BITS 11
+#define HT_SIZE (1 << HT_BITS)
+#define HT_MASK (HT_SIZE - 1)
+#define MULT 0x9E3779B97F4A7C15ULL
+
 /* FSST greedy longest-class-first matcher + token emitter.
 
    Exact semantics of fsst.CompiledTable.match_all + the numpy output
@@ -60,11 +68,8 @@ static inline uint64_t load_be8(const uint8_t *p) {
    bits of `candidates & ~taken` one 64-bit word at a time with that
    word's taken bits in a register; a window that crosses into the next
    word marks that word's bits in memory, where its walk loads them.
-   Symbols are probed through each class's hash table: `slot_key[h]`
-   holds the key whose slot is h = (key * mult) >> (64 - tbits), empty
-   slots have code -1. compile_args picks a multiplier that places every
-   key of a class in its own slot, so one probe decides; a class it
-   cannot place (`linear` set) probes on to the next empty slot. Emission
+   Symbols are probed through each class's linear-probed table of HT_SIZE
+   slots (`slot_key`, `slot_code`; empty slots have code -1). Emission
    walks the bits of `starts | ~taken`: one token per match start or
    literal, without a branch on which.
 
@@ -76,8 +81,6 @@ static inline uint64_t load_be8(const uint8_t *p) {
 int64_t fsst_compress(const uint8_t *data, int64_t n,
                       const uint8_t *lut16, const uint8_t *lut16b,
                       int32_t n_classes, const int32_t *class_len,
-                      const int32_t *class_tbits, const int32_t *class_linear,
-                      const uint64_t *class_mult,
                       const uint64_t *slot_key, const int16_t *slot_code,
                       const int16_t *single_map, uint64_t *bits,
                       uint8_t *out)
@@ -113,19 +116,11 @@ int64_t fsst_compress(const uint8_t *data, int64_t n,
         }
     }
 
-    const uint64_t *sk = slot_key;
-    const int16_t *sc = slot_code;
     for (int32_t ci = 0; ci < n_classes; ci++) {
         int32_t L = class_len[ci];
-        int hs = 64 - class_tbits[ci];
-        uint64_t hmask = (1ULL << class_tbits[ci]) - 1;
-        uint64_t mult = class_mult[ci];
-        int linear = class_linear[ci];
         const uint64_t *cw = cand + ci * nwords;
-        const uint64_t *tk = sk;
-        const int16_t *tc = sc;
-        sk += hmask + 1;
-        sc += hmask + 1;
+        const uint64_t *tk = slot_key + (size_t)ci * HT_SIZE;
+        const int16_t *tc = slot_code + (size_t)ci * HT_SIZE;
         if (n < L) continue;
         int sh = 8 * (8 - L);
         uint64_t win = (1ULL << L) - 1;
@@ -140,14 +135,10 @@ int64_t fsst_compress(const uint8_t *data, int64_t n,
                 b &= b - 1;
                 int64_t i = (w << 6) + r;
                 uint64_t key = load_be8(data + i) >> sh;
-                uint64_t h = (key * mult) >> hs;
-                int16_t code = tk[h] == key ? tc[h] : -1;
-                if (linear && code < 0) {
-                    while (tc[h] >= 0) {
-                        if (tk[h] == key) { code = tc[h]; break; }
-                        h = (h + 1) & hmask;
-                    }
-                }
+                uint64_t h = (key * MULT) >> (64 - HT_BITS);
+                int16_t code;
+                while ((code = tc[h]) >= 0 && tk[h] != key)
+                    h = (h + 1) & HT_MASK;
                 if (code < 0) continue;
                 if (r + L <= 64) {
                     if (t & win << r) continue;
@@ -1124,7 +1115,7 @@ def lib():
             fn.restype = ctypes.c_int64
             fn.argtypes = [ctypes.c_void_p, ctypes.c_int64, ctypes.c_void_p,
                            ctypes.c_void_p, ctypes.c_int32,
-                           *[ctypes.c_void_p] * 9]
+                           *[ctypes.c_void_p] * 6]
             fn = cdll.rlev2_encode
             fn.restype = ctypes.c_int64
             fn.argtypes = [ctypes.c_void_p, ctypes.c_int64, ctypes.c_int32,
@@ -1199,8 +1190,8 @@ def fsst_compress(ct, arr: np.ndarray) -> bytes | None:
     cdll = lib()
     if cdll is None:
         return None
-    (n_classes, class_len, class_tbits, class_linear, class_mult, slot_key,
-     slot_code, single_map, lut16, lut16b) = ct.nat_args or compile_args(ct)
+    (n_classes, class_len, slot_key, slot_code, single_map, lut16,
+     lut16b) = ct.nat_args or compile_args(ct)
     n = len(arr)
     padded = np.zeros(n + 8, dtype=np.uint8)
     padded[:n] = arr
@@ -1208,9 +1199,7 @@ def fsst_compress(ct, arr: np.ndarray) -> bytes | None:
     out = np.empty(2 * n + 16, dtype=np.uint8)
     out_len = cdll.fsst_compress(
         padded.ctypes.data, n, lut16.ctypes.data, lut16b.ctypes.data,
-        n_classes, class_len.ctypes.data, class_tbits.ctypes.data,
-        class_linear.ctypes.data, class_mult.ctypes.data,
-        slot_key.ctypes.data, slot_code.ctypes.data, single_map.ctypes.data,
+        n_classes, class_len.ctypes.data, slot_key.ctypes.data, slot_code.ctypes.data, single_map.ctypes.data,
         bits.ctypes.data, out.ctypes.data)
     return out[:out_len].tobytes()
 
@@ -1359,9 +1348,13 @@ def orc_chunk_cuts(raw, block: int, k: int):
     return cuts.tolist(), bound.tolist()
 
 
-def inflate_buffer(cap: int):
-    """A writable buffer of `cap` bytes for orc_inflate_into, or None when
-    it cannot be mapped.
+def orc_inflate(raw, cap: int) -> memoryview | None:
+    """The whole chunks of an ORC zlib stream (or a range of them)
+    inflated into a new buffer of `cap` bytes, as a memoryview of the
+    bytes written. The GIL is released while it runs. None when the
+    kernel is missing, a chunk is cut off or does not inflate, the
+    output would pass `cap`, or `cap` bytes cannot be mapped: the caller
+    then takes the Python path.
 
     `cap` is an upper bound, often many times the output, so a buffer
     of _MAP_MIN_BYTES or more is an anonymous mapping: only the pages
@@ -1373,105 +1366,50 @@ def inflate_buffer(cap: int):
     and an unmap per stream."""
     if cap < 0:
         raise ValueError(f"cap must not be negative, got {cap}")
-    if cap < _MAP_MIN_BYTES:
-        return np.empty(cap, dtype=np.uint8)
-    try:  # `cap` comes from the file's block size
-        return mmap.mmap(-1, cap, flags=mmap.MAP_PRIVATE)
-    except (OSError, OverflowError):
-        return None
-
-
-def orc_inflate_into(raw, dst) -> int | None:
-    """Inflate the whole chunks of an ORC zlib stream (or a range of
-    them) into the writable buffer `dst`, never past its end: the bytes
-    written, or None when the kernel is missing or a chunk is cut off,
-    does not inflate or would pass the end. The GIL is released while it
-    runs."""
     if not has_inflate():
         return None
     buf = np.frombuffer(raw, dtype=np.uint8)
-    out = np.frombuffer(dst, dtype=np.uint8)
-    n = lib().orc_inflate(buf.ctypes.data, len(buf), out.ctypes.data,
-                          len(out))
-    return None if n < 0 else n
+    if cap < _MAP_MIN_BYTES:
+        out = dst = np.empty(cap, dtype=np.uint8)
+    else:
+        try:  # `cap` comes from the file's block size
+            out = mmap.mmap(-1, cap, flags=mmap.MAP_PRIVATE)
+        except (OSError, OverflowError):
+            return None
+        dst = np.frombuffer(out, dtype=np.uint8)
+    n = lib().orc_inflate(buf.ctypes.data, len(buf), dst.ctypes.data, cap)
+    del dst
+    return None if n < 0 else memoryview(out)[:n]
 
 
-def orc_inflate(raw, cap: int) -> memoryview | None:
-    """orc_inflate_into a new inflate_buffer of `cap` bytes, as a
-    memoryview of the bytes written; None where either gives None."""
-    if cap < 0:
-        raise ValueError(f"cap must not be negative, got {cap}")
-    if not has_inflate():
-        return None
-    out = inflate_buffer(cap)
-    n = None if out is None else orc_inflate_into(raw, out)
-    return None if n is None else memoryview(out)[:n]
-
-
-_MAX_TBITS = 11
-_LINEAR_MULT = 0x9E3779B97F4A7C15
-
-
-def _splitmix64(n: int) -> np.ndarray:
-    """The first `n` outputs of splitmix64 from seed 0, made odd."""
-    z = np.arange(1, n + 1, dtype=np.uint64) * np.uint64(_LINEAR_MULT)
-    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    return (z ^ (z >> np.uint64(31))) | np.uint64(1)
-
-
-_MULTS = _splitmix64(256)
-
-
-def _class_table(keys: np.ndarray, codes: np.ndarray):
-    """One length class's hash table for fsst_compress: (table bits,
-    linear?, multiplier, slot keys, slot codes). The keys go in the
-    smallest table of at least 2 slots per key where one of _MULTS gives
-    every key its own slot, placed by the first such multiplier; a class
-    that no multiplier places within 2**_MAX_TBITS slots probes linearly
-    from _LINEAR_MULT's slot in a table of that size. `keys` come sorted,
-    equal ones in table order: the first of equal symbols takes the slot,
-    as it wins in fsst._probe."""
-    keys, first = np.unique(keys, return_index=True)
-    codes = codes[first]
-    for tbits in range(len(keys).bit_length() + 1, _MAX_TBITS + 1):
-        slots = (keys[None, :] * _MULTS[:, None]) >> np.uint64(64 - tbits)
-        slots.sort(axis=1)
-        placed = np.flatnonzero((slots[:, 1:] != slots[:, :-1]).all(axis=1))
-        if len(placed):
-            mult = _MULTS[placed[0]]
-            h = (keys * mult) >> np.uint64(64 - tbits)
-            slot_key = np.zeros(1 << tbits, dtype=np.uint64)
-            slot_code = np.full(1 << tbits, -1, dtype=np.int16)
-            slot_key[h] = keys
-            slot_code[h] = codes
-            return tbits, False, int(mult), slot_key, slot_code
-    size = 1 << _MAX_TBITS
-    slot_key = np.zeros(size, dtype=np.uint64)
-    slot_code = np.full(size, -1, dtype=np.int16)
-    for k, c in zip(keys.tolist(), codes.tolist()):
-        h = ((k * _LINEAR_MULT) & 0xFFFFFFFFFFFFFFFF) >> (64 - _MAX_TBITS)
-        while slot_code[h] >= 0:
-            h = (h + 1) & (size - 1)
-        slot_key[h] = k
-        slot_code[h] = c
-    return _MAX_TBITS, True, _LINEAR_MULT, slot_key, slot_code
+# fsst_compress's HT_BITS and MULT
+_HT_BITS = 11
+_HT_MULT = 0x9E3779B97F4A7C15
 
 
 def compile_args(ct):
     """Flatten a CompiledTable into the contiguous arrays the C matcher
     takes (fsst.CompiledTable builds them once, when it is constructed),
-    including each length class's hash table (see _class_table)."""
-    tables = [_class_table(*ct.member[L]) for L in ct.classes]
+    including each length class's linear-probed symbol table. Keys go in
+    in class order, so of equal symbols the first is found, as it wins
+    in fsst._probe."""
+    size = 1 << _HT_BITS
+    slot_key = np.zeros((len(ct.classes), size), dtype=np.uint64)
+    slot_code = np.full((len(ct.classes), size), -1, dtype=np.int16)
+    for ci, L in enumerate(ct.classes):
+        keys, codes = ct.member[L]
+        home = (keys * np.uint64(_HT_MULT)) >> np.uint64(64 - _HT_BITS)
+        slots, used = [], set()
+        for h in home.tolist():
+            while h in used:
+                h = (h + 1) & (size - 1)
+            used.add(h)
+            slots.append(h)
+        slot_key[ci, slots] = keys
+        slot_code[ci, slots] = codes
     return (len(ct.classes),
             np.array(ct.classes, dtype=np.int32),
-            np.array([t[0] for t in tables], dtype=np.int32),
-            np.array([t[1] for t in tables], dtype=np.int32),
-            np.array([t[2] for t in tables], dtype=np.uint64),
-            np.concatenate([np.empty(0, np.uint64)]
-                           + [t[3] for t in tables]),
-            np.concatenate([np.empty(0, np.int16)]
-                           + [t[4] for t in tables]),
+            slot_key, slot_code,
             np.ascontiguousarray(ct.single_map),
             np.ascontiguousarray(ct.lut16),
             np.ascontiguousarray(ct.lut16b))

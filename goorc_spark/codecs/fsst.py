@@ -145,8 +145,8 @@ class CompiledTable:
     the 2-byte-prefix class LUT, the bytes-2-3 LUT, the per-class sorted
     symbol keys, the single-byte map, the serialized header and, when the
     native kernel is loaded, its flattened arguments (`nat_args`), which
-    include each length class's symbol hash table with the multiplier
-    searched for it (`_native.compile_args`). compress()
+    include each length class's symbol hash table
+    (`_native.compile_args`). compress()
     previously rebuilt all of these per call — per row group under the stripe
     writer's shared-table cache — which was ~25% of the whole FSST cost
     on transcripts text. Matching decisions and output bytes are

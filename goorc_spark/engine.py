@@ -1140,13 +1140,18 @@ def _jvm_values(spark: SparkSession, values: list):
     trips, where Py4J converts a Python list with one ArrayList.add round
     trip per item: pickled here, unpickled in the JVM by the Pyrolite
     library Spark ships for its Python workers. A list holding any other
-    type than _PICKLED_KINDS is returned as it is."""
+    type than _PICKLED_KINDS is returned as it is. The class is named in
+    full, where a lookup through `spark._jvm` asks the JVM once per name
+    part."""
     import pickle
+
+    from py4j.java_gateway import JavaClass
 
     if not all(type(v) in _PICKLED_KINDS for v in values):
         return values
-    return spark._jvm.net.razorvine.pickle.Unpickler().loads(
-        bytearray(pickle.dumps(values, protocol=3)))
+    unpickler = JavaClass("net.razorvine.pickle.Unpickler",
+                          spark._jvm._gateway_client)
+    return unpickler().loads(bytearray(pickle.dumps(values, protocol=3)))
 
 
 def _point_read(stripes: DataFrame, spec: list[dict], key_col: str,

@@ -228,52 +228,29 @@ def _inline(fn, *args):
 
 def _inflate_parts(raw: memoryview, block: int, k: int, submit):
     """Start the native inflate of a whole zlib stream as up to `k` chunk
-    ranges through `submit` (Jobs.submit, or _inline), each into its own
-    slice of one buffer; a range's slice is `block` bytes per deflate
-    chunk, the file's compression block size. Returns (buffer, [(slice
-    offset, handle)] in stream order), or None when the kernel is
-    missing, a chunk is cut off or the buffer cannot be mapped."""
+    ranges through `submit` (Jobs.submit, or _inline); each range's
+    output is bounded by `block` bytes per deflate chunk, the file's
+    compression block size. Returns the range handles in stream order,
+    or None when the kernel is missing or a chunk is cut off."""
     cut = _native.orc_chunk_cuts(raw, block, k)
     if cut is None:
         return None
     cuts, bound = cut
-    buf = _native.inflate_buffer(sum(bound))
-    if buf is None:
-        return None
-    view = memoryview(buf)
-    parts, at = [], 0
-    for a, b, cap in zip(cuts, cuts[1:], bound):
-        if a < b:
-            parts.append((at, submit(_native.orc_inflate_into, raw[a:b],
-                                     view[at:at + cap])))
-        at += cap
-    return buf, parts
+    return [submit(_native.orc_inflate, raw[a:b], cap)
+            for a, b, cap in zip(cuts, cuts[1:], bound) if a < b]
 
 
-def _joined(started):
-    """The inflated stream of _inflate_parts' ranges (waiting for each):
-    a view of their buffer when every range but the last filled its
-    slice, else their bytes joined. None when _inflate_parts gave None or
+def _joined(parts: list | None):
+    """The inflated stream of _inflate_parts' handles (waiting for each;
+    none for an empty stream), or None when _inflate_parts gave None or
     any range failed — the Python path then inflates the stream again,
-    and raises where it must.
-
-    A writer that ends chunks short of the block (this module's, at every
-    row-index segment) leaves gaps between the ranges. Moving them down
-    in place faults in fresh pages of the mapping: for a 10.5 MB
-    transcripts text stream that took ≈2.3 ms a read against ≈0.8 ms for
-    the join, whose buffer comes from pages the heap already holds
-    (cProfile of 20 reads, 4-CPU Xeon)."""
-    if started is None:
+    and raises where it must."""
+    if parts is None:
         return None
-    buf, parts = started
-    got = [p.result() for _, p in parts]
-    if any(n is None for n in got):
+    got = [p.result() for p in parts]
+    if any(g is None for g in got):
         return None
-    view = memoryview(buf)
-    spans = [(at, at + n) for (at, _), n in zip(parts, got)]
-    if all(a == b for (a, _), (_, b) in zip(spans[1:], spans)):
-        return view[:spans[-1][1] if spans else 0]
-    return b"".join(view[a:b] for a, b in spans)
+    return got[0] if len(got) == 1 else b"".join(got)
 
 
 def _decompress(raw, kind: int, limit: int | None = None,

@@ -81,28 +81,6 @@ def test_native_equals_python_on_fuzzed_streams(k):
         assert got is not None and bytes(got) == want, i
 
 
-@needs_kernel
-@pytest.mark.parametrize("k", [2, 5])
-def test_ranges_inflate_into_one_buffer(k):
-    """The ranges of a stream inflate into slices of one buffer, equal to
-    a one-range inflate: a view of that buffer when the chunks fill the
-    block, their bytes joined when chunks fall short of it."""
-    plain = np.random.default_rng(4).integers(0, 9, 300_000,
-                                               dtype=np.uint8).tobytes()
-    full = chunk.compress(plain, "zlib", 4096)
-    streams = [(full, 4096)] + [(s, 1 << 16) for s in _fuzz_streams(13)]
-    kinds = []
-    for i, (stream, block) in enumerate(streams):
-        one = _native.orc_inflate(stream, 1 << 26)
-        started = on._inflate_parts(memoryview(stream), block, k, on._inline)
-        got = on._joined(started)
-        assert got == one, i
-        kinds.append("joined" if isinstance(got, bytes) else
-                     "view" if got.obj is memoryview(started[0]).obj
-                     else None)
-    assert kinds[0] == "view" and "joined" in kinds and None not in kinds
-
-
 def _short_chunk_file() -> bytes:
     """A zlib file whose chunks all hold less than its block: with a row
     index, each 300-row segment of a stream ends its own chunk."""
@@ -111,25 +89,12 @@ def _short_chunk_file() -> bytes:
 
 @needs_kernel
 def test_short_chunks_read_like_pyarrow(monkeypatch):
-    """Every range of a file whose chunks are shorter than its block
-    inflates short of its slice, and the ranges are joined; the read
-    equals pyarrow's reader and the Python path, at width 4 with every
-    stream in ranges."""
+    """A file whose chunks are shorter than its block reads like pyarrow's
+    reader and the Python path, at width 4 with every stream in ranges."""
     monkeypatch.setattr(_fanout, "pool_width", lambda: 4)
     monkeypatch.setattr(on, "PARALLEL_INFLATE_BYTES", 1024)
     data = _short_chunk_file()
-    joined_short = []
-    joined = on._joined
-
-    def spy(started):
-        got = joined(started)
-        if started is not None and len(started[1]) > 1:
-            joined_short.append(isinstance(got, bytes))
-        return got
-
-    monkeypatch.setattr(on, "_joined", spy)
     got = on.read_orc(data)
-    assert any(joined_short)
     assert got.equals(po.ORCFile(io.BytesIO(data)).read().cast(got.schema))
     _python_only(monkeypatch)
     assert got.equals(on.read_orc(data))
