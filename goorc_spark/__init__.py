@@ -10,10 +10,13 @@ reference's published unit-test vectors (ported as pytest fixtures in
 
 Layout
 ------
-``goorc_spark.codecs``      pure-numpy codec kernels (RLEv2, byte/bool RLE,
-                            varint/zigzag, bitpack, dictionary, FSST, floats,
-                            timestamps, zstd/zlib/lz4 chunk container)
-``goorc_spark.stats``       per-chunk column statistics (feed the selector)
+``goorc_spark.codecs``      numpy codec kernels (RLEv2, RLEv1, byte/bool
+                            RLE, varint/zigzag, bitpack, FSST, floats,
+                            timestamps, murmur3 blooms, zstd/zlib/lz4 chunk
+                            container), with an optional C fast path for
+                            the hottest ones (``codecs._native``)
+``goorc_spark.stats``       int/float/bool chunk statistics (meta
+                            diagnostics)
 ``goorc_spark.selector``    codec auto-selection rules
 ``goorc_spark.arrow_stripe`` Arrow-native stripe assembly (the engine's hot
                             path; wire format pinned by golden fixtures in

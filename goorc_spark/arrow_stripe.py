@@ -139,7 +139,7 @@ def _varwidth_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
 
 def _key_hashes(arr) -> np.ndarray:
     """murmur3 hash64 of an Arrow key column's DISTINCT non-null values —
-    the hash every key bloom (stripe and row group) is built from.
+    the hash the stripe key bloom (engine._build_bloom) is built from.
     Canonical hash bytes: raw UTF-8/bytes for string/binary keys
     (vectorized off the Arrow buffers), primitives.canonical_key_bytes for
     anything else (equal-comparing values hash identically —
@@ -163,26 +163,6 @@ def _key_hash(key_value) -> int:
     from goorc_spark.codecs.primitives import canonical_key_bytes
 
     return murmur3.hash64(canonical_key_bytes(key_value))
-
-
-def _rg_bloom_entry(arr, fpp: float) -> dict:
-    """Per-row-group bloom over the group's DISTINCT key values, sized to
-    the distinct count (a conv-clustered 10k-row group holds ~1k convs ->
-    ~1.2 KB at 1% fpp); select_row_groups probes it with _key_hash."""
-    import base64
-
-    from goorc_spark.codecs import murmur3
-
-    hashes = _key_hashes(arr)
-    m, k = murmur3.bloom_params(max(len(hashes), 1), fpp)
-    words = murmur3.build_bloom(hashes, k, m)
-    return {"k": k, "b64": base64.b64encode(words.tobytes()).decode()}
-
-
-def _rg_bloom_words(entry: dict) -> np.ndarray:
-    import base64
-
-    return np.frombuffer(base64.b64decode(entry["b64"]), dtype="<u8")
 
 
 # streams of this many raw bytes or more compress on the _fanout pool while
@@ -272,7 +252,6 @@ def encode_stripe_table(
     rg_rows: int | None = None,
     key_col: str | None = None,
     ord_col: str | None = None,
-    rg_bloom: float | None = None,
 ) -> tuple[bytes, dict]:
     """`cache` (optional, per-task) reuses codec decisions and trained FSST
     symbol tables across consecutive stripes of one partition — the data is
@@ -321,7 +300,7 @@ def encode_stripe_table(
                 g: dict = {"n_rows": sub.num_rows, "offset": None,
                            "length": None, "columns": cols_meta}
                 spans.append((g, first, len(sink)))
-                _group_index(g, sub, spec, key_col, ord_col, rg_bloom)
+                _group_index(g, sub, spec, key_col, ord_col)
                 groups.append(g)
             body = {"row_groups": groups}
         meta = {
@@ -341,52 +320,56 @@ def encode_stripe_table(
 
 
 def _group_index(g: dict, sub: pa.Table, spec: list[dict],
-                 key_col: str | None, ord_col: str | None,
-                 rg_bloom: float | None) -> None:
-    """A row group's key/order bounds, key bloom and value ranges."""
+                 key_col: str | None, ord_col: str | None) -> None:
+    """A row group's key/order bounds and value ranges.
+
+    The ranges are the reference's RowIndexEntry statistics
+    (pb/orc_proto.proto:92-99), recorded for every orderable column so
+    read_where prunes groups on any of them; the key and order columns'
+    ranges reuse their bounds. Strings get ranges only when short
+    (_short_strings), and their bounds are truncated the ORC way (prefix
+    for min; prefix with last char bumped for max) so a bound costs <=64
+    chars of meta per group."""
+    bounds = {}
     for label, cname in (("key", key_col), ("ord", ord_col)):
         if cname is not None and cname in sub.schema.names:
             mm = pc.min_max(sub.column(cname))
-            g[f"{label}_min"] = mm["min"].as_py()
-            g[f"{label}_max"] = mm["max"].as_py()
-    if rg_bloom and key_col is not None and key_col in sub.schema.names:
-        # under hash placement every group's [key_min, key_max] spans
-        # the key space and range pruning is useless — the per-group
-        # bloom is what skips groups (the stripe-level analog is
-        # engine._build_bloom; ORC-side: BLOOM_FILTER_UTF8 streams)
-        g["key_bloom"] = _rg_bloom_entry(sub.column(key_col), rg_bloom)
-    # per-group value ranges for every orderable scalar column — the
-    # reference's RowIndexEntry statistics (pb/orc_proto.proto:92-99):
-    # generic predicate seek (read_where) prunes groups on ANY column,
-    # not just the clustering key. String bounds are truncated the ORC
-    # way (prefix for min; prefix with last char bumped for max) so a
-    # long text column costs <=130 chars of meta per group.
+            bounds[cname] = mm["min"].as_py(), mm["max"].as_py()
+            g[f"{label}_min"], g[f"{label}_max"] = bounds[cname]
     rng = {}
     for col in spec:
-        if col["kind"] in _RANGE_KINDS and col["name"] not in (key_col,
-                                                               ord_col):
-            carr = sub.column(col["name"])
-            if col["kind"] == "string":
-                # stats only for SHORT string columns (roles, tags,
-                # ids): range predicates don't target free text, and
-                # min_max over a long text column costs ~15% of the
-                # whole stripe encode (measured) for stats nobody probes
-                nbytes = sum(c.get_total_buffer_size()
-                             for c in (carr.chunks
-                                       if hasattr(carr, "chunks")
-                                       else [carr]))
-                if nbytes > 32 * max(len(carr), 1):
-                    continue
+        name, kind = col["name"], col["kind"]
+        if kind not in _RANGE_KINDS:
+            continue
+        if name in bounds:
+            lo, hi = bounds[name]
+        else:
+            carr = sub.column(name)
+            if kind == "string" and not _short_strings(carr)[1]:
+                continue
             mm = pc.min_max(carr)
-            lo = mm["min"].as_py()
-            if lo is not None:
-                hi = mm["max"].as_py()
-                if col["kind"] == "string":
-                    lo = _bound_str(lo, is_max=False)
-                    hi = _bound_str(hi, is_max=True)
-                rng[col["name"]] = [lo, hi]
+            lo, hi = mm["min"].as_py(), mm["max"].as_py()
+        if lo is not None:
+            if kind == "string":
+                lo = _bound_str(lo, is_max=False)
+                hi = _bound_str(hi, is_max=True)
+            rng[name] = [lo, hi]
     if rng:
         g["ranges"] = rng
+
+
+# mean payload bytes per value up to which a string column is "short"
+# (ids, roles, tags) and gets min/max statistics; range predicates don't
+# target free text, whose bounds would only add meta
+_SHORT_STR_BYTES = 32
+
+
+def _short_strings(arr) -> tuple[int, bool]:
+    """(payload bytes, short?) of a string/binary column. Counts the
+    values' own bytes: a slice's buffers are its parent's, so their size
+    says nothing about the slice."""
+    nb = int(pc.sum(pc.binary_length(arr)).as_py() or 0)
+    return nb, nb <= _SHORT_STR_BYTES * (len(arr) - arr.null_count)
 
 
 _INT_STAT_KINDS = {"byte", "short", "int", "long"}
@@ -424,12 +407,10 @@ def stripe_col_stats(table: pa.Table, spec: list[dict]) -> dict:
     (/root/reference/orc/writer.go:140-177): n/nulls always; typed min/max
     for orderable scalars (timestamps as epoch-micros, dates as days,
     decimals as strings); sum for integer kinds (bool: true-count); byte
-    totals for string/binary. String min/max is recorded only when the
-    column's stripe bytes stay under 32 B/value (ids, roles, tags) — a
-    whole-stripe min_max over free text buys stats nobody probes at real
-    encode cost (the same measured trade as the row-group ranges), so
-    `engine.run_stats` surfaces a string bound only when EVERY stripe
-    recorded one. Nested kinds carry n/nulls only."""
+    totals for string/binary. String min/max is recorded only for short
+    columns (_short_strings: ids, roles, tags), the same rule as the
+    row-group ranges, so `engine.run_stats` surfaces a string bound only
+    when EVERY stripe recorded one. Nested kinds carry n/nulls only."""
     out: dict = {}
     for col in spec:
         arr = table.column(col["name"])
@@ -475,9 +456,8 @@ def stripe_col_stats(table: pa.Table, spec: list[dict]) -> dict:
             else:
                 st["min_dec"], st["max_dec"] = lo, hi
         elif kind in ("string", "binary"):
-            nb = int(pc.sum(pc.binary_length(arr)).as_py())
-            st["bytes"] = nb
-            if nb <= 32 * (n_all - nulls):
+            st["bytes"], short = _short_strings(arr)
+            if short:
                 mm = pc.min_max(arr)
                 lo, hi = mm["min"].as_py(), mm["max"].as_py()
                 if kind == "binary":
@@ -511,36 +491,30 @@ def _coerce_bound(stored, probe):
     return stored, probe
 
 
-def select_row_groups(meta: dict, key_value=None, key_lo=None, key_hi=None,
+def select_row_groups(meta: dict, key_value=None,
                       ord_lo=None, ord_hi=None,
                       col_ranges: dict | None = None,
                       key_values=None) -> list[int] | None:
     """Indices of row groups whose [key_min,key_max] x [ord_min,ord_max]
     (and any `col_ranges` {column: (lo, hi)}) ranges can contain the
     predicate. `key_values` (IN-list) keeps a group when ANY key fits its
-    range (and, with rg_bloom meta, passes its bloom). Conservative: a
-    group with no recorded range for a probed column is kept. Returns
-    None for single-group stripes (old format: nothing to skip)."""
+    range. Conservative: a group with no recorded range for a probed
+    column is kept, so the result is a superset of the matching groups;
+    the `key_bloom` entries of older group metas are ignored, which keeps
+    it one. Returns None for single-group stripes (old format: nothing to
+    skip)."""
     groups = meta.get("row_groups")
     if groups is None:
         return None
     if key_value is not None:
-        key_lo = key_hi = key_value
-    from goorc_spark.codecs import murmur3
-    # probe-key hashes are loop-invariant: hash each key ONCE, decode each
-    # group's bloom words once (not per (group, key) pair)
-    key_hashes = [(kv, _key_hash(kv)) for kv in key_values] \
-        if key_values is not None else None
-    kv_hash = _key_hash(key_value) if key_value is not None \
-        else None
+        key_values = [key_value]
     sel = []
     for i, g in enumerate(groups):
         ok = True
-        if key_hashes is not None:
+        if key_values is not None:
             gmin, gmax = g.get("key_min"), g.get("key_max")
-            entry = g.get("key_bloom")
-            bw = _rg_bloom_words(entry) if entry is not None else None
-            def _fits(kv, h64):
+
+            def _fits(kv):
                 if gmin is not None:
                     lo, p = _coerce_bound(gmin, kv)
                     if lo > p:
@@ -549,17 +523,8 @@ def select_row_groups(meta: dict, key_value=None, key_lo=None, key_hi=None,
                     hi, p = _coerce_bound(gmax, kv)
                     if hi < p:
                         return False
-                if bw is not None and not murmur3.might_contain(
-                        bw, entry["k"], h64):
-                    return False
                 return True
-            ok = any(_fits(kv, h64) for kv, h64 in key_hashes)
-        if key_hi is not None and "key_min" in g and g["key_min"] is not None:
-            lo, p = _coerce_bound(g["key_min"], key_hi)
-            ok = ok and lo <= p
-        if key_lo is not None and "key_max" in g and g["key_max"] is not None:
-            hi, p = _coerce_bound(g["key_max"], key_lo)
-            ok = ok and hi >= p
+            ok = any(_fits(kv) for kv in key_values)
         if ord_hi is not None and g.get("ord_min") is not None:
             lo, p = _coerce_bound(g["ord_min"], ord_hi)
             ok = ok and lo <= p
@@ -577,11 +542,6 @@ def select_row_groups(meta: dict, key_value=None, key_lo=None, key_hi=None,
                 if vlo is not None:
                     hi, p = _coerce_bound(r[1], vlo)
                     ok = ok and hi >= p
-        if ok and kv_hash is not None and "key_bloom" in g:
-            # range checks can't prune hash-placed groups (every range
-            # spans the key space); the per-group bloom can
-            ok = murmur3.might_contain(_rg_bloom_words(g["key_bloom"]),
-                                       g["key_bloom"]["k"], kv_hash)
         if ok:
             sel.append(i)
     return sel

@@ -26,8 +26,7 @@ as a uint64 lane; numpy wrapping integer arithmetic is exactly the scalar
 masked math, pinned bit-exact by tests. The Go reference has no bloom
 filters at all. This module is the one hash family of every bloom here:
 the native ORC reader/writer's row-group pruning, and the stripe table's
-per-stripe and per-row-group key blooms (engine._build_bloom,
-arrow_stripe._key_hashes).
+per-stripe key bloom (engine._build_bloom, arrow_stripe._key_hashes).
 """
 
 from __future__ import annotations

@@ -115,22 +115,12 @@ class EncodeConfig:
     order_cols: tuple = ()                 # stable intra-key order (turn_idx)
     salt_threshold: int = 500_000          # rows per key before salting kicks in
     bucket_rows: int = 250_000             # rows per salt bucket
-    salt_detect: str = "auto"              # skew pre-pass: exact | sample | auto
-                                           # (auto = 1% sample above
-                                           # SALT_SAMPLE_BYTES of input)
     range_partition: bool = False          # range-cluster by key (narrow stripe
                                            # key ranges -> prune_stripes works)
     rg_rows: int = 10_000                  # row-group stride: intra-stripe seek
                                            # granularity (reference index stride,
                                            # /root/reference/orc/config/opts.go:19);
                                            # 0 disables (one group per stripe)
-    rg_bloom: float | None = None          # per-ROW-GROUP key bloom fpp (e.g.
-                                           # 0.01); the group-level twin of the
-                                           # stripe bloom — the only group
-                                           # pruner under hash placement, where
-                                           # group [key_min,key_max] ranges all
-                                           # span the key space. None = off
-                                           # (meta bytes unchanged)
     run_id: str = field(default_factory=lambda: uuid.uuid4().hex[:12])
 
     def __post_init__(self) -> None:
@@ -272,7 +262,7 @@ def _make_encoder(spec: list[dict], cfg: EncodeConfig):
                 table, spec, compression=cfg.compression,
                 chunk_size=cfg.chunk_size, policy=cfg.policy,
                 cache=codec_cache, rg_rows=cfg.rg_rows,
-                key_col=key, ord_col=ordc, rg_bloom=cfg.rg_bloom)
+                key_col=key, ord_col=ordc)
             ms = (time.monotonic() - t0) * 1000
             if key and table.num_rows:
                 # TRUE stripe key bounds (pc.min_max), valid even when the
@@ -326,16 +316,15 @@ SALT_SAMPLE_BYTES = 256 * 1024 * 1024
 SALT_SAMPLE_FRACTION = 0.01
 
 
-def _skew_detection_mode(df: DataFrame, cfg: EncodeConfig) -> str:
+def _skew_detection_mode(df: DataFrame) -> str:
     """'exact' (full groupBy-count pre-pass) or 'sample' (1% sample —
     ~100x cheaper; a key at salt_threshold shows ~threshold*fraction
     sampled rows, flagged at half that to bias recall: over-salting
     splits a key into deterministic buckets anyway, under-salting is the
-    only harmful direction). Auto switches on Catalyst's input-size
-    estimate so small inputs keep the exact pass (SCALE.md: at 10^9 convs
-    the exact pre-pass is ~30s per encode; the sample is seconds)."""
-    if cfg.salt_detect != "auto":
-        return cfg.salt_detect
+    only harmful direction). Picked by Catalyst's input-size estimate
+    against SALT_SAMPLE_BYTES, so small inputs keep the exact pass
+    (SCALE.md: at 10^9 convs the exact pre-pass is ~30s per encode; the
+    sample is seconds)."""
     try:
         size = int(str(df._jdf.queryExecution().optimizedPlan()
                        .stats().sizeInBytes()))
@@ -362,8 +351,8 @@ def _with_salt(df: DataFrame, cfg: EncodeConfig) -> DataFrame:
     """Split mega-keys into deterministic buckets of bucket_rows using the
     (monotone-per-key) first order column.
 
-    'static' mode (the 'auto' resolution for INTEGRAL order columns):
-    salt = floor(order0 / bucket_rows) unconditionally — NO detection job.
+    'static' mode (INTEGRAL order columns): salt = floor(order0 /
+    bucket_rows) unconditionally — NO detection job.
     A per-key 0-based row index (turn_idx) yields salt 0 for every key
     smaller than bucket_rows and exactly the detection path's buckets for
     mega keys, so the encode loses its per-call skew pre-pass (an extra
@@ -379,20 +368,14 @@ def _with_salt(df: DataFrame, cfg: EncodeConfig) -> DataFrame:
     if not key or not cfg.order_cols:
         return df.withColumn(SALT_COL, F.lit(0))
     order0 = cfg.order_cols[0]
-    mode = cfg.salt_detect
-    if mode == "auto":
-        if isinstance(df.schema[order0].dataType, _INTEGRAL_TYPES):
-            mode = "static"
-        else:
-            mode = _skew_detection_mode(df, cfg)
-    if mode == "static":
+    if isinstance(df.schema[order0].dataType, _INTEGRAL_TYPES):
         return df.withColumn(
             SALT_COL,
             F.coalesce(
                 F.floor(F.col(order0).cast("long")
                         / F.lit(cfg.bucket_rows)).cast("int"),
                 F.lit(0)))
-    counts = _skew_counts(df, cfg, mode)
+    counts = _skew_counts(df, cfg, _skew_detection_mode(df))
     skewed = [r[0] for r in counts.select(key).collect()]  # mega-keys only: tiny
     if not skewed:
         return df.withColumn(SALT_COL, F.lit(0))
@@ -533,8 +516,9 @@ def decode_df(stripes: DataFrame, spec: list[dict] | None = None,
             metas = rb.column("meta").to_pylist()
             blobs = rb.column("blob")
             for i, meta_json in enumerate(metas):
-                out = _decode_stripe(blobs[i].as_py(), json.loads(meta_json),
-                                     spec, tz, include, rg_predicate)
+                out = _decode_stripe(blobs[i].as_buffer(),
+                                     json.loads(meta_json), spec, tz,
+                                     include, rg_predicate)
                 if out is not None:
                     yield out
 
@@ -752,8 +736,7 @@ def read_rows_in(stripes: DataFrame, spec: list[dict], key_col: str,
     any-of-the-keys: (1) stripe lineage envelope range + per-key bloom OR
     (up to MAX_BLOOM_KEYS keys; beyond that the [min, max] envelope alone
     — still prunes sorted/range-partitioned layouts); (2) row-group index
-    prune where ANY key fits the group's range (+ rg_bloom when
-    recorded); (3) one exact Catalyst isin filter. NULL keys are dropped
+    prune where ANY key fits the group's [key_min, key_max]; (3) one exact Catalyst isin filter. NULL keys are dropped
     (SQL IN never matches NULL); an all-NULL list reads no stripe.
     The id pass, `metrics` and the driver-side decode of small survivors
     (files read at call time) as in read_rows."""
@@ -893,7 +876,7 @@ def read_rows_at(stripes: DataFrame, spec: list[dict] | None,
                                 first_off = p
                             rg_sel.append(j)
                         p += g["n_rows"]
-                out = _decode_stripe(blobs[i].as_py(), meta, spec, tz,
+                out = _decode_stripe(blobs[i].as_buffer(), meta, spec, tz,
                                      include, None, rg_sel=rg_sel)
                 yield out.slice(slo - first_off, shi - slo)
 

@@ -1,10 +1,13 @@
-"""Per-chunk column statistics, computed vectorized.
+"""Per-chunk column statistics of int, float and bool columns, computed
+vectorized.
 
-Plays two roles, mirroring the reference's ColumnStatistics (min/max/sum/
-count, /root/reference/orc/column/int.go:75-82, string.go:69-90) plus the
-extra signals the codec auto-selector needs (distinct ratio, run length,
-monotonicity, bit-width spread) — signals the reference never computes
-because its encoding choice is static per column.
+The reference's ColumnStatistics (min/max/sum/count,
+/root/reference/orc/column/int.go:75-82) plus run count, monotonicity and
+bit width. arrow_stripe records them as diagnostics in row group 0's
+column meta; decode and pruning never read them, and no codec choice
+depends on them. The statistics the string codec selector reads
+(distinct ratio, lengths) are computed in arrow_stripe, which takes
+MAX_STAT_STR from here.
 """
 
 from __future__ import annotations

@@ -267,9 +267,10 @@ def test_build_bloom_long_outlier_bounded_memory():
     assert engine._build_bloom(pa.array(vals)) == _scalar_bloom(vals)
 
 
-def test_rg_bloom_key_hash_canonical_decimal():
-    """Row-group bloom probes share the canonical key bytes (false-prune
-    regression for Decimal/tz-aware keys)."""
+def test_key_hash_canonical_decimal():
+    """_key_hash, which every stripe-bloom probe goes through, hashes the
+    canonical key bytes: equal-comparing Decimal and int keys hash alike
+    (false-prune regression)."""
     from decimal import Decimal
 
     from goorc_spark import arrow_stripe

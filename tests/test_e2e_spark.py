@@ -169,7 +169,7 @@ def test_media_resize_plumbing(spark):
         multimodal.resize(media, fake=False).collect()
 
 
-def test_skew_detection_modes(spark):
+def test_skew_detection_modes(spark, monkeypatch):
     """ADVICE/VERDICT r2: the skew pre-pass defaults to a 1%-sample
     estimate above SALT_SAMPLE_BYTES instead of a full groupBy-count on
     every encode. Small inputs keep the exact pass; sample mode's plan
@@ -179,8 +179,8 @@ def test_skew_detection_modes(spark):
     sdf = spark.createDataFrame(
         pdf, schema=engine.schema_from_spec(transcripts.TRANSCRIPTS_SPEC))
     c = cfg(salt_threshold=1000, bucket_rows=500, partitions=8)
-    # auto on a small in-memory frame -> exact (no Sample in the plan)
-    assert engine._skew_detection_mode(sdf, c) == "exact"
+    # a small in-memory frame -> exact (no Sample in the plan)
+    assert engine._skew_detection_mode(sdf) == "exact"
     exact_plan = engine._skew_counts(sdf, c, "exact") \
         ._jdf.queryExecution().optimizedPlan().toString()
     assert "Sample" not in exact_plan
@@ -192,9 +192,13 @@ def test_skew_detection_modes(spark):
     flagged = [r[0] for r in engine._skew_counts(sdf, c, "sample")
                .select("conv_id").collect()]
     assert "conv-00000000" in flagged
-    # forced sample mode still salts + round-trips bit-identically
-    c2 = cfg(salt_threshold=1000, bucket_rows=500, partitions=8,
-             salt_detect="sample")
+    # sample mode (input above SALT_SAMPLE_BYTES, order column taken as
+    # non-integral so the static salt does not apply) still salts +
+    # round-trips bit-identically
+    monkeypatch.setattr(engine, "SALT_SAMPLE_BYTES", -1)
+    monkeypatch.setattr(engine, "_INTEGRAL_TYPES", ())
+    assert engine._skew_detection_mode(sdf) == "sample"
+    c2 = cfg(salt_threshold=1000, bucket_rows=500, partitions=8)
     stripes = engine.encode_df(sdf, c2).cache()
     parts = {r["part_id"] for r in stripes.filter(
         "key_min <= 'conv-00000000' and key_max >= 'conv-00000000'")

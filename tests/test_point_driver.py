@@ -35,17 +35,16 @@ def _source(spark):
 
 @pytest.fixture(scope="module")
 def tables(spark, tmp_path_factory):
-    """(pdf, spec, {layout: bare parquet scan}): hash placement with
-    row-group blooms, and range placement, both with small row groups so
-    the row-group select has work to do."""
+    """(pdf, spec, {layout: bare parquet scan}): hash placement and range
+    placement, both with small row groups so the row-group select has work
+    to do."""
     pdf, df = _source(spark)
     out = {}
     for name, ranged in (("hash", False), ("range", True)):
         cfg = engine.EncodeConfig(key_col="conv_id", order_cols=("turn_idx",),
                                   stripe_bytes=64 * 1024, partitions=4,
                                   rg_rows=100, run_id="drv" + name,
-                                  range_partition=ranged,
-                                  rg_bloom=None if ranged else 0.01)
+                                  range_partition=ranged)
         path = str(tmp_path_factory.mktemp(name) / "stripes")
         engine.encode_df(df, cfg).write.parquet(path)
         out[name] = spark.read.parquet(path)
@@ -205,6 +204,33 @@ def test_legacy_blooms_on_the_driver(spark, tables, tmp_path):
     rows = _same_as_spark(lambda t, **kw: engine.read_rows(
         t, spec, "conv_id", key, **kw), legacy)
     assert len(rows) == int((pdf["conv_id"] == key).sum()) > 0
+
+
+def test_legacy_group_blooms_on_the_driver(spark, tables, tmp_path):
+    """Group metas that still carry `key_bloom` entries, as earlier
+    writers recorded them, are read by their bounds alone. The entries
+    here have no bit set, so a reader that probed them would keep no
+    group; the driver returns every row of the key, as the Spark decode
+    does."""
+    pdf, spec, st = tables
+    empty = '{"k": 3, "b64": "%s"}' % ("A" * 86 + "==")  # 64 zero bytes
+    path = str(tmp_path / "legacy_groups")
+    st["hash"].withColumn("meta", F.regexp_replace(
+        "meta", r'\{"n_rows": ', '{"key_bloom": %s, "n_rows": ' % empty)
+    ).write.parquet(path)
+    legacy = spark.read.parquet(path)
+    metas = [json.loads(r.meta) for r in legacy.select("meta").collect()]
+    groups = [g for m in metas for g in m["row_groups"]]
+    assert groups and all("key_bloom" in g for g in groups)
+    keys = _keys(pdf)
+    for key in keys[::9]:
+        rows = _same_as_spark(lambda t, **kw: engine.read_rows(
+            t, spec, "conv_id", key, **kw), legacy)
+        assert len(rows) == int((pdf["conv_id"] == key).sum()) > 0
+    batch = [keys[1], keys[30], ABSENT_IN_RANGE]
+    rows = _same_as_spark(lambda t, **kw: engine.read_rows_in(
+        t, spec, "conv_id", batch, **kw), legacy)
+    assert len(rows) == int(pdf["conv_id"].isin(batch).sum()) > 0
 
 
 def test_driver_verifies_stripe_crc(spark, tables, tmp_path):

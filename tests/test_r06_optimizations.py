@@ -209,10 +209,11 @@ def test_spread_noop_when_wide(spark):
 # that getOrCreate() returns and break every later test module
 
 
-def test_static_salt_matches_detection_on_row_index_data(spark):
-    """'auto' resolves to the jobless static bucket salt for integral order
-    columns; stripes must be identical to the detection paths (same mega-
-    key buckets, salt 0 for every key smaller than bucket_rows)."""
+def test_static_salt_matches_detection_on_row_index_data(spark,
+                                                         monkeypatch):
+    """Integral order columns get the jobless static bucket salt; stripes
+    must be identical to the exact detection path's (same mega-key
+    buckets, salt 0 for every key smaller than bucket_rows)."""
     import hashlib
 
     from pyspark.sql import functions as F
@@ -223,13 +224,21 @@ def test_static_salt_matches_detection_on_row_index_data(spark):
                                       mega_conv_turns=3_000).cache()
     df.count()
 
-    def digest(mode):
-        cfg = engine.EncodeConfig(
-            key_col="conv_id", order_cols=("turn_idx",),
-            stripe_bytes=256 * 1024, partitions=4, run_id="x",
-            salt_threshold=2_000, bucket_rows=1_000, salt_detect=mode)
-        rows = engine.encode_df(df, cfg).select(
-            "part_id", "seq", "n_rows", "key_min", "key_max", "blob").collect()
+    def digest(exact: bool):
+        with monkeypatch.context() as m:
+            if exact:
+                # turn_idx taken as non-integral gets the detection
+                # pre-pass, exact below SALT_SAMPLE_BYTES
+                m.setattr(engine, "_INTEGRAL_TYPES", ())
+                m.setattr(engine, "SALT_SAMPLE_BYTES", 1 << 62)
+                assert engine._skew_detection_mode(df) == "exact"
+            cfg = engine.EncodeConfig(
+                key_col="conv_id", order_cols=("turn_idx",),
+                stripe_bytes=256 * 1024, partitions=4, run_id="x",
+                salt_threshold=2_000, bucket_rows=1_000)
+            rows = engine.encode_df(df, cfg).select(
+                "part_id", "seq", "n_rows", "key_min", "key_max",
+                "blob").collect()
         h = hashlib.sha256()
         for r in sorted(rows, key=lambda r: (r["part_id"], r["seq"])):
             h.update(str((r["part_id"], r["seq"], r["n_rows"],
@@ -237,7 +246,7 @@ def test_static_salt_matches_detection_on_row_index_data(spark):
             h.update(bytes(r["blob"]))
         return h.hexdigest()
 
-    assert digest("static") == digest("exact") == digest("auto")
+    assert digest(exact=False) == digest(exact=True)
     df.unpersist()
 
 

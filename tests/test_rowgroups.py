@@ -249,8 +249,8 @@ def test_read_where_multi_column(spark):
 
 def test_string_rowgroup_ranges_prune_and_skip_long_text():
     """SHORT string columns carry per-group [min, max] (ORC RowIndexEntry
-    string stats); long free-text columns are skipped (stats nobody probes,
-    measured ~15% of stripe encode time to compute)."""
+    string stats); long free-text columns are skipped (stats nobody
+    probes)."""
     import pyarrow as pa
 
     from goorc_spark import arrow_stripe
@@ -306,10 +306,129 @@ def test_decimal_key_bounds_compare_numerically():
         got = arrow_stripe.decode_stripe_batch(blob, meta, rg_sel=sel)
         col = got.column("dkey").to_pylist()
         assert probe in col
-    # key range probes go through the same coercion
+    # IN-list probes go through the same coercion
     sel = arrow_stripe.select_row_groups(
-        meta, key_lo=decimal.Decimal("9.00"), key_hi=decimal.Decimal("11.00"))
+        meta, key_values=[decimal.Decimal("9.00"), decimal.Decimal("11.00")])
     assert len(sel) == 1
+
+
+def _sliced_stripe():
+    """A grouped stripe cut the way perfbench's orc_library cuts its
+    table: a slice of a larger transcripts table, so each group's columns
+    are slices of buffers that hold the whole table."""
+    pdf = transcripts.synthesize_pandas(n_convs=600, seed=1)
+    t = pa.Table.from_pandas(pdf, preserve_index=False).slice(0, 6000)
+    blob, meta = arrow_stripe.encode_stripe_table(
+        t, transcripts.TRANSCRIPTS_SPEC, rg_rows=1000, key_col="conv_id",
+        ord_col="turn_idx")
+    return t, blob, json.loads(json.dumps(meta, default=str))
+
+
+def test_short_string_ranges_on_sliced_groups():
+    """Short string columns get group ranges when each group is a slice
+    of a larger table: a slice reports its parent's whole buffers, so
+    the rule reads the values' own bytes. Free text gets none."""
+    _, _, meta = _sliced_stripe()
+    groups = meta["row_groups"]
+    for g in groups:
+        assert {"conv_id", "role", "tool"} <= set(g["ranges"])
+        assert "text" not in g["ranges"]
+    select = arrow_stripe.select_row_groups
+    assert select(meta, col_ranges={"role": ("zz", None)}) == []
+    assert select(meta, col_ranges={"tool": (None, "a")}) == []
+    assert len(select(meta, col_ranges={"role": ("user", "user")})) \
+        == len(groups)
+
+
+def test_key_and_order_ranges_select_like_their_bounds():
+    """col_ranges (what read_where probes) on the key or the order column
+    selects the groups their key/order bounds select."""
+    _, _, meta = _sliced_stripe()
+    n = len(meta["row_groups"])
+    select = arrow_stripe.select_row_groups
+    for lo, hi in ((200, None), (None, 3), (150, 160), (400, None)):
+        want = select(meta, ord_lo=lo, ord_hi=hi)
+        assert select(meta, col_ranges={"turn_idx": (lo, hi)}) == want
+    assert 0 < len(select(meta, ord_lo=200)) < n
+    for key in ("conv-00000040", "conv-00000117", "conv-00000040x"):
+        want = select(meta, key_value=key)
+        assert select(meta, col_ranges={"conv_id": (key, key)}) == want
+        assert 0 < len(want) < n
+
+
+def _legacy_group_bloom(keys, fpp=0.01) -> dict:
+    """A row group's `key_bloom` entry as earlier writers recorded it:
+    murmur3 words over the group's distinct keys, sized for `fpp`."""
+    import base64
+
+    from goorc_spark.codecs import murmur3
+
+    hashes = arrow_stripe._key_hashes(keys)
+    m, k = murmur3.bloom_params(max(len(hashes), 1), fpp)
+    words = murmur3.build_bloom(hashes, k, m)
+    return {"k": k, "b64": base64.b64encode(words.tobytes()).decode()}
+
+
+def test_legacy_group_blooms_are_ignored():
+    """A group meta that still carries `key_bloom` entries selects by its
+    bounds alone: the groups the same meta without them selects, a
+    superset of what its blooms would keep, and every row of the key
+    decodes."""
+    import base64
+
+    import pyarrow.compute as pc
+
+    from goorc_spark.codecs import murmur3
+
+    t, blob, meta = _sliced_stripe()
+    legacy = json.loads(json.dumps(meta))
+    start = 0
+    for g in legacy["row_groups"]:
+        g["key_bloom"] = _legacy_group_bloom(
+            t.column("conv_id").slice(start, g["n_rows"]))
+        start += g["n_rows"]
+    groups = legacy["row_groups"]
+    select = arrow_stripe.select_row_groups
+
+    def bloom_select(key):  # what a reader that probed the blooms kept
+        h = arrow_stripe._key_hash(key)
+        return [i for i in select(meta, key_value=key)
+                if murmur3.might_contain(np.frombuffer(base64.b64decode(
+                    groups[i]["key_bloom"]["b64"]), "<u8"),
+                    groups[i]["key_bloom"]["k"], h)]
+
+    for key in ("conv-00000040", "conv-00000117"):
+        sel = select(legacy, key_value=key)
+        assert sel == select(meta, key_value=key)
+        assert set(bloom_select(key)) <= set(sel)
+        dec = arrow_stripe.decode_stripe_batch(blob, legacy, rg_sel=sel)
+        assert dec.filter(pc.equal(dec["conv_id"], key)).num_rows \
+            == t.filter(pc.equal(t["conv_id"], key)).num_rows > 0
+    # an absent key inside a group's bounds: its bloom dropped the group
+    absent = "conv-00000040x"
+    assert bloom_select(absent) == [] != select(legacy, key_value=absent)
+    keys = ["conv-00000040", "conv-00000117"]
+    assert select(legacy, key_values=keys) == select(meta, key_values=keys)
+
+
+def test_read_where_prunes_stripes_on_the_key(spark, tmp_path):
+    """read_where on a range-partitioned key column: the id pass keeps
+    only the stripes whose groups' key ranges meet the predicate."""
+    from pyspark.sql import functions as F
+    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    cfg = engine.EncodeConfig(key_col="value", order_cols=(),
+                              range_partition=True, partitions=4,
+                              rg_rows=100, run_id="rwk")
+    path = str(tmp_path / "stripes")
+    engine.encode_df(ev, cfg).write.parquet(path)
+    stripes = spark.read.parquet(path)
+    spec = engine.spec_from_schema(ev.schema)
+    m: dict = {}
+    got = engine.read_where(stripes, spec, "value", lo=10.0, hi=30.0,
+                            metrics=m)
+    want = ev.filter((F.col("value") >= 10.0) & (F.col("value") <= 30.0))
+    assert got.count() == want.count() > 0
+    assert 0 < m["stripes_kept"] < stripes.count()
 
 
 def test_read_rows_at_absolute_seek(spark):
@@ -393,48 +512,6 @@ def test_run_stats_decimal_bounds_numeric(spark):
     assert rs["d"]["min_long"] == -21000   # unscaled at scale 2
     assert rs["d"]["max_long"] == 20895
     assert rs["d"]["min_str"] is None
-
-
-def test_rg_bloom_prunes_unsorted_groups():
-    """Per-row-group key blooms (EncodeConfig.rg_bloom / encode_stripe_table
-    rg_bloom=fpp): with an UNSORTED stripe interior every group's
-    [key_min, key_max] spans the key space, so range pruning keeps all
-    groups — the bloom is the only group-level pruner there (sorted
-    encode_df output doesn't need it; its group ranges are narrow). An
-    absent key must select ZERO groups; a present key's selected groups
-    must decode every one of its rows; default (None) leaves meta
-    unchanged."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from goorc_spark import arrow_stripe, transcripts
-
-    pdf = transcripts.synthesize_pandas(n_convs=400, seed=3)
-    table = pa.Table.from_pandas(pdf, preserve_index=False)
-    perm = np.random.default_rng(5).permutation(table.num_rows)
-    table = table.take(pa.array(perm))
-    blob, meta = arrow_stripe.encode_stripe_table(
-        table, transcripts.TRANSCRIPTS_SPEC, rg_rows=1000,
-        key_col="conv_id", ord_col="turn_idx", rg_bloom=0.01)
-    groups = meta["row_groups"]
-    assert all("key_bloom" in g for g in groups)
-    # absent key: provably nowhere, despite every range covering it
-    assert arrow_stripe.select_row_groups(
-        meta, key_value="conv-99999999") == []
-    # present key: conservative superset, decodes all its rows
-    key = table.column("conv_id")[0].as_py()
-    sel = arrow_stripe.select_row_groups(meta, key_value=key)
-    assert sel, "present key must keep groups"
-    dec = arrow_stripe.decode_stripe_batch(blob, meta, rg_sel=sel)
-    got = dec.filter(pc.equal(dec["conv_id"], key)).num_rows
-    want = table.filter(pc.equal(table["conv_id"], key)).num_rows
-    assert got == want
-    # default off: meta bytes carry no bloom entries (wire unchanged)
-    _, meta2 = arrow_stripe.encode_stripe_table(
-        table, transcripts.TRANSCRIPTS_SPEC, rg_rows=1000,
-        key_col="conv_id", ord_col="turn_idx")
-    assert all("key_bloom" not in g for g in meta2["row_groups"])
 
 
 def test_read_rows_in_batch_lookup(spark):

@@ -75,7 +75,7 @@ def _encode_all(stripes, rg_rows) -> list[tuple[bytes, str]]:
     return [(blob, json.dumps(meta, default=str)) for blob, meta in (
         arrow_stripe.encode_stripe_table(
             t, SPEC, cache=cache, rg_rows=rg_rows, key_col="conv_id",
-            ord_col="turn_idx", rg_bloom=0.01 if rg_rows else None)
+            ord_col="turn_idx")
         for t in stripes)]
 
 
