@@ -15,8 +15,6 @@ Layout
                             timestamps, murmur3 blooms, zstd/zlib/lz4 chunk
                             container), with an optional C fast path for
                             the hottest ones (``codecs._native``)
-``goorc_spark.stats``       int/float/bool chunk statistics (meta
-                            diagnostics)
 ``goorc_spark.selector``    codec auto-selection rules
 ``goorc_spark.arrow_stripe`` Arrow-native stripe assembly (the engine's hot
                             path; wire format pinned by golden fixtures in

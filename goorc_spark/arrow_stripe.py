@@ -1,7 +1,6 @@
 """Arrow-native stripe assembly: pyarrow RecordBatch/Table <-> stripe blob.
 
-Same wire format and metadata as stripe.py (the pandas path) — the two
-interoperate — but extraction is zero-copy from Arrow buffers:
+Extraction is zero-copy from Arrow buffers:
 
 - string contents/lengths come straight from the Arrow utf8 layout (the
   reference's DIRECT_V2 layout IS Arrow's: contents + lengths,
@@ -25,7 +24,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from goorc_spark import _fanout, selector, stats as stx
+from goorc_spark import _fanout, selector
 from goorc_spark.codecs import (
     boolrle,
     byterle,
@@ -276,12 +275,14 @@ def encode_stripe_table(
     if grouped:
         cache = {} if cache is None else cache  # force sharing across groups
     spans = []  # (group meta, first stream, end stream)
+    stats = []  # per row group (an ungrouped stripe is one): _group_stats
     with _fanout.Jobs() as jobs:
         sink = _StreamSink(jobs, compression, chunk_size)
         if not grouped:
             body = {"columns": [
                 _write_column(_as_array(table.column(col["name"])), col,
                               sink, policy, cache) for col in spec]}
+            stats.append(_group_stats(table, spec))
         else:
             groups = []
             for start in range(0, n, rg_rows):
@@ -293,14 +294,15 @@ def encode_stripe_table(
                     for col in spec
                 ]
                 if start > 0:
-                    # diagnostics (stats, sub-encoding histograms) live in
-                    # group 0 only — decode never reads them and N groups x
-                    # M columns of repeated stats would dominate the meta
+                    # sub-encoding histograms live in group 0 only — decode
+                    # never reads them and N groups x M columns of them
+                    # would dominate the meta
                     _strip_diagnostics(cols_meta)
                 g: dict = {"n_rows": sub.num_rows, "offset": None,
                            "length": None, "columns": cols_meta}
                 spans.append((g, first, len(sink)))
-                _group_index(g, sub, spec, key_col, ord_col)
+                stats.append(_group_stats(sub, spec))
+                _group_index(g, stats[-1], spec, key_col, ord_col)
                 groups.append(g)
             body = {"row_groups": groups}
         meta = {
@@ -309,7 +311,7 @@ def encode_stripe_table(
             "compression": compression,
             "chunk_size": chunk_size,
             **body,
-            "col_stats": stripe_col_stats(table, spec),
+            "col_stats": stripe_col_stats(table, spec, stats),
         }
         blob = sink.stitch()
     for g, first, end in spans:
@@ -319,36 +321,86 @@ def encode_stripe_table(
     return blob, meta
 
 
-def _group_index(g: dict, sub: pa.Table, spec: list[dict],
+_INT_STAT_KINDS = {"byte", "short", "int", "long"}
+_NESTED_KINDS = {"struct", "list", "map"}
+_I64_MIN, _I64_MAX = -(1 << 63), (1 << 63) - 1
+
+# mean payload bytes per value up to which a string column is "short"
+# (ids, roles, tags) and gets min/max statistics; range predicates don't
+# target free text, whose bounds would only add meta
+_SHORT_STR_BYTES = 32
+
+
+def _group_stats(sub: pa.Table, spec: list[dict]) -> dict:
+    """The one statistics pass over a row group: column name -> n/nulls,
+    and over the non-null values of a scalar column its pc.min_max
+    scalars, the exact integer sum (ints; true count for bools), the
+    payload bytes (string/binary) and whether it holds a NaN
+    (float/double). _group_index and stripe_col_stats derive everything
+    else from these."""
+    out = {}
+    for col in spec:
+        kind = col["kind"]
+        arr = sub.column(col["name"])
+        st: dict = {"n": len(arr) - arr.null_count, "nulls": arr.null_count}
+        out[col["name"]] = st
+        if st["n"] == 0 or kind in _NESTED_KINDS:
+            continue
+        mm = pc.min_max(arr)
+        st["min"], st["max"] = mm["min"], mm["max"]
+        if kind in _INT_STAT_KINDS:
+            st["sum"] = _exact_int_sum(arr, st["n"], mm["min"].as_py(),
+                                       mm["max"].as_py())
+        elif kind == "bool":
+            st["sum"] = int(pc.sum(arr.cast(pa.int64())).as_py())
+        elif kind in ("float", "double"):
+            st["nan"] = pc.any(pc.is_nan(arr)).as_py()
+        elif kind in ("string", "binary"):
+            # the values' own bytes: a slice's buffers are its parent's,
+            # so their size says nothing about the slice
+            st["bytes"] = int(pc.sum(pc.binary_length(arr)).as_py())
+    return out
+
+
+def _short(st: dict) -> bool:
+    """Whether a string/binary column's values average _SHORT_STR_BYTES
+    or less."""
+    return st.get("bytes", 0) <= _SHORT_STR_BYTES * st["n"]
+
+
+def _bounds(st: dict) -> tuple:
+    """A group's [min, max] as Python values; (None, None) when it has no
+    non-null values, or holds a NaN, which sorts above every value in
+    Spark but which pc.min_max skips."""
+    if "min" not in st or st.get("nan"):
+        return None, None
+    return st["min"].as_py(), st["max"].as_py()
+
+
+def _group_index(g: dict, stats: dict, spec: list[dict],
                  key_col: str | None, ord_col: str | None) -> None:
-    """A row group's key/order bounds and value ranges.
+    """A row group's key/order bounds and value ranges, from its
+    _group_stats.
 
     The ranges are the reference's RowIndexEntry statistics
     (pb/orc_proto.proto:92-99), recorded for every orderable column so
     read_where prunes groups on any of them; the key and order columns'
-    ranges reuse their bounds. Strings get ranges only when short
-    (_short_strings), and their bounds are truncated the ORC way (prefix
-    for min; prefix with last char bumped for max) so a bound costs <=64
-    chars of meta per group."""
-    bounds = {}
+    ranges are their bounds. Other strings get ranges only when short,
+    and string bounds are truncated the ORC way (prefix for min; prefix
+    with last char bumped for max) so a bound costs <=64 chars of meta per
+    group. A float group holding a NaN records no range."""
     for label, cname in (("key", key_col), ("ord", ord_col)):
-        if cname is not None and cname in sub.schema.names:
-            mm = pc.min_max(sub.column(cname))
-            bounds[cname] = mm["min"].as_py(), mm["max"].as_py()
-            g[f"{label}_min"], g[f"{label}_max"] = bounds[cname]
+        if cname in stats:
+            g[f"{label}_min"], g[f"{label}_max"] = _bounds(stats[cname])
     rng = {}
     for col in spec:
         name, kind = col["name"], col["kind"]
-        if kind not in _RANGE_KINDS:
+        st = stats[name]
+        if kind not in _RANGE_KINDS or (
+                kind == "string" and name not in (key_col, ord_col)
+                and not _short(st)):
             continue
-        if name in bounds:
-            lo, hi = bounds[name]
-        else:
-            carr = sub.column(name)
-            if kind == "string" and not _short_strings(carr)[1]:
-                continue
-            mm = pc.min_max(carr)
-            lo, hi = mm["min"].as_py(), mm["max"].as_py()
+        lo, hi = _bounds(st)
         if lo is not None:
             if kind == "string":
                 lo = _bound_str(lo, is_max=False)
@@ -358,36 +410,12 @@ def _group_index(g: dict, sub: pa.Table, spec: list[dict],
         g["ranges"] = rng
 
 
-# mean payload bytes per value up to which a string column is "short"
-# (ids, roles, tags) and gets min/max statistics; range predicates don't
-# target free text, whose bounds would only add meta
-_SHORT_STR_BYTES = 32
-
-
-def _short_strings(arr) -> tuple[int, bool]:
-    """(payload bytes, short?) of a string/binary column. Counts the
-    values' own bytes: a slice's buffers are its parent's, so their size
-    says nothing about the slice."""
-    nb = int(pc.sum(pc.binary_length(arr)).as_py() or 0)
-    return nb, nb <= _SHORT_STR_BYTES * (len(arr) - arr.null_count)
-
-
-_INT_STAT_KINDS = {"byte", "short", "int", "long"}
-_I64_MIN, _I64_MAX = -(1 << 63), (1 << 63) - 1
-
-
-def _exact_int_sum(arr, mn: int, mx: int) -> int | None:
-    """Exact integer column sum with overflow detection: pc.sum and np.sum
-    both wrap silently in int64, so a hot column near the bound would
-    report a WRONG sum_long; the reference's footer statistics omit the
-    sum on overflow instead (ADVICE r3) — mirrored here as an explicit
-    None marker (distinct from 'kind has no sum') so the run_stats rollup
-    can drop the whole-run sum when any stripe overflowed. Cheap proof
-    first: when n·max|bound| provably fits, the plain int64 sum is exact;
-    only a stripe that MIGHT overflow pays the 32-bit-limb pass."""
-    n = len(arr) - arr.null_count
-    if n == 0:
-        return 0
+def _exact_int_sum(arr, n: int, mn: int, mx: int) -> int:
+    """Exact sum of an integer column's n non-null values, as a Python
+    int that may leave int64: pc.sum and np.sum both wrap silently in
+    int64. Cheap proof first: when n·max|bound| provably fits, the plain
+    int64 sum is exact; only a column that MIGHT overflow pays the
+    32-bit-limb pass. stripe_col_stats checks the stripe's total."""
     if n * max(abs(mn), abs(mx)) <= _I64_MAX:  # Python ints: proof can't wrap
         return int(pc.sum(arr).as_py())
     a = np.asarray(arr.drop_null().cast(pa.int64()).combine_chunks()
@@ -397,79 +425,80 @@ def _exact_int_sum(arr, mn: int, mx: int) -> int | None:
     # provably exact for any realistic stripe row count (< 2^31 rows)
     lo = int((a & 0xFFFFFFFF).astype(np.uint64).sum())
     hi = int((a >> 32).sum())
-    total = hi * (1 << 32) + lo
-    return total if _I64_MIN <= total <= _I64_MAX else None
+    return hi * (1 << 32) + lo
 
 
-def stripe_col_stats(table: pa.Table, spec: list[dict]) -> dict:
+def _stat_value(col: dict, s: pa.Scalar):
+    """A min/max scalar in col_stats' domain: timestamps as epoch-micros,
+    dates as days, decimals as unscaled integers at the column scale
+    (exact and order-preserving under the rollup's numeric min/max; str()
+    of Decimal is NOT — the same trap _coerce_bound guards)."""
+    kind = col["kind"]
+    if kind in ("timestamp", "timestamp_ntz", "date"):
+        return int(s.value)
+    if kind == "decimal":
+        # wide context: default scaleb ROUNDS at 28 significant digits,
+        # silently corrupting 38-digit bounds
+        return int(s.as_py().scaleb(int(col.get("scale", 0)),
+                                    _decimal.Context(prec=60)))
+    return s.as_py()
+
+
+def stripe_col_stats(table: pa.Table, spec: list[dict],
+                     groups: list[dict]) -> dict:
     """Whole-stripe per-column statistics — the engine's analog of the
     reference's file-footer ColumnStatistics rollup
-    (/root/reference/orc/writer.go:140-177): n/nulls always; typed min/max
-    for orderable scalars (timestamps as epoch-micros, dates as days,
-    decimals as strings); sum for integer kinds (bool: true-count); byte
-    totals for string/binary. String min/max is recorded only for short
-    columns (_short_strings: ids, roles, tags), the same rule as the
-    row-group ranges, so `engine.run_stats` surfaces a string bound only
-    when EVERY stripe recorded one. Nested kinds carry n/nulls only."""
+    (/root/reference/orc/writer.go:140-177), merged from the row groups'
+    _group_stats: n/nulls always; typed min/max for orderable scalars
+    (_stat_value); sum for integer kinds (None when the exact total
+    leaves int64, which the run_stats rollup reads as overflow; bool:
+    true-count); byte totals for string/binary. Decimals above precision
+    18 exceed int64 unscaled, so their bounds go to the wide
+    min_dec/max_dec slots (Python big ints in the JSON; the rollup carries
+    them as decimal(38,0)). String min/max is recorded only when the
+    stripe's strings are short, so `engine.run_stats` surfaces a string
+    bound only when EVERY stripe recorded one. Float min/max/sum are one
+    pyarrow pass over the stripe column: the order values are visited in
+    decides a sum's last bits and which of ±0.0 a tie returns. Nested
+    kinds carry n/nulls only."""
     out: dict = {}
     for col in spec:
-        arr = table.column(col["name"])
-        kind = col["kind"]
-        n_all = len(arr)
-        nulls = arr.null_count
-        st: dict = {"n": n_all - nulls, "nulls": nulls}
-        out[col["name"]] = st
-        if n_all == nulls:
+        name, kind = col["name"], col["kind"]
+        parts = [g[name] for g in groups]
+        st: dict = {"n": sum(p["n"] for p in parts),
+                    "nulls": sum(p["nulls"] for p in parts)}
+        out[name] = st
+        if st["n"] == 0 or kind in _NESTED_KINDS:
             continue
-        if kind in _INT_STAT_KINDS:
-            mm = pc.min_max(arr)
-            st["min"] = mm["min"].as_py()
-            st["max"] = mm["max"].as_py()
-            st["sum"] = _exact_int_sum(arr, st["min"], st["max"])
-        elif kind == "bool":
-            st["sum"] = int(pc.sum(arr.cast(pa.int64())).as_py())
-        elif kind in ("float", "double"):
+        if kind in ("float", "double"):
+            arr = table.column(name)
             mm = pc.min_max(arr)
             st["min"] = float(mm["min"].as_py())
             st["max"] = float(mm["max"].as_py())
             st["sum"] = float(pc.sum(arr).as_py())
-        elif kind in ("timestamp", "timestamp_ntz", "date"):
-            mm = pc.min_max(arr)
-            st["min"] = int(mm["min"].value)
-            st["max"] = int(mm["max"].value)
-        elif kind == "decimal":
-            # bounds as UNSCALED integers at the column scale: exact and
-            # order-preserving under the rollup's numeric min/max (str()
-            # of Decimal is NOT — the same trap _coerce_bound guards).
-            # precision > 18 exceeds int64 unscaled: bounds go to the
-            # wide min_dec/max_dec slots (Python big ints in the JSON;
-            # the rollup carries them as decimal(38,0)) — VERDICT r3 #10.
-            mm = pc.min_max(arr)
-            sc = int(col.get("scale", 0))
-            # wide context: default scaleb ROUNDS at 28 significant digits,
-            # silently corrupting 38-digit bounds
-            wide = _decimal.Context(prec=60)
-            lo = int(mm["min"].as_py().scaleb(sc, wide))
-            hi = int(mm["max"].as_py().scaleb(sc, wide))
-            if int(col.get("precision", 38)) <= 18:
-                st["min"], st["max"] = lo, hi
-            else:
+            continue
+        if kind in ("string", "binary"):
+            st["bytes"] = sum(p.get("bytes", 0) for p in parts)
+            if not _short(st):
+                continue
+        if kind != "bool":
+            live = [p for p in parts if p["n"]]
+            lo = min(_stat_value(col, p["min"]) for p in live)
+            hi = max(_stat_value(col, p["max"]) for p in live)
+            if kind == "binary":
+                lo, hi = lo.hex(), hi.hex()
+            if kind == "decimal" and int(col.get("precision", 38)) > 18:
                 st["min_dec"], st["max_dec"] = lo, hi
-        elif kind in ("string", "binary"):
-            st["bytes"], short = _short_strings(arr)
-            if short:
-                mm = pc.min_max(arr)
-                lo, hi = mm["min"].as_py(), mm["max"].as_py()
-                if kind == "binary":
-                    lo, hi = lo.hex(), hi.hex()
-                st["min"] = lo
-                st["max"] = hi
+            else:
+                st["min"], st["max"] = lo, hi
+        if kind in _INT_STAT_KINDS or kind == "bool":
+            total = sum(p.get("sum", 0) for p in parts)
+            st["sum"] = total if _I64_MIN <= total <= _I64_MAX else None
     return out
 
 
 def _strip_diagnostics(cols_meta: list[dict]) -> None:
     for c in cols_meta:
-        c.pop("stats", None)
         c.pop("sub_encodings", None)
         if "children" in c:
             _strip_diagnostics(c["children"])
@@ -647,24 +676,20 @@ def _encode_column_arrow(vals: pa.Array, col: dict, policy: str,
         else:
             v = _np_int64(vals)
         data = rlev2.encode(v, signed=True, info=info)
-        return [("DATA", data)], {"codec": "rlev2", "sub_encodings": info,
-                                  "stats": stx.int_stats(v)}
+        return [("DATA", data)], {"codec": "rlev2", "sub_encodings": info}
     if kind == "byte":
         v = _np_int64(vals)
         return [("DATA", byterle.encode(v.astype(np.uint8)))], \
-            {"codec": "byte_rle", "stats": stx.int_stats(v)}
+            {"codec": "byte_rle"}
     if kind == "bool":
         v = np.asarray(vals, dtype=bool) if len(vals) else np.empty(0, bool)
-        return [("DATA", boolrle.encode(v))], {"codec": "bool_rle",
-                                               "stats": stx.bool_stats(v)}
+        return [("DATA", boolrle.encode(v))], {"codec": "bool_rle"}
     if kind == "float":
         v = np.asarray(vals, dtype=np.float32)
-        return [("DATA", floats.encode_f32(v))], {"codec": "raw_f32",
-                                                  "stats": stx.float_stats(v)}
+        return [("DATA", floats.encode_f32(v))], {"codec": "raw_f32"}
     if kind == "double":
         v = np.asarray(vals, dtype=np.float64)
-        return [("DATA", floats.encode_f64(v))], {"codec": "raw_f64",
-                                                  "stats": stx.float_stats(v)}
+        return [("DATA", floats.encode_f64(v))], {"codec": "raw_f64"}
     if kind in ("timestamp", "timestamp_ntz"):
         us = _np_int64(vals)
         sec, nanos = timestamps.micros_to_sec_nanos(us)
@@ -674,9 +699,6 @@ def _encode_column_arrow(vals: pa.Array, col: dict, policy: str,
         return [("DATA", d), ("SECONDARY", s)], {
             "codec": "rlev2",
             "sub_encodings": {"seconds": info, "nanos": info2},
-            "stats": {"count": int(len(us)),
-                      "min_us": int(us.min()) if len(us) else None,
-                      "max_us": int(us.max()) if len(us) else None},
         }
     if kind == "decimal":
         scale = int(col.get("scale", 0))
@@ -692,7 +714,6 @@ def _encode_column_arrow(vals: pa.Array, col: dict, policy: str,
                 "codec": "varint_decimal",
                 "precision": precision,
                 "scale": scale,
-                "stats": stx.int_stats(mant64) | {"scale": scale},
             }
         # decimal128 (beyond the reference's 64-bit ceiling): two RLEv2
         # limb streams — hi signed, lo unsigned
@@ -702,15 +723,13 @@ def _encode_column_arrow(vals: pa.Array, col: dict, policy: str,
             "codec": "rlev2_decimal128",
             "precision": precision,
             "scale": scale,
-            "stats": {"count": int(len(lo)), "scale": scale},
         }
     if kind == "binary":
         contents, lengths = _varwidth_parts(vals)
         return [
             ("LENGTH", rlev2.encode(lengths, signed=False, info=info)),
             ("DATA", contents.tobytes()),
-        ], {"codec": "raw", "stats": {"count": len(vals),
-                                      "total_len": int(lengths.sum()) if len(vals) else 0}}
+        ], {"codec": "raw"}
     if kind == "string":
         return _encode_string_arrow(vals, policy, cache, col["name"])
     raise NotImplementedError(f"column kind {kind!r}")
@@ -718,24 +737,11 @@ def _encode_column_arrow(vals: pa.Array, col: dict, policy: str,
 
 def _string_stats_arrow(vals: pa.Array, lengths: np.ndarray,
                         dict_arr: pa.DictionaryArray) -> dict:
+    """What _select_codec_arrow reads of a non-empty string column."""
     n = len(vals)
-    if n == 0:
-        return {"count": 0, "distinct": 0, "distinct_ratio": 0.0, "avg_len": 0.0}
-    mm = pc.min_max(vals)
-    mn, mx = str(mm["min"].as_py()), str(mm["max"].as_py())
     distinct = len(dict_arr.dictionary)
-    return {
-        "count": int(n),
-        "distinct": distinct,
-        "distinct_ratio": distinct / n,
-        "avg_len": float(lengths.mean()) if n else 0.0,
-        "max_len": int(lengths.max()) if n else 0,
-        "total_len": int(lengths.sum()),
-        "min": mn[:stx.MAX_STAT_STR],
-        "max": mx[:stx.MAX_STAT_STR],
-        "lower_bound_truncated": len(mn) > stx.MAX_STAT_STR,
-        "upper_bound_truncated": len(mx) > stx.MAX_STAT_STR,
-    }
+    return {"count": n, "distinct": distinct, "distinct_ratio": distinct / n,
+            "avg_len": float(lengths.mean())}
 
 
 def _encode_string_arrow(vals: pa.Array, policy: str,
@@ -744,27 +750,15 @@ def _encode_string_arrow(vals: pa.Array, policy: str,
     if len(vals) == 0:
         empty = np.empty(0, np.uint64)
         return [("LENGTH", rlev2.encode(empty, signed=False, info=info)),
-                ("DATA", b"")], {
-            "codec": "raw", "sub_encodings": info,
-            "stats": {"count": 0, "distinct": 0, "distinct_ratio": 0.0,
-                      "avg_len": 0.0}}
+                ("DATA", b"")], {"codec": "raw", "sub_encodings": info}
     contents, lengths = _varwidth_parts(vals)
     ckey = ("codec", colname)
     cached = cache.get(ckey) if cache is not None else None
     if cached is not None and cached != "dict":
-        # cache hit on a non-dict codec: the C++ dictionary build and the
-        # full min/max stats existed only to feed the selector (already
-        # decided) and the diagnostics (kept for row group 0 of the first
-        # stripe; stripped everywhere else) — skipping them saves ~10 ms
-        # per row group on free text. Stream bytes are unchanged.
+        # cache hit on a non-dict codec: the C++ dictionary build existed
+        # only to feed the selector, which already decided — skipping it
+        # saves ~10 ms per row group on free text
         codec = cached
-        st = {
-            "count": int(len(vals)),
-            "avg_len": float(lengths.mean()),
-            "max_len": int(lengths.max()),
-            "total_len": int(lengths.sum()),
-            "stats_elided_cached_codec": True,
-        }
     else:
         dict_arr = _as_array(pc.dictionary_encode(vals))
         st = _string_stats_arrow(vals, lengths, dict_arr)
@@ -791,7 +785,7 @@ def _encode_string_arrow(vals: pa.Array, policy: str,
             ("DICT_DATA", dcontents.tobytes()),
         ]
         return streams, {"codec": "dict", "dict_size": len(sorted_dict),
-                         "sub_encodings": info, "stats": st}
+                         "sub_encodings": info}
     if codec == "fsst":
         table = None
         if cache is not None:
@@ -811,7 +805,7 @@ def _encode_string_arrow(vals: pa.Array, policy: str,
         ("LENGTH", rlev2.encode(lengths, signed=False, info=info)),
         ("DATA", data),
     ]
-    return streams, {"codec": codec, "sub_encodings": info, "stats": st}
+    return streams, {"codec": codec, "sub_encodings": info}
 
 
 def _select_codec_arrow(contents: np.ndarray, st: dict, policy: str) -> str:

@@ -928,7 +928,7 @@ def run_stats(stripes: DataFrame) -> DataFrame:
                     rows["max_long"].append(mx if is_int else None)
                     rows["sum_long"].append(sm if isinstance(sm, int) else None)
                     # explicit None marker = the stripe's exact sum overflowed
-                    # int64 (arrow_stripe._exact_int_sum); the whole-run sum
+                    # int64 (arrow_stripe.stripe_col_stats); the whole-run sum
                     # must then be omitted, not summed over the survivors
                     rows["sum_overflow"].append(
                         1 if ("sum" in st and sm is None) else 0)

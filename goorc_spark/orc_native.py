@@ -1650,7 +1650,7 @@ def _segment_stats(vals: pa.Array, kind: int, cuts: np.ndarray,
     cuts[g]:cuts[g + 1], whose non-null values are
     vals[vcuts[g]:vcuts[g + 1]]. Sums that could be inexact are OMITTED,
     matching the reference's overflow semantics: an int sum that leaves int64 is None (the rule of
-    arrow_stripe._exact_int_sum), decimal sums are skipped, and a segment
+    arrow_stripe.stripe_col_stats), decimal sums are skipped, and a segment
     holding a NaN skips its float min/max/sum. Float and string bounds
     and float sums come from pyarrow on each segment's slice: numpy's
     reductions order signed zeros and round sums differently."""

@@ -14,6 +14,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from goorc_spark import allkinds, engine, transcripts  # noqa: E402
 from jobs import compact_stripes as compact_cli  # noqa: E402
 from jobs import encode_transcripts as encode_cli  # noqa: E402
+from tools import stripe_meta  # noqa: E402
 
 
 def test_spec_from_stripes_every_kind(spark):
@@ -59,3 +60,24 @@ def test_encode_then_compact_cli(spark, capsys):
         assert engine.decode_df(out, spec).count() == enc_metrics["rows"]
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def test_stripe_meta_tool_on_grouped_stripes(spark, tmp_path, capsys):
+    """tools/stripe_meta.py --stripe and --columns on row-grouped stripes,
+    whose column metas live in their groups (group 0's are read)."""
+    path = str(tmp_path / "stripes")
+    cfg = engine.EncodeConfig(key_col="conv_id", order_cols=("turn_idx",),
+                              partitions=2, rg_rows=100, run_id="smeta")
+    engine.encode_df(transcripts.synthesize_spark(spark, n_convs=30),
+                     cfg).write.parquet(path)
+    rows = spark.read.parquet(path).select("stripe_id", "meta").collect()
+    assert len(rows) == 2
+    assert all("row_groups" in json.loads(r["meta"]) for r in rows)
+    capsys.readouterr()
+    assert stripe_meta.main([path, "--columns"]) == 0
+    out = capsys.readouterr().out
+    for name in ("conv_id", "turn_idx", "role", "text", "tool", "ts"):
+        assert f"\n{name} " in "\n" + out, name
+    assert stripe_meta.main([path, "--stripe", rows[0]["stripe_id"]]) == 0
+    out = capsys.readouterr().out
+    assert "column conv_id (string)" in out and "row groups:" in out

@@ -431,6 +431,31 @@ def test_read_where_prunes_stripes_on_the_key(spark, tmp_path):
     assert 0 < m["stripes_kept"] < stripes.count()
 
 
+def test_read_where_keeps_nan_rows(spark, tmp_path):
+    """Spark's >= keeps NaN rows (NaN sorts above every value), while
+    pc.min_max skips NaN: a float group holding a NaN records no range,
+    so read_where keeps it, on a bare scan and on a cached frame."""
+    from pyspark.sql import functions as F
+    df = spark.range(1000).select(
+        F.col("id").alias("i"),
+        F.when(F.col("id") % 50 == 0, F.lit(float("nan")))
+        .otherwise((F.col("id") % 5).cast("double")).alias("f"))
+    assert df.filter(F.col("f") >= 5.0).count() == 20
+    cfg = engine.EncodeConfig(key_col="i", partitions=2, rg_rows=100,
+                              run_id="nanrw")
+    path = str(tmp_path / "stripes")
+    engine.encode_df(df, cfg).write.parquet(path)
+    spec = engine.spec_from_schema(df.schema)
+    bare = spark.read.parquet(path)
+    cached = spark.read.parquet(path).cache()
+    try:
+        for stripes in (bare, cached):
+            got = engine.read_where(stripes, spec, col="f", lo=5.0)
+            assert got.count() == 20
+    finally:
+        cached.unpersist()
+
+
 def test_read_rows_at_absolute_seek(spark):
     """reference Seek(rowNumber) parity (orc/reader.go:199-212): global
     slice [lo, hi) over range-partitioned order-sorted stripes equals the

@@ -57,9 +57,9 @@ def test_long_column():  # column_test.go:25-110
     pdf = pd.DataFrame({"x": np.arange(1000, dtype=np.int64)})
     dec, meta, _ = rt(pdf, [{"name": "x", "kind": "long"}])
     np.testing.assert_array_equal(dec["x"].to_numpy(dtype=np.int64), pdf["x"])
-    assert meta["columns"][0]["stats"]["min"] == 0
-    assert meta["columns"][0]["stats"]["max"] == 999
-    assert meta["columns"][0]["stats"]["sum"] == 499500
+    assert meta["col_stats"]["x"]["min"] == 0
+    assert meta["col_stats"]["x"]["max"] == 999
+    assert meta["col_stats"]["x"]["sum"] == 499500
 
 
 def test_long_with_nulls():  # column_test.go:112-170
@@ -211,6 +211,143 @@ def test_stats_recorded():
     t = pa.Table.from_pandas(pdf, preserve_index=False)
     blob, meta = arrow_stripe.encode_stripe_table(
         t, [{"name": "x", "kind": "long"}])
-    st = meta["columns"][0]["stats"]
-    assert (st["min"], st["max"], st["sum"], st["count"]) == (1, 9, 24, 4)
+    st = meta["col_stats"]["x"]
+    assert (st["min"], st["max"], st["sum"], st["n"]) == (1, 9, 24, 4)
     assert meta["columns"][0]["null_count"] == 1
+
+
+def _edge_table():
+    """400 rows, row groups of 100: nulls; NaN, with an all-NaN third
+    group; ±0.0 ties; int group sums that leave int64 while the stripe's
+    comes back (`i`) or does not (`big`); both decimal widths; tz and ntz
+    timestamps; short binary; a string column that is short over the
+    stripe but long in its third group (`s`); an all-null and a list
+    column."""
+    n = 400
+    rng = np.random.default_rng(7)
+    idx = np.arange(n)
+    k = idx.tolist()
+    null = idx % 13 == 5
+    i = np.where(idx < 100, (1 << 62) + idx,
+                 np.where(idx < 200, -(1 << 62) - idx, idx))
+    f = rng.normal(size=n)
+    f[[10, 60, 110, 160]] = np.nan
+    f[200:300] = np.nan
+    f[[3, 7, 120]] = -0.0
+    f[[5, 9, 121]] = 0.0
+    s = [("x" * 40 + str(v)) if 200 <= v < 300 else chr(97 + v % 26)
+         for v in k]
+    wide = decimal.Context(prec=60)
+    t0 = datetime.datetime(2024, 1, 1)
+    table = pa.table({
+        "key": pa.array([f"k{v // 30:04d}" for v in k]),
+        "ord": pa.array(idx.astype(np.int32)),
+        "i": pa.array(i, pa.int64(), mask=null),
+        "big": pa.array(np.full(n, 1 << 62), pa.int64()),
+        "b": pa.array((idx % 200 - 100).astype(np.int8), mask=null),
+        "sh": pa.array((idx * 7 % 1000).astype(np.int16)),
+        "f": pa.array(f, pa.float64(), mask=null),
+        "z": pa.array(rng.choice([0.0, -0.0], n), pa.float64(), mask=null),
+        "f32": pa.array(rng.choice([0.0, -0.0, 1.5, -2.5], n)
+                        .astype(np.float32), mask=idx % 11 == 0),
+        "flag": pa.array(idx % 3 == 0, mask=null),
+        "d": pa.array([datetime.date(2020, 1, 1) + datetime.timedelta(v)
+                       for v in k], pa.date32(), mask=null),
+        "dec_s": pa.array([decimal.Decimal(v * 37 - 5000).scaleb(-2)
+                           for v in k], pa.decimal128(10, 2), mask=null),
+        "dec_w": pa.array([decimal.Decimal(10**28 * (v - 200) + v)
+                           .scaleb(-6, wide) for v in k],
+                          pa.decimal128(38, 6)),
+        "ts": pa.array([t0 + datetime.timedelta(seconds=v * 3601,
+                                                microseconds=v)
+                        for v in k], pa.timestamp("us", tz="UTC"),
+                       mask=null),
+        "ntz": pa.array([t0 - datetime.timedelta(minutes=v * 7) for v in k],
+                        pa.timestamp("us")),
+        "bin": pa.array([bytes([v % 256, 7]) for v in k], pa.binary(),
+                        mask=null),
+        "s": pa.array(s, pa.string(), mask=null),
+        "nul": pa.array([None] * n, pa.int64()),
+        "lst": pa.array([[v] * (v % 3) if v % 5 else None for v in k],
+                        pa.list_(pa.int64())),
+    })
+    spec = [{"name": "key", "kind": "string"}, {"name": "ord", "kind": "int"},
+            {"name": "i", "kind": "long"}, {"name": "big", "kind": "long"},
+            {"name": "b", "kind": "byte"}, {"name": "sh", "kind": "short"},
+            {"name": "f", "kind": "double"}, {"name": "z", "kind": "double"},
+            {"name": "f32", "kind": "float"}, {"name": "flag", "kind": "bool"},
+            {"name": "d", "kind": "date"},
+            {"name": "dec_s", "kind": "decimal", "precision": 10, "scale": 2},
+            {"name": "dec_w", "kind": "decimal", "precision": 38, "scale": 6},
+            {"name": "ts", "kind": "timestamp"},
+            {"name": "ntz", "kind": "timestamp_ntz"},
+            {"name": "bin", "kind": "binary"}, {"name": "s", "kind": "string"},
+            {"name": "nul", "kind": "long"},
+            {"name": "lst", "kind": "list",
+             "child": {"name": "item", "kind": "long"}}]
+    return table, spec
+
+
+def _whole_column_stats(arr, col) -> dict:
+    """col_stats of one column from pyarrow reductions over all of it."""
+    import pyarrow.compute as pc
+    kind = col["kind"]
+    n = len(arr) - arr.null_count
+    st = {"n": n, "nulls": arr.null_count}
+    if n == 0 or kind == "list":
+        return st
+    mm = pc.min_max(arr)
+    lo, hi = mm["min"].as_py(), mm["max"].as_py()
+    if kind in ("byte", "short", "int", "long"):
+        total = sum(arr.drop_null().to_pylist())
+        st.update(min=lo, max=hi,
+                  sum=total if -(1 << 63) <= total < (1 << 63) else None)
+    elif kind == "bool":
+        st["sum"] = pc.sum(arr.cast(pa.int64())).as_py()
+    elif kind in ("float", "double"):
+        st.update(min=lo, max=hi, sum=pc.sum(arr).as_py())
+    elif kind in ("date", "timestamp", "timestamp_ntz"):
+        st.update(min=mm["min"].value, max=mm["max"].value)
+    elif kind == "decimal":
+        wide = decimal.Context(prec=60)
+        lo, hi = (int(v.scaleb(col["scale"], wide)) for v in (lo, hi))
+        if col["precision"] <= 18:
+            st.update(min=lo, max=hi)
+        else:
+            st.update(min_dec=lo, max_dec=hi)
+    else:
+        st["bytes"] = pc.sum(pc.binary_length(arr)).as_py()
+        if st["bytes"] <= 32 * n:
+            if kind == "binary":
+                lo, hi = lo.hex(), hi.hex()
+            st.update(min=lo, max=hi)
+    return st
+
+
+def test_col_stats_equal_whole_column_reductions():
+    """The stripe's col_stats, rolled up from its row groups' statistics,
+    equal pyarrow reductions over each whole column, as JSON (so the sign
+    of a zero and NaN count), grouped or not; and no column meta carries
+    per-group statistics."""
+    table, spec = _edge_table()
+    grouped = arrow_stripe.encode_stripe_table(
+        table, spec, rg_rows=100, key_col="key", ord_col="ord")[1]
+    flat = arrow_stripe.encode_stripe_table(table, spec)[1]
+    groups = grouped["row_groups"]
+    assert len(groups) == 4
+    for meta in (grouped, flat):
+        for col in spec:
+            got = meta["col_stats"][col["name"]]
+            want = _whole_column_stats(table.column(col["name"]), col)
+            assert json.dumps(got, sort_keys=True) == \
+                json.dumps(want, sort_keys=True), col["name"]
+    assert grouped["col_stats"]["i"]["sum"] is not None
+    assert grouped["col_stats"]["big"]["sum"] is None
+    # `s` is long in group 2 only: no range there, bounds over the stripe
+    assert [("s" in g["ranges"]) for g in groups] == [True, True, False, True]
+    assert grouped["col_stats"]["s"]["min"] == "a"
+    # every group but the last holds a NaN in `f`
+    assert [("f" in g["ranges"]) for g in groups] == [False, False, False,
+                                                      True]
+    for cols in [flat["columns"]] + [g["columns"] for g in groups]:
+        assert not any("stats" in c for c in cols)

@@ -35,7 +35,7 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("stripes", help="stripe table: parquet dir or catalog table")
     p.add_argument("--stripe", help="dump one stripe's full meta (streams, "
-                                    "row groups, stats)")
+                                    "row groups)")
     p.add_argument("--columns", action="store_true",
                    help="aggregate codec choices per column across stripes")
     args = p.parse_args(argv)
@@ -66,7 +66,9 @@ def main(argv=None) -> int:
               f"({r['raw_bytes'] / max(r['enc_bytes'], 1):.2f}x), "
               f"compression={meta.get('compression')}, "
               f"crc32={meta.get('crc32')}")
-        for c in meta["columns"]:
+        # a row-grouped stripe keeps its column metas per group; group 0
+        # holds the sub-encoding histograms
+        for c in meta.get("columns") or meta["row_groups"][0]["columns"]:
             subs = ",".join(f"{k}:{v}" for k, v in
                             (c.get("sub_encodings") or {}).items())
             print(f"  column {c['name']} ({c['kind']}): codec={c.get('codec', '-')}"
@@ -92,7 +94,9 @@ def main(argv=None) -> int:
             for rb in batches:
                 names, kinds, codecs = [], [], []
                 for meta_json in rb.column("meta").to_pylist():
-                    for c in json.loads(meta_json)["columns"]:
+                    meta = json.loads(meta_json)
+                    for c in (meta.get("columns")
+                              or meta["row_groups"][0]["columns"]):
                         names.append(c["name"])
                         kinds.append(c["kind"])
                         codecs.append(c.get("codec") or
