@@ -18,6 +18,7 @@ decimal is the one object-typed fallback.
 from __future__ import annotations
 
 import decimal as _decimal
+import math
 import zlib
 
 import numpy as np
@@ -91,7 +92,11 @@ def _bound_str(s: str, is_max: bool) -> str:
 
 
 def _as_array(x) -> pa.Array:
-    return x.combine_chunks() if isinstance(x, pa.ChunkedArray) else x
+    """x as one Array: a ChunkedArray's only chunk as it is (combine_chunks
+    copies even a single chunk), more chunks combined."""
+    if not isinstance(x, pa.ChunkedArray):
+        return x
+    return x.chunk(0) if x.num_chunks == 1 else x.combine_chunks()
 
 
 def _valid_mask(arr: pa.Array) -> np.ndarray | None:
@@ -115,19 +120,23 @@ def _list_parts(vals: pa.Array) -> tuple[np.ndarray, list[pa.Array]]:
         [p.slice(lo, hi - lo) for p in physical]
 
 
+def _offsets(arr: pa.Array) -> np.ndarray:
+    """The len(arr) + 1 offsets of a non-empty string/binary array (either
+    offset width) — zero-copy from its Arrow buffer."""
+    odt = np.int32 if pa.types.is_string(arr.type) or \
+        pa.types.is_binary(arr.type) else np.int64
+    return np.frombuffer(arr.buffers()[1], dtype=odt, count=len(arr) + 1,
+                         offset=np.dtype(odt).itemsize * arr.offset)
+
+
 def _varwidth_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     """(contents uint8, lengths) from a string/binary array (either offset
     width) with no nulls — zero-copy from the Arrow buffers."""
     if len(arr) == 0:
         return np.empty(0, np.uint8), np.empty(0, np.uint64)
-    if pa.types.is_string(arr.type) or pa.types.is_binary(arr.type):
-        odt, osz = np.int32, 4
-    else:
-        odt, osz = np.int64, 8
-    bufs = arr.buffers()
-    offsets = np.frombuffer(bufs[1], dtype=odt,
-                            count=len(arr) + 1, offset=osz * arr.offset)
-    data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None \
+    offsets = _offsets(arr)
+    buf = arr.buffers()[2]
+    data = np.frombuffer(buf, dtype=np.uint8) if buf is not None \
         else np.empty(0, np.uint8)
     lengths = np.diff(offsets.astype(np.int64))
     return data[offsets[0]:offsets[-1]], lengths.astype(np.uint64)
@@ -274,37 +283,42 @@ def encode_stripe_table(
     grouped = bool(rg_rows) and n > rg_rows
     if grouped:
         cache = {} if cache is None else cache  # force sharing across groups
+    cuts = np.append(np.arange(0, n, rg_rows) if grouped else [0], n)
+    arrays = [_as_array(table.column(col["name"])) for col in spec]
     spans = []  # (group meta, first stream, end stream)
-    stats = []  # per row group (an ungrouped stripe is one): _group_stats
     with _fanout.Jobs() as jobs:
         sink = _StreamSink(jobs, compression, chunk_size)
         if not grouped:
             body = {"columns": [
-                _write_column(_as_array(table.column(col["name"])), col,
-                              sink, policy, cache) for col in spec]}
-            stats.append(_group_stats(table, spec))
+                _write_column(arr, col, sink, policy, cache)
+                for col, arr in zip(spec, arrays)]}
         else:
             groups = []
-            for start in range(0, n, rg_rows):
-                sub = table.slice(start, min(rg_rows, n - start))
+            for start, end in zip(cuts[:-1].tolist(), cuts[1:].tolist()):
                 first = len(sink)
                 cols_meta = [
-                    _write_column(_as_array(sub.column(col["name"])), col,
-                                  sink, policy, cache)
-                    for col in spec
+                    _write_column(arr.slice(start, end - start), col, sink,
+                                  policy, cache)
+                    for col, arr in zip(spec, arrays)
                 ]
                 if start > 0:
                     # sub-encoding histograms live in group 0 only — decode
                     # never reads them and N groups x M columns of them
                     # would dominate the meta
                     _strip_diagnostics(cols_meta)
-                g: dict = {"n_rows": sub.num_rows, "offset": None,
+                g: dict = {"n_rows": end - start, "offset": None,
                            "length": None, "columns": cols_meta}
                 spans.append((g, first, len(sink)))
-                stats.append(_group_stats(sub, spec))
-                _group_index(g, stats[-1], spec, key_col, ord_col)
                 groups.append(g)
             body = {"row_groups": groups}
+        # the one statistics pass, while the pool compresses: each column
+        # over every row group (an ungrouped stripe is one)
+        per_col = [segment_stats(arr, cuts) for arr in arrays]
+        stats = [{col["name"]: segs[i] for col, segs in zip(spec, per_col)}
+                 for i in range(len(cuts) - 1)]
+        if grouped:
+            for g, st in zip(groups, stats):
+                _group_index(g, st, spec, table.schema, key_col, ord_col)
         meta = {
             "version": FORMAT_VERSION,
             "n_rows": n,
@@ -331,34 +345,91 @@ _I64_MIN, _I64_MAX = -(1 << 63), (1 << 63) - 1
 _SHORT_STR_BYTES = 32
 
 
-def _group_stats(sub: pa.Table, spec: list[dict]) -> dict:
-    """The one statistics pass over a row group: column name -> n/nulls,
-    and over the non-null values of a scalar column its pc.min_max
-    scalars, the exact integer sum (ints; true count for bools), the
-    payload bytes (string/binary) and whether it holds a NaN
-    (float/double). _group_index and stripe_col_stats derive everything
-    else from these."""
-    out = {}
-    for col in spec:
-        kind = col["kind"]
-        arr = sub.column(col["name"])
-        st: dict = {"n": len(arr) - arr.null_count, "nulls": arr.null_count}
-        out[col["name"]] = st
-        if st["n"] == 0 or kind in _NESTED_KINDS:
-            continue
-        mm = pc.min_max(arr)
-        st["min"], st["max"] = mm["min"], mm["max"]
-        if kind in _INT_STAT_KINDS:
-            st["sum"] = _exact_int_sum(arr, st["n"], mm["min"].as_py(),
-                                       mm["max"].as_py())
-        elif kind == "bool":
-            st["sum"] = int(pc.sum(arr.cast(pa.int64())).as_py())
-        elif kind in ("float", "double"):
-            st["nan"] = pc.any(pc.is_nan(arr)).as_py()
-        elif kind in ("string", "binary"):
-            # the values' own bytes: a slice's buffers are its parent's,
-            # so their size says nothing about the slice
-            st["bytes"] = int(pc.sum(pc.binary_length(arr)).as_py())
+def segment_stats(arr: pa.Array, cuts: np.ndarray) -> list[dict]:
+    """The statistics kernel of both writers: one column's statistics over
+    each segment of its rows cuts[g]:cuts[g + 1] (the stripe writer's row
+    groups, the ORC writer's index strides). Every segment gets n (its
+    non-null values) and nulls. A segment of a scalar column that holds
+    values also gets, over them:
+    - min/max as Python values, dates and timestamps as their integer
+      storage; floats over the non-NaN values (None when all are NaN);
+    - sum: the exact integer sum as a Python int, which may leave int64
+      (bools: the true count), or the float sum;
+    - nan (floats): whether a value is NaN;
+    - bytes (string/binary): the payload bytes.
+    Ints, bools, dates and timestamps reduce the compacted values with
+    numpy; floats reduce each segment of them in pyarrow, whose min_max
+    picks among tied ±0.0 and whose sum rounds the way the ORC pins were
+    recorded; strings, binaries and decimals reduce each segment's rows
+    in pyarrow."""
+    t = arr.type
+    bounds = cuts.tolist()
+    valid = _valid_mask(arr)
+    # the null rows, and how many of them precede each cut
+    gaps = np.empty(0, np.int64) if valid is None else np.flatnonzero(~valid)
+    before = np.searchsorted(gaps, cuts)
+    vcuts = cuts - before  # the cuts in the non-null values
+    counts = np.diff(vcuts).tolist()
+    out = [{"n": c, "nulls": hi - lo - c}
+           for c, lo, hi in zip(counts, bounds[:-1], bounds[1:])]
+    live = [i for i, c in enumerate(counts) if c]
+    if not live or pa.types.is_nested(t):
+        return out
+    # live segments are non-empty, so each start's run of the compacted
+    # values ends at the next live start (or the end)
+    starts = vcuts[live]
+
+    def put(key: str, values) -> None:
+        for i, v in zip(live, values):
+            out[i][key] = v
+
+    def values() -> pa.Array:
+        return arr if valid is None else arr.drop_null()
+
+    if pa.types.is_date32(t) or pa.types.is_timestamp(t):
+        v = np.asarray(values().view(pa.int32() if pa.types.is_date32(t)
+                                     else pa.int64()))
+        put("min", np.minimum.reduceat(v, starts).tolist())
+        put("max", np.maximum.reduceat(v, starts).tolist())
+    elif pa.types.is_signed_integer(t) or pa.types.is_boolean(t):
+        v = np.asarray(values()).astype(np.int64, copy=False)
+        mins = np.minimum.reduceat(v, starts).tolist()
+        maxs = np.maximum.reduceat(v, starts).tolist()
+        if len(v) * max(-min(mins), max(maxs)) <= _I64_MAX:
+            sums = np.add.reduceat(v, starts).tolist()  # provably no wrap
+        else:
+            # limb sums: v = (v >> 32)·2^32 + (v & 0xffffffff); each limb's
+            # sum is exact for any realistic row count (< 2^31 rows)
+            lo = np.add.reduceat((v & 0xFFFFFFFF).astype(np.uint64), starts)
+            hi = np.add.reduceat(v >> 32, starts)
+            sums = [h * (1 << 32) + x
+                    for h, x in zip(hi.tolist(), lo.tolist())]
+        if pa.types.is_boolean(t):
+            mins, maxs = map(bool, mins), map(bool, maxs)
+        put("min", mins)
+        put("max", maxs)
+        put("sum", sums)
+    elif pa.types.is_floating(t):
+        f = values().cast(pa.float64())
+        nans = np.diff(np.searchsorted(
+            np.flatnonzero(np.isnan(np.asarray(f))), vcuts)).tolist()
+        for i in live:
+            seg = f.slice(int(vcuts[i]), counts[i])
+            mm = pc.min_max(seg)
+            every = nans[i] == counts[i]
+            out[i].update(min=None if every else float(mm["min"].as_py()),
+                          max=None if every else float(mm["max"].as_py()),
+                          sum=float(pc.sum(seg).as_py()), nan=nans[i] > 0)
+    else:
+        for i in live:
+            mm = pc.min_max(arr.slice(bounds[i], bounds[i + 1] - bounds[i]))
+            out[i].update(min=mm["min"].as_py(), max=mm["max"].as_py())
+        if pa.types.is_string(t) or pa.types.is_large_string(t) or \
+                pa.types.is_binary(t) or pa.types.is_large_binary(t):
+            off = _offsets(arr)
+            slots = off[gaps + 1] - off[gaps]  # a null slot may span bytes
+            ends = off[cuts] - np.append(0, np.cumsum(slots))[before]
+            put("bytes", np.diff(ends)[live].tolist())
     return out
 
 
@@ -368,19 +439,22 @@ def _short(st: dict) -> bool:
     return st.get("bytes", 0) <= _SHORT_STR_BYTES * st["n"]
 
 
-def _bounds(st: dict) -> tuple:
-    """A group's [min, max] as Python values; (None, None) when it has no
-    non-null values, or holds a NaN, which sorts above every value in
-    Spark but which pc.min_max skips."""
+def _bounds(st: dict, t: pa.DataType) -> tuple:
+    """A group's [min, max] as Python values of Arrow type t; (None, None)
+    when it has no non-null values, or holds a NaN, which sorts above
+    every value in Spark."""
     if "min" not in st or st.get("nan"):
         return None, None
-    return st["min"].as_py(), st["max"].as_py()
+    lo, hi = st["min"], st["max"]
+    if pa.types.is_date32(t) or pa.types.is_timestamp(t):
+        return pa.scalar(lo, t).as_py(), pa.scalar(hi, t).as_py()
+    return lo, hi
 
 
-def _group_index(g: dict, stats: dict, spec: list[dict],
+def _group_index(g: dict, stats: dict, spec: list[dict], schema: pa.Schema,
                  key_col: str | None, ord_col: str | None) -> None:
     """A row group's key/order bounds and value ranges, from its
-    _group_stats.
+    segment_stats.
 
     The ranges are the reference's RowIndexEntry statistics
     (pb/orc_proto.proto:92-99), recorded for every orderable column so
@@ -391,7 +465,8 @@ def _group_index(g: dict, stats: dict, spec: list[dict],
     group. A float group holding a NaN records no range."""
     for label, cname in (("key", key_col), ("ord", ord_col)):
         if cname in stats:
-            g[f"{label}_min"], g[f"{label}_max"] = _bounds(stats[cname])
+            g[f"{label}_min"], g[f"{label}_max"] = _bounds(
+                stats[cname], schema.field(cname).type)
     rng = {}
     for col in spec:
         name, kind = col["name"], col["kind"]
@@ -400,7 +475,7 @@ def _group_index(g: dict, stats: dict, spec: list[dict],
                 kind == "string" and name not in (key_col, ord_col)
                 and not _short(st)):
             continue
-        lo, hi = _bounds(st)
+        lo, hi = _bounds(st, schema.field(name).type)
         if lo is not None:
             if kind == "string":
                 lo = _bound_str(lo, is_max=False)
@@ -410,38 +485,13 @@ def _group_index(g: dict, stats: dict, spec: list[dict],
         g["ranges"] = rng
 
 
-def _exact_int_sum(arr, n: int, mn: int, mx: int) -> int:
-    """Exact sum of an integer column's n non-null values, as a Python
-    int that may leave int64: pc.sum and np.sum both wrap silently in
-    int64. Cheap proof first: when n·max|bound| provably fits, the plain
-    int64 sum is exact; only a column that MIGHT overflow pays the
-    32-bit-limb pass. stripe_col_stats checks the stripe's total."""
-    if n * max(abs(mn), abs(mx)) <= _I64_MAX:  # Python ints: proof can't wrap
-        return int(pc.sum(arr).as_py())
-    a = np.asarray(arr.drop_null().cast(pa.int64()).combine_chunks()
-                   if isinstance(arr, pa.ChunkedArray)
-                   else arr.drop_null().cast(pa.int64()))
-    # limb sum: v = (v >> 32)·2^32 + (v & 0xffffffff); each limb's sum is
-    # provably exact for any realistic stripe row count (< 2^31 rows)
-    lo = int((a & 0xFFFFFFFF).astype(np.uint64).sum())
-    hi = int((a >> 32).sum())
-    return hi * (1 << 32) + lo
-
-
-def _stat_value(col: dict, s: pa.Scalar):
-    """A min/max scalar in col_stats' domain: timestamps as epoch-micros,
-    dates as days, decimals as unscaled integers at the column scale
-    (exact and order-preserving under the rollup's numeric min/max; str()
-    of Decimal is NOT — the same trap _coerce_bound guards)."""
-    kind = col["kind"]
-    if kind in ("timestamp", "timestamp_ntz", "date"):
-        return int(s.value)
-    if kind == "decimal":
-        # wide context: default scaleb ROUNDS at 28 significant digits,
-        # silently corrupting 38-digit bounds
-        return int(s.as_py().scaleb(int(col.get("scale", 0)),
-                                    _decimal.Context(prec=60)))
-    return s.as_py()
+def _unscaled(d: _decimal.Decimal, scale: int) -> int:
+    """A decimal as its unscaled integer at the column scale: exact and
+    order-preserving under the rollup's numeric min/max (str() of Decimal
+    is NOT — the same trap _coerce_bound guards)."""
+    # wide context: default scaleb ROUNDS at 28 significant digits,
+    # silently corrupting 38-digit bounds
+    return int(d.scaleb(scale, _decimal.Context(prec=60)))
 
 
 def stripe_col_stats(table: pa.Table, spec: list[dict],
@@ -449,18 +499,21 @@ def stripe_col_stats(table: pa.Table, spec: list[dict],
     """Whole-stripe per-column statistics — the engine's analog of the
     reference's file-footer ColumnStatistics rollup
     (/root/reference/orc/writer.go:140-177), merged from the row groups'
-    _group_stats: n/nulls always; typed min/max for orderable scalars
-    (_stat_value); sum for integer kinds (None when the exact total
-    leaves int64, which the run_stats rollup reads as overflow; bool:
-    true-count); byte totals for string/binary. Decimals above precision
-    18 exceed int64 unscaled, so their bounds go to the wide
+    segment_stats: n/nulls always; typed min/max for orderable scalars
+    (timestamps as epoch-micros, dates as days, decimals as unscaled
+    integers, _unscaled); sum for integer kinds (None when the exact
+    total leaves int64, which the run_stats rollup reads as overflow;
+    bool: true-count); byte totals for string/binary. Decimals above
+    precision 18 exceed int64 unscaled, so their bounds go to the wide
     min_dec/max_dec slots (Python big ints in the JSON; the rollup carries
     them as decimal(38,0)). String min/max is recorded only when the
     stripe's strings are short, so `engine.run_stats` surfaces a string
     bound only when EVERY stripe recorded one. Float min/max/sum are one
     pyarrow pass over the stripe column: the order values are visited in
-    decides a sum's last bits and which of ±0.0 a tie returns. Nested
-    kinds carry n/nulls only."""
+    decides a sum's last bits and which of ±0.0 a tie returns. A float
+    column holding a NaN records max NaN, and min NaN when every value
+    is NaN: Spark sorts NaN above every value, where min_max skips it.
+    Nested kinds carry n/nulls only."""
     out: dict = {}
     for col in spec:
         name, kind = col["name"], col["kind"]
@@ -470,29 +523,36 @@ def stripe_col_stats(table: pa.Table, spec: list[dict],
         out[name] = st
         if st["n"] == 0 or kind in _NESTED_KINDS:
             continue
+        live = [p for p in parts if p["n"]]
         if kind in ("float", "double"):
             arr = table.column(name)
             mm = pc.min_max(arr)
             st["min"] = float(mm["min"].as_py())
             st["max"] = float(mm["max"].as_py())
             st["sum"] = float(pc.sum(arr).as_py())
+            if any(p["nan"] for p in live):
+                st["max"] = math.nan
+                if all(p["min"] is None for p in live):
+                    st["min"] = math.nan
             continue
         if kind in ("string", "binary"):
-            st["bytes"] = sum(p.get("bytes", 0) for p in parts)
+            st["bytes"] = sum(p["bytes"] for p in live)
             if not _short(st):
                 continue
         if kind != "bool":
-            live = [p for p in parts if p["n"]]
-            lo = min(_stat_value(col, p["min"]) for p in live)
-            hi = max(_stat_value(col, p["max"]) for p in live)
+            lo = min(p["min"] for p in live)
+            hi = max(p["max"] for p in live)
             if kind == "binary":
                 lo, hi = lo.hex(), hi.hex()
+            elif kind == "decimal":
+                scale = int(col.get("scale", 0))
+                lo, hi = _unscaled(lo, scale), _unscaled(hi, scale)
             if kind == "decimal" and int(col.get("precision", 38)) > 18:
                 st["min_dec"], st["max_dec"] = lo, hi
             else:
                 st["min"], st["max"] = lo, hi
         if kind in _INT_STAT_KINDS or kind == "bool":
-            total = sum(p.get("sum", 0) for p in parts)
+            total = sum(p["sum"] for p in live)
             st["sum"] = total if _I64_MIN <= total <= _I64_MAX else None
     return out
 
@@ -530,8 +590,9 @@ def select_row_groups(meta: dict, key_value=None,
     range. Conservative: a group with no recorded range for a probed
     column is kept, so the result is a superset of the matching groups;
     the `key_bloom` entries of older group metas are ignored, which keeps
-    it one. Returns None for single-group stripes (old format: nothing to
-    skip)."""
+    it one. Returns None for an ungrouped stripe, which has nothing to
+    skip: encode_stripe_table writes one whenever the stripe holds at most
+    `rg_rows` rows or `rg_rows` is 0/None."""
     groups = meta.get("row_groups")
     if groups is None:
         return None

@@ -1,4 +1,6 @@
-"""Pure-numpy codec kernels.
+"""Codec kernels: C kernels (`_native`, built on first use) run first; the
+numpy twins are their reference and the fallback where no C compiler is
+available (or GOORC_NATIVE=0).
 
 Importable both from pytest and from inside Spark pandas UDFs; no Spark
 dependency in this subpackage.

@@ -43,11 +43,12 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from goorc_spark import _fanout
-from goorc_spark.arrow_stripe import (_JOB_MIN_BYTES, _child_offsets,
-                                      _decimal_from_limbs, _decimal_limbs,
-                                      _expand, _list_array, _list_parts,
-                                      _scatter_nulls, _varwidth_array,
-                                      _varwidth_parts)
+from goorc_spark.arrow_stripe import (_I64_MAX, _I64_MIN, _JOB_MIN_BYTES,
+                                      _child_offsets, _decimal_from_limbs,
+                                      _decimal_limbs, _expand, _list_array,
+                                      _list_parts, _scatter_nulls,
+                                      _varwidth_array, _varwidth_parts,
+                                      segment_stats)
 from goorc_spark.codecs import (_native, boolrle, byterle, chunk, floats,
                                 rlev1, rlev2)
 from goorc_spark.codecs.primitives import (bits_required_fast,
@@ -1642,152 +1643,70 @@ def _dec_plain(d) -> str:
     return format(d, "f")
 
 
-def _segment_stats(vals: pa.Array, kind: int, cuts: np.ndarray,
-                   vcuts: np.ndarray) -> list[dict]:
-    """Typed column statistics of each segment over its non-null values
-    (the write-side mirror of _parse_col_stats; reference computes these
-    per column in orc/writer.go:140-177). Segment g holds rows
-    cuts[g]:cuts[g + 1], whose non-null values are
-    vals[vcuts[g]:vcuts[g + 1]]. Sums that could be inexact are OMITTED,
-    matching the reference's overflow semantics: an int sum that leaves int64 is None (the rule of
-    arrow_stripe.stripe_col_stats), decimal sums are skipped, and a segment
-    holding a NaN skips its float min/max/sum. Float and string bounds
-    and float sums come from pyarrow on each segment's slice: numpy's
-    reductions order signed zeros and round sums differently."""
-    counts = np.diff(vcuts)
-    out = [{"n": c, "has_null": z > 0} for c, z in
-           zip(counts.tolist(), (np.diff(cuts) - counts).tolist())]
-    live = np.flatnonzero(counts)
-    if not len(live) or kind in (T_STRUCT, T_LIST, T_MAP, T_UNION):
-        return out
-    starts = vcuts[live]
-    live = live.tolist()
-
-    def put(key: str, values) -> None:
-        for i, v in zip(live, values):
-            out[i][key] = v
-
-    def reduce(ufunc, a: np.ndarray) -> list:
-        # live segments are non-empty, so each start's run ends at the
-        # next live start (or the end): empty segments between hold none
-        return ufunc.reduceat(a, starts).tolist()
-
-    def slices(a: pa.Array):
-        return (a.slice(int(vcuts[i]), out[i]["n"]) for i in live)
-
-    if kind in _INT_KINDS:
-        v = np.asarray(vals.cast(pa.int64()), dtype=np.int64)
-        mins, maxs = reduce(np.minimum, v), reduce(np.maximum, v)
-        put("min", mins)
-        put("max", maxs)
-        if len(v) * max(-min(mins), max(maxs)) <= (1 << 63) - 1:
-            sums = reduce(np.add, v)  # provably no int64 wrap
-        else:  # exact 32-bit limb sums; None where a sum leaves int64
-            lo = reduce(np.add, (v & 0xFFFFFFFF).astype(np.uint64))
-            hi = reduce(np.add, v >> 32)
-            sums = [t if -(1 << 63) <= t < (1 << 63) else None
-                    for t in (h * (1 << 32) + l for h, l in zip(hi, lo))]
-        put("sum", sums)
-    elif kind in (T_FLOAT, T_DOUBLE):
-        for i, seg in zip(live, slices(vals.cast(pa.float64()))):
-            if not pc.any(pc.is_nan(seg)).as_py():
-                mm = pc.min_max(seg)
-                out[i].update(min=float(mm["min"].as_py()),
-                              max=float(mm["max"].as_py()),
-                              sum=float(pc.sum(seg).as_py()))
-    elif kind in (T_STRING, T_BINARY):
-        if kind == T_STRING:
-            for i, seg in zip(live, slices(vals)):
-                mm = pc.min_max(seg)
-                out[i].update(min=mm["min"].as_py(), max=mm["max"].as_py())
-        put("bytes", reduce(np.add, _varwidth_parts(vals)[1]))
-    elif kind == T_BOOLEAN:
-        put("true_count", reduce(np.add, np.asarray(
-            vals.cast(pa.int8()), dtype=np.int8).astype(np.int64)))
-    elif kind == T_DATE:
-        days = np.asarray(vals.view(pa.int32()), dtype=np.int32)
-        put("min", reduce(np.minimum, days))
-        put("max", reduce(np.maximum, days))
-    elif kind == T_TIMESTAMP:
-        us = np.asarray(vals.cast(pa.timestamp("us")).view(pa.int64()),
-                        dtype=np.int64)
-        # TimestampStatistics minimumUtc/maximumUtc are epoch MILLIS;
-        # floor division keeps ordering exact for pre-1970 instants
-        put("min_ms", [v // 1000 for v in reduce(np.minimum, us)])
-        put("max_ms", [v // 1000 for v in reduce(np.maximum, us)])
-    elif kind == T_DECIMAL:
-        for i, seg in zip(live, slices(vals)):
-            mm = pc.min_max(seg)
-            out[i].update(min_dec=mm["min"].as_py(),
-                          max_dec=mm["max"].as_py())
-    return out
-
-
-def _encode_col_stats(kind: int, st: dict) -> bytes:
+def _encode_col_stats(node: dict, st: dict) -> bytes:
     """One ColumnStatistics message (public orc_proto.proto:26-90 field
-    numbers; sint fields zigzag like the read-side _parse_col_stats)."""
+    numbers; sint fields zigzag like the read-side _parse_col_stats) from
+    a segment's arrow_stripe.segment_stats or their _merge_col_stats
+    rollup, with the reference's omissions: no int sum outside int64, no
+    decimal sum, no float statistics of values that hold a NaN.
+    TimestampStatistics minimumUtc/maximumUtc are epoch MILLIS, floored
+    so ordering stays exact for pre-1970 instants."""
     msg = _pb_int(1, st.get("n", 0))
-    if kind in _INT_KINDS and st.get("min") is not None:
+    # no typed statistics without values, or over values with a NaN
+    kind = node["kind"] if "min" in st and not st.get("nan") else None
+    if kind in _INT_KINDS:
         sub = _pb_sint(1, st["min"]) + _pb_sint(2, st["max"])
-        if st.get("sum") is not None:
+        if st.get("sum") is not None and _I64_MIN <= st["sum"] <= _I64_MAX:
             sub += _pb_sint(3, st["sum"])
         msg += _pb_bytes(2, sub)
-    elif kind in (T_FLOAT, T_DOUBLE) and st.get("min") is not None:
+    elif kind in (T_FLOAT, T_DOUBLE):
         msg += _pb_bytes(3, _pb_double(1, st["min"]) + _pb_double(2, st["max"])
                          + _pb_double(3, st["sum"]))
-    elif kind == T_STRING and st.get("min") is not None:
+    elif kind == T_STRING:
         msg += _pb_bytes(4, _pb_str(1, st["min"]) + _pb_str(2, st["max"])
                          + _pb_sint(3, st["bytes"]))
-    elif kind == T_BOOLEAN and "true_count" in st:
+    elif kind == T_BOOLEAN:
         # BucketStatistics.count: packed repeated uint64
-        msg += _pb_bytes(5, _pb_bytes(1, _uvarint_bytes(st["true_count"])))
-    elif kind == T_DECIMAL and st.get("min_dec") is not None:
-        msg += _pb_bytes(6, _pb_str(1, _dec_plain(st["min_dec"]))
-                         + _pb_str(2, _dec_plain(st["max_dec"])))
-    elif kind == T_DATE and st.get("min") is not None:
+        msg += _pb_bytes(5, _pb_bytes(1, _uvarint_bytes(st["sum"])))
+    elif kind == T_DECIMAL:
+        msg += _pb_bytes(6, _pb_str(1, _dec_plain(st["min"]))
+                         + _pb_str(2, _dec_plain(st["max"])))
+    elif kind == T_DATE:
         msg += _pb_bytes(7, _pb_sint(1, st["min"]) + _pb_sint(2, st["max"]))
-    elif kind == T_BINARY and st.get("bytes") is not None:
+    elif kind == T_BINARY:
         msg += _pb_bytes(8, _pb_sint(1, st["bytes"]))
-    elif kind == T_TIMESTAMP and st.get("min_ms") is not None:
-        msg += _pb_bytes(9, _pb_sint(3, st["min_ms"])
-                         + _pb_sint(4, st["max_ms"]))
-    msg += _pb_int(10, 1 if st.get("has_null") else 0)
+    elif kind == T_TIMESTAMP:
+        per_s = _UNITS_PER_S[node["arrow"].unit]
+        msg += _pb_bytes(9, _pb_sint(3, st["min"] * 1000 // per_s)
+                         + _pb_sint(4, st["max"] * 1000 // per_s))
+    msg += _pb_int(10, 1 if st.get("nulls") else 0)
     return msg
 
 
-def _merge_col_stats(kind: int, parts: list[dict]) -> dict:
-    """File-footer rollup of per-stripe stats: min of mins, max of maxes,
-    sums None-propagate (a stripe that omitted its sum — overflow or NaN —
-    poisons the file sum, reference semantics)."""
+_UNITS_PER_S = {"s": 1, "ms": 1000, "us": 10 ** 6, "ns": 10 ** 9}
+
+
+def _merge_col_stats(parts: list[dict]) -> dict:
+    """Rollup of segment_stats (index strides to a stripe, stripes to the
+    file): min of mins, max of maxes, sums of sums and bytes. An int sum
+    outside int64 poisons every rollup above it, although the exact total
+    may come back into range (reference semantics)."""
     out: dict = {"n": sum(p.get("n", 0) for p in parts),
-                 "has_null": any(p.get("has_null") for p in parts)}
+                 "nulls": sum(p.get("nulls", 0) for p in parts)}
     live = [p for p in parts if p.get("n", 0)]
-    if not live or kind in (T_STRUCT, T_LIST, T_MAP):
+    if not live or "min" not in live[0]:
         return out
-
-    def _bound(key, fn):
-        vs = [p[key] for p in live if p.get(key) is not None]
-        if len(vs) == len(live):  # every non-empty stripe recorded it
-            out[key] = fn(vs)
-
-    for key, fn in (("min", min), ("max", max), ("min_dec", min),
-                    ("max_dec", max), ("min_ms", min), ("max_ms", max)):
-        _bound(key, fn)
-    if kind in _INT_KINDS:
-        sums = [p.get("sum") for p in live]
-        if all(s is not None for s in sums):
-            tot = sum(sums)
-            if -(1 << 63) <= tot <= (1 << 63) - 1:
-                out["sum"] = tot
-    elif kind in (T_FLOAT, T_DOUBLE):
-        if all(p.get("min") is not None for p in live):
-            out["sum"] = sum(p["sum"] for p in live)
-        else:
-            out.pop("min", None)
-            out.pop("max", None)
-    for key in ("bytes", "true_count"):
-        if all(p.get(key) is not None for p in live):
-            out[key] = sum(p[key] for p in live)
+    if any(p.get("nan") for p in live):
+        out["nan"] = True  # no float statistics to roll up
+        return out
+    out["min"] = min(p["min"] for p in live)
+    out["max"] = max(p["max"] for p in live)
+    for key in ("sum", "bytes"):
+        vals = [p.get(key) for p in live]
+        if all(v is not None and (isinstance(v, float)
+                                  or _I64_MIN <= v <= _I64_MAX)
+               for v in vals):
+            out[key] = sum(vals)
     return out
 
 
@@ -1882,7 +1801,7 @@ def _write_column_streams(arr: pa.Array, col_id: int, node: dict,
     _write_values(arr, vals, col_id, node, vcuts, emit, encodings, types,
                   tz, stats, allow_dict)
     # after the streams, so a big column's segments reach the pool sooner
-    stats[col_id] = _segment_stats(vals, kind, cuts, vcuts)
+    stats[col_id] = segment_stats(arr, cuts)
 
 
 def _write_values(arr: pa.Array, vals: pa.Array, col_id: int, node: dict,
@@ -2185,7 +2104,7 @@ def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
         streams.sort(key=lambda st: st[0])
         # the index's statistics and blooms need no compressed sizes:
         # encode them while the big segments deflate
-        entry_stats = {cid: [_encode_col_stats(types[cid]["kind"], st)
+        entry_stats = {cid: [_encode_col_stats(types[cid], st)
                              for st in sts]
                        for cid, sts in seg_stats.items()} if stride else {}
         blooms = {cid: early(_bloom_stream(root.field(ci), types[cid]["kind"],
@@ -2200,7 +2119,7 @@ def _stride_stripe(sub: pa.Table, types: list, comp: str, block: int,
         offsets[(cid, skind)] = np.cumsum(
             [0] + [len(p) for p in packed[:-1]], dtype=np.int64)
         data_streams.append((cid, skind, b"".join(packed)))
-    stripe_stats = {cid: _merge_col_stats(types[cid]["kind"], st)
+    stripe_stats = {cid: _merge_col_stats(st)
                     for cid, st in seg_stats.items()}
     if not stride:
         return [], data_streams, encodings, stripe_stats
@@ -2317,7 +2236,7 @@ def write_orc(table: pa.Table, compression: str = "zlib",
         ss = bytearray()
         for cid in range(len(types)):
             ss += _pb_bytes(1, _encode_col_stats(
-                types[cid]["kind"], cs.get(cid, {"n": 0})))
+                types[cid], cs.get(cid, {"n": 0})))
         meta += _pb_bytes(1, bytes(ss))
     footer = bytearray()
     footer += _pb_int(1, len(MAGIC))          # headerLength
@@ -2332,9 +2251,8 @@ def write_orc(table: pa.Table, compression: str = "zlib",
     footer += _pb_int(6, n)                    # numberOfRows
     for cid in range(len(types)):              # file-level ColumnStatistics
         footer += _pb_bytes(7, _encode_col_stats(
-            types[cid]["kind"],
-            _merge_col_stats(types[cid]["kind"],
-                             [cs.get(cid, {"n": 0}) for cs in stripe_stats])))
+            types[cid],
+            _merge_col_stats([cs.get(cid, {"n": 0}) for cs in stripe_stats])))
     footer += _pb_int(8, row_index_stride)     # rowIndexStride (0 = none)
     meta_packed, footer_packed = _compress_all(
         [bytes(meta), bytes(footer)], compression, block_size)

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import decimal
 import json
+import math
 
 import numpy as np
 import pyarrow as pa
@@ -515,6 +516,35 @@ def test_stripe_col_stats_and_run_stats(spark):
     assert rs["long_text"]["min_str"] is None
     assert rs["long_text"]["bytes_sum"] == int(
         pdf["long_text"].str.len().sum())
+
+
+def test_run_stats_float_bounds_follow_spark_nan_order(spark):
+    """A double column holding NaN rolls up to Spark's min/max of the
+    decoded rows: NaN sorts above every value, so the max is NaN and the
+    min stays finite; an all-NaN column has both NaN."""
+    from pyspark.sql import functions as F
+    nan = F.lit(float("nan"))
+    # built in Spark: an Arrow hand-off from pandas would turn NaN to null
+    df = spark.range(600).select(
+        F.format_string("k%04d", "id").alias("k"), F.col("id").alias("i"),
+        F.when(F.col("id").isin(7, 300, 555), nan)
+        .otherwise(F.col("id") / 75.0 - 3.0).alias("f"),
+        nan.alias("g"))
+    cfg = engine.EncodeConfig(key_col="k", order_cols=("i",),
+                              stripe_bytes=8 * 1024, partitions=3,
+                              rg_rows=64, run_id="nanstat")
+    stripes = engine.encode_df(df, cfg)
+    rs = {r["column"]: r for r in engine.run_stats(stripes).collect()}
+    want = engine.decode_df(stripes).agg(
+        *[F.min(c).alias(f"min_{c}") for c in ("f", "g")],
+        *[F.max(c).alias(f"max_{c}") for c in ("f", "g")]).first()
+    for c in ("f", "g"):
+        got = (rs[c]["min_dbl"], rs[c]["max_dbl"])
+        exp = (want[f"min_{c}"], want[f"max_{c}"])
+        assert [math.isnan(v) for v in got] == [math.isnan(v) for v in exp]
+        assert [v for v in got if not math.isnan(v)] == \
+            [v for v in exp if not math.isnan(v)], c
+    assert rs["f"]["min_dbl"] == -3.0 and math.isnan(rs["f"]["max_dbl"])
 
 
 def test_run_stats_decimal_bounds_numeric(spark):

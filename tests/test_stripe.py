@@ -9,6 +9,7 @@ and its parity role moved to these fixtures)."""
 import datetime
 import decimal
 import json
+import math
 import pathlib
 
 import numpy as np
@@ -305,6 +306,11 @@ def _whole_column_stats(arr, col) -> dict:
     elif kind == "bool":
         st["sum"] = pc.sum(arr.cast(pa.int64())).as_py()
     elif kind in ("float", "double"):
+        # Spark's order: NaN sorts above every value, where min_max skips it
+        nan = pc.is_nan(arr.drop_null())
+        if pc.any(nan).as_py():
+            hi = math.nan
+            lo = math.nan if pc.all(nan).as_py() else lo
         st.update(min=lo, max=hi, sum=pc.sum(arr).as_py())
     elif kind in ("date", "timestamp", "timestamp_ntz"):
         st.update(min=mm["min"].value, max=mm["max"].value)
