@@ -283,39 +283,37 @@ def encode_stripe_table(
     grouped = bool(rg_rows) and n > rg_rows
     if grouped:
         cache = {} if cache is None else cache  # force sharing across groups
-    cuts = np.append(np.arange(0, n, rg_rows) if grouped else [0], n)
-    arrays = [_as_array(table.column(col["name"])) for col in spec]
     spans = []  # (group meta, first stream, end stream)
     with _fanout.Jobs() as jobs:
         sink = _StreamSink(jobs, compression, chunk_size)
         if not grouped:
             body = {"columns": [
-                _write_column(arr, col, sink, policy, cache)
-                for col, arr in zip(spec, arrays)]}
+                _write_column(_as_array(table.column(col["name"])), col,
+                              sink, policy, cache) for col in spec]}
+            groups = [body]
         else:
             groups = []
-            for start, end in zip(cuts[:-1].tolist(), cuts[1:].tolist()):
+            for start in range(0, n, rg_rows):
+                sub = table.slice(start, min(rg_rows, n - start))
                 first = len(sink)
                 cols_meta = [
-                    _write_column(arr.slice(start, end - start), col, sink,
-                                  policy, cache)
-                    for col, arr in zip(spec, arrays)
+                    _write_column(_as_array(sub.column(col["name"])), col,
+                                  sink, policy, cache)
+                    for col in spec
                 ]
                 if start > 0:
                     # sub-encoding histograms live in group 0 only — decode
                     # never reads them and N groups x M columns of them
                     # would dominate the meta
                     _strip_diagnostics(cols_meta)
-                g: dict = {"n_rows": end - start, "offset": None,
+                g: dict = {"n_rows": sub.num_rows, "offset": None,
                            "length": None, "columns": cols_meta}
                 spans.append((g, first, len(sink)))
                 groups.append(g)
             body = {"row_groups": groups}
-        # the one statistics pass, while the pool compresses: each column
-        # over every row group (an ungrouped stripe is one)
-        per_col = [segment_stats(arr, cuts) for arr in arrays]
-        stats = [{col["name"]: segs[i] for col, segs in zip(spec, per_col)}
-                 for i in range(len(cuts) - 1)]
+        # the one statistics pass, while the pool compresses
+        cuts = np.append(np.arange(0, n, rg_rows) if grouped else [0], n)
+        stats = _row_group_stats(table, spec, groups, cuts)
         if grouped:
             for g, st in zip(groups, stats):
                 _group_index(g, st, spec, table.schema, key_col, ord_col)
@@ -335,6 +333,25 @@ def encode_stripe_table(
     return blob, meta
 
 
+def _row_group_stats(table: pa.Table, spec: list[dict], groups: list[dict],
+                     cuts: np.ndarray) -> list[dict]:
+    """Each row group's segment_stats by column name (an ungrouped stripe
+    is one group, rows cuts[g]:cuts[g + 1]), the kernel run once per column
+    over the whole stripe. The cuts through a column's non-null values come
+    from the groups' null counts, and only one column's compacted values
+    are alive at a time."""
+    per_col = []
+    for j, col in enumerate(spec):
+        arr = table.column(col["name"])
+        nulls = np.cumsum([0] + [g["columns"][j]["null_count"]
+                                 for g in groups])
+        per_col.append(segment_stats(
+            _as_array(arr.drop_null() if arr.null_count else arr),
+            cuts, cuts - nulls))
+    return [{col["name"]: segs[i] for col, segs in zip(spec, per_col)}
+            for i in range(len(groups))]
+
+
 _INT_STAT_KINDS = {"byte", "short", "int", "long"}
 _NESTED_KINDS = {"struct", "list", "map"}
 _I64_MIN, _I64_MAX = -(1 << 63), (1 << 63) - 1
@@ -345,10 +362,13 @@ _I64_MIN, _I64_MAX = -(1 << 63), (1 << 63) - 1
 _SHORT_STR_BYTES = 32
 
 
-def segment_stats(arr: pa.Array, cuts: np.ndarray) -> list[dict]:
+def segment_stats(vals: pa.Array, cuts: np.ndarray,
+                  vcuts: np.ndarray) -> list[dict]:
     """The statistics kernel of both writers: one column's statistics over
     each segment of its rows cuts[g]:cuts[g + 1] (the stripe writer's row
-    groups, the ORC writer's index strides). Every segment gets n (its
+    groups, the ORC writer's index strides), from the column's non-null
+    values `vals` and the cuts through them `vcuts`, which each writer
+    has already derived from the column's nulls. Every segment gets n (its
     non-null values) and nulls. A segment of a scalar column that holds
     values also gets, over them:
     - min/max as Python values, dates and timestamps as their integer
@@ -357,42 +377,32 @@ def segment_stats(arr: pa.Array, cuts: np.ndarray) -> list[dict]:
       (bools: the true count), or the float sum;
     - nan (floats): whether a value is NaN;
     - bytes (string/binary): the payload bytes.
-    Ints, bools, dates and timestamps reduce the compacted values with
-    numpy; floats reduce each segment of them in pyarrow, whose min_max
-    picks among tied ±0.0 and whose sum rounds the way the ORC pins were
-    recorded; strings, binaries and decimals reduce each segment's rows
-    in pyarrow."""
-    t = arr.type
-    bounds = cuts.tolist()
-    valid = _valid_mask(arr)
-    # the null rows, and how many of them precede each cut
-    gaps = np.empty(0, np.int64) if valid is None else np.flatnonzero(~valid)
-    before = np.searchsorted(gaps, cuts)
-    vcuts = cuts - before  # the cuts in the non-null values
+    Ints, bools, dates and timestamps reduce the values with numpy;
+    floats, strings, binaries and decimals reduce each segment of them in
+    pyarrow, whose float min_max picks among tied ±0.0 and whose float sum
+    rounds the way the ORC pins were recorded."""
+    t = vals.type
     counts = np.diff(vcuts).tolist()
-    out = [{"n": c, "nulls": hi - lo - c}
-           for c, lo, hi in zip(counts, bounds[:-1], bounds[1:])]
+    out = [{"n": c, "nulls": r - c}
+           for c, r in zip(counts, np.diff(cuts).tolist())]
     live = [i for i, c in enumerate(counts) if c]
     if not live or pa.types.is_nested(t):
         return out
-    # live segments are non-empty, so each start's run of the compacted
-    # values ends at the next live start (or the end)
+    # live segments are non-empty, so each start's run of the values ends
+    # at the next live start (or the end)
     starts = vcuts[live]
 
     def put(key: str, values) -> None:
         for i, v in zip(live, values):
             out[i][key] = v
 
-    def values() -> pa.Array:
-        return arr if valid is None else arr.drop_null()
-
     if pa.types.is_date32(t) or pa.types.is_timestamp(t):
-        v = np.asarray(values().view(pa.int32() if pa.types.is_date32(t)
-                                     else pa.int64()))
+        v = np.asarray(vals.view(pa.int32() if pa.types.is_date32(t)
+                                 else pa.int64()))
         put("min", np.minimum.reduceat(v, starts).tolist())
         put("max", np.maximum.reduceat(v, starts).tolist())
     elif pa.types.is_signed_integer(t) or pa.types.is_boolean(t):
-        v = np.asarray(values()).astype(np.int64, copy=False)
+        v = np.asarray(vals).astype(np.int64, copy=False)
         mins = np.minimum.reduceat(v, starts).tolist()
         maxs = np.maximum.reduceat(v, starts).tolist()
         if len(v) * max(-min(mins), max(maxs)) <= _I64_MAX:
@@ -410,7 +420,7 @@ def segment_stats(arr: pa.Array, cuts: np.ndarray) -> list[dict]:
         put("max", maxs)
         put("sum", sums)
     elif pa.types.is_floating(t):
-        f = values().cast(pa.float64())
+        f = vals.cast(pa.float64())
         nans = np.diff(np.searchsorted(
             np.flatnonzero(np.isnan(np.asarray(f))), vcuts)).tolist()
         for i in live:
@@ -422,14 +432,11 @@ def segment_stats(arr: pa.Array, cuts: np.ndarray) -> list[dict]:
                           sum=float(pc.sum(seg).as_py()), nan=nans[i] > 0)
     else:
         for i in live:
-            mm = pc.min_max(arr.slice(bounds[i], bounds[i + 1] - bounds[i]))
+            mm = pc.min_max(vals.slice(int(vcuts[i]), counts[i]))
             out[i].update(min=mm["min"].as_py(), max=mm["max"].as_py())
         if pa.types.is_string(t) or pa.types.is_large_string(t) or \
                 pa.types.is_binary(t) or pa.types.is_large_binary(t):
-            off = _offsets(arr)
-            slots = off[gaps + 1] - off[gaps]  # a null slot may span bytes
-            ends = off[cuts] - np.append(0, np.cumsum(slots))[before]
-            put("bytes", np.diff(ends)[live].tolist())
+            put("bytes", np.diff(_offsets(vals)[vcuts])[live].tolist())
     return out
 
 

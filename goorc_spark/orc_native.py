@@ -44,11 +44,11 @@ import pyarrow.compute as pc
 
 from goorc_spark import _fanout
 from goorc_spark.arrow_stripe import (_I64_MAX, _I64_MIN, _JOB_MIN_BYTES,
-                                      _child_offsets, _decimal_from_limbs,
-                                      _decimal_limbs, _expand, _list_array,
-                                      _list_parts, _scatter_nulls,
-                                      _varwidth_array, _varwidth_parts,
-                                      segment_stats)
+                                      _as_array, _child_offsets,
+                                      _decimal_from_limbs, _decimal_limbs,
+                                      _expand, _list_array, _list_parts,
+                                      _scatter_nulls, _varwidth_array,
+                                      _varwidth_parts, segment_stats)
 from goorc_spark.codecs import (_native, boolrle, byterle, chunk, floats,
                                 rlev1, rlev2)
 from goorc_spark.codecs.primitives import (bits_required_fast,
@@ -1790,7 +1790,7 @@ def _write_column_streams(arr: pa.Array, col_id: int, node: dict,
     `allow_dict=False` pins strings to DIRECT_V2 (a dictionary is
     stripe-global, so it needs one segment)."""
     kind = node["kind"]
-    arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
+    arr = _as_array(arr)
     vcuts = cuts  # segment cuts in the non-null values
     vals = arr
     if arr.null_count:
@@ -1801,7 +1801,7 @@ def _write_column_streams(arr: pa.Array, col_id: int, node: dict,
     _write_values(arr, vals, col_id, node, vcuts, emit, encodings, types,
                   tz, stats, allow_dict)
     # after the streams, so a big column's segments reach the pool sooner
-    stats[col_id] = segment_stats(arr, cuts)
+    stats[col_id] = segment_stats(vals, cuts, vcuts)
 
 
 def _write_values(arr: pa.Array, vals: pa.Array, col_id: int, node: dict,

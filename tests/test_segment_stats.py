@@ -134,7 +134,8 @@ def _segments(arr: pa.Array, cuts: np.ndarray):
 @given(data=st.data())
 def test_segment_stats_match_pyarrow_per_segment(t, data):
     arr, cuts = data.draw(_column(t))
-    got = segment_stats(arr, cuts)
+    got = segment_stats(arr.drop_null(), cuts,
+                        on._cuts_through(np.asarray(arr.is_valid()), cuts))
     assert len(got) == len(cuts) - 1
     for g, (st_, seg) in enumerate(zip(got, _segments(arr, cuts))):
         want = _reference(seg)
@@ -145,7 +146,8 @@ def test_segment_stats_match_pyarrow_per_segment(t, data):
 
 def test_segment_stats_of_nested_columns_count_rows_only():
     arr = pa.array([[1], None, [], [2, 3], None], pa.list_(pa.int64()))
-    assert segment_stats(arr, np.array([0, 2, 2, 5])) == [
+    assert segment_stats(arr.drop_null(), np.array([0, 2, 2, 5]),
+                         np.array([0, 1, 1, 3])) == [
         {"n": 1, "nulls": 1}, {"n": 0, "nulls": 0}, {"n": 2, "nulls": 1}]
 
 
