@@ -771,25 +771,6 @@ def main() -> None:
             "trained_centroids": round(len(ivf_t & exact10) / 10, 2),
             "nprobe": 2, "cells": 8}
 
-        # side-by-side dot implementations (VERDICT r3 #9): the embedding
-        # legs re-run with the pandas/BLAS dot; outputs are pinned
-        # identical by tests/test_dedup_scale.py, this records the speed.
-        # A zero size bound resolves every operator with a known input
-        # size to the pandas impl.
-        auto_bytes = similarity.AUTO_PANDAS_BYTES
-        similarity.AUTO_PANDAS_BYTES = 0
-        try:
-            dot_legs = {}
-            for name in ("dedup_embedding_lsh", "ann_cosine_topk",
-                         "ann_lsh_topk", "ann_pairwise_topk_lsh"):
-                sec, _ = timed(pipeline[name])
-                dot_legs[name] = {
-                    "sql_sec": queries[name], "pandas_sec": round(sec, 3),
-                    "speedup": round(queries[name] / sec, 2) if sec else None}
-        finally:
-            similarity.AUTO_PANDAS_BYTES = auto_bytes
-        extras["dot_impl"] = dot_legs
-
         # ---- dedup growth leg (VERDICT r2 #10): the bucketed dedup paths
         # at 10x input (sf1-equivalent). The 10x corpus is synthesized
         # deterministically from the sf documents: copy i Caesar-rotates

@@ -4,9 +4,8 @@
 `bench.py` is frozen for measurement; this file holds the per-leg
 experiments the optimization round used: each pipeline leg timed
 median-of-3 with warm python workers in a session configured like
-bench.py, the embedding legs A/B'd across dot implementations, and the
-encode kernel timed standalone at the bench's stripe shape. Prints one
-JSON object.
+bench.py, and the encode kernel timed standalone at the bench's stripe
+shape. Prints one JSON object.
 
 Usage: python bench_extra.py [sf_dir]   (default /root/testdata/sf0.1)
 """
@@ -88,24 +87,6 @@ def main() -> None:
         m, attempts = median3(fn)
         med[name] = {"median_sec": m, "attempts": attempts}
     out["legs_median3"] = med
-
-    # dot-impl A/B on the embedding legs (VERDICT r5 #4 evidence): the
-    # size bound picks each operator's impl, so an infinite bound forces
-    # the sql fold and a zero one the pandas impl
-    ab = {}
-    auto_bytes = similarity.AUTO_PANDAS_BYTES
-    for name in ("dedup_embedding_lsh", "ann_cosine_topk", "ann_lsh_topk",
-                 "ann_pairwise_topk_lsh", "ann_ivf_trained"):
-        row = {}
-        for impl, bound in (("sql", float("inf")), ("pandas", 0)):
-            similarity.AUTO_PANDAS_BYTES = bound
-            try:
-                row[impl], _ = median3(legs[name])
-            finally:
-                similarity.AUTO_PANDAS_BYTES = auto_bytes
-        row["sql_over_pandas"] = round(row["sql"] / row["pandas"], 2)
-        ab[name] = row
-    out["dot_impl_ab"] = ab
 
     # encode kernel standalone at the bench stripe shape
     import pyarrow as pa

@@ -830,11 +830,14 @@ def read_rows_at(stripes: DataFrame, spec: list[dict] | None,
     Plan: (1) a prefix-sum window over LINEAGE columns only — one row per
     stripe, blobs never read (at 10^12 turns / 256 MB stripes that is
     ~300k metadata rows through a single-partition window: bounded, and
-    the blob column is pruned from the scan); (2) covering stripes join
-    back by stripe_id (broadcast — a seek touches few stripes); (3) inside
-    each stripe, row-group prefix sums pick covering groups, only their
-    streams decompress, and the exact slice is cut from the decoded
-    batch."""
+    the blob column is pruned from the scan) — whose covering stripes'
+    (stripe_id, row_start) are collected when read_rows_at is called (a
+    seek touches few stripes); (2) the decode scans `stripe_id IN
+    (covering)`, a predicate parquet pushes into the scan, so the other
+    stripes' blobs are never read, with the starts passed into the task;
+    (3) inside each stripe, row-group prefix sums pick covering groups,
+    only their streams decompress, and the exact slice is cut from the
+    decoded batch."""
     from pyspark.sql import Window
 
     if spec is None:
@@ -846,13 +849,15 @@ def read_rows_at(stripes: DataFrame, spec: list[dict] | None,
         return decode_df(stripes.limit(0), spec, columns=columns)
     w = (Window.orderBy("part_id", "seq")
          .rowsBetween(Window.unboundedPreceding, -1))
-    bounds = (stripes.select("stripe_id", "part_id", "seq", "n_rows")
-              .withColumn("row_start",
-                          F.coalesce(F.sum("n_rows").over(w), F.lit(0)))
-              .filter((F.col("row_start") < row_hi)
-                      & (F.col("row_start") + F.col("n_rows") > row_lo))
-              .select("stripe_id", "row_start"))
-    sel = stripes.join(F.broadcast(bounds), "stripe_id")
+    starts = dict(
+        stripes.select("stripe_id", "part_id", "seq", "n_rows")
+        .withColumn("row_start",
+                    F.coalesce(F.sum("n_rows").over(w), F.lit(0)))
+        .filter((F.col("row_start") < row_hi)
+                & (F.col("row_start") + F.col("n_rows") > row_lo))
+        .select("stripe_id", "row_start").collect())
+    sel = _filter_exact(stripes,
+                        [("stripe_id", "isInCollection", list(starts))])
     include = [c["name"] for c in spec] if columns is not None else None
     tz = stripes.sparkSession.conf.get("spark.sql.session.timeZone")
 
@@ -860,12 +865,13 @@ def read_rows_at(stripes: DataFrame, spec: list[dict] | None,
         for rb in batches:
             metas = rb.column("meta").to_pylist()
             blobs = rb.column("blob")
-            starts = rb.column("row_start").to_pylist()
+            sids = rb.column("stripe_id").to_pylist()
             ns = rb.column("n_rows").to_pylist()
             for i, meta_json in enumerate(metas):
                 meta = json.loads(meta_json)
-                slo = max(0, row_lo - starts[i])
-                shi = min(ns[i], row_hi - starts[i])
+                start = starts[sids[i]]
+                slo = max(0, row_lo - start)
+                shi = min(ns[i], row_hi - start)
                 groups = meta.get("row_groups")
                 rg_sel, first_off = None, 0
                 if groups:
@@ -880,7 +886,7 @@ def read_rows_at(stripes: DataFrame, spec: list[dict] | None,
                                      include, None, rg_sel=rg_sel)
                 yield out.slice(slo - first_off, shi - slo)
 
-    return (sel.select("meta", "blob", "row_start", "n_rows")
+    return (sel.select("meta", "blob", "stripe_id", "n_rows")
             .mapInArrow(decode_slices, schema=out_schema))
 
 

@@ -54,6 +54,7 @@ from goorc_spark.codecs import (_native, boolrle, byterle, chunk, floats,
 from goorc_spark.codecs.primitives import (bits_required_fast,
                                            decode_svarints, decode_uvarints,
                                            encode_svarints, encode_uvarints)
+from goorc_spark.codecs.timestamps import EPOCH_2015_S
 
 MAGIC = b"ORC"
 
@@ -68,8 +69,6 @@ ENC_DIRECT, ENC_DICTIONARY, ENC_DIRECT_V2, ENC_DICTIONARY_V2 = range(4)
 (T_BOOLEAN, T_BYTE, T_SHORT, T_INT, T_LONG, T_FLOAT, T_DOUBLE, T_STRING,
  T_BINARY, T_TIMESTAMP, T_LIST, T_MAP, T_STRUCT, T_UNION, T_DECIMAL,
  T_DATE, T_VARCHAR, T_CHAR) = range(18)
-
-EPOCH_2015_S = 1420070400  # 2015-01-01T00:00:00Z
 
 
 # ---------------------------------------------------------------- protobuf

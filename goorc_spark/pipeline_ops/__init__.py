@@ -2,6 +2,6 @@
 deduplication, similarity search, text analysis, multimodal plumbing.
 
 All Spark-first: built-in pyspark.sql.functions wherever expressible
-(JVM-side, codegen), Arrow-batched pandas UDFs only where genuinely needed
-(simhash bit arithmetic, multimodal byte decoding).
+(JVM-side, codegen); Arrow-batched Python (mapInPandas) only for the
+multimodal byte plumbing (feature extraction, resize).
 """

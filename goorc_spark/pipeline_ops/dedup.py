@@ -35,6 +35,27 @@ def _spread(df: DataFrame) -> DataFrame:
 _PAIR_BROADCAST_BYTES = 256 << 20
 
 
+def _pair_sides(df: DataFrame, spread: bool = False):
+    """The ("a", "b") sides of a self-join of `df`. Below
+    _PAIR_BROADCAST_BYTES of Catalyst estimate, `df` is materialized once
+    (a lazy localCheckpoint: the broadcast build and the probe are
+    separate consumers, so without it the whole upstream pipeline runs
+    twice) and "b" is its broadcast; `spread` round-robins the probe side
+    to defaultParallelism. Above it both sides are `df` itself, for the
+    planner's shuffled join."""
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats()
+                  .sizeInBytes())
+    except Exception:
+        est = None
+    if est is None or est >= _PAIR_BROADCAST_BYTES:
+        return df.alias("a"), df.alias("b")
+    df = df.localCheckpoint(eager=False)
+    a = df.repartition(df.sparkSession.sparkContext.defaultParallelism) \
+        if spread else df
+    return a.alias("a"), F.broadcast(df).alias("b")
+
+
 def _bucket_pairs(banded: DataFrame, keys: list[str],
                   payload: list[str], pair_builder) -> DataFrame:
     """Exact candidate pairs per bucket as a bucket-key SELF-JOIN: both
@@ -75,28 +96,13 @@ def _bucket_pairs(banded: DataFrame, keys: list[str],
     computes the banded side once, AQE sizing applies, and partition-level
     skew split stays available."""
     m = banded.select(*keys, F.struct(*payload).alias("m"))
-    try:
-        est = int(m._jdf.queryExecution().optimizedPlan().stats()
-                  .sizeInBytes())
-    except Exception:
-        est = None
-    if est is not None and est < _PAIR_BROADCAST_BYTES:
-        # Materialize the banded side ONCE before fanning it into both join
-        # inputs: the broadcast build and the round-robin probe are separate
-        # consumers, so without this the whole upstream signature pipeline
-        # (explode + hash + groupBy aggregation, the expensive part of every
-        # LSH op) executes twice — measured 3.3 -> 2.4 s on the sf0.1
-        # simhash_near leg. Lazy local checkpoint: no job until the join
-        # runs, and only the size-gated SMALL side loses lineage (a lost
-        # executor fails the query instead of recomputing — acceptable for
-        # a <256 MB side; the large-input path below is unchanged and
-        # keeps full lineage + ReusedExchange).
-        m = m.localCheckpoint(eager=False)
-        a = m.repartition(
-            m.sparkSession.sparkContext.defaultParallelism).alias("a")
-        b = F.broadcast(m).alias("b")
-    else:
-        a, b = m.alias("a"), m.alias("b")
+    # The local checkpoint keeps the upstream signature pipeline (explode +
+    # hash + groupBy aggregation, the expensive part of every LSH op) to one
+    # run — measured 3.3 -> 2.4 s on the sf0.1 simhash_near leg. Only the
+    # size-gated SMALL side loses lineage (a lost executor fails the query
+    # instead of recomputing — acceptable for a <256 MB side); the large
+    # path keeps full lineage + ReusedExchange.
+    a, b = _pair_sides(m, spread=True)
     cond = F.col("a.m.doc_id") < F.col("b.m.doc_id")
     for k in keys:
         cond = (F.col(f"a.{k}") == F.col(f"b.{k}")) & cond
@@ -414,43 +420,28 @@ def embedding_near_dup_lsh(embeddings: DataFrame, threshold: float = 0.95,
     one bucket-equi join — no cartesian anywhere in the plan. Recall < 1 by
     design (bucket-boundary pairs are missed); `embedding_near_dup` below is
     the exact brute-force baseline kept for small-scale verification."""
-    from goorc_spark.pipeline_ops import similarity
+    from goorc_spark.pipeline_ops.similarity import (_dot, _norm,
+                                                     hyperplane_buckets)
 
-    with similarity._resolved(embeddings):  # auto sql/BLAS (VERDICT r4 #7)
-        b = similarity.hyperplane_buckets(embeddings, anchor_ids)
-        dot = similarity._dot  # the impl _resolved pinned: sql or BLAS
-        e = b.select("vec_id", "embedding", "bucket",
-                     F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-                      .alias("nrm"))
-        # broadcast one side when small (same rationale as _bucket_pairs):
-        # a sort-merge join hashes on `bucket`, whose cardinality is only
-        # 2^|anchors| = 16, capping the candidate scoring at 16 tasks; a
-        # broadcast join keeps the probe side's round-robin width, so the
-        # per-pair cosine evaluation parallelizes across every core
-        # (measured 23 -> 3 s at a 20k-vector shape)
-        try:
-            est = int(e._jdf.queryExecution().optimizedPlan().stats()
-                      .sizeInBytes())
-        except Exception:
-            est = None
-        if est is not None and est < _PAIR_BROADCAST_BYTES:
-            # materialize once so the bucket+norm folds don't run twice
-            # (broadcast build and probe side are separate consumers —
-            # same rationale and size gate as _bucket_pairs)
-            e = e.localCheckpoint(eager=False)
-            a, c = e.alias("a"), F.broadcast(e).alias("b")
-        else:
-            a, c = e.alias("a"), e.alias("b")
-        cos = dot(F.col("a.embedding"), F.col("b.embedding")) / (
-            F.col("a.nrm") * F.col("b.nrm"))
-        return (
-            a.join(c, (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col("a.vec_id") < F.col("b.vec_id")))
-            .select(F.col("a.vec_id").alias("vec_a"),
-                    F.col("b.vec_id").alias("vec_b"),
-                    F.round(cos, 6).alias("cosine"))
-            .filter(F.col("cosine") >= threshold)
-        )
+    e = hyperplane_buckets(embeddings, anchor_ids).select(
+        "vec_id", "embedding", "bucket",
+        _norm(F.col("embedding")).alias("nrm"))
+    # a sort-merge join hashes on `bucket`, whose cardinality is only
+    # 2^|anchors| = 16, capping the candidate scoring at 16 tasks; a
+    # broadcast join keeps the probe side's round-robin width, so the
+    # per-pair cosine evaluation parallelizes across every core (measured
+    # 23 -> 3 s at a 20k-vector shape)
+    a, c = _pair_sides(e)
+    cos = _dot(F.col("a.embedding"), F.col("b.embedding")) / (
+        F.col("a.nrm") * F.col("b.nrm"))
+    return (
+        a.join(c, (F.col("a.bucket") == F.col("b.bucket"))
+               & (F.col("a.vec_id") < F.col("b.vec_id")))
+        .select(F.col("a.vec_id").alias("vec_a"),
+                F.col("b.vec_id").alias("vec_b"),
+                F.round(cos, 6).alias("cosine"))
+        .filter(F.col("cosine") >= threshold)
+    )
 
 
 def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.95,
@@ -462,24 +453,20 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.95,
     (the linear count is noise next to the n^2 join it prevents)."""
     _guard_exact_baseline(embeddings, "embedding_near_dup",
                           "embedding_near_dup_lsh", force)
-    from goorc_spark.pipeline_ops import similarity
+    from goorc_spark.pipeline_ops.similarity import _dot, _norm
 
-    with similarity._resolved(embeddings):  # auto sql/BLAS (VERDICT r4 #7)
-        dot = similarity._dot  # the impl _resolved pinned: sql or BLAS
-        norm = lambda x: F.sqrt(dot(x, x))  # noqa: E731
-        e = embeddings.select("vec_id", "embedding",
-                              norm(F.col("embedding")).alias("nrm"))
-        a, b = e.alias("a"), e.alias("b")
-        cos = dot(F.col("a.embedding"), F.col("b.embedding")) / (
-            F.col("a.nrm") * F.col("b.nrm"))
-        ret = (
-            a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-            .select(F.col("a.vec_id").alias("vec_a"),
-                    F.col("b.vec_id").alias("vec_b"),
-                    F.round(cos, 6).alias("cosine"))
-            .filter(F.col("cosine") >= threshold)
-        )
-        return ret
+    e = embeddings.select("vec_id", "embedding",
+                          _norm(F.col("embedding")).alias("nrm"))
+    a, b = e.alias("a"), e.alias("b")
+    cos = _dot(F.col("a.embedding"), F.col("b.embedding")) / (
+        F.col("a.nrm") * F.col("b.nrm"))
+    return (
+        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(F.col("a.vec_id").alias("vec_a"),
+                F.col("b.vec_id").alias("vec_b"),
+                F.round(cos, 6).alias("cosine"))
+        .filter(F.col("cosine") >= threshold)
+    )
 
 
 def decontaminate(docs: DataFrame, benchmark: DataFrame,

@@ -10,6 +10,11 @@ array<float>, label).
   plan is pure SQL, broadcastable, and oracle-reproducible); candidates
   searched within the query's bucket only.
 
+Every dot product here is the same fold at every input size: `_dot` as a
+Column, `_sql_dot` as SQL text and `_py_dot` on the driver all multiply in
+double and add left to right from 0.0, as the DuckDB oracle's list_reduce
+does, so results equal the oracle's bit for bit.
+
 At 100 TB: anchors/queries are broadcast (no shuffle of the big side);
 bucketing is a narrow map; only the per-bucket top-k aggregates shuffle —
 k rows per bucket, not the corpus.
@@ -17,99 +22,10 @@ k rows per bucket, not the corpus.
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-_active = threading.local()  # .impl: the dot impl _resolved() pinned
-_dot_pandas_udf = None
-
-# per-operator dot impl, from the input's Catalyst size estimate: below
-# this the sql fold — zip_with + aggregate, sequential left-to-right
-# double accumulation, bit-identical to the DuckDB oracle's list_reduce —
-# wins on its zero per-batch overhead (every sf0.01/sf0.1 gate input
-# resolves 'sql'); above it the 'pandas' impl, one BLAS einsum per Arrow
-# batch (pairwise float64 summation: equal after round(,6) on real data,
-# not bit-guaranteed), amortizes its UDF overhead (bench detail.dot_impl:
-# pandas 1.2-1.3x on the multi-MB legs, loses the sub-second ones).
-AUTO_PANDAS_BYTES = 64 << 20
-
-
-def _impl_for(df: DataFrame) -> str:
-    """Resolve the dot impl for one operator invocation over `df`: 'sql'
-    below AUTO_PANDAS_BYTES, 'pandas' above (the same sizeInBytes trick
-    engine salt detection uses)."""
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats()
-                   .sizeInBytes())
-    except Exception:
-        return "sql"
-    # Spark reports Long.MaxValue-ish sentinels when stats are unknown —
-    # flipping to the not-bit-guaranteed impl on a GUESS would risk the
-    # oracle gate, so only a plausible, genuinely-large estimate upgrades
-    if size >= (1 << 60):
-        return "sql"
-    return "pandas" if size >= AUTO_PANDAS_BYTES else "sql"
-
-
-@contextmanager
-def _resolved(df: DataFrame):
-    """Pin the dot impl for the duration of one operator's plan build, on
-    this thread only: a plan built on another thread resolves its own."""
-    prev = _active_impl()
-    _active.impl = _impl_for(df)
-    try:
-        yield
-    finally:
-        _active.impl = prev
-
-
-def _active_impl() -> str:
-    """The dot impl _resolved pinned on this thread; 'sql' outside an
-    operator."""
-    return getattr(_active, "impl", "sql")
-
-
-def _auto_dot(fn):
-    """Operator decorator: resolve the dot impl once from the first
-    (DataFrame) argument's size estimate, for the whole plan build."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrap(embeddings, *a, **k):
-        with _resolved(embeddings):
-            return fn(embeddings, *a, **k)
-    return wrap
-
-
-def _get_dot_pandas():
-    global _dot_pandas_udf
-    if _dot_pandas_udf is None:
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        def _impl(x, y):
-            if len(x) == 0:
-                return pd.Series([], dtype="float64")
-            xa = np.stack(x.to_numpy()).astype(np.float64, copy=False)
-            ya = np.stack(y.to_numpy()).astype(np.float64, copy=False)
-            return pd.Series(np.einsum("ij,ij->i", xa, ya))
-
-        # real annotations (module uses `from __future__ import
-        # annotations`, which breaks pandas_udf inference on stringized
-        # hints — same workaround as dedup.simhash)
-        _impl.__annotations__ = {"x": pd.Series, "y": pd.Series,
-                                 "return": pd.Series}
-        _dot_pandas_udf = pandas_udf(_impl, "double")
-    return _dot_pandas_udf
-
-
 def _dot(x, y):
-    if _active_impl() == "pandas":
-        return _get_dot_pandas()(x, y)
     return F.aggregate(
         F.zip_with(x, y, lambda a, b: a.cast("double") * b.cast("double")),
         F.lit(0.0), lambda acc, v: acc + v)
@@ -135,20 +51,14 @@ def _norm(x):
 # widens to the same double the old plan's cast produced, the fold order
 # inside _dot is unchanged, and Python-side folds replicate the SQL fold's
 # left-to-right double accumulation exactly.
-
-
-def _lit_vec(vec) -> "F.Column":
-    return F.array(*[F.lit(float(v)) for v in vec])
-
-
-# SQL-string twins of the literal-vector expressions: building a 64-element
-# literal array through the Column DSL costs ~500 py4j round trips (~0.9 s
-# per assignment expression measured); one F.expr() call parses the same
-# tree JVM-side in milliseconds. repr(float) is shortest-roundtrip, and
-# cast(string as double) parses with Java's correctly-rounded
-# Double.parseDouble, so every literal is the identical double. Used only
-# when the active dot impl is the SQL fold (the pandas impl is a UDF the
-# SQL string cannot name); outputs are pinned identical across impls.
+#
+# The literal-vector expressions are built as SQL text: building a
+# 64-element literal array through the Column DSL costs ~500 py4j round
+# trips (~0.9 s per assignment expression measured); one F.expr() call
+# parses the same tree JVM-side in milliseconds. repr(float) is
+# shortest-roundtrip, and cast(string as double) parses with Java's
+# correctly-rounded Double.parseDouble, so every literal is the identical
+# double.
 
 
 def _dlit(v) -> str:
@@ -164,10 +74,6 @@ def _sql_dot(a: str, b: str) -> str:
     — the same expression tree the Column DSL builds."""
     return (f"aggregate(zip_with({a}, {b}, (a, b) -> cast(a as double) * "
             f"cast(b as double)), cast(0.0 as double), (acc, v) -> acc + v)")
-
-
-def _sql_exprs_active() -> bool:
-    return _active_impl() != "pandas"
 
 
 def _py_dot(a, b) -> float:
@@ -192,21 +98,16 @@ def _round6(x: float) -> float:
         decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP))
 
 
-
 def _query_cos(qe: list) -> "F.Column":
     """round(dot(e, q) / (norm(e) * norm(q)), 6) against a literal query
-    vector — SQL-string form when the fold impl is active (one expr()
-    parse instead of ~130 py4j literal calls); norm(q) folds to the same
-    double driver-side (_py_dot identity), so sqrt sees the same value."""
-    if _sql_exprs_active():
-        qq = _py_dot(qe, qe)
-        return F.expr(
-            f"round({_sql_dot('embedding', _sql_vec(qe))} / "
-            f"(sqrt({_sql_dot('embedding', 'embedding')}) * "
-            f"sqrt({_dlit(qq)})), 6)")
-    ql = _lit_vec(qe)
-    return F.round(_dot(F.col("embedding"), ql)
-                   / (_norm(F.col("embedding")) * _norm(ql)), 6)
+    vector, as one expr() parse instead of ~130 py4j literal calls;
+    norm(q) folds to the same double driver-side (_py_dot identity), so
+    sqrt sees the same value."""
+    qq = _py_dot(qe, qe)
+    return F.expr(
+        f"round({_sql_dot('embedding', _sql_vec(qe))} / "
+        f"(sqrt({_sql_dot('embedding', 'embedding')}) * "
+        f"sqrt({_dlit(qq)})), 6)")
 
 
 def _vid_type(embeddings: DataFrame):
@@ -241,36 +142,24 @@ def _with_cell(df: DataFrame, cent_rows: list, vid_t,
     from goorc_spark.pipeline_ops.dedup import _spread
 
     df = _spread(df)
-    if _sql_exprs_active():
-        # centroids travel as ONE foldable literal array of structs rather
-        # than per-cell inlined folds: constant folding turns it into a
-        # codegen reference object, so the generated source is IDENTICAL
-        # across Lloyd iterations (only the referenced values change) and
-        # the per-iteration janino recompile disappears — measured 0.51 ->
-        # 0.32 s per assignment pass, cells bit-identical (same per-cell
-        # left-to-right fold, same round/tie-break).
-        cells_sql = "array(" + ",".join(
-            f"named_struct('cid', cast({int(cid)} as "
-            f"{vid_t.simpleString()}), 'c', {_sql_vec(cvec)}, "
-            f"'cc', {_dlit(_py_dot(cvec, cvec))})"
-            for cid, cvec in cent_rows) + ")"
-        winner = (f"array_min(transform({cells_sql}, s -> named_struct("
-                  f"'d2', round(__dee - 2 * {_sql_dot('embedding', 's.c')} "
-                  f"+ s.cc, 6), 'cid', s.cid))).cid")
-        return df.withColumn(
-            "__dee", F.expr(_sql_dot("embedding", "embedding"))) \
-            .withColumn(out, F.expr(winner)) \
-            .drop("__dee")
-    tmp = df.withColumn(
-        "__dee", _dot(F.col("embedding"), F.col("embedding")))
-    entries = []
-    for cid, cvec in cent_rows:
-        d2 = F.round(F.col("__dee")
-                     - 2 * _dot(F.col("embedding"), _lit_vec(cvec))
-                     + F.lit(_py_dot(cvec, cvec)), 6)
-        entries.append(F.struct(d2.alias("d2"),
-                                F.lit(cid).cast(vid_t).alias("cid")))
-    return tmp.withColumn(out, F.array_min(F.array(*entries))["cid"]) \
+    # centroids travel as ONE foldable literal array of structs rather than
+    # per-cell inlined folds: constant folding turns it into a codegen
+    # reference object, so the generated source is IDENTICAL across Lloyd
+    # iterations (only the referenced values change) and the per-iteration
+    # janino recompile disappears — measured 0.51 -> 0.32 s per assignment
+    # pass, cells bit-identical (same per-cell left-to-right fold, same
+    # round/tie-break).
+    cells_sql = "array(" + ",".join(
+        f"named_struct('cid', cast({int(cid)} as "
+        f"{vid_t.simpleString()}), 'c', {_sql_vec(cvec)}, "
+        f"'cc', {_dlit(_py_dot(cvec, cvec))})"
+        for cid, cvec in cent_rows) + ")"
+    winner = (f"array_min(transform({cells_sql}, s -> named_struct("
+              f"'d2', round(__dee - 2 * {_sql_dot('embedding', 's.c')} "
+              f"+ s.cc, 6), 'cid', s.cid))).cid")
+    return df.withColumn(
+        "__dee", F.expr(_sql_dot("embedding", "embedding"))) \
+        .withColumn(out, F.expr(winner)) \
         .drop("__dee")
 
 
@@ -284,7 +173,6 @@ def _probe_cells(qe: list, cent_rows: list, nprobe: int) -> list:
     return [cid for _, cid in scored[:nprobe]]
 
 
-@_auto_dot
 def cosine_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
     """Exact top-k by cosine to the embedding of `query_vec_id`
     (tie-broken by vec_id for determinism). The query vector is collected
@@ -303,7 +191,6 @@ def cosine_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> Da
     return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
 
 
-@_auto_dot
 def hyperplane_buckets(embeddings: DataFrame, anchor_ids=(1, 2, 3, 4)) -> DataFrame:
     """LSH bucket id per vector: sign bits of dot products against anchor
     vectors drawn deterministically from the data (vec_id in anchor_ids).
@@ -319,24 +206,15 @@ def hyperplane_buckets(embeddings: DataFrame, anchor_ids=(1, 2, 3, 4)) -> DataFr
             "bucket", F.lit(None).cast("int")).filter(F.lit(False))
     from goorc_spark.pipeline_ops.dedup import _spread
 
-    embeddings = _spread(embeddings)
-    if _sql_exprs_active():
-        terms = " + ".join(
-            f"(case when {_sql_dot('embedding', _sql_vec(avec))} >= 0 "
-            f"then {_dlit(2.0 ** (int(aid) - 1))} "
-            f"else cast(0.0 as double) end)"
-            for aid, avec in anchors)
-        return embeddings.withColumn(
-            "bucket", F.expr(f"cast(({terms}) as int)"))
-    bucket = None
-    for aid, avec in anchors:
-        term = F.when(_dot(F.col("embedding"), _lit_vec(avec)) >= 0,
-                      F.lit(float(2.0 ** (int(aid) - 1)))).otherwise(0.0)
-        bucket = term if bucket is None else bucket + term
-    return embeddings.withColumn("bucket", bucket.cast("int"))
+    terms = " + ".join(
+        f"(case when {_sql_dot('embedding', _sql_vec(avec))} >= 0 "
+        f"then {_dlit(2.0 ** (int(aid) - 1))} "
+        f"else cast(0.0 as double) end)"
+        for aid, avec in anchors)
+    return _spread(embeddings).withColumn(
+        "bucket", F.expr(f"cast(({terms}) as int)"))
 
 
-@_auto_dot
 def lsh_ann_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10,
                  anchor_ids=(1, 2, 3, 4)) -> DataFrame:
     """Approximate top-k: only candidates sharing the query's hyperplane
@@ -362,7 +240,6 @@ def lsh_ann_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10,
     return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
 
 
-@_auto_dot
 def ivf_assign(embeddings: DataFrame, centroid_ids=(1, 2, 3, 4, 5, 6, 7, 8)) -> DataFrame:
     """IVF coarse quantizer: every vector is assigned to its nearest
     centroid (centroids = deterministic vectors drawn from the data itself
@@ -380,7 +257,6 @@ def ivf_assign(embeddings: DataFrame, centroid_ids=(1, 2, 3, 4, 5, 6, 7, 8)) -> 
     return _with_cell(embeddings, rows, vid_t)
 
 
-@_auto_dot
 def ivf_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10,
              centroid_ids=(1, 2, 3, 4, 5, 6, 7, 8), nprobe: int = 2) -> DataFrame:
     """IVF-flat ANN: score only vectors whose cell is among the query's
@@ -422,7 +298,6 @@ def _assign_cells(embeddings: DataFrame, cents: DataFrame) -> DataFrame:
     return _with_cell(embeddings, rows, vid_t).select("vec_id", "cell")
 
 
-@_auto_dot
 def ivf_train_centroids(embeddings: DataFrame,
                         centroid_ids=(1, 2, 3, 4, 5, 6, 7, 8),
                         iters: int = 2) -> DataFrame:
@@ -499,25 +374,22 @@ def ivf_topk_trained(embeddings: DataFrame, query_vec_id: int = 0,
     probe cells are derived from them with the same d2 algebra/rounding,
     and the final pass is ONE narrow assign+filter+score + TakeOrdered —
     no window, no joins, no broadcast builds."""
-    with _resolved(embeddings):
-        rows = _train_centroid_rows(embeddings, centroid_ids, iters)
-        qe = _query_vec(embeddings, query_vec_id)
-        vid_t = _vid_type(embeddings)
-        if not rows or qe is None:  # old empty-probe/-assign joins: no rows
-            return embeddings.select(
-                "vec_id", F.col("vec_id").cast(vid_t).alias("cell"),
-                F.lit(None).cast("double").alias("cosine")) \
-                .filter(F.lit(False))
-        cells = _probe_cells(qe, rows, nprobe)
-        cand = _with_cell(embeddings, rows, vid_t) \
-            .filter(F.col("cell").isin(cells)
-                    & (F.col("vec_id") != query_vec_id))
-        scored = cand.select(
-            "vec_id", "cell", _query_cos(qe).alias("cosine"))
-        return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
+    rows = _train_centroid_rows(embeddings, centroid_ids, iters)
+    qe = _query_vec(embeddings, query_vec_id)
+    vid_t = _vid_type(embeddings)
+    if not rows or qe is None:  # old empty-probe/-assign joins: no rows
+        return embeddings.select(
+            "vec_id", F.col("vec_id").cast(vid_t).alias("cell"),
+            F.lit(None).cast("double").alias("cosine")).filter(F.lit(False))
+    cells = _probe_cells(qe, rows, nprobe)
+    cand = _with_cell(embeddings, rows, vid_t) \
+        .filter(F.col("cell").isin(cells)
+                & (F.col("vec_id") != query_vec_id))
+    scored = cand.select(
+        "vec_id", "cell", _query_cos(qe).alias("cosine"))
+    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
 
 
-@_auto_dot
 def pairwise_topk_per_label_lsh(embeddings: DataFrame, k: int = 3,
                                 anchor_ids=(1, 2, 3, 4)) -> DataFrame:
     """Skew-safe per-label top-k pairs: candidates come from (label,
@@ -529,23 +401,10 @@ def pairwise_topk_per_label_lsh(embeddings: DataFrame, k: int = 3,
     b = hyperplane_buckets(embeddings, anchor_ids).select(
         "vec_id", "label", "bucket", "embedding",
         _norm(F.col("embedding")).alias("nrm"))
-    # broadcast one side when small (see dedup.embedding_near_dup_lsh):
     # (label, bucket) cardinality bounds a shuffled join's parallelism;
-    # the broadcast join keeps the probe side's round-robin width
-    from goorc_spark.pipeline_ops.dedup import _PAIR_BROADCAST_BYTES
-    try:
-        est = int(b._jdf.queryExecution().optimizedPlan().stats()
-                  .sizeInBytes())
-    except Exception:
-        est = None
-    if est is not None and est < _PAIR_BROADCAST_BYTES:
-        # materialize once so the bucket+norm folds don't run twice
-        # (broadcast build and probe side are separate consumers — same
-        # rationale and size gate as dedup._bucket_pairs)
-        b = b.localCheckpoint(eager=False)
-        a, c = b.alias("a"), F.broadcast(b).alias("b")
-    else:
-        a, c = b.alias("a"), b.alias("b")
+    # a broadcast join keeps the probe side's round-robin width
+    from goorc_spark.pipeline_ops.dedup import _pair_sides
+    a, c = _pair_sides(b)
     pairs = a.join(c, (F.col("a.label") == F.col("b.label"))
                    & (F.col("a.bucket") == F.col("b.bucket"))
                    & (F.col("a.vec_id") < F.col("b.vec_id"))).select(
@@ -560,7 +419,6 @@ def pairwise_topk_per_label_lsh(embeddings: DataFrame, k: int = 3,
                 .filter(F.col("rk") <= k).drop("rk")
 
 
-@_auto_dot
 def pairwise_topk_per_label(embeddings: DataFrame, k: int = 3,
                             force: bool = False) -> DataFrame:
     """For each label, the k most-similar same-label pairs — a bounded

@@ -272,36 +272,43 @@ def test_star_equals_propagate_on_real_docs(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_pandas_dot_impl_identical_outputs(spark):
-    """VERDICT r3 #9: the BLAS pandas-UDF dot, which the size rule picks
-    for inputs of at least AUTO_PANDAS_BYTES, produces outputs identical
-    to the interpreted SQL fold on every embedding op (after the ops'
-    round(,6) — the reason the oracle twin stays 'sql' is bit-order of
-    summation, not values at this precision)."""
+def test_embedding_ops_one_fold_at_any_estimate(spark):
+    """The embedding operators plan the same JVM fold however large the
+    input's Catalyst estimate: with the file compression factor raised so
+    the sf0.001 embeddings estimate passes 64 MB, no Python UDF node is
+    planned and the rows equal those at the default factor."""
     from goorc_spark.pipeline_ops import similarity
 
-    embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    path = "/root/testdata/sf0.001/embeddings.parquet"
+    conf = "spark.sql.sources.fileCompressionFactor"
 
     def run_all():
-        return {
-            "cos": similarity.cosine_topk(embs).collect(),
-            "lsh": similarity.lsh_ann_topk(embs).collect(),
-            "ivf": similarity.ivf_topk(embs).collect(),
-            "pair": similarity.pairwise_topk_per_label_lsh(embs).collect(),
-            "nd": sorted(map(tuple, dedup.embedding_near_dup_lsh(
-                embs, threshold=0.35).collect())),
+        embs = spark.read.parquet(path)
+        frames = {
+            "cos": similarity.cosine_topk(embs),
+            "lsh": similarity.lsh_ann_topk(embs),
+            "nd": dedup.embedding_near_dup_lsh(embs, threshold=0.35),
         }
+        plans = {name: df._jdf.queryExecution().executedPlan().toString()
+                 for name, df in frames.items()}
+        rows = {name: df.collect() for name, df in frames.items()}
+        rows["nd"] = sorted(map(tuple, rows["nd"]))
+        est = int(embs._jdf.queryExecution().optimizedPlan().stats()
+                  .sizeInBytes())
+        return est, plans, rows
 
-    assert similarity._impl_for(embs) == "sql"
-    base = run_all()
-    old = similarity.AUTO_PANDAS_BYTES
-    similarity.AUTO_PANDAS_BYTES = 1  # every operator resolves 'pandas'
+    _, _, base = run_all()
+    assert all(base.values())
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "500")
     try:
-        assert similarity._impl_for(embs) == "pandas"
-        fast = run_all()
+        est, plans, big = run_all()
     finally:
-        similarity.AUTO_PANDAS_BYTES = old
-    assert base == fast
+        spark.conf.set(conf, old)
+    assert est > 64 << 20
+    for name, plan in plans.items():
+        assert "EvalPython" not in plan, (name, plan)
+    assert big == base
 
 
 def test_ivf_trained_centroids(spark):
@@ -328,46 +335,3 @@ def test_ivf_trained_centroids(spark):
     t1 = similarity.ivf_topk_trained(embs).collect()
     t2 = similarity.ivf_topk_trained(embs).collect()
     assert t1 == t2 and len(t1) == 10
-
-
-def test_auto_dot_impl_resolution(spark):
-    """VERDICT r4 #7: the dot impl resolves per-operator from the input's
-    Catalyst size estimate — sql below AUTO_PANDAS_BYTES (every oracle-gate
-    input, keeping bit-identity with DuckDB), pandas/BLAS above (the
-    production path). Unknown-stats sentinels stay sql."""
-    from goorc_spark.pipeline_ops import similarity
-
-    embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    assert similarity._impl_for(embs) == "sql"  # ~KBs << 64 MB
-    ref = similarity.cosine_topk(embs).collect()
-    old = similarity.AUTO_PANDAS_BYTES
-    similarity.AUTO_PANDAS_BYTES = 1  # force the 'large input' branch
-    try:
-        assert similarity._impl_for(embs) == "pandas"
-        # whole operator runs with the BLAS dot and still agrees with the
-        # sql fold at round(,6) on this data
-        got = similarity.cosine_topk(embs).collect()
-    finally:
-        similarity.AUTO_PANDAS_BYTES = old
-    assert got == ref
-
-
-def test_dot_impl_choice_is_per_thread(monkeypatch):
-    """The impl one operator's plan build pins is its own thread's: a plan
-    built on another thread meanwhile resolves outside any operator, to
-    the sql fold."""
-    import threading
-
-    from goorc_spark.pipeline_ops import similarity
-
-    monkeypatch.setattr(similarity, "_impl_for", lambda df: "pandas")
-    seen = []
-    with similarity._resolved(None):
-        assert not similarity._sql_exprs_active()
-        other = threading.Thread(
-            target=lambda: seen.append(similarity._sql_exprs_active()))
-        other.start()
-        other.join(timeout=60)
-    assert not other.is_alive()
-    assert seen == [True]
-    assert similarity._sql_exprs_active()

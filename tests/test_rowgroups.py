@@ -9,6 +9,7 @@ from __future__ import annotations
 import decimal
 import json
 import math
+import re
 
 import numpy as np
 import pyarrow as pa
@@ -484,6 +485,32 @@ def test_read_rows_at_absolute_seek(spark):
     proj = engine.read_rows_at(stripes, transcripts.TRANSCRIPTS_SPEC,
                                10, 20, columns=["conv_id", "text"])
     assert proj.columns == ["conv_id", "text"] and proj.count() == 10
+
+
+def test_read_rows_at_scans_only_covering_stripes(spark, tmp_path):
+    """From a parquet stripe table, the seek decodes `stripe_id IN
+    (covering)` pushed into the scan, with no join back to the table: the
+    other stripes' blobs are never read."""
+    df = transcripts.transcripts_from_events(spark, "/root/testdata/sf0.001")
+    cfg = engine.EncodeConfig(key_col="conv_id", order_cols=("turn_idx",),
+                              range_partition=True, partitions=4,
+                              rg_rows=100, run_id="seekscan")
+    path = str(tmp_path / "stripes")
+    engine.encode_df(df, cfg).write.parquet(path)
+    stripes = spark.read.parquet(path)
+    assert stripes.count() >= 4
+    src = df.orderBy("conv_id", "turn_idx").collect()
+    for lo, hi in ((100, 200), (0, 1000)):
+        got = engine.read_rows_at(stripes, transcripts.TRANSCRIPTS_SPEC,
+                                  lo, hi)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan, plan
+        pushed = re.findall(r"PushedFilters: \[([^\]]*)", plan)
+        assert len(pushed) == 1, plan
+        assert re.search(r"(In|EqualTo)\(stripe_id", pushed[0]), plan
+        rows = sorted(got.collect(), key=lambda r: (r.conv_id, r.turn_idx))
+        assert [(r.conv_id, r.turn_idx, r.text) for r in rows] == \
+            [(r.conv_id, r.turn_idx, r.text) for r in src[lo:hi]]
 
 
 def test_stripe_col_stats_and_run_stats(spark):
